@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.expr
-import scala.util.Try
-
 /** Benchmark harness. One discarded warm PASS over the whole suite
   * (codegen compile, file listing, broadcast build), then
   * SPARK_GRAFT_BENCH_N measured passes (default 5 — JIT/profile warmup
@@ -19,158 +15,25 @@ import scala.util.Try
   * (observed: the same query measuring 1.2s and 54s median-of-3 in
   * adjacent suite runs under burst contention).
   *
-  * Output protocol (the driver tail-parses stdout with a bounded window,
-  * and sbt appends its own "[success]" line after ours):
+  * Output protocol (automated callers tail-parse with a bounded window):
   *   1. the FULL per-query JSON is written to /tmp/graft_bench_full.json
   *      and echoed to stderr (unbounded channels);
-  *   2. stdout's final line is a COMPACT JSON (~400 bytes: suite total,
-  *      headline queries, error list, pointer to the full file) printed
-  *      after spark.stop(), small enough to sit entirely inside the
-  *      driver's tail window even with sbt's trailer after it.
+  *   2. then, after spark.stop(), a COMPACT JSON line (under 1 KB: suite
+  *      total, headline queries, error list, pointer to the full file)
+  *      is the LAST line of both stderr and stdout — a capture of
+  *      either stream, or of both merged, ends on it.
   * Errored queries are surfaced in "errors" (never silently dropped from
   * the report) and excluded from the total.
+  *
+  * Data dir: SPARK_GRAFT_SF_DIR. Trailing arguments name a key subset
+  * (e.g. `SPARK_GRAFT_BENCH_N=4 ... graft.Bench d20_prefix_simjoin` for
+  * a quick per-key min-of-4 — not steady state; only the full
+  * interleaved suite settles a regression). The loop lives in
+  * `Harness.bench`.
   */
 object Bench {
-  /** SURVEY §6 headline set — inlined in the compact stdout line.
-    * r16 (verdict item 3, additions-only): the original six are all
-    * sub-second overhead-bound keys, blind to optimization work and to
-    * the 8-vs-32-core scaling probe; the six additions are the suite's
-    * heaviest keys, where parallelism and round-over-round wins are
-    * actually visible. Compact line stays ~700 bytes — inside the
-    * driver's tail window. */
-  private val headline = Seq("q1_pricing_summary", "q3_join_agg",
-    "q4_broadcast_join", "d3_minhash_lsh", "s1_ann_brute", "t2_quality",
-    "d20_prefix_simjoin", "q37_format_roundtrip", "t17_embed_fidelity",
-    "s11_ann_pq", "q56_sketch_join_strategy", "t27_bpe_batch")
-
-  private def r3(v: Double): String = f"$v%.3f"
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val iters = Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "5").trim.toInt)
-      .getOrElse(5).max(1)
-    // partitions ∝ input volume (sf0.1 and below stay at `cpus`): the
-    // sf10 lesson — a fixed 32 turns the big ordered outputs superlinear
-    val shuffleParts = GraftSession.shufflePartitionsFor(sfDir, cpus.toInt)
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // JIT/codegen warmup so the first measured queries don't absorb JVM
-    // startup (hash agg, shuffle, md5/regex/string/window codepaths).
-    spark.range(2000000)
-      .selectExpr("id", "md5(cast(id as string)) as m")
-      .selectExpr("id", "m", "regexp_replace(upper(m), '[0-9]+', ' ') as r")
-      .selectExpr("id", "m", "r", "explode(split(trim(r), '\\\\s+')) as t")
-      .groupBy(expr("substr(m, 1, 2)"))
-      .agg(expr("count(distinct t)"), expr("sum(length(r))"))
-      .count()
-    spark.range(1000000).selectExpr("id % 97 as k", "id as v")
-      .selectExpr("k", "v", "row_number() over (partition by k order by v desc) as rn")
-      .filter(expr("rn <= 3"))
-      .write.mode("overwrite").format("noop").save()
-    // noop sink: full evaluation of every output column, no pruning
-    // shortcut (count() would let Catalyst skip computed columns), no
-    // disk write in the measurement.
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // SPARK_GRAFT_BENCH_ONLY=st2_stream_sessions,st3_session_window —
-    // profile a subset without the 95-query interleave around it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_BENCH_SKIP_BASELINES=1 — scale-run cost control
-    // (SF≥1): drop the DECLARED-quadratic correctness baselines and the
-    // byte-linear I/O roundtrip, which dominate sf1 wall time (6 of the
-    // 8 super-linear keys in the r5 scale run) while measuring nothing
-    // about the scale paths. sf0.1 benches never set this — the driver's
-    // per-round BENCH_r{N} covers every key. The skipped set is exactly
-    // the keys SURVEY documents as baselines: brute-force ANN
-    // (s1/s4/s5 truth+eval, s7's coarse stage, s8's diversity input),
-    // s11's all-codes ADC scan, q37's 3-write/3-read roundtrip, and
-    // d18's output-quadratic pair growth under ScaleUp's 10× cloning.
-    // d11/d18/d20 are here for OUTPUT-driven growth, not plan decay:
-    // ScaleUp clones every doc 10×, so true near-dup pairs grow
-    // ~quadratically and these keys ride the pair set (d11 measured
-    // 19.9× at 10× data purely from the cloned fixture; d20's
-    // completeness contract REQUIRES verifying every one of the
-    // ~quadratic exact-dup-family candidates — 250k output rows at sf1).
-    val declaredBaselines = Set("s1_ann_brute", "s4_ann_quantized",
-      "s5_ann_recall", "s7_ann_rerank", "s8_topk_diversity", "s11_ann_pq",
-      "s17_hybrid_recall", // brute ground truth, like s5
-      "s20_hybrid_complement", // exact tf-cosine truth, like s17/t17
-      "t17_embed_fidelity", // exact term-space cosine truth + dense-width dot, like s5
-      "d21_lsh_recall",    // runs d20's exact join as its truth
-      "d22_banding_sweep", // same exact-join truth as d21
-      "q37_format_roundtrip", "d18_incremental_dedup", "d11_minhash_accuracy",
-      "d20_prefix_simjoin")
-    val skipBaselines = sys.env.get("SPARK_GRAFT_BENCH_SKIP_BASELINES")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .filter { case (n, _) => !(skipBaselines && declaredBaselines(n)) }
-    val failed = scala.collection.mutable.Set[String]()
-    val samples = scala.collection.mutable.Map[String, List[Double]]()
-      .withDefaultValue(Nil)
-    (0 to iters).foreach { pass => // pass 0 = warm, discarded
-      ordered.foreach { case (name, fn) =>
-        if (!failed(name)) {
-          try {
-            val t = runOnce(fn)
-            if (pass > 0) samples(name) ::= t
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name (pass $pass): $e")
-            failed += name
-          }
-        }
-      }
-    }
-    val results = ordered.map { case (name, _) =>
-      val t = if (failed(name) || samples(name).isEmpty) -1.0
-        else samples(name).min
-      name -> t
-    }
-    val ok = results.filter(_._2 >= 0)
-    val errs = results.filter(_._2 < 0).map(_._1)
-    val total = ok.map(_._2).sum
-    val errsJson = errs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // pass-to-pass spread (max/min per query): drift like a contention
-    // burst inflating one query is visible in ONE artifact instead of
-    // needing a cross-round diff
-    val spreadQs = results.collect { case (k, v) if v > 0 =>
-      "\"" + k + "\":" + r3(samples(k).max / v)
-    }.mkString("{", ",", "}")
-    // honesty guard: a per-query minimum below ~50 ms at sf0.1 usually
-    // means the query escaped evaluation (lazy plan, cached result) —
-    // surface those instead of silently reporting an impossible number
-    val suspects = ok.filter(_._2 < 0.05).map(_._1)
-    val suspectsJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullPath = "/tmp/graft_bench_full.json"
-    val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"spread":$spreadQs,"suspect_fast":$suspectsJson,"sf":"$sfDir","runs":$iters,"n_queries":${results.length},"errors":$errsJson}"""
-    Try {
-      val w = new java.io.PrintWriter(fullPath)
-      try w.println(full) finally w.close()
-    }
-    val headQs = ok.filter(kv => headline.contains(kv._1))
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$headQs,"sf":"$sfDir","runs":$iters,"n_queries":${results.length},"errors":$errsJson,"full":"$fullPath"}"""
-    spark.stop()
-    // stdout carries EXACTLY ONE JSON line (the compact). The full map
-    // used to precede it on stdout too — with the driver's bounded tail
-    // window that's how a stale pass's fragment ended up embedded in
-    // BENCH_r13.json (r13 advisory). Full map lives in $fullPath
-    // (truncate-on-write) and on stderr only.
-    System.err.println(full)
-    System.out.println(compact)
-    System.out.flush()
+    Harness.main(Array("bench", sfDir) ++ args)
   }
 }

@@ -50,8 +50,8 @@ object GraftSession {
     * one shuffle partition per ~4 MB of source parquet (compressed
     * parquet fans out 10-30× into shuffle rows, so this lands near the
     * classic 100-200 MB-per-task target), floored at the thread count
-    * (sf0.1 and below keep the historical 32 — bench comparability)
-    * and capped at 1024. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides. */
+    * (so sf0.1 and below run one partition per thread) and capped at
+    * 1024. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides. */
   def shufflePartitionsFor(dir: String, cpus: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -22,13 +22,7 @@ object ScaleUp {
     val Array(inDir, outDir, fStr) = args
     val f = fStr.toInt
     val shift = 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(inDir)
     def copies(df: DataFrame, keys: String*): DataFrame = {
       val exploded = df.withColumn("_i", explode(array((0 until f).map(i => lit(i.toLong)): _*)))
       keys.foldLeft(exploded) { (d, k) =>

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.expressions.{CosineSim, NfcNormalize, OpaqueBarrier, PolyHash, TokenCount}
+import graft.functions.expressions.{CosineSim, NfcNormalize, PolyHash, TokenCount}
 
 /** SQL registration for graft's native Catalyst expressions via the
   * public SparkSessionExtensions API (GraftSession wires this into every
@@ -37,13 +37,5 @@ object GraftFunctions {
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         CosineSim(exprs(0), exprs(1))))
-    // value-deterministic identity, nondeterministic to the OPTIMIZER —
-    // the anti-inlining barrier for expensive derived join keys (see
-    // OpaqueBarrier's scaladoc)
-    ext.injectFunction((
-      FunctionIdentifier("opaque"),
-      new ExpressionInfo(classOf[OpaqueBarrier].getName, "opaque"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        OpaqueBarrier(exprs.head)))
   }
 }

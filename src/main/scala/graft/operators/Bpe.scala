@@ -72,7 +72,7 @@ object Bpe {
     * exist in this round's candidate table); between-round semantics
     * are unchanged. Both engines implement the identical rule.
     *
-    * PRICED (graft.BpeDeviation, round 12): at the t27 operating point
+    * PRICED (round 12, recorded in SURVEY.md): at the t27 operating point
     * (8 rounds × batchMax 16 → 82 merges) vs batchMax=1 sequential at
     * the same merge budget, the merge SETS share 58/82 entries
     * (Jaccard 54%) and 79/82 rank positions differ — but the metric a
@@ -83,7 +83,7 @@ object Bpe {
     * so rank order is maximally fragile under the one-round queue
     * delay; Zipfian corpora with separated counts reorder far less.
     *
-    * HYBRID SCHEDULE REJECTED (round 13, measured via BpeDeviation over
+    * HYBRID SCHEDULE REJECTED (round 13, SURVEY.md, measured over
     * learnMergesScheduled): the suggested decay toward sequential at the
     * same 8-round budget (16,16,16,16,8,4,4,2) is strictly WORSE here —
     * it learns only 66 merges in the 8 rounds (the late small-batch
@@ -114,7 +114,7 @@ object Bpe {
     * is the hybrid the round-12 pricing suggested — big batches while
     * pair counts are separated, shrinking toward sequential as the
     * near-tied tail approaches — at the SAME driver-round budget.
-    * Measured (graft.BpeDeviation, round 13): the decay does NOT close
+    * Measured (round 13, SURVEY.md): the decay does NOT close
     * the gap on THIS corpus — see the scaladoc numbers below. */
   def learnMergesScheduled(docs: DataFrame, textCol: String,
       schedule: Seq[Int], candCap: Int = 256): DataFrame = {

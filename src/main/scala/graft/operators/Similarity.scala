@@ -191,34 +191,51 @@ object Similarity {
         col(filterCol))
   }
 
-  /** Nearest-centroid assignment. Argmax via max_by (map-side partial
-    * aggregate): the ×|centroids| fan-out collapses per input partition
-    * BEFORE the shuffle — a row_number window would instead shuffle and
-    * sort every (vector, centroid) pair. Tie-break = lowest centroid
-    * id, encoded as max over (csim, -cent_id). `cents` must have
-    * (cent_id, c_vec) and is always broadcast. */
-  /** r16 shape: centroids fold into ONE broadcast array row and the
-    * argmax runs MAP-SIDE (array_max over (sim, -cent_id) structs) —
-    * the old form crossJoined every corpus row ×|cells| and shuffled
-    * the whole corpus (vector payload included) through a
-    * groupBy(outId) max_by to undo the explode. Same round(cosine, 6),
-    * same max-sim/min-cent_id tie-break (struct ordering is NaN-aware
-    * both ways), zero exchange. */
+  /** Nearest-centroid assignment: the centroids fold into ONE broadcast
+    * array row and the argmax runs MAP-SIDE (array_max over
+    * (sim, -cent_id) structs) — no corpus exchange, no ×|cells|
+    * explode. Deterministic: round(cosine, 6), max sim, lowest
+    * cent_id on ties (struct ordering is NaN-aware both ways). `cents`
+    * must have (cent_id, c_vec) and at least one row; `_cbs` and
+    * `cell` are reserved column names. */
   private def nearestCell(df: DataFrame, cents: DataFrame, idCol: String,
-      vecCol: String, outId: String, outVec: String): DataFrame =
+      vecCol: String, outId: String, outVec: String): DataFrame = {
+    requireUnreserved(df, "nearestCell")
     df.select(col(idCol).as(outId), col(vecCol).as(outVec))
-      .crossJoin(broadcast(cents.groupBy().agg(
-        array_sort(collect_list(struct(col("cent_id"), col("c_vec")))).as("_cbs"))))
-      .withColumn("cell", expr(
-        // opaque(): anti-inlining barrier (see assignPq / OpaqueBarrier)
-        s"opaque(array_max(transform(_cbs, cb -> named_struct(" +
+      .crossJoin(broadcast(cents.groupBy().agg(nonEmptyBook(
+        array_sort(collect_list(struct(col("cent_id"), col("c_vec")))), "nearestCell")
+        .as("_cbs"))))
+      .select(col(outId), col(outVec), cellColumn(
+        s"array_max(transform(_cbs, cb -> named_struct(" +
         s"'sim', round(cosine_sim($outVec, cb.c_vec), 6), " +
-        s"'nid', -cb.cent_id))).nid * -1)"))
-      .select(col(outId), col(outVec), col("cell"))
+        s"'nid', -cb.cent_id))).nid * -1"))
+  }
 
-  /** Public nearest-centroid assignment: (id, cell) per corpus vector.
-    * Broadcast codebook + max_by partial-agg argmax — one hash shuffle
-    * carrying one row per vector, never a per-vector window sort. */
+  /** The assignment fold as column `cell`, emitted through a one-element
+    * explode: a Generate output is an attribute, never an alias, so
+    * Catalyst cannot substitute the fold into downstream join probe
+    * keys or inferred isnotnull filters (3 evaluations/row, probed on
+    * s18), while predicates on every OTHER column still push through
+    * it to the scan (PlanSpec canary). */
+  private def cellColumn(fold: String): Column = explode(array(expr(fold))).as("cell")
+
+  /** The codebook folds write `_cbs` and `cell`; a caller column of
+    * either name would be shadowed or silently overwritten. */
+  private def requireUnreserved(df: DataFrame, op: String): Unit = {
+    val clash = df.columns.filter(Set("_cbs", "cell"))
+    require(clash.isEmpty,
+      s"$op: input has reserved column(s) ${clash.mkString(", ")}; rename before assigning")
+  }
+
+  /** Fails the codebook aggregate's single row when it holds no
+    * centroids — checked once, inside the broadcast build, never per
+    * corpus row and never as an extra job. An empty codebook would
+    * otherwise fold to a NULL (or missing) cell for every vector. */
+  private def nonEmptyBook(cbs: Column, op: String): Column =
+    when(size(cbs) > 0, cbs).otherwise(raise_error(lit(s"$op: empty codebook")))
+
+  /** Public nearest-centroid assignment: (id, cell) per corpus vector,
+    * through nearestCell's broadcast zero-exchange fold. */
   def assignCells(corpus: DataFrame, centroids: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
     val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
@@ -249,7 +266,7 @@ object Similarity {
       col(vecCol).as("n_vec"), col("cell"))
     val q = queryCells.select(col(idCol).as("query_id"),
       col(vecCol).as("q_vec"), col("cell"))
-    // `cell` may be nearestCell's argmax fold — the opaque() barrier
+    // `cell` may be nearestCell's argmax fold — cellColumn's Generate
     // keeps the join from inlining it into probe keys and inferred
     // filters (a left-join dodge does NOT work here: the =!= filter
     // above null-rejects, so EliminateOuterJoin converts it back)
@@ -437,32 +454,31 @@ object Similarity {
         col("p.sv").as("sv"): _*)
 
   /** Nearest-centroid assignment per (vector, subspace): exact integer
-    * L2, deterministic tie-break on cent_id, centroids broadcast
-    * (subs·k rows). Returns (_vid, s, sv, cell).
-    *
-    * r16 shape: the per-subspace codebook is folded into ONE array row
-    * (k structs, cent_id-ascending) and the argmin runs MAP-SIDE as an
-    * array_min over per-centroid distances — the old form exploded
-    * every sub-row ×k through the broadcast join and shuffled all 8N
-    * rows back through a groupBy(_vid, s) to undo it. min of
-    * (d, cent_id) structs ≡ the old min(struct(_d, cent_id)): same
-    * distance, same tie-break, zero exchange. */
+    * L2, deterministic tie-break on cent_id. Returns (_vid, s, sv, cell).
+    * The whole codebook (subs·k rows) folds into ONE broadcast row,
+    * `_cbs[s]` = subspace s's centroids cent_id-ascending, and the
+    * argmin runs MAP-SIDE as an array_min over per-centroid (d, cent_id)
+    * structs: same distance, same tie-break as a min(struct(_d,
+    * cent_id)) aggregate, zero exchange. `cents` must have (s, cent_id,
+    * c) with s = 0..subs-1 and at least one row; `_cbs` and `cell` are
+    * reserved column names. */
   def assignPq(subRows: DataFrame, cents: DataFrame,
-      keep: Seq[String] = Nil): DataFrame =
-    subRows.join(broadcast(cents.groupBy(col("s")).agg(
-        array_sort(collect_list(struct(col("cent_id"), col("c")))).as("_cbs"))),
-        Seq("s"))
-      .withColumn("cell", expr(
-        // opaque(): anti-inlining barrier — downstream joins key on
-        // `cell`, and without it the whole fold tree is substituted
-        // into the probe key and inferred isnotnull filters (3
-        // evaluations/row, probed; OpaqueBarrier scaladoc)
-        "opaque(array_min(transform(_cbs, cb -> named_struct(" +
+      keep: Seq[String] = Nil): DataFrame = {
+    requireUnreserved(subRows, "assignPq")
+    val book = cents.groupBy().agg(nonEmptyBook(
+        array_sort(collect_list(struct(col("s"), col("cent_id"), col("c")))), "assignPq")
+        .as("_all"))
+      .select(expr("transform(sequence(0, array_max(transform(_all, cb -> cb.s))), " +
+        "i -> filter(_all, cb -> cb.s = i))").as("_cbs"))
+    // downstream joins key on `cell` (PQ codes ⋈ LUT): cellColumn
+    // keeps the fold out of the probe key
+    subRows.crossJoin(broadcast(book))
+      .select(col("_vid") +: col("s") +: col("sv") +: cellColumn(
+        "array_min(transform(element_at(_cbs, s + 1), cb -> named_struct(" +
         "'d', aggregate(zip_with(sv, cb.c, (x, y) -> (x - y) * (x - y)), " +
         "CAST(0 AS BIGINT), (acc, t) -> acc + t), " +
-        "'id', cb.cent_id))).id)"))
-      .select(col("_vid") +: col("s") +: col("sv") +:
-        col("cell") +: keep.map(col): _*)
+        "'id', cb.cent_id))).id") +: keep.map(col): _*)
+  }
 
   /** Per-subspace integer k-means (`subs` independent codebooks trained
     * in ONE partitioned dataframe): exact integer L2 assignment +

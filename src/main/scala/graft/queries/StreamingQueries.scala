@@ -277,21 +277,26 @@ object StreamingQueries {
       // the partition count or any concurrent driver query on the same
       // scheduler (here: the confirming count()) starves forever —
       // probed the hard way on a local[4] test session with partitions=4
+      val (rows, parts) = (30000L, 2)
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "30000").option("partitions", "2").load()
+        .option("rows", rows.toString).option("partitions", parts.toString).load()
         .writeStream.format("memory").queryName("st25_out")
         .option("checkpointLocation", cp.getAbsolutePath)
         .trigger(org.apache.spark.sql.streaming.Trigger.Continuous("200 milliseconds"))
         .start()
       try {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        // the offset gate gets 90 of the 120 s, so the confirming count
+        // poll below always keeps at least 30 s of its own
+        val start = System.nanoTime()
+        val deadline = start + 120L * 1000 * 1000 * 1000
+        val gateDeadline = start + 90L * 1000 * 1000 * 1000
         // completion gate on the CHECKPOINT OFFSET LOG (r16): the old
         // poll ran a distinct().count() Spark job every 200 ms against
         // the memory sink — each a full-table scan contending with the
         // continuous tasks for slots (ContinuousExecution populates no
         // lastProgress, probed — the file log is the one driver-visible
         // signal without a job). Partition r's logged offset is the
-        // NEXT id it would emit, so offsets ≥ rows on BOTH partitions
+        // NEXT id it would emit, so offsets ≥ rows on EVERY partition
         // mean every feed row was emitted into a logged epoch. Reads
         // race epoch writes harmlessly (Try → retry next poll).
         def offsetsDrained(): Boolean = {
@@ -303,15 +308,15 @@ object StreamingQueries {
             val txt = new String(
               java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
             val offs = "(\\d+):(\\d+)".r.findAllMatchIn(txt).toSeq
-            offs.size == 2 && offs.forall(_.group(2).toLong >= 30000L)
+            offs.size == parts && offs.forall(_.group(2).toLong >= rows)
           }.getOrElse(false))
         }
-        while (!offsetsDrained() && System.nanoTime() < deadline)
+        while (!offsetsDrained() && System.nanoTime() < gateDeadline)
           Thread.sleep(50)
         // belt: one confirming Spark job (normally a single iteration)
         // — at-least-once delivery means the logged epoch's rows are in
         // the sink once its WRITES landed; the distinct count proves it
-        while (s.table("st25_out").select(col("id")).distinct.count() < 30000L &&
+        while (s.table("st25_out").select(col("id")).distinct.count() < rows &&
             System.nanoTime() < deadline) Thread.sleep(100)
       } finally q.stop()
       s.table("st25_out").distinct()

@@ -822,11 +822,30 @@ class PlanSpec extends AnyFunSuite {
     // broadcast centroid array (r16 — the old max_by partial+final agg
     // pair and its corpus shuffle are gone); the sweep must plan
     // exactly one such fold (the brute truth side has none; a
-    // per-level re-search would plan three)
-    val asg = "array_max".r.findAllIn(p).size
+    // per-level re-search would plan three, an inlined one more).
+    // Anchored to the assignment shape — the fold over `_cbs` inside
+    // cellColumn's explode — so an unrelated array_max cannot count.
+    val asg = "explode\\(array\\(\\(array_max\\(transform\\(_cbs".r.findAllIn(p).size
     assert(asg == 1, s"expected 1 map-side array_max corpus assignment, saw $asg\n$p")
     assert(!p.contains("max_by"), s"the shuffled argmax form is back\n$p")
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("assignment barrier canary: a filter on a non-cell column above indexWithCells reaches the scan") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    import graft.sources.Tables
+    // the barrier that keeps the `cell` fold from being inlined must not
+    // block a caller's predicate on a SIBLING column: it has to prune at
+    // the corpus scan, not run above every assignment (a Project flagged
+    // nondeterministic, the r16 barrier, failed this)
+    val vecs = Tables.embeddings(spark, sf)
+    val p = Similarity.indexWithCells(vecs, vecs.filter(col("vec_id") < 8),
+        "vec_id", "embedding")
+      .filter(col("vec_id") >= 100)
+      .queryExecution.executedPlan.toString
+    val pushed = p.linesIterator.filter(_.contains("PushedFilters")).toSeq
+    assert(pushed.exists(_.contains("GreaterThanOrEqual(vec_id,100)")), p)
   }
 
   test("q52: a failed write never publishes — abort discards task accounting") {

@@ -399,4 +399,35 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotCells == refCells, "nearestCell fold diverged from the crossJoin+max_by reference")
   }
+
+  /** The message of the innermost cause that has one. */
+  private def rootMessage(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      .filter(_ != null).toSeq.mkString(" | ")
+
+  test("an empty codebook fails loudly instead of assigning NULL or no cells") {
+    val none = vecs.filter(lit(false))
+    val ivf = intercept[Exception] {
+      Similarity.assignCells(vecs, none, "vec_id", "embedding").collect()
+    }
+    assert(rootMessage(ivf).contains("nearestCell: empty codebook"), rootMessage(ivf))
+    val sub = Similarity.pqSubRows(vecs, "vec_id", "embedding", subs = 2, width = 2)
+    val book = Similarity.trainPqCodebooks(sub, 2, 2, 1).filter(lit(false))
+    val pq = intercept[Exception](Similarity.assignPq(sub, book).collect())
+    assert(rootMessage(pq).contains("assignPq: empty codebook"), rootMessage(pq))
+  }
+
+  test("the folds' reserved _cbs/cell column names are rejected on the caller's frame") {
+    val withCell = vecs.withColumn("cell", lit(7L))
+    val e1 = intercept[IllegalArgumentException] {
+      Similarity.indexWithCells(withCell, vecs, "vec_id", "embedding")
+    }
+    assert(e1.getMessage.contains("reserved column(s) cell"), e1.getMessage)
+    val sub = Similarity.pqSubRows(vecs, "vec_id", "embedding", subs = 2, width = 2)
+    val book = Similarity.trainPqCodebooks(sub, 2, 2, 1)
+    val e2 = intercept[IllegalArgumentException] {
+      Similarity.assignPq(sub.withColumn("_cbs", lit(0)), book, keep = Seq("_cbs"))
+    }
+    assert(e2.getMessage.contains("reserved column(s) _cbs"), e2.getMessage)
+  }
 }

@@ -3,7 +3,8 @@
 # so long background measurements (sf1 bench/smoke) can never race a
 # dirty source tree into a recompiled binary mid-script (the round-11
 # lesson: sbt runMain recompiles dirty sources silently).
-# Usage: tools/run_main.sh graft.Bench [args...]
+# Usage: tools/run_main.sh graft.Harness <bench|verify|smoke|explain|keys> [args...]
+#        tools/run_main.sh graft.Bench [keys...]   (data dir: SPARK_GRAFT_SF_DIR)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CLS="$1"; shift
