@@ -233,7 +233,8 @@ object MemTables {
   * and `eval` walk the same shapes — canDeleteWhere accepts exactly
   * what deleteWhere can apply. */
 object MemPredicates {
-  private def flip(op: String): String = op match {
+  /** The operator seen from the other side: `lit op col` ≡ `col flip(op) lit`. */
+  private[catalog] def flip(op: String): String = op match {
     case "<" => ">"
     case "<=" => ">="
     case ">" => "<"
@@ -503,13 +504,6 @@ class MemScanBuilder(tableName: String, state: MemTables.State)
   // keeps all its filters; the index only prunes blocks the zones
   // PROVE cannot match — the superset soundness contract).
   private var skipHints: Array[(String, String, Long)] = Array.empty
-  private def flip(op: String): String = op match {
-    case "<" => ">"
-    case "<=" => ">="
-    case ">" => "<"
-    case ">=" => "<="
-    case other => other
-  }
   private def hintOf(p: Predicate, idxCols: Set[String])
       : Option[(String, String, Long)] = p.name() match {
     case op @ ("=" | "<" | "<=" | ">" | ">=") => p.children() match {
@@ -520,7 +514,7 @@ class MemScanBuilder(tableName: String, state: MemTables.State)
       case Array(l: V2Literal[_], r: NamedReference)
           if l.value.isInstanceOf[java.lang.Long] &&
             idxCols.contains(r.fieldNames.mkString(".")) =>
-        Some((r.fieldNames.mkString("."), flip(op), l.value.asInstanceOf[Long]))
+        Some((r.fieldNames.mkString("."), MemPredicates.flip(op), l.value.asInstanceOf[Long]))
       case _ => None
     }
     case _ => None

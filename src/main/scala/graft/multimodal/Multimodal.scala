@@ -1,149 +1,284 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal (binary) column plumbing + a real pure-JVM header decoder.
+/** Multimodal (binary) column plumbing + real pure-JVM container parsers.
   *
-  * Real pipelines carry image/audio/video as opaque `binary` columns and
-  * decode them in batched, vectorized calls. Full codec libraries are not
-  * in this container, but container *headers* need no codec: `decodeHeader`
-  * parses actual PNG (signature + IHDR) and JPEG (marker scan to SOFn)
-  * bytes for dimensions and format — the same work an image pipeline's
-  * metadata pass does. The Spark-side plumbing is real throughout: typed
-  * Dataset, batched mapPartitions (one decoder context + batch loop per
-  * partition, the shape a JNI/FFI decoder needs), explicit schema, no
-  * driver-side collection.
+  * Real pipelines carry image/audio/video as opaque `binary` columns.
+  * graft depends on no codec library, but container *headers* need no
+  * codec: `decodeHeader` parses actual PNG (signature
+  * + IHDR) and JPEG (marker scan to SOFn) bytes for dimensions and
+  * format — the same work an image pipeline's metadata pass does — and
+  * the other parsers walk real TIFF/WAV/MP4/tar/zip/WARC/NPY/
+  * safetensors/PDF structure the same way.
   *
-  * `synthesize` builds VALID image payloads (PNG: signature, IHDR with
-  * correct CRC32, padded IDAT, IEND; JPEG: SOI, JFIF APP0, SOF0, entropy
-  * padding, EOI) deterministically from (doc_id, n_chars) so an oracle
-  * can predict what decoding the bytes must yield.
+  * The Spark side is two functions. `synthesize` turns `documents` into
+  * (doc_id, payload) rows through a per-record `synthX`, reading doc_id
+  * plus the one column that synthesizer names; `decode` turns
+  * (doc_id, payload) rows into typed rows through a per-record parser.
+  * Both are one typed `map` each — no per-partition state, no driver-
+  * side collection — so decoding runs in the scan's stage and payload
+  * bytes never shuffle. Every parser is a plain function of
+  * (doc_id, bytes) that returns its invalid/"unknown" row on malformed
+  * input and never throws (one throw fails the whole job): numeric
+  * fields are read wide and bound-checked before use. New formats go
+  * through these two functions and the shared byte helpers below.
+  *
+  * Each `synthX` builds VALID payloads deterministically from document
+  * fields, so an oracle can predict what decoding them must yield.
   */
 object Multimodal {
 
   case class BinaryDoc(doc_id: Long, payload: Array[Byte])
+
+  // ----------------------------------------------------- spark plumbing
+
+  /** `documents` → (doc_id, payload): `make` sees doc_id and the
+    * `input` column (doc_id itself for id-only formats), the only
+    * columns the documents scan reads. */
+  def synthesize[A: TypeTag](docs: DataFrame, input: String)(
+      make: (Long, A) => Array[Byte]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), col(input)).as[(Long, A)]
+      .map { case (id, a) => BinaryDoc(id, make(id, a)) }.toDF()
+  }
+
+  /** (doc_id, payload) rows → one `parse` row each. */
+  def decode[T <: Product : TypeTag](payloads: DataFrame)(
+      parse: (Long, Array[Byte]) => T): Dataset[T] = {
+    val spark = payloads.sparkSession
+    import spark.implicits._
+    payloads.select(col("doc_id").cast("long"), col("payload").cast("binary"))
+      .as[BinaryDoc].map(d => parse(d.doc_id, d.payload))
+  }
+
+  // --------------------------------------------------------- byte order
+
+  private final val LE = true
+  private final val BE = false
+
+  /** Unsigned 16-bit field at `off`. */
+  private def u16(b: Array[Byte], off: Int, little: Boolean): Int =
+    if (little) (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
+    else ((b(off) & 0xFF) << 8) | (b(off + 1) & 0xFF)
+
+  /** 32-bit field at `off` as an Int: a set high bit reads back
+    * negative, so offsets and lengths must be sign-checked or widened
+    * (`& 0xFFFFFFFFL`) before use. */
+  private def u32(b: Array[Byte], off: Int, little: Boolean): Int =
+    if (little) u16(b, off, LE) | (u16(b, off + 2, LE) << 16)
+    else (u16(b, off, BE) << 16) | u16(b, off + 2, BE)
+
+  private def w16(v: Int, little: Boolean): Array[Byte] =
+    if (little) Array(v.toByte, (v >>> 8).toByte)
+    else Array((v >>> 8).toByte, v.toByte)
+
+  private def w32(v: Int, little: Boolean): Array[Byte] =
+    if (little) w16(v, LE) ++ w16(v >>> 16, LE)
+    else w16(v >>> 16, BE) ++ w16(v, BE)
+
+  private def ascii(b: Array[Byte], off: Int, n: Int): String =
+    new String(b, off, n, "US-ASCII")
+
+  /** `n` deterministic filler bytes (seed + i) mod 251. */
+  private def filler(n: Int, seed: Long): Array[Byte] =
+    Array.tabulate(n)(i => ((seed + i) % 251).toByte)
+
+  /** Integer value of a run of ASCII digits, or -1 when it overflows a
+    * Long — no payload offset or length is that large, so callers take
+    * their out-of-range path on any negative. */
+  private def digitsValue(d: String): Long = d.toLongOption.getOrElse(-1L)
+
+  // ---------------------------------------------------------- png/jpeg
+
   case class DecodedMeta(doc_id: Long, byte_len: Int, width: Int, height: Int,
       format: String)
-
-  // ---------------------------------------------------------------- synth
-
-  private def be32(v: Int): Array[Byte] =
-    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-  private def be16(v: Int): Array[Byte] = Array((v >>> 8).toByte, v.toByte)
 
   /** A PNG chunk: length + type + data + CRC32(type ++ data). */
   private def pngChunk(chunkType: String, data: Array[Byte]): Array[Byte] = {
     val crc = new java.util.zip.CRC32()
     val t = chunkType.getBytes("US-ASCII")
     crc.update(t); crc.update(data)
-    be32(data.length) ++ t ++ data ++ be32(crc.getValue.toInt)
+    w32(data.length, BE) ++ t ++ data ++ w32(crc.getValue.toInt, BE)
   }
 
   /** Valid PNG: 8-byte signature, IHDR (8-bit RGBA), an IDAT of `pad`
     * deterministic bytes, IEND. Total length = 57 + pad. */
   def synthPng(width: Int, height: Int, pad: Int): Array[Byte] = {
-    val sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
     val ihdr = pngChunk("IHDR",
-      be32(width) ++ be32(height) ++ Array[Byte](8, 6, 0, 0, 0))
-    val idat = pngChunk("IDAT", Array.tabulate(pad)(i => (i % 251).toByte))
-    sig ++ ihdr ++ idat ++ pngChunk("IEND", Array.emptyByteArray)
+      w32(width, BE) ++ w32(height, BE) ++ Array[Byte](8, 6, 0, 0, 0))
+    pngSig ++ ihdr ++ pngChunk("IDAT", filler(pad, 0)) ++
+      pngChunk("IEND", Array.emptyByteArray)
   }
 
   /** Valid JPEG: SOI, JFIF APP0, SOF0 (3-component baseline), `pad`
     * entropy bytes, EOI. Total length = 41 + pad. */
   def synthJpeg(width: Int, height: Int, pad: Int): Array[Byte] = {
     val soi = Array(0xFF, 0xD8).map(_.toByte)
-    val app0 = Array(0xFF, 0xE0).map(_.toByte) ++ be16(16) ++
+    val app0 = Array(0xFF, 0xE0).map(_.toByte) ++ w16(16, BE) ++
       "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0) ++ be16(1) ++ be16(1) ++ Array[Byte](0, 0)
-    val sof0 = Array(0xFF, 0xC0).map(_.toByte) ++ be16(17) ++ Array[Byte](8) ++
-      be16(height) ++ be16(width) ++ Array[Byte](3) ++
+      Array[Byte](0, 1, 1, 0) ++ w16(1, BE) ++ w16(1, BE) ++ Array[Byte](0, 0)
+    val sof0 = Array(0xFF, 0xC0).map(_.toByte) ++ w16(17, BE) ++ Array[Byte](8) ++
+      w16(height, BE) ++ w16(width, BE) ++ Array[Byte](3) ++
       Array[Byte](1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
-    val entropy = Array.tabulate(pad)(i => (i % 251).toByte)
-    soi ++ app0 ++ sof0 ++ entropy ++ Array(0xFF, 0xD9).map(_.toByte)
+    soi ++ app0 ++ sof0 ++ filler(pad, 0) ++ Array(0xFF, 0xD9).map(_.toByte)
   }
 
-  private def le32(v: Int): Array[Byte] =
-    Array(v.toByte, (v >>> 8).toByte, (v >>> 16).toByte, (v >>> 24).toByte)
-  private def le16(v: Int): Array[Byte] = Array(v.toByte, (v >>> 8).toByte)
+  /** Image dimensions every x-family image synthesizer derives from
+    * doc_id: (id % 640 + 16, id % 480 + 16). */
+  private def dims(id: Long): (Int, Int) = ((id % 640).toInt + 16, (id % 480).toInt + 16)
 
-  /** Valid WAV: RIFF/WAVE header, PCM fmt chunk (little-endian, the
-    * inverse byte order of PNG/JPEG), `pad` data bytes. Length = 44+pad. */
-  def synthWav(sampleRate: Int, channels: Int, pad: Int): Array[Byte] = {
-    val bits = 16
-    val byteRate = sampleRate * channels * bits / 8
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++
-      le16(channels) ++ le32(sampleRate) ++ le32(byteRate) ++
-      le16(channels * bits / 8) ++ le16(bits)
-    val data = "data".getBytes("US-ASCII") ++ le32(pad) ++
-      Array.tabulate(pad)(i => (i % 251).toByte)
-    "RIFF".getBytes("US-ASCII") ++ le32(36 + pad) ++
-      "WAVE".getBytes("US-ASCII") ++ fmt ++ data
+  /** Deterministic image payload for a document: even ids are PNG, odd
+    * are JPEG; dims and padding derive from (doc_id, n_chars) so the
+    * DuckDB oracle can compute the expected decode output
+    * arithmetically. */
+  def synthImage(id: Long, nChars: Long): Array[Byte] = {
+    val (w, h) = dims(id)
+    val pad = math.floorMod(nChars, 100L).toInt
+    if (id % 2 == 0) synthPng(w, h, pad) else synthJpeg(w, h, pad)
   }
+
+  /** Payloads with deliberate byte-identical duplicates: all synthesis
+    * parameters derive from `doc_id % 40` (a residue below 100 stays
+    * inside the pad range), so docs sharing a residue share the exact
+    * payload bytes and payloads of different residues differ (width is
+    * injective in the residue). Feeds content-hash dedup (x7), whose
+    * oracle predicts group structure from the same residue. */
+  def synthShared(id: Long): Array[Byte] = {
+    val r = math.floorMod(id, 40L)
+    synthImage(r, r)
+  }
+
+  private val pngSig =
+    Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
+
+  /** Parse real container headers for dimensions + format.
+    * PNG: verify the 8-byte signature and that the first chunk is IHDR;
+    * width/height are big-endian u32 at offsets 16/20.
+    * JPEG: verify SOI, then walk marker segments (each FF xx + u16
+    * length) until a frame header SOFn (C0-CF excluding C4/C8/CC);
+    * height/width are u16 at payload offsets 3/5.
+    * Anything else (or truncated) → ("unknown", 0, 0). */
+  def decodeHeader(id: Long, bytes: Array[Byte]): DecodedMeta = {
+    val len = bytes.length
+    def unknown = DecodedMeta(id, len, 0, 0, "unknown")
+    if (len >= 24 && bytes.startsWith(pngSig) &&
+        u32(bytes, 8, BE) == 13 && ascii(bytes, 12, 4) == "IHDR") {
+      DecodedMeta(id, len, u32(bytes, 16, BE), u32(bytes, 20, BE), "png")
+    } else if (len >= 4 && (bytes(0) & 0xFF) == 0xFF && (bytes(1) & 0xFF) == 0xD8) {
+      var pos = 2
+      while (pos + 9 <= len && (bytes(pos) & 0xFF) == 0xFF) {
+        val marker = bytes(pos + 1) & 0xFF
+        if (marker >= 0xC0 && marker <= 0xCF &&
+            marker != 0xC4 && marker != 0xC8 && marker != 0xCC) {
+          return DecodedMeta(id, len, u16(bytes, pos + 7, BE), u16(bytes, pos + 5, BE),
+            "jpeg")
+        }
+        pos += 2 + u16(bytes, pos + 2, BE) // skip segment: marker + length field
+      }
+      unknown
+    } else unknown
+  }
+
+  // ---------------------------------------------------------------- wav
 
   case class AudioMeta(doc_id: Long, byte_len: Int, sample_rate: Int,
       channels: Int, format: String)
 
+  /** A RIFF/WAVE file: PCM fmt chunk (little-endian, the inverse byte
+    * order of PNG/JPEG) and one data chunk. Length = 44 + data. */
+  private def wavFile(rate: Int, channels: Int, bits: Int,
+      data: Array[Byte]): Array[Byte] = {
+    val fmt = "fmt ".getBytes("US-ASCII") ++ w32(16, LE) ++ w16(1, LE) ++
+      w16(channels, LE) ++ w32(rate, LE) ++ w32(rate * channels * bits / 8, LE) ++
+      w16(channels * bits / 8, LE) ++ w16(bits, LE)
+    "RIFF".getBytes("US-ASCII") ++ w32(36 + data.length, LE) ++
+      "WAVE".getBytes("US-ASCII") ++ fmt ++
+      "data".getBytes("US-ASCII") ++ w32(data.length, LE) ++ data
+  }
+
+  /** Valid 16-bit WAV with `pad` data bytes. Length = 44 + pad. */
+  def synthWav(sampleRate: Int, channels: Int, pad: Int): Array[Byte] =
+    wavFile(sampleRate, channels, 16, filler(pad, 0))
+
+  /** WAV payload per doc: sample rate and channels derive from doc_id
+    * so the oracle predicts the decode arithmetically. */
+  def synthAudio(id: Long, nChars: Long): Array[Byte] =
+    synthWav(Seq(8000, 16000, 22050, 44100)((id % 4).toInt), (id % 2).toInt + 1,
+      math.floorMod(nChars, 100L).toInt)
+
   /** Parse a WAV header: verify RIFF....WAVE, then read the PCM fmt
     * chunk's channel count and sample rate (little-endian u16/u32). */
   def decodeAudioHeader(id: Long, bytes: Array[Byte]): AudioMeta = {
-    def l16(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    def l32(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-      ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
     val len = bytes.length
-    if (len >= 36 && new String(bytes, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(bytes, 8, 4, "US-ASCII") == "WAVE" &&
-        new String(bytes, 12, 4, "US-ASCII") == "fmt ") {
-      AudioMeta(id, len, l32(24), l16(22), "wav")
+    if (len >= 36 && ascii(bytes, 0, 4) == "RIFF" &&
+        ascii(bytes, 8, 4) == "WAVE" && ascii(bytes, 12, 4) == "fmt ") {
+      AudioMeta(id, len, u32(bytes, 24, LE), u16(bytes, 22, LE), "wav")
     } else AudioMeta(id, len, 0, 0, "unknown")
   }
 
-  /** WAV payloads per doc: sample rate and channels derive from doc_id
-    * so the oracle predicts the decode arithmetically. */
-  def synthesizeAudio(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("int"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (id, n) =>
-        val rate = Seq(8000, 16000, 22050, 44100)((id % 4).toInt)
-        val ch = (id % 2).toInt + 1
-        BinaryDoc(id, synthWav(rate, ch, math.floorMod(n, 100)))
-      }).toDF()
+  /** The 8-bit mono PCM gate: RIFF/WAVE/fmt/data at their canonical
+    * offsets, REQUIRE 8-bit mono (a 16-bit or stereo file fails rather
+    * than mis-framing), and clamp the data chunk's declared size to the
+    * bytes actually present (truncation-safe). Some((sample rate,
+    * sample count)), or None. */
+  private def pcm8Mono(bytes: Array[Byte]): Option[(Int, Int)] = {
+    if (bytes.length < 44 || ascii(bytes, 0, 4) != "RIFF" ||
+        ascii(bytes, 8, 4) != "WAVE" || ascii(bytes, 12, 4) != "fmt " ||
+        ascii(bytes, 36, 4) != "data") return None
+    if (u16(bytes, 22, LE) != 1 || u16(bytes, 34, LE) != 8) return None
+    val n = math.min(u32(bytes, 40, LE), bytes.length - 44)
+    if (n < 0) None else Some((u32(bytes, 24, LE), n))
   }
 
-  /** Batched audio-header decode (same mapPartitions shape as decodeMeta). */
-  def decodeAudio(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[AudioMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeAudioHeader(d.doc_id, d.payload)))
+  /** L1 energy Σ|s − 128| of each of the first `n` 50-sample frames
+    * of an 8-bit PCM WAV. */
+  private def frameEnergies(bytes: Array[Byte], n: Int): Array[Long] = {
+    val e = new Array[Long](n)
+    var f = 0
+    while (f < n) {
+      var i = 0
+      while (i < 50) {
+        e(f) += math.abs((bytes(44 + f * 50 + i) & 0xFF) - 128)
+        i += 1
       }
+      f += 1
+    }
+    e
   }
 
-  // ------------------------------------------------------------- tiff
+  // --------------------------------------------------------------- tiff
 
   case class TiffMeta(doc_id: Long, byte_len: Int, byte_order: String,
     width: Int, height: Int)
 
   /** A minimal valid TIFF (TIFF 6.0 §2): byte-order marker ("II" little
-    * / "MM" big), magic 42, IFD offset, then one IFD holding ImageWidth
-    * (256) and ImageLength (257) as SHORT entries — the value
-    * left-justified in its 4-byte field per spec, which is the part a
-    * naive "always read u32" parser gets wrong on big-endian files. */
-  def synthTiff(width: Int, height: Int, little: Boolean, pad: Int): Array[Byte] = {
-    def e16(v: Int) = if (little) le16(v) else be16(v)
-    def e32(v: Int) = if (little) le32(v) else be32(v)
-    val order = (if (little) "II" else "MM").getBytes("US-ASCII")
-    def entry(tag: Int, v: Int): Array[Byte] =
-      e16(tag) ++ e16(3) ++ e32(1) ++ (e16(v) ++ e16(0))
-    val ifd = e16(2) ++ entry(256, width) ++ entry(257, height) ++ e32(0)
-    order ++ e16(42) ++ e32(8) ++ ifd ++
+    * / "MM" big), magic 42, IFD offset 8, then one IFD of SHORT
+    * `(tag, value)` entries — the value left-justified in its 4-byte
+    * field per spec, which is the part a naive "always read u32" parser
+    * gets wrong on big-endian files. */
+  private def tiffIfd(little: Boolean, entries: (Int, Int)*): Array[Byte] =
+    (if (little) "II" else "MM").getBytes("US-ASCII") ++ w16(42, little) ++
+      w32(8, little) ++ w16(entries.length, little) ++
+      entries.toArray.flatMap { case (tag, v) =>
+        w16(tag, little) ++ w16(3, little) ++ w32(1, little) ++
+          w16(v, little) ++ w16(0, little)
+      } ++ w32(0, little)
+
+  /** ImageWidth (256) / ImageLength (257) TIFF plus `pad` filler bytes. */
+  def synthTiff(width: Int, height: Int, little: Boolean, pad: Int): Array[Byte] =
+    tiffIfd(little, 256 -> width, 257 -> height) ++
       Array.tabulate(pad)(i => (i % 253).toByte)
+
+  /** TIFF payload per doc: dimensions and byte order derive from doc_id
+    * (even → little-endian, odd → big-endian) so the oracle predicts
+    * every decoded field arithmetically. */
+  def synthTiffDoc(id: Long, nChars: Long): Array[Byte] = {
+    val (w, h) = dims(id)
+    synthTiff(w, h, id % 2 == 0, math.floorMod(nChars, 100L).toInt)
   }
 
   /** Parse a TIFF header in EITHER byte order: marker → endianness,
@@ -154,58 +289,56 @@ object Multimodal {
     val len = bytes.length
     def unknown = TiffMeta(id, len, "unknown", 0, 0)
     if (len < 8) return unknown
-    val marker = new String(bytes, 0, 2, "US-ASCII")
+    val marker = ascii(bytes, 0, 2)
     val little = marker == "II"
     if (!little && marker != "MM") return unknown
-    def u16at(off: Int) =
-      if (little) (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-      else ((bytes(off) & 0xFF) << 8) | (bytes(off + 1) & 0xFF)
-    def u32at(off: Int) =
-      if (little) (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-      else ((bytes(off) & 0xFF) << 24) | ((bytes(off + 1) & 0xFF) << 16) |
-        ((bytes(off + 2) & 0xFF) << 8) | (bytes(off + 3) & 0xFF)
-    if (u16at(2) != 42) return unknown
-    val ifd = u32at(4)
+    if (u16(bytes, 2, little) != 42) return unknown
+    val ifd = u32(bytes, 4, little)
     if (ifd < 8 || ifd + 2 > len) return unknown
-    val n = u16at(ifd)
+    val n = u16(bytes, ifd, little)
     if (ifd + 2 + n * 12 + 4 > len) return unknown
     var w = 0; var h = 0
     for (i <- 0 until n) {
       val off = ifd + 2 + i * 12
-      val tag = u16at(off); val typ = u16at(off + 2)
+      val tag = u16(bytes, off, little); val typ = u16(bytes, off + 2, little)
       // SHORT (3) is left-justified in the 4-byte value field; LONG (4)
       // fills it — both legal encodings for these tags
-      val v = if (typ == 3) u16at(off + 8) else u32at(off + 8)
+      val v = if (typ == 3) u16(bytes, off + 8, little) else u32(bytes, off + 8, little)
       if (tag == 256) w = v else if (tag == 257) h = v
     }
     TiffMeta(id, len, if (little) "le" else "be", w, h)
   }
 
-  /** TIFF payloads per doc: dimensions and byte order derive from
-    * doc_id (even → little-endian, odd → big-endian) so the oracle
-    * predicts every decoded field arithmetically. */
-  def synthesizeTiff(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("int"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (id, n) =>
-        BinaryDoc(id, synthTiff((id % 640).toInt + 16, (id % 480).toInt + 16,
-          id % 2 == 0, math.floorMod(n, 100)))
-      }).toDF()
-  }
-
-  /** Batched TIFF-header decode (same mapPartitions shape as decodeMeta). */
-  def decodeTiff(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[TiffMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeTiffHeader(d.doc_id, d.payload)))
+  /** TIFF IFD walk for tag 274 at TIFF base `tb` (offsets relative to
+    * the base, either byte order) — shared by the JPEG/APP1 path (x21)
+    * and the oriented-gray trailer (x22). Returns (byte order, 1-8
+    * orientation) or None for anything unparseable. */
+  private def tiffOrientation(bytes: Array[Byte], tb: Int,
+      len: Int): Option[(String, Int)] = {
+    if (tb < 0 || tb + 8 > len) return None
+    val mark = ascii(bytes, tb, 2)
+    val little = mark == "II"
+    if (!little && mark != "MM") return None
+    if (u16(bytes, tb + 2, little) != 42) return None
+    // parse wide + bounds-check BEFORE use (the x16/x18 lesson): a
+    // tampered IFD offset with the high bit set reads back negative
+    // from u32 and would index before the buffer
+    val ifdOff = u32(bytes, tb + 4, little)
+    if (ifdOff < 0 || ifdOff > len) return None
+    val ifd = tb + ifdOff
+    if (ifd < 0 || ifd + 2 > len) return None
+    val n = u16(bytes, ifd, little)
+    var i = 0
+    while (i < n && ifd + 2 + 12 * (i + 1) <= len) {
+      val e = ifd + 2 + 12 * i
+      if (u16(bytes, e, little) == 274 && u16(bytes, e + 2, little) == 3) {
+        val ori = u16(bytes, e + 8, little) // SHORT left-justified in the value field
+        if (ori >= 1 && ori <= 8)
+          return Some((if (little) "II" else "MM", ori))
       }
+      i += 1
+    }
+    None // no usable orientation tag
   }
 
   // ------------------------------------------- mixed-container sniffing
@@ -216,25 +349,19 @@ object Multimodal {
     * up front (doc_id%4 rotates PNG / JPEG / WAV / TIFF here), so the
     * reader must SNIFF the magic bytes and dispatch to the right
     * decoder. */
-  def synthesizeMixed(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("int"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (id, n) =>
-        val pad = math.floorMod(n, 100)
-        val bytes = (id % 4) match {
-          case 0 => synthPng((id % 640).toInt + 16, (id % 480).toInt + 16, pad)
-          case 1 => synthJpeg((id % 640).toInt + 16, (id % 480).toInt + 16, pad)
-          // rate pinned to 22050: this branch only fires at id%4==2, so
-          // any rate "lookup" keyed on id%4 is dead generality — and the
-          // x14 oracle hard-codes 22050, so the literal keeps generator
-          // and oracle visibly in sync
-          case 2 => synthWav(22050, (id % 2).toInt + 1, pad)
-          case _ => synthTiff((id % 640).toInt + 16, (id % 480).toInt + 16, id % 8 < 4, pad)
-        }
-        BinaryDoc(id, bytes)
-      }).toDF()
+  def synthMixed(id: Long, nChars: Long): Array[Byte] = {
+    val (w, h) = dims(id)
+    val pad = math.floorMod(nChars, 100L).toInt
+    (id % 4) match {
+      case 0 => synthPng(w, h, pad)
+      case 1 => synthJpeg(w, h, pad)
+      // rate pinned to 22050: this branch only fires at id%4==2, so
+      // any rate "lookup" keyed on id%4 is dead generality — and the
+      // x14 oracle hard-codes 22050, so the literal keeps generator
+      // and oracle visibly in sync
+      case 2 => synthWav(22050, (id % 2).toInt + 1, pad)
+      case _ => synthTiff(w, h, id % 8 < 4, pad)
+    }
   }
 
   /** Magic-byte dispatch: classify by signature, then run the matching
@@ -252,38 +379,25 @@ object Multimodal {
       val m = decodeHeader(id, bytes)
       SniffedMeta(id, "jpeg", m.width, m.height)
     } else if (bytes.length >= 12 &&
-        new String(bytes, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(bytes, 8, 4, "US-ASCII") == "WAVE") {
+        ascii(bytes, 0, 4) == "RIFF" && ascii(bytes, 8, 4) == "WAVE") {
       val m = decodeAudioHeader(id, bytes)
       SniffedMeta(id, "wav", m.sample_rate, m.channels)
     } else if (bytes.length >= 8 && {
-        val mk = new String(bytes, 0, 2, "US-ASCII"); mk == "II" || mk == "MM" }) {
+        val mk = ascii(bytes, 0, 2); mk == "II" || mk == "MM" }) {
       val m = decodeTiffHeader(id, bytes)
       if (m.byte_order == "unknown") SniffedMeta(id, "unknown", 0, 0)
       else SniffedMeta(id, "tiff", m.width, m.height)
     } else SniffedMeta(id, "unknown", 0, 0)
   }
 
-  /** Batched sniff-dispatch decode (x-family mapPartitions shape). */
-  def sniffDecode(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[SniffedMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => sniffDecodeHeader(d.doc_id, d.payload)))
-      }
-  }
-
-  // ------------------------------------------------------------ video
+  // -------------------------------------------------------------- video
 
   case class VideoMeta(doc_id: Long, byte_len: Int, brand: String,
       timescale: Int, duration_units: Long, duration_ms: Long)
 
   /** An ISO-BMFF box: u32 BE size (incl. header) + 4-char type + body. */
   private def mp4Box(boxType: String, body: Array[Byte]): Array[Byte] =
-    be32(8 + body.length) ++ boxType.getBytes("US-ASCII") ++ body
+    w32(8 + body.length, BE) ++ boxType.getBytes("US-ASCII") ++ body
 
   /** Valid minimal MP4: ftyp (major brand + one compatible brand),
     * moov[mvhd v0] (timescale + duration at their real offsets, identity
@@ -291,185 +405,80 @@ object Multimodal {
     * Total length = 24 + 116 + 8 + pad = 148 + pad. */
   def synthMp4(brand: String, timescale: Int, durationUnits: Long,
       pad: Int): Array[Byte] = {
+    def word(v: Int) = w32(v, BE) // mvhd fields are big-endian u32s
     val ftyp = mp4Box("ftyp",
-      brand.getBytes("US-ASCII") ++ be32(0) ++ "isom".getBytes("US-ASCII") ++
+      brand.getBytes("US-ASCII") ++ word(0) ++ "isom".getBytes("US-ASCII") ++
         "iso2".getBytes("US-ASCII"))
     val mvhd = mp4Box("mvhd",
       Array[Byte](0, 0, 0, 0) ++            // version 0 + flags
-        be32(0) ++ be32(0) ++               // creation, modification
-        be32(timescale) ++ be32(durationUnits.toInt) ++
-        be32(0x00010000) ++ be16(0x0100) ++ // rate 1.0, volume 1.0
+        word(0) ++ word(0) ++               // creation, modification
+        word(timescale) ++ word(durationUnits.toInt) ++
+        word(0x00010000) ++ w16(0x0100, BE) ++ // rate 1.0, volume 1.0
         Array.fill[Byte](10)(0) ++          // reserved
-        (be32(0x00010000) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x00010000) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x40000000)) ++              // identity matrix
+        (word(0x00010000) ++ word(0) ++ word(0) ++ word(0) ++
+          word(0x00010000) ++ word(0) ++ word(0) ++ word(0) ++
+          word(0x40000000)) ++              // identity matrix
         Array.fill[Byte](24)(0) ++          // pre_defined
-        be32(2))                            // next_track_ID
-    val moov = mp4Box("moov", mvhd)
-    val mdat = mp4Box("mdat", Array.tabulate(pad)(i => (i % 251).toByte))
-    ftyp ++ moov ++ mdat
+        word(2))                            // next_track_ID
+    ftyp ++ mp4Box("moov", mvhd) ++ mp4Box("mdat", filler(pad, 0))
+  }
+
+  /** MP4 payload per doc: brand/timescale/duration derive from doc_id
+    * (whole seconds 1..120 at the residue-selected timescale), pad from
+    * n_chars — all oracle-predictable arithmetic. */
+  def synthVideo(id: Long, nChars: Long): Array[Byte] = {
+    val timescale = Seq(600, 1000, 90000, 44100)((id % 4).toInt)
+    synthMp4(if (id % 2 == 0) "isom" else "mp42", timescale,
+      (id % 120 + 1) * timescale, math.floorMod(nChars, 100L).toInt)
   }
 
   /** Walk the top-level box sequence to moov, then moov's children to
     * mvhd (the real ISO-BMFF traversal — no fixed offsets), and read
     * timescale/duration as big-endian u32. duration_ms is integer
     * arithmetic (units * 1000 div timescale) so the oracle can predict
-    * it exactly. Anything malformed → ("unknown", 0, 0, 0). */
+    * it exactly. Anything malformed → ("unknown", 0, 0, 0). Offsets are
+    * Longs and every box read stays inside the payload, so a tampered
+    * box size can neither wrap an offset nor read past the end. */
   def decodeVideoHeader(id: Long, bytes: Array[Byte]): VideoMeta = {
     val len = bytes.length
-    def boxType(off: Int) = new String(bytes, off + 4, 4, "US-ASCII")
+    def boxType(off: Long) = ascii(bytes, off.toInt + 4, 4)
+    def size(off: Long) = u32(bytes, off.toInt, BE)
     def unknown = VideoMeta(id, len, "unknown", 0, 0L, 0L)
-    if (len < 16 || boxType(0) != "ftyp" || u32(bytes, 0) < 16) return unknown
-    val brand = new String(bytes, 8, 4, "US-ASCII")
+    if (len < 16 || boxType(0) != "ftyp" || size(0) < 16) return unknown
+    val brand = ascii(bytes, 8, 4)
     // walk top-level boxes for moov
-    var off = u32(bytes, 0)
+    var off = size(0).toLong
     while (off + 8 <= len && boxType(off) != "moov") {
-      val sz = u32(bytes, off)
+      val sz = size(off)
       if (sz < 8) return unknown
       off += sz
     }
     if (off + 8 > len) return unknown
-    val moovEnd = off + u32(bytes, off)
+    val moovEnd = math.min(off + size(off), len.toLong)
     // walk moov children for mvhd
     var c = off + 8
     while (c + 8 <= moovEnd && boxType(c) != "mvhd") {
-      val sz = u32(bytes, c)
+      val sz = size(c)
       if (sz < 8) return unknown
       c += sz
     }
-    if (c + 28 > len || bytes(c + 8) != 0) return unknown // need mvhd v0
-    val timescale = u32(bytes, c + 20)
-    val duration = u32(bytes, c + 24).toLong & 0xFFFFFFFFL
+    if (c + 28 > len || bytes(c.toInt + 8) != 0) return unknown // need mvhd v0
+    val timescale = u32(bytes, c.toInt + 20, BE)
+    val duration = u32(bytes, c.toInt + 24, BE).toLong & 0xFFFFFFFFL
     if (timescale <= 0) return unknown
     VideoMeta(id, len, brand, timescale, duration, duration * 1000L / timescale)
   }
 
-  /** MP4 payloads per doc: brand/timescale/duration derive from doc_id
-    * (whole seconds 1..120 at the residue-selected timescale), pad from
-    * n_chars — all oracle-predictable arithmetic. */
-  def synthesizeVideo(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("int"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (id, n) =>
-        val brand = if (id % 2 == 0) "isom" else "mp42"
-        val timescale = Seq(600, 1000, 90000, 44100)((id % 4).toInt)
-        val secs = id % 120 + 1
-        BinaryDoc(id, synthMp4(brand, timescale, secs * timescale,
-          math.floorMod(n, 100)))
-      }).toDF()
-  }
-
-  /** Batched box-walk decode (same mapPartitions shape as decodeMeta). */
-  def decodeVideo(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[VideoMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeVideoHeader(d.doc_id, d.payload)))
-      }
-  }
-
-  /** Deterministic payload for a document: even ids are PNG, odd are
-    * JPEG; dims and padding derive from (doc_id, n_chars) so the DuckDB
-    * oracle can compute the expected decode output arithmetically. */
-  def synthesize(id: Long, nChars: Int): Array[Byte] = {
-    val w = (id % 640).toInt + 16
-    val h = (id % 480).toInt + 16
-    val pad = math.floorMod(nChars, 100)
-    if (id % 2 == 0) synthPng(w, h, pad) else synthJpeg(w, h, pad)
-  }
-
-  /** documents(doc_id, n_chars) → (doc_id, payload binary). */
-  def synthesizePayloads(docs: DataFrame): Dataset[BinaryDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("int"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (id, n) => BinaryDoc(id, synthesize(id, n)) })
-  }
-
-  /** Payloads with deliberate byte-identical duplicates: all synthesis
-    * parameters derive from `doc_id % mod` (and `mod` < 100 keeps the
-    * pad inside its residue), so docs sharing a residue share the exact
-    * payload bytes and payloads of different residues differ (width is
-    * injective in the residue). Feeds content-hash dedup (x7), where the
-    * oracle predicts group structure from the residue arithmetically. */
-  def synthesizeSharedPayloads(docs: DataFrame, mod: Int): Dataset[BinaryDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(mod >= 1 && mod <= 100, "residue must stay within the pad range")
-    docs.select(col("doc_id").cast("long"))
-      .as[Long]
-      .mapPartitions(_.map { id =>
-        val r = math.floorMod(id, mod.toLong)
-        BinaryDoc(id, synthesize(r, r.toInt))
-      })
-  }
-
-  // --------------------------------------------------------------- decode
-
-  private val pngSig =
-    Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
-
-  private def u16(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xFF) << 8) | (b(off + 1) & 0xFF)
-  private def u32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) |
-      ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
-
-  /** Parse real container headers for dimensions + format.
-    * PNG: verify the 8-byte signature and that the first chunk is IHDR;
-    * width/height are big-endian u32 at offsets 16/20.
-    * JPEG: verify SOI, then walk marker segments (each FF xx + u16
-    * length) until a frame header SOFn (C0-CF excluding C4/C8/CC);
-    * height/width are u16 at payload offsets 3/5.
-    * Anything else (or truncated) → ("unknown", 0, 0). */
-  def decodeHeader(id: Long, bytes: Array[Byte]): DecodedMeta = {
-    val len = bytes.length
-    def unknown = DecodedMeta(id, len, 0, 0, "unknown")
-    if (len >= 24 && bytes.startsWith(pngSig) &&
-        u32(bytes, 8) == 13 && bytes(12) == 'I' && bytes(13) == 'H' &&
-        bytes(14) == 'D' && bytes(15) == 'R') {
-      DecodedMeta(id, len, u32(bytes, 16), u32(bytes, 20), "png")
-    } else if (len >= 4 && (bytes(0) & 0xFF) == 0xFF && (bytes(1) & 0xFF) == 0xD8) {
-      var pos = 2
-      while (pos + 9 <= len && (bytes(pos) & 0xFF) == 0xFF) {
-        val marker = bytes(pos + 1) & 0xFF
-        if (marker >= 0xC0 && marker <= 0xCF &&
-            marker != 0xC4 && marker != 0xC8 && marker != 0xCC) {
-          return DecodedMeta(id, len, u16(bytes, pos + 7), u16(bytes, pos + 5),
-            "jpeg")
-        }
-        pos += 2 + u16(bytes, pos + 2) // skip segment: marker + length field
-      }
-      unknown
-    } else unknown
-  }
-
-  /** Batched decode over a binary column: partition-local, batch-shaped
-    * (batchSize rows per decoder call), streaming iterators throughout. */
-  def decodeMeta(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[DecodedMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        // one "decoder context" per partition, reused across batches
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map(d => decodeHeader(d.doc_id, d.payload))
-        }
-      }
-  }
-
-  // ------------------------------------------------------------ tar
+  // ---------------------------------------------------------------- tar
 
   case class TarIndex(doc_id: Long, byte_len: Int, n_members: Int,
       member_names: String, data_bytes: Long, checksums_ok: Int)
+
+  /** Member sizes of a document's two-member shard (tar/zip/WARC, so
+    * x10/x11/x12 index the same logical content): (n_chars % 100 + 1,
+    * doc_id % 50 + 2). */
+  private def shardSizes(id: Long, nChars: Long): (Long, Long) =
+    (nChars % 100 + 1, id % 50 + 2)
 
   /** One 512-byte ustar header. Octal text fields (the format's quirk:
     * sizes are ASCII octal, not binary), checksum computed with the
@@ -493,9 +502,11 @@ object Multimodal {
     h
   }
 
-  /** A 2-member uncompressed tar: doc<id>.txt + meta<id>.json, data
-    * zero-filled and 512-padded, two zero end blocks. */
-  def synthTar(id: Long, s1: Long, s2: Long): Array[Byte] = {
+  /** A 2-member uncompressed tar: doc<id>.txt + meta<id>.json (sizes
+    * from `shardSizes`), data zero-filled and 512-padded, two zero end
+    * blocks. */
+  def synthTar(id: Long, nChars: Long): Array[Byte] = {
+    val (s1, s2) = shardSizes(id, nChars)
     def pad512(n: Long): Int = (((n + 511) / 512) * 512).toInt
     val out = new java.io.ByteArrayOutputStream()
     out.write(tarHeader(s"doc$id.txt", s1)); out.write(new Array[Byte](pad512(s1)))
@@ -506,15 +517,17 @@ object Multimodal {
 
   /** Walk the real header chain: parse names + octal sizes, verify every
     * checksum, stop at the zero block. Truncated/garbage archives report
-    * what was walked with checksums_ok = 0. */
+    * what was walked with checksums_ok = 0. The block advance is a Long
+    * and a negative size ends the walk, so a tampered size field can
+    * neither wrap the offset nor walk it backwards forever. */
   def decodeTarIndex(id: Long, bytes: Array[Byte]): TarIndex = {
-    var off = 0
+    var off = 0L
     var names = List.empty[String]
     var data = 0L
     var oks = true
     var done = false
     while (!done && off + 512 <= bytes.length) {
-      val block = bytes.slice(off, off + 512)
+      val block = bytes.slice(off.toInt, off.toInt + 512)
       if (block.forall(_ == 0)) done = true
       else {
         val name = new String(block.takeWhile(_ != 0), "US-ASCII")
@@ -527,71 +540,49 @@ object Multimodal {
         if (blanked.map(_ & 0xFF).sum != stored) oks = false
         names = name :: names
         data += size
-        off += 512 + (((size + 511) / 512) * 512).toInt
+        if (size < 0) { oks = false; done = true }
+        off += 512 + ((size + 511) / 512) * 512
       }
     }
     TarIndex(id, bytes.length, names.length, names.reverse.mkString(","), data,
       if (oks) 1 else 0)
   }
 
-  /** Synthesize tar payloads per doc (sizes derived from doc fields). */
-  def synthesizeTar(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (id, n) =>
-        BinaryDoc(id, synthTar(id, n % 100 + 1, id % 50 + 2))
-      }).toDF()
-  }
-
-  /** Batched tar-index decode (same mapPartitions shape as decodeMeta). */
-  def decodeTar(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[TarIndex] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeTarIndex(d.doc_id, d.payload)))
-      }
-  }
-
-  // ------------------------------------------------------------ zip
+  // ---------------------------------------------------------------- zip
 
   case class ZipIndex(doc_id: Long, byte_len: Int, n_members: Int,
       member_names: String, data_bytes: Long, crc_ok: Int, structure_ok: Int)
 
   /** A 2-member STORED (method 0) zip: doc<id>.txt + meta<id>.json with
-    * deterministic data bytes, real CRC-32s, a central directory, and
-    * an end-of-central-directory record — the container WebDataset-
-    * style training shards actually use. */
-  def synthZip(id: Long, s1: Long, s2: Long): Array[Byte] = {
-    def data(n: Long, seed: Long): Array[Byte] =
-      Array.tabulate(n.toInt)(i => ((seed + i) % 251).toByte)
-    val members = Seq((s"doc$id.txt", data(s1, id)), (s"meta$id.json", data(s2, id + 7)))
+    * deterministic data bytes (sizes from `shardSizes`), real CRC-32s, a
+    * central directory, and an end-of-central-directory record — the
+    * container WebDataset-style training shards actually use. */
+  def synthZip(id: Long, nChars: Long): Array[Byte] = {
+    val (s1, s2) = shardSizes(id, nChars)
+    val members = Seq((s"doc$id.txt", filler(s1.toInt, id)),
+      (s"meta$id.json", filler(s2.toInt, id + 7)))
     val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >>> 8) & 0xFF) }
-    def u32(v: Long): Unit = (0 until 4).foreach(i => out.write(((v >>> (8 * i)) & 0xFF).toInt))
+    def put16(v: Int): Unit = out.write(w16(v, LE))
+    def put32(v: Long): Unit = out.write(w32(v.toInt, LE))
     val entries = members.map { case (name, d) =>
       val crc = new java.util.zip.CRC32(); crc.update(d, 0, d.length)
       val off = out.size()
-      u32(0x04034b50L); u16(20); u16(0); u16(0); u16(0); u16(0)
-      u32(crc.getValue); u32(d.length.toLong); u32(d.length.toLong)
-      u16(name.length); u16(0)
+      put32(0x04034b50L); put16(20); put16(0); put16(0); put16(0); put16(0)
+      put32(crc.getValue); put32(d.length.toLong); put32(d.length.toLong)
+      put16(name.length); put16(0)
       out.write(name.getBytes("US-ASCII")); out.write(d)
       (name, d.length.toLong, crc.getValue, off.toLong)
     }
     val cdOff = out.size()
     entries.foreach { case (name, sz, crc, off) =>
-      u32(0x02014b50L); u16(20); u16(20); u16(0); u16(0); u16(0); u16(0)
-      u32(crc); u32(sz); u32(sz); u16(name.length); u16(0); u16(0)
-      u16(0); u16(0); u32(0L); u32(off)
+      put32(0x02014b50L); put16(20); put16(20); put16(0); put16(0); put16(0); put16(0)
+      put32(crc); put32(sz); put32(sz); put16(name.length); put16(0); put16(0)
+      put16(0); put16(0); put32(0L); put32(off)
       out.write(name.getBytes("US-ASCII"))
     }
     val cdSize = out.size() - cdOff
-    u32(0x06054b50L); u16(0); u16(0); u16(entries.length); u16(entries.length)
-    u32(cdSize.toLong); u32(cdOff.toLong); u16(0)
+    put32(0x06054b50L); put16(0); put16(0); put16(entries.length); put16(entries.length)
+    put32(cdSize.toLong); put32(cdOff.toLong); put16(0)
     out.toByteArray
   }
 
@@ -599,35 +590,39 @@ object Multimodal {
     * directory signature (its trailing comment is variable-length, so
     * every real unzip does this), follow cd_offset, parse each central
     * entry, then cross-check its local header (signature + name) and
-    * recompute the member's CRC-32 against the recorded one. Truncated
-    * or inconsistent archives report what was walked with
-    * structure_ok/crc_ok = 0 instead of throwing. */
+    * recompute the member's CRC-32 against the recorded one. Offsets
+    * and sizes are unsigned 32-bit, read as Longs and bound-checked
+    * before use. Truncated or inconsistent archives report what was
+    * walked with structure_ok/crc_ok = 0 instead of throwing. */
   def decodeZipIndex(id: Long, bytes: Array[Byte]): ZipIndex = {
-    def u16(off: Int): Int = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    def u32(off: Int): Long = (0 until 4).map(i => (bytes(off + i) & 0xFFL) << (8 * i)).sum
-    var eocd = bytes.length - 22
-    while (eocd >= 0 && u32(eocd) != 0x06054b50L) eocd -= 1
-    if (eocd < 0) return ZipIndex(id, bytes.length, 0, "", 0L, 0, 0)
-    val n = u16(eocd + 10)
-    var off = u32(eocd + 16).toInt
+    val len = bytes.length
+    def uint32(off: Int): Long = u32(bytes, off, LE) & 0xFFFFFFFFL
+    var eocd = len - 22
+    while (eocd >= 0 && uint32(eocd) != 0x06054b50L) eocd -= 1
+    if (eocd < 0) return ZipIndex(id, len, 0, "", 0L, 0, 0)
+    val n = u16(bytes, eocd + 10, LE)
+    var off = uint32(eocd + 16)
     var names = List.empty[String]
     var dataSum = 0L
     var crcOk = true
     var structOk = true
     var k = 0
-    while (k < n && off + 46 <= bytes.length && structOk) {
-      if (u32(off) != 0x02014b50L) structOk = false
+    while (k < n && off + 46 <= len && structOk) {
+      val o = off.toInt
+      val nlen = u16(bytes, o + 28, LE); val elen = u16(bytes, o + 30, LE)
+      val clen = u16(bytes, o + 32, LE)
+      if (uint32(o) != 0x02014b50L || o + 46 + nlen > len) structOk = false
       else {
-        val crc = u32(off + 16); val csize = u32(off + 20); val usize = u32(off + 24)
-        val nlen = u16(off + 28); val elen = u16(off + 30); val clen = u16(off + 32)
-        val lfh = u32(off + 42).toInt
-        val name = new String(bytes, off + 46, nlen, "US-ASCII")
-        if (lfh + 30 > bytes.length || u32(lfh) != 0x04034b50L) structOk = false
+        val crc = uint32(o + 16); val csize = uint32(o + 20); val usize = uint32(o + 24)
+        val lfh = uint32(o + 42)
+        val name = ascii(bytes, o + 46, nlen)
+        if (lfh + 30 > len || uint32(lfh.toInt) != 0x04034b50L) structOk = false
         else {
-          val lnlen = u16(lfh + 26); val lelen = u16(lfh + 28)
-          if (new String(bytes, lfh + 30, lnlen, "US-ASCII") != name) structOk = false
-          val dOff = lfh + 30 + lnlen + lelen
-          if (dOff + csize > bytes.length) structOk = false
+          val l = lfh.toInt
+          val lnlen = u16(bytes, l + 26, LE); val lelen = u16(bytes, l + 28, LE)
+          if (l + 30 + lnlen > len || ascii(bytes, l + 30, lnlen) != name) structOk = false
+          val dOff = l + 30 + lnlen + lelen
+          if (dOff + csize > len) structOk = false
           else {
             val c = new java.util.zip.CRC32(); c.update(bytes, dOff, csize.toInt)
             if (c.getValue != crc) crcOk = false
@@ -638,84 +633,59 @@ object Multimodal {
       }
     }
     if (names.length != n) structOk = false
-    ZipIndex(id, bytes.length, names.length, names.reverse.mkString(","),
+    ZipIndex(id, len, names.length, names.reverse.mkString(","),
       dataSum, if (crcOk) 1 else 0, if (structOk) 1 else 0)
   }
 
-  /** Synthesize zip payloads per doc (sizes derived from doc fields —
-    * the tar twins, so x10/x11 index the same logical content). */
-  def synthesizeZip(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (id, n) =>
-        BinaryDoc(id, synthZip(id, n % 100 + 1, id % 50 + 2))
-      }).toDF()
-  }
-
-  /** Batched zip-index decode (same mapPartitions shape as decodeMeta). */
-  def decodeZip(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[ZipIndex] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeZipIndex(d.doc_id, d.payload)))
-      }
-  }
-
-  // ------------------------------------------------------------ warc
+  // --------------------------------------------------------------- warc
 
   case class WarcIndex(doc_id: Long, byte_len: Int, n_records: Int,
       n_responses: Int, uris: String, content_bytes: Long, structure_ok: Int)
 
-  /** A minimal valid WARC/1.0 shard (ISO 28500 — the CommonCrawl
-    * container, i.e. THE on-disk format of web-scale training text):
-    * one warcinfo record + two response records with deterministic
-    * payload bytes. Headers are CRLF lines, bodies are length-delimited
-    * by Content-Length, records terminate with CRLF CRLF — exactly what
-    * a real WARC reader walks. */
-  def synthWarc(id: Long, s1: Long, s2: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def data(n: Long, seed: Long): Array[Byte] =
-      Array.tabulate(n.toInt)(i => ((seed + i) % 251).toByte)
-    w("WARC/1.0\r\n"); w("WARC-Type: warcinfo\r\n")
-    w("Content-Length: 4\r\n\r\n"); w("info"); w("\r\n\r\n")
-    def response(uri: String, d: Array[Byte]): Unit = {
-      w("WARC/1.0\r\n"); w("WARC-Type: response\r\n")
-      w(s"WARC-Target-URI: $uri\r\n")
-      w(s"Content-Length: ${d.length}\r\n\r\n")
-      out.write(d); w("\r\n\r\n")
-    }
-    response(s"http://ex.org/doc$id", data(s1, id))
-    response(s"http://ex.org/meta$id", data(s2, id + 7))
-    out.toByteArray
+  /** One WARC/1.0 record (ISO 28500 — the CommonCrawl container, i.e.
+    * THE on-disk format of web-scale training text): version line, CRLF
+    * headers (WARC-Target-URI only when `uri` is non-empty), a body
+    * delimited by Content-Length, CRLF CRLF terminator — exactly what a
+    * real WARC reader walks. */
+  private def warcRecord(wtype: String, uri: String, body: Array[Byte]): Array[Byte] =
+    (s"WARC/1.0\r\nWARC-Type: $wtype\r\n" +
+      (if (uri.isEmpty) "" else s"WARC-Target-URI: $uri\r\n") +
+      s"Content-Length: ${body.length}\r\n\r\n").getBytes("US-ASCII") ++
+      body ++ "\r\n\r\n".getBytes("US-ASCII")
+
+  private val warcInfo: Array[Byte] =
+    warcRecord("warcinfo", "", "info".getBytes("US-ASCII"))
+
+  /** A minimal valid WARC shard: one warcinfo record + two response
+    * records with deterministic payload bytes (sizes from `shardSizes`). */
+  def synthWarc(id: Long, nChars: Long): Array[Byte] = {
+    val (s1, s2) = shardSizes(id, nChars)
+    warcInfo ++
+      warcRecord("response", s"http://ex.org/doc$id", filler(s1.toInt, id)) ++
+      warcRecord("response", s"http://ex.org/meta$id", filler(s2.toInt, id + 7))
   }
+
+  /** A record the WARC walk accepted: its type, target URI and body span. */
+  private case class WarcEntry(wtype: String, uri: String, off: Int, len: Int)
 
   /** The real reader walk: expect the version line, scan CRLF header
     * lines to the blank separator collecting WARC-Type /
     * WARC-Target-URI / Content-Length, skip exactly Content-Length
-    * payload bytes, require the CRLF CRLF terminator, repeat to EOF.
-    * Malformed input (bad version line, unparseable length, missing
-    * terminator, truncation) reports what was walked with
-    * structure_ok = 0 instead of throwing. */
-  def decodeWarcIndex(id: Long, bytes: Array[Byte]): WarcIndex = {
+    * payload bytes, require the CRLF CRLF terminator, hand the record
+    * to `visit`, and repeat to EOF or until `visit` returns false.
+    * Returns false on malformed input (bad version line, unparseable or
+    * out-of-range length, missing terminator, truncation). */
+  private def walkWarc(bytes: Array[Byte])(visit: WarcEntry => Boolean): Boolean = {
     var off = 0
-    var nRec = 0
-    var nResp = 0
-    var uris = List.empty[String]
-    var content = 0L
     var ok = true
+    var more = true
     def line(): String = { // consume one CRLF-terminated ASCII line
       val start = off
       while (off + 1 < bytes.length && !(bytes(off) == '\r' && bytes(off + 1) == '\n')) off += 1
       if (off + 1 >= bytes.length) { ok = false; off = bytes.length; "" }
-      else { val s = new String(bytes, start, off - start, "US-ASCII"); off += 2; s }
+      else { val s = ascii(bytes, start, off - start); off += 2; s }
     }
-    while (ok && off < bytes.length) {
+    while (ok && more && off < bytes.length) {
       if (line() != "WARC/1.0") ok = false
       else {
         var wtype = ""; var uri = ""; var clen = -1L
@@ -732,47 +702,40 @@ object Multimodal {
           }
           if (ok) h = line()
         }
-        if (ok && (clen < 0 || off + clen + 4 > bytes.length)) ok = false
+        // compare against the bytes left, never `off + clen`: a length
+        // near Long.MaxValue would wrap that sum negative
+        if (ok && (clen < 0 || clen > bytes.length - off - 4)) ok = false
         if (ok) {
+          val start = off
           off += clen.toInt
           if (!(bytes(off) == '\r' && bytes(off + 1) == '\n' &&
                 bytes(off + 2) == '\r' && bytes(off + 3) == '\n')) ok = false
           else {
-            off += 4; nRec += 1
-            if (wtype == "response") { nResp += 1; uris ::= uri; content += clen }
+            off += 4
+            more = visit(WarcEntry(wtype, uri, start, clen.toInt))
           }
         }
       }
+    }
+    ok
+  }
+
+  /** WARC index: every record walked, response URIs and body bytes. */
+  def decodeWarcIndex(id: Long, bytes: Array[Byte]): WarcIndex = {
+    var nRec = 0
+    var nResp = 0
+    var uris = List.empty[String]
+    var content = 0L
+    val ok = walkWarc(bytes) { r =>
+      nRec += 1
+      if (r.wtype == "response") { nResp += 1; uris ::= r.uri; content += r.len }
+      true
     }
     WarcIndex(id, bytes.length, nRec, nResp, uris.reverse.mkString(","),
       content, if (ok) 1 else 0)
   }
 
-  /** Synthesize WARC payloads per doc (the tar/zip triplet — x10/x11/
-    * x12 index the same logical content in the three shard containers). */
-  def synthesizeWarc(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions(_.map { case (id, n) =>
-        BinaryDoc(id, synthWarc(id, n % 100 + 1, id % 50 + 2))
-      }).toDF()
-  }
-
-  /** Batched WARC-index decode (same mapPartitions shape as decodeMeta). */
-  def decodeWarc(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[WarcIndex] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeWarcIndex(d.doc_id, d.payload)))
-      }
-  }
-
-  // ----------------------------------------------- warc html bodies
+  // ------------------------------------------------- warc html bodies
 
   case class WarcBody(doc_id: Long, uri: String, body: String,
       structure_ok: Int)
@@ -795,156 +758,84 @@ object Multimodal {
       s"""<div class="nav">$links</div></body></html>"""
   }
 
-  /** WARC shards whose response bodies are the synthesized HTML pages
-    * (x12 indexes containers; this is the payload face t25 extracts
-    * text from): warcinfo + ONE response per doc. */
-  def synthesizeWarcHtml(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val html = synthHtml(id, text).getBytes("US-ASCII")
-        val out = new java.io.ByteArrayOutputStream()
-        def w(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-        w("WARC/1.0\r\n"); w("WARC-Type: warcinfo\r\n")
-        w("Content-Length: 4\r\n\r\n"); w("info"); w("\r\n\r\n")
-        w("WARC/1.0\r\n"); w("WARC-Type: response\r\n")
-        w(s"WARC-Target-URI: http://ex.org/page$id\r\n")
-        w(s"Content-Length: ${html.length}\r\n\r\n")
-        out.write(html); w("\r\n\r\n")
-        BinaryDoc(id, out.toByteArray)
-      }).toDF()
-  }
+  /** WARC shard whose response body is the synthesized HTML page (x12
+    * indexes containers; this is the payload face t25 extracts text
+    * from): warcinfo + ONE response per doc. */
+  def synthWarcHtml(id: Long, text: String): Array[Byte] =
+    warcInfo ++ warcRecord("response", s"http://ex.org/page$id",
+      synthHtml(id, text).getBytes("US-ASCII"))
 
-  /** The x12 record walk, capturing the FIRST response's URI + body
-    * instead of the index counts — the step between a container index
-    * and text extraction. Malformed shards report structure_ok = 0
-    * with empty uri/body, never a throw. */
+  /** The x12 record walk stopped at the FIRST response with a body,
+    * capturing its URI + body instead of the index counts — the step
+    * between a container index and text extraction. Malformed shards
+    * report structure_ok = 0 with empty uri/body, never a throw. */
   def decodeWarcBody(id: Long, bytes: Array[Byte]): WarcBody = {
-    var off = 0
-    var ok = true
-    var uri = ""
-    var body = ""
-    def line(): String = {
-      val start = off
-      while (off + 1 < bytes.length && !(bytes(off) == '\r' && bytes(off + 1) == '\n')) off += 1
-      if (off + 1 >= bytes.length) { ok = false; off = bytes.length; "" }
-      else { val s = new String(bytes, start, off - start, "US-ASCII"); off += 2; s }
+    var first: Option[WarcEntry] = None
+    walkWarc(bytes) { r =>
+      if (r.wtype == "response" && r.len > 0) first = Some(r)
+      first.isEmpty
     }
-    while (ok && body.isEmpty && off < bytes.length) {
-      if (line() != "WARC/1.0") ok = false
-      else {
-        var wtype = ""; var u = ""; var clen = -1L
-        var h = line()
-        while (ok && h.nonEmpty) {
-          val i = h.indexOf(": ")
-          if (i < 0) ok = false
-          else h.substring(0, i) match {
-            case "WARC-Type"       => wtype = h.substring(i + 2)
-            case "WARC-Target-URI" => u = h.substring(i + 2)
-            case "Content-Length" =>
-              clen = try h.substring(i + 2).toLong catch { case _: Exception => ok = false; -1L }
-            case _ => ()
-          }
-          if (ok) h = line()
-        }
-        if (ok && (clen < 0 || off + clen + 4 > bytes.length)) ok = false
-        if (ok) {
-          val payload = new String(bytes, off, clen.toInt, "US-ASCII")
-          off += clen.toInt
-          if (!(bytes(off) == '\r' && bytes(off + 1) == '\n' &&
-                bytes(off + 2) == '\r' && bytes(off + 3) == '\n')) ok = false
-          else {
-            off += 4
-            if (wtype == "response") { uri = u; body = payload }
-          }
-        }
-      }
+    first match {
+      case Some(r) => WarcBody(id, r.uri, ascii(bytes, r.off, r.len), 1)
+      case None    => WarcBody(id, "", "", 0)
     }
-    if (ok && body.nonEmpty) WarcBody(id, uri, body, 1)
-    else WarcBody(id, "", "", 0)
   }
 
-  /** Batched body extraction (x-family mapPartitions shape). */
-  def decodeWarcBodies(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[WarcBody] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeWarcBody(d.doc_id, d.payload)))
-      }
-  }
-
-  // --------------------------------------- raw gray images + aHash
+  // ----------------------------------------- raw gray images + aHash
 
   case class GrayHash(doc_id: Long, width: Int, height: Int, mean: Int,
       sig_lo: Long, sig_hi: Long, valid: Boolean)
 
-  /** Headered raw 8-bit grayscale payload ("GRAY8" + be16 w/h + w·h
-    * pixels — codec-free, so the oracle stays closed-form): 16×16
-    * pixels in 64 constant 2×2 blocks. Block i's value is 150 or 50 by
-    * bit i of the 64-bit word from md5("ph|" ++ (doc_id div 20))'s
-    * first 16 hex chars — docs in the same 20-id block share a base
-    * image; the
-    * first (doc_id%4) blocks are FLIPPED (the planted near-dup
-    * perturbation: hamming distance between group members is exactly
-    * |f_a − f_b| ≤ 3), and one pixel of block 63 gets +(doc_id%3)
-    * (sub-quantization noise the 4-pixel average floor absorbs — the
-    * hash must be INVARIANT to it, which is the point of aHash). */
-  def synthGray(id: Long): Array[Byte] = {
-    // group = CONSECUTIVE id blocks of 20 (div, not mod): group SIZE is
-    // fixed at every SF while group COUNT scales with the corpus — so
-    // d25's per-band candidate lists stay bounded as data grows (mod-25
-    // grouping would grow every group 10× per SF step and make the
-    // banded join quadratic in SF — the shape that dies at 100×)
-    val g = id / 20
-    val f = (id % 4).toInt
+  /** Bit i of the 64-bit block word from md5(salt ++ "|" ++ doc_id div
+    * 20)'s first 16 hex chars (low word = chars 8-16), with the first
+    * (doc_id%4) bits FLIPPED — the planted near-dup perturbation: the
+    * hamming distance between group members is exactly |f_a − f_b| ≤ 3.
+    * The group is CONSECUTIVE id blocks of 20 (div, not mod): group SIZE
+    * is fixed at every SF while group COUNT scales with the corpus — so
+    * the near-dup keys' per-band candidate lists stay bounded as data
+    * grows (mod-25 grouping would grow every group 10× per SF step and
+    * make the banded join quadratic in SF — the shape that dies at
+    * 100×). */
+  private def blockBits(salt: String, id: Long): Int => Boolean = {
     val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"ph|$g".getBytes("US-ASCII")).map(b => f"$b%02x").mkString
+      .digest(s"$salt|${id / 20}".getBytes("US-ASCII")).map(b => f"$b%02x").mkString
     val hi = java.lang.Long.parseLong(hex.substring(0, 8), 16)
     val lo = java.lang.Long.parseLong(hex.substring(8, 16), 16)
-    def bit(i: Int): Boolean = {
-      val base =
-        if (i < 32) ((lo >>> i) & 1L) == 1L
-        else ((hi >>> (i - 32)) & 1L) == 1L
-      if (i < f) !base else base
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GRAY8".getBytes("US-ASCII"))
-    out.write(Array[Byte](0, 16, 0, 16)) // be16 w, be16 h
+    val f = (id % 4).toInt
+    i => ((((if (i < 32) lo >>> i else hi >>> (i - 32)) & 1L) == 1L) != (i < f))
+  }
+
+  /** 16×16 pixels in 64 constant 2×2 blocks, block i 150 or 50 by
+    * `bit(i)`, plus (doc_id%3) on one pixel of block 63 (sub-
+    * quantization noise the 4-pixel average floor absorbs — the hash
+    * must be INVARIANT to it, which is the point of aHash). Stored
+    * transformed AWAY from upright by EXIF orientation `o`. */
+  private def grayPixels(bit: Int => Boolean, id: Long, o: Int): Array[Byte] = {
+    val st = new Array[Byte](256)
     var y = 0
     while (y < 16) {
       var x = 0
       while (x < 16) {
-        val i = (y / 2) * 8 + (x / 2)
-        var v = if (bit(i)) 150 else 50
+        var v = if (bit((y / 2) * 8 + (x / 2))) 150 else 50
         if (x == 14 && y == 14) v += (id % 3).toInt
-        out.write(v)
+        val (fr, fc) = orientMap(o, 16, y, x)
+        st(fr * 16 + fc) = v.toByte
         x += 1
       }
       y += 1
     }
-    out.toByteArray
+    st
   }
 
-  /** Integer average-hash over a decoded raw-gray payload — the
-    * perceptual signature (aHash) image near-dup dedup banding runs
-    * on: header check, 8×8 average-pool (floor), global mean (floor),
-    * bit i = block_i ≥ mean, packed into two 32-bit words (the
-    * shift-63 BIGINT trap is why the signature is NOT one 64-bit
-    * value). Malformed/truncated payloads fail valid with zero sigs —
-    * they must never hash-collide into a dedup group. */
-  def decodeGrayHash(id: Long, bytes: Array[Byte]): GrayHash = {
-    val bad = GrayHash(id, 0, 0, 0, 0L, 0L, valid = false)
-    if (bytes.length < 9 || new String(bytes, 0, 5, "US-ASCII") != "GRAY8")
-      return bad
-    val w = ((bytes(5) & 0xFF) << 8) | (bytes(6) & 0xFF)
-    val h = ((bytes(7) & 0xFF) << 8) | (bytes(8) & 0xFF)
-    if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0 ||
-        bytes.length != 9 + w * h) return bad
+  /** Headered raw 8-bit grayscale payload ("GRAY8" + be16 w/h + w·h
+    * pixels — codec-free, so the oracle stays closed-form): the upright
+    * 16×16 `grayPixels` of the "ph" block word. */
+  def synthGray(id: Long): Array[Byte] =
+    "GRAY8".getBytes("US-ASCII") ++ Array[Byte](0, 16, 0, 16) ++
+      grayPixels(blockBits("ph", id), id, 1)
+
+  /** Integer 8×8 average-pool (floor) of the w×h pixels at offset 9. */
+  private def pool8(bytes: Array[Byte], w: Int, h: Int): Array[Long] = {
     val bw = w / 8; val bh = h / 8
     val avgs = new Array[Long](64)
     var by = 0
@@ -966,36 +857,39 @@ object Multimodal {
       }
       by += 1
     }
-    val mean = avgs.sum / 64
+    avgs
+  }
+
+  /** The perceptual signature over 64 cells: global mean (floor), bit
+    * i = cell_i ≥ mean, packed into two 32-bit words (the shift-63
+    * BIGINT trap is why the signature is NOT one 64-bit value).
+    * Returns (mean, sig_lo, sig_hi). */
+  private def meanBits(cells: Array[Long]): (Long, Long, Long) = {
+    val mean = cells.sum / 64
     var lo = 0L; var hi = 0L
     var i = 0
     while (i < 64) {
-      if (avgs(i) >= mean) {
+      if (cells(i) >= mean) {
         if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
       }
       i += 1
     }
+    (mean, lo, hi)
+  }
+
+  /** Integer average-hash over a decoded raw-gray payload — the
+    * perceptual signature (aHash) image near-dup dedup banding runs
+    * on: header check, `pool8`, `meanBits`. Malformed/truncated
+    * payloads fail valid with zero sigs — they must never hash-collide
+    * into a dedup group. */
+  def decodeGrayHash(id: Long, bytes: Array[Byte]): GrayHash = {
+    val bad = GrayHash(id, 0, 0, 0, 0L, 0L, valid = false)
+    if (bytes.length < 9 || ascii(bytes, 0, 5) != "GRAY8") return bad
+    val w = u16(bytes, 5, BE); val h = u16(bytes, 7, BE)
+    if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0 ||
+        bytes.length != 9 + w * h) return bad
+    val (mean, lo, hi) = meanBits(pool8(bytes, w, h))
     GrayHash(id, w, h, mean.toInt, lo, hi, valid = true)
-  }
-
-  /** Raw-gray payloads per doc (doc_id drives everything). */
-  def synthesizeGray(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthGray(id)))).toDF()
-  }
-
-  /** Batched aHash decode (x-family mapPartitions shape). */
-  def decodeGray(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[GrayHash] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeGrayHash(d.doc_id, d.payload)))
-      }
   }
 
   // -------------- oriented raw gray + orientation-NORMALIZED aHash (x22)
@@ -1022,62 +916,23 @@ object Multimodal {
   }
 
   /** x17's gray payload with a CAMERA orientation: the same 16×16 base
-    * image (md5("po|" ++ doc_id div 20) block word, (doc_id%4)-flip
-    * perturbation, +doc_id%3 sub-quantization noise), but the pixels are
-    * stored the way a sensor writes them — transformed AWAY from upright
-    * by orientation o = 1 + doc_id%8, with tag 274 recording how to
-    * display. Container: "GROR8" + be16 w/h + w·h stored pixels + a REAL
-    * trailing TIFF (II/MM by doc_id parity — the x13/x21 mixed-order
-    * crawl) holding the orientation; doc_id%5==4 ships NO trailer
-    * (stripped by an upstream optimizer) and stores upright. Rotated
-    * twins of one group hash differently under plain x17 aHash; after
-    * tag-274 normalization the whole group collapses to the x17 formula
-    * on the "po|" salt — which is exactly what the closed-form oracle
-    * checks. */
+    * image on the "po" salt, but the pixels are stored the way a sensor
+    * writes them — transformed AWAY from upright by orientation o = 1 +
+    * doc_id%8, with tag 274 recording how to display. Container:
+    * "GROR8" + be16 w/h + w·h stored pixels + a REAL trailing TIFF
+    * (II/MM by doc_id parity — the x13/x21 mixed-order crawl) holding
+    * the orientation; doc_id%5==4 ships NO trailer (stripped by an
+    * upstream optimizer) and stores upright. Rotated twins of one group
+    * hash differently under plain x17 aHash; after tag-274
+    * normalization the whole group collapses to the x17 formula on the
+    * "po|" salt — which is exactly what the closed-form oracle checks. */
   def synthGrayOriented(id: Long): Array[Byte] = {
-    val g = id / 20
-    val f = (id % 4).toInt
     val stripped = id % 5 == 4
     val o = if (stripped) 1 else 1 + (id % 8).toInt
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"po|$g".getBytes("US-ASCII")).map(b => f"$b%02x").mkString
-    val hi = java.lang.Long.parseLong(hex.substring(0, 8), 16)
-    val lo = java.lang.Long.parseLong(hex.substring(8, 16), 16)
-    def bit(i: Int): Boolean = {
-      val base =
-        if (i < 32) ((lo >>> i) & 1L) == 1L
-        else ((hi >>> (i - 32)) & 1L) == 1L
-      if (i < f) !base else base
-    }
-    val st = new Array[Int](256)
-    var y = 0
-    while (y < 16) {
-      var x = 0
-      while (x < 16) {
-        val i = (y / 2) * 8 + (x / 2)
-        var v = if (bit(i)) 150 else 50
-        if (x == 14 && y == 14) v += (id % 3).toInt
-        val (fr, fc) = orientMap(o, 16, y, x)
-        st(fr * 16 + fc) = v
-        x += 1
-      }
-      y += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GROR8".getBytes("US-ASCII"))
-    out.write(Array[Byte](0, 16, 0, 16)) // be16 w, be16 h
-    st.foreach(out.write)
-    if (!stripped) {
-      val little = id % 2 == 0
-      def e16(v: Int) = if (little) le16(v) else be16(v)
-      def e32(v: Int) = if (little) le32(v) else be32(v)
-      val order = (if (little) "II" else "MM").getBytes("US-ASCII")
-      def entry(tag: Int, v: Int): Array[Byte] =
-        e16(tag) ++ e16(3) ++ e32(1) ++ (e16(v) ++ e16(0))
-      out.write(order ++ e16(42) ++ e32(8) ++
-        (e16(2) ++ entry(256, 16) ++ entry(274, o) ++ e32(0)))
-    }
-    out.toByteArray
+    "GROR8".getBytes("US-ASCII") ++ Array[Byte](0, 16, 0, 16) ++
+      grayPixels(blockBits("po", id), id, o) ++
+      (if (stripped) Array.emptyByteArray
+       else tiffIfd(id % 2 == 0, 256 -> 16, 274 -> o))
   }
 
   /** Orientation-NORMALIZED aHash: pool the STORED pixels 8×8 exactly
@@ -1090,75 +945,23 @@ object Multimodal {
     * default); only a malformed container fails valid. */
   def decodeOrientedHash(id: Long, bytes: Array[Byte]): OrientedHash = {
     val bad = OrientedHash(id, 0, 0, 0, "none", 0, 0L, 0L, valid = false)
-    if (bytes.length < 9 || new String(bytes, 0, 5, "US-ASCII") != "GROR8")
-      return bad
-    val w = ((bytes(5) & 0xFF) << 8) | (bytes(6) & 0xFF)
-    val h = ((bytes(7) & 0xFF) << 8) | (bytes(8) & 0xFF)
+    if (bytes.length < 9 || ascii(bytes, 0, 5) != "GROR8") return bad
+    val w = u16(bytes, 5, BE); val h = u16(bytes, 7, BE)
     // rotations need a square grid; pooling needs divisibility by 8
     if (w <= 0 || w != h || w % 8 != 0 || bytes.length < 9 + w * h) return bad
     val (order, o) =
       if (bytes.length == 9 + w * h) ("none", 1)
       else tiffOrientation(bytes, 9 + w * h, bytes.length).getOrElse(("none", 1))
-    val bw = w / 8
-    val st = new Array[Long](64)
-    var by = 0
-    while (by < 8) {
-      var bx = 0
-      while (bx < 8) {
-        var sum = 0L
-        var dy = 0
-        while (dy < bw) {
-          var dx = 0
-          while (dx < bw) {
-            sum += bytes(9 + (by * bw + dy) * w + bx * bw + dx) & 0xFF
-            dx += 1
-          }
-          dy += 1
-        }
-        st(by * 8 + bx) = sum / (bw.toLong * bw)
-        bx += 1
-      }
-      by += 1
-    }
+    val st = pool8(bytes, w, h)
     val up = new Array[Long](64)
-    var r = 0
-    while (r < 8) {
-      var c = 0
-      while (c < 8) {
-        val (fr, fc) = orientMap(o, 8, r, c)
-        up(r * 8 + c) = st(fr * 8 + fc)
-        c += 1
-      }
-      r += 1
-    }
-    val mean = up.sum / 64
-    var lo = 0L; var hi = 0L
     var i = 0
     while (i < 64) {
-      if (up(i) >= mean) {
-        if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-      }
+      val (fr, fc) = orientMap(o, 8, i / 8, i % 8)
+      up(i) = st(fr * 8 + fc)
       i += 1
     }
+    val (mean, lo, hi) = meanBits(up)
     OrientedHash(id, w, h, o, order, mean.toInt, lo, hi, valid = true)
-  }
-
-  def synthesizeGrayOriented(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthGrayOriented(id)))).toDF()
-  }
-
-  def decodeOriented(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[OrientedHash] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeOrientedHash(d.doc_id, d.payload)))
-      }
   }
 
   // ------------------------------ video frames + scene cuts (x23)
@@ -1178,10 +981,6 @@ object Multimodal {
     val nFrames = 24; val w = 16; val h = 12
     val nScenes = 2 + (id % 3).toInt
     val perScene = nFrames / nScenes
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GVID8".getBytes("US-ASCII"))
-    out.write(Array[Byte]((nFrames >> 8).toByte, nFrames.toByte,
-      (w >> 8).toByte, w.toByte, (h >> 8).toByte, h.toByte))
     val px = new Array[Byte](nFrames * w * h)
     var f = 0
     while (f < nFrames) {
@@ -1190,8 +989,8 @@ object Multimodal {
       java.util.Arrays.fill(px, f * w * h, (f + 1) * w * h, luma.toByte)
       f += 1
     }
-    out.write(px)
-    val full = out.toByteArray
+    val full = "GVID8".getBytes("US-ASCII") ++ w16(nFrames, BE) ++ w16(w, BE) ++
+      w16(h, BE) ++ px
     if (id % 13 == 5) full.take(11 + 7 * w * h + 37) else full
   }
 
@@ -1203,11 +1002,10 @@ object Multimodal {
     * payloads fail valid rather than reporting a partial cut list. */
   def decodeSceneCuts(id: Long, bytes: Array[Byte]): SceneCuts = {
     val bad = SceneCuts(id, 0, 0, 0, 0, "", 0, valid = false)
-    if (bytes.length < 11 || new String(bytes, 0, 5, "US-ASCII") != "GVID8")
-      return bad
-    def u16(o: Int) = ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-    val n = u16(5); val w = u16(7); val h = u16(9)
-    if (n <= 0 || w <= 0 || h <= 0 || bytes.length != 11 + n * w * h)
+    if (bytes.length < 11 || ascii(bytes, 0, 5) != "GVID8") return bad
+    val n = u16(bytes, 5, BE); val w = u16(bytes, 7, BE); val h = u16(bytes, 9, BE)
+    // n·w·h reaches 2^48: an Int product could wrap onto the length
+    if (n <= 0 || w <= 0 || h <= 0 || bytes.length != 11 + n.toLong * w * h)
       return bad
     val means = new Array[Int](n)
     var f = 0
@@ -1223,52 +1021,25 @@ object Multimodal {
       valid = true)
   }
 
-  def synthesizeVideoScenes(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthVideoScenes(id)))).toDF()
-  }
-
-  def decodeScenes(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[SceneCuts] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeSceneCuts(d.doc_id, d.payload)))
-      }
-  }
-
-  // ------------------------------------------------------------ utf-8
+  // -------------------------------------------------------------- utf-8
 
   case class Utf8Audit(doc_id: Long, n_bytes: Int, n_ascii: Int,
       n_multi: Int, n_invalid: Int, is_valid: Int)
 
-  /** Raw-byte corpus with deterministic encoding damage — the ingest
+  /** Raw-byte text with deterministic encoding damage — the ingest
     * reality a crawler delivers: per doc_id mod 7, append (3) a C3-lead
     * byte with a non-continuation follower, (5) a valid 2-byte char in
     * context, (0) a lone continuation byte, (6) a valid 3-byte char.
     * The base text is ASCII, so every expected count is arithmetic in
     * length(text) + doc_id — the oracle predicts the audit exactly. */
-  def synthesizeRawText(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val base = text.getBytes("UTF-8")
-        val suffix: Array[Byte] = (id % 7) match {
-          case 3 => Array(' '.toByte, 0xC3.toByte, '('.toByte)
-          case 5 => " café".getBytes("UTF-8")
-          case 0 => Array(' '.toByte, 0x80.toByte)
-          case 6 => "✓".getBytes("UTF-8")
-          case _ => Array.emptyByteArray
-        }
-        BinaryDoc(id, base ++ suffix)
-      }).toDF()
-  }
+  def synthRawText(id: Long, text: String): Array[Byte] =
+    text.getBytes("UTF-8") ++ ((id % 7) match {
+      case 3 => Array(' '.toByte, 0xC3.toByte, '('.toByte)
+      case 5 => " café".getBytes("UTF-8")
+      case 0 => Array(' '.toByte, 0x80.toByte)
+      case 6 => "✓".getBytes("UTF-8")
+      case _ => Array.emptyByteArray
+    })
 
   /** Structural UTF-8 scan of `bytes`: classifies every position as
     * ASCII, a well-formed multi-byte sequence (lead C2-DF/E0-EF/F0-F4
@@ -1299,33 +1070,19 @@ object Multimodal {
       if (invalid == 0) 1 else 0)
   }
 
-  /** Batched UTF-8 audit (same mapPartitions shape as decodeMeta). */
-  def utf8Audit(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[Utf8Audit] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => utf8Scan(d.doc_id, d.payload)))
-      }
-  }
-
-  /** Frame sampling plumbing: every `stride`-th byte of the payload is a
-    * "frame" (stand-in for video frame extraction). Declarative explode —
-    * distributes and prunes like any other lateral view. */
-  def sampleFrames(docs: DataFrame, idCol: String, textCol: String,
-      stride: Int): DataFrame = {
+  /** Frame sampling plumbing: every `stride`-th character of a
+    * document's `text` is a "frame" (stand-in for video frame
+    * extraction). Declarative explode — distributes and prunes like any
+    * other lateral view. */
+  def sampleFrames(docs: DataFrame, stride: Int): DataFrame = {
     // empty payloads emit NO frames: without the guard, sequence(0, -1)
     // evaluates with step -1 to [0, -1] and fabricates two bogus frames
-    docs.select(col(idCol),
-        expr(s"length($textCol)").as("_len"),
+    docs.select(col("doc_id"),
         posexplode(expr(
-          s"CASE WHEN length($textCol) = 0 THEN cast(array() as array<int>) " +
-          s"ELSE transform(sequence(0, cast(floor((length($textCol) - 1) / $stride) as int)), " +
-          s"i -> ascii(substr($textCol, i * $stride + 1, 1))) END"))
+          "CASE WHEN length(text) = 0 THEN cast(array() as array<int>) " +
+          s"ELSE transform(sequence(0, cast(floor((length(text) - 1) / $stride) as int)), " +
+          s"i -> ascii(substr(text, i * $stride + 1, 1))) END"))
           .as(Seq("frame_idx", "frame_byte")))
-      .select(col(idCol), col("frame_idx"), col("frame_byte"))
   }
 
   // ------------------------------------------------- NPY tensor shards
@@ -1353,8 +1110,7 @@ object Multimodal {
     val headerLen = ((unpadded + 63) / 64) * 64 - 10
     val header = dict + " " * (headerLen - dict.length - 1) + "\n"
     val data = Array.fill[Byte](rows * cols * item)((id % 251).toByte)
-    Array[Byte](0x93.toByte, 'N', 'U', 'M', 'P', 'Y', 1, 0,
-      (headerLen & 0xff).toByte, ((headerLen >> 8) & 0xff).toByte) ++
+    Array[Byte](0x93.toByte, 'N', 'U', 'M', 'P', 'Y', 1, 0) ++ w16(headerLen, LE) ++
       header.getBytes("US-ASCII") ++ data
   }
 
@@ -1365,25 +1121,26 @@ object Multimodal {
     * LE header length, 64-byte preamble alignment, '\n' terminator,
     * dtype/shape parse, and the size proof data_bytes == payload −
     * preamble (a truncated shard fails valid, it does not mis-report
-    * a shape). */
+    * a shape). Itemsize and shape digits beyond Int range fail valid. */
   def decodeNpyHeader(id: Long, b: Array[Byte]): NpyMeta = {
     val bad = NpyMeta(id, b.length, "", 0, 0, 0L, 0, 0L, 0, valid = false)
     if (b.length < 10 || b(0) != 0x93.toByte ||
-      new String(b, 1, 5, "US-ASCII") != "NUMPY" || b(6) != 1) return bad
-    val headerLen = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
+      ascii(b, 1, 5) != "NUMPY" || b(6) != 1) return bad
+    val headerLen = u16(b, 8, LE)
     if (b.length < 10 + headerLen || (10 + headerLen) % 64 != 0 ||
       b(9 + headerLen) != '\n') return bad
-    val header = new String(b, 10, headerLen, "US-ASCII")
+    val header = ascii(b, 10, headerLen)
     (NpyDescr.findFirstMatchIn(header), NpyShape.findFirstMatchIn(header)) match {
       case (Some(d), Some(s)) =>
         val descr = d.group(1)
-        val item = descr.drop(2).toInt
-        val rows = s.group(1).toInt
-        val cols = s.group(2).toInt
-        val nElems = rows.toLong * cols
-        val dataBytes = nElems * item
-        NpyMeta(id, b.length, descr, rows, cols, nElems, item, dataBytes,
-          headerLen, valid = b.length == 10 + headerLen + dataBytes)
+        (descr.drop(2).toIntOption, s.group(1).toIntOption, s.group(2).toIntOption) match {
+          case (Some(item), Some(rows), Some(cols)) =>
+            val nElems = rows.toLong * cols
+            val dataBytes = nElems * item
+            NpyMeta(id, b.length, descr, rows, cols, nElems, item, dataBytes,
+              headerLen, valid = b.length == 10 + headerLen + dataBytes)
+          case _ => bad
+        }
       case _ => bad
     }
   }
@@ -1423,7 +1180,8 @@ object Multimodal {
   /** Real safetensors header decode: LE u64 length, JSON tensor table,
     * and the structural proofs — data_offsets must tile [0, total)
     * with no gap or overlap, and 8 + header + total must equal the
-    * payload length (a truncated or padded shard fails valid). */
+    * payload length (a truncated or padded shard fails valid, and so
+    * does an offset too long for a Long). */
   def decodeSafetensorsHeader(id: Long, bytes: Array[Byte]): SafetensorsMeta = {
     val bad = SafetensorsMeta(id, bytes.length, 0, 0, 0L, contiguous = false,
       valid = false)
@@ -1432,10 +1190,10 @@ object Multimodal {
     var i = 7
     while (i >= 0) { n = (n << 8) | (bytes(i) & 0xffL); i -= 1 }
     if (n <= 0 || n > Int.MaxValue || bytes.length < 8 + n) return bad
-    val json = new String(bytes, 8, n.toInt, "US-ASCII")
+    val json = ascii(bytes, 8, n.toInt)
     val spans = StTensor.findAllMatchIn(json)
-      .map(m => (m.group(3).toLong, m.group(4).toLong)).toArray.sortBy(_._1)
-    if (spans.isEmpty) return bad
+      .map(m => (digitsValue(m.group(3)), digitsValue(m.group(4)))).toArray.sortBy(_._1)
+    if (spans.isEmpty || spans.exists(s => s._1 < 0 || s._2 < 0)) return bad
     val contiguous = spans.head._1 == 0L &&
       spans.sliding(2).forall {
         case Array(x, y) => x._2 == y._1
@@ -1444,43 +1202,6 @@ object Multimodal {
     val total = spans.last._2
     SafetensorsMeta(id, bytes.length, spans.length, n.toInt, total,
       contiguous, valid = contiguous && bytes.length == 8 + n + total)
-  }
-
-  def synthesizeSafetensors(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthSafetensors(id)))).toDF()
-  }
-
-  def decodeSafetensors(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[SafetensorsMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d =>
-          decodeSafetensorsHeader(d.doc_id, d.payload)))
-      }
-  }
-
-  def synthesizeNpy(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthNpy(id)))).toDF()
-  }
-
-  def decodeNpy(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[NpyMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeNpyHeader(d.doc_id, d.payload)))
-      }
   }
 
   // ------------------------------------------- pcm samples + energy
@@ -1501,8 +1222,7 @@ object Multimodal {
     val a = 20 + (id % 5).toInt * 10
     val f0 = (id % 4).toInt
     val p = 8 + (id % 4).toInt * 4
-    val n = 400
-    val samples = Array.tabulate(n) { i =>
+    val samples = Array.tabulate(400) { i =>
       val f = i / 50
       if (f == f0 || f == f0 + 1) 128.toByte
       else {
@@ -1511,71 +1231,22 @@ object Multimodal {
         v.toByte
       }
     }
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++
-      le16(1) ++ le32(8000) ++ le32(8000) ++ le16(1) ++ le16(8)
-    val data = "data".getBytes("US-ASCII") ++ le32(n) ++ samples
-    "RIFF".getBytes("US-ASCII") ++ le32(36 + n) ++
-      "WAVE".getBytes("US-ASCII") ++ fmt ++ data
+    wavFile(8000, 1, 8, samples)
   }
 
-  /** Frame-energy / silence decode over a PCM WAV payload: verify
-    * RIFF/WAVE/fmt and REQUIRE 8-bit mono (a 16-bit or stereo file
-    * fails valid rather than mis-framing), clamp the data chunk's
-    * declared size to the bytes actually present (truncation-safe),
-    * then window into 50-sample frames — per-frame L1 energy
+  /** Frame-energy / silence decode over a PCM WAV payload: the
+    * `pcm8Mono` gate, then 50-sample frames — per-frame L1 energy
     * Σ|s−128|, silent ⇔ energy 0. Partial tail frames are dropped
     * (full-frame semantics), so n_frames is derived from the REAL
     * byte count, never the header's claim. */
-  def decodePcmEnergy(id: Long, bytes: Array[Byte], frame: Int = 50): PcmEnergy = {
-    val bad = PcmEnergy(id, 0, 0, 0, 0, 0L, 0L, valid = false)
-    def l16(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    def l32(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-      ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    if (bytes.length < 44 ||
-        new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
-        new String(bytes, 8, 4, "US-ASCII") != "WAVE" ||
-        new String(bytes, 12, 4, "US-ASCII") != "fmt " ||
-        new String(bytes, 36, 4, "US-ASCII") != "data") return bad
-    if (l16(22) != 1 || l16(34) != 8) return bad // mono 8-bit only
-    val rate = l32(24)
-    val declared = l32(40)
-    val n = math.min(declared, bytes.length - 44)
-    if (n < 0) return bad
-    val nFrames = n / frame
-    var totalE = 0L; var maxE = 0L; var nSilent = 0
-    var f = 0
-    while (f < nFrames) {
-      var e = 0L
-      var i = 0
-      while (i < frame) {
-        e += math.abs((bytes(44 + f * frame + i) & 0xFF) - 128)
-        i += 1
-      }
-      totalE += e
-      if (e > maxE) maxE = e
-      if (e == 0) nSilent += 1
-      f += 1
+  def decodePcmEnergy(id: Long, bytes: Array[Byte]): PcmEnergy =
+    pcm8Mono(bytes) match {
+      case None => PcmEnergy(id, 0, 0, 0, 0, 0L, 0L, valid = false)
+      case Some((rate, n)) =>
+        val energies = frameEnergies(bytes, n / 50)
+        PcmEnergy(id, rate, n, energies.length, energies.count(_ == 0),
+          energies.sum, if (energies.isEmpty) 0L else energies.max, valid = true)
     }
-    PcmEnergy(id, rate, n, nFrames, nSilent, totalE, maxE, valid = true)
-  }
-
-  def synthesizePcm(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthPcmWav(id)))).toDF()
-  }
-
-  def decodePcm(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[PcmEnergy] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodePcmEnergy(d.doc_id, d.payload)))
-      }
-  }
 
   // ------------------------------------- jpeg exif orientation (x21)
 
@@ -1592,61 +1263,12 @@ object Multimodal {
     * order crawl); doc_id%5==4 files carry NO Exif at all (stripped by
     * an upstream optimizer — the default-orientation path). */
   def synthJpegExif(id: Long): Array[Byte] = {
-    val pad = (id % 7).toInt
-    val base = synthJpeg(64, 48, pad)
+    val base = synthJpeg(64, 48, (id % 7).toInt)
     if (id % 5 == 4) return base
-    val little = id % 2 == 0
-    val orientation = 1 + (id % 8).toInt
-    def e16(v: Int) = if (little) le16(v) else be16(v)
-    def e32(v: Int) = if (little) le32(v) else be32(v)
-    val order = (if (little) "II" else "MM").getBytes("US-ASCII")
-    def entry(tag: Int, v: Int): Array[Byte] =
-      e16(tag) ++ e16(3) ++ e32(1) ++ (e16(v) ++ e16(0))
-    val ifd = e16(2) ++ entry(256, 64) ++ entry(274, orientation) ++ e32(0)
-    val tiff = order ++ e16(42) ++ e32(8) ++ ifd
+    val tiff = tiffIfd(id % 2 == 0, 256 -> 64, 274 -> (1 + (id % 8).toInt))
     val payload = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff
-    val app1 = Array(0xFF, 0xE1).map(_.toByte) ++ be16(2 + payload.length) ++ payload
+    val app1 = Array(0xFF, 0xE1).map(_.toByte) ++ w16(2 + payload.length, BE) ++ payload
     base.take(2) ++ app1 ++ base.drop(2)
-  }
-
-  /** TIFF IFD walk for tag 274 at TIFF base `tb` (offsets relative to
-    * the base, either byte order) — shared by the JPEG/APP1 path (x21)
-    * and the oriented-gray trailer (x22). Returns (byte order, 1-8
-    * orientation) or None for anything unparseable. */
-  private def tiffOrientation(bytes: Array[Byte], tb: Int,
-      len: Int): Option[(String, Int)] = {
-    if (tb < 0 || tb + 8 > len) return None
-    val mark = new String(bytes, tb, 2, "US-ASCII")
-    val little = mark == "II"
-    if (!little && mark != "MM") return None
-    def u16(o: Int) =
-      if (little) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-      else ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-    def u32(o: Int) =
-      if (little) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-        ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-      else ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-        ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF)
-    if (u16(tb + 2) != 42) return None
-    // parse wide + bounds-check BEFORE use (the x16/x18 lesson): a
-    // tampered IFD offset with the high bit set reads back negative
-    // from u32 and would index before the buffer
-    val ifdOff = u32(tb + 4)
-    if (ifdOff < 0 || ifdOff > len) return None
-    val ifd = tb + ifdOff
-    if (ifd < 0 || ifd + 2 > len) return None
-    val n = u16(ifd)
-    var i = 0
-    while (i < n && ifd + 2 + 12 * (i + 1) <= len) {
-      val e = ifd + 2 + 12 * i
-      if (u16(e) == 274 && u16(e + 2) == 3) {
-        val ori = u16(e + 8) // SHORT left-justified in the value field
-        if (ori >= 1 && ori <= 8)
-          return Some((if (little) "II" else "MM", ori))
-      }
-      i += 1
-    }
-    None // no usable orientation tag
   }
 
   /** Orientation decode: JPEG marker walk to APP1, "Exif\0\0" check,
@@ -1663,9 +1285,9 @@ object Multimodal {
     while (off + 4 <= len && (bytes(off) & 0xFF) == 0xFF) {
       val marker = bytes(off + 1) & 0xFF
       if (marker == 0xD9 || marker == 0xDA) return none
-      val segLen = ((bytes(off + 2) & 0xFF) << 8) | (bytes(off + 3) & 0xFF)
+      val segLen = u16(bytes, off + 2, BE)
       if (marker == 0xE1 && off + 2 + segLen <= len && segLen >= 8 &&
-          new String(bytes, off + 4, 4, "US-ASCII") == "Exif" &&
+          ascii(bytes, off + 4, 4) == "Exif" &&
           bytes(off + 8) == 0 && bytes(off + 9) == 0) {
         return tiffOrientation(bytes, off + 10, len) match {
           case Some((order, ori)) =>
@@ -1679,24 +1301,6 @@ object Multimodal {
     none
   }
 
-  def synthesizeJpegExif(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthJpegExif(id)))).toDF()
-  }
-
-  def decodeExif(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[ExifMeta] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeJpegExif(d.doc_id, d.payload)))
-      }
-  }
-
   // --------------------------------------- audio energy fingerprint
 
   case class AudioFp(doc_id: Long, sample_rate: Int, n_frames: Int,
@@ -1705,30 +1309,16 @@ object Multimodal {
   /** 8-bit mono WAV carrying a 64-frame energy CONTOUR (x17's aHash
     * transplanted to audio — the echoprint-class signature a music/
     * speech dedup pass runs): 64 frames × 50 samples; frame i's square
-    * wave has amplitude 90 or 30 by bit i of md5("af|" ++ (doc_id div
-    * 20)) — consecutive 20-id blocks share a contour (group SIZE fixed
-    * at every SF, the synthGray scale contract); the first (doc_id%4)
-    * bits are FLIPPED (planted near-dup perturbation, in-group hamming
-    * = |f_a − f_b| ≤ 3); and every frame is cyclically ROTATED by
-    * (doc_id%7) samples — a time-shift re-encode that changes the
-    * payload BYTES (x7's content hash misses these twins) but not one
-    * frame's L1 energy: fingerprint invariance to it is the point. */
+    * wave has amplitude 90 or 30 by bit i of the "af" `blockBits` word
+    * (20-id groups, the first doc_id%4 bits flipped); and every frame
+    * is cyclically ROTATED by (doc_id%7) samples — a time-shift
+    * re-encode that changes the payload BYTES (x7's content hash misses
+    * these twins) but not one frame's L1 energy: fingerprint invariance
+    * to it is the point. */
   def synthAudioFpWav(id: Long): Array[Byte] = {
-    val g = id / 20
-    val f = (id % 4).toInt
+    val bit = blockBits("af", id)
     val rot = (id % 7).toInt
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"af|$g".getBytes("US-ASCII")).map(b => f"$b%02x").mkString
-    val hi = java.lang.Long.parseLong(hex.substring(0, 8), 16)
-    val lo = java.lang.Long.parseLong(hex.substring(8, 16), 16)
-    def bit(i: Int): Boolean = {
-      val base =
-        if (i < 32) ((lo >>> i) & 1L) == 1L
-        else ((hi >>> (i - 32)) & 1L) == 1L
-      if (i < f) !base else base
-    }
-    val n = 64 * 50
-    val samples = new Array[Byte](n)
+    val samples = new Array[Byte](64 * 50)
     var fr = 0
     while (fr < 64) {
       val amp = if (bit(fr)) 90 else 30
@@ -1743,75 +1333,21 @@ object Multimodal {
       }
       fr += 1
     }
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++
-      le16(1) ++ le32(8000) ++ le32(8000) ++ le16(1) ++ le16(8)
-    val data = "data".getBytes("US-ASCII") ++ le32(n) ++ samples
-    "RIFF".getBytes("US-ASCII") ++ le32(36 + n) ++
-      "WAVE".getBytes("US-ASCII") ++ fmt ++ data
+    wavFile(8000, 1, 8, samples)
   }
 
-  /** Energy-contour fingerprint decode: WAV gate as decodePcmEnergy
-    * (REQUIRE 8-bit mono, clamp declared size to bytes present), then
-    * the first 64 full 50-sample frames → per-frame L1 energy → global
-    * mean (floor) → bit i = e_i ≥ mean, packed into two 32-bit words
-    * (the d25 shift-63 convention). Fewer than 64 full frames fails
-    * valid — a truncated file must never hash into a dedup group. */
-  def decodeAudioFpWav(id: Long, bytes: Array[Byte]): AudioFp = {
-    val bad = AudioFp(id, 0, 0, 0L, 0L, 0L, valid = false)
-    def l16(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    def l32(off: Int) = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-      ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    if (bytes.length < 44 ||
-        new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
-        new String(bytes, 8, 4, "US-ASCII") != "WAVE" ||
-        new String(bytes, 12, 4, "US-ASCII") != "fmt " ||
-        new String(bytes, 36, 4, "US-ASCII") != "data") return bad
-    if (l16(22) != 1 || l16(34) != 8) return bad // mono 8-bit only
-    val rate = l32(24)
-    val declared = l32(40)
-    val n = math.min(declared, bytes.length - 44)
-    if (n < 64 * 50) return bad
-    val e = new Array[Long](64)
-    var fr = 0
-    while (fr < 64) {
-      var s = 0L
-      var i = 0
-      while (i < 50) {
-        s += math.abs((bytes(44 + fr * 50 + i) & 0xFF) - 128)
-        i += 1
-      }
-      e(fr) = s
-      fr += 1
+  /** Energy-contour fingerprint decode: the `pcm8Mono` gate, then the
+    * first 64 full 50-sample frames → per-frame L1 energy →
+    * `meanBits` (the d25 shift-63 convention). Fewer than 64 full
+    * frames fails valid — a truncated file must never hash into a
+    * dedup group. */
+  def decodeAudioFpWav(id: Long, bytes: Array[Byte]): AudioFp =
+    pcm8Mono(bytes) match {
+      case Some((rate, n)) if n >= 64 * 50 =>
+        val (mean, lo, hi) = meanBits(frameEnergies(bytes, 64))
+        AudioFp(id, rate, 64, mean, lo, hi, valid = true)
+      case _ => AudioFp(id, 0, 0, 0L, 0L, 0L, valid = false)
     }
-    val mean = e.sum / 64
-    var lo = 0L; var hi = 0L
-    var i = 0
-    while (i < 64) {
-      if (e(i) >= mean) {
-        if (i < 32) lo |= 1L << i else hi |= 1L << (i - 32)
-      }
-      i += 1
-    }
-    AudioFp(id, rate, 64, mean, lo, hi, valid = true)
-  }
-
-  def synthesizeAudioFp(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long")).as[Long]
-      .mapPartitions(_.map(id => BinaryDoc(id, synthAudioFpWav(id)))).toDF()
-  }
-
-  def decodeAudioFp(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[AudioFp] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodeAudioFpWav(d.doc_id, d.payload)))
-      }
-  }
 
   // ------------------------------------------------ pdf text extract
 
@@ -1859,7 +1395,9 @@ object Multimodal {
     * /Length bytes after `stream\n`, and collect `(...) Tj` text
     * operators in order. Extraction still succeeds on a broken xref
     * (scavenger mode, like real-world readers); a payload without a
-    * PDF header or startxref fails valid. */
+    * PDF header or startxref fails valid. Every digit run is parsed
+    * wide and bound-checked before use, so a tampered offset, count or
+    * length takes the out-of-range path instead of throwing. */
   def decodePdfText(id: Long, bytes: Array[Byte]): PdfText = {
     val bad = PdfText(id, 0, 0, 0, "", xref_ok = false, valid = false)
     val s = new String(bytes, "ISO-8859-1")
@@ -1868,23 +1406,21 @@ object Multimodal {
     if (sxAt < 0) return bad
     val sxDigits = s.substring(sxAt + 9).trim.takeWhile(_.isDigit)
     if (sxDigits.isEmpty) return bad
-    val xrefOff = sxDigits.toInt
+    val xrefOff = digitsValue(sxDigits)
     var nObjs = 0
     var xrefOk = false
-    if (xrefOff >= 0 && xrefOff + 4 <= s.length &&
-        s.startsWith("xref", xrefOff)) {
+    if (xrefOff >= 0 && xrefOff <= s.length - 4 &&
+        s.startsWith("xref", xrefOff.toInt)) {
       // header line "0 N", then N 20-byte entries (entry 0 is the free head)
       val m = java.util.regex.Pattern.compile("xref\\s+0 (\\d+)\\s")
-        .matcher(s.substring(xrefOff))
-      if (m.lookingAt()) {
-        val total = m.group(1).toInt
-        nObjs = total - 1
+        .matcher(s.substring(xrefOff.toInt))
+      val total = if (m.lookingAt()) digitsValue(m.group(1)) else -1L
+      if (total >= 0 && total <= Int.MaxValue) {
+        nObjs = total.toInt - 1
         // entry i (free head = entry 0) is the 20-byte slice at i*20
-        val entBase = xrefOff + m.end()
-        xrefOk = entBase + total * 20 <= s.length && (1 until total).forall { i =>
+        val entBase = xrefOff.toInt + m.end()
+        xrefOk = total <= (s.length - entBase) / 20 && (1 until total.toInt).forall { i =>
           val digits = s.substring(entBase + i * 20, entBase + i * 20 + 10)
-          // 10-digit fields can exceed Int range when tampered — parse
-          // wide, bound-check before the offset probe
           digits.forall(_.isDigit) && {
             val off = digits.toLong
             off < s.length && s.startsWith(s"$i 0 obj", off.toInt)
@@ -1895,35 +1431,15 @@ object Multimodal {
     val lenM = java.util.regex.Pattern
       .compile("<< /Length (\\d+) >>\\s*stream\n").matcher(s)
     if (!lenM.find()) return PdfText(id, nObjs, 0, 0, "", xrefOk, valid = true)
-    val streamLen = lenM.group(1).toInt
+    val streamLen = digitsValue(lenM.group(1))
     val start = lenM.end()
-    if (start + streamLen > s.length)
+    if (streamLen < 0 || streamLen > s.length - start)
       return PdfText(id, nObjs, 0, 0, "", xrefOk, valid = true)
-    val stream = s.substring(start, start + streamLen)
+    val stream = s.substring(start, start + streamLen.toInt)
     val ops = new scala.collection.mutable.ArrayBuffer[String]()
     val opM = java.util.regex.Pattern.compile("\\(([^)]*)\\) Tj").matcher(stream)
     while (opM.find()) ops += opM.group(1)
-    PdfText(id, nObjs, streamLen, ops.length, ops.mkString(" "),
+    PdfText(id, nObjs, streamLen.toInt, ops.length, ops.mkString(" "),
       xrefOk, valid = true)
-  }
-
-  def synthesizePdf(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) => BinaryDoc(id, synthPdf(id, t)) })
-      .toDF()
-  }
-
-  def decodePdf(docs: DataFrame, idCol: String, payloadCol: String,
-      batchSize: Int = 64): Dataset[PdfText] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .as[BinaryDoc]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map(d => decodePdfText(d.doc_id, d.payload)))
-      }
   }
 }

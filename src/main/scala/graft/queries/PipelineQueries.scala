@@ -827,8 +827,8 @@ object PipelineQueries {
     // at 100 TB; AQE picks the strategy), map-side to_json, no windows.
     "x9_sample_manifest" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val payloads = Multimodal.synthesizePayloads(docs).toDF()
-      val meta = Multimodal.decodeMeta(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(docs, "n_chars")(Multimodal.synthImage)
+      val meta = Multimodal.decode(payloads)(Multimodal.decodeHeader).toDF()
         .select(col("doc_id"), col("format"), col("width"), col("height"))
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id").as("doc_id"), size(col("embedding")).cast("int").as("dim"))
@@ -954,8 +954,8 @@ object PipelineQueries {
     // predicts every decoded field arithmetically, so a parser bug
     // (octal, checksum blanking, block advance) breaks the hash.
     "x10_tar_index" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeTar(Tables.documents(s, dir))
-      Multimodal.decodeTar(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthTar)
+      Multimodal.decode(payloads)(Multimodal.decodeTarIndex).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -963,13 +963,13 @@ object PipelineQueries {
     // shards ship in: synthesize a real 2-member STORED zip per doc
     // (CRC-32s, central directory, EOCD), then index it the way a real
     // unzip does — backward EOCD scan, central-directory walk, local-
-    // header cross-check, CRC recompute. Same mapPartitions batching
+    // header cross-check, CRC recompute. Same Multimodal.decode map
     // as every x-decoder; payload bytes never shuffle (the index rows
     // do). Oracle derives every field arithmetically from doc_id /
     // n_chars (fixed 30/46/22-byte zip overheads + name lengths).
     "x11_zip_index" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeZip(Tables.documents(s, dir))
-      Multimodal.decodeZip(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthZip)
+      Multimodal.decode(payloads)(Multimodal.decodeZipIndex).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -979,13 +979,13 @@ object PipelineQueries {
     // (warcinfo + two response records, CRLF headers, Content-Length
     // delimited bodies, CRLF CRLF terminators), then walk it the way a
     // real WARC reader does — version line, header scan, exact payload
-    // skip, terminator check. Same mapPartitions batching as every
+    // skip, terminator check. Same Multimodal.decode map as every
     // x-decoder; payload bytes never shuffle. Oracle predicts every
     // field arithmetically (243 + 2·digits + len(s1) + len(s2) + s1 +
     // s2 byte length), so an off-by-one in the walk breaks the hash.
     "x12_warc_index" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeWarc(Tables.documents(s, dir))
-      Multimodal.decodeWarc(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthWarc)
+      Multimodal.decode(payloads)(Multimodal.decodeWarcIndex).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1003,8 +1003,8 @@ object PipelineQueries {
     // Scale shape: map-only regex work, one bounded block explode,
     // ONE per-doc hash shuffle; payload bytes never cross it.
     "t25_html_extract" -> { (s, dir) =>
-      val shards = Multimodal.synthesizeWarcHtml(Tables.documents(s, dir))
-      val bodies = Multimodal.decodeWarcBodies(shards, "doc_id", "payload").toDF()
+      val shards = Multimodal.synthesize(Tables.documents(s, dir), "text")(Multimodal.synthWarcHtml)
+      val bodies = Multimodal.decode(shards)(Multimodal.decodeWarcBody).toDF()
       HtmlText.extract(bodies, "doc_id", "body").orderBy(col("doc_id"))
     },
 
@@ -1019,8 +1019,9 @@ object PipelineQueries {
     // is the property that makes it perceptual. Map-side decode,
     // payloads never shuffle (x-family contract).
     "x17_image_phash" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeGray(Tables.documents(s, dir))
-      Multimodal.decodeGray(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthGray(id))
+      Multimodal.decode(payloads)(Multimodal.decodeGrayHash).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1035,8 +1036,9 @@ object PipelineQueries {
     // only join is band-equality, sig words ride the explode so
     // verification needs no corpus re-join.
     "d25_image_neardup" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeGray(Tables.documents(s, dir))
-      val sigs = Multimodal.decodeGray(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthGray(id))
+      val sigs = Multimodal.decode(payloads)(Multimodal.decodeGrayHash).toDF()
         .filter(col("valid"))
         .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
         .localCheckpoint()
@@ -1053,8 +1055,9 @@ object PipelineQueries {
     // verification. x7's content hash catches none of these twins —
     // that gap is what this key closes.
     "d26_audio_neardup" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeAudioFp(Tables.documents(s, dir))
-      val sigs = Multimodal.decodeAudioFp(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthAudioFpWav(id))
+      val sigs = Multimodal.decode(payloads)(Multimodal.decodeAudioFpWav).toDF()
         .filter(col("valid"))
         .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
         .localCheckpoint()
@@ -1074,8 +1077,9 @@ object PipelineQueries {
     // formula, which is exactly what the closed-form oracle predicts.
     // Map-side decode, payload bytes never shuffle (x-family contract).
     "x22_oriented_phash" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeGrayOriented(Tables.documents(s, dir))
-      Multimodal.decodeOriented(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthGrayOriented(id))
+      Multimodal.decode(payloads)(Multimodal.decodeOrientedHash).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1086,8 +1090,9 @@ object PipelineQueries {
     // d25 once x22's normalization runs first. Same shared
     // Dedup.hammingNearDup (hot-band capped), same verify radius.
     "d27_oriented_neardup" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeGrayOriented(Tables.documents(s, dir))
-      val sigs = Multimodal.decodeOriented(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthGrayOriented(id))
+      val sigs = Multimodal.decode(payloads)(Multimodal.decodeOrientedHash).toDF()
         .filter(col("valid"))
         .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
         .localCheckpoint()
@@ -1108,8 +1113,9 @@ object PipelineQueries {
     // never shuffle (x-family contract); oracle closed-form from the
     // synthesis (scene count 2 + doc_id%3 fixes the cut positions).
     "x23_scene_cuts" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeVideoScenes(Tables.documents(s, dir))
-      Multimodal.decodeScenes(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthVideoScenes(id))
+      Multimodal.decode(payloads)(Multimodal.decodeSceneCuts).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1415,11 +1421,11 @@ object PipelineQueries {
     // byte, plus VALID 2- and 3-byte chars that must NOT count as
     // damage), and the oracle predicts every count arithmetically — a
     // scanner bug (resync, range bounds, truncation) breaks the hash.
-    // Scale shape: map-only mapPartitions over payload bytes (x-family
-    // batching), no shuffle before the output sort.
+    // Scale shape: one map over payload bytes (Multimodal.decode), no
+    // shuffle before the output sort.
     "t12_utf8_audit" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeRawText(Tables.documents(s, dir))
-      Multimodal.utf8Audit(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "text")(Multimodal.synthRawText)
+      Multimodal.decode(payloads)(Multimodal.utf8Scan).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -2151,8 +2157,8 @@ object PipelineQueries {
     // modality distribution over REAL decoded metadata: synthesized
     // valid PNG/JPEG payloads, format read back from the magic bytes.
     "x3_modality_stats" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizePayloads(Tables.documents(s, dir)).toDF()
-      Multimodal.decodeMeta(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthImage)
+      Multimodal.decode(payloads)(Multimodal.decodeHeader).toDF()
         .groupBy(col("format"))
         .agg(count(lit(1)).as("n"),
           (sum(col("byte_len").cast("long")) / count(lit(1))).as("avg_bytes"))
@@ -3132,8 +3138,8 @@ object PipelineQueries {
     // marker walk to SOF0 for JPEG). The oracle predicts the decode
     // output arithmetically — a parser bug breaks the hash.
     "x1_binary_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizePayloads(Tables.documents(s, dir)).toDF()
-      Multimodal.decodeMeta(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthImage)
+      Multimodal.decode(payloads)(Multimodal.decodeHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3147,8 +3153,9 @@ object PipelineQueries {
     // by parity) exercise the size arithmetic. Payload bytes never
     // cross a shuffle (map-side decode, x-family contract).
     "x15_npy_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeNpy(Tables.documents(s, dir))
-      Multimodal.decodeNpy(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthNpy(id))
+      Multimodal.decode(payloads)(Multimodal.decodeNpyHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3160,8 +3167,9 @@ object PipelineQueries {
     // 8 + header + total == payload. Map-side decode, payloads never
     // shuffle (x-family contract).
     "x16_safetensors_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeSafetensors(Tables.documents(s, dir))
-      Multimodal.decodeSafetensors(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthSafetensors(id))
+      Multimodal.decode(payloads)(Multimodal.decodeSafetensorsHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3176,8 +3184,8 @@ object PipelineQueries {
     // (scavenger mode, spec-pinned); map-side decode, payload bytes
     // never shuffle (x-family contract).
     "x18_pdf_extract" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizePdf(Tables.documents(s, dir))
-      Multimodal.decodePdf(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "text")(Multimodal.synthPdf)
+      Multimodal.decode(payloads)(Multimodal.decodePdfText).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3192,8 +3200,9 @@ object PipelineQueries {
     // (truncation-safe, spec-pinned). Closed-form oracle from the
     // synthesis amplitudes — no sample simulation needed.
     "x19_pcm_energy" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizePcm(Tables.documents(s, dir))
-      Multimodal.decodePcm(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthPcmWav(id))
+      Multimodal.decode(payloads)(Multimodal.decodePcmEnergy).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3208,8 +3217,9 @@ object PipelineQueries {
     // false) — the path every viewer implements. Closed-form oracle
     // from the synthesis formulas; map-side decode.
     "x21_exif_orientation" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeJpegExif(Tables.documents(s, dir))
-      Multimodal.decodeExif(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthJpegExif(id))
+      Multimodal.decode(payloads)(Multimodal.decodeJpegExif).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3224,8 +3234,9 @@ object PipelineQueries {
     // INVARIANCE to re-encode-class perturbations is the property that
     // makes it perceptual. Map-side decode, payloads never shuffle.
     "x20_audio_fingerprint" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeAudioFp(Tables.documents(s, dir))
-      Multimodal.decodeAudioFp(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthAudioFpWav(id))
+      Multimodal.decode(payloads)(Multimodal.decodeAudioFpWav).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3237,8 +3248,8 @@ object PipelineQueries {
     // synthesize little-endian, odd big-endian — the corpus mixes
     // orders like a real crawl.
     "x13_tiff_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeTiff(Tables.documents(s, dir))
-      Multimodal.decodeTiff(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthTiffDoc)
+      Multimodal.decode(payloads)(Multimodal.decodeTiffHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3249,13 +3260,13 @@ object PipelineQueries {
     // signature classifies "unknown" instead of being mis-parsed by the
     // wrong decoder (MultimodalSpec pins the negative path).
     "x14_sniff_dispatch" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeMixed(Tables.documents(s, dir))
-      Multimodal.sniffDecode(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthMixed)
+      Multimodal.decode(payloads)(Multimodal.sniffDecodeHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
     "x2_frame_sample" -> { (s, dir) =>
-      Multimodal.sampleFrames(Tables.documents(s, dir), "doc_id", "text", stride = 16)
+      Multimodal.sampleFrames(Tables.documents(s, dir), stride = 16)
         .orderBy(col("doc_id"), col("frame_idx"))
     },
 
@@ -3263,8 +3274,8 @@ object PipelineQueries {
     // aspect-preserving scale; the real codec call sits behind the
     // same decodeMeta boundary).
     "x4_resize" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizePayloads(Tables.documents(s, dir)).toDF()
-      Multimodal.decodeMeta(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthImage)
+      Multimodal.decode(payloads)(Multimodal.decodeHeader).toDF()
         .withColumn("thumb_w",
           expr("cast((width * 128) div greatest(width, height, 1) as int)"))
         .withColumn("thumb_h",
@@ -3277,8 +3288,8 @@ object PipelineQueries {
     // synthesized per doc, sample rate + channels parsed back out of the
     // little-endian header (byte-order counterpart to PNG/JPEG's BE).
     "x6_audio_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeAudio(Tables.documents(s, dir))
-      Multimodal.decodeAudio(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthAudio)
+      Multimodal.decode(payloads)(Multimodal.decodeAudioHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3288,8 +3299,8 @@ object PipelineQueries {
     // children to mvhd, read big-endian timescale/duration — no fixed
     // offsets. duration_ms is integer arithmetic, oracle-predictable.
     "x8_video_meta" -> { (s, dir) =>
-      val payloads = Multimodal.synthesizeVideo(Tables.documents(s, dir))
-      Multimodal.decodeVideo(payloads, "doc_id", "payload").toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "n_chars")(Multimodal.synthVideo)
+      Multimodal.decode(payloads)(Multimodal.decodeVideoHeader).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -3300,8 +3311,8 @@ object PipelineQueries {
     // synthesized with deliberate duplicates (params from doc_id % 40);
     // the oracle predicts group structure from the residue.
     "x7_content_dedup" -> { (s, dir) =>
-      val payloads =
-        Multimodal.synthesizeSharedPayloads(Tables.documents(s, dir), mod = 40).toDF()
+      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+        (id, _: Long) => Multimodal.synthShared(id))
       payloads
         .groupBy(md5(col("payload")).as("content_hash"))
         .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"),

@@ -973,12 +973,7 @@ object RelationalQueries {
     // over the key-level join (key-grain aggregates, never the join
     // output itself). err_bp truncates; exact=0 guarded (m39 class).
     "q50_join_cardinality" -> { (s, dir) =>
-      def nib(i: Int) = s"(instr('0123456789abcdef', substring(_h, $i, 1)) - 1)"
-      def census(df: DataFrame): DataFrame = df
-        .withColumn("_h", md5(concat(lit("jcs|"), col("k").cast("string"))))
-        .select(expr(s"CAST(${nib(1)} * 256 + ${nib(2)} * 16 + ${nib(3)} AS INT)")
-          .as("b4096"))
-        .groupBy(col("b4096")).agg(count(lit(1)).as("n"))
+      import graft.operators.SketchPlanner.census
       def coarse(c: DataFrame) = c
         .groupBy(expr("CAST(b4096 div 16 AS INT)").as("b256"))
         .agg(sum(col("n")).as("n"))
@@ -990,8 +985,8 @@ object RelationalQueries {
       val ckpt = new Array[DataFrame](3)
       val cErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
       val builders = Seq[() => DataFrame](
-        () => census(Tables.lineitem(s, dir).select(col("l_orderkey").as("k"))),
-        () => census(Tables.orders(s, dir).select(col("o_orderkey").as("k"))),
+        () => census(Tables.lineitem(s, dir), col("l_orderkey")),
+        () => census(Tables.orders(s, dir), col("o_orderkey")),
         // 1-row truth aggregate, crossJoined into all three variant rows
         // AND reused as the exact row's est — checkpoint like lc/oc or
         // it re-evaluates ~4x (the union-branch rescan trap)

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.DecodedMeta
 
-/** Header-decoder unit coverage: valid PNG/JPEG bytes round-trip through
-  * synthesize → decodeHeader, and malformed/truncated payloads are
-  * classified unknown instead of crashing or fabricating dimensions.
+/** Per-record codec coverage: valid payloads round-trip through
+  * synthX → decodeX, and malformed, truncated or tampered payloads
+  * return the invalid/unknown row instead of throwing or fabricating
+  * fields.
   */
 class MultimodalSpec extends AnyFunSuite {
 
@@ -134,25 +135,38 @@ class MultimodalSpec extends AnyFunSuite {
       .brand == "unknown")
     val trunc = Multimodal.synthMp4("isom", 600, 600L, 0).take(30)
     assert(Multimodal.decodeVideoHeader(2L, trunc).brand == "unknown")
+    // cut inside moov's first child header, and an ftyp size that wraps
+    // an Int offset: box reads stay inside the payload, never a throw
+    val inMoov = Multimodal.synthMp4("isom", 600, 600L, 0).take(38)
+    assert(Multimodal.decodeVideoHeader(4L, inMoov).brand == "unknown")
+    val wrap = Multimodal.synthMp4("isom", 600, 600L, 0)
+    wrap(0) = 0x7F; wrap(1) = 0xFF.toByte; wrap(2) = 0xFF.toByte; wrap(3) = 0xF8.toByte
+    assert(Multimodal.decodeVideoHeader(5L, wrap).brand == "unknown")
     assert(Multimodal.decodeVideoHeader(3L, Array.emptyByteArray) ==
       Multimodal.VideoMeta(3L, 0, "unknown", 0, 0L, 0L))
   }
 
   test("tar: index walk round-trips, flags corrupted checksums, survives truncation") {
-    val good = Multimodal.decodeTarIndex(7L, Multimodal.synthTar(7L, 42L, 9L))
+    val good = Multimodal.decodeTarIndex(7L, Multimodal.synthTar(7L, 41L))
     assert(good == Multimodal.TarIndex(7L, 3072, 2, "doc7.txt,meta7.json", 51L, 1))
     // flip a data-independent header byte (uid field) → checksum mismatch
-    val corrupt = Multimodal.synthTar(7L, 42L, 9L)
+    val corrupt = Multimodal.synthTar(7L, 41L)
     corrupt(108) = '7'
     assert(Multimodal.decodeTarIndex(7L, corrupt).checksums_ok == 0)
     // truncation mid-chain: walk reports what it saw, never throws
-    val trunc = Multimodal.decodeTarIndex(7L, Multimodal.synthTar(7L, 42L, 9L).take(700))
+    val trunc = Multimodal.decodeTarIndex(7L, Multimodal.synthTar(7L, 41L).take(700))
     assert(trunc.n_members == 1 && trunc.member_names == "doc7.txt")
     assert(Multimodal.decodeTarIndex(8L, Array.emptyByteArray).n_members == 0)
+    // size -1024 (octal -2000) rounds to a zero-block advance: the walk
+    // must end instead of re-reading the same header forever
+    val negative = Multimodal.synthTar(7L, 41L)
+    "-0000002000".getBytes("US-ASCII").copyToArray(negative, 124)
+    val neg = Multimodal.decodeTarIndex(7L, negative)
+    assert(neg.checksums_ok == 0 && neg.n_members == 1)
   }
 
   test("zip: central-directory walk round-trips, flags bad CRCs, survives truncation") {
-    val bytes = Multimodal.synthZip(7L, 42L, 9L)
+    val bytes = Multimodal.synthZip(7L, 41L)
     val good = Multimodal.decodeZipIndex(7L, bytes)
     // 206 + 4*1 digit + 42 + 9 = 261
     assert(good == Multimodal.ZipIndex(7L, 261, 2, "doc7.txt,meta7.json", 51L, 1, 1))
@@ -165,10 +179,20 @@ class MultimodalSpec extends AnyFunSuite {
     val trunc = Multimodal.decodeZipIndex(7L, bytes.take(bytes.length - 30))
     assert(trunc.structure_ok == 0)
     assert(Multimodal.decodeZipIndex(8L, Array.emptyByteArray).n_members == 0)
+    // tampered numeric fields are read wide and bound-checked: the
+    // EOCD cd_offset and the first entry's local-header offset with
+    // the high bit set, and a central-entry name length past the end
+    val eocd = bytes.length - 22
+    val cd = (bytes(eocd + 16) & 0xFF) | ((bytes(eocd + 17) & 0xFF) << 8)
+    def tamper(at: Int*): Array[Byte] = {
+      val t = bytes.clone(); at.foreach(i => t(i) = (t(i) | 0x80).toByte); t
+    }
+    for (t <- Seq(tamper(eocd + 19), tamper(cd + 45), tamper(cd + 28, cd + 29)))
+      assert(Multimodal.decodeZipIndex(7L, t).structure_ok == 0)
   }
 
   test("warc: record walk round-trips, flags bad version/terminator, survives truncation") {
-    val bytes = Multimodal.synthWarc(7L, 42L, 9L)
+    val bytes = Multimodal.synthWarc(7L, 41L)
     val good = Multimodal.decodeWarcIndex(7L, bytes)
     // 243 + 2*1 digit + len("42") + len("9") + 42 + 9 = 299
     assert(good == Multimodal.WarcIndex(7L, 299, 3, 2,
@@ -190,6 +214,12 @@ class MultimodalSpec extends AnyFunSuite {
     val trunc = Multimodal.decodeWarcIndex(7L, bytes.take(100))
     assert(trunc.structure_ok == 0 && trunc.n_records == 1)
     assert(Multimodal.decodeWarcIndex(8L, Array.emptyByteArray).n_records == 0)
+    // a Content-Length near Long.MaxValue must not wrap the range check
+    val huge = new String(bytes, "ISO-8859-1")
+      .replaceFirst("Content-Length: 42", "Content-Length: 9223372036854775807")
+      .getBytes("ISO-8859-1")
+    val h = Multimodal.decodeWarcIndex(7L, huge)
+    assert(h.structure_ok == 0 && h.n_records == 1)
   }
 
   test("utf8Scan: valid sequences, broken leads, truncation, and resync") {
@@ -213,10 +243,10 @@ class MultimodalSpec extends AnyFunSuite {
     assert(utf8Scan(8, Array.emptyByteArray) == Utf8Audit(8, 0, 0, 0, 0, 1))
   }
 
-  test("synthesize: even ids are PNG, odd are JPEG, dims follow the formula") {
-    val p = Multimodal.decodeHeader(42L, Multimodal.synthesize(42L, 250))
+  test("synthImage: even ids are PNG, odd are JPEG, dims follow the formula") {
+    val p = Multimodal.decodeHeader(42L, Multimodal.synthImage(42L, 250))
     assert(p == DecodedMeta(42L, 57 + 50, 42 + 16, 42 + 16, "png"))
-    val j = Multimodal.decodeHeader(1001L, Multimodal.synthesize(1001L, 7))
+    val j = Multimodal.decodeHeader(1001L, Multimodal.synthImage(1001L, 7))
     assert(j == DecodedMeta(1001L, 41 + 7, (1001 % 640) + 16, (1001 % 480) + 16, "jpeg"))
   }
 
@@ -238,11 +268,18 @@ class MultimodalSpec extends AnyFunSuite {
     val bad = Multimodal.synthNpy(6L).clone()
     bad(1) = 'X'
     assert(!Multimodal.decodeNpyHeader(6L, bad).valid)
+    // itemsize or shape digits past Int range fail valid, never throw
+    // (the widened field eats into the header's space padding)
+    val npy = new String(Multimodal.synthNpy(6L), "ISO-8859-1")
+    for ((from, to) <- Seq("'<f4'" -> "'<f99999999999'", "(2, 7)" -> "(99999999999, 7)")) {
+      val wide = npy.replace(from, to).replace(" " * (to.length - from.length) + "\n", "\n")
+      assert(!Multimodal.decodeNpyHeader(6L, wide.getBytes("ISO-8859-1")).valid)
+    }
   }
 
   test("warc html: body round-trips byte-exact; malformed shards fail structure_ok") {
     val html = Multimodal.synthHtml(7L, "some words here")
-    // reuse synthWarc's record grammar by hand: warcinfo + one response
+    // the record grammar by hand: warcinfo + one response
     val out = new java.io.ByteArrayOutputStream()
     def w(s: String): Unit = out.write(s.getBytes("US-ASCII"))
     w("WARC/1.0\r\n"); w("WARC-Type: warcinfo\r\n")
@@ -250,12 +287,18 @@ class MultimodalSpec extends AnyFunSuite {
     w("WARC/1.0\r\n"); w("WARC-Type: response\r\n")
     w("WARC-Target-URI: http://ex.org/page7\r\n")
     w(s"Content-Length: ${html.length}\r\n\r\n"); w(html); w("\r\n\r\n")
+    assert(Multimodal.synthWarcHtml(7L, "some words here").sameElements(out.toByteArray))
     val good = Multimodal.decodeWarcBody(7L, out.toByteArray)
     assert(good == Multimodal.WarcBody(7L, "http://ex.org/page7", html, 1))
     // truncation mid-body → structural failure, empty body, no throw
     val trunc = Multimodal.decodeWarcBody(7L, out.toByteArray.take(100))
     assert(trunc.structure_ok == 0 && trunc.body.isEmpty)
     assert(Multimodal.decodeWarcBody(8L, Array.emptyByteArray).structure_ok == 0)
+    // a Content-Length near Long.MaxValue: invalid row, not a throw
+    val huge = new String(out.toByteArray, "ISO-8859-1")
+      .replaceFirst(s"Content-Length: ${html.length}", "Content-Length: 9223372036854775807")
+      .getBytes("ISO-8859-1")
+    assert(Multimodal.decodeWarcBody(7L, huge) == Multimodal.WarcBody(7L, "", "", 0))
   }
 
   test("gray aHash: group members land within hamming 3, noise pixel is invariant, cross-group is far") {
@@ -297,6 +340,12 @@ class MultimodalSpec extends AnyFunSuite {
       json.getBytes("US-ASCII") ++ Array.fill[Byte](a + 8 + r * 8)(0)
     val g = Multimodal.decodeSafetensorsHeader(6L, gapped)
     assert(!g.contiguous && !g.valid)
+    // a 20-digit data_offsets value overflows a Long: invalid, no throw
+    val wideJson = json.replace(s"[${a + 8},${a + 8 + r * 8}]", s"[$a,99999999999999999999]")
+    val wn = wideJson.length.toLong
+    val wide = Array.tabulate[Byte](8)(i => ((wn >> (8 * i)) & 0xffL).toByte) ++
+      wideJson.getBytes("US-ASCII")
+    assert(!Multimodal.decodeSafetensorsHeader(6L, wide).valid)
   }
 
   test("pdf: xref offset walk verifies, text extracts in order; broken xref still extracts") {
@@ -323,6 +372,16 @@ class MultimodalSpec extends AnyFunSuite {
     val cut = b.take(s.lastIndexOf("startxref"))
     assert(!Multimodal.decodePdfText(42L, cut).valid)
     assert(!Multimodal.decodePdfText(42L, "not a pdf".getBytes("US-ASCII")).valid)
+    // tampered digit runs parse wide and take the out-of-range path: an
+    // 11-digit startxref skips the xref walk but still extracts; an
+    // 11-digit or Int.MaxValue /Length yields no stream
+    def pdf(str: String) = Multimodal.decodePdfText(42L, str.getBytes("ISO-8859-1"))
+    val farXref = pdf(s.replaceFirst("startxref\n\\d+", "startxref\n99999999999"))
+    assert(farXref.valid && !farXref.xref_ok && farXref.text == d.text)
+    for (n <- Seq("99999999999", "2147483647")) {
+      val l = pdf(s.replaceFirst("/Length \\d+", s"/Length $n"))
+      assert(l.valid && l.stream_len == 0 && l.n_text_ops == 0)
+    }
     // empty text → zero ops, stream is the bare BT..ET wrapper
     val e = Multimodal.decodePdfText(1L, Multimodal.synthPdf(1L, "   "))
     assert(e.valid && e.xref_ok && e.n_text_ops == 0 && e.text == "" &&
@@ -457,5 +516,9 @@ class MultimodalSpec extends AnyFunSuite {
     // a hand-truncated otherwise-valid payload also fails
     assert(!Multimodal.decodeSceneCuts(0L,
       Multimodal.synthVideoScenes(0L).dropRight(1)).valid)
+    // n·w·h = 2048·2048·1024 = 2^32 wraps an Int to 0: a bare 11-byte
+    // header must not pass the size check and index past the end
+    val wrap = "GVID8".getBytes("US-ASCII") ++ Array[Byte](8, 0, 8, 0, 4, 0)
+    assert(!Multimodal.decodeSceneCuts(0L, wrap).valid)
   }
 }

@@ -406,9 +406,10 @@ class PipelineSpec extends AnyFunSuite {
     })
   }
 
-  test("multimodal decode keeps partition-parallel batched shape") {
-    val payloads = Multimodal.synthesizePayloads(Tables.documents(spark, sf)).toDF()
-    val out = Multimodal.decodeMeta(payloads, "doc_id", "payload", batchSize = 16)
+  test("multimodal decode keeps the partition-parallel map shape") {
+    val payloads = Multimodal.synthesize(Tables.documents(spark, sf), "n_chars")(
+      Multimodal.synthImage)
+    val out = Multimodal.decode(payloads)(Multimodal.decodeHeader)
     assert(out.count() == 500)
     // doc 0: even id → PNG; dims follow the synthesis formula; byte_len
     // = 57 + n_chars%100 (doc 0 has 128 chars → pad 28)
@@ -709,15 +710,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(dirs.size >= 2, s"expected gated SF dirs, found $dirs")
     for (d <- dirs) {
       val docs = Tables.documents(spark, d)
-      val image = Multimodal.decodeGray(
-        Multimodal.synthesizeGray(docs), "doc_id", "payload").toDF()
-        .filter(col("valid")).select(col("doc_id"), col("sig_lo"), col("sig_hi"))
-      val audio = Multimodal.decodeAudioFp(
-        Multimodal.synthesizeAudioFp(docs), "doc_id", "payload").toDF()
-        .filter(col("valid")).select(col("doc_id"), col("sig_lo"), col("sig_hi"))
-      val orient = Multimodal.decodeOriented(
-        Multimodal.synthesizeGrayOriented(docs), "doc_id", "payload").toDF()
-        .filter(col("valid")).select(col("doc_id"), col("sig_lo"), col("sig_hi"))
+      def sigs[T <: Product : scala.reflect.runtime.universe.TypeTag](
+          synth: Long => Array[Byte], parse: (Long, Array[Byte]) => T) =
+        Multimodal.decode(Multimodal.synthesize(docs, "doc_id")((id, _: Long) => synth(id)))(
+          parse).toDF()
+          .filter(col("valid")).select(col("doc_id"), col("sig_lo"), col("sig_hi"))
+      val image = sigs(Multimodal.synthGray, Multimodal.decodeGrayHash)
+      val audio = sigs(Multimodal.synthAudioFpWav, Multimodal.decodeAudioFpWav)
+      val orient = sigs(Multimodal.synthGrayOriented, Multimodal.decodeOrientedHash)
       for ((name, sigs) <- Seq("d25" -> image, "d26" -> audio, "d27" -> orient)) {
         val m = maxBucket(sigs)
         assert(m <= cap,

@@ -315,6 +315,73 @@ class PlanSpec extends AnyFunSuite {
     assert(!exch.contains("payload"), p)
   }
 
+  test("multimodal canary: each x-family key scans the same documents columns; payloads never shuffle before the decode") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec,
+      MapPartitionsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val id = "struct<doc_id:bigint>"
+    val n = "struct<doc_id:bigint,n_chars:bigint>"
+    val text = "struct<doc_id:bigint,text:string>"
+    // the documents columns each key reads: its synthesizer's input
+    // column, plus x9's manifest join
+    val expected = Map(
+      "x1_binary_meta" -> Seq(n), "x2_frame_sample" -> Seq(text),
+      "x3_modality_stats" -> Seq(n), "x4_resize" -> Seq(n),
+      "x5_features" -> Seq(text), "x6_audio_meta" -> Seq(n),
+      "x7_content_dedup" -> Seq(id), "x8_video_meta" -> Seq(n),
+      "x9_sample_manifest" -> Seq(
+        "struct<doc_id:bigint,lang:string,source:string,n_chars:bigint>", n),
+      "x10_tar_index" -> Seq(n), "x11_zip_index" -> Seq(n),
+      "x12_warc_index" -> Seq(n), "x13_tiff_meta" -> Seq(n),
+      "x14_sniff_dispatch" -> Seq(n), "x15_npy_meta" -> Seq(id),
+      "x16_safetensors_meta" -> Seq(id), "x17_image_phash" -> Seq(id),
+      "x18_pdf_extract" -> Seq(text), "x19_pcm_energy" -> Seq(id),
+      "x20_audio_fingerprint" -> Seq(id), "x21_exif_orientation" -> Seq(id),
+      "x22_oriented_phash" -> Seq(id), "x23_scene_cuts" -> Seq(id),
+      "d25_image_neardup" -> Seq(id), "d26_audio_neardup" -> Seq(id),
+      "d27_oriented_neardup" -> Seq(id), "t12_utf8_audit" -> Seq(text),
+      "t25_html_extract" -> Seq(text))
+    // x2/x5 are declarative column expressions; every other key maps
+    // payloads through typed object operators
+    val declarative = Set("x2_frame_sample", "x5_features")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // d25-d27 decode inside an eager localCheckpoint, so the documents
+    // scan lives in a plan the builder already executed: collect those
+    // through a listener, ended by a sentinel query (delivery is async
+    // but in order)
+    val executed = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try for ((key, schemas) <- expected) {
+      val df = SparkEntry.queries(key)(spark, sf)
+      val sentinel = s"canary_end_$key"
+      spark.range(1).select(org.apache.spark.sql.functions.lit(sentinel)).collect()
+      val eager = Iterator.continually(executed.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(qe => Option(qe).getOrElse(fail(s"$key: sentinel never reached the listener")))
+        .map(_.executedPlan).takeWhile(!_.toString.contains(sentinel)).toList
+      val all = (df.queryExecution.executedPlan :: eager).flatMap(nodes)
+      val scans = all.collect { case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName.startsWith("documents")) =>
+        s.requiredSchema.catalogString }
+      assert(scans.distinct.sorted == schemas.sorted, s"$key documents ReadSchema")
+      val maps = all.filter(m => m.isInstanceOf[MapElementsExec] || m.isInstanceOf[MapPartitionsExec])
+      assert(maps.isEmpty == declarative(key), s"$key object maps: ${maps.size}")
+      for (m <- maps)
+        assert(!nodes(m).exists(x => x.isInstanceOf[Exchange] || x.isInstanceOf[QueryStageExec]),
+          s"$key: an exchange sits between the documents scan and the decode\n$m")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("d11: accuracy eval joins ride the bounded candidate set — no cross product") {
     val p = plan("d11_minhash_accuracy")
     assert(!p.contains("CartesianProduct"), p)

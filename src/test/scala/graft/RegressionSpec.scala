@@ -49,7 +49,7 @@ class RegressionSpec extends AnyFunSuite {
   test("sampleFrames emits no frames for an empty document") {
     import spark.implicits._
     val docs = Seq((1L, ""), (2L, "abcdef")).toDF("doc_id", "text")
-    val r = Multimodal.sampleFrames(docs, "doc_id", "text", stride = 4)
+    val r = Multimodal.sampleFrames(docs, stride = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
     assert(!r.exists(_._1 == 1L), "empty doc must produce zero frames")
     // "abcdef": frames at chars 1 and 5 → 'a' (97), 'e' (101)
