@@ -7,11 +7,6 @@ import org.apache.spark.sql.expressions.Window
 /** Reusable relational combinators with explicit scale posture. */
 object Relational {
 
-  /** Global top-k: plans as TakeOrderedAndProject (per-partition heap +
-    * k-row merge; no global sort/shuffle of the data). */
-  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order: _*).limit(k)
-
   /** Top-n rows per group via row_number (single hash shuffle). */
   def topNPerGroup(df: DataFrame, n: Int, part: Column, order: Column*): DataFrame =
     df.withColumn("_rn", row_number().over(Window.partitionBy(part).orderBy(order: _*)))
@@ -22,21 +17,14 @@ object Relational {
     * graft.plans.TopNPerKey). `order` must be a TOTAL ordering. An empty
     * `part` means global top-n (the final pass gathers to one
     * partition; the partial pass has already reduced each input
-    * partition to n rows). */
+    * partition to n rows). `rank`, when set, names an appended non-null
+    * int column numbering each group's survivors 1..n in `order` — what
+    * a row_number window over the result would give, without the sort. */
   def topNPerGroupFast(df: DataFrame, n: Int, part: Seq[String],
       order: Seq[(String, Boolean)],
-      maxPartialKeys: Int = graft.plans.TopNPerKey.DefaultMaxPartialKeys): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    val plan = GraftSqlBridge.planOf(df)
-    def attr(name: String) = plan.output.find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no column $name in ${plan.output}"))
-    val sortOrders = order.map { case (name, asc) =>
-      SortOrder(attr(name), if (asc) Ascending else Descending)
-    }
-    GraftSqlBridge.ofRows(df.sparkSession,
-      graft.plans.TopNPerKey(n, part.map(attr), sortOrders, plan, maxPartialKeys))
-  }
+      maxPartialKeys: Int = graft.plans.TopNPerKey.DefaultMaxPartialKeys,
+      rank: Option[String] = None): DataFrame =
+    topNPerKey(df, n, None, part, order, maxPartialKeys, rank)
 
   /** Top-n per group where n VARIES per group: `limitCol` is an int
     * column constant within each group (typically broadcast-joined from
@@ -46,18 +34,25 @@ object Relational {
     * group. */
   def topNPerGroupQuota(df: DataFrame, limitCol: String, part: Seq[String],
       order: Seq[(String, Boolean)],
-      maxPartialKeys: Int = graft.plans.TopNPerKey.DefaultMaxPartialKeys): DataFrame = {
+      maxPartialKeys: Int = graft.plans.TopNPerKey.DefaultMaxPartialKeys): DataFrame =
+    topNPerKey(df, 1, Some(limitCol), part, order, maxPartialKeys, None)
+
+  private def topNPerKey(df: DataFrame, n: Int, limitCol: Option[String],
+      part: Seq[String], order: Seq[(String, Boolean)], maxPartialKeys: Int,
+      rank: Option[String]): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    val plan = GraftSqlBridge.planOf(df)
+    // the rank rides the child as a placeholder the final pass overwrites
+    val plan = GraftSqlBridge.planOf(rank.fold(df)(r => df.withColumn(r, lit(0))))
     def attr(name: String) = plan.output.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no column $name in ${plan.output}"))
     val sortOrders = order.map { case (name, asc) =>
       SortOrder(attr(name), if (asc) Ascending else Descending)
     }
     GraftSqlBridge.ofRows(df.sparkSession,
-      graft.plans.TopNPerKey(1, part.map(attr), sortOrders, plan, maxPartialKeys,
-        limitExpr = Some(attr(limitCol))))
+      graft.plans.TopNPerKey(n, part.map(attr), sortOrders, plan, maxPartialKeys,
+        limitExpr = limitCol.map(attr),
+        rank = rank.map(attr)))
   }
 
   /** Exact 0-based GLOBAL rank of an md5-hex key column within each

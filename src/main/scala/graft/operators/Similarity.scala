@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions._
 import graft.operators.Relational
 
@@ -19,28 +18,39 @@ object Similarity {
   /** Top-k cosine neighbors by brute force. Deterministic ranking:
     * round(cos,6) desc, then neighbor id. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val cand = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"))
-    val sims = cand.crossJoin(broadcast(q))
+      vecCol: String, k: Int): DataFrame =
+    rankTopK(scoredProbe(corpusSide(corpus, idCol, vecCol),
+      querySide(queries, idCol, vecCol), Nil), k)
+
+  /** Corpus rows as (neighbor_id, n_vec, extra…). */
+  private def corpusSide(df: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec")) ++ extra: _*)
+
+  /** Query rows as (query_id, q_vec, extra…). */
+  private def querySide(df: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("query_id"), col(vecCol).as("q_vec")) ++ extra: _*)
+
+  /** The scored probe every search shares: corpus rows meet the
+    * BROADCAST query rows on `on` (no key: every pair), self-pairs drop,
+    * and each pair scores `sim` = round(cosine, 6). The corpus streams;
+    * the query side is the small one. */
+  private def scoredProbe(cand: DataFrame, q: DataFrame, on: Seq[String]): DataFrame =
+    (if (on.isEmpty) cand.crossJoin(broadcast(q)) else cand.join(broadcast(q), on))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-    rankTopK(sims, k)
-  }
 
-  /** Reduce candidate (query_id, neighbor_id, sim) rows to ranked top-k
-    * per query via the custom TopNPerKey operator: per-partition partial
-    * heaps mean the shuffle carries at most queries*k rows — windowing
-    * the full candidate set would shuffle ALL of them. The row_number
-    * then runs over the tiny survivor set. */
-  private def rankTopK(sims: DataFrame, k: Int): DataFrame = {
-    val top = Relational.topNPerGroupFast(sims, k, Seq("query_id"),
-      Seq(("sim", false), ("neighbor_id", true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+  /** Reduce candidate (query_id, neighbor_id, sim, keep…) rows to ranked
+    * top-k per query via the custom TopNPerKey operator: per-partition
+    * partial heaps mean the shuffle carries at most queries*k rows —
+    * windowing the full candidate set would shuffle ALL of them — and
+    * the final heap numbers its survivors `rnk`. */
+  private def rankTopK(sims: DataFrame, k: Int, keep: String*): DataFrame = {
+    val cols = Seq("query_id", "neighbor_id", "sim") ++ keep
+    Relational.topNPerGroupFast(sims.select(cols.map(col): _*), k, Seq("query_id"),
+        Seq(("sim", false), ("neighbor_id", true)), rank = Some("rnk"))
+      .select((col("query_id") +: col("rnk") +: cols.tail.map(col)): _*)
   }
 
   /** Sign-LSH bucket id: one bit per leading dimension's sign. A
@@ -110,16 +120,15 @@ object Similarity {
   /** Top-k within the query's sign bucket (scale path). Queries whose
     * bucket holds no other vectors produce no rows. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, bits: Int, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      signBucket(vecCol, bits).as("bucket"))
-    val cand = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-      signBucket(vecCol, bits).as("bucket"))
-    val sims = cand.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-    rankTopK(sims, k)
+      vecCol: String, bits: Int, k: Int): DataFrame =
+    lshSearch(corpus, queries, idCol, vecCol, bits, k, Nil)
+
+  /** Sign-LSH search whose equi-key is the bucket plus `attrs`. */
+  private def lshSearch(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, bits: Int, k: Int, attrs: Seq[String]): DataFrame = {
+    val key = signBucket(vecCol, bits).as("bucket") +: attrs.map(col)
+    rankTopK(scoredProbe(corpusSide(corpus, idCol, vecCol, key: _*),
+      querySide(queries, idCol, vecCol, key: _*), "bucket" +: attrs), k, attrs: _*)
   }
 
   /** Contrastive TRIPLET mining — the embedding-model training-data
@@ -140,15 +149,13 @@ object Similarity {
     * is correctly rounded, so cross-engine exact on identical inputs. */
   def tripletMine(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, labelCol: String, bits: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      col(labelCol).as("q_label"), signBucket(vecCol, bits).as("bucket"))
-    val cand = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-      col(labelCol).as("n_label"), signBucket(vecCol, bits).as("bucket"))
-    val scored = cand.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+    val bucket = signBucket(vecCol, bits).as("bucket")
+    val scored = scoredProbe(
+        corpusSide(corpus, idCol, vecCol, col(labelCol).as("n_label"), bucket),
+        querySide(queries, idCol, vecCol, col(labelCol).as("q_label"), bucket),
+        Seq("bucket"))
       .withColumn("side",
         when(col("n_label") === col("q_label"), "pos").otherwise("neg"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
       .select(col("query_id"), col("side"), col("neighbor_id"), col("sim"))
     val top1 = Relational.topNPerGroupFast(scored, 1,
       Seq("query_id", "side"), Seq(("sim", false), ("neighbor_id", true)))
@@ -173,23 +180,8 @@ object Similarity {
     * join as lshTopK — the composite key only SHRINKS each probe's
     * candidate set (bucket∩attr instead of bucket). */
   def lshTopKFiltered(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, filterCol: String, bits: Int, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      col(filterCol), signBucket(vecCol, bits).as("bucket"))
-    val cand = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
-      col(filterCol), signBucket(vecCol, bits).as("bucket"))
-    val sims = cand.join(broadcast(q), Seq("bucket", filterCol))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col(filterCol), col("neighbor_id"), col("sim"))
-    val top = Relational.topNPerGroupFast(sims, k, Seq("query_id"),
-      Seq(("sim", false), ("neighbor_id", true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"),
-        col(filterCol))
-  }
+      vecCol: String, filterCol: String, bits: Int, k: Int): DataFrame =
+    lshSearch(corpus, queries, idCol, vecCol, bits, k, Seq(filterCol))
 
   /** Nearest-centroid assignment: the centroids fold into ONE broadcast
     * array row and the argmax runs MAP-SIDE (array_max over
@@ -237,11 +229,13 @@ object Similarity {
   /** Public nearest-centroid assignment: (id, cell) per corpus vector,
     * through nearestCell's broadcast zero-exchange fold. */
   def assignCells(corpus: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    nearestCell(corpus, cents, idCol, vecCol, "vec_id", "_v")
+      vecCol: String): DataFrame =
+    nearestCell(corpus, centsOf(centroids, idCol, vecCol), idCol, vecCol, "vec_id", "_v")
       .select(col("vec_id"), col("cell"))
-  }
+
+  /** A centroid set as the codebook rows nearestCell folds: (cent_id, c_vec). */
+  private def centsOf(centroids: DataFrame, idCol: String, vecCol: String): DataFrame =
+    centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
 
   /** Public (id, vec, cell) assignment keeping the vector — the
     * MATERIALIZED-INDEX row shape: what an IVF index persists so that
@@ -250,10 +244,8 @@ object Similarity {
     * again). Column names pass through unchanged so the output can be
     * written and unioned with later batches. */
   def indexWithCells(corpus: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    nearestCell(corpus, cents, idCol, vecCol, idCol, vecCol)
-  }
+      vecCol: String): DataFrame =
+    nearestCell(corpus, centsOf(centroids, idCol, vecCol), idCol, vecCol, idCol, vecCol)
 
   /** Cell-partitioned search over PRE-ASSIGNED rows (both sides carry
     * a `cell` column): the serving half of IVF, split out so a
@@ -261,21 +253,13 @@ object Similarity {
     * searched without re-assignment. Queries broadcast; ranking rides
     * TopNPerKey bounded heaps. */
   def searchAssigned(corpusCells: DataFrame, queryCells: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val cand = corpusCells.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("n_vec"), col("cell"))
-    val q = queryCells.select(col(idCol).as("query_id"),
-      col(vecCol).as("q_vec"), col("cell"))
+      idCol: String, vecCol: String, k: Int): DataFrame =
     // `cell` may be nearestCell's argmax fold — cellColumn's Generate
     // keeps the join from inlining it into probe keys and inferred
-    // filters (a left-join dodge does NOT work here: the =!= filter
-    // above null-rejects, so EliminateOuterJoin converts it back)
-    val sims = cand.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-    rankTopK(sims, k)
-  }
+    // filters (a left-join dodge does NOT work here: the probe's =!=
+    // filter null-rejects, so EliminateOuterJoin converts it back)
+    rankTopK(scoredProbe(corpusSide(corpusCells, idCol, vecCol, col("cell")),
+      querySide(queryCells, idCol, vecCol, col("cell")), Seq("cell")), k)
 
   /** IVF-style ANN: assign every vector to its nearest centroid cell
     * (broadcast centroid set), then search only within the query's cell.
@@ -302,21 +286,24 @@ object Similarity {
   def ivfTopKMultiProbe(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String, nprobe: Int,
       k: Int): DataFrame = {
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    val corpusCells = nearestCell(corpus, cents, idCol, vecCol, "neighbor_id", "n_vec")
-    val qScored = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val cents = centsOf(centroids, idCol, vecCol)
+    rankTopK(scoredProbe(nearestCell(corpus, cents, idCol, vecCol, "neighbor_id", "n_vec"),
+      queryCells(queries, cents, idCol, vecCol, nprobe), Seq("cell")), k)
+  }
+
+  /** Each query's `nprobe` nearest cells as (query_id, q_vec, cell, arn),
+    * `arn` the 1-based probe rank by round(cosine, 6) desc, cent_id asc:
+    * queries×|centroids| scored rows reduce through TopNPerKey bounded
+    * heaps, which number the survivors. */
+  private def queryCells(queries: DataFrame, cents: DataFrame, idCol: String,
+      vecCol: String, nprobe: Int): DataFrame = {
+    val scored = querySide(queries, idCol, vecCol)
       .crossJoin(broadcast(cents))
       .withColumn("_csim", round(cosine(col("q_vec"), col("c_vec")), 6))
       .select(col("query_id"), col("q_vec"), col("cent_id"), col("_csim"))
-    val qCells = Relational.topNPerGroupFast(qScored, nprobe,
-        Seq("query_id"), Seq(("_csim", false), ("cent_id", true)))
-      .select(col("query_id"), col("q_vec"), col("cent_id").as("cell"))
-    val sims = corpusCells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-    rankTopK(sims, k)
+    Relational.topNPerGroupFast(scored, nprobe, Seq("query_id"),
+        Seq(("_csim", false), ("cent_id", true)), rank = Some("arn"))
+      .select(col("query_id"), col("q_vec"), col("cent_id").as("cell"), col("arn"))
   }
 
   /** Probe-sweep recall eval — the tuning curve behind multi-probe's
@@ -335,30 +322,14 @@ object Similarity {
   def probeSweepRecall(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
       probes: Seq[Int], k: Int): DataFrame = {
-    val maxP = probes.max
     val probesArr = array(probes.map(lit): _*)
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    val corpusCells = indexWithCells(corpus, centroids, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"), col("cell"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("_csim").desc, col("cent_id"))
-    val qCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(cents))
-      .withColumn("_csim", round(cosine(col("q_vec"), col("c_vec")), 6))
-      .withColumn("arn", row_number().over(qw))
-      .filter(col("arn") <= maxP)
-      .select(col("query_id"), col("q_vec"), col("cent_id").as("cell"), col("arn"))
-    val cand = corpusCells.join(broadcast(qCells), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("arn"))
+    val cents = centsOf(centroids, idCol, vecCol)
+    val cand = scoredProbe(nearestCell(corpus, cents, idCol, vecCol, "neighbor_id", "n_vec"),
+      queryCells(queries, cents, idCol, vecCol, probes.max), Seq("cell"))
     val leveled = cand.select(col("query_id"), col("neighbor_id"), col("sim"),
       explode(filter(probesArr, p => p >= col("arn"))).as("nprobe"))
-    val lw = Window.partitionBy(col("nprobe"), col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val top = leveled.withColumn("rnk", row_number().over(lw))
-      .filter(col("rnk") <= k)
+    val top = Relational.topNPerGroupFast(leveled, k, Seq("nprobe", "query_id"),
+        Seq(("sim", false), ("neighbor_id", true)))
       .select(col("nprobe"), col("query_id"), col("neighbor_id"))
     val truth = bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
@@ -388,13 +359,9 @@ object Similarity {
     val cand = bruteForceTopK(corpus.withColumn(vecCol, quant),
         queries.withColumn(vecCol, quant), idCol, vecCol, coarseK)
       .select(col("query_id"), col("neighbor_id"))
-    val full = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"))
-    val qFull = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val sims = full.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qFull), Seq("query_id"))
-      .withColumn("sim", round(cosine(col("q_vec"), col("n_vec")), 6))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-    rankTopK(sims, k)
+    rankTopK(scoredProbe(
+      corpusSide(corpus, idCol, vecCol).join(broadcast(cand), Seq("neighbor_id")),
+      querySide(queries, idCol, vecCol), Seq("query_id")), k)
   }
 
   /** Lloyd's k-means over INTEGER-quantized vectors — the trained-
@@ -510,21 +477,28 @@ object Similarity {
     * orthogonal (IVF, s3/s6); like s1/s4 this baseline scans all
     * codes. Exact long arithmetic end to end. */
   def pqTopK(codes: DataFrame, queryRows: DataFrame, cents: DataFrame,
-      k: Int): DataFrame = {
-    val lut = queryRows.join(broadcast(cents), Seq("s"))
-      .select(col("_vid").as("query_id"), col("s"), col("cent_id"),
-        expr("aggregate(zip_with(sv, c, (x, y) -> x * y), " +
-          "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("dot"))
+      k: Int): DataFrame =
+    adcTopK(codes, queryRows, cents, Nil, k)
+
+  /** The LUT + ADC + ranked top-k tail every PQ search shares. Each
+    * query sub-row dots the broadcast codebook once (the LUT, carrying
+    * the query's `cellKeys`); code rows meet the broadcast LUT on
+    * (s, cent_id, cellKeys…), so other-cell code rows drop at the
+    * map-side hash probe; an exact long `score` per (query, vector),
+    * self excluded; top-k by score desc, vec_id asc, numbered `rnk`. */
+  private def adcTopK(codes: DataFrame, querySub: DataFrame, book: DataFrame,
+      cellKeys: Seq[String], k: Int): DataFrame = {
+    val lut = querySub.join(broadcast(book), Seq("s"))
+      .select((col("_vid").as("query_id") +: cellKeys.map(col)) ++ Seq(col("s"),
+        col("cent_id"), expr("aggregate(zip_with(sv, c, (x, y) -> x * y), " +
+          "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("dot")): _*)
     val scores = codes
-      .join(broadcast(lut), Seq("s", "cent_id"))
+      .join(broadcast(lut), Seq("s", "cent_id") ++ cellKeys)
+      .filter(col("_vid") =!= col("query_id"))
       .groupBy(col("query_id"), col("_vid").as("vec_id"))
       .agg(sum(col("dot")).as("score"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val top = graft.operators.Relational.topNPerGroupFast(scores, k,
-      Seq("query_id"), Seq(("score", false), ("vec_id", true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    top.withColumn("rnk", row_number().over(w))
+    Relational.topNPerGroupFast(scores, k, Seq("query_id"),
+        Seq(("score", false), ("vec_id", true)), rank = Some("rnk"))
       .select(col("query_id"), col("rnk"), col("vec_id"), col("score"))
   }
 
@@ -546,10 +520,23 @@ object Similarity {
   def ivfPqTopK(vectors: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, queryPred: Column, subs: Int, width: Int,
       pqK: Int, iters: Int, k: Int): DataFrame = {
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    // unlike s11's cheap re-derivable scan lineage, this prefix holds
-    // the argmax shuffle — checkpoint so four downstream uses (2 train
-    // iterations, encode, queries) don't re-run the assignment
+    val (_, sub, book, codes) = ivfPqBuild(vectors, idCol, vecCol, centroids,
+      subs, width, pqK, iters)
+    adcTopK(codes, sub.filter(queryPred), book, Seq("ivf_cell"), k)
+  }
+
+  /** The IVF-PQ build ivfPqTopK and ivfPqIndex share: centroid rows
+    * (cent_id, c_vec); sub-rows (_vid, s, sv, ivf_cell) of every vector
+    * carrying its IVF cell; the trained PQ codebook (s, cent_id, c); the
+    * codes (s, cent_id, _vid, ivf_cell). The assignment and the codebook
+    * are pinned: unlike s11's cheap re-derivable scan lineage, the
+    * assignment feeds two training iterations, the encode and the
+    * queries, and the codebook feeds the encode, the LUT and the
+    * persisted artifact — none of them re-runs either. */
+  private def ivfPqBuild(vectors: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, subs: Int, width: Int, pqK: Int, iters: Int)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val cents = centsOf(centroids, idCol, vecCol)
     val assigned = nearestCell(vectors, cents, idCol, vecCol, "_aid", "_v")
       .withColumnRenamed("cell", "ivf_cell")
       .localCheckpoint()
@@ -557,21 +544,7 @@ object Similarity {
     val book = trainPqCodebooks(sub, width, pqK, iters).localCheckpoint()
     val codes = assignPq(sub, book, keep = Seq("ivf_cell"))
       .select(col("s"), col("cell").as("cent_id"), col("_vid"), col("ivf_cell"))
-    val lut = sub.filter(queryPred).join(broadcast(book), Seq("s"))
-      .select(col("_vid").as("query_id"), col("ivf_cell"), col("s"), col("cent_id"),
-        expr("aggregate(zip_with(sv, c, (x, y) -> x * y), " +
-          "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("dot"))
-    val scores = codes
-      .join(broadcast(lut), Seq("s", "cent_id", "ivf_cell"))
-      .filter(col("_vid") =!= col("query_id"))
-      .groupBy(col("query_id"), col("_vid").as("vec_id"))
-      .agg(sum(col("dot")).as("score"))
-    val top = Relational.topNPerGroupFast(scores, k,
-      Seq("query_id"), Seq(("score", false), ("vec_id", true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    top.withColumn("rnk", row_number().over(w))
-      .select(col("query_id"), col("rnk"), col("vec_id"), col("score"))
+    (cents, sub, book, codes)
   }
 
   /** BUILD half of the persisted IVF-PQ serving index (s27 — the
@@ -587,14 +560,8 @@ object Similarity {
   def ivfPqIndex(vectors: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, subs: Int, width: Int, pqK: Int, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cents = centroids.select(col(idCol).as("cent_id"), col(vecCol).as("c_vec"))
-    val assigned = nearestCell(vectors, cents, idCol, vecCol, "_aid", "_v")
-      .withColumnRenamed("cell", "ivf_cell")
-      .localCheckpoint()
-    val sub = pqSubRows(assigned, "_aid", "_v", subs, width, keep = Seq("ivf_cell"))
-    val book = trainPqCodebooks(sub, width, pqK, iters)
-    val codes = assignPq(sub, book, keep = Seq("ivf_cell"))
-      .select(col("s"), col("cell").as("cent_id"), col("_vid"), col("ivf_cell"))
+    val (cents, _, book, codes) = ivfPqBuild(vectors, idCol, vecCol, centroids,
+      subs, width, pqK, iters)
     (cents, book, codes)
   }
 
@@ -611,24 +578,8 @@ object Similarity {
       subs: Int, width: Int, k: Int): DataFrame = {
     val qAssigned = nearestCell(queries, ivfCents, idCol, vecCol, "_aid", "_v")
       .withColumnRenamed("cell", "ivf_cell")
-    val qsub = pqSubRows(qAssigned, "_aid", "_v", subs, width,
-      keep = Seq("ivf_cell"))
-    val lut = qsub.join(broadcast(book), Seq("s"))
-      .select(col("_vid").as("query_id"), col("ivf_cell"), col("s"),
-        col("cent_id"),
-        expr("aggregate(zip_with(sv, c, (x, y) -> x * y), " +
-          "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("dot"))
-    val scores = codes
-      .join(broadcast(lut), Seq("s", "cent_id", "ivf_cell"))
-      .filter(col("_vid") =!= col("query_id"))
-      .groupBy(col("query_id"), col("_vid").as("vec_id"))
-      .agg(sum(col("dot")).as("score"))
-    val top = Relational.topNPerGroupFast(scores, k,
-      Seq("query_id"), Seq(("score", false), ("vec_id", true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vec_id"))
-    top.withColumn("rnk", row_number().over(w))
-      .select(col("query_id"), col("rnk"), col("vec_id"), col("score"))
+    adcTopK(codes, pqSubRows(qAssigned, "_aid", "_v", subs, width,
+      keep = Seq("ivf_cell")), book, Seq("ivf_cell"), k)
   }
 
   /** Embedding near-duplicate pairs, blocked by a key (label, cluster,

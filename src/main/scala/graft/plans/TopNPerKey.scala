@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BindReferences, BoundReference, Expression, ExpressionSet, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
@@ -35,14 +35,29 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * nothing for that key. This is what lets a variable-quota selection
   * ("the (target mod c) smallest draws per class") stay a bounded-heap
   * stream-through instead of a rank-the-whole-class window.
+  *
+  * Rank: `rank`, when set, is a non-null int column of the child that
+  * the final pass overwrites with each survivor's 1-based position within
+  * its key under `order` — the value `row_number()` over the same total
+  * order would give (the caller adds it as a placeholder; being a child
+  * column, it is deduplicated and pruned like any other). The final heap
+  * already emits each key's survivors best-first, so numbering them is
+  * free; a window stacked on the result would sort the survivors again
+  * to derive the same number.
   */
 case class TopNPerKey(n: Int, keys: Seq[Expression], order: Seq[SortOrder],
     child: LogicalPlan,
     maxPartialKeys: Int = TopNPerKey.DefaultMaxPartialKeys,
-    limitExpr: Option[Expression] = None) extends UnaryNode {
+    limitExpr: Option[Expression] = None,
+    rank: Option[Expression] = None) extends UnaryNode {
   require(limitExpr.isDefined || n > 0, s"TopNPerKey needs n > 0, got $n")
   require(order.nonEmpty, "TopNPerKey needs at least one ordering expression")
   override def output: Seq[Attribute] = child.output
+  // survivors keep every child constraint except the placeholder's value
+  override protected lazy val validConstraints: ExpressionSet = {
+    val numbered = AttributeSet(rank.toSeq.flatMap(_.references))
+    ExpressionSet(child.constraints.filterNot(_.references.intersect(numbered).nonEmpty))
+  }
   override protected def withNewChildInternal(c: LogicalPlan): TopNPerKey = copy(child = c)
 }
 
@@ -56,7 +71,7 @@ object TopNPerKey {
 
 case class TopNPerKeyExec(n: Int, keys: Seq[Expression], order: Seq[SortOrder],
     partial: Boolean, maxPartialKeys: Int, limitExpr: Option[Expression],
-    child: SparkPlan) extends UnaryExecNode {
+    rank: Option[Expression], child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning: Partitioning = child.outputPartitioning
 
@@ -78,6 +93,8 @@ case class TopNPerKeyExec(n: Int, keys: Seq[Expression], order: Seq[SortOrder],
     val isPartial = partial
     val keyCap = maxPartialKeys
     val limitExprLocal = limitExpr
+    val rankOrdinal = rank.map(e =>
+      BindReferences.bindReference(e, childOutput).asInstanceOf[BoundReference].ordinal)
     child.execute().mapPartitions ({ it =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
       val cmp = new LazilyGeneratedOrdering(
@@ -125,9 +142,16 @@ case class TopNPerKeyExec(n: Int, keys: Seq[Expression], order: Seq[SortOrder],
             Iterator.empty
         }
       }
+      // each heap drains best-first; the heap rows are private copies, so
+      // the final pass numbers them in place
+      def best(pq: mutable.PriorityQueue[UnsafeRow]): Iterator[InternalRow] = {
+        val rows = pq.dequeueAll.reverseIterator
+        rankOrdinal.fold[Iterator[InternalRow]](rows)(ord =>
+          rows.zipWithIndex.map { case (row, i) => row.setInt(ord, i + 1); row })
+      }
       // the heap suffix is by-name: evaluated only after `streamed` is
       // exhausted, i.e. after the input is fully consumed
-      streamed ++ heaps.valuesIterator.flatMap(_._2.dequeueAll.reverseIterator)
+      streamed ++ heaps.valuesIterator.flatMap(h => best(h._2))
     }, preservesPartitioning = true)
   }
 
@@ -138,12 +162,12 @@ case class TopNPerKeyExec(n: Int, keys: Seq[Expression], order: Seq[SortOrder],
 /** Planner rule mapping the logical node to its physical operator. */
 object TopNPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopNPerKey(n, keys, order, child, cap, limitExpr) =>
+    case TopNPerKey(n, keys, order, child, cap, limitExpr, rank) =>
       // partial (map-side) pass under the final pass — the exchange that
       // EnsureRequirements inserts between them carries only the
-      // per-partition survivors
-      TopNPerKeyExec(n, keys, order, partial = false, cap, limitExpr,
-        TopNPerKeyExec(n, keys, order, partial = true, cap, limitExpr,
+      // per-partition survivors; only the final pass numbers them
+      TopNPerKeyExec(n, keys, order, partial = false, cap, limitExpr, rank,
+        TopNPerKeyExec(n, keys, order, partial = true, cap, limitExpr, None,
           planLater(child))) :: Nil
     case _ => Nil
   }

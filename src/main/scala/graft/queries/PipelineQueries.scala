@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.{Bpe, Dedup, Graph, HtmlText, LearnedQuality, Relational, Similarity}
@@ -12,18 +12,6 @@ import graft.multimodal.Multimodal
   */
 object PipelineQueries {
 
-  /** Directed kNN edges (k=3): s9's sub-split sign-LSH bucket pairing,
-    * top-3 by cosine per vector via bounded heaps, checkpointed so
-    * downstream graph passes (s9 census, s10 PageRank iterations)
-    * never re-evaluate the candidate pipeline. */
-  /** The two hybrid-retrieval channels (s16 serving, s17 eval), each a
-    * bounded top-20 per query over the first-copy query set:
-    *  - lexical: distinct RARE-term overlap (df-capped postings at 10%
-    *    of the corpus — the stop-posting prune; the capped terms table
-    *    is localCheckpoint'ed for its two consumers);
-    *  - vector: s2's sign-LSH bucket-pruned cosine (the scale path).
-    * Levers measured in SURVEY §6j: the brute/uncapped first cut read
-    * 43× at 10× data; this shape reads 1.0×. */
   /** The df-capped lexical posting lists (term in ≤10% of docs) — the
     * s16/s17 index BUILD, also persisted as a DerivedLayouts artifact
     * by s24 (serving must read the index, not re-run this window). */
@@ -40,27 +28,132 @@ object PipelineQueries {
       .select(col("doc_id"), col("term"))
   }
 
-  private def hybridChannels(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val vecs = Tables.embeddings(s, dir)
-    val isQ = (c: org.apache.spark.sql.Column) =>
-      pmod(c, lit(50)) === 0 && c < 100000000L
-    val terms = lexPostings(s, dir).localCheckpoint()
-    val qTerms = terms.filter(isQ(col("doc_id")))
+  /** Lexical top-n per query: each doc's distinct rare-term overlap
+    * `inter` with each query doc (`isQ`) through the posting lists, best
+    * n by inter desc, doc_id asc; `rank` numbers them. */
+  private def lexTop(postings: DataFrame, isQ: Column => Column, n: Int,
+      rank: Option[String]): DataFrame = {
+    val qTerms = postings.filter(isQ(col("doc_id")))
       .withColumnRenamed("doc_id", "query_id")
-    val overlap = terms.join(qTerms, "term")
+    val overlap = postings.join(qTerms, "term")
       .filter(col("doc_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("doc_id")).agg(count(lit(1)).as("inter"))
-    val lexTop = Relational.topNPerGroupFast(overlap, 20, Seq("query_id"),
-        Seq(("inter", false), ("doc_id", true)))
-      .withColumn("lex_rank", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("inter").desc, col("doc_id"))).cast("int"))
+    Relational.topNPerGroupFast(overlap, n, Seq("query_id"),
+      Seq(("inter", false), ("doc_id", true)), rank = rank)
+  }
+
+  /** The two hybrid-retrieval channels (s16 serving, s17 eval, s24's
+    * hybrid face), each a bounded top-20 per query over the first-copy
+    * query set:
+    *  - lexical: distinct RARE-term overlap over `postings`, the df-capped
+    *    posting lists (s16/s17 pin lexPostings for its two consumers;
+    *    s24 passes its persisted artifact);
+    *  - vector: s2's sign-LSH bucket-pruned cosine (the scale path).
+    * Levers measured in SURVEY §6j: the brute/uncapped first cut read
+    * 43× at 10× data; this shape reads 1.0×. */
+  private def hybridChannels(s: SparkSession, dir: String,
+      postings: DataFrame): (DataFrame, DataFrame) = {
+    val vecs = Tables.embeddings(s, dir)
+    val isQ = (c: Column) => pmod(c, lit(50)) === 0 && c < 100000000L
+    val lexTop20 = lexTop(postings, isQ, 20, Some("lex_rank"))
       .select(col("query_id"), col("doc_id"), col("lex_rank"))
     val vecTop = Similarity.lshTopK(vecs, vecs.filter(isQ(col("vec_id"))),
         "vec_id", "embedding", bits = 4, k = 20)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("vec_rank"))
-    (lexTop, vecTop)
+        col("rnk").as("vec_rank"))
+    (lexTop20, vecTop)
+  }
+
+  /** Reciprocal-rank fusion of two ranked lists on (query_id, doc_id):
+    * integer floor(1e9/(60+rank)) per list, summed over a FULL OUTER
+    * join (a doc only one list surfaced still scores), then the top 5
+    * per query by rrf desc, doc_id asc, numbered `rnk`. Rank positions,
+    * not scores, cross the channel boundary, so the channels' score
+    * scales never need calibrating. */
+  private def rrfTop5(a: DataFrame, rankA: String, b: DataFrame,
+      rankB: String): DataFrame = {
+    def rr(rank: String) =
+      coalesce(expr(s"CAST(1000000000 AS BIGINT) div (60 + $rank)"), lit(0L))
+    Relational.topNPerGroupFast(
+      a.join(b, Seq("query_id", "doc_id"), "full_outer")
+        .withColumn("rrf", rr(rankA) + rr(rankB)),
+      5, Seq("query_id"), Seq(("rrf", false), ("doc_id", true)), rank = Some("rnk"))
+  }
+
+  /** One row of an ANN recall eval: the `truth` rows `cand` also holds
+    * (semi join on every truth column), the one-row `counts` (n_queries
+    * first, then any cost columns) broadcast beside the hit count, and
+    * recall_bp — hits in truncating basis points of k·n_queries, NULL
+    * on an empty panel. */
+  private def recallRow(label: Column, truth: DataFrame, cand: DataFrame,
+      k: Int, counts: DataFrame*): DataFrame =
+    counts.foldLeft(truth.join(cand, truth.columns.toSeq, "left_semi")
+        .agg(count(lit(1)).as("n_hits")))((df, c) => df.crossJoin(broadcast(c)))
+      .select((label +: counts.flatMap(_.columns).map(col)) ++ Seq(col("n_hits"),
+        expr(s"CASE WHEN n_queries = 0 THEN NULL " +
+          s"ELSE n_hits * 10000 div ($k * n_queries) END").as("recall_bp")): _*)
+
+  /** Each query's best 3 (query_id, node) by sim desc, node asc. */
+  private def top3Nodes(scored: DataFrame): DataFrame =
+    Relational.topNPerGroupFast(scored, 3, Seq("query_id"),
+        Seq(("sim", false), ("node", true)))
+      .select(col("query_id"), col("node"))
+
+  /** Greedy BEAM walk over a kNN edge list (id_a, id_b), the graph ANN
+    * paradigm shared by s22, s23 and s24: each query starts from the
+    * entry set (graph nodes with id < 8 — s3's centroid convention), then
+    * 3 hops of expand-neighbors → `score` → keep the best 8 by sim desc,
+    * node asc. `score` maps (query_id, node) candidates to
+    * (query_id, node, sim). Every hop but the last is pinned (the next
+    * hop expands it); the last beam is left to its one consumer. Returns
+    * each hop's (scored, beam). */
+  private def beamWalk(queryIds: DataFrame, edges: DataFrame)(
+      score: DataFrame => DataFrame): Seq[(DataFrame, DataFrame)] = {
+    val entries = edges.filter(col("id_a") < 8)
+      .select(col("id_a").as("node")).distinct()
+    var frontier = queryIds.crossJoin(broadcast(entries)).localCheckpoint()
+    (1 to 3).map { hop =>
+      val cand = frontier.select(col("query_id"), col("node"))
+        .join(edges, col("node") === col("id_a"))
+        .select(col("query_id"), col("id_b").as("node"))
+        .union(frontier.select(col("query_id"), col("node")))
+        .distinct()
+      val scored = score(cand)
+      val beam = Relational.topNPerGroupFast(scored, 8,
+          Seq("query_id"), Seq(("sim", false), ("node", true)))
+        .select(col("query_id"), col("node"), col("sim"))
+      frontier = if (hop < 3) beam.localCheckpoint() else beam
+      (scored, frontier)
+    }
+  }
+
+  /** A beam hop's scorer: each (query_id, node) candidate against the
+    * broadcast query panel (query_id, qe), sim = round(cosine, 6). */
+  private def hopScore(vecs: DataFrame, q: DataFrame)(cand: DataFrame): DataFrame =
+    cand.join(vecs.select(col("vec_id").as("node"), col("embedding")), Seq("node"))
+      .join(broadcast(q), Seq("query_id"))
+      .withColumn("sim",
+        round(graft.functions.VectorFunctions.cosine(col("embedding"), col("qe")), 6))
+      .select(col("query_id"), col("node"), col("sim"))
+
+  /** s15/s25's IVF index over s3's frozen codebook (vec_id < 8): the 90%
+    * "indexed" corpus assigned ONCE and persisted as an (id, vec, cell)
+    * layout, plus the 10% delta batch — the only rows a nightly run
+    * assigns — pinned so its two uses never recompute the argmax. */
+  private def ivfIndexDelta(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val vecs = Tables.embeddings(s, dir)
+    val cents = vecs.filter(col("vec_id") < 8)
+    val base = graft.sources.DerivedLayouts.once(s"ivf_index|$dir") { p =>
+      Similarity.indexWithCells(vecs.filter(pmod(col("vec_id"), lit(10)) =!= 0),
+          cents, "vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$p/index")
+    }
+    val index = s.read.parquet(s"$base/index")
+    val delta = Similarity.indexWithCells(
+        vecs.filter(pmod(col("vec_id"), lit(10)) === 0), cents,
+        "vec_id", "embedding")
+      .localCheckpoint()
+    (index, delta)
   }
 
   /** Undirected collocation edges (a < b, unordered-pair support ≥ 3)
@@ -78,6 +171,10 @@ object PipelineQueries {
       .filter(col("n") >= 3)
       .select(col("a"), col("b"))
 
+  /** Directed kNN edges (k=3): s9's sub-split sign-LSH bucket pairing,
+    * top-3 by cosine per vector via bounded heaps, checkpointed so
+    * downstream graph passes (s9 census, s10 PageRank iterations)
+    * never re-evaluate the candidate pipeline. */
   private def knnTopEdges(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions
     val vecs = Tables.embeddings(s, dir)
@@ -98,8 +195,6 @@ object PipelineQueries {
       .localCheckpoint(true)
   }
 
-  /** DuckDB CTE producing per-doc distinct word-3-gram shingle lists —
-    * the exact mirror of Dedup.shingles. */
   /** Exact Jaccard ≥ 0.8 truth pairs as a PERSISTED artifact (the s24
     * serving posture: pay the exact join once, every eval reads the
     * layout). d20 is the key that MEASURES the live join; d21/d22
@@ -155,6 +250,8 @@ object PipelineQueries {
           .as("dup_tri_bp"))
   }
 
+  /** DuckDB CTE producing per-doc distinct word-3-gram shingle lists —
+    * the exact mirror of Dedup.shingles. */
   private val shingleBase =
     """w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd FROM documents),
       |sh AS (SELECT doc_id,
@@ -2229,7 +2326,6 @@ object PipelineQueries {
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       Similarity.bruteForceTopK(vecs, q, "vec_id", "embedding", k = 5)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2237,7 +2333,6 @@ object PipelineQueries {
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       Similarity.lshTopK(vecs, q, "vec_id", "embedding", bits = 4, k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2248,9 +2343,9 @@ object PipelineQueries {
     // n_scored (total exact similarity evaluations, the latency
     // proxy). Brute is the ceiling row (recall 10000 bp at max cost,
     // d21's priced-truth contract); the others show what each pruning
-    // geometry buys. Every paradigm reuses its standalone key's exact
-    // form (s1/s2/s3/s22), so this table IS those keys joined on one
-    // truth. Brute truth ⇒ SF≥1 baseline skip set.
+    // geometry buys. Brute, LSH and IVF reuse their standalone keys'
+    // exact forms (s1/s2/s3); the graph row is s22's walk with self
+    // dropped from every beam. Brute truth ⇒ SF≥1 baseline skip set.
     "s23_index_pareto" -> { (s, dir) =>
       import graft.functions.VectorFunctions
       val vecs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
@@ -2263,13 +2358,9 @@ object PipelineQueries {
         .withColumn("sim",
           round(VectorFunctions.cosine(col("embedding"), col("qe")), 6))
         .select(col("query_id"), col("vec_id").as("node"), col("sim"))
-      def top3(scored: DataFrame): DataFrame =
-        Relational.topNPerGroupFast(scored, 3,
-            Seq("query_id"), Seq(("sim", false), ("node", true)))
-          .select(col("query_id"), col("node"))
       // brute: the scored frame IS the truth's source
       val bruteScored = score(vecs.crossJoin(broadcast(q))).localCheckpoint()
-      val truth = top3(bruteScored).localCheckpoint()
+      val truth = top3Nodes(bruteScored).localCheckpoint()
       // sign-LSH (s2's geometry, bits=4)
       val vb = vecs.withColumn("bucket", Similarity.signBucket("embedding", 4))
       val lshScored = score(vb.join(
@@ -2289,47 +2380,22 @@ object PipelineQueries {
         broadcast(cells.filter(pmod(col("vec_id"), lit(50)) === 0)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
             col("cell"))), Seq("cell")))
-      // graph beam walk (s22's exact form)
+      // graph beam walk — s22's walk, except that s23 drops self from
+      // every beam (its oracle's n.node <> n.query_id) while s22 keeps
+      // self in the beam as the neighborhood anchor
       val edges = knnTopEdges(s, dir).select(col("id_a"), col("id_b"))
-      val entries = edges.filter(col("id_a") < 8)
-        .select(col("id_a").as("node")).distinct()
-      var frontier: DataFrame = q.select(col("query_id"))
-        .crossJoin(broadcast(entries)).localCheckpoint()
-      var lastBeam: DataFrame = null
-      val scoredCounts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      for (_ <- 1 to 3) {
-        val cand = frontier.select(col("query_id"), col("node"))
-          .join(edges, col("node") === col("id_a"))
-          .select(col("query_id"), col("id_b").as("node"))
-          .union(frontier.select(col("query_id"), col("node")))
-          .distinct()
-        val scored = score(cand
-          .join(vecs, cand("node") === vecs("vec_id"))
-          .join(broadcast(q), Seq("query_id"))
-          .select(col("query_id"), col("vec_id"), col("embedding"), col("qe")))
-        scoredCounts += scored.agg(count(lit(1)).as("c"))
-        lastBeam = Relational.topNPerGroupFast(scored, 8,
-            Seq("query_id"), Seq(("sim", false), ("node", true)))
-          .select(col("query_id"), col("node"), col("sim"))
-          .localCheckpoint()
-        frontier = lastBeam
-      }
-      val graphScored = scoredCounts.reduce(_ unionByName _)
+      val walk = beamWalk(q.select(col("query_id")), edges)(cand =>
+        hopScore(vecs, q)(cand.filter(col("node") =!= col("query_id"))))
+      val graphScored = walk.map(_._1.agg(count(lit(1)).as("c"))).reduce(_ unionByName _)
         .agg(coalesce(sum(col("c")), lit(0L)).as("n_scored"))
       def row(name: String, nScored: DataFrame, t3: DataFrame): DataFrame =
-        truth.join(t3, Seq("query_id", "node"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(nQ)).crossJoin(broadcast(nScored))
-          .select(lit(name).as("variant"), col("n_queries"), col("n_scored"),
-            col("n_hits"),
-            expr("CASE WHEN n_queries = 0 THEN NULL " +
-              "ELSE n_hits * 10000 div (3 * n_queries) END").as("recall_bp"))
+        recallRow(lit(name).as("variant"), truth, t3, 3, nQ, nScored)
       def cnt(scored: DataFrame) = scored.agg(count(lit(1)).as("n_scored"))
       row("brute", cnt(bruteScored), truth)
-        .unionByName(row("lsh", cnt(lshScored), top3(lshScored)))
-        .unionByName(row("ivf", cnt(ivfScored), top3(ivfScored)))
+        .unionByName(row("lsh", cnt(lshScored), top3Nodes(lshScored)))
+        .unionByName(row("ivf", cnt(ivfScored), top3Nodes(ivfScored)))
         .unionByName(row("graph", graphScored,
-          top3(lastBeam.filter(col("node") =!= col("query_id")))))
+          top3Nodes(walk.last._2.filter(col("node") =!= col("query_id")))))
         .orderBy(col("variant"))
     },
 
@@ -2347,59 +2413,19 @@ object PipelineQueries {
     // Self stays in the beam (it anchors the neighborhood) but never
     // in results or truth. Brute truth ⇒ SF≥1 baseline skip set.
     "s22_graph_ann" -> { (s, dir) =>
-      import graft.functions.VectorFunctions
       val vecs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val edges = knnTopEdges(s, dir).select(col("id_a"), col("id_b"))
-      val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val entries = edges.filter(col("id_a") < 8)
-        .select(col("id_a").as("node")).distinct()
-      var frontier = q.select(col("query_id")).crossJoin(broadcast(entries))
-        .localCheckpoint()
-      val beams = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      for (_ <- 1 to 3) {
-        val cand = frontier.select(col("query_id"), col("node"))
-          .join(edges, col("node") === col("id_a"))
-          .select(col("query_id"), col("id_b").as("node"))
-          .union(frontier.select(col("query_id"), col("node")))
-          .distinct()
-        val scored = cand
-          .join(vecs.withColumnRenamed("vec_id", "node"), Seq("node"))
-          .join(broadcast(q), Seq("query_id"))
-          .withColumn("sim",
-            round(VectorFunctions.cosine(col("embedding"), col("qe")), 6))
-          .select(col("query_id"), col("node"), col("sim"))
-        val beam = Relational.topNPerGroupFast(scored, 8,
-            Seq("query_id"), Seq(("sim", false), ("node", true)))
-          .select(col("query_id"), col("node"), col("sim"))
-          .localCheckpoint()
-        beams += beam
-        frontier = beam
-      }
-      val truth = Relational.topNPerGroupFast(
-          vecs.crossJoin(broadcast(q))
-            .filter(col("vec_id") =!= col("query_id"))
-            .withColumn("sim",
-              round(VectorFunctions.cosine(col("embedding"), col("qe")), 6))
-            .select(col("query_id"), col("vec_id").as("node"), col("sim")),
-          3, Seq("query_id"), Seq(("sim", false), ("node", true)))
-        .select(col("query_id"), col("node"))
+      val panel = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
+      val q = panel.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+      val beams = beamWalk(q.select(col("query_id")), edges)(hopScore(vecs, q)).map(_._2)
+      val truth = Similarity.bruteForceTopK(vecs, panel, "vec_id", "embedding", k = 3)
+        .select(col("query_id"), col("neighbor_id").as("node"))
         .localCheckpoint()
       val nQ = q.agg(count(lit(1)).as("n_queries"))
-      def row(hop: Int, beam: DataFrame): DataFrame = {
-        val top3 = Relational.topNPerGroupFast(
-            beam.filter(col("node") =!= col("query_id")), 3,
-            Seq("query_id"), Seq(("sim", false), ("node", true)))
-          .select(col("query_id"), col("node"))
-        truth.join(top3, Seq("query_id", "node"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(nQ))
-          .select(lit(hop).as("hop"), col("n_queries"), col("n_hits"),
-            expr("CASE WHEN n_queries = 0 THEN NULL " +
-              "ELSE n_hits * 10000 div (3 * n_queries) END").as("recall_bp"))
-      }
-      row(1, beams(0)).unionByName(row(2, beams(1)))
-        .unionByName(row(3, beams(2))).orderBy(col("hop"))
+      beams.zipWithIndex.map { case (beam, i) =>
+          recallRow(lit(i + 1).as("hop"), truth,
+            top3Nodes(beam.filter(col("node") =!= col("query_id"))), 3, nQ)
+        }.reduce(_ unionByName _).orderBy(col("hop"))
     },
 
     // PERSISTED serving indexes (round-10 verdict #4 — s15's
@@ -2418,74 +2444,29 @@ object PipelineQueries {
     // pipelines), so index staleness or a bad artifact breaks the
     // hash.
     "s24_serving_index" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.VectorFunctions
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"servidx|$dir") { path =>
         lexPostings(s, dir).write.parquet(s"$path/postings")
         knnTopEdges(s, dir).select(col("id_a"), col("id_b"))
           .write.parquet(s"$path/edges")
       }
-      val isQ = (c: org.apache.spark.sql.Column) =>
-        pmod(c, lit(50)) === 0 && c < 100000000L
-      // lexical channel: postings INDEX scan, query-time join + top-k
-      val postings = s.read.parquet(s"$base/postings")
-      val qTerms = postings.filter(isQ(col("doc_id")))
-        .withColumnRenamed("doc_id", "query_id")
-      val overlap = postings.join(qTerms, "term")
-        .filter(col("doc_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("doc_id")).agg(count(lit(1)).as("inter"))
-      val lexTop = Relational.topNPerGroupFast(overlap, 20, Seq("query_id"),
-          Seq(("inter", false), ("doc_id", true)))
-        .withColumn("lex_rank", row_number().over(Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("inter").desc, col("doc_id"))).cast("int"))
-        .select(col("query_id"), col("doc_id"), col("lex_rank"))
-      val vecs = Tables.embeddings(s, dir)
-      val vecTop = Similarity.lshTopK(vecs, vecs.filter(isQ(col("vec_id"))),
-          "vec_id", "embedding", bits = 4, k = 20)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rank").as("vec_rank"))
-      val hybridFace = vecTop.join(lexTop, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + vec_rank)"), lit(0L)) +
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + lex_rank)"), lit(0L)))
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
-        .filter(col("rnk") <= 5)
+      // hybrid channel: s16's channels with the lexical one reading the
+      // postings INDEX scan (query-time join + top-k)
+      val (lexTop20, vecTop) = hybridChannels(s, dir, s.read.parquet(s"$base/postings"))
+      val hybridFace = rrfTop5(vecTop, "vec_rank", lexTop20, "lex_rank")
         .select(lit("hybrid").as("face"), col("query_id"), col("rnk"),
           col("doc_id").as("ref_id"))
-      // graph channel: beam walk over the edges INDEX scan
-      val edges = s.read.parquet(s"$base/edges")
-      val q = vecs.filter(isQ(col("vec_id")))
+      // graph channel: beam walk over the edges INDEX scan; the last hop
+      // stays UN-checkpointed, so the serving plan shows the edges
+      // FileScan (PlanSpec), not a checkpoint scan
+      val vecs = Tables.embeddings(s, dir)
+      val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0 && col("vec_id") < 100000000L)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val entries = edges.filter(col("id_a") < 8)
-        .select(col("id_a").as("node")).distinct()
-      var frontier = q.select(col("query_id")).crossJoin(broadcast(entries))
-        .localCheckpoint()
-      for (hop <- 1 to 3) {
-        val cand = frontier.select(col("query_id"), col("node"))
-          .join(edges, col("node") === col("id_a"))
-          .select(col("query_id"), col("id_b").as("node"))
-          .union(frontier.select(col("query_id"), col("node")))
-          .distinct()
-        val beam = Relational.topNPerGroupFast(
-            cand.join(vecs.select(col("vec_id").as("node"), col("embedding")),
-                Seq("node"))
-              .join(broadcast(q), Seq("query_id"))
-              .withColumn("sim",
-                round(VectorFunctions.cosine(col("embedding"), col("qe")), 6))
-              .select(col("query_id"), col("node"), col("sim")),
-            8, Seq("query_id"), Seq(("sim", false), ("node", true)))
-          .select(col("query_id"), col("node"), col("sim"))
-        // last hop stays UN-checkpointed: the serving plan must show
-        // the edges FileScan (PlanSpec), not a checkpoint scan
-        frontier = if (hop < 3) beam.localCheckpoint() else beam
-      }
-      val graphFace = frontier.filter(col("node") =!= col("query_id"))
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("sim").desc, col("node"))).cast("int"))
-        .filter(col("rnk") <= 3)
+      val walk = beamWalk(q.select(col("query_id")),
+        s.read.parquet(s"$base/edges"))(hopScore(vecs, q))
+      val graphFace = Relational.topNPerGroupFast(
+          walk.last._2.filter(col("node") =!= col("query_id")), 3,
+          Seq("query_id"), Seq(("sim", false), ("node", true)), rank = Some("rnk"))
         .select(lit("graph").as("face"), col("query_id"), col("rnk"),
           col("node").as("ref_id"))
       hybridFace.unionByName(graphFace)
@@ -2512,7 +2493,6 @@ object PipelineQueries {
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       val cents = vecs.filter(col("vec_id") < 8)
       Similarity.ivfTopK(vecs, q, cents, "vec_id", "embedding", k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2526,7 +2506,6 @@ object PipelineQueries {
       val vecs = Tables.embeddings(s, dir).withColumn("embedding", quant)
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       Similarity.bruteForceTopK(vecs, q, "vec_id", "embedding", k = 5)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2566,7 +2545,6 @@ object PipelineQueries {
       val book = Similarity.trainIvfCodebook(vecs, "vec_id", "embedding",
         dim = 64, k = 8, iters = 2).localCheckpoint()
       Similarity.ivfTopK(vecs, q, book, "vec_id", "embedding", k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2607,7 +2585,6 @@ object PipelineQueries {
       val cents = vecs.filter(col("vec_id") < 8)
       Similarity.ivfTopKMultiProbe(vecs, q, cents, "vec_id", "embedding",
           nprobe = 2, k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2742,7 +2719,6 @@ object PipelineQueries {
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       Similarity.lshTopKFiltered(vecs, q, "vec_id", "embedding", "lang",
           bits = 4, k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -2777,16 +2753,8 @@ object PipelineQueries {
     // table is localCheckpoint'ed for its two consumers (d20's
     // re-derivation tradeoff). Fusion join carries ≤ 2×queries×20 rows.
     "s16_hybrid_rrf" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val (lexTop, vecTop) = hybridChannels(s, dir)
-      val fused = vecTop.join(lexTop, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + vec_rank)"), lit(0L)) +
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + lex_rank)"), lit(0L)))
-      fused
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
-        .filter(col("rnk") <= 5)
+      val (lexTop20, vecTop) = hybridChannels(s, dir, lexPostings(s, dir).localCheckpoint())
+      rrfTop5(vecTop, "vec_rank", lexTop20, "lex_rank")
         .select(col("query_id"), col("rnk"), col("doc_id"), col("rrf"))
         .orderBy(col("query_id"), col("rnk"))
     },
@@ -2800,7 +2768,6 @@ object PipelineQueries {
     // bounded query set, so this key joins the SF≥1 baseline skip set
     // with s5.
     "s17_hybrid_recall" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0 &&
         col("vec_id") < 100000000L)
@@ -2809,28 +2776,14 @@ object PipelineQueries {
         .localCheckpoint()
       // scalar as a broadcast 1-row side, never a driver action
       val nQ = truth.agg(countDistinct(col("query_id")).as("n_queries"))
-      val (lexTop, vecTop) = hybridChannels(s, dir)
-      val lex5 = lexTop.filter(col("lex_rank") <= 5)
-        .select(col("query_id"), col("doc_id"))
-      val vec5 = vecTop.filter(col("vec_rank") <= 5)
-        .select(col("query_id"), col("doc_id"))
-      val fused5 = vecTop.join(lexTop, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + vec_rank)"), lit(0L)) +
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + lex_rank)"), lit(0L)))
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
-        .filter(col("rnk") <= 5)
-        .select(col("query_id"), col("doc_id"))
-      def recallRow(name: String, cand: DataFrame): DataFrame =
-        truth.join(cand, Seq("query_id", "doc_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(nQ))
-          .select(lit(name).as("variant"), col("n_queries"), col("n_hits"),
-            expr("n_hits * 10000 div (5 * n_queries)").as("recall_bp"))
-      recallRow("fused", fused5)
-        .unionByName(recallRow("lexical", lex5))
-        .unionByName(recallRow("vector", vec5))
+      val (lexTop20, vecTop) = hybridChannels(s, dir, lexPostings(s, dir).localCheckpoint())
+      def top5(ranked: DataFrame, rank: String) =
+        ranked.filter(col(rank) <= 5).select(col("query_id"), col("doc_id"))
+      def row(name: String, cand: DataFrame) =
+        recallRow(lit(name).as("variant"), truth, cand, 5, nQ)
+      row("fused", top5(rrfTop5(vecTop, "vec_rank", lexTop20, "lex_rank"), "rnk"))
+        .unionByName(row("lexical", top5(lexTop20, "lex_rank")))
+        .unionByName(row("vector", top5(vecTop, "vec_rank")))
         .orderBy(col("variant"))
     },
 
@@ -2863,7 +2816,6 @@ object PipelineQueries {
     // channel dot partial aggs. Exact-truth member of the SF>=1 skip
     // set with s5/s17.
     "s20_hybrid_complement" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
       // FIXED 10-query panel (round-10 verdict #8: s20 had grown to 7%
       // of the sf0.1 suite): ids 0,50,…,450 exist at every SF ≥ 0.01,
       // so the panel no longer grows with the corpus — sf0.01/sf0.001
@@ -2883,7 +2835,7 @@ object PipelineQueries {
       val en2 = termTf.groupBy(col("doc_id")).agg(sum(expr("tf_w * tf_w")).as("n2"))
       val eq = termTf.filter(isQ(col("doc_id")))
         .select(col("doc_id").as("query_id"), col("w"), col("tf_w").as("qtf"))
-      val truth = termTf.join(broadcast(eq), Seq("w"))
+      val truthSims = termTf.join(broadcast(eq), Seq("w"))
         .filter(col("doc_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("doc_id"))
         .agg(sum(expr("tf_w * qtf")).as("dot"))
@@ -2891,29 +2843,14 @@ object PipelineQueries {
           col("n2").as("qn2"))), Seq("query_id"))
         .join(en2, Seq("doc_id"))
         .withColumn("sim", round(col("dot") / sqrt(col("qn2")) / sqrt(col("n2")), 6))
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("sim").desc, col("doc_id"))))
-        .filter(col("rnk") <= 5).select(col("query_id"), col("doc_id"))
+        .select(col("query_id"), col("doc_id"), col("sim"))
+      val truth = Relational.topNPerGroupFast(truthSims, 5, Seq("query_id"),
+          Seq(("sim", false), ("doc_id", true)))
+        .select(col("query_id"), col("doc_id"))
         .localCheckpoint()
       val nQ = truth.agg(countDistinct(col("query_id")).as("n_queries"))
       // lexical channel (s16's exact form) — priced, not fused
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val terms = docs.select(col("doc_id"),
-          explode(array_distinct(split(trim(col("text")), "\\s+"))).as("term"))
-        .filter(length(col("term")) >= 3)
-        .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-        .crossJoin(broadcast(nDocs))
-        .filter(col("df") * 10 <= col("n_docs"))
-        .select(col("doc_id"), col("term"))
-        .localCheckpoint()
-      val qTerms = terms.filter(isQ(col("doc_id")))
-        .withColumnRenamed("doc_id", "query_id")
-      val lex5 = Relational.topNPerGroupFast(
-          terms.join(qTerms, "term")
-            .filter(col("doc_id") =!= col("query_id"))
-            .groupBy(col("query_id"), col("doc_id"))
-            .agg(count(lit(1)).as("inter")),
-          5, Seq("query_id"), Seq(("inter", false), ("doc_id", true)))
+      val lex5 = lexTop(lexPostings(s, dir).localCheckpoint(), isQ, 5, None)
         .select(col("query_id"), col("doc_id"))
       // two hashed-tf channels, width 32, one md5 per term
       def nib(i: Int) = s"(instr('0123456789abcdef', substring(_h, $i, 1)) - 1)"
@@ -2932,7 +2869,7 @@ object PipelineQueries {
       val qTf = tf32.filter(isQ(col("doc_id")))
         .select(col("doc_id").as("query_id"), col("ch"), col("bucket"),
           col("tf").as("qtf"))
-      val chTop = tf32.join(broadcast(qTf), Seq("ch", "bucket"))
+      val chSims = tf32.join(broadcast(qTf), Seq("ch", "bucket"))
         .filter(col("doc_id") =!= col("query_id"))
         .groupBy(col("ch"), col("query_id"), col("doc_id"))
         .agg(sum(expr("tf * qtf")).as("dot"))
@@ -2940,55 +2877,28 @@ object PipelineQueries {
           col("n2").as("qn2"))), Seq("query_id", "ch"))
         .join(n2, Seq("doc_id", "ch"))
         .withColumn("sim", round(col("dot") / sqrt(col("qn2")) / sqrt(col("n2")), 6))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("ch"), col("query_id"))
-            .orderBy(col("sim").desc, col("doc_id"))))
-        .filter(col("rank") <= 20)
-        .select(col("ch"), col("query_id"), col("doc_id"), col("rank"))
+        .select(col("ch"), col("query_id"), col("doc_id"), col("sim"))
+      val chTop = Relational.topNPerGroupFast(chSims, 20, Seq("ch", "query_id"),
+          Seq(("sim", false), ("doc_id", true)), rank = Some("rnk"))
+        .select(col("ch"), col("query_id"), col("doc_id"), col("rnk"))
         .localCheckpoint()
-      val topA = chTop.filter(col("ch") === "hash_a")
-        .select(col("query_id"), col("doc_id"), col("rank").as("rank_a"))
-      val topB = chTop.filter(col("ch") === "hash_b")
-        .select(col("query_id"), col("doc_id"), col("rank").as("rank_b"))
-      val fused5 = topA.join(topB, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf",
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + rank_a)"), lit(0L)) +
-          coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + rank_b)"), lit(0L)))
-        .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
-          .orderBy(col("rrf").desc, col("doc_id"))))
-        .filter(col("rnk") <= 5).select(col("query_id"), col("doc_id"))
-      def recallRow(name: String, cand: DataFrame): DataFrame =
-        truth.join(cand, Seq("query_id", "doc_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .crossJoin(broadcast(nQ))
-          .select(lit(name).as("variant"), col("n_queries"), col("n_hits"),
-            expr("CASE WHEN n_queries = 0 THEN NULL " +
-              "ELSE n_hits * 10000 div (5 * n_queries) END").as("recall_bp"))
-      recallRow("fused", fused5)
-        .unionByName(recallRow("hash_a",
-          topA.filter(col("rank_a") <= 5).select(col("query_id"), col("doc_id"))))
-        .unionByName(recallRow("hash_b",
-          topB.filter(col("rank_b") <= 5).select(col("query_id"), col("doc_id"))))
-        .unionByName(recallRow("lexical", lex5))
+      def top(ch: String, n: Int) =
+        chTop.filter(col("ch") === s"hash_$ch" && col("rnk") <= n)
+        .select(col("query_id"), col("doc_id"), col("rnk").as(s"rank_$ch"))
+      def row(name: String, cand: DataFrame) =
+        recallRow(lit(name).as("variant"), truth,
+          cand.select(col("query_id"), col("doc_id")), 5, nQ)
+      row("fused", rrfTop5(top("a", 20), "rank_a", top("b", 20), "rank_b"))
+        .unionByName(row("hash_a", top("a", 5)))
+        .unionByName(row("hash_b", top("b", 5)))
+        .unionByName(row("lexical", lex5))
         .orderBy(col("variant"))
     },
 
     "s15_ann_index_append" -> { (s, dir) =>
-      val vecs = Tables.embeddings(s, dir)
-      val cents = vecs.filter(col("vec_id") < 8)
-      val base = graft.sources.DerivedLayouts.once(s"ivf_index|$dir") { p =>
-        Similarity.indexWithCells(vecs.filter(pmod(col("vec_id"), lit(10)) =!= 0),
-            cents, "vec_id", "embedding")
-          .write.mode("overwrite").parquet(s"$p/index")
-      }
-      val index = s.read.parquet(s"$base/index")
-      val delta = Similarity.indexWithCells(
-          vecs.filter(pmod(col("vec_id"), lit(10)) === 0), cents,
-          "vec_id", "embedding")
-        .localCheckpoint()
+      val (index, delta) = ivfIndexDelta(s, dir)
       Similarity.searchAssigned(index.unionByName(delta), delta,
           "vec_id", "embedding", k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 
@@ -3008,16 +2918,7 @@ object PipelineQueries {
     "s25_ann_tombstone" -> { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val cents = vecs.filter(col("vec_id") < 8)
-      val base = graft.sources.DerivedLayouts.once(s"ivf_index|$dir") { p =>
-        Similarity.indexWithCells(vecs.filter(pmod(col("vec_id"), lit(10)) =!= 0),
-            cents, "vec_id", "embedding")
-          .write.mode("overwrite").parquet(s"$p/index")
-      }
-      val index = s.read.parquet(s"$base/index")
-      val delta = Similarity.indexWithCells(
-          vecs.filter(pmod(col("vec_id"), lit(10)) === 0), cents,
-          "vec_id", "embedding")
-        .localCheckpoint()
+      val (index, delta) = ivfIndexDelta(s, dir)
       val queries = delta.filter(pmod(col("vec_id"), lit(50)) === 0)
         .localCheckpoint()
       val tomb = vecs.filter(pmod(col("vec_id"), lit(20)) === 7)
@@ -3031,7 +2932,6 @@ object PipelineQueries {
         queries, "vec_id", "embedding", k = 3)
       masked.withColumn("face", lit("masked"))
         .unionByName(rebuilt.withColumn("face", lit("rebuilt")))
-        .withColumnRenamed("rank", "rnk")
         .select(col("face"), col("query_id"), col("rnk"), col("neighbor_id"),
           col("sim"))
         .orderBy(col("face"), col("query_id"), col("rnk"))
@@ -3099,7 +2999,6 @@ object PipelineQueries {
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
       Similarity.rerankTopK(vecs, q, "vec_id", "embedding", coarseK = 10, k = 3)
-        .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     },
 

@@ -4,6 +4,9 @@ package graft
   * These assert the *shape* of the plan, not timings — pushdown reaching
   * the scan, dims broadcast, top-k not materializing a global sort.
   */
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 class PlanSpec extends AnyFunSuite {
@@ -12,6 +15,36 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Every physical node under `p`, AQE stages' subplans included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** A key's executed plan plus the plans its builder already ran
+    * eagerly (localCheckpoint pins, layout builds): those are collected
+    * through a listener, ended by a sentinel query (delivery is async
+    * but in order). */
+  private def keyPlans(key: String): Seq[SparkPlan] = {
+    val executed = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(key)(spark, sf)
+      val sentinel = s"canary_end_$key"
+      spark.range(1).select(org.apache.spark.sql.functions.lit(sentinel)).collect()
+      val eager = Iterator.continually(executed.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(qe => Option(qe).getOrElse(fail(s"$key: sentinel never reached the listener")))
+        .map(_.executedPlan).takeWhile(!_.toString.contains(sentinel)).toList
+      df.queryExecution.executedPlan :: eager
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q2: filters and projection are pushed to the parquet scan") {
     val p = plan("q2_filter_project")
@@ -317,10 +350,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("multimodal canary: each x-family key scans the same documents columns; payloads never shuffle before the decode") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec,
-      MapPartitionsExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      MapPartitionsExec}
     import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.util.QueryExecutionListener
     val id = "struct<doc_id:bigint>"
     val n = "struct<doc_id:bigint,n_chars:bigint>"
     val text = "struct<doc_id:bigint,text:string>"
@@ -346,30 +377,10 @@ class PlanSpec extends AnyFunSuite {
     // x2/x5 are declarative column expressions; every other key maps
     // payloads through typed object operators
     val declarative = Set("x2_frame_sample", "x5_features")
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     // d25-d27 decode inside an eager localCheckpoint, so the documents
-    // scan lives in a plan the builder already executed: collect those
-    // through a listener, ended by a sentinel query (delivery is async
-    // but in order)
-    val executed = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        executed.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try for ((key, schemas) <- expected) {
-      val df = SparkEntry.queries(key)(spark, sf)
-      val sentinel = s"canary_end_$key"
-      spark.range(1).select(org.apache.spark.sql.functions.lit(sentinel)).collect()
-      val eager = Iterator.continually(executed.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map(qe => Option(qe).getOrElse(fail(s"$key: sentinel never reached the listener")))
-        .map(_.executedPlan).takeWhile(!_.toString.contains(sentinel)).toList
-      val all = (df.queryExecution.executedPlan :: eager).flatMap(nodes)
+    // scan lives in a plan the builder already executed (keyPlans)
+    for ((key, schemas) <- expected) {
+      val all = keyPlans(key).flatMap(nodes)
       val scans = all.collect { case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.getName.startsWith("documents")) =>
         s.requiredSchema.catalogString }
@@ -379,7 +390,33 @@ class PlanSpec extends AnyFunSuite {
       for (m <- maps)
         assert(!nodes(m).exists(x => x.isInstanceOf[Exchange] || x.isInstanceOf[QueryStageExec]),
           s"$key: an exchange sits between the documents scan and the decode\n$m")
-    } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("ranked top-k canary: no Window sits directly above a TopNPerKey in any s-family plan") {
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SortExec,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    // the final heap emits each key's survivors best-first and numbers
+    // them (topNPerGroupFast's rank): a window reached through only
+    // these row-preserving or row-dropping nodes would re-sort the
+    // survivors to derive the same number
+    def under(p: SparkPlan): SparkPlan = p match {
+      case q: QueryStageExec => under(q.plan)
+      case _: SortExec | _: ProjectExec | _: FilterExec | _: Exchange | _: AQEShuffleReadExec |
+          _: WholeStageCodegenExec | _: InputAdapter | _: WindowGroupLimitExec =>
+        under(p.children.head)
+      case other => other
+    }
+    val keys = SparkEntry.queries.keys.filter(_.matches("s\\d+_.*")).toSeq.sorted
+    assert(keys.size == 27, keys)
+    val reranked = keys.filter(k => keyPlans(k).flatMap(nodes).exists {
+      case w: WindowExec => under(w.child).isInstanceOf[graft.plans.TopNPerKeyExec]
+      case _ => false
+    })
+    assert(reranked.isEmpty, s"a Window re-ranks TopNPerKey survivors in $reranked")
   }
 
   test("d11: accuracy eval joins ride the bounded candidate set — no cross product") {

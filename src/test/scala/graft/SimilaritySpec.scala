@@ -259,7 +259,7 @@ class SimilaritySpec extends AnyFunSuite {
     val q = indexed.filter($"vec_id" === 10L)
     def top(ix: org.apache.spark.sql.DataFrame) =
       Similarity.searchAssigned(ix, q, "vec_id", "embedding", k = 2)
-        .orderBy($"rank").collect().map(_.getAs[Long]("neighbor_id")).toSeq
+        .orderBy($"rnk").collect().map(_.getAs[Long]("neighbor_id")).toSeq
     assert(top(indexed) == Seq(11L, 12L))
     val tomb = Seq(11L).toDF("vec_id")
     val masked = indexed.join(broadcast(tomb), Seq("vec_id"), "left_anti")

@@ -95,4 +95,40 @@ class TopNPerKeySpec extends AnyFunSuite {
       Seq("k"), Seq(("v", false)))
     assert(empty.count() == 0)
   }
+
+  test("operator rank == row_number over the same total order, keyed and keyless, 1 and 8 partitions") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // ties on v are broken by id, so the order is total
+    val base = spark.range(0, 600)
+      .select(($"id" % 7).as("k"), ($"id" * 37 % 11).as("v"), $"id")
+    for (parts <- Seq(1, 8); keyed <- Seq(true, false)) {
+      val df = base.repartition(parts)
+      val part = if (keyed) Seq("k") else Seq.empty
+      val fast = Relational.topNPerGroupFast(df, 9, part,
+          Seq(("v", false), ("id", true)), rank = Some("rnk"))
+      val rnk = fast.schema("rnk")
+      assert(rnk.dataType == org.apache.spark.sql.types.IntegerType && !rnk.nullable, rnk)
+      val w = Window.partitionBy(part.map(col): _*).orderBy($"v".desc, $"id")
+      val window = df.withColumn("rnk", row_number().over(w)).filter($"rnk" <= 9)
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select("k", "v", "id", "rnk").orderBy("k", "id", "rnk").collect().toSeq
+      assert(rows(fast) == rows(window), s"parts=$parts keyed=$keyed")
+      assert(fast.count() == (if (keyed) 63 else 9))
+    }
+  }
+
+  test("a ranked result self-joins: each side keeps its own rank column") {
+    import spark.implicits._
+    val df = spark.range(0, 40).select(($"id" % 4).as("k"), $"id".as("v"))
+    val top = Relational.topNPerGroupFast(df, 3, Seq("k"), Seq(("v", false)),
+      rank = Some("rnk"))
+    val pairs = top.as("a").join(top.as("b"), $"a.k" === $"b.k" && $"a.rnk" + 1 === $"b.rnk")
+      .select($"a.v" - $"b.v").collect().map(_.getLong(0)).toSeq
+    // ranks 1→2 and 2→3 in each of the 4 keys, each step 4 apart
+    assert(pairs == Seq.fill(8)(4L))
+    // the rank's placeholder value never leaks into a filter above
+    assert(top.filter($"rnk" === 2).count() == 4)
+    assert(top.filter($"rnk" <=> 0).count() == 0)
+  }
 }
