@@ -39,6 +39,11 @@ object GraftSession {
     .config("spark.sql.parquet.filterPushdown", "true")
     // write µs (not INT96) so emitted timestamps match DuckDB's TIMESTAMP
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // local files through java.nio instead of a `chmod`/`readlink` child
+    // process per create, mkdir and checkpoint rename (graft.sources.LocalFs)
+    .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.sources.ForklessLocalFs].getName)
 
   /** Shuffle-partition count for a bench/measurement run over `dir`:
     * scale with INPUT VOLUME, not a fixed thread count. The r14 sf10

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{AccountingSink, DerivedLayouts, Tables}
 import graft.streaming.HealthStream
 
 /** Batch-equivalent forms of the streaming jobs (SURVEY §2, st*). The
@@ -23,10 +23,12 @@ object StreamingQueries {
   private def streamSession(s0: SparkSession): SparkSession = {
     val s = s0.newSession()
     // 8, not 32 (r15): the feed's stateful agg keys are the handful of
-    // `kind` values — 32 state-store instances spent 4x the per-batch
-    // store commit/snapshot overhead to hold ~5 keys. A real deployment
-    // sizes state width to the KEY cardinality x rate, not the core
-    // count; 8 keeps headroom without the file churn.
+    // `kind` values, and each state-store instance writes a delta file
+    // (plus its checksum) per batch. Most of that per-file cost was a
+    // `chmod`/`readlink` child process per create and rename, which
+    // graft.sources.LocalFs removed; what is left is the file writes
+    // themselves. A real deployment sizes state width to the KEY
+    // cardinality x rate, not the core count.
     s.conf.set("spark.sql.shuffle.partitions", "8")
     s
   }
@@ -108,23 +110,12 @@ object StreamingQueries {
     // per-epoch rows are the output — the oracle's closed-form range sums
     // prove every epoch carries exactly its offset interval's rows.
     "st20_stream_sink" -> { (s, _) =>
-      import graft.sources.AccountingSink
       val runId = "st20_stream_sink"
       AccountingSink.clear(runId)
-      // fixed checkpoint path + delete (bench passes must not accumulate
+      // emptied per-JVM checkpoint (bench passes must not accumulate
       // /tmp checkpoints); recovery/replay semantics are StreamingSpec's
       // job — CORRECTNESS runs the clean 3-epoch ingest
-      val cp = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_st20_checkpoint")
-      // symlink-safe: File.isDirectory follows links, so recursing
-      // through a planted symlink under the fixed /tmp path would delete
-      // the TARGET's contents — unlink the link itself instead
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(cp)
+      val cp = DerivedLayouts.scratchDir("st20_checkpoint")
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
         .option("streamStep", "20000").load()
@@ -216,17 +207,9 @@ object StreamingQueries {
     // each progress event's (output rows, cumulative rows, cumulative
     // epochs) — closed-form from the offset arithmetic.
     "st24_sink_metrics" -> { (s, _) =>
-      import graft.sources.AccountingSink
       val runId = "st24_sink_metrics"
       AccountingSink.clear(runId)
-      val cp = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_st24_checkpoint")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(cp)
+      val cp = DerivedLayouts.scratchDir("st24_checkpoint")
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
         .option("streamStep", "20000").load()
@@ -262,16 +245,9 @@ object StreamingQueries {
     // accounting of the complete 30k-row feed, closed-form.
     "st25_continuous" -> { (s, _) =>
       s.catalog.dropTempView("st25_out")
-      // PID-scoped explicit checkpoint (st22's pattern): the r16
-      // completion gate reads the engine's offset log from it
-      val cp = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_st25_checkpoint_${ProcessHandle.current().pid()}")
-      def rmQ(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles).foreach(_.foreach(rmQ))
-        f.delete(); ()
-      }
-      rmQ(cp)
+      // explicit checkpoint: the r16 completion gate reads the engine's
+      // offset log from it
+      val cp = DerivedLayouts.scratchDir("st25_checkpoint")
       // TWO partitions, deliberately: continuous tasks OCCUPY their
       // slots for the query's lifetime, so the slot count must EXCEED
       // the partition count or any concurrent driver query on the same
@@ -343,17 +319,7 @@ object StreamingQueries {
     // are invisible in output parity but obvious in the store itself.
     "st22_state_reader" -> { (s0, _) =>
       val s = streamSession(s0)
-      // PID-scoped fixed dir: stable within a JVM (bench passes reuse
-      // it, rm-on-entry keeps /tmp bounded — the round-6 lesson) but
-      // two concurrent JVMs can never rm each other's LIVE checkpoint
-      val cp = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_st22_checkpoint_${ProcessHandle.current().pid()}")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-          Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(cp)
+      val cp = DerivedLayouts.scratchDir("st22_checkpoint")
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
         .option("streamStep", "20000").load()

@@ -30,16 +30,6 @@ object LogLines {
     when(lower(element_at(m, key)) === "true", true)
       .when(lower(element_at(m, key)) === "false", false)
 
-  /** Regex field extraction (getKeeperStats cons-line shape) — the
-    * general tool for free-form lines. For the cons line's regular
-    * `ip:port(k=v,...)` layout prefer the structural consMap/consIp/
-    * consPort parse below: one split pass instead of one regex scan
-    * per extracted field. */
-  def extractLong(line: Column, pattern: String): Column =
-    regexp_extract(line, pattern, 1).cast("long")
-  def extractString(line: Column, pattern: String): Column =
-    regexp_extract(line, pattern, 1)
-
   /** Structural parse of the keeper cons line
     * ` /[::ffff:ip]:port(k=v,k=v,...)` (chStats.py:275-295): three
     * substring_index cuts + ONE str_to_map pass. Extracting F fields

@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.Files
+import java.time.Instant
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Every declared query must run at sf0.001 and return rows; spot-check
   * known invariants. The DuckDB oracle parity is exercised by
@@ -11,12 +18,44 @@ class QueriesSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("every declared query runs and returns rows at sf0.001") {
+    // fork gate on the same loop, so no key runs an extra time: a JFR
+    // recording of process starts, none of which may come from Hadoop's
+    // Shell (the chmod/readlink that graft.sources.LocalFs replaces)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val windows = ArrayBuffer.empty[(String, Instant, Instant)]
+    // the context's start (and Shell's one-time `setsid` probe) is not a key's
+    spark.sparkContext
+    rec.start()
     // noop sink, not count(): every output column is evaluated (count()
     // lets Catalyst prune computed ones); rows ride the same write
-    val empty = SparkEntry.queries.flatMap { case (name, fn) =>
-      if (Harness.runNoop(spark, sf, fn)._1 == 0) Some(name) else None
-    }
+    val empty = try SparkEntry.queries.flatMap { case (name, fn) =>
+      val t0 = Instant.now()
+      val rows = Harness.runNoop(spark, sf, fn)._1
+      windows += ((name, t0, Instant.now()))
+      if (rows == 0) Some(name) else None
+    } finally rec.stop()
+    val jfr = Files.createTempFile("graft_forks", ".jfr")
+    val forks = try {
+      rec.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.toSeq.filter { e =>
+        Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell")))
+      }
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
     assert(empty.isEmpty, s"queries with zero rows: $empty")
+    if (forks.nonEmpty) {
+      val at = forks.map { e =>
+        val t = e.getStartTime
+        val key = windows.collectFirst {
+          case (k, a, b) if !t.isBefore(a) && !t.isAfter(b) => k
+        }
+        (e.getString("command").split(" ").head, key.getOrElse("(between keys)"))
+      }
+      fail(s"${forks.size} process starts through Hadoop's Shell, by command and key: " +
+        at.groupBy(identity).toSeq.sortBy(-_._2.size)
+          .map { case ((cmd, key), n) => s"${n.size}x $cmd in $key" }.mkString("; "))
+    }
   }
 
   test("driver smoke: entry returns rows") {
