@@ -8,6 +8,20 @@ import org.apache.spark.sql.SparkSession
   * splitting), UTC session time, and no hard-coded partition counts in any
   * operator — parallelism comes from the cluster config, so the same code
   * runs on local[32] and a 1000-executor cluster.
+  *
+  * Coalescing floor: under `parallelismFirst` (Spark's default) AQE
+  * coalesces a shuffle to partitions of
+  * `max(min(total / cores, advisory), minPartitionSize)` bytes. Spark's
+  * 1 MB floor merges every sub-MB shuffle into ONE partition, so a small
+  * input's post-shuffle work (m20's log-line parse) runs on one thread.
+  * graft lowers the floor to 16 KB: a shuffle smaller than
+  * cores × 1 MB now still spreads over the cores. A shuffle of
+  * cores × 1 MB or more is sized by `total / cores` or the advisory size
+  * alone, as before, and skew splitting never reads the floor, so the
+  * large shuffles that carry the work at sf ≥ 1 coalesce as they did.
+  * Smaller shuffles at sf ≥ 1 (partial aggregates, narrow key columns)
+  * do spread wider. The floor's cost is more tasks where the
+  * post-shuffle work is trivial.
   */
 object GraftSession {
 
@@ -20,6 +34,8 @@ object GraftSession {
     // revisit (~1.5× uniform slowdown measured on the interleaved bench)
     .config("spark.sql.codegen.cache.maxEntries", "5000")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    // coalescing floor (see the scaladoc above); Spark's default is 1 MB
+    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
     // spark.sql.codegen.hugeMethodLimit stays at its 65535 default —
     // PROBED in r15, do not "fix" it to HotSpot's 8000 JIT cutoff: the
     // fallback helped exactly one pathological stage (q85's inner-join

@@ -148,7 +148,7 @@ object PipelineQueries {
           cents, "vec_id", "embedding")
         .write.mode("overwrite").parquet(s"$p/index")
     }
-    val index = s.read.parquet(s"$base/index")
+    val index = Tables.parquet(s, s"$base/index")
     val delta = Similarity.indexWithCells(
         vecs.filter(pmod(col("vec_id"), lit(10)) === 0), cents,
         "vec_id", "embedding")
@@ -207,7 +207,7 @@ object PipelineQueries {
         .select(col("id_a"), col("id_b"))
         .write.parquet(s"$path/truth")
     }
-    s.read.parquet(s"$base/truth")
+    Tables.parquet(s, s"$base/truth")
   }
 
   /** t2's per-doc quality features — also a p27 curation gate. */
@@ -1245,11 +1245,11 @@ object PipelineQueries {
         repetitionFrame(docs).select(col("doc_id"), col("dup_tri_bp"))
           .write.parquet(s"$path/rep")
       }
-      val nd = s.read.parquet(s"$base/nd").withColumn("_nd", lit(1))
+      val nd = Tables.parquet(s, s"$base/nd").withColumn("_nd", lit(1))
       val sub = Dedup.substringDupReport(docs, "doc_id", "text", w = 16, stride = 1)
         .select(col("doc_id"), col("dup_bp"))
       val q = qualityFrame(docs).select(col("doc_id"), col("n_tokens"), col("quality"))
-      val rep = s.read.parquet(s"$base/rep")
+      val rep = Tables.parquet(s, s"$base/rep")
       docs.select(col("doc_id"))
         .join(nd, Seq("doc_id"), "left")
         .join(sub, Seq("doc_id"), "left")
@@ -2452,7 +2452,7 @@ object PipelineQueries {
       }
       // hybrid channel: s16's channels with the lexical one reading the
       // postings INDEX scan (query-time join + top-k)
-      val (lexTop20, vecTop) = hybridChannels(s, dir, s.read.parquet(s"$base/postings"))
+      val (lexTop20, vecTop) = hybridChannels(s, dir, Tables.parquet(s, s"$base/postings"))
       val hybridFace = rrfTop5(vecTop, "vec_rank", lexTop20, "lex_rank")
         .select(lit("hybrid").as("face"), col("query_id"), col("rnk"),
           col("doc_id").as("ref_id"))
@@ -2463,7 +2463,7 @@ object PipelineQueries {
       val q = vecs.filter(pmod(col("vec_id"), lit(50)) === 0 && col("vec_id") < 100000000L)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val walk = beamWalk(q.select(col("query_id")),
-        s.read.parquet(s"$base/edges"))(hopScore(vecs, q))
+        Tables.parquet(s, s"$base/edges"))(hopScore(vecs, q))
       val graphFace = Relational.topNPerGroupFast(
           walk.last._2.filter(col("node") =!= col("query_id")), 3,
           Seq("query_id"), Seq(("sim", false), ("node", true)), rank = Some("rnk"))
@@ -2987,8 +2987,8 @@ object PipelineQueries {
       val queries = Tables.embeddings(s, dir)
         .filter(pmod(col("vec_id"), lit(50)) === 25)
       Similarity.ivfPqServe(queries, "vec_id", "embedding",
-        s.read.parquet(s"$base/cents"), s.read.parquet(s"$base/book"),
-        s.read.parquet(s"$base/codes"), subs = 8, width = 8, k = 3)
+        Tables.parquet(s, s"$base/cents"), Tables.parquet(s, s"$base/book"),
+        Tables.parquet(s, s"$base/codes"), subs = 8, width = 8, k = 3)
         .orderBy(col("query_id"), col("rnk"))
     },
 

@@ -722,7 +722,7 @@ object RelationalQueries {
           .select(lit(fmt).as("format"), col("*"))
       aggOf(s.read.option("header", "true").schema(schema).csv(s"$base/csv"), "csv")
         .union(aggOf(s.read.schema(schema).json(s"$base/json"), "json"))
-        .union(aggOf(s.read.orc(s"$base/orc"), "orc"))
+        .union(aggOf(s.read.schema(schema).orc(s"$base/orc"), "orc"))
         .orderBy($"format")
     },
 
@@ -1485,7 +1485,7 @@ object RelationalQueries {
             .select((col("doc_id") + 1000000000L).as("doc_id"), col("text")))
           .write.parquet(s"$path/v2")
       }
-      def hashed(v: String) = s.read.parquet(s"$base/$v")
+      def hashed(v: String) = Tables.parquet(s, s"$base/$v")
         .select(col("doc_id"), md5(col("text")).as(s"h_$v"),
           length(col("text")).as(s"len_$v"))
       hashed("v1").join(hashed("v2"), Seq("doc_id"), "full_outer")
@@ -1529,8 +1529,8 @@ object RelationalQueries {
             .select((col("doc_id") + 1000000000L).as("doc_id"),
               lit("insert").as("op"), col("text").as("new_text")))
           .write.parquet(s"$path/changes")
-        val merged = s.read.parquet(s"$path/v1")
-          .join(s.read.parquet(s"$path/changes"), Seq("doc_id"), "full_outer")
+        val merged = Tables.parquet(s, s"$path/v1")
+          .join(Tables.parquet(s, s"$path/changes"), Seq("doc_id"), "full_outer")
           .withColumn("action", coalesce(col("op"), lit("unchanged")))
         merged.filter(col("action") =!= "delete")
           .select(col("doc_id"),
@@ -1544,13 +1544,13 @@ object RelationalQueries {
               .otherwise(length(col("new_text")))).as("chars_after"))
           .write.parquet(s"$path/accounting")
       }
-      def face(v: String) = s.read.parquet(s"$base/$v")
+      def face(v: String) = Tables.parquet(s, s"$base/$v")
         .agg(count(lit(1)).as("n_rows"),
           sum(expr("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), " +
             "'|', text)), 1, 6), 16, 10) AS BIGINT)")).as("digest"))
         .select(lit(v).as("action"), col("n_rows"),
           lit(null).cast("long").as("chars_after"), col("digest"))
-      s.read.parquet(s"$base/accounting")
+      Tables.parquet(s, s"$base/accounting")
         .withColumn("digest", lit(null).cast("long"))
         .unionByName(face("v1")).unionByName(face("v2"))
         .orderBy(col("action"))

@@ -390,7 +390,7 @@ object SamplingQueries {
         Tables.events(s, dir).withColumn("day", to_date(col("ts")))
           .write.mode("overwrite").partitionBy("day").parquet(s"$p/events")
       }
-      s.read.parquet(s"$base/events")
+      Tables.parquet(s, s"$base/events")
         .filter(col("day").between("2024-01-05", "2024-01-07"))
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -415,7 +415,7 @@ object SamplingQueries {
         Tables.events(s, dir).withColumn("day", to_date(col("ts")))
           .write.mode("overwrite").partitionBy("day").parquet(s"$p/events")
       }
-      val fact = s.read.parquet(s"$base/events")
+      val fact = Tables.parquet(s, s"$base/events")
       // "audit days" dim: one day per region-1 nation (runtime-only set)
       val dim = Tables.nation(s, dir)
         .filter(col("n_regionkey") === 1)
@@ -709,7 +709,7 @@ object SamplingQueries {
           .write.partitionBy("shard").parquet(s"$path/small")
         // EXECUTE p14's plan over the small-file SNAPSHOT: shard stats
         // → cumulative-byte bins (20000-char target) → one file per bin
-        val small = s.read.parquet(s"$path/small")
+        val small = Tables.parquet(s, s"$path/small")
         val w = Window.orderBy(col("shard"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val bins = small.groupBy(col("shard"))
@@ -722,7 +722,7 @@ object SamplingQueries {
           .write.partitionBy("bin").parquet(s"$path/compacted")
       }
       def face(name: String, sub: String): DataFrame =
-        s.read.parquet(s"$base/$sub")
+        Tables.parquet(s, s"$base/$sub")
           .withColumn("_dig",
             expr("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), " +
               "'|', text)), 1, 6), 16, 10) AS BIGINT)"))
@@ -764,7 +764,7 @@ object SamplingQueries {
           .repartition(16, col("shard"))
           .write.partitionBy("shard").parquet(s"$path/shards")
       }
-      s.read.parquet(s"$base/shards")
+      Tables.parquet(s, s"$base/shards")
         .withColumn("_dig",
           expr("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), " +
             "'|', text)), 1, 6), 16, 10) AS BIGINT)"))
@@ -868,7 +868,7 @@ object SamplingQueries {
           .withColumn("shard", pmod(col("doc_id"), lit(40)).cast("int"))
         docs.repartition(40, col("shard"))
           .write.partitionBy("shard").parquet(s"$path/small")
-        val small = s.read.parquet(s"$path/small")
+        val small = Tables.parquet(s, s"$path/small")
         val w = Window.orderBy(col("shard"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val bins = small.groupBy(col("shard"))
@@ -895,7 +895,7 @@ object SamplingQueries {
         import s.implicits._
         Seq(deleted).toDF("n_reclaimed").write.parquet(s"$path/reclaim")
       }
-      val active = s.read.parquet(s"$base/compacted")
+      val active = Tables.parquet(s, s"$base/compacted")
         .withColumn("_dig",
           expr("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), " +
             "'|', text)), 1, 6), 16, 10) AS BIGINT)"))
@@ -904,7 +904,7 @@ object SamplingQueries {
           count(lit(1)).as("n_docs"), sum(col("_dig")).as("digest"))
         .select(lit("active").as("face"), col("n_files"), col("n_docs"),
           col("digest"))
-      val reclaim = s.read.parquet(s"$base/reclaim")
+      val reclaim = Tables.parquet(s, s"$base/reclaim")
         .select(lit("reclaimed").as("face"), col("n_reclaimed").as("n_files"),
           lit(0L).as("n_docs"), lit(null).cast("long").as("digest"))
       active.unionByName(reclaim).orderBy(col("face"))

@@ -359,7 +359,7 @@ object StreamingQueries {
             "doc_id", "text", bands = 4, rows = 2, maxBucket = 64)
           .write.parquet(s"$path/index")
       }
-      val index = s.read.parquet(s"$base/index")
+      val index = Tables.parquet(s, s"$base/index")
       val batch = Tables.documents(s, dir).filter(expr("doc_id % 5 = 4"))
       Dedup.neardupIngestGate(batch, index, "doc_id", "text",
           bands = 4, rows = 2, threshold = 0.3)

@@ -22,7 +22,7 @@ object DerivedLayouts {
   /** Symlink-safe recursive delete: File.isDirectory follows links, so
     * recursing through a planted symlink would delete the TARGET's
     * contents — unlink the link itself instead. */
-  private def rm(f: File): Unit = {
+  private[graft] def rm(f: File): Unit = {
     if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles).foreach(_.foreach(rm))
     f.delete(); ()

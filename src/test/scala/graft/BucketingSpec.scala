@@ -23,7 +23,7 @@ class BucketingSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("bucketed tables join with zero exchanges") { withNoBroadcast {
-    val base = java.nio.file.Files.createTempDirectory("graft_bkt")
+    val base = TempDirs("graft_bkt")
     Tables.lineitem(spark, sf).write.mode("overwrite")
       .bucketBy(4, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$base/li").saveAsTable("li_bucketed")
@@ -42,7 +42,7 @@ class BucketingSpec extends AnyFunSuite {
   }}
 
   test("partition pruning skips non-matching partitions at scan time") {
-    val base = java.nio.file.Files.createTempDirectory("graft_part")
+    val base = TempDirs("graft_part")
     Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day")

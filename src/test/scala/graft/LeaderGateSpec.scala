@@ -11,7 +11,7 @@ import graft.streaming.{HealthStream, LeaderGate}
 class LeaderGateSpec extends AnyFunSuite {
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_lease").toString
+    TempDirs("graft_lease").toString
 
   test("single leader: second contender is refused while lease is live") {
     val dir = tmp()
@@ -64,7 +64,7 @@ class LeaderGateSpec extends AnyFunSuite {
   test("two identical streaming jobs: one sink writes; failover works") {
     val spark = GraftSession.local()
     val sf = "/root/testdata/sf0.001"
-    val src = java.nio.file.Files.createTempDirectory("graft_ha_src")
+    val src = TempDirs("graft_ha_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       src.resolve("events_1.parquet"))
@@ -82,7 +82,7 @@ class LeaderGateSpec extends AnyFunSuite {
           HealthStream.readEventStream(spark, src.toString))
         .writeStream.outputMode("update")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft_ha_$name").toString)
+          TempDirs(s"graft_ha_$name").toString)
         .foreachBatch(gate.gatedBatch(
           (b, _) => writes.add((gate.id, b.count()))))
         .start()

@@ -451,7 +451,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     // counts 1,1,1,1 / 2,2 / 4 → octaves 0,1,2 with n_types 4,2,1 →
     // y = floor_log2(n_types) = 2,1,0: a perfect slope of −1 per octave
-    val dir = java.nio.file.Files.createTempDirectory("graft_t23").toString
+    val dir = TempDirs("graft_t23").toString
     Seq((1L, "w1 w2 w3 w4 x1 x1 x2 x2 y y y y"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -469,7 +469,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     // 4 docs → quartile = doc_id; 'a' first in q0, 'c' in q1, 'd' in
     // q2, 'e' in q3 — re-appearances never re-count as new types
-    val dir = java.nio.file.Files.createTempDirectory("graft_t24").toString
+    val dir = TempDirs("graft_t24").toString
     Seq((0L, "a b"), (1L, "a c"), (2L, "c d"), (3L, "a d e"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -1127,7 +1127,7 @@ class PlanSpec extends AnyFunSuite {
     // freshness: a registration whose fact fingerprint no longer matches
     // the live listing vetoes (register against a copy, then append a
     // file to the copy — the MV is silently stale and must not answer)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mvfresh").toString
+    val tmp = TempDirs("graft_mvfresh").toString
     val factCopy = s"$tmp/factcopy.parquet"
     graft.sources.Tables.lineitem(spark, sf).write.parquet(factCopy)
     val mvPath = s"$tmp/mv"

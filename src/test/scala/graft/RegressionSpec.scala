@@ -27,7 +27,7 @@ class RegressionSpec extends AnyFunSuite {
     // a regression in Spark's nanos footer handling would not be
     // caught here
     val us = 1704110400000000L // 2024-01-01 12:00:00 UTC
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsforms")
+    val dir = TempDirs("graft_tsforms")
     Seq((1L, us * 1000L + 999L, 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/ns/events.parquet") // Long column = the ns form
@@ -289,7 +289,7 @@ class RegressionSpec extends AnyFunSuite {
     // throw (aggregate() HOF on a never-built array, window over zero
     // rows, a split draw on nothing)
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_empty")
+    val base = TempDirs("graft_empty")
     // events with NO error rows (st14 filters to errors first)
     Seq((1L, 1706000000000000L, 7L, "view", 1.0, "{}"))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")

@@ -52,7 +52,7 @@ class SamplingSpec extends AnyFunSuite {
     val lens = Seq(130L, 130L, 126L, 126L)
     // the local dir is ignored by this fixture path: call the fold via
     // a temp view of the fixture through the real query body
-    val tmp = java.nio.file.Files.createTempDirectory("ffdfix").toString
+    val tmp = TempDirs("ffdfix").toString
     docs.select(col("doc_id"), col("text"), col("lang"),
         length(col("text")).as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -226,7 +226,7 @@ class SamplingSpec extends AnyFunSuite {
     // 4600 bp — sorted LOSES here (the tail lands in the partial
     // batch), which is exactly why the eval exists: the answer is
     // data-dependent, so it must be priced, not assumed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_p19").toString
+    val dir = TempDirs("graft_p19").toString
     val lens = Seq(10, 1, 10, 1, 10, 1, 10, 1, 5, 5)
     lens.zipWithIndex.map { case (n, i) =>
       ((i + 1).toLong, "en", Seq.fill(n)("w").mkString(" "))

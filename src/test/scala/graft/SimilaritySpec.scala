@@ -177,7 +177,7 @@ class SimilaritySpec extends AnyFunSuite {
       .sortBy(t => (t._1, t._2)).toSeq
     // build the artifact, round-trip it through parquet, serve the SAME
     // query batch — identical answers, zero retraining at serve time
-    val dir = java.nio.file.Files.createTempDirectory("graft_s27_spec").toString
+    val dir = TempDirs("graft_s27_spec").toString
     val (ivfCents, book, codes) = Similarity.ivfPqIndex(
       vecs, "vec_id", "embedding", cents, subs = 8, width = 8, pqK = 16, iters = 2)
     ivfCents.write.parquet(s"$dir/cents")

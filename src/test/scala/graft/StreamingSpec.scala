@@ -14,7 +14,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming windowed health == batch windowed health") {
     // file stream source requires a directory: stage the table file
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = TempDirs("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -32,7 +32,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("ingest quality gate: streaming == batch; state is sources×2 rows regardless of volume") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream")
+    val dir = TempDirs("graft_docs_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"))
@@ -61,7 +61,7 @@ class StreamingSpec extends AnyFunSuite {
     // it — enrichRefreshable re-reads the dim per batch, so batch N+1
     // reflects a dim overwrite with no stream restart
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_dimref")
+    val base = TempDirs("graft_dimref")
     val srcDir = s"$base/src"; val dimDir = s"$base/dim"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     Seq((101L, "node-a")).toDF("node_id", "node_name")
@@ -96,7 +96,7 @@ class StreamingSpec extends AnyFunSuite {
     // side per batch, this fails — then the foreachBatch re-read in
     // enrichRefreshable can be retired for the plain join.
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_dimstale")
+    val base = TempDirs("graft_dimstale")
     val srcDir = s"$base/src"; val dimDir = s"$base/dim"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     Seq((101L, "node-a")).toDF("node_id", "node_name")
@@ -123,7 +123,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sliding-window rate: streaming == batch (overlapping windows)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_slide")
+    val dir = TempDirs("graft_slide")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -142,7 +142,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed distinct users: chained dedup + agg streaming == batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_distinct")
+    val dir = TempDirs("graft_distinct")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -166,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
     // keyed on an extracted window-start alias the state never evicts
     // and this assertion fails with all 10 stale keys still held
     def ns(min: Long) = 1704110400000000L + min * 60000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_devict")
+    val dir = TempDirs("graft_devict")
     def mkBatch(rows: Seq[(Long, Long, Long)], path: String): Unit =
       rows.map { case (id, t, u) => (id, t, u, "view", 1.0, "{}") }
         .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
@@ -200,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed HLL distinct: streaming == batch (64-long state per window)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll")
+    val dir = TempDirs("graft_hll")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -230,7 +230,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed CMS watchlist: streaming == batch; estimate never under the true count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms")
+    val dir = TempDirs("graft_cms")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -271,7 +271,7 @@ class StreamingSpec extends AnyFunSuite {
     // hold exactly one row per WINDOW no matter how many distinct keys
     // stream through it
     def ns(min: Long) = 1704110400000000L + min * 60000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmsstate")
+    val dir = TempDirs("graft_cmsstate")
     (1L to 500L).map(u => (u, ns(u % 10), u, "view", 1.0, "{}"))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
       .select($"event_id",
@@ -293,7 +293,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed p95 histogram: streaming == batch (17-long state per window)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_p95")
+    val dir = TempDirs("graft_p95")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -311,7 +311,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed domain-free p95: streaming == batch (63-long octave state per window)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_logp95")
+    val dir = TempDirs("graft_logp95")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -347,7 +347,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static enrich: streaming windowed enrich == batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich")
+    val dir = TempDirs("graft_enrich")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -368,12 +368,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("event sink lands PH_SYSTEM payload lines per micro-batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink")
+    val dir = TempDirs("graft_sink")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_out")
-    val chk = java.nio.file.Files.createTempDirectory("graft_sink_chk")
+    val out = TempDirs("graft_sink_out")
+    val chk = TempDirs("graft_sink_chk")
     val stream = HealthStream.readEventStream(spark, dir.toString)
     val q = graft.streaming.EventSink.start(
       HealthStream.windowedHealth(stream), out.toString, chk.toString, mode = "complete")
@@ -388,7 +388,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-stream LEFT OUTER funnel: unmatched clicks emit after the watermark") {
     import spark.implicits._
     val ev = Tables.events(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_outer")
+    val dir = TempDirs("graft_outer")
     ev.write.parquet(s"$dir/f1")
     // sentinel click+error for two disjoint fake users, 3 h past the
     // end of data: they advance BOTH sides' watermarks (each passes its
@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/f*")
-    val chk = java.nio.file.Files.createTempDirectory("graft_outer_chk")
+    val chk = TempDirs("graft_outer_chk")
     val q = HealthStream.clickErrorFunnelOuter(stream, stream, windowMinutes = 10)
       .writeStream.outputMode("append")
       .option("checkpointLocation", chk.toString)
@@ -427,7 +427,7 @@ class StreamingSpec extends AnyFunSuite {
   test("incremental multi-batch stream == batch (checkpointed file source)") {
     import spark.implicits._
     val ev = Tables.events(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr")
+    val dir = TempDirs("graft_incr")
     // two arrival batches
     ev.filter($"event_id" < 500).write.parquet(s"$dir/f1")
     ev.filter($"event_id" >= 500).write.parquet(s"$dir/f2")
@@ -440,7 +440,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/f*")
-    val chk = java.nio.file.Files.createTempDirectory("graft_incr_chk")
+    val chk = TempDirs("graft_incr_chk")
     val q = HealthStream.windowedHealth(stream)
       .writeStream.outputMode("complete")
       .option("checkpointLocation", chk.toString)
@@ -484,7 +484,7 @@ class StreamingSpec extends AnyFunSuite {
   test("st22: statestore batch read == the in-flight aggregation; batchId option time-travels state") {
     import org.apache.spark.sql.functions._
     // 3 admission epochs of 3000 rows through a streaming agg
-    val chk = java.nio.file.Files.createTempDirectory("graft_st22_spec")
+    val chk = TempDirs("graft_st22_spec")
     val q = spark.readStream.format("graft.sources.MetricsFeedSource")
       .option("rows", "9000").option("partitions", "4")
       .option("streamStep", "3000").load()
@@ -529,8 +529,8 @@ class StreamingSpec extends AnyFunSuite {
     // files), so if aggregate state were NOT restored, every window
     // would be missing f1's counts and the batch compare below fails.
     val ev = Tables.events(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_recover")
-    val chk = java.nio.file.Files.createTempDirectory("graft_recover_chk")
+    val dir = TempDirs("graft_recover")
+    val chk = TempDirs("graft_recover_chk")
     val schema = org.apache.spark.sql.types.StructType(
       graft.streaming.HealthStream.eventSchema.map {
         case f if f.name == "ts" => f.copy(dataType = org.apache.spark.sql.types.TimestampType)
@@ -567,8 +567,8 @@ class StreamingSpec extends AnyFunSuite {
     // contract as the heap-provider recovery test above).
     import spark.implicits._
     val ev = Tables.events(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_chlog")
-    val chk = java.nio.file.Files.createTempDirectory("graft_chlog_chk")
+    val dir = TempDirs("graft_chlog")
+    val chk = TempDirs("graft_chlog_chk")
     val schema = org.apache.spark.sql.types.StructType(
       graft.streaming.HealthStream.eventSchema.map {
         case f if f.name == "ts" => f.copy(dataType = org.apache.spark.sql.types.TimestampType)
@@ -606,7 +606,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming ingest dedup: dropDuplicatesWithinWatermark emits each key once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup")
+    val dir = TempDirs("graft_sdedup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -628,7 +628,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream funnel join == batch funnel join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel")
+    val dir = TempDirs("graft_funnel")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -654,7 +654,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // 2024-01-01 12:00 UTC in µs; windowedHealth = 5-min windows, 1h watermark
     def ns(min: Long) = 1704110400000000L + min * 60000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_late")
+    val dir = TempDirs("graft_late")
     def mkBatch(rows: Seq[(Long, Long)], path: String): Unit =
       rows.map { case (id, t) => (id, t, 1L, "view", 1.0, "{}") }
         .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
@@ -687,7 +687,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("multi-cadence jobs off one source: 3- and 30-minute streams both match batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cadence")
+    val dir = TempDirs("graft_cadence")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -709,12 +709,12 @@ class StreamingSpec extends AnyFunSuite {
 
   test("JDBC sink round-trip: stream → Derby → read-back == batch; replay is idempotent") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jdbc")
+    val dir = TempDirs("graft_jdbc")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
-    val chk = java.nio.file.Files.createTempDirectory("graft_jdbc_chk")
-    val db = java.nio.file.Files.createTempDirectory("graft_derby").resolve("db")
+    val chk = TempDirs("graft_jdbc_chk")
+    val db = TempDirs("graft_derby").resolve("db")
     val url = s"jdbc:derby:$db;create=true"
     val table = "graft_payloads"
 
@@ -752,12 +752,12 @@ class StreamingSpec extends AnyFunSuite {
     // the checkpoint, and asserts the replayed delete-then-insert heals
     // the partial garbage to exactly-once state.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_partial")
+    val dir = TempDirs("graft_partial")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
-    val chk = java.nio.file.Files.createTempDirectory("graft_partial_chk")
-    val db = java.nio.file.Files.createTempDirectory("graft_partial_derby").resolve("db")
+    val chk = TempDirs("graft_partial_chk")
+    val db = TempDirs("graft_partial_derby").resolve("db")
     val url = s"jdbc:derby:$db;create=true"
     val table = "graft_partial_payloads"
     graft.streaming.JdbcSink.ensureTable(url, table)
@@ -813,7 +813,7 @@ class StreamingSpec extends AnyFunSuite {
     // user 1: events at t+0 and t+5min (one session, split across two
     // micro-batches), then silent. user 2: a lone event at t+200min that
     // drives the watermark past user 1's gap horizon.
-    val dir = java.nio.file.Files.createTempDirectory("graft_state")
+    val dir = TempDirs("graft_state")
     Seq((1L, 1L, min(0))).toDF("user_id", "event_id", "ts_us")
       .coalesce(1).write.parquet(s"$dir/f1")
     Seq((1L, 2L, min(5)), (2L, 3L, min(200))).toDF("user_id", "event_id", "ts_us")
@@ -845,7 +845,7 @@ class StreamingSpec extends AnyFunSuite {
     // the provider a large deployment runs (state lives off-heap/on-disk
     // instead of executor heap) — emitted results must be identical to
     // the default HDFS-backed provider on the same stream
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocks")
+    val dir = TempDirs("graft_rocks")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -879,7 +879,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("st14: transformWithState alert cooldown — alerts exact, ValueState survives micro-batches (RocksDB)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_tws")
+    val base = TempDirs("graft_tws")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     // cooldown = 10 min = 600e6 µs. user 1: alert at t0, suppressed at
@@ -921,7 +921,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("st16: ListState trigram buffer carries across micro-batches — the straddling pattern emits") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_seq")
+    val base = TempDirs("graft_tws_seq")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val t0 = 1000000000L
@@ -960,7 +960,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("st17: MapState profile — cumulative counts across batches; untouched cells do NOT re-emit") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_prof")
+    val base = TempDirs("graft_tws_prof")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val t0 = 1000000000L
@@ -1005,7 +1005,7 @@ class StreamingSpec extends AnyFunSuite {
     // in two ts-ordered micro-batches through the ValueState counters,
     // must emit row-for-row the features p20's exclusive batch window
     // materializes offline
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_feat")
+    val base = TempDirs("graft_tws_feat")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val ev = graft.sources.Tables.events(spark, sf)
@@ -1049,7 +1049,7 @@ class StreamingSpec extends AnyFunSuite {
     // state, valid_from); the batch m52 owns valid_to. The capture
     // must agree with the batch history row-for-row on those columns —
     // across micro-batches, with versions continuing through state.
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_scd2")
+    val base = TempDirs("graft_tws_scd2")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val ev = graft.sources.Tables.events(spark, sf)
@@ -1086,7 +1086,7 @@ class StreamingSpec extends AnyFunSuite {
     // pins the platform constraint the st14 docs claim; if Spark ever
     // lifts it, this fails and the docs should drop the requirement
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_twsheap")
+    val base = TempDirs("graft_twsheap")
     val srcDir = s"$base/src"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     Seq((1L, 1L, 1000000000L)).toDF("user_id", "event_id", "ts_us")
@@ -1114,7 +1114,7 @@ class StreamingSpec extends AnyFunSuite {
     // must reinvent source tracking)
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory("graft_avnow")
+    val base = TempDirs("graft_avnow")
     val srcDir = s"$base/src"; val chk = s"$base/chk"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val seen = scala.collection.mutable.ArrayBuffer[Long]()
@@ -1144,7 +1144,7 @@ class StreamingSpec extends AnyFunSuite {
     // expired timer emits NodeDown(2) — node 1, still inside its
     // deadline, must NOT emit.
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_wdog")
+    val base = TempDirs("graft_wdog")
     val srcDir = s"$base/src"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val t0 = 1700000000000000L // µs
@@ -1182,7 +1182,7 @@ class StreamingSpec extends AnyFunSuite {
     // unbounded backlog into one batch (per-batch state/shuffle must be
     // sized for the trigger, not for however long the stream was down)
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_mfpt")
+    val base = TempDirs("graft_mfpt")
     val srcDir = s"$base/src"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     (1 to 3).foreach { i =>
@@ -1206,7 +1206,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val docs = Tables.documents(spark, sf)
     // build the serving index ONCE (the DerivedLayouts cost model)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ndidx").toString + "/index"
+    val idxDir = TempDirs("graft_ndidx").toString + "/index"
     Dedup.neardupServingIndex(docs.filter(expr("doc_id % 5 != 4")),
       "doc_id", "text", bands = 4, rows = 2, maxBucket = 64)
       .write.parquet(idxDir)
@@ -1219,9 +1219,9 @@ class StreamingSpec extends AnyFunSuite {
       expected.exists(_.getAs[Int]("is_dup") == 0),
       "gate must both flag and clear on this corpus or the parity proves nothing")
     // stage arrivals as TWO files → two micro-batches (maxFilesPerTrigger=1)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ndstream")
+    val srcDir = TempDirs("graft_ndstream")
     Seq("doc_id % 10 = 4", "doc_id % 10 = 9").zipWithIndex.foreach { case (p, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ndpart").toString + "/p"
+      val tmp = TempDirs("graft_ndpart").toString + "/p"
       batchDocs.filter(expr(p)).coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -1271,7 +1271,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.AccountingSink
     val runId = "st20spec"
     AccountingSink.clear(runId)
-    val cpDir = java.nio.file.Files.createTempDirectory("graft_st20spec").toFile
+    val cpDir = TempDirs("graft_st20spec").toFile
     def run(rows: Int): Unit = {
       val q = spark.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", rows.toString).option("partitions", "4")
@@ -1338,7 +1338,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.{AccountingSink, AccountingTable}
     val runId = "st24spec"
     AccountingSink.clear(runId)
-    val cpDir = java.nio.file.Files.createTempDirectory("graft_st24spec").toFile
+    val cpDir = TempDirs("graft_st24spec").toFile
     def run(): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = spark.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
