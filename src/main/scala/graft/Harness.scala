@@ -14,8 +14,10 @@ import scala.util.Try
   *   keys                                         every key, sorted
   * Trailing keys select a subset (no keys = every key); an unknown key
   * fails before any work. Every subcommand builds its session through
-  * `session` and picks keys through `select`; bench and smoke evaluate
-  * a key through `runNoop`. `graft.Bench` and `graft.Verify` are the
+  * `session` and picks keys through `select` (from `SparkEntry`'s
+  * registry); bench and smoke evaluate a key through `runNoop`. The one
+  * key list kept here is `headline`; which keys a scale bench skips is
+  * each record's `baseline` flag. `graft.Bench` and `graft.Verify` are the
   * fixed-name entry points into `bench` and `verify`.
   * Usage: `sbt "runMain graft.Harness smoke <sfDir>"`, or
   * `tools/run_main.sh graft.Harness ...` from compiled classes.
@@ -170,30 +172,19 @@ object Harness {
   /** SURVEY §6 headline set — inlined in the compact line. The original
     * six are sub-second overhead-bound keys; the six after them are the
     * suite's heaviest, where parallelism and optimization wins show. */
-  private val headline = Seq("q1_pricing_summary", "q3_join_agg",
+  val headline = Seq("q1_pricing_summary", "q3_join_agg",
     "q4_broadcast_join", "d3_minhash_lsh", "s1_ann_brute", "t2_quality",
     "d20_prefix_simjoin", "q37_format_roundtrip", "t17_embed_fidelity",
     "s11_ann_pq", "q56_sketch_join_strategy", "t27_bpe_batch")
 
   /** SPARK_GRAFT_BENCH_SKIP_BASELINES=1 — scale-run cost control
-    * (SF≥1): drop the DECLARED-quadratic correctness baselines and the
-    * byte-linear I/O roundtrip, which dominate sf1 wall time while
-    * measuring nothing about the scale paths. sf0.1 benches never set
-    * this. The set is exactly the keys SURVEY documents as baselines:
-    * brute-force ANN (s1/s4/s5 truth+eval, s7's coarse stage, s8's
-    * diversity input), s11's all-codes ADC scan, q37's 3-write/3-read
-    * roundtrip, and d11/d18/d20, whose OUTPUT grows ~quadratically
-    * under ScaleUp's cloning (every doc cloned → true near-dup pairs
-    * multiply; d20's completeness contract must verify every one). */
-  private val declaredBaselines = Set("s1_ann_brute", "s4_ann_quantized",
-    "s5_ann_recall", "s7_ann_rerank", "s8_topk_diversity", "s11_ann_pq",
-    "s17_hybrid_recall", // brute ground truth, like s5
-    "s20_hybrid_complement", // exact tf-cosine truth, like s17/t17
-    "t17_embed_fidelity", // exact term-space cosine truth + dense-width dot, like s5
-    "d21_lsh_recall",    // runs d20's exact join as its truth
-    "d22_banding_sweep", // same exact-join truth as d21
-    "q37_format_roundtrip", "d18_incremental_dedup", "d11_minhash_accuracy",
-    "d20_prefix_simjoin")
+    * (SF≥1): drop the keys whose record sets `baseline` (the
+    * DECLARED-quadratic correctness baselines and the byte-linear I/O
+    * roundtrip; each record's comment says why). They dominate sf1 wall
+    * time while measuring nothing about the scale paths. sf0.1 benches
+    * never set this. */
+  lazy val baselines: Set[String] =
+    SparkEntry.registry.values.filter(_.baseline).map(_.name).toSet
 
   private val fullPath = "/tmp/graft_bench_full.json"
 
@@ -211,7 +202,7 @@ object Harness {
       .getOrElse(5).max(1)
     val skipBaselines = sys.env.get("SPARK_GRAFT_BENCH_SKIP_BASELINES")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val ordered = keys.filterNot { case (n, _) => skipBaselines && declaredBaselines(n) }
+    val ordered = keys.filterNot { case (n, _) => skipBaselines && baselines(n) }
     // JIT/codegen warmup so the first measured queries don't absorb JVM
     // startup (hash agg, shuffle, md5/regex/string/window codepaths).
     spark.range(2000000)

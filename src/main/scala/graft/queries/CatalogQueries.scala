@@ -28,7 +28,7 @@ object CatalogQueries {
     s
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def keys: Seq[QueryKey] = Seq(
 
     // TableCatalog plugin (the named-table surface): corpus tables
     // resolve as graft.corpus.<name> from PURE SQL, and snapshot
@@ -41,7 +41,20 @@ object CatalogQueries {
     // PushedFilters to the path scan, and that the plan carries the
     // catalog identifier), and a cross-table join leg (documents ⋈
     // embeddings, both catalog-resolved).
-    "q63_table_catalog" -> { (s0, dir) =>
+    QueryKey("q63_table_catalog",
+      """SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum(n_chars) AS BIGINT) AS mass
+        |FROM documents WHERE doc_id % 10 <> 7
+        |UNION ALL
+        |SELECT 2, CAST(count(*) AS BIGINT), CAST(sum(n_chars) AS BIGINT)
+        |FROM documents
+        |UNION ALL
+        |SELECT 3, CAST(count(*) AS BIGINT), CAST(sum(n_chars) AS BIGINT)
+        |FROM documents WHERE lang = 'en'
+        |UNION ALL
+        |SELECT 4, CAST(count(*) AS BIGINT), CAST(sum(CAST(e.label AS BIGINT)) AS BIGINT)
+        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
+        |ORDER BY leg""".stripMargin) { (s0, dir) =>
       val s = catalogSession(s0, dir)
       // build the versioned layout before analysis resolves VERSION AS OF
       graft.sources.SnapshotLayout.ensure(s, dir)
@@ -69,7 +82,21 @@ object CatalogQueries {
     // expressions use (PlanSpec: zero ScalaUDF, zero
     // ApplyFunctionExpression row-boxing fallback). round(cos, 6) is
     // the proven cross-engine finish (s1 family).
-    "q64_fn_catalog" -> { (s0, dir) =>
+    QueryKey("q64_fn_catalog",
+      """WITH v AS (SELECT vec_id, embedding AS e,
+        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
+        |  FROM embeddings)
+        |SELECT d.doc_id,
+        |  CAST(len(regexp_extract_all(d.text, '[A-Za-z]+|[0-9]+')) AS INT) AS n_tokens,
+        |  round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
+        |    CAST(a.e[i] AS DOUBLE) * CAST(b.e[i] AS DOUBLE))) / sqrt(a.n2 * b.n2), 6) AS sim_next,
+        |  CAST(bit_count(xor((d.doc_id % 1000000) * 2654435761,
+        |    (d.doc_id % 1000000) * 2654435761 + d.doc_id % 7)) AS INT) AS ham
+        |FROM documents d
+        |JOIN v a ON a.vec_id = d.doc_id
+        |JOIN v b ON b.vec_id = d.doc_id + 1
+        |WHERE d.doc_id % 10 = 0
+        |ORDER BY d.doc_id""".stripMargin) { (s0, dir) =>
       val s = catalogSession(s0, dir)
       s.sql("""
         SELECT d.doc_id,
@@ -98,7 +125,18 @@ object CatalogQueries {
     // atomic swap. Output: the surviving rows' per-kind accounting —
     // closed-form from the feed formulas, so a delete that dropped too
     // much, too little, or double-applied breaks the hash.
-    "q67_connector_delete" -> { (s0, _) =>
+    QueryKey("q67_connector_delete",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  min(id) AS min_id, max(id) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 100000) t(id)) u
+        |WHERE NOT (kind = 'timer' OR id >= 90000)
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics67")
       s.sql("CREATE TABLE graft.mem.metrics67 " +
@@ -135,7 +173,24 @@ object CatalogQueries {
     // UPDATE shifts every gauge by +1,000,000 → MERGE overlays ids
     // [15000, 40000) with doubled values (matched rows update,
     // unmatched insert) → per-kind accounting, closed-form oracle.
-    "q71_update_rewrite" -> { (s0, _) =>
+    QueryKey("q71_update_rewrite",
+      // final state closed-form: ids [0,15000) keep the UPDATE result
+      // (base value, +1e6 on gauges); ids [15000,40000) carry the MERGE
+      // overlay (2× base — matched rows updated, new ids inserted)
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(value) AS BIGINT) AS min_value,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
+        |      WHEN CAST(id % 3 AS INT) = 0
+        |        THEN (id * 2654435761) % 100000 + 1000000
+        |      ELSE (id * 2654435761) % 100000 END AS value
+        |  FROM range(0, 40000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics71")
       s.sql("CREATE TABLE graft.mem.metrics71 " +
@@ -179,7 +234,23 @@ object CatalogQueries {
     // WriteDelta-not-ReplaceData plan gate and the delta-DELETE
     // fallback for predicates the metadata path vetoes). Same final
     // accounting as q71 — same answer, different write protocol.
-    "q79_delta_merge" -> { (s0, _) =>
+    QueryKey("q79_delta_merge",
+      // q71's closed form verbatim — same lifecycle, merge-on-read
+      // protocol; matching hashes ARE the protocol-equivalence evidence
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(value) AS BIGINT) AS min_value,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
+        |      WHEN CAST(id % 3 AS INT) = 0
+        |        THEN (id * 2654435761) % 100000 + 1000000
+        |      ELSE (id * 2654435761) % 100000 END AS value
+        |  FROM range(0, 40000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics79")
       // the rowId column MUST be NOT NULL — Spark rejects a nullable
@@ -225,7 +296,19 @@ object CatalogQueries {
     // RTAS atomically replaces it with the tripled ≥10k slice —
     // closed-form accounting over the REPLACED content proves the swap
     // was total (no old rows bleed through) and complete.
-    "q80_atomic_ctas" -> { (s0, _) =>
+    QueryKey("q80_atomic_ctas",
+      // the RTAS content only: ids [10000, 30000) at value*3 — any CTAS
+      // row bleeding through the atomic swap breaks min_id/counts
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  min(id) AS min_id, max(id) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    3 * ((id * 2654435761) % 100000) AS value
+        |  FROM range(10000, 30000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics80")
       s.read.format("graft.sources.MetricsFeedSource")
@@ -254,7 +337,22 @@ object CatalogQueries {
     // overwrite runs TWICE with identical input — idempotency is the
     // point (a re-run ingest job must not double rows). Gauge rows
     // carry the corrected ×3 values; counter/timer prove survival.
-    "q81_partition_overwrite" -> { (s0, _) =>
+    QueryKey("q81_partition_overwrite",
+      // gauge partition re-ingested at ×3 (idempotent under the re-run);
+      // counter/timer untouched
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(value) AS BIGINT) AS min_value,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    CASE WHEN CAST(id % 3 AS INT) = 0
+        |      THEN 3 * ((id * 2654435761) % 100000)
+        |      ELSE (id * 2654435761) % 100000 END AS value
+        |  FROM range(0, 30000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics81")
       s.sql("CREATE TABLE graft.mem.metrics81 " +
@@ -291,7 +389,20 @@ object CatalogQueries {
     // insert (the q72 determinism contract) pins row_id = 1000 + 2·id
     // — the closed-form oracle proves uniqueness, density, and spec
     // adherence (START WITH 1000 INCREMENT BY 2) in one hash.
-    "q82_identity_columns" -> { (s0, _) =>
+    QueryKey("q82_identity_columns",
+      // row_id = 1000 + 2·id under the single-task ordered insert
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(1000 + 2 * id) AS BIGINT) AS sum_rid,
+        |  CAST(min(1000 + 2 * id) AS BIGINT) AS min_rid,
+        |  CAST(max(1000 + 2 * id) AS BIGINT) AS max_rid
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 20000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics82")
       s.sql("CREATE TABLE graft.mem.metrics82 (" +
@@ -325,7 +436,20 @@ object CatalogQueries {
     // two id columns — anything else declines and Spark plans the
     // normal join (spec pins the decline + parity). The federation
     // endgame: the join crosses the wire as its RESULT, zero build side.
-    "q83_join_pushdown" -> { (s0, _) =>
+    QueryKey("q83_join_pushdown",
+      // the absorbed join == the feed restricted to the range
+      // intersection [0, 40000)
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(id) AS BIGINT) AS sum_id,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 40000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
       def feed(n: Int) = s.read.format("graft.sources.MetricsFeedSource")
@@ -356,7 +480,20 @@ object CatalogQueries {
     // this key's per-kind _pos accounting closed-form (ids are dense,
     // so post-compact _pos == id; any unsorted or dropped row breaks
     // the sums).
-    "q84_procedure_call" -> { (s0, _) =>
+    QueryKey("q84_procedure_call",
+      // post-compact _pos == id (dense ids, sorted store)
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(id) AS BIGINT) AS sum_pos,
+        |  CAST(min(id) AS BIGINT) AS min_pos,
+        |  CAST(max(id) AS BIGINT) AS max_pos
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 30000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics84")
       s.sql("CREATE TABLE graft.mem.metrics84 " +
@@ -388,7 +525,19 @@ object CatalogQueries {
     // probe plans 3 of 30 blocks (CatalogSpec pins the block counts,
     // the DDL error paths, and index-vs-no-index result equality); the
     // key's output is the probe's closed-form per-kind accounting.
-    "q89_index_scan" -> { (s0, _) =>
+    QueryKey("q89_index_scan",
+      // the BETWEEN probe's rows, closed-form from the feed formulas
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(id) AS BIGINT) AS min_id,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(10000, 12048) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics89")
       s.sql("CREATE TABLE graft.mem.metrics89 " +
@@ -424,7 +573,23 @@ object CatalogQueries {
     // listing, or a rename that moved metadata without rewriting rows
     // all break it. CatalogSpec pins the error paths (add-existing,
     // drop-missing) and the atomic all-or-nothing contract.
-    "q86_partition_ddl" -> { (s0, _) =>
+    QueryKey("q86_partition_ddl",
+      // registry after the DDL dance: {0, 1 (truncated, still listed),
+      // 3, 6 (renamed from 4 — rows' day rewritten), 9 (added empty)};
+      // day 2 dropped with its rows, day 1's rows truncated away
+      """WITH rows86 AS (
+        |  SELECT id,
+        |    CASE WHEN id % 5 = 4 THEN 6 ELSE id % 5 END AS day,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 20000) t(id)
+        |  WHERE id % 5 NOT IN (1, 2)
+        |), reg AS (SELECT * FROM (VALUES (0), (1), (3), (6), (9)) p(day))
+        |SELECT CAST(reg.day AS BIGINT) AS day,
+        |  CAST(count(rows86.id) AS BIGINT) AS n,
+        |  CAST(coalesce(sum(rows86.value), 0) AS BIGINT) AS sum_value,
+        |  CAST(coalesce(max(rows86.id), -1) AS BIGINT) AS max_id
+        |FROM reg LEFT JOIN rows86 ON rows86.day = reg.day
+        |GROUP BY reg.day ORDER BY day""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics86")
       s.sql("CREATE TABLE graft.mem.metrics86 " +
@@ -463,7 +628,26 @@ object CatalogQueries {
     // contract — multi-task inserts commit in task order), a DELETE
     // compacts the store, and the query reads the SURVIVORS' positions
     // — row_number-after-compaction semantics, closed-form oracle.
-    "q72_metadata_cols" -> { (s0, _) =>
+    QueryKey("q72_metadata_cols",
+      // survivors of the value floor, positions = compacted rank by the
+      // insert order (== id order under the single-task ordered insert)
+      """WITH survivors AS (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 30000) t(id)
+        |  WHERE (id * 2654435761) % 100000 >= 20000),
+        |pos AS (
+        |  SELECT kind, value,
+        |    CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS _pos
+        |  FROM survivors)
+        |SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(_pos) AS BIGINT) AS sum_pos,
+        |  CAST(min(_pos) AS BIGINT) AS min_pos,
+        |  CAST(max(_pos) AS BIGINT) AS max_pos
+        |FROM pos GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics72")
       s.sql("CREATE TABLE graft.mem.metrics72 " +
@@ -495,7 +679,27 @@ object CatalogQueries {
     // ~1/3) and the alignment-dependent verdict on bit 0 (flipped by
     // ~2/3); the oracle recomputes the vote generically, so any
     // update/merge/tie bug breaks the hash.
-    "q73_catalog_udaf" -> { (s0, dir) =>
+    QueryKey("q73_catalog_udaf",
+      """WITH f AS (
+        |  SELECT doc_id, doc_id // 20 AS fam,
+        |    md5('sig|' || CAST(doc_id // 20 AS VARCHAR)) AS h
+        |  FROM documents),
+        |s AS (
+        |  SELECT fam,
+        |    xor(CAST(list_sum(list_transform(generate_series(0, 11), k ->
+        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
+        |        * (1::BIGINT << (4 * (11 - k))))) AS BIGINT),
+        |      (1::BIGINT << CAST(doc_id % 3 AS INT)) - 1) AS sig
+        |  FROM f),
+        |bits AS (
+        |  SELECT fam, b,
+        |    sum(CASE WHEN (sig >> b) & 1 = 1 THEN 1 ELSE 0 END) AS ones,
+        |    count(*) AS n
+        |  FROM s, generate_series(0, 47) t(b) GROUP BY fam, b)
+        |SELECT fam,
+        |  CAST(sum(CASE WHEN ones * 2 > n THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS centroid,
+        |  CAST(max(n) AS BIGINT) AS n
+        |FROM bits GROUP BY fam ORDER BY fam""".stripMargin) { (s0, dir) =>
       val s = catalogSession(s0, dir)
       s.sql("""
         SELECT fam, graft.fn.sig_majority(sig) AS centroid,
@@ -521,7 +725,23 @@ object CatalogQueries {
     // is closed-form over which shape covered which id range, so a
     // default that failed to fill, filled the wrong value, or
     // clobbered provided values breaks the hash.
-    "q76_column_defaults" -> { (s0, _) =>
+    QueryKey("q76_column_defaults",
+      // shape 1 (id < 10000): kind='unknown', score=50; shape 2
+      // ([10000, 20000)): feed kind, score=50; shape 3 (≥20000): feed
+      // kind + value as score
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(score) AS BIGINT) AS sum_score,
+        |  CAST(min(score) AS BIGINT) AS min_score,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE WHEN id < 10000 THEN 'unknown'
+        |      ELSE CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |        WHEN 1 THEN 'counter' ELSE 'timer' END END AS kind,
+        |    CASE WHEN id < 20000 THEN 50
+        |      ELSE (id * 2654435761) % 100000 END AS score
+        |  FROM range(0, 30000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics76")
       s.sql("CREATE TABLE graft.mem.metrics76 (id BIGINT, " +
@@ -554,7 +774,18 @@ object CatalogQueries {
     // enforced gate (every row checked against value ∈ [0, 100000) —
     // true by the feed's construction, so enforcement cost is the
     // observable and the accounting is closed-form).
-    "q77_check_constraint" -> { (s0, _) =>
+    QueryKey("q77_check_constraint",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(value) AS BIGINT) AS min_value,
+        |  CAST(max(value) AS BIGINT) AS max_value
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 20000) t(id)) u
+        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics77")
       s.sql("CREATE TABLE graft.mem.metrics77 (id BIGINT, kind STRING, " +
@@ -582,7 +813,21 @@ object CatalogQueries {
     // never a mix. Old-shape inserts before the evolution, new-shape
     // after; closed-form accounting over both eras under the renamed
     // column proves nothing was lost, null-filled, or mis-defaulted.
-    "q78_alter_table" -> { (s0, _) =>
+    QueryKey("q78_alter_table",
+      // old era (id < 10000): score materialized from the ADD COLUMN
+      // default; new era: feed value
+      """SELECT metric_kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(score) AS BIGINT) AS sum_score,
+        |  CAST(min(score) AS BIGINT) AS min_score,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS metric_kind,
+        |    CASE WHEN id < 10000 THEN 50
+        |      ELSE (id * 2654435761) % 100000 END AS score
+        |  FROM range(0, 20000) t(id)) u
+        |GROUP BY metric_kind ORDER BY metric_kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics78")
       s.sql("CREATE TABLE graft.mem.metrics78 (id BIGINT, kind STRING)")
@@ -603,287 +848,5 @@ object CatalogQueries {
         FROM graft.mem.metrics78
         GROUP BY metric_kind ORDER BY metric_kind""")
     }
-  )
-
-  val oracles: Map[String, String] = Map(
-
-    "q63_table_catalog" ->
-      """SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(n_chars) AS BIGINT) AS mass
-        |FROM documents WHERE doc_id % 10 <> 7
-        |UNION ALL
-        |SELECT 2, CAST(count(*) AS BIGINT), CAST(sum(n_chars) AS BIGINT)
-        |FROM documents
-        |UNION ALL
-        |SELECT 3, CAST(count(*) AS BIGINT), CAST(sum(n_chars) AS BIGINT)
-        |FROM documents WHERE lang = 'en'
-        |UNION ALL
-        |SELECT 4, CAST(count(*) AS BIGINT), CAST(sum(CAST(e.label AS BIGINT)) AS BIGINT)
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        |ORDER BY leg""".stripMargin,
-
-    "q64_fn_catalog" ->
-      """WITH v AS (SELECT vec_id, embedding AS e,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings)
-        |SELECT d.doc_id,
-        |  CAST(len(regexp_extract_all(d.text, '[A-Za-z]+|[0-9]+')) AS INT) AS n_tokens,
-        |  round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-        |    CAST(a.e[i] AS DOUBLE) * CAST(b.e[i] AS DOUBLE))) / sqrt(a.n2 * b.n2), 6) AS sim_next,
-        |  CAST(bit_count(xor((d.doc_id % 1000000) * 2654435761,
-        |    (d.doc_id % 1000000) * 2654435761 + d.doc_id % 7)) AS INT) AS ham
-        |FROM documents d
-        |JOIN v a ON a.vec_id = d.doc_id
-        |JOIN v b ON b.vec_id = d.doc_id + 1
-        |WHERE d.doc_id % 10 = 0
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q67_connector_delete" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  min(id) AS min_id, max(id) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 100000) t(id)) u
-        |WHERE NOT (kind = 'timer' OR id >= 90000)
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // final state closed-form: ids [0,15000) keep the UPDATE result
-    // (base value, +1e6 on gauges); ids [15000,40000) carry the MERGE
-    // overlay (2× base — matched rows updated, new ids inserted)
-    "q71_update_rewrite" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
-        |      WHEN CAST(id % 3 AS INT) = 0
-        |        THEN (id * 2654435761) % 100000 + 1000000
-        |      ELSE (id * 2654435761) % 100000 END AS value
-        |  FROM range(0, 40000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // q71's closed form verbatim — same lifecycle, merge-on-read
-    // protocol; matching hashes ARE the protocol-equivalence evidence
-    "q79_delta_merge" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
-        |      WHEN CAST(id % 3 AS INT) = 0
-        |        THEN (id * 2654435761) % 100000 + 1000000
-        |      ELSE (id * 2654435761) % 100000 END AS value
-        |  FROM range(0, 40000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // the RTAS content only: ids [10000, 30000) at value*3 — any CTAS
-    // row bleeding through the atomic swap breaks min_id/counts
-    "q80_atomic_ctas" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  min(id) AS min_id, max(id) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    3 * ((id * 2654435761) % 100000) AS value
-        |  FROM range(10000, 30000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // gauge partition re-ingested at ×3 (idempotent under the re-run);
-    // counter/timer untouched
-    "q81_partition_overwrite" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CASE WHEN CAST(id % 3 AS INT) = 0
-        |      THEN 3 * ((id * 2654435761) % 100000)
-        |      ELSE (id * 2654435761) % 100000 END AS value
-        |  FROM range(0, 30000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // the BETWEEN probe's rows, closed-form from the feed formulas
-    "q89_index_scan" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(id) AS BIGINT) AS min_id,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(10000, 12048) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // registry after the DDL dance: {0, 1 (truncated, still listed),
-    // 3, 6 (renamed from 4 — rows' day rewritten), 9 (added empty)};
-    // day 2 dropped with its rows, day 1's rows truncated away
-    "q86_partition_ddl" ->
-      """WITH rows86 AS (
-        |  SELECT id,
-        |    CASE WHEN id % 5 = 4 THEN 6 ELSE id % 5 END AS day,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 20000) t(id)
-        |  WHERE id % 5 NOT IN (1, 2)
-        |), reg AS (SELECT * FROM (VALUES (0), (1), (3), (6), (9)) p(day))
-        |SELECT CAST(reg.day AS BIGINT) AS day,
-        |  CAST(count(rows86.id) AS BIGINT) AS n,
-        |  CAST(coalesce(sum(rows86.value), 0) AS BIGINT) AS sum_value,
-        |  CAST(coalesce(max(rows86.id), -1) AS BIGINT) AS max_id
-        |FROM reg LEFT JOIN rows86 ON rows86.day = reg.day
-        |GROUP BY reg.day ORDER BY day""".stripMargin,
-
-    // row_id = 1000 + 2·id under the single-task ordered insert
-    "q82_identity_columns" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(1000 + 2 * id) AS BIGINT) AS sum_rid,
-        |  CAST(min(1000 + 2 * id) AS BIGINT) AS min_rid,
-        |  CAST(max(1000 + 2 * id) AS BIGINT) AS max_rid
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 20000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // the absorbed join == the feed restricted to the range
-    // intersection [0, 40000)
-    "q83_join_pushdown" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(id) AS BIGINT) AS sum_id,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 40000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // post-compact _pos == id (dense ids, sorted store)
-    "q84_procedure_call" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(id) AS BIGINT) AS sum_pos,
-        |  CAST(min(id) AS BIGINT) AS min_pos,
-        |  CAST(max(id) AS BIGINT) AS max_pos
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 30000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // survivors of the value floor, positions = compacted rank by the
-    // insert order (== id order under the single-task ordered insert)
-    "q72_metadata_cols" ->
-      """WITH survivors AS (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 30000) t(id)
-        |  WHERE (id * 2654435761) % 100000 >= 20000),
-        |pos AS (
-        |  SELECT kind, value,
-        |    CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS _pos
-        |  FROM survivors)
-        |SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(_pos) AS BIGINT) AS sum_pos,
-        |  CAST(min(_pos) AS BIGINT) AS min_pos,
-        |  CAST(max(_pos) AS BIGINT) AS max_pos
-        |FROM pos GROUP BY kind ORDER BY kind""".stripMargin,
-
-    "q73_catalog_udaf" ->
-      """WITH f AS (
-        |  SELECT doc_id, doc_id // 20 AS fam,
-        |    md5('sig|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s AS (
-        |  SELECT fam,
-        |    xor(CAST(list_sum(list_transform(generate_series(0, 11), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (11 - k))))) AS BIGINT),
-        |      (1::BIGINT << CAST(doc_id % 3 AS INT)) - 1) AS sig
-        |  FROM f),
-        |bits AS (
-        |  SELECT fam, b,
-        |    sum(CASE WHEN (sig >> b) & 1 = 1 THEN 1 ELSE 0 END) AS ones,
-        |    count(*) AS n
-        |  FROM s, generate_series(0, 47) t(b) GROUP BY fam, b)
-        |SELECT fam,
-        |  CAST(sum(CASE WHEN ones * 2 > n THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS centroid,
-        |  CAST(max(n) AS BIGINT) AS n
-        |FROM bits GROUP BY fam ORDER BY fam""".stripMargin,
-
-    // shape 1 (id < 10000): kind='unknown', score=50; shape 2
-    // ([10000, 20000)): feed kind, score=50; shape 3 (≥20000): feed
-    // kind + value as score
-    "q76_column_defaults" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(score) AS BIGINT) AS sum_score,
-        |  CAST(min(score) AS BIGINT) AS min_score,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE WHEN id < 10000 THEN 'unknown'
-        |      ELSE CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |        WHEN 1 THEN 'counter' ELSE 'timer' END END AS kind,
-        |    CASE WHEN id < 20000 THEN 50
-        |      ELSE (id * 2654435761) % 100000 END AS score
-        |  FROM range(0, 30000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    "q77_check_constraint" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(value) AS BIGINT) AS max_value
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 20000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-
-    // old era (id < 10000): score materialized from the ADD COLUMN
-    // default; new era: feed value
-    "q78_alter_table" ->
-      """SELECT metric_kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(score) AS BIGINT) AS sum_score,
-        |  CAST(min(score) AS BIGINT) AS min_score,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS metric_kind,
-        |    CASE WHEN id < 10000 THEN 50
-        |      ELSE (id * 2654435761) % 100000 END AS score
-        |  FROM range(0, 20000) t(id)) u
-        |GROUP BY metric_kind ORDER BY metric_kind""".stripMargin
   )
 }

@@ -14,20 +14,36 @@ object MonitoringQueries {
 
   private val tsUs = "epoch_us(CAST(ts AS TIMESTAMP))"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m1_health_snapshot" -> { (s, dir) =>
+  def keys: Seq[QueryKey] = Seq(
+    QueryKey("m1_health_snapshot",
+      """SELECT user_id, count(*) AS n_total,
+        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
+        |  CAST(floor((count(*) - sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)) * 100 / count(*)) AS INT) AS health_pct
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       Monitoring.healthSnapshot(Tables.events(s, dir)).orderBy(col("user_id"))
     },
 
-    "m2_replication_lag" -> { (s, dir) =>
+    QueryKey("m2_replication_lag",
+      s"""SELECT user_id,
+         |  (SELECT max($tsUs) FROM events) - max($tsUs) AS lag_us,
+         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS queue_size
+         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       Monitoring.replicationLag(Tables.events(s, dir)).orderBy(col("user_id"))
     },
 
-    "m3_parts_metrics" -> { (s, dir) =>
+    QueryKey("m3_parts_metrics",
+      """SELECT l_returnflag AS part_group,
+        |  floor(CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE) / sum(CAST(round(l_quantity*100) AS BIGINT)) * 100) / 100.0 AS avg_event_size,
+        |  floor(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 / 1000000.0 * 100) / 100.0 AS gb_on_disk,
+        |  count(*) AS n_parts
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       Monitoring.partsMetrics(Tables.lineitem(s, dir)).orderBy(col("part_group"))
     },
 
-    "m4_bloat_pct" -> { (s, dir) =>
+    QueryKey("m4_bloat_pct",
+      """SELECT user_id,
+        |  floor(CAST(sum(CASE WHEN event_type = 'error' THEN CAST(round(value*100) AS BIGINT) ELSE 0 END) AS DOUBLE) * 100.0 / sum(CAST(round(value*100) AS BIGINT)) * 100) / 100.0 AS bloat_pct
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       Monitoring.bloatPct(Tables.events(s, dir)).orderBy(col("user_id"))
     },
 
@@ -35,7 +51,10 @@ object MonitoringQueries {
     // typed fields, parse it back through LogLines (str_to_map +
     // coercion), output typed columns. The oracle computes the expected
     // values directly — so the parse must be lossless to match.
-    "m5_kv_parse" -> { (s, dir) =>
+    QueryKey("m5_kv_parse",
+      """SELECT event_id, event_id AS recved, user_id AS sent,
+        |  true AS enable_logging, event_type AS server_mode, user_id AS node_count
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       // sort the RAW rows first, parse after (r15): with the fixture
       // built below the ORDER BY, the parse ran in the single-task scan
       // stage (single-row-group input) AND twice (range sampling
@@ -70,7 +89,21 @@ object MonitoringQueries {
     // PH_SYSTEM_* syslog payload emission (uploadEvents analog) with
     // remove_empty_keys semantics: the zone field is empty for nodes in
     // zone 0 and is elided from those payloads entirely.
-    "m6_event_emit" -> { (s, dir) =>
+    QueryKey("m6_event_emit",
+      """SELECT user_id,
+        |  'PH_SYSTEM_DATA_NODE_HEALTH={' ||
+        |  concat_ws(',',
+        |    '"deviceName":"node-' || user_id || '"',
+        |    CASE WHEN user_id % 3 = 0 THEN NULL
+        |         ELSE '"zone":"zone-' || (user_id % 3) || '"' END,
+        |    '"shard":' || (user_id % 4 + 1),
+        |    '"queueSize":' || n_error,
+        |    '"healthPct":' || health_pct) || '}' AS payload
+        |FROM (
+        |  SELECT user_id, CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
+        |    CAST(floor((count(*) - sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)) * 100 / count(*)) AS INT) AS health_pct
+        |  FROM events GROUP BY user_id) t
+        |ORDER BY user_id""".stripMargin) { (s, dir) =>
       val health = Monitoring.healthSnapshot(Tables.events(s, dir))
       val zone = when(pmod(col("user_id"), lit(3)) === 0, lit(""))
         .otherwise(concat(lit("zone-"), pmod(col("user_id"), lit(3))))
@@ -85,7 +118,11 @@ object MonitoringQueries {
     },
 
     // Sentinel-timestamp suppression (chStats.py:99-103).
-    "m7_sentinel_null" -> { (s, dir) =>
+    QueryKey("m7_sentinel_null",
+      """SELECT l_orderkey, l_linenumber,
+        |  CASE WHEN l_shipdate = TIMESTAMP '1995-01-02' THEN NULL ELSE l_shipdate END AS ship_ts
+        |FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-03-01'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       val li = Tables.lineitem(s, dir)
       val sentinel = lit("1995-01-02").cast("timestamp_ntz")
       li.filter(col("l_shipdate") < lit("1995-03-01").cast("timestamp_ntz"))
@@ -95,18 +132,35 @@ object MonitoringQueries {
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     },
 
-    "m8_shard_rollup" -> { (s, dir) =>
+    QueryKey("m8_shard_rollup",
+      """SELECT r_name AS shard, count(*) AS n_nodes,
+        |  CAST(sum(n_replicas) AS BIGINT) AS total_replicas,
+        |  max(n_replicas) AS max_node_replicas
+        |FROM (
+        |  SELECT n_regionkey, n_name, count(*) AS n_replicas
+        |  FROM customer, nation WHERE c_nationkey = n_nationkey
+        |  GROUP BY n_regionkey, n_name) pn, region
+        |WHERE n_regionkey = r_regionkey
+        |GROUP BY r_name ORDER BY shard""".stripMargin) { (s, dir) =>
       Monitoring.shardRollup(Tables.customer(s, dir), Tables.nation(s, dir),
         Tables.region(s, dir)).orderBy(col("shard"))
     },
 
-    "m9_enrich_lookup" -> { (s, dir) =>
+    QueryKey("m9_enrich_lookup",
+      """SELECT DISTINCT user_id,
+        |  coalesce(c_name, 'node-' || user_id) AS device_name
+        |FROM events LEFT JOIN customer ON user_id = c_custkey
+        |ORDER BY user_id""".stripMargin) { (s, dir) =>
       Monitoring.enrich(Tables.events(s, dir), Tables.customer(s, dir))
         .select(col("user_id"), col("device_name")).distinct()
         .orderBy(col("user_id"))
     },
 
-    "m10_time_buckets" -> { (s, dir) =>
+    QueryKey("m10_time_buckets",
+      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
+         |  count(*) AS n,
+         |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
+         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
       // cast to NTZ at the output boundary: session is UTC, and the
       // oracle's make_timestamp is timezone-naive
@@ -117,15 +171,27 @@ object MonitoringQueries {
         .orderBy(col("bucket"), col("event_type"))
     },
 
-    "m11_client_stats" -> { (s, dir) =>
+    QueryKey("m11_client_stats",
+      """SELECT user_id, count(*) AS recved, min(value) AS minlat,
+        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 / count(*) AS avglat,
+        |  max(value) AS maxlat
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       Monitoring.clientStats(Tables.events(s, dir)).orderBy(col("user_id"))
     },
 
-    "m12_top_talkers" -> { (s, dir) =>
+    QueryKey("m12_top_talkers",
+      """SELECT user_id,
+        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS traffic,
+        |  count(*) AS n_events
+        |FROM events GROUP BY user_id
+        |ORDER BY traffic DESC, user_id LIMIT 10""".stripMargin) { (s, dir) =>
       Monitoring.topTalkers(Tables.events(s, dir), 10)
     },
 
-    "m13_json_extract" -> { (s, dir) =>
+    QueryKey("m13_json_extract",
+      """SELECT CAST(props->>'$.k' AS INT) % 10 AS k_bucket, count(*) AS n,
+        |  CAST(sum(CAST(props->>'$.k' AS INT)) AS BIGINT) AS sum_k
+        |FROM events GROUP BY 1 ORDER BY k_bucket""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
       ev.select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))
@@ -136,7 +202,20 @@ object MonitoringQueries {
 
     // as-of join: for each error event, the user's most recent prior
     // purchase (time-to-failure) — union + running max, no pairwise join.
-    "m15_asof_prior" -> { (s, dir) =>
+    QueryKey("m15_asof_prior",
+      s"""WITH e AS (SELECT event_id, user_id, event_type, $tsUs AS ts_us FROM events),
+         |p AS (SELECT *,
+         |  max(CASE WHEN event_type = 'purchase'
+         |      THEN lpad(CAST(ts_us AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 10, '0') END)
+         |    OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior
+         |  FROM e)
+         |SELECT user_id, event_id, ts_us,
+         |  CAST(substr(prior, 1, 20) AS BIGINT) AS prior_ts_us,
+         |  CAST(substr(prior, 21, 10) AS BIGINT) AS prior_id,
+         |  ts_us - CAST(substr(prior, 1, 20) AS BIGINT) AS gap_us
+         |FROM p WHERE event_type = 'error' AND prior IS NOT NULL
+         |ORDER BY user_id, event_id""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
       AsOf.asofPrior(ev, "user_id", "event_id", "ts_us",
@@ -146,7 +225,16 @@ object MonitoringQueries {
     },
 
     // longest consecutive-error run per node (gaps-and-islands).
-    "m16_error_streaks" -> { (s, dir) =>
+    QueryKey("m16_error_streaks",
+      s"""WITH e AS (SELECT event_id, user_id,
+         |    CAST(event_type = 'error' AS INT) AS _is, $tsUs AS ts_us FROM events),
+         |g AS (SELECT user_id, _is,
+         |    row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) -
+         |    row_number() OVER (PARTITION BY user_id, _is ORDER BY ts_us, event_id) AS grp
+         |  FROM e),
+         |runs AS (SELECT user_id, grp, count(*) AS len FROM g WHERE _is = 1 GROUP BY user_id, grp)
+         |SELECT user_id, max(len) AS max_streak, count(*) AS n_streaks
+         |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
       AsOf.longestStreak(ev, "user_id", "event_id", "ts_us",
@@ -157,7 +245,13 @@ object MonitoringQueries {
     // config-drift detection: value dispersion of a parsed config/prop
     // across nodes (getKeeperParams surfaces per-node conf; drift =
     // nodes disagreeing on a parameter).
-    "m17_conf_drift" -> { (s, dir) =>
+    QueryKey("m17_conf_drift",
+      """SELECT event_type,
+        |  CAST(count(DISTINCT CAST(props->>'$.k' AS INT)) AS BIGINT) AS n_distinct_values,
+        |  min(CAST(props->>'$.k' AS INT)) AS min_value,
+        |  max(CAST(props->>'$.k' AS INT)) AS max_value,
+        |  count(DISTINCT CAST(props->>'$.k' AS INT)) > 1 AS drifted
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))
@@ -172,7 +266,11 @@ object MonitoringQueries {
     // ClickHouse FORMAT JSON / redis-config shape the reference consumes)
     // and parse back with an explicit schema — from_json/to_json
     // round-trip, no schema inference at scale.
-    "m18_json_ingest" -> { (s, dir) =>
+    QueryKey("m18_json_ingest",
+      """SELECT event_type, count(*) AS n,
+        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
       val jsonLines = ev.select(col("event_id"),
         to_json(struct(col("user_id"), col("event_type"), col("value"))).as("line"))
@@ -189,7 +287,12 @@ object MonitoringQueries {
     },
 
     // metric rate-of-change per node (delta vs previous observation).
-    "m19_rate_of_change" -> { (s, dir) =>
+    QueryKey("m19_rate_of_change",
+      s"""SELECT user_id, event_id, v_cents,
+         |  v_cents - lag(v_cents) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS delta_cents
+         |FROM (SELECT user_id, event_id, $tsUs AS ts_us,
+         |    CAST(round(value*100) AS BIGINT) AS v_cents FROM events) t
+         |ORDER BY user_id, event_id""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, dir)
@@ -208,7 +311,25 @@ object MonitoringQueries {
     // bracket form, 0x-hex sid/lzxid, lop up to the next comma). The
     // line is synthesized deterministically; the oracle computes every
     // field directly, so each extraction must be lossless to match.
-    "m20_cons_parse" -> { (s, dir) =>
+    QueryKey("m20_cons_parse",
+      """SELECT event_id,
+        |  '192.168.1.' || (user_id % 250) AS client_ip,
+        |  30000 + (event_id % 20000) AS port,
+        |  event_id % 7 AS queued,
+        |  event_id AS recved,
+        |  user_id AS sent,
+        |  '0x' || printf('%x', 281474976710656 + user_id) AS sid,
+        |  CASE CAST(event_id % 4 AS INT) WHEN 0 THEN 'PING' WHEN 1 THEN 'GETD'
+        |       WHEN 2 THEN 'SETD' ELSE 'CREA' END AS lop,
+        |  1598892558000 + event_id AS est,
+        |  CAST(30000 AS BIGINT) AS to_ms,
+        |  '0x' || printf('%x', event_id * 16 + 10) AS lzxid,
+        |  1598892558100 + event_id AS lresp,
+        |  event_id % 50 AS llat,
+        |  CAST(0 AS BIGINT) AS minlat,
+        |  event_id % 5 AS avglat,
+        |  event_id % 100 + 5 AS maxlat
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       // line fixture built with codegen'd concat, not format_string —
       // java.util.Formatter costs microseconds per row and dominated
       // the query; lower(hex(x)) is printf("%x") (minimal-width hex)
@@ -264,7 +385,13 @@ object MonitoringQueries {
 
     // heartbeat-gap detection: longest silence per node (max inter-event
     // gap) — the "is this node still reporting" monitoring primitive.
-    "m21_heartbeat_gaps" -> { (s, dir) =>
+    QueryKey("m21_heartbeat_gaps",
+      s"""SELECT user_id, max(gap_us) AS max_gap_us, count(*) AS n_heartbeats,
+         |  max(ts_us) - min(ts_us) AS span_us
+         |FROM (SELECT user_id, ts_us,
+         |    ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS gap_us
+         |  FROM (SELECT user_id, event_id, $tsUs AS ts_us FROM events) a) b
+         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, dir)
@@ -282,7 +409,15 @@ object MonitoringQueries {
     // per-replica rows. The oracle computes the flat shape directly, so
     // any loss in the assemble/serialize/parse/flatten chain breaks the
     // hash (chStats.py:82-123 assembly, 405-422 flatten).
-    "m22_nested_roundtrip" -> { (s, dir) =>
+    QueryKey("m22_nested_roundtrip",
+      s"""SELECT user_id % 4 + 1 AS shard,
+         |  'node-' || user_id AS device_name,
+         |  '10.0.' || (user_id // 256) || '.' || (user_id % 256) AS device_ip,
+         |  event_type AS db_table, count(*) AS queue_size,
+         |  max($tsUs) AS last_us,
+         |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS v_cents
+         |FROM events GROUP BY user_id, event_type
+         |ORDER BY shard, device_name, db_table""".stripMargin) { (s, dir) =>
       Monitoring.flattenHealthDoc(
           Monitoring.nestedHealthDoc(Tables.events(s, dir)))
         .orderBy(col("shard"), col("device_name"), col("db_table"))
@@ -290,7 +425,14 @@ object MonitoringQueries {
 
     // absent-node error records: directory nodes with no events emit the
     // reference's error-payload shape (chStats.py:213-221).
-    "m23_absent_nodes" -> { (s, dir) =>
+    QueryKey("m23_absent_nodes",
+      """SELECT c_custkey AS node_id,
+        |  'PH_SYSTEM_KEEPER_NODE_HEALTH={"deviceName":"' || c_name ||
+        |  '","deviceIp":"10.0.' || (c_custkey // 256) || '.' || (c_custkey % 256) ||
+        |  '","error":"No response received"}' AS payload
+        |FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM events WHERE user_id = c_custkey)
+        |ORDER BY node_id""".stripMargin) { (s, dir) =>
       Monitoring.absentNodes(Tables.customer(s, dir), Tables.events(s, dir),
           "c_custkey")
         .select(col("c_custkey").as("node_id"),
@@ -309,7 +451,20 @@ object MonitoringQueries {
     // grain, then three cheap re-aggregations over the tiny base produce
     // every cadence — counts and cents re-sum losslessly because coarser
     // epoch-aligned buckets are unions of 1-minute buckets.
-    "m24_cadence_rollup" -> { (s, dir) =>
+    QueryKey("m24_cadence_rollup",
+      s"""SELECT * FROM (
+         |  SELECT 3 AS cadence_min, make_timestamp($tsUs - $tsUs % 180000000) AS bucket,
+         |    count(*) AS n, sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
+         |  FROM events GROUP BY 2
+         |  UNION ALL
+         |  SELECT 5, make_timestamp($tsUs - $tsUs % 300000000),
+         |    count(*), sum(CAST(round(value*100) AS BIGINT)) / 100.0
+         |  FROM events GROUP BY 2
+         |  UNION ALL
+         |  SELECT 30, make_timestamp($tsUs - $tsUs % 1800000000),
+         |    count(*), sum(CAST(round(value*100) AS BIGINT)) / 100.0
+         |  FROM events GROUP BY 2) t
+         |ORDER BY cadence_min, bucket""".stripMargin) { (s, dir) =>
       val base = Tables.events(s, dir)
         .groupBy(Monitoring.timeBucket(col("ts"), 1).as("b1"))
         .agg(count(lit(1)).as("n"), sum(Monitoring.cents(col("value"))).as("cents"))
@@ -331,7 +486,18 @@ object MonitoringQueries {
     // severity CHANGES — the alert stream a monitoring daemon forwards,
     // not the raw metric stream. One lag window per node; output is
     // transition-cardinality (≪ event-cardinality at 100 TB).
-    "m25_status_alerts" -> { (s, dir) =>
+    QueryKey("m25_status_alerts",
+      s"""SELECT user_id, event_id, ts_us, prev AS prev_severity, severity AS new_severity
+         |FROM (
+         |  SELECT user_id, event_id, ts_us, severity,
+         |    lag(severity) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev
+         |  FROM (
+         |    SELECT user_id, event_id, $tsUs AS ts_us,
+         |      CASE WHEN value >= 100.0 THEN 'crit'
+         |           WHEN value >= 50.0 THEN 'warn' ELSE 'ok' END AS severity
+         |    FROM events) a) b
+         |WHERE prev IS NOT NULL AND prev <> severity
+         |ORDER BY user_id, ts_us, event_id""".stripMargin) { (s, dir) =>
       val byUser = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val sev = when(col("value") >= 100.0, "crit")
@@ -353,7 +519,30 @@ object MonitoringQueries {
     // q10 shape — never an Expand of the fact ×columns); the tiny
     // 1-row aggregates cross-join broadcast and melt to one row per
     // column.
-    "m26_column_profile" -> { (s, dir) =>
+    QueryKey("m26_column_profile",
+      """WITH base AS (SELECT count(*) AS n_rows FROM documents)
+        |SELECT col_name, n_rows, n_nulls, n_distinct, min_val, max_val FROM (
+        |  SELECT 'lang' AS col_name, base.n_rows,
+        |    (SELECT CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents) AS n_nulls,
+        |    (SELECT count(DISTINCT lang) FROM documents) AS n_distinct,
+        |    (SELECT CAST(min(lang) AS VARCHAR) FROM documents) AS min_val,
+        |    (SELECT CAST(max(lang) AS VARCHAR) FROM documents) AS max_val
+        |  FROM base
+        |  UNION ALL
+        |  SELECT 'source', base.n_rows,
+        |    (SELECT CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents),
+        |    (SELECT count(DISTINCT source) FROM documents),
+        |    (SELECT CAST(min(source) AS VARCHAR) FROM documents),
+        |    (SELECT CAST(max(source) AS VARCHAR) FROM documents)
+        |  FROM base
+        |  UNION ALL
+        |  SELECT 'n_chars', base.n_rows,
+        |    (SELECT CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents),
+        |    (SELECT count(DISTINCT n_chars) FROM documents),
+        |    (SELECT CAST(min(n_chars) AS VARCHAR) FROM documents),
+        |    (SELECT CAST(max(n_chars) AS VARCHAR) FROM documents)
+        |  FROM base) t
+        |ORDER BY col_name""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       def nulls(c: String) = sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c")
       def mn(c: String) = min(col(c)).cast("string").as(s"min_$c")
@@ -387,7 +576,11 @@ object MonitoringQueries {
     // rows equals the full recompute (which is what the oracle runs) —
     // the merge is what this query proves. The even/odd split stands in
     // for history vs new-arrivals.
-    "m27_incremental_rollup" -> { (s, dir) =>
+    QueryKey("m27_incremental_rollup",
+      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
+         |  count(*) AS n,
+         |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
+         |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .withColumn("bucket", Monitoring.timeBucket(col("ts"), 5).cast("timestamp_ntz"))
       def rollup(part: DataFrame) = part.groupBy(col("bucket"))
@@ -407,7 +600,20 @@ object MonitoringQueries {
     // last(ignoreNulls) over a per-entity window (high-cardinality
     // partition key: parallelizes per entity, each grid is bounded by
     // the entity's span). Buckets stay integer µs end to end.
-    "m28_gap_fill" -> { (s, dir) =>
+    QueryKey("m28_gap_fill",
+      s"""WITH e AS (SELECT user_id,
+         |    $tsUs - $tsUs % 3600000000 AS b_us, value
+         |  FROM events WHERE user_id % 10 = 0),
+         |obs AS (SELECT user_id, b_us, CAST(count(*) AS BIGINT) AS n_obs, max(value) AS mv
+         |  FROM e GROUP BY 1, 2),
+         |span AS (SELECT user_id, min(b_us) AS mn, max(b_us) AS mx FROM obs GROUP BY 1),
+         |grid AS (SELECT user_id, unnest(generate_series(mn, mx, 3600000000)) AS b_us FROM span)
+         |SELECT g.user_id, g.b_us AS bucket_us,
+         |  coalesce(o.n_obs, 0) AS n_obs,
+         |  last_value(o.mv IGNORE NULLS) OVER (PARTITION BY g.user_id ORDER BY g.b_us
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ffill_value
+         |FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.b_us = o.b_us
+         |ORDER BY g.user_id, bucket_us""".stripMargin) { (s, dir) =>
       val hourUs = 3600L * 1000000L
       val ev = Tables.events(s, dir)
         .filter(pmod(col("user_id"), lit(10)) === 0)
@@ -444,7 +650,35 @@ object MonitoringQueries {
     // rows). Shifts guarded at 63 (the d12 DuckDB 1<<63 overflow trap;
     // Scala shift-wrap lesson). Oracle replays the recurrence as a
     // recursive CTE walk (list_reduce banned).
-    "m55_decayed_topk" -> { (s, dir) =>
+    QueryKey("m55_decayed_topk",
+      // the decay recurrence as a recursive walk rn → rn+1 per type
+      // (st14/m48 pattern); // (1 << gap) == shiftright for nonnegative
+      // scores, shifts guarded ≤ 62
+      s"""WITH RECURSIVE h0 AS (SELECT event_type,
+         |    $tsUs // 3600000000 AS hr FROM events),
+         |h AS (SELECT event_type, hr, CAST(count(*) AS BIGINT) AS c
+         |  FROM h0 GROUP BY 1, 2),
+         |hs AS (SELECT *, CAST(row_number() OVER (PARTITION BY event_type
+         |    ORDER BY hr) AS BIGINT) AS rn FROM h),
+         |nh AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours
+         |  FROM hs GROUP BY 1),
+         |gm AS (SELECT max(hr) AS hmax FROM h),
+         |walk(event_type, rn, lh, s) AS (
+         |  SELECT event_type, rn, hr, c FROM hs WHERE rn = 1
+         |  UNION ALL
+         |  SELECT hs.event_type, hs.rn, hs.hr,
+         |    CASE WHEN hs.hr - w.lh >= 63 THEN 0
+         |      ELSE w.s // (1::BIGINT << CAST(hs.hr - w.lh AS INT)) END + hs.c
+         |  FROM walk w JOIN hs ON hs.event_type = w.event_type
+         |    AND hs.rn = w.rn + 1),
+         |fin AS (SELECT w.event_type, w.lh, w.s FROM walk w
+         |  JOIN nh ON nh.event_type = w.event_type AND w.rn = nh.n_hours)
+         |SELECT f.event_type, nh.n_hours,
+         |  CAST(CASE WHEN gm.hmax - f.lh >= 63 THEN 0
+         |    ELSE f.s // (1::BIGINT << CAST(gm.hmax - f.lh AS INT)) END
+         |    AS BIGINT) AS score
+         |FROM fin f JOIN nh ON nh.event_type = f.event_type CROSS JOIN gm
+         |ORDER BY score DESC, f.event_type""".stripMargin) { (s, dir) =>
       val hourly = Tables.events(s, dir)
         .select(col("event_type"),
           expr("unix_micros(ts) div 3600000000").as("hr"))
@@ -480,7 +714,21 @@ object MonitoringQueries {
     // Streaming's `withWatermark` drop rule, replayed in batch so the
     // dropped mass is measurable. Per-entity window (parallel, never a
     // global sort); per-user report: late count + worst/total lateness.
-    "m54_late_arrivals" -> { (s, dir) =>
+    QueryKey("m54_late_arrivals",
+      s"""WITH e AS (SELECT user_id, event_id, $tsUs AS ts_us FROM events),
+         |a AS (SELECT *, ts_us + (event_id % 10) * 600000000 AS arr_us FROM e),
+         |w AS (SELECT *, max(ts_us) OVER (PARTITION BY user_id
+         |    ORDER BY arr_us, event_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM a),
+         |l AS (SELECT user_id,
+         |    CASE WHEN pm IS NOT NULL AND ts_us + 300000000 < pm
+         |      THEN pm - 300000000 - ts_us ELSE 0 END AS late_us
+         |  FROM w)
+         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+         |  CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
+         |  CAST(max(late_us) AS BIGINT) AS max_late_us,
+         |  CAST(sum(late_us) AS BIGINT) AS sum_late_us
+         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("arr_us"), col("event_id"))
@@ -512,7 +760,22 @@ object MonitoringQueries {
     // and one grouped pass accounts both lanes — clean rows with their
     // payload sum, quarantined rows with a count a monitor can alert
     // on. Map-side classify, one partial-agg shuffle of 2 rows.
-    "m53_corrupt_quarantine" -> { (s, dir) =>
+    QueryKey("m53_corrupt_quarantine",
+      // latest-wins replicated with a DuckDB window (arg_max can't take a
+      // composite tie-break key); same (ts_us DESC, event_id DESC) order.
+      """WITH r AS (SELECT event_id,
+        |    CASE WHEN event_id % 13 = 0 THEN substr(props, 1, length(props) - 1)
+        |      ELSE props END AS line
+        |  FROM events),
+        |c AS (SELECT
+        |    CASE WHEN json_valid(line) AND json_extract(line, '$.k') IS NOT NULL
+        |      THEN 'clean' ELSE 'quarantine' END AS lane,
+        |    CASE WHEN json_valid(line)
+        |      THEN CAST(json_extract(line, '$.k') AS INT) END AS k
+        |  FROM r)
+        |SELECT lane, CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(coalesce(sum(k), 0) AS BIGINT) AS sum_k
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("event_id"), col("props"))
         .withColumn("line", when(pmod(col("event_id"), lit(13)) === 0,
@@ -539,7 +802,20 @@ object MonitoringQueries {
     // event_id) makes same-timestamp CDC batches retry-deterministic.
     // Micros longs, not timestamps, cross the oracle (the p11 dtype
     // lesson avoided at the source).
-    "m52_scd2_history" -> { (s, dir) =>
+    QueryKey("m52_scd2_history",
+      s"""WITH e AS (SELECT user_id, $tsUs AS ts_us, event_id, event_type
+         |  FROM events),
+         |c AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
+         |    ORDER BY ts_us, event_id) AS prev FROM e),
+         |ch AS (SELECT user_id, ts_us, event_id, event_type FROM c
+         |  WHERE prev IS NULL OR prev <> event_type)
+         |SELECT user_id, CAST(row_number() OVER w AS INT) AS version,
+         |  event_type AS state, ts_us AS valid_from_us,
+         |  lead(ts_us) OVER w AS valid_to_us,
+         |  (lead(ts_us) OVER w IS NULL) AS is_current
+         |FROM ch
+         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+         |ORDER BY user_id, version""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
@@ -561,7 +837,15 @@ object MonitoringQueries {
     // would SORT every key group; at 100 TB the changelog's hot keys
     // make that the skew killer). Tie-break by unique event_id makes
     // the winner retry-deterministic.
-    "m29_cdc_upsert" -> { (s, dir) =>
+    QueryKey("m29_cdc_upsert",
+      s"""SELECT user_id, event_type, ts_us AS last_ts_us, value AS last_value, n_versions
+         |FROM (
+         |  SELECT user_id, event_type, $tsUs AS ts_us, value,
+         |    CAST(count(*) OVER (PARTITION BY user_id, event_type) AS BIGINT) AS n_versions,
+         |    row_number() OVER (PARTITION BY user_id, event_type
+         |      ORDER BY $tsUs DESC, event_id DESC) AS rn
+         |  FROM events) t
+         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("ts_us"), col("value"), col("event_id"))
@@ -582,7 +866,18 @@ object MonitoringQueries {
     // the parquet scan) each reduced to a tiny per-user aggregate
     // before the next join — no per-user window sort over the fact, no
     // stage ever carries more than one row per funnel-surviving user.
-    "m30_funnel_conversion" -> { (s, dir) =>
+    QueryKey("m30_funnel_conversion",
+      s"""WITH e AS (SELECT user_id, event_type, $tsUs AS ts_us FROM events),
+         |v AS (SELECT user_id, min(ts_us) AS fv FROM e
+         |  WHERE event_type = 'view' GROUP BY user_id),
+         |c AS (SELECT e.user_id, min(fv) AS fv, min(ts_us) AS fc
+         |  FROM e JOIN v ON e.user_id = v.user_id
+         |  WHERE event_type = 'click' AND ts_us > fv GROUP BY e.user_id)
+         |SELECT e.user_id, min(fv) AS first_view_us, min(fc) AS first_click_us,
+         |  min(ts_us) AS first_purchase_us
+         |FROM e JOIN c ON e.user_id = c.user_id
+         |WHERE event_type = 'purchase' AND ts_us > fc
+         |GROUP BY e.user_id ORDER BY e.user_id""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
       val v = ev.filter(col("event_type") === "view")
@@ -610,7 +905,16 @@ object MonitoringQueries {
     // back (a window would SORT every entity's history instead).
     // Long-range bound: |c| ≤ 5·10⁶ here, so Σc² stays < 2⁶³ up to
     // ~10⁹ events/entity; beyond that the moments need decimal sums.
-    "m31_anomaly_zscore" -> { (s, dir) =>
+    QueryKey("m31_anomaly_zscore",
+      """WITH e AS (SELECT user_id, event_id, value,
+        |    CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |s AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(c) AS BIGINT) AS s1, CAST(sum(c*c) AS BIGINT) AS s2
+        |  FROM e GROUP BY user_id)
+        |SELECT user_id, event_id, value, n AS n_user_events
+        |FROM e JOIN s USING (user_id)
+        |WHERE n >= 2 AND (n*c - s1)*(n*c - s1) > 9*(n*s2 - s1*s1)
+        |ORDER BY user_id, event_id""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), col("value"),
           expr("CAST(round(value * 100) AS BIGINT)").as("c"))
@@ -632,7 +936,18 @@ object MonitoringQueries {
     // nibbles (engine-portable integer arithmetic, no native hash);
     // emitted next to the exact counts for the top-20 keys so the
     // one-sided error (cms_n ≥ true_n) is visible and oracle-checked.
-    "m32_cms_heavy_hitters" -> { (s, dir) =>
+    QueryKey("m32_cms_heavy_hitters",
+      """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
+        |r AS (SELECT key, i AS r,
+        |    (strpos('0123456789abcdef', substr(md5('cms' || i || '|' || key), 1, 1)) - 1) * 16 +
+        |    (strpos('0123456789abcdef', substr(md5('cms' || i || '|' || key), 2, 1)) - 1) AS b
+        |  FROM k, generate_series(0, 3) t(i)),
+        |sk AS (SELECT r, b, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2),
+        |truec AS (SELECT key, CAST(count(*) AS BIGINT) AS true_n FROM k GROUP BY 1),
+        |est AS (SELECT key, min(c) AS cms_n
+        |  FROM (SELECT DISTINCT key, r, b FROM r) d JOIN sk USING (r, b) GROUP BY key)
+        |SELECT key, true_n, cms_n FROM truec JOIN est USING (key)
+        |ORDER BY true_n DESC, key LIMIT 20""".stripMargin) { (s, dir) =>
       val keys = Tables.events(s, dir)
         .select(col("user_id").cast("string").as("key"))
       val bucketed = keys.select(col("key"),
@@ -659,7 +974,17 @@ object MonitoringQueries {
     // vs the fact — co-partitioned join); the (user, cohort, week)
     // dedup is a two-phase distinct (map-side partial) so the final
     // cell counts shuffle one row per distinct membership — no windows.
-    "m33_retention_cohorts" -> { (s, dir) =>
+    QueryKey("m33_retention_cohorts",
+      s"""WITH e AS (SELECT user_id, event_type, $tsUs AS ts_us FROM events),
+         |f AS (SELECT user_id, min(ts_us) // 604800000000 AS cohort_wk
+         |  FROM e WHERE event_type = 'signup' GROUP BY 1),
+         |a AS (SELECT DISTINCT e.user_id, f.cohort_wk,
+         |    e.ts_us // 604800000000 - f.cohort_wk AS wk_off
+         |  FROM e JOIN f USING (user_id)
+         |  WHERE e.event_type = 'purchase'
+         |    AND e.ts_us // 604800000000 >= f.cohort_wk)
+         |SELECT cohort_wk, wk_off, CAST(count(*) AS BIGINT) AS n_users
+         |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us"))
       val cohorts = ev.filter(col("event_type") === "signup")
@@ -681,7 +1006,18 @@ object MonitoringQueries {
     // truncation). The lead() window partitions by user_id — high
     // cardinality, so interval construction parallelizes per entity —
     // and the duration sums partial-aggregate after it.
-    "m34_error_uptime" -> { (s, dir) =>
+    QueryKey("m34_error_uptime",
+      s"""SELECT user_id,
+         |  CAST(sum(CASE WHEN event_type = 'error' THEN next_us - ts_us ELSE 0 END) AS BIGINT) AS err_us,
+         |  CAST(sum(next_us - ts_us) AS BIGINT) AS span_us,
+         |  CAST(CAST(sum(CASE WHEN event_type = 'error' THEN next_us - ts_us ELSE 0 END) AS BIGINT)
+         |    * 10000 // CAST(sum(next_us - ts_us) AS BIGINT) AS BIGINT) AS err_bp
+         |FROM (
+         |  SELECT user_id, event_type, $tsUs AS ts_us,
+         |    lead($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS next_us
+         |  FROM events) t
+         |WHERE next_us IS NOT NULL
+         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, dir)
@@ -707,7 +1043,24 @@ object MonitoringQueries {
     // token accounting; the oracle replays the identical recurrence as
     // a DuckDB RECURSIVE CTE. Scale shape: one hash shuffle + per-key
     // sort, O(1) state per entity during the scan.
-    "m42_rate_limiter" -> { (s, dir) =>
+    QueryKey("m42_rate_limiter",
+      s"""WITH RECURSIVE seq AS (SELECT user_id, event_id, $tsUs AS ts_us,
+         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS BIGINT) AS rn
+         |  FROM events),
+         |rec AS (
+         |  SELECT user_id, event_id, ts_us, rn,
+         |    CAST(1 AS INT) AS admitted, CAST(240000000 AS BIGINT) AS ta
+         |  FROM seq WHERE rn = 1
+         |  UNION ALL
+         |  SELECT s.user_id, s.event_id, s.ts_us, s.rn,
+         |    CAST(CASE WHEN least(300000000, r.ta + (s.ts_us - r.ts_us)) >= 60000000
+         |      THEN 1 ELSE 0 END AS INT) AS admitted,
+         |    CAST(least(300000000, r.ta + (s.ts_us - r.ts_us)) -
+         |      CASE WHEN least(300000000, r.ta + (s.ts_us - r.ts_us)) >= 60000000
+         |        THEN 60000000 ELSE 0 END AS BIGINT) AS ta
+         |  FROM rec r JOIN seq s ON s.user_id = r.user_id AND s.rn = r.rn + 1)
+         |SELECT user_id, event_id, ts_us, admitted, ta AS tokens_after
+         |FROM rec ORDER BY user_id, ts_us, event_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val capUs = 300000000L
       val costUs = 60000000L
@@ -742,7 +1095,24 @@ object MonitoringQueries {
     // before → cumulative-sum island ids. Integer µs throughout. Scale
     // shape: two stacked windows on the per-entity key (running max,
     // then running sum — one partition, one sort) + a partial agg.
-    "m41_interval_coalesce" -> { (s, dir) =>
+    QueryKey("m41_interval_coalesce",
+      s"""SELECT user_id, island_idx, CAST(min(ts_us) AS BIGINT) AS start_us,
+         |  CAST(max(end_us) AS BIGINT) AS end_us, count(*) AS n_events
+         |FROM (
+         |  SELECT user_id, ts_us, end_us,
+         |    CAST(sum(new_island) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS island_idx
+         |  FROM (
+         |    SELECT user_id, event_id, ts_us, end_us,
+         |      CASE WHEN pme IS NULL OR ts_us > pme THEN 1 ELSE 0 END AS new_island
+         |    FROM (
+         |      SELECT user_id, event_id, $tsUs AS ts_us,
+         |        $tsUs + 300000000 AS end_us,
+         |        max($tsUs + 300000000) OVER (PARTITION BY user_id
+         |          ORDER BY $tsUs, event_id
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
+         |      FROM events) a) b) c
+         |GROUP BY user_id, island_idx ORDER BY user_id, island_idx""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val spanUs = 300L * 1000000L
@@ -774,7 +1144,28 @@ object MonitoringQueries {
     // (d1 = 0, fewer than 3 days) are excluded. Scale shape: daily
     // pre-agg, a tiny per-user min join, one moments agg — all on the
     // high-cardinality entity key, no windows.
-    "m40_trend_forecast" -> { (s, dir) =>
+    QueryKey("m40_trend_forecast",
+      s"""WITH daily AS (SELECT user_id, $tsUs // 86400000000 AS d,
+         |    CAST(sum(CAST(round(value) AS BIGINT)) AS BIGINT) AS y
+         |  FROM events GROUP BY 1, 2),
+         |based AS (SELECT user_id, d - min(d) OVER (PARTITION BY user_id) AS x, y
+         |  FROM daily),
+         |m AS (SELECT user_id, CAST(count(*) AS INT) AS n_days,
+         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+         |    CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(x * y) AS BIGINT) AS sxy,
+         |    CAST(max(x) AS BIGINT) AS mx
+         |  FROM based GROUP BY user_id),
+         |f AS (SELECT user_id, n_days,
+         |    CAST(n_days * sxy - sx * sy AS BIGINT) AS num,
+         |    CAST(n_days * sxx - sx * sx AS BIGINT) AS d1,
+         |    sx, sy, mx + 7 AS xf
+         |  FROM m WHERE n_days >= 3)
+         |SELECT user_id, n_days,
+         |  CAST(num AS DOUBLE) / CAST(d1 AS DOUBLE) AS slope,
+         |  CAST((sy * d1 - num * sx + num * n_days * xf) // (n_days * d1) AS BIGINT) AS forecast_units,
+         |  CAST(xf AS INT) AS forecast_x
+         |FROM f WHERE d1 > 0
+         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       val daily = Tables.events(s, dir)
         .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"),
           expr("CAST(round(value) AS BIGINT)").as("vu"))
@@ -811,7 +1202,22 @@ object MonitoringQueries {
     // integer cross-multiplication (latest·n − Σ)·10⁴ div Σ, so no
     // float mean exists anywhere. Scale: one partial-agg hash shuffle
     // on the high-cardinality (user, hour) key.
-    "m39_seasonal_baseline" -> { (s, dir) =>
+    QueryKey("m39_seasonal_baseline",
+      s"""SELECT user_id, hod, n_obs, sum_cents, latest_cents,
+         |  CAST(CASE WHEN sum_cents > 0
+         |    THEN (latest_cents * n_obs - sum_cents) * 10000 // sum_cents
+         |    ELSE NULL END AS BIGINT) AS dev_bp
+         |FROM (
+         |  SELECT user_id, hod, CAST(count(*) OVER pw AS BIGINT) AS n_obs,
+         |    CAST(sum(vc) OVER pw AS BIGINT) AS sum_cents,
+         |    vc AS latest_cents,
+         |    row_number() OVER (PARTITION BY user_id, hod ORDER BY ts_us DESC, event_id DESC) AS rn
+         |  FROM (SELECT user_id, event_id, $tsUs AS ts_us,
+         |      CAST(round(value * 100) AS BIGINT) AS vc,
+         |      CAST(($tsUs // 3600000000) % 24 AS INT) AS hod
+         |    FROM events) e
+         |  WINDOW pw AS (PARTITION BY user_id, hod)) t
+         |WHERE rn = 1 ORDER BY user_id, hod""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
           expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
@@ -837,7 +1243,19 @@ object MonitoringQueries {
     // signal an alerting pipeline feeds back into m25's raiser. Scale
     // shape: one lag() window per entity (high-cardinality key) and a
     // partial agg above it; no self-joins, no sessionization state.
-    "m38_flap_detection" -> { (s, dir) =>
+    QueryKey("m38_flap_detection",
+      s"""SELECT user_id, count(*) AS n_events,
+         |  CAST(sum(flip) AS BIGINT) AS n_flips,
+         |  CAST(CASE WHEN CAST(sum(flip) AS BIGINT) >= 6 THEN 1 ELSE 0 END AS INT) AS flapping
+         |FROM (
+         |  SELECT user_id,
+         |    CASE WHEN prev_type IS NOT NULL AND
+         |      ((event_type = 'error') != (prev_type = 'error')) THEN 1 ELSE 0 END AS flip
+         |  FROM (
+         |    SELECT user_id, event_type,
+         |      lag(event_type) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS prev_type
+         |    FROM events) a) b
+         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, dir)
@@ -864,7 +1282,25 @@ object MonitoringQueries {
     // series (d=0) are filtered: r is undefined there, not 0. Scale
     // shape: two chained partial aggs on high-cardinality keys,
     // no windows.
-    "m37_metric_correlation" -> { (s, dir) =>
+    QueryKey("m37_metric_correlation",
+      s"""WITH b AS (SELECT user_id, $tsUs // 600000000 AS bucket,
+         |    CAST(count(*) AS BIGINT) AS x,
+         |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+         |  FROM events GROUP BY 1, 2),
+         |m AS (SELECT user_id, CAST(count(*) AS INT) AS n_buckets,
+         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+         |    CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy,
+         |    CAST(sum(x * y) AS BIGINT) AS sxy
+         |  FROM b GROUP BY user_id),
+         |d AS (SELECT user_id, n_buckets,
+         |    CAST(n_buckets * sxy - sx * sy AS BIGINT) AS num,
+         |    CAST(n_buckets * sxx - sx * sx AS BIGINT) AS d1,
+         |    CAST(n_buckets * syy - sy * sy AS BIGINT) AS d2
+         |  FROM m WHERE n_buckets >= 3)
+         |SELECT user_id, n_buckets, num,
+         |  CAST(num AS DOUBLE) / sqrt(CAST(d1 AS DOUBLE)) / sqrt(CAST(d2 AS DOUBLE)) AS r
+         |FROM d WHERE d1 > 0 AND d2 > 0
+         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
@@ -898,7 +1334,22 @@ object MonitoringQueries {
     // shape: the pairing lead() windows by user_id (high cardinality —
     // parallelizes per entity); mark generation is a bounded map-side
     // explode; no further shuffle before the output sort.
-    "m36_linear_interp" -> { (s, dir) =>
+    QueryKey("m36_linear_interp",
+      s"""WITH e AS (SELECT user_id, event_id, $tsUs AS ts_us,
+         |    CAST(round(value * 100) AS BIGINT) AS vc
+         |  FROM events WHERE user_id % 10 = 1),
+         |p AS (SELECT user_id, ts_us, vc,
+         |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS t1,
+         |    lead(vc) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS v1
+         |  FROM e),
+         |g AS (SELECT user_id, ts_us, vc, t1, v1, t.m AS mark
+         |  FROM (SELECT * FROM p WHERE t1 IS NOT NULL AND t1 - ts_us <= 7200000000) pp,
+         |  LATERAL unnest(generate_series((ts_us // 60000000 + 1) * 60000000,
+         |    t1 - 1, 60000000)) t(m))
+         |SELECT user_id, mark AS mark_us,
+         |  CAST((vc * (t1 - mark) + v1 * (mark - ts_us)) // (t1 - ts_us) AS BIGINT) AS interp_cents,
+         |  CAST(CAST((vc * (t1 - mark) + v1 * (mark - ts_us)) // (t1 - ts_us) AS BIGINT) AS DOUBLE) / 100.0 AS v_interp
+         |FROM g ORDER BY user_id, mark_us""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val minUs = 60L * 1000000L
@@ -932,7 +1383,32 @@ object MonitoringQueries {
     // bit-for-bit in both engines. Scale shape: one 64-group partial
     // agg over the stream, a 64→1 fold, and a broadcast of the 1-row
     // exact count for the error column.
-    "m35_hll_distinct" -> { (s, dir) =>
+    QueryKey("m35_hll_distinct",
+      """WITH h AS (SELECT md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
+        |rk AS (SELECT
+        |    ((strpos('0123456789abcdef', substr(_h, 1, 1)) - 1) * 16 +
+        |     (strpos('0123456789abcdef', substr(_h, 2, 1)) - 1)) % 64 AS idx,
+        |    CASE WHEN lz >= 12 THEN 49 ELSE lz * 4 +
+        |      (CASE WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 8 THEN 0
+        |            WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 4 THEN 1
+        |            WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 2 THEN 2
+        |            ELSE 3 END) + 1 END AS rnk
+        |  FROM (SELECT _h, substr(_h, 3, 12) AS tail,
+        |      length(regexp_extract(substr(_h, 3, 12), '^0*')) AS lz FROM h) t),
+        |regs AS (SELECT idx, max(rnk) AS mreg FROM rk GROUP BY idx),
+        |sk AS (SELECT CAST(count(*) AS INT) AS n_hit,
+        |    CAST(sum(CAST(1 AS BIGINT) << CAST(50 - mreg AS INT)) AS BIGINT) AS s_present
+        |  FROM regs),
+        |ex AS (SELECT count(DISTINCT user_id) AS exact_distinct FROM events),
+        |est AS (SELECT n_hit, exact_distinct,
+        |    2904064 * CAST(1099511627776 AS BIGINT) //
+        |      (1000 * ((s_present + (64 - n_hit) * CAST(1125899906842624 AS BIGINT)) // 1024))
+        |      AS est_distinct
+        |  FROM sk CROSS JOIN ex)
+        |SELECT CAST(64 AS INT) AS m, n_hit, CAST(est_distinct AS BIGINT) AS est_distinct,
+        |  exact_distinct,
+        |  CAST(abs(est_distinct - exact_distinct) * 10000 // exact_distinct AS BIGINT) AS err_bp
+        |FROM est""".stripMargin) { (s, dir) =>
       val keys = Tables.events(s, dir).select(col("user_id").cast("string").as("key"))
       val hashed = graft.functions.HllSketch.withIndexRank(keys, col("key"))
       val regs = hashed.groupBy(col("idx")).agg(max(col("rnk")).as("mreg"))
@@ -964,7 +1440,23 @@ object MonitoringQueries {
     // into ≤768 bins per (type, day); everything after (merge, cumsum
     // window, estimate) runs on the tiny sketch rows. Doubles appear
     // once: the final (bin+1)*64/100.0 division of integers.
-    "m43_quantile_sketch" -> { (s, dir) =>
+    QueryKey("m43_quantile_sketch",
+      // day-split omitted on purpose: the merge is plain count addition,
+      // so merged-by-day == built-on-full by associativity (the property
+      // QuantileSketchSpec asserts); the oracle states the merged sketch.
+      """WITH b AS (SELECT event_type,
+        |    CAST(round(value * 100) AS BIGINT) // 64 AS bin,
+        |    CAST(count(*) AS BIGINT) AS c
+        |  FROM events GROUP BY 1, 2),
+        |t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n FROM b GROUP BY 1),
+        |cu AS (SELECT b.event_type, bin, c, n,
+        |    CAST(sum(c) OVER (PARTITION BY b.event_type ORDER BY bin) AS BIGINT) AS cum
+        |  FROM b JOIN t USING (event_type))
+        |SELECT event_type, CAST(max(n) AS BIGINT) AS n, CAST(count(*) AS INT) AS n_bins,
+        |  CAST((min(CASE WHEN cum * 100 >= n * 50 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p50_est,
+        |  CAST((min(CASE WHEN cum * 100 >= n * 95 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p95_est,
+        |  CAST((min(CASE WHEN cum * 100 >= n * 99 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p99_est
+        |FROM cu GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val daily = Tables.events(s, dir)
         .select(col("event_type"),
@@ -1026,7 +1518,39 @@ object MonitoringQueries {
     // aggregate() HOF pass on aggregate rows; the oracle is the same
     // recurrence as a recursive CTE (never list_reduce — the DuckDB
     // mis-fold trap).
-    "m51_cusum_changepoint" -> { (s, dir) =>
+    QueryKey("m51_cusum_changepoint",
+      s"""WITH RECURSIVE c AS (SELECT event_type,
+         |    CAST($tsUs // 300000000 AS BIGINT) AS bucket,
+         |    CAST(count(*) AS BIGINT) AS cnt
+         |  FROM events GROUP BY 1, 2),
+         |r AS (SELECT event_type, CAST(sum(cnt) // count(*) AS BIGINT) AS ref0,
+         |    CAST(count(*) AS BIGINT) AS nb FROM c GROUP BY 1),
+         |r2 AS (SELECT event_type, nb, ref0 + ref0 // 2 + 1 AS thr,
+         |    3 * (ref0 + 1) AS h FROM r),
+         |e AS (SELECT event_type, bucket, cnt,
+         |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY bucket) AS BIGINT) AS rn
+         |  FROM c),
+         |walk(event_type, rn, s, alarms, first_b, maxs) AS (
+         |  SELECT event_type, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+         |    CAST(0 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT) FROM r2
+         |  UNION ALL
+         |  SELECT w.event_type, e.rn,
+         |    CASE WHEN greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
+         |         THEN CAST(0 AS BIGINT)
+         |         ELSE greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) END,
+         |    w.alarms + CASE WHEN greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
+         |         THEN 1 ELSE 0 END,
+         |    CASE WHEN w.first_b < 0
+         |          AND greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
+         |         THEN e.bucket ELSE w.first_b END,
+         |    greatest(w.maxs, greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr))
+         |  FROM walk w
+         |  JOIN e ON e.event_type = w.event_type AND e.rn = w.rn + 1
+         |  JOIN r2 ON r2.event_type = w.event_type)
+         |SELECT w.event_type, r2.nb AS n_buckets, w.alarms AS n_alarms,
+         |  w.first_b AS first_alarm_bucket, w.maxs AS max_cusum
+         |FROM walk w JOIN r2 ON r2.event_type = w.event_type
+         |WHERE w.rn = r2.nb ORDER BY w.event_type""".stripMargin) { (s, dir) =>
       val counts = Tables.events(s, dir)
         .withColumn("bucket", expr("CAST(unix_micros(ts) div 300000000 AS BIGINT)"))
         .groupBy(col("event_type"), col("bucket")).agg(count(lit(1)).as("cnt"))
@@ -1067,14 +1591,40 @@ object MonitoringQueries {
     // lambda); global counts are a second partial agg on exploded
     // grams; top-20 is an ordered limit (TakeOrderedAndProject, no full
     // sort). Within-timeline order is total: (ts_us, event_id).
-    "m50_seq_trigrams" -> { (s, dir) =>
+    QueryKey("m50_seq_trigrams",
+      s"""WITH tl AS (SELECT user_id,
+         |    list(event_type ORDER BY $tsUs, event_id) AS types
+         |  FROM events GROUP BY user_id),
+         |tri AS (SELECT unnest(CASE WHEN len(types) >= 3
+         |    THEN list_transform(generate_series(1, len(types) - 2),
+         |      i -> types[i] || ' ' || types[i+1] || ' ' || types[i+2])
+         |    ELSE [] END) AS trigram FROM tl)
+         |SELECT trigram, CAST(count(*) AS BIGINT) AS n
+         |FROM tri GROUP BY trigram ORDER BY n DESC, trigram LIMIT 20""".stripMargin) { (s, dir) =>
       Sequences.userTypeTrigrams(Tables.events(s, dir))
         .groupBy(col("trigram")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("trigram"))
         .limit(20)
     },
 
-    "m49_subnet_rollup" -> { (s, dir) =>
+    QueryKey("m49_subnet_rollup",
+      """WITH e AS (SELECT event_type,
+        |    '10.' || CAST(user_id % 200 AS VARCHAR) || '.' ||
+        |    CAST((user_id // 200) % 250 AS VARCHAR) || '.' ||
+        |    CAST(event_id % 254 + 1 AS VARCHAR) AS ip
+        |  FROM events),
+        |p AS (SELECT event_type, string_split(ip, '.') AS parts FROM e),
+        |o AS (SELECT event_type,
+        |    CAST(parts[2] AS BIGINT) AS o1, CAST(parts[3] AS BIGINT) AS o2,
+        |    CAST(parts[4] AS BIGINT) AS o3
+        |  FROM p)
+        |SELECT '10.' || CAST(o1 AS VARCHAR) || '.' || CAST(o2 AS VARCHAR)
+        |    || '.0/24' AS subnet,
+        |  count(*) AS n_events,
+        |  CAST(count(DISTINCT o3) AS BIGINT) AS n_hosts,
+        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_errors
+        |FROM o GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val ip = concat_ws(".", lit(10), pmod(col("user_id"), lit(200)),
         pmod(expr("user_id div 200"), lit(250)),
         pmod(col("event_id"), lit(254)) + 1)
@@ -1102,7 +1652,24 @@ object MonitoringQueries {
     // form is ONE aggregate() HOF fold over per-user ordered arrays
     // (one user_id shuffle, fold on aggregate rows); the DuckDB oracle
     // walks the same recurrence as a recursive CTE.
-    "m48_ewma_smooth" -> { (s, dir) =>
+    QueryKey("m48_ewma_smooth",
+      // recursive CTE, not list_reduce — DuckDB 1.0's list_reduce
+      // mis-folds on varying list lengths (st14's repro)
+      """WITH RECURSIVE e AS (
+        |  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS c,
+        |    CAST(row_number() OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) AS BIGINT) AS rn
+        |  FROM events),
+        |n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
+        |  FROM e GROUP BY user_id),
+        |walk(user_id, rn, ew) AS (
+        |  SELECT user_id, rn, c FROM e WHERE rn = 1
+        |  UNION ALL
+        |  SELECT w.user_id, e.rn, (w.ew + e.c) // 2
+        |  FROM walk w JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
+        |SELECT n.user_id, n.n_events, w.ew AS ewma_c
+        |FROM walk w JOIN n ON n.user_id = w.user_id AND w.rn = n.n_events
+        |ORDER BY n.user_id""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_id"), Monitoring.cents(col("value")).as("c"))
@@ -1117,7 +1684,31 @@ object MonitoringQueries {
         .orderBy(col("user_id"))
     },
 
-    "m47_log_quantile" -> { (s, dir) =>
+    QueryKey("m47_log_quantile",
+      """WITH ev AS (SELECT event_type,
+        |    CAST(round(value * 100) AS BIGINT) *
+        |      (CAST(1 AS BIGINT) << CAST(user_id % 24 AS INT)) AS v
+        |  FROM events),
+        |b AS (SELECT event_type,
+        |    CASE WHEN v < 16 THEN v
+        |         ELSE 16 * (length(bin(v)) - 1) +
+        |              v // (CAST(1 AS BIGINT) << CAST(length(bin(v)) - 5 AS INT)) - 64 END AS qbin,
+        |    CAST(count(*) AS BIGINT) AS c
+        |  FROM ev GROUP BY 1, 2),
+        |t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n FROM b GROUP BY 1),
+        |cu AS (SELECT b.event_type, qbin, c, n,
+        |    CAST(sum(c) OVER (PARTITION BY b.event_type ORDER BY qbin) AS BIGINT) AS cum
+        |  FROM b JOIN t USING (event_type)),
+        |r AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n, CAST(count(*) AS INT) AS n_bins,
+        |    min(CASE WHEN cum * 100 >= n * 50 THEN qbin END) AS b50,
+        |    min(CASE WHEN cum * 100 >= n * 95 THEN qbin END) AS b95,
+        |    min(CASE WHEN cum * 100 >= n * 99 THEN qbin END) AS b99
+        |  FROM cu GROUP BY event_type)
+        |SELECT event_type, n, n_bins,
+        |  CASE WHEN b50 < 16 THEN b50 ELSE (CAST(17 + b50 % 16 AS BIGINT) << CAST(b50 // 16 - 1 AS INT)) - 1 END AS p50_max_cents,
+        |  CASE WHEN b95 < 16 THEN b95 ELSE (CAST(17 + b95 % 16 AS BIGINT) << CAST(b95 // 16 - 1 AS INT)) - 1 END AS p95_max_cents,
+        |  CASE WHEN b99 < 16 THEN b99 ELSE (CAST(17 + b99 % 16 AS BIGINT) << CAST(b99 // 16 - 1 AS INT)) - 1 END AS p99_max_cents
+        |FROM r ORDER BY event_type""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val binned = Tables.events(s, dir)
         .select(col("event_type"),
@@ -1162,7 +1753,20 @@ object MonitoringQueries {
     // touched again. All rates are integer bp (e·10000 div n, n ≥ 1 by
     // construction); the ×10/×12 integer forms express the 1.2 factor
     // without floats.
-    "m44_burn_rate" -> { (s, dir) =>
+    QueryKey("m44_burn_rate",
+      s"""WITH b5 AS (SELECT $tsUs // 300000000 AS b5,
+         |    CAST(count(*) AS BIGINT) AS n,
+         |    CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS e
+         |  FROM events GROUP BY 1),
+         |h AS (SELECT b5 // 12 AS bh, CAST(sum(n) AS BIGINT) AS nh,
+         |    CAST(sum(e) AS BIGINT) AS eh FROM b5 GROUP BY 1),
+         |g AS (SELECT CAST(sum(e) AS BIGINT) * 10000 // CAST(sum(n) AS BIGINT) AS g_bp FROM b5)
+         |SELECT make_timestamp(b5 * 300000000) AS bucket, n, e,
+         |  e * 10000 // n AS err5_bp, eh * 10000 // nh AS err1h_bp,
+         |  CAST(CASE WHEN e * 10000 // n >= 2 * g_bp
+         |    AND (eh * 10000 // nh) * 10 >= 12 * g_bp THEN 1 ELSE 0 END AS INT) AS fast_burn
+         |FROM b5 JOIN h ON b5 // 12 = bh CROSS JOIN g
+         |ORDER BY bucket""".stripMargin) { (s, dir) =>
       val b5 = Tables.events(s, dir)
         .select(expr("unix_micros(ts) div 300000000").as("b5"),
           when(col("event_type") === "error", 1L).otherwise(0L).as("is_err"))
@@ -1198,452 +1802,7 @@ object MonitoringQueries {
     // §traps). All arithmetic engine-portable integers: ranks, shifted
     // harmonic terms, the m35 estimate division, inclusion-exclusion,
     // truncating Jaccard bp.
-    "m45_hll_algebra" -> { (s, dir) =>
-      import graft.functions.HllSketch
-      val hashed = HllSketch.withIndexRank(
-        Tables.events(s, dir).select(col("event_type"), col("user_id")),
-        col("user_id"))
-      val aggs = HllSketch.registerAggs
-      val perType = hashed.groupBy(col("event_type"))
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("s_total", expr(HllSketch.sTotalExpr))
-        .withColumn("est", expr(HllSketch.estimateExpr))
-        .withColumn("regs", array((0 until HllSketch.registers)
-          .map(i => coalesce(col(s"r$i"), lit(0))): _*))
-        .select(col("event_type"), col("regs"), col("est"))
-      perType
-        .agg(expr("array_sort(collect_list(struct(event_type, regs, est)))").as("sk"))
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(sk) - 1), i -> " +
-          "transform(sequence(0, i - 1), j -> struct(sk[j] AS a, sk[i] AS b))))")).as("p"))
-        .select(col("p.a.event_type").as("type_a"), col("p.b.event_type").as("type_b"),
-          col("p.a.est").as("est_a"), col("p.b.est").as("est_b"),
-          expr("aggregate(zip_with(p.a.regs, p.b.regs, (x, y) -> " +
-            "shiftleft(CAST(1 AS BIGINT), CAST(50 - greatest(x, y) AS INT))), " +
-            "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("s_union"))
-        .withColumn("est_union", expr(HllSketch.estimateOf("s_union")))
-        .withColumn("est_inter",
-          expr("greatest(CAST(0 AS BIGINT), est_a + est_b - est_union)"))
-        .withColumn("jaccard_bp", expr("est_inter * 10000 div est_union"))
-        .drop("s_union")
-        .orderBy(col("type_a"), col("type_b"))
-    },
-
-    "m14_active_csv" -> { (s, dir) =>
-      Tables.supplier(s, dir)
-        .groupBy(col("s_nationkey").as("nationkey"))
-        .agg(array_join(array_sort(collect_set(col("s_suppkey").cast("string"))), ",")
-          .as("active_members"))
-        .orderBy(col("nationkey"))
-    },
-
-    // Variant-domain ingest — the reverse of m6's PH_SYSTEM emit: the
-    // 100-TB log store parses each semi-structured line ONCE into Spark
-    // 4's binary VariantType; every later field access is a typed path
-    // read on the shredded encoding, vs get_json_object re-parsing the
-    // string per extraction (m13's shape — fine for one field, quadratic
-    // in fields). The line is synthesized by string concat (the m6
-    // LogLines contract), so parse_json does real work — no
-    // from_json(to_json) elision. Nested-object and array-index paths
-    // extracted typed; one partial-agg shuffle on the (zone, type) grid.
-    "m46_variant_ingest" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      // event_type is sanitized to JSON-safe word chars before the line
-      // is synthesized: a quote/backslash in a raw type tag would make
-      // Spark's parse_json THROW where DuckDB's json_extract_string
-      // returns NULL — divergent failure modes. Stripping is mirrored in
-      // the oracle ('g' flag), so both engines embed identical tokens.
-      val safeType = regexp_replace(col("event_type"), "[^A-Za-z0-9_-]", "")
-      val line = concat(
-        lit("{\"node\":{\"id\":"), col("user_id"),
-        lit(",\"zone\":\"z"), pmod(col("user_id"), lit(4)),
-        lit("\"},\"metrics\":[{\"t\":\""), safeType,
-        lit("\",\"v\":"), Monitoring.cents(col("value")), lit("}]}"))
-      ev.select(parse_json(line).as("v"))
-        .select(
-          variant_get(col("v"), "$.node.zone", "string").as("zone"),
-          variant_get(col("v"), "$.metrics[0].t", "string").as("mtype"),
-          variant_get(col("v"), "$.metrics[0].v", "bigint").as("cents"))
-        .groupBy(col("zone"), col("mtype"))
-        .agg(count(lit(1)).as("n"), (sum(col("cents")) / 100.0).as("total_value"))
-        .orderBy(col("zone"), col("mtype"))
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    // the decay recurrence as a recursive walk rn → rn+1 per type
-    // (st14/m48 pattern); // (1 << gap) == shiftright for nonnegative
-    // scores, shifts guarded ≤ 62
-    "m55_decayed_topk" ->
-      s"""WITH RECURSIVE h0 AS (SELECT event_type,
-         |    $tsUs // 3600000000 AS hr FROM events),
-         |h AS (SELECT event_type, hr, CAST(count(*) AS BIGINT) AS c
-         |  FROM h0 GROUP BY 1, 2),
-         |hs AS (SELECT *, CAST(row_number() OVER (PARTITION BY event_type
-         |    ORDER BY hr) AS BIGINT) AS rn FROM h),
-         |nh AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours
-         |  FROM hs GROUP BY 1),
-         |gm AS (SELECT max(hr) AS hmax FROM h),
-         |walk(event_type, rn, lh, s) AS (
-         |  SELECT event_type, rn, hr, c FROM hs WHERE rn = 1
-         |  UNION ALL
-         |  SELECT hs.event_type, hs.rn, hs.hr,
-         |    CASE WHEN hs.hr - w.lh >= 63 THEN 0
-         |      ELSE w.s // (1::BIGINT << CAST(hs.hr - w.lh AS INT)) END + hs.c
-         |  FROM walk w JOIN hs ON hs.event_type = w.event_type
-         |    AND hs.rn = w.rn + 1),
-         |fin AS (SELECT w.event_type, w.lh, w.s FROM walk w
-         |  JOIN nh ON nh.event_type = w.event_type AND w.rn = nh.n_hours)
-         |SELECT f.event_type, nh.n_hours,
-         |  CAST(CASE WHEN gm.hmax - f.lh >= 63 THEN 0
-         |    ELSE f.s // (1::BIGINT << CAST(gm.hmax - f.lh AS INT)) END
-         |    AS BIGINT) AS score
-         |FROM fin f JOIN nh ON nh.event_type = f.event_type CROSS JOIN gm
-         |ORDER BY score DESC, f.event_type""".stripMargin,
-
-    "m54_late_arrivals" ->
-      s"""WITH e AS (SELECT user_id, event_id, $tsUs AS ts_us FROM events),
-         |a AS (SELECT *, ts_us + (event_id % 10) * 600000000 AS arr_us FROM e),
-         |w AS (SELECT *, max(ts_us) OVER (PARTITION BY user_id
-         |    ORDER BY arr_us, event_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM a),
-         |l AS (SELECT user_id,
-         |    CASE WHEN pm IS NOT NULL AND ts_us + 300000000 < pm
-         |      THEN pm - 300000000 - ts_us ELSE 0 END AS late_us
-         |  FROM w)
-         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         |  CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-         |  CAST(max(late_us) AS BIGINT) AS max_late_us,
-         |  CAST(sum(late_us) AS BIGINT) AS sum_late_us
-         |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m46_variant_ingest" ->
-      """WITH lines AS (
-        |  SELECT '{"node":{"id":' || user_id || ',"zone":"z' || (user_id % 4) ||
-        |    '"},"metrics":[{"t":"' || regexp_replace(event_type, '[^A-Za-z0-9_-]', '', 'g') ||
-        |    '","v":' || CAST(round(value * 100) AS BIGINT) || '}]}' AS line
-        |  FROM events)
-        |SELECT json_extract_string(line, '$.node.zone') AS zone,
-        |  json_extract_string(line, '$.metrics[0].t') AS mtype,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(json_extract(line, '$.metrics[0].v') AS BIGINT)) AS BIGINT) / 100.0
-        |    AS total_value
-        |FROM lines GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "m28_gap_fill" ->
-      s"""WITH e AS (SELECT user_id,
-         |    $tsUs - $tsUs % 3600000000 AS b_us, value
-         |  FROM events WHERE user_id % 10 = 0),
-         |obs AS (SELECT user_id, b_us, CAST(count(*) AS BIGINT) AS n_obs, max(value) AS mv
-         |  FROM e GROUP BY 1, 2),
-         |span AS (SELECT user_id, min(b_us) AS mn, max(b_us) AS mx FROM obs GROUP BY 1),
-         |grid AS (SELECT user_id, unnest(generate_series(mn, mx, 3600000000)) AS b_us FROM span)
-         |SELECT g.user_id, g.b_us AS bucket_us,
-         |  coalesce(o.n_obs, 0) AS n_obs,
-         |  last_value(o.mv IGNORE NULLS) OVER (PARTITION BY g.user_id ORDER BY g.b_us
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ffill_value
-         |FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.b_us = o.b_us
-         |ORDER BY g.user_id, bucket_us""".stripMargin,
-
-    "m42_rate_limiter" ->
-      s"""WITH RECURSIVE seq AS (SELECT user_id, event_id, $tsUs AS ts_us,
-         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS BIGINT) AS rn
-         |  FROM events),
-         |rec AS (
-         |  SELECT user_id, event_id, ts_us, rn,
-         |    CAST(1 AS INT) AS admitted, CAST(240000000 AS BIGINT) AS ta
-         |  FROM seq WHERE rn = 1
-         |  UNION ALL
-         |  SELECT s.user_id, s.event_id, s.ts_us, s.rn,
-         |    CAST(CASE WHEN least(300000000, r.ta + (s.ts_us - r.ts_us)) >= 60000000
-         |      THEN 1 ELSE 0 END AS INT) AS admitted,
-         |    CAST(least(300000000, r.ta + (s.ts_us - r.ts_us)) -
-         |      CASE WHEN least(300000000, r.ta + (s.ts_us - r.ts_us)) >= 60000000
-         |        THEN 60000000 ELSE 0 END AS BIGINT) AS ta
-         |  FROM rec r JOIN seq s ON s.user_id = r.user_id AND s.rn = r.rn + 1)
-         |SELECT user_id, event_id, ts_us, admitted, ta AS tokens_after
-         |FROM rec ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "m41_interval_coalesce" ->
-      s"""SELECT user_id, island_idx, CAST(min(ts_us) AS BIGINT) AS start_us,
-         |  CAST(max(end_us) AS BIGINT) AS end_us, count(*) AS n_events
-         |FROM (
-         |  SELECT user_id, ts_us, end_us,
-         |    CAST(sum(new_island) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS island_idx
-         |  FROM (
-         |    SELECT user_id, event_id, ts_us, end_us,
-         |      CASE WHEN pme IS NULL OR ts_us > pme THEN 1 ELSE 0 END AS new_island
-         |    FROM (
-         |      SELECT user_id, event_id, $tsUs AS ts_us,
-         |        $tsUs + 300000000 AS end_us,
-         |        max($tsUs + 300000000) OVER (PARTITION BY user_id
-         |          ORDER BY $tsUs, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-         |      FROM events) a) b) c
-         |GROUP BY user_id, island_idx ORDER BY user_id, island_idx""".stripMargin,
-
-    "m40_trend_forecast" ->
-      s"""WITH daily AS (SELECT user_id, $tsUs // 86400000000 AS d,
-         |    CAST(sum(CAST(round(value) AS BIGINT)) AS BIGINT) AS y
-         |  FROM events GROUP BY 1, 2),
-         |based AS (SELECT user_id, d - min(d) OVER (PARTITION BY user_id) AS x, y
-         |  FROM daily),
-         |m AS (SELECT user_id, CAST(count(*) AS INT) AS n_days,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(max(x) AS BIGINT) AS mx
-         |  FROM based GROUP BY user_id),
-         |f AS (SELECT user_id, n_days,
-         |    CAST(n_days * sxy - sx * sy AS BIGINT) AS num,
-         |    CAST(n_days * sxx - sx * sx AS BIGINT) AS d1,
-         |    sx, sy, mx + 7 AS xf
-         |  FROM m WHERE n_days >= 3)
-         |SELECT user_id, n_days,
-         |  CAST(num AS DOUBLE) / CAST(d1 AS DOUBLE) AS slope,
-         |  CAST((sy * d1 - num * sx + num * n_days * xf) // (n_days * d1) AS BIGINT) AS forecast_units,
-         |  CAST(xf AS INT) AS forecast_x
-         |FROM f WHERE d1 > 0
-         |ORDER BY user_id""".stripMargin,
-
-    "m39_seasonal_baseline" ->
-      s"""SELECT user_id, hod, n_obs, sum_cents, latest_cents,
-         |  CAST(CASE WHEN sum_cents > 0
-         |    THEN (latest_cents * n_obs - sum_cents) * 10000 // sum_cents
-         |    ELSE NULL END AS BIGINT) AS dev_bp
-         |FROM (
-         |  SELECT user_id, hod, CAST(count(*) OVER pw AS BIGINT) AS n_obs,
-         |    CAST(sum(vc) OVER pw AS BIGINT) AS sum_cents,
-         |    vc AS latest_cents,
-         |    row_number() OVER (PARTITION BY user_id, hod ORDER BY ts_us DESC, event_id DESC) AS rn
-         |  FROM (SELECT user_id, event_id, $tsUs AS ts_us,
-         |      CAST(round(value * 100) AS BIGINT) AS vc,
-         |      CAST(($tsUs // 3600000000) % 24 AS INT) AS hod
-         |    FROM events) e
-         |  WINDOW pw AS (PARTITION BY user_id, hod)) t
-         |WHERE rn = 1 ORDER BY user_id, hod""".stripMargin,
-
-    "m38_flap_detection" ->
-      s"""SELECT user_id, count(*) AS n_events,
-         |  CAST(sum(flip) AS BIGINT) AS n_flips,
-         |  CAST(CASE WHEN CAST(sum(flip) AS BIGINT) >= 6 THEN 1 ELSE 0 END AS INT) AS flapping
-         |FROM (
-         |  SELECT user_id,
-         |    CASE WHEN prev_type IS NOT NULL AND
-         |      ((event_type = 'error') != (prev_type = 'error')) THEN 1 ELSE 0 END AS flip
-         |  FROM (
-         |    SELECT user_id, event_type,
-         |      lag(event_type) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS prev_type
-         |    FROM events) a) b
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m37_metric_correlation" ->
-      s"""WITH b AS (SELECT user_id, $tsUs // 600000000 AS bucket,
-         |    CAST(count(*) AS BIGINT) AS x,
-         |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-         |  FROM events GROUP BY 1, 2),
-         |m AS (SELECT user_id, CAST(count(*) AS INT) AS n_buckets,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx, CAST(sum(y * y) AS BIGINT) AS syy,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy
-         |  FROM b GROUP BY user_id),
-         |d AS (SELECT user_id, n_buckets,
-         |    CAST(n_buckets * sxy - sx * sy AS BIGINT) AS num,
-         |    CAST(n_buckets * sxx - sx * sx AS BIGINT) AS d1,
-         |    CAST(n_buckets * syy - sy * sy AS BIGINT) AS d2
-         |  FROM m WHERE n_buckets >= 3)
-         |SELECT user_id, n_buckets, num,
-         |  CAST(num AS DOUBLE) / sqrt(CAST(d1 AS DOUBLE)) / sqrt(CAST(d2 AS DOUBLE)) AS r
-         |FROM d WHERE d1 > 0 AND d2 > 0
-         |ORDER BY user_id""".stripMargin,
-
-    "m36_linear_interp" ->
-      s"""WITH e AS (SELECT user_id, event_id, $tsUs AS ts_us,
-         |    CAST(round(value * 100) AS BIGINT) AS vc
-         |  FROM events WHERE user_id % 10 = 1),
-         |p AS (SELECT user_id, ts_us, vc,
-         |    lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS t1,
-         |    lead(vc) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS v1
-         |  FROM e),
-         |g AS (SELECT user_id, ts_us, vc, t1, v1, t.m AS mark
-         |  FROM (SELECT * FROM p WHERE t1 IS NOT NULL AND t1 - ts_us <= 7200000000) pp,
-         |  LATERAL unnest(generate_series((ts_us // 60000000 + 1) * 60000000,
-         |    t1 - 1, 60000000)) t(m))
-         |SELECT user_id, mark AS mark_us,
-         |  CAST((vc * (t1 - mark) + v1 * (mark - ts_us)) // (t1 - ts_us) AS BIGINT) AS interp_cents,
-         |  CAST(CAST((vc * (t1 - mark) + v1 * (mark - ts_us)) // (t1 - ts_us) AS BIGINT) AS DOUBLE) / 100.0 AS v_interp
-         |FROM g ORDER BY user_id, mark_us""".stripMargin,
-
-    "m44_burn_rate" ->
-      s"""WITH b5 AS (SELECT $tsUs // 300000000 AS b5,
-         |    CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS e
-         |  FROM events GROUP BY 1),
-         |h AS (SELECT b5 // 12 AS bh, CAST(sum(n) AS BIGINT) AS nh,
-         |    CAST(sum(e) AS BIGINT) AS eh FROM b5 GROUP BY 1),
-         |g AS (SELECT CAST(sum(e) AS BIGINT) * 10000 // CAST(sum(n) AS BIGINT) AS g_bp FROM b5)
-         |SELECT make_timestamp(b5 * 300000000) AS bucket, n, e,
-         |  e * 10000 // n AS err5_bp, eh * 10000 // nh AS err1h_bp,
-         |  CAST(CASE WHEN e * 10000 // n >= 2 * g_bp
-         |    AND (eh * 10000 // nh) * 10 >= 12 * g_bp THEN 1 ELSE 0 END AS INT) AS fast_burn
-         |FROM b5 JOIN h ON b5 // 12 = bh CROSS JOIN g
-         |ORDER BY bucket""".stripMargin,
-
-    // day-split omitted on purpose: the merge is plain count addition,
-    // so merged-by-day == built-on-full by associativity (the property
-    // QuantileSketchSpec asserts); the oracle states the merged sketch.
-    "m43_quantile_sketch" ->
-      """WITH b AS (SELECT event_type,
-        |    CAST(round(value * 100) AS BIGINT) // 64 AS bin,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n FROM b GROUP BY 1),
-        |cu AS (SELECT b.event_type, bin, c, n,
-        |    CAST(sum(c) OVER (PARTITION BY b.event_type ORDER BY bin) AS BIGINT) AS cum
-        |  FROM b JOIN t USING (event_type))
-        |SELECT event_type, CAST(max(n) AS BIGINT) AS n, CAST(count(*) AS INT) AS n_bins,
-        |  CAST((min(CASE WHEN cum * 100 >= n * 50 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p50_est,
-        |  CAST((min(CASE WHEN cum * 100 >= n * 95 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p95_est,
-        |  CAST((min(CASE WHEN cum * 100 >= n * 99 THEN bin END) + 1) * 64 AS DOUBLE) / 100.0 AS p99_est
-        |FROM cu GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "m51_cusum_changepoint" ->
-      s"""WITH RECURSIVE c AS (SELECT event_type,
-         |    CAST($tsUs // 300000000 AS BIGINT) AS bucket,
-         |    CAST(count(*) AS BIGINT) AS cnt
-         |  FROM events GROUP BY 1, 2),
-         |r AS (SELECT event_type, CAST(sum(cnt) // count(*) AS BIGINT) AS ref0,
-         |    CAST(count(*) AS BIGINT) AS nb FROM c GROUP BY 1),
-         |r2 AS (SELECT event_type, nb, ref0 + ref0 // 2 + 1 AS thr,
-         |    3 * (ref0 + 1) AS h FROM r),
-         |e AS (SELECT event_type, bucket, cnt,
-         |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY bucket) AS BIGINT) AS rn
-         |  FROM c),
-         |walk(event_type, rn, s, alarms, first_b, maxs) AS (
-         |  SELECT event_type, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-         |    CAST(0 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT) FROM r2
-         |  UNION ALL
-         |  SELECT w.event_type, e.rn,
-         |    CASE WHEN greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
-         |         THEN CAST(0 AS BIGINT)
-         |         ELSE greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) END,
-         |    w.alarms + CASE WHEN greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
-         |         THEN 1 ELSE 0 END,
-         |    CASE WHEN w.first_b < 0
-         |          AND greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr) > r2.h
-         |         THEN e.bucket ELSE w.first_b END,
-         |    greatest(w.maxs, greatest(CAST(0 AS BIGINT), w.s + e.cnt - r2.thr))
-         |  FROM walk w
-         |  JOIN e ON e.event_type = w.event_type AND e.rn = w.rn + 1
-         |  JOIN r2 ON r2.event_type = w.event_type)
-         |SELECT w.event_type, r2.nb AS n_buckets, w.alarms AS n_alarms,
-         |  w.first_b AS first_alarm_bucket, w.maxs AS max_cusum
-         |FROM walk w JOIN r2 ON r2.event_type = w.event_type
-         |WHERE w.rn = r2.nb ORDER BY w.event_type""".stripMargin,
-
-    "m50_seq_trigrams" ->
-      s"""WITH tl AS (SELECT user_id,
-         |    list(event_type ORDER BY $tsUs, event_id) AS types
-         |  FROM events GROUP BY user_id),
-         |tri AS (SELECT unnest(CASE WHEN len(types) >= 3
-         |    THEN list_transform(generate_series(1, len(types) - 2),
-         |      i -> types[i] || ' ' || types[i+1] || ' ' || types[i+2])
-         |    ELSE [] END) AS trigram FROM tl)
-         |SELECT trigram, CAST(count(*) AS BIGINT) AS n
-         |FROM tri GROUP BY trigram ORDER BY n DESC, trigram LIMIT 20""".stripMargin,
-
-    "m49_subnet_rollup" ->
-      """WITH e AS (SELECT event_type,
-        |    '10.' || CAST(user_id % 200 AS VARCHAR) || '.' ||
-        |    CAST((user_id // 200) % 250 AS VARCHAR) || '.' ||
-        |    CAST(event_id % 254 + 1 AS VARCHAR) AS ip
-        |  FROM events),
-        |p AS (SELECT event_type, string_split(ip, '.') AS parts FROM e),
-        |o AS (SELECT event_type,
-        |    CAST(parts[2] AS BIGINT) AS o1, CAST(parts[3] AS BIGINT) AS o2,
-        |    CAST(parts[4] AS BIGINT) AS o3
-        |  FROM p)
-        |SELECT '10.' || CAST(o1 AS VARCHAR) || '.' || CAST(o2 AS VARCHAR)
-        |    || '.0/24' AS subnet,
-        |  count(*) AS n_events,
-        |  CAST(count(DISTINCT o3) AS BIGINT) AS n_hosts,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_errors
-        |FROM o GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // recursive CTE, not list_reduce — DuckDB 1.0's list_reduce
-    // mis-folds on varying list lengths (st14's repro)
-    "m48_ewma_smooth" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS c,
-        |    CAST(row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) AS BIGINT) AS rn
-        |  FROM events),
-        |n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-        |  FROM e GROUP BY user_id),
-        |walk(user_id, rn, ew) AS (
-        |  SELECT user_id, rn, c FROM e WHERE rn = 1
-        |  UNION ALL
-        |  SELECT w.user_id, e.rn, (w.ew + e.c) // 2
-        |  FROM walk w JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
-        |SELECT n.user_id, n.n_events, w.ew AS ewma_c
-        |FROM walk w JOIN n ON n.user_id = w.user_id AND w.rn = n.n_events
-        |ORDER BY n.user_id""".stripMargin,
-
-    "m47_log_quantile" ->
-      """WITH ev AS (SELECT event_type,
-        |    CAST(round(value * 100) AS BIGINT) *
-        |      (CAST(1 AS BIGINT) << CAST(user_id % 24 AS INT)) AS v
-        |  FROM events),
-        |b AS (SELECT event_type,
-        |    CASE WHEN v < 16 THEN v
-        |         ELSE 16 * (length(bin(v)) - 1) +
-        |              v // (CAST(1 AS BIGINT) << CAST(length(bin(v)) - 5 AS INT)) - 64 END AS qbin,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM ev GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n FROM b GROUP BY 1),
-        |cu AS (SELECT b.event_type, qbin, c, n,
-        |    CAST(sum(c) OVER (PARTITION BY b.event_type ORDER BY qbin) AS BIGINT) AS cum
-        |  FROM b JOIN t USING (event_type)),
-        |r AS (SELECT event_type, CAST(max(n) AS BIGINT) AS n, CAST(count(*) AS INT) AS n_bins,
-        |    min(CASE WHEN cum * 100 >= n * 50 THEN qbin END) AS b50,
-        |    min(CASE WHEN cum * 100 >= n * 95 THEN qbin END) AS b95,
-        |    min(CASE WHEN cum * 100 >= n * 99 THEN qbin END) AS b99
-        |  FROM cu GROUP BY event_type)
-        |SELECT event_type, n, n_bins,
-        |  CASE WHEN b50 < 16 THEN b50 ELSE (CAST(17 + b50 % 16 AS BIGINT) << CAST(b50 // 16 - 1 AS INT)) - 1 END AS p50_max_cents,
-        |  CASE WHEN b95 < 16 THEN b95 ELSE (CAST(17 + b95 % 16 AS BIGINT) << CAST(b95 // 16 - 1 AS INT)) - 1 END AS p95_max_cents,
-        |  CASE WHEN b99 < 16 THEN b99 ELSE (CAST(17 + b99 % 16 AS BIGINT) << CAST(b99 // 16 - 1 AS INT)) - 1 END AS p99_max_cents
-        |FROM r ORDER BY event_type""".stripMargin,
-
-    "m35_hll_distinct" ->
-      """WITH h AS (SELECT md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
-        |rk AS (SELECT
-        |    ((strpos('0123456789abcdef', substr(_h, 1, 1)) - 1) * 16 +
-        |     (strpos('0123456789abcdef', substr(_h, 2, 1)) - 1)) % 64 AS idx,
-        |    CASE WHEN lz >= 12 THEN 49 ELSE lz * 4 +
-        |      (CASE WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 8 THEN 0
-        |            WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 4 THEN 1
-        |            WHEN strpos('0123456789abcdef', substr(tail, lz + 1, 1)) - 1 >= 2 THEN 2
-        |            ELSE 3 END) + 1 END AS rnk
-        |  FROM (SELECT _h, substr(_h, 3, 12) AS tail,
-        |      length(regexp_extract(substr(_h, 3, 12), '^0*')) AS lz FROM h) t),
-        |regs AS (SELECT idx, max(rnk) AS mreg FROM rk GROUP BY idx),
-        |sk AS (SELECT CAST(count(*) AS INT) AS n_hit,
-        |    CAST(sum(CAST(1 AS BIGINT) << CAST(50 - mreg AS INT)) AS BIGINT) AS s_present
-        |  FROM regs),
-        |ex AS (SELECT count(DISTINCT user_id) AS exact_distinct FROM events),
-        |est AS (SELECT n_hit, exact_distinct,
-        |    2904064 * CAST(1099511627776 AS BIGINT) //
-        |      (1000 * ((s_present + (64 - n_hit) * CAST(1125899906842624 AS BIGINT)) // 1024))
-        |      AS est_distinct
-        |  FROM sk CROSS JOIN ex)
-        |SELECT CAST(64 AS INT) AS m, n_hit, CAST(est_distinct AS BIGINT) AS est_distinct,
-        |  exact_distinct,
-        |  CAST(abs(est_distinct - exact_distinct) * 10000 // exact_distinct AS BIGINT) AS err_bp
-        |FROM est""".stripMargin,
-
-    "m45_hll_algebra" ->
+    QueryKey("m45_hll_algebra",
       """WITH h AS (SELECT event_type, md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
         |rk AS (SELECT event_type,
         |    ((strpos('0123456789abcdef', substr(_h, 1, 1)) - 1) * 16 +
@@ -1677,361 +1836,90 @@ object MonitoringQueries {
         |  greatest(CAST(0 AS BIGINT), ea.est + eb.est - est_union) * 10000 // est_union AS jaccard_bp
         |FROM uu JOIN est ea ON ea.event_type = uu.type_a
         |JOIN est eb ON eb.event_type = uu.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
+        |ORDER BY type_a, type_b""".stripMargin) { (s, dir) =>
+      import graft.functions.HllSketch
+      val hashed = HllSketch.withIndexRank(
+        Tables.events(s, dir).select(col("event_type"), col("user_id")),
+        col("user_id"))
+      val aggs = HllSketch.registerAggs
+      val perType = hashed.groupBy(col("event_type"))
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("s_total", expr(HllSketch.sTotalExpr))
+        .withColumn("est", expr(HllSketch.estimateExpr))
+        .withColumn("regs", array((0 until HllSketch.registers)
+          .map(i => coalesce(col(s"r$i"), lit(0))): _*))
+        .select(col("event_type"), col("regs"), col("est"))
+      perType
+        .agg(expr("array_sort(collect_list(struct(event_type, regs, est)))").as("sk"))
+        .select(explode(expr(
+          "flatten(transform(sequence(1, size(sk) - 1), i -> " +
+          "transform(sequence(0, i - 1), j -> struct(sk[j] AS a, sk[i] AS b))))")).as("p"))
+        .select(col("p.a.event_type").as("type_a"), col("p.b.event_type").as("type_b"),
+          col("p.a.est").as("est_a"), col("p.b.est").as("est_b"),
+          expr("aggregate(zip_with(p.a.regs, p.b.regs, (x, y) -> " +
+            "shiftleft(CAST(1 AS BIGINT), CAST(50 - greatest(x, y) AS INT))), " +
+            "CAST(0 AS BIGINT), (acc, t) -> acc + t)").as("s_union"))
+        .withColumn("est_union", expr(HllSketch.estimateOf("s_union")))
+        .withColumn("est_inter",
+          expr("greatest(CAST(0 AS BIGINT), est_a + est_b - est_union)"))
+        .withColumn("jaccard_bp", expr("est_inter * 10000 div est_union"))
+        .drop("s_union")
+        .orderBy(col("type_a"), col("type_b"))
+    },
 
-    "m34_error_uptime" ->
-      s"""SELECT user_id,
-         |  CAST(sum(CASE WHEN event_type = 'error' THEN next_us - ts_us ELSE 0 END) AS BIGINT) AS err_us,
-         |  CAST(sum(next_us - ts_us) AS BIGINT) AS span_us,
-         |  CAST(CAST(sum(CASE WHEN event_type = 'error' THEN next_us - ts_us ELSE 0 END) AS BIGINT)
-         |    * 10000 // CAST(sum(next_us - ts_us) AS BIGINT) AS BIGINT) AS err_bp
-         |FROM (
-         |  SELECT user_id, event_type, $tsUs AS ts_us,
-         |    lead($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) AS next_us
-         |  FROM events) t
-         |WHERE next_us IS NOT NULL
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m33_retention_cohorts" ->
-      s"""WITH e AS (SELECT user_id, event_type, $tsUs AS ts_us FROM events),
-         |f AS (SELECT user_id, min(ts_us) // 604800000000 AS cohort_wk
-         |  FROM e WHERE event_type = 'signup' GROUP BY 1),
-         |a AS (SELECT DISTINCT e.user_id, f.cohort_wk,
-         |    e.ts_us // 604800000000 - f.cohort_wk AS wk_off
-         |  FROM e JOIN f USING (user_id)
-         |  WHERE e.event_type = 'purchase'
-         |    AND e.ts_us // 604800000000 >= f.cohort_wk)
-         |SELECT cohort_wk, wk_off, CAST(count(*) AS BIGINT) AS n_users
-         |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "m32_cms_heavy_hitters" ->
-      """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
-        |r AS (SELECT key, i AS r,
-        |    (strpos('0123456789abcdef', substr(md5('cms' || i || '|' || key), 1, 1)) - 1) * 16 +
-        |    (strpos('0123456789abcdef', substr(md5('cms' || i || '|' || key), 2, 1)) - 1) AS b
-        |  FROM k, generate_series(0, 3) t(i)),
-        |sk AS (SELECT r, b, CAST(count(*) AS BIGINT) AS c FROM r GROUP BY 1, 2),
-        |truec AS (SELECT key, CAST(count(*) AS BIGINT) AS true_n FROM k GROUP BY 1),
-        |est AS (SELECT key, min(c) AS cms_n
-        |  FROM (SELECT DISTINCT key, r, b FROM r) d JOIN sk USING (r, b) GROUP BY key)
-        |SELECT key, true_n, cms_n FROM truec JOIN est USING (key)
-        |ORDER BY true_n DESC, key LIMIT 20""".stripMargin,
-
-    "m31_anomaly_zscore" ->
-      """WITH e AS (SELECT user_id, event_id, value,
-        |    CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        |s AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(c) AS BIGINT) AS s1, CAST(sum(c*c) AS BIGINT) AS s2
-        |  FROM e GROUP BY user_id)
-        |SELECT user_id, event_id, value, n AS n_user_events
-        |FROM e JOIN s USING (user_id)
-        |WHERE n >= 2 AND (n*c - s1)*(n*c - s1) > 9*(n*s2 - s1*s1)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "m30_funnel_conversion" ->
-      s"""WITH e AS (SELECT user_id, event_type, $tsUs AS ts_us FROM events),
-         |v AS (SELECT user_id, min(ts_us) AS fv FROM e
-         |  WHERE event_type = 'view' GROUP BY user_id),
-         |c AS (SELECT e.user_id, min(fv) AS fv, min(ts_us) AS fc
-         |  FROM e JOIN v ON e.user_id = v.user_id
-         |  WHERE event_type = 'click' AND ts_us > fv GROUP BY e.user_id)
-         |SELECT e.user_id, min(fv) AS first_view_us, min(fc) AS first_click_us,
-         |  min(ts_us) AS first_purchase_us
-         |FROM e JOIN c ON e.user_id = c.user_id
-         |WHERE event_type = 'purchase' AND ts_us > fc
-         |GROUP BY e.user_id ORDER BY e.user_id""".stripMargin,
-
-    // latest-wins replicated with a DuckDB window (arg_max can't take a
-    // composite tie-break key); same (ts_us DESC, event_id DESC) order.
-    "m53_corrupt_quarantine" ->
-      """WITH r AS (SELECT event_id,
-        |    CASE WHEN event_id % 13 = 0 THEN substr(props, 1, length(props) - 1)
-        |      ELSE props END AS line
-        |  FROM events),
-        |c AS (SELECT
-        |    CASE WHEN json_valid(line) AND json_extract(line, '$.k') IS NOT NULL
-        |      THEN 'clean' ELSE 'quarantine' END AS lane,
-        |    CASE WHEN json_valid(line)
-        |      THEN CAST(json_extract(line, '$.k') AS INT) END AS k
-        |  FROM r)
-        |SELECT lane, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(coalesce(sum(k), 0) AS BIGINT) AS sum_k
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "m52_scd2_history" ->
-      s"""WITH e AS (SELECT user_id, $tsUs AS ts_us, event_id, event_type
-         |  FROM events),
-         |c AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
-         |    ORDER BY ts_us, event_id) AS prev FROM e),
-         |ch AS (SELECT user_id, ts_us, event_id, event_type FROM c
-         |  WHERE prev IS NULL OR prev <> event_type)
-         |SELECT user_id, CAST(row_number() OVER w AS INT) AS version,
-         |  event_type AS state, ts_us AS valid_from_us,
-         |  lead(ts_us) OVER w AS valid_to_us,
-         |  (lead(ts_us) OVER w IS NULL) AS is_current
-         |FROM ch
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-         |ORDER BY user_id, version""".stripMargin,
-
-    "m29_cdc_upsert" ->
-      s"""SELECT user_id, event_type, ts_us AS last_ts_us, value AS last_value, n_versions
-         |FROM (
-         |  SELECT user_id, event_type, $tsUs AS ts_us, value,
-         |    CAST(count(*) OVER (PARTITION BY user_id, event_type) AS BIGINT) AS n_versions,
-         |    row_number() OVER (PARTITION BY user_id, event_type
-         |      ORDER BY $tsUs DESC, event_id DESC) AS rn
-         |  FROM events) t
-         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-
-    "m1_health_snapshot" ->
-      """SELECT user_id, count(*) AS n_total,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-        |  CAST(floor((count(*) - sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)) * 100 / count(*)) AS INT) AS health_pct
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m2_replication_lag" ->
-      s"""SELECT user_id,
-         |  (SELECT max($tsUs) FROM events) - max($tsUs) AS lag_us,
-         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS queue_size
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m3_parts_metrics" ->
-      """SELECT l_returnflag AS part_group,
-        |  floor(CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE) / sum(CAST(round(l_quantity*100) AS BIGINT)) * 100) / 100.0 AS avg_event_size,
-        |  floor(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 / 1000000.0 * 100) / 100.0 AS gb_on_disk,
-        |  count(*) AS n_parts
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "m4_bloat_pct" ->
-      """SELECT user_id,
-        |  floor(CAST(sum(CASE WHEN event_type = 'error' THEN CAST(round(value*100) AS BIGINT) ELSE 0 END) AS DOUBLE) * 100.0 / sum(CAST(round(value*100) AS BIGINT)) * 100) / 100.0 AS bloat_pct
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m5_kv_parse" ->
-      """SELECT event_id, event_id AS recved, user_id AS sent,
-        |  true AS enable_logging, event_type AS server_mode, user_id AS node_count
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "m6_event_emit" ->
-      """SELECT user_id,
-        |  'PH_SYSTEM_DATA_NODE_HEALTH={' ||
-        |  concat_ws(',',
-        |    '"deviceName":"node-' || user_id || '"',
-        |    CASE WHEN user_id % 3 = 0 THEN NULL
-        |         ELSE '"zone":"zone-' || (user_id % 3) || '"' END,
-        |    '"shard":' || (user_id % 4 + 1),
-        |    '"queueSize":' || n_error,
-        |    '"healthPct":' || health_pct) || '}' AS payload
-        |FROM (
-        |  SELECT user_id, CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-        |    CAST(floor((count(*) - sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)) * 100 / count(*)) AS INT) AS health_pct
-        |  FROM events GROUP BY user_id) t
-        |ORDER BY user_id""".stripMargin,
-
-    "m7_sentinel_null" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_shipdate = TIMESTAMP '1995-01-02' THEN NULL ELSE l_shipdate END AS ship_ts
-        |FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-03-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "m8_shard_rollup" ->
-      """SELECT r_name AS shard, count(*) AS n_nodes,
-        |  CAST(sum(n_replicas) AS BIGINT) AS total_replicas,
-        |  max(n_replicas) AS max_node_replicas
-        |FROM (
-        |  SELECT n_regionkey, n_name, count(*) AS n_replicas
-        |  FROM customer, nation WHERE c_nationkey = n_nationkey
-        |  GROUP BY n_regionkey, n_name) pn, region
-        |WHERE n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY shard""".stripMargin,
-
-    "m9_enrich_lookup" ->
-      """SELECT DISTINCT user_id,
-        |  coalesce(c_name, 'node-' || user_id) AS device_name
-        |FROM events LEFT JOIN customer ON user_id = c_custkey
-        |ORDER BY user_id""".stripMargin,
-
-    "m10_time_buckets" ->
-      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
-         |  count(*) AS n,
-         |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
-         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin,
-
-    "m11_client_stats" ->
-      """SELECT user_id, count(*) AS recved, min(value) AS minlat,
-        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 / count(*) AS avglat,
-        |  max(value) AS maxlat
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m12_top_talkers" ->
-      """SELECT user_id,
-        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS traffic,
-        |  count(*) AS n_events
-        |FROM events GROUP BY user_id
-        |ORDER BY traffic DESC, user_id LIMIT 10""".stripMargin,
-
-    "m13_json_extract" ->
-      """SELECT CAST(props->>'$.k' AS INT) % 10 AS k_bucket, count(*) AS n,
-        |  CAST(sum(CAST(props->>'$.k' AS INT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-
-    "m15_asof_prior" ->
-      s"""WITH e AS (SELECT event_id, user_id, event_type, $tsUs AS ts_us FROM events),
-         |p AS (SELECT *,
-         |  max(CASE WHEN event_type = 'purchase'
-         |      THEN lpad(CAST(ts_us AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 10, '0') END)
-         |    OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prior
-         |  FROM e)
-         |SELECT user_id, event_id, ts_us,
-         |  CAST(substr(prior, 1, 20) AS BIGINT) AS prior_ts_us,
-         |  CAST(substr(prior, 21, 10) AS BIGINT) AS prior_id,
-         |  ts_us - CAST(substr(prior, 1, 20) AS BIGINT) AS gap_us
-         |FROM p WHERE event_type = 'error' AND prior IS NOT NULL
-         |ORDER BY user_id, event_id""".stripMargin,
-
-    "m16_error_streaks" ->
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    CAST(event_type = 'error' AS INT) AS _is, $tsUs AS ts_us FROM events),
-         |g AS (SELECT user_id, _is,
-         |    row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) -
-         |    row_number() OVER (PARTITION BY user_id, _is ORDER BY ts_us, event_id) AS grp
-         |  FROM e),
-         |runs AS (SELECT user_id, grp, count(*) AS len FROM g WHERE _is = 1 GROUP BY user_id, grp)
-         |SELECT user_id, max(len) AS max_streak, count(*) AS n_streaks
-         |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m17_conf_drift" ->
-      """SELECT event_type,
-        |  CAST(count(DISTINCT CAST(props->>'$.k' AS INT)) AS BIGINT) AS n_distinct_values,
-        |  min(CAST(props->>'$.k' AS INT)) AS min_value,
-        |  max(CAST(props->>'$.k' AS INT)) AS max_value,
-        |  count(DISTINCT CAST(props->>'$.k' AS INT)) > 1 AS drifted
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "m18_json_ingest" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "m19_rate_of_change" ->
-      s"""SELECT user_id, event_id, v_cents,
-         |  v_cents - lag(v_cents) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS delta_cents
-         |FROM (SELECT user_id, event_id, $tsUs AS ts_us,
-         |    CAST(round(value*100) AS BIGINT) AS v_cents FROM events) t
-         |ORDER BY user_id, event_id""".stripMargin,
-
-    "m20_cons_parse" ->
-      """SELECT event_id,
-        |  '192.168.1.' || (user_id % 250) AS client_ip,
-        |  30000 + (event_id % 20000) AS port,
-        |  event_id % 7 AS queued,
-        |  event_id AS recved,
-        |  user_id AS sent,
-        |  '0x' || printf('%x', 281474976710656 + user_id) AS sid,
-        |  CASE CAST(event_id % 4 AS INT) WHEN 0 THEN 'PING' WHEN 1 THEN 'GETD'
-        |       WHEN 2 THEN 'SETD' ELSE 'CREA' END AS lop,
-        |  1598892558000 + event_id AS est,
-        |  CAST(30000 AS BIGINT) AS to_ms,
-        |  '0x' || printf('%x', event_id * 16 + 10) AS lzxid,
-        |  1598892558100 + event_id AS lresp,
-        |  event_id % 50 AS llat,
-        |  CAST(0 AS BIGINT) AS minlat,
-        |  event_id % 5 AS avglat,
-        |  event_id % 100 + 5 AS maxlat
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "m21_heartbeat_gaps" ->
-      s"""SELECT user_id, max(gap_us) AS max_gap_us, count(*) AS n_heartbeats,
-         |  max(ts_us) - min(ts_us) AS span_us
-         |FROM (SELECT user_id, ts_us,
-         |    ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS gap_us
-         |  FROM (SELECT user_id, event_id, $tsUs AS ts_us FROM events) a) b
-         |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "m22_nested_roundtrip" ->
-      s"""SELECT user_id % 4 + 1 AS shard,
-         |  'node-' || user_id AS device_name,
-         |  '10.0.' || (user_id // 256) || '.' || (user_id % 256) AS device_ip,
-         |  event_type AS db_table, count(*) AS queue_size,
-         |  max($tsUs) AS last_us,
-         |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS v_cents
-         |FROM events GROUP BY user_id, event_type
-         |ORDER BY shard, device_name, db_table""".stripMargin,
-
-    "m23_absent_nodes" ->
-      """SELECT c_custkey AS node_id,
-        |  'PH_SYSTEM_KEEPER_NODE_HEALTH={"deviceName":"' || c_name ||
-        |  '","deviceIp":"10.0.' || (c_custkey // 256) || '.' || (c_custkey % 256) ||
-        |  '","error":"No response received"}' AS payload
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM events WHERE user_id = c_custkey)
-        |ORDER BY node_id""".stripMargin,
-
-    "m24_cadence_rollup" ->
-      s"""SELECT * FROM (
-         |  SELECT 3 AS cadence_min, make_timestamp($tsUs - $tsUs % 180000000) AS bucket,
-         |    count(*) AS n, sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
-         |  FROM events GROUP BY 2
-         |  UNION ALL
-         |  SELECT 5, make_timestamp($tsUs - $tsUs % 300000000),
-         |    count(*), sum(CAST(round(value*100) AS BIGINT)) / 100.0
-         |  FROM events GROUP BY 2
-         |  UNION ALL
-         |  SELECT 30, make_timestamp($tsUs - $tsUs % 1800000000),
-         |    count(*), sum(CAST(round(value*100) AS BIGINT)) / 100.0
-         |  FROM events GROUP BY 2) t
-         |ORDER BY cadence_min, bucket""".stripMargin,
-
-    "m25_status_alerts" ->
-      s"""SELECT user_id, event_id, ts_us, prev AS prev_severity, severity AS new_severity
-         |FROM (
-         |  SELECT user_id, event_id, ts_us, severity,
-         |    lag(severity) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev
-         |  FROM (
-         |    SELECT user_id, event_id, $tsUs AS ts_us,
-         |      CASE WHEN value >= 100.0 THEN 'crit'
-         |           WHEN value >= 50.0 THEN 'warn' ELSE 'ok' END AS severity
-         |    FROM events) a) b
-         |WHERE prev IS NOT NULL AND prev <> severity
-         |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "m26_column_profile" ->
-      """WITH base AS (SELECT count(*) AS n_rows FROM documents)
-        |SELECT col_name, n_rows, n_nulls, n_distinct, min_val, max_val FROM (
-        |  SELECT 'lang' AS col_name, base.n_rows,
-        |    (SELECT CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents) AS n_nulls,
-        |    (SELECT count(DISTINCT lang) FROM documents) AS n_distinct,
-        |    (SELECT CAST(min(lang) AS VARCHAR) FROM documents) AS min_val,
-        |    (SELECT CAST(max(lang) AS VARCHAR) FROM documents) AS max_val
-        |  FROM base
-        |  UNION ALL
-        |  SELECT 'source', base.n_rows,
-        |    (SELECT CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents),
-        |    (SELECT count(DISTINCT source) FROM documents),
-        |    (SELECT CAST(min(source) AS VARCHAR) FROM documents),
-        |    (SELECT CAST(max(source) AS VARCHAR) FROM documents)
-        |  FROM base
-        |  UNION ALL
-        |  SELECT 'n_chars', base.n_rows,
-        |    (SELECT CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM documents),
-        |    (SELECT count(DISTINCT n_chars) FROM documents),
-        |    (SELECT CAST(min(n_chars) AS VARCHAR) FROM documents),
-        |    (SELECT CAST(max(n_chars) AS VARCHAR) FROM documents)
-        |  FROM base) t
-        |ORDER BY col_name""".stripMargin,
-
-    "m27_incremental_rollup" ->
-      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
-         |  count(*) AS n,
-         |  sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS total_value
-         |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "m14_active_csv" ->
+    QueryKey("m14_active_csv",
       """SELECT s_nationkey AS nationkey,
         |  string_agg(DISTINCT CAST(s_suppkey AS VARCHAR), ','
         |    ORDER BY CAST(s_suppkey AS VARCHAR)) AS active_members
-        |FROM supplier GROUP BY s_nationkey ORDER BY nationkey""".stripMargin
+        |FROM supplier GROUP BY s_nationkey ORDER BY nationkey""".stripMargin) { (s, dir) =>
+      Tables.supplier(s, dir)
+        .groupBy(col("s_nationkey").as("nationkey"))
+        .agg(array_join(array_sort(collect_set(col("s_suppkey").cast("string"))), ",")
+          .as("active_members"))
+        .orderBy(col("nationkey"))
+    },
+
+    // Variant-domain ingest — the reverse of m6's PH_SYSTEM emit: the
+    // 100-TB log store parses each semi-structured line ONCE into Spark
+    // 4's binary VariantType; every later field access is a typed path
+    // read on the shredded encoding, vs get_json_object re-parsing the
+    // string per extraction (m13's shape — fine for one field, quadratic
+    // in fields). The line is synthesized by string concat (the m6
+    // LogLines contract), so parse_json does real work — no
+    // from_json(to_json) elision. Nested-object and array-index paths
+    // extracted typed; one partial-agg shuffle on the (zone, type) grid.
+    QueryKey("m46_variant_ingest",
+      """WITH lines AS (
+        |  SELECT '{"node":{"id":' || user_id || ',"zone":"z' || (user_id % 4) ||
+        |    '"},"metrics":[{"t":"' || regexp_replace(event_type, '[^A-Za-z0-9_-]', '', 'g') ||
+        |    '","v":' || CAST(round(value * 100) AS BIGINT) || '}]}' AS line
+        |  FROM events)
+        |SELECT json_extract_string(line, '$.node.zone') AS zone,
+        |  json_extract_string(line, '$.metrics[0].t') AS mtype,
+        |  count(*) AS n,
+        |  CAST(sum(CAST(json_extract(line, '$.metrics[0].v') AS BIGINT)) AS BIGINT) / 100.0
+        |    AS total_value
+        |FROM lines GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+      // event_type is sanitized to JSON-safe word chars before the line
+      // is synthesized: a quote/backslash in a raw type tag would make
+      // Spark's parse_json THROW where DuckDB's json_extract_string
+      // returns NULL — divergent failure modes. Stripping is mirrored in
+      // the oracle ('g' flag), so both engines embed identical tokens.
+      val safeType = regexp_replace(col("event_type"), "[^A-Za-z0-9_-]", "")
+      val line = concat(
+        lit("{\"node\":{\"id\":"), col("user_id"),
+        lit(",\"zone\":\"z"), pmod(col("user_id"), lit(4)),
+        lit("\"},\"metrics\":[{\"t\":\""), safeType,
+        lit("\",\"v\":"), Monitoring.cents(col("value")), lit("}]}"))
+      ev.select(parse_json(line).as("v"))
+        .select(
+          variant_get(col("v"), "$.node.zone", "string").as("zone"),
+          variant_get(col("v"), "$.metrics[0].t", "string").as("mtype"),
+          variant_get(col("v"), "$.metrics[0].v", "bigint").as("cents"))
+        .groupBy(col("zone"), col("mtype"))
+        .agg(count(lit(1)).as("n"), (sum(col("cents")) / 100.0).as("total_value"))
+        .orderBy(col("zone"), col("mtype"))
+    }
   )
 }

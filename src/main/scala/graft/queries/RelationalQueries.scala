@@ -16,8 +16,19 @@ object RelationalQueries {
   /** round(x*100) as long — exact cents. */
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> { (s, dir) =>
+  def keys: Seq[QueryKey] = Seq(
+    QueryKey("q1_pricing_summary",
+      """SELECT l_returnflag, l_linestatus,
+        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty,
+        |  sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS sum_base_price,
+        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS sum_disc_price,
+        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) / 1000000.0 AS sum_charge,
+        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 / count(*) AS avg_qty,
+        |  count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.lineitem(s, dir)
         .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
@@ -36,7 +47,12 @@ object RelationalQueries {
 
     // Projection + predicate pushdown: both reach the parquet scan
     // (verified in PlanSpec via PushedFilters / ReadSchema).
-    "q2_filter_project" -> { (s, dir) =>
+    QueryKey("q2_filter_project",
+      """SELECT l_orderkey, l_linenumber, l_extendedprice, l_discount, CAST(l_shipdate AS TIMESTAMP) AS l_shipdate
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-02-01'
+        |  AND l_discount >= 0.05
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.lineitem(s, dir)
         .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp") &&
@@ -47,7 +63,17 @@ object RelationalQueries {
     },
 
     // TPC-H Q3 analog: fact-fact shuffle join + broadcast dim + top-k.
-    "q3_join_agg" -> { (s, dir) =>
+    QueryKey("q3_join_agg",
+      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
+        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
+        |FROM lineitem, orders, customer
+        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |  AND c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""".stripMargin) { (s, dir) =>
       import s.implicits._
       val cust = Tables.customer(s, dir).filter($"c_mktsegment" === "BUILDING")
       val ord  = Tables.orders(s, dir).filter($"o_orderdate" < lit("1998-01-01").cast("timestamp"))
@@ -62,7 +88,13 @@ object RelationalQueries {
     },
 
     // Multi-way broadcast dimension join (directory enrichment shape).
-    "q4_broadcast_join" -> { (s, dir) =>
+    QueryKey("q4_broadcast_join",
+      """SELECT r_name, n_name, count(*) AS n_customers,
+        |  sum(CAST(round(c_acctbal*100) AS BIGINT)) / 100.0 AS total_acctbal
+        |FROM customer, nation, region
+        |WHERE c_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name
+        |ORDER BY r_name, n_name""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.customer(s, dir)
         .join(broadcast(Tables.nation(s, dir)), $"c_nationkey" === $"n_nationkey")
@@ -74,7 +106,10 @@ object RelationalQueries {
     },
 
     // EXISTS via left-semi join.
-    "q5_semi_join" -> { (s, dir) =>
+    QueryKey("q5_semi_join",
+      """SELECT c_custkey, c_name, c_mktsegment FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000.0)
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       val bigOrders = Tables.orders(s, dir).filter($"o_totalprice" > 450000.0)
       Tables.customer(s, dir)
@@ -84,7 +119,11 @@ object RelationalQueries {
     },
 
     // NOT EXISTS via left-anti join.
-    "q6_anti_join" -> { (s, dir) =>
+    QueryKey("q6_anti_join",
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       val urgent = Tables.orders(s, dir).filter($"o_orderpriority" === "1-URGENT")
       Tables.customer(s, dir)
@@ -95,7 +134,9 @@ object RelationalQueries {
 
     // Global top-k: orderBy+limit plans as TakeOrderedAndProject —
     // per-partition top-k then a k-row merge, no full sort at scale.
-    "q7_topk_orders" -> { (s, dir) =>
+    QueryKey("q7_topk_orders",
+      """SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.orders(s, dir)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderdate")
@@ -104,7 +145,14 @@ object RelationalQueries {
     },
 
     // Top-n per group via row_number window.
-    "q8_window_rank" -> { (s, dir) =>
+    QueryKey("q8_window_rank",
+      """SELECT l_returnflag, rn, l_orderkey, l_linenumber, l_extendedprice FROM (
+        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+        |    CAST(row_number() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS INT) AS rn
+        |  FROM lineitem) t
+        |WHERE rn <= 3
+        |ORDER BY l_returnflag, rn""".stripMargin) { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"l_returnflag")
         .orderBy($"l_extendedprice".desc, $"l_orderkey", $"l_linenumber")
@@ -116,7 +164,14 @@ object RelationalQueries {
     },
 
     // Running (prefix) aggregate per partition; cents-exact.
-    "q9_window_running" -> { (s, dir) =>
+    QueryKey("q9_window_running",
+      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
+        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS running_spent
+        |FROM orders
+        |WHERE o_custkey < 30
+        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -133,7 +188,12 @@ object RelationalQueries {
     // shuffle volume at scale. Three column-pruned scans with map-side
     // combine shuffle only the distinct pairs; the per-flag results are
     // tiny and broadcast-joined.
-    "q10_distinct_agg" -> { (s, dir) =>
+    QueryKey("q10_distinct_agg",
+      """SELECT l_returnflag,
+        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
+        |  count(*) AS n_lines
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       import s.implicits._
       val li = Tables.lineitem(s, dir)
       val parts = li.select($"l_returnflag", $"l_partkey").distinct()
@@ -152,7 +212,16 @@ object RelationalQueries {
     // aggregates to ~|distinct| rows per group and windows over THAT,
     // instead of globally sorting the fact table twice. Result is
     // identical to the row_number formulation (the oracle keeps it).
-    "q11_quantiles" -> { (s, dir) =>
+    QueryKey("q11_quantiles",
+      """SELECT l_returnflag,
+        |  max(CASE WHEN rn = CEIL(n*0.5) THEN l_quantity END) AS p50_qty,
+        |  max(CASE WHEN rn = CEIL(n*0.95) THEN l_quantity END) AS p95_qty
+        |FROM (
+        |  SELECT l_returnflag, l_quantity,
+        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity, l_orderkey, l_linenumber) AS rn,
+        |    count(*) OVER (PARTITION BY l_returnflag) AS n
+        |  FROM lineitem) t
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       import s.implicits._
       val hist = Tables.lineitem(s, dir)
         .groupBy($"l_returnflag", $"l_quantity")
@@ -170,7 +239,14 @@ object RelationalQueries {
     },
 
     // Conditional aggregation (TPC-H Q12 analog).
-    "q12_case_agg" -> { (s, dir) =>
+    QueryKey("q12_case_agg",
+      """SELECT l_linestatus,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM lineitem, orders
+        |WHERE l_orderkey = o_orderkey
+        |  AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin) { (s, dir) =>
       import s.implicits._
       val ord = Tables.orders(s, dir)
       Tables.lineitem(s, dir)
@@ -186,7 +262,10 @@ object RelationalQueries {
     },
 
     // Aggregate-filter (HAVING).
-    "q13_having" -> { (s, dir) =>
+    QueryKey("q13_having",
+      """SELECT o_custkey, count(*) AS n_orders,
+        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS spent
+        |FROM orders GROUP BY o_custkey HAVING count(*) >= 15 ORDER BY o_custkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.orders(s, dir)
         .groupBy($"o_custkey")
@@ -197,7 +276,11 @@ object RelationalQueries {
     },
 
     // Union + duplicate elimination.
-    "q14_union_dedup" -> { (s, dir) =>
+    QueryKey("q14_union_dedup",
+      """SELECT DISTINCT nationkey FROM (
+        |  SELECT c_nationkey AS nationkey FROM customer
+        |  UNION ALL SELECT s_nationkey AS nationkey FROM supplier) t
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.customer(s, dir).select($"c_nationkey".as("nationkey"))
         .union(Tables.supplier(s, dir).select($"s_nationkey".as("nationkey")))
@@ -206,7 +289,12 @@ object RelationalQueries {
     },
 
     // Hierarchical ROLLUP.
-    "q15_rollup" -> { (s, dir) =>
+    QueryKey("q15_rollup",
+      """SELECT r_name, n_name, count(*) AS n_customers
+        |FROM customer, nation, region
+        |WHERE c_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |GROUP BY ROLLUP (r_name, n_name)
+        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.customer(s, dir)
         .join(broadcast(Tables.nation(s, dir)), $"c_nationkey" === $"n_nationkey")
@@ -219,7 +307,11 @@ object RelationalQueries {
     // Pivot to wide aggregation. Absent (flag, status) combos pivot to
     // NULL in Spark but count to 0 under the oracle's FILTER-agg — fill
     // so the two shapes agree on sparse distributions.
-    "q16_pivot" -> { (s, dir) =>
+    QueryKey("q16_pivot",
+      """SELECT l_returnflag,
+        |  count(*) FILTER (WHERE l_linestatus = 'F') AS "F",
+        |  count(*) FILTER (WHERE l_linestatus = 'O') AS "O"
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.lineitem(s, dir)
         .groupBy($"l_returnflag")
@@ -230,7 +322,14 @@ object RelationalQueries {
     },
 
     // Per-group scalar subquery threshold (TPC-H Q17 analog).
-    "q17_scalar_subquery" -> { (s, dir) =>
+    QueryKey("q17_scalar_subquery",
+      """SELECT sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 / 7.0 AS avg_yearly
+        |FROM lineitem, part,
+        |  (SELECT l_partkey AS a_partkey,
+        |     sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 / count(*) AS avg_qty
+        |   FROM lineitem GROUP BY l_partkey) a
+        |WHERE p_partkey = l_partkey AND a_partkey = l_partkey
+        |  AND p_brand = 'Brand#2' AND l_quantity < avg_qty * 0.2""".stripMargin) { (s, dir) =>
       import s.implicits._
       val li = Tables.lineitem(s, dir)
       val p  = Tables.part(s, dir).filter($"p_brand" === "Brand#2")
@@ -243,7 +342,14 @@ object RelationalQueries {
     },
 
     // Large-group detection (TPC-H Q18 analog).
-    "q18_groupby_in" -> { (s, dir) =>
+    QueryKey("q18_groupby_in",
+      """SELECT c_custkey, c_name, o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_totalprice, sum_qty
+        |FROM orders, customer,
+        |  (SELECT l_orderkey AS b_orderkey,
+        |     sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty
+        |   FROM lineitem GROUP BY l_orderkey) b
+        |WHERE o_orderkey = b_orderkey AND o_custkey = c_custkey AND sum_qty > 250.0
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin) { (s, dir) =>
       import s.implicits._
       val li = Tables.lineitem(s, dir)
       val big = li.groupBy($"l_orderkey".as("b_orderkey"))
@@ -258,7 +364,11 @@ object RelationalQueries {
     },
 
     // Multi-key global sort with explicit null ordering.
-    "q19_multi_sort" -> { (s, dir) =>
+    QueryKey("q19_multi_sort",
+      """SELECT l_returnflag, CAST(l_shipdate AS TIMESTAMP) AS l_shipdate, l_orderkey, l_linenumber, l_quantity
+        |FROM lineitem WHERE l_quantity >= 49.0
+        |ORDER BY l_returnflag ASC, l_shipdate DESC, l_orderkey ASC, l_linenumber ASC
+        |LIMIT 500""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.lineitem(s, dir)
         .filter($"l_quantity" >= 49.0)
@@ -269,7 +379,9 @@ object RelationalQueries {
 
     // Skew-safe two-phase aggregation (salt + combine); identical
     // result to a direct groupBy, reducer load split across salts.
-    "q21_skew_agg" -> { (s, dir) =>
+    QueryKey("q21_skew_agg",
+      """SELECT event_type AS key, count(*) AS n
+        |FROM events GROUP BY event_type ORDER BY key""".stripMargin) { (s, dir) =>
       import s.implicits._
       graft.operators.Relational
         .saltedCount(Tables.events(s, dir), $"event_type", $"event_id", salts = 16)
@@ -277,7 +389,12 @@ object RelationalQueries {
     },
 
     // Full CUBE aggregation (all grouping-set combinations).
-    "q22_cube" -> { (s, dir) =>
+    QueryKey("q22_cube",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS qty
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.lineitem(s, dir)
         .cube($"l_returnflag", $"l_linestatus")
@@ -289,7 +406,17 @@ object RelationalQueries {
     // The SQL API surface: identical semantics to q3, expressed as ANSI
     // SQL over registered temp views (the engine is equally driveable
     // from spark.sql).
-    "q23_sql_api" -> { (s, dir) =>
+    QueryKey("q23_sql_api",
+      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
+        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
+        |FROM lineitem, orders, customer
+        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |  AND c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("v_lineitem")
       Tables.orders(s, dir).createOrReplaceTempView("v_orders")
       Tables.customer(s, dir).createOrReplaceTempView("v_customer")
@@ -320,7 +447,14 @@ object RelationalQueries {
     // is the BI-dashboard lever: the repeated coarse aggregate costs
     // |groups| rows instead of a fact scan. Opt-in per session so a
     // registry hit never silently changes another query's plan gates.
-    "q60_mv_rewrite" -> { (s0, dir) =>
+    QueryKey("q60_mv_rewrite",
+      // the oracle aggregates the FACT directly — identical results prove
+      // the MV substitution is semantics-preserving (decomposable sums)
+      """SELECT l_returnflag,
+        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
+        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_c,
+        |  CAST(count(*) AS BIGINT) AS n
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, dir) =>
       import graft.plans.MvRewrite
       import graft.sources.DerivedLayouts
       // isolated session (the q39 pattern): the opt-in flag lives and
@@ -370,7 +504,16 @@ object RelationalQueries {
     // and constant folding see through every call (PlanSpec-gated).
     // This is the governance surface a 100-TB shop wants: the cents
     // convention written ONCE, reused by name, and still free.
-    "q59_sql_udf" -> { (s, dir) =>
+    QueryKey("q59_sql_udf",
+      // the UDF bodies inlined by hand — byte-identical semantics proves
+      // Spark's SQL-UDF inlining preserved the arithmetic exactly
+      """WITH t(tier, lo, hi) AS (VALUES (1, 0, 10), (2, 10, 25), (3, 25, 100))
+        |SELECT l_returnflag, CAST(t.tier AS INT) AS tier,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS net_c2
+        |FROM lineitem l JOIN t ON l.l_quantity >= t.lo AND l.l_quantity < t.hi
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("v59_lineitem")
       s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_cents(x DOUBLE) " +
         "RETURNS BIGINT RETURN CAST(round(x * 100) AS BIGINT)")
@@ -391,7 +534,14 @@ object RelationalQueries {
 
     // top-n per group through the custom TopNPerKey physical operator
     // (bounded per-key heaps; no per-group sort — see graft.plans).
-    "q24_topn_custom" -> { (s, dir) =>
+    QueryKey("q24_topn_custom",
+      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice FROM (
+        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+        |    row_number() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+        |  FROM lineitem) t
+        |WHERE rn <= 3
+        |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       import s.implicits._
       graft.operators.Relational.topNPerGroupFast(
           Tables.lineitem(s, dir)
@@ -403,7 +553,17 @@ object RelationalQueries {
     },
 
     // window-function breadth: first/last/lag/lead/ntile in one pass.
-    "q25_window_misc" -> { (s, dir) =>
+    QueryKey("q25_window_misc",
+      """SELECT o_custkey, o_orderkey,
+        |  first_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_order,
+        |  last_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_order,
+        |  lag(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_order,
+        |  lead(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_order,
+        |  CAST(ntile(4) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INT) AS quartile
+        |FROM orders WHERE o_custkey < 50
+        |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       val w = Window.partitionBy($"o_custkey").orderBy($"o_orderdate", $"o_orderkey")
       val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -420,7 +580,10 @@ object RelationalQueries {
     },
 
     // INTERSECT: nations hosting both customers and suppliers.
-    "q26_intersect" -> { (s, dir) =>
+    QueryKey("q26_intersect",
+      """SELECT c_nationkey AS nationkey FROM customer
+        |INTERSECT SELECT s_nationkey FROM supplier
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.customer(s, dir).select($"c_nationkey".as("nationkey"))
         .intersect(Tables.supplier(s, dir).select($"s_nationkey".as("nationkey")))
@@ -428,7 +591,10 @@ object RelationalQueries {
     },
 
     // EXCEPT: customer nations minus low-nation-id supplier nations.
-    "q27_except" -> { (s, dir) =>
+    QueryKey("q27_except",
+      """SELECT c_nationkey AS nationkey FROM customer
+        |EXCEPT SELECT s_nationkey FROM supplier WHERE s_nationkey < 10
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.customer(s, dir).select($"c_nationkey".as("nationkey"))
         .except(Tables.supplier(s, dir).filter($"s_nationkey" < 10)
@@ -439,7 +605,16 @@ object RelationalQueries {
     // non-equi range join: events against derived maintenance windows
     // (ts ∈ [start, end)); the interval side is tiny and broadcast, so
     // the range predicate never drives a cartesian of two big sides.
-    "q28_range_join" -> { (s, dir) =>
+    QueryKey("q28_range_join",
+      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
+        |w AS (SELECT CAST(i AS INT) AS win_id,
+        |    (SELECT min(ts_us) FROM e) + i * 259200000000 AS start_us,
+        |    (SELECT min(ts_us) FROM e) + i * 259200000000 + 86400000000 AS end_us
+        |  FROM generate_series(0, 9) t(i))
+        |SELECT win_id, count(*) AS n_events,
+        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+        |FROM e JOIN w ON ts_us >= start_us AND ts_us < end_us
+        |GROUP BY win_id ORDER BY win_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val ev = Tables.events(s, dir).withColumn("ts_us", unix_micros($"ts"))
       val base = ev.agg(min($"ts_us").as("base_us"))
@@ -460,7 +635,16 @@ object RelationalQueries {
     // explicit GROUPING SETS (beyond rollup/cube): the four grouping
     // combinations in one Expand pass, with grouping() flags
     // disambiguating a real NULL from a grouping-set NULL.
-    "q29_grouping_sets" -> { (s, dir) =>
+    QueryKey("q29_grouping_sets",
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
+        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
+        |  count(*) AS n,
+        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())
+        |ORDER BY g_flag, g_status,
+        |  l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("v_li_gs")
       s.sql("""
         SELECT l_returnflag, l_linestatus,
@@ -477,7 +661,16 @@ object RelationalQueries {
     // FULL OUTER join: reconcile two aggregated sides where either may
     // lack a key (customer-nations vs low-id supplier-nations); the
     // pre-aggregation keeps both sides tiny before the join.
-    "q30_full_outer" -> { (s, dir) =>
+    QueryKey("q30_full_outer",
+      """SELECT nationkey,
+        |  CAST(coalesce(n_cust, 0) AS BIGINT) AS n_cust,
+        |  CAST(coalesce(n_supp, 0) AS BIGINT) AS n_supp
+        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_cust
+        |      FROM customer GROUP BY 1) c
+        |FULL JOIN (SELECT s_nationkey AS nationkey, count(*) AS n_supp
+        |      FROM supplier WHERE s_nationkey < 15 GROUP BY 1) s
+        |  USING (nationkey)
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       val c = Tables.customer(s, dir)
         .groupBy($"c_nationkey".as("nationkey"))
@@ -498,7 +691,18 @@ object RelationalQueries {
     // histogram whose size is bounded by the price DOMAIN, not the
     // table), broadcast back, quartile assigned map-side. The ntile()
     // formulation would single-task the whole table at scale.
-    "q31_quantile_bucket" -> { (s, dir) =>
+    QueryKey("q31_quantile_bucket",
+      """WITH o AS (SELECT CAST(floor(o_totalprice / 100) AS BIGINT) AS pb FROM orders),
+        |hist AS (SELECT pb, CAST(count(*) AS BIGINT) AS cnt FROM o GROUP BY 1),
+        |c AS (SELECT pb,
+        |    sum(cnt) OVER (ORDER BY pb ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    sum(cnt) OVER () AS n FROM hist),
+        |b AS (SELECT min(CASE WHEN cum >= (n + 3) // 4 THEN pb END) AS b25,
+        |    min(CASE WHEN cum >= (n + 1) // 2 THEN pb END) AS b50,
+        |    min(CASE WHEN cum >= (3*n + 3) // 4 THEN pb END) AS b75 FROM c)
+        |SELECT 1 + CAST(pb > b25 AS INT) + CAST(pb > b50 AS INT) + CAST(pb > b75 AS INT) AS quartile,
+        |  CAST(count(*) AS BIGINT) AS n_orders, min(pb) AS min_pb, max(pb) AS max_pb
+        |FROM o CROSS JOIN b GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       val o = Tables.orders(s, dir)
         .select(floor($"o_totalprice" / 100).cast("long").as("pb"))
@@ -530,7 +734,15 @@ object RelationalQueries {
     // loop; asserted in PlanSpec. Scale shape: one hash shuffle of
     // orders on o_custkey for the per-customer aggregate, one semi
     // join on the order key.
-    "q32_correlated_subquery" -> { (s, dir) =>
+    QueryKey("q32_correlated_subquery",
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders o
+        |WHERE CAST(round(o_totalprice * 100) AS BIGINT) >
+        |    (SELECT CAST(sum(CAST(round(o2.o_totalprice * 100) AS BIGINT)) AS BIGINT) // count(*)
+        |     FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+        |  AND EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir).createOrReplaceTempView("v_orders")
       Tables.lineitem(s, dir).createOrReplaceTempView("v_lineitem")
       s.sql("""
@@ -551,7 +763,25 @@ object RelationalQueries {
     // count 3 common + 2 extra, not 1 + 0. Catalyst rewrites both to
     // count-based aggregates + generate (no sort-based dedup of the
     // fact). Output is the three reconciliation counts.
-    "q35_bag_setops" -> { (s, dir) =>
+    QueryKey("q35_bag_setops",
+      """SELECT op, count(*) AS n FROM (
+        |  SELECT 'intersect_all' AS op, pk FROM (
+        |    SELECT l_partkey AS pk FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
+        |    INTERSECT ALL
+        |    SELECT l_partkey FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1997-07-01' AND l_shipdate < TIMESTAMP '1998-01-01') ia
+        |  UNION ALL
+        |  SELECT 'except_all' AS op, pk FROM (
+        |    SELECT l_partkey AS pk FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
+        |    EXCEPT ALL
+        |    SELECT l_partkey FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1997-07-01' AND l_shipdate < TIMESTAMP '1998-01-01') ea
+        |  UNION ALL
+        |  SELECT 'union_all' AS op, l_partkey AS pk FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |) u GROUP BY op ORDER BY op""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("v_lineitem")
       s.sql("""
         SELECT op, count(*) AS n FROM (
@@ -582,7 +812,15 @@ object RelationalQueries {
     // is the same SQL. Catalyst plans the single-column case as a
     // broadcast null-aware anti join, not a per-row subquery — asserted
     // in PlanSpec.
-    "q34_nullaware_anti" -> { (s, dir) =>
+    QueryKey("q34_nullaware_anti",
+      """SELECT o_orderkey, o_custkey
+        |FROM (SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 97 = 0 THEN CAST(NULL AS BIGINT)
+        |         ELSE o_custkey END AS o_custkey
+        |  FROM orders) o
+        |WHERE o_custkey NOT IN
+        |    (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir).createOrReplaceTempView("v_orders")
       Tables.customer(s, dir).createOrReplaceTempView("v_customer")
       s.sql("""
@@ -604,7 +842,17 @@ object RelationalQueries {
     // frame (order-free), one division to the reported double. Scale
     // shape: the window partitions by o_custkey (high cardinality,
     // parallelizes per customer); one hash exchange + per-key sort.
-    "q33_range_frame" -> { (s, dir) =>
+    QueryKey("q33_range_frame",
+      """SELECT o_orderkey, o_custkey, CAST(day AS INT) AS day,
+        |  CAST(sum(pc) OVER (PARTITION BY o_custkey ORDER BY day
+        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_7d_cents,
+        |  CAST(CAST(sum(pc) OVER (PARTITION BY o_custkey ORDER BY day
+        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS DOUBLE) / 100.0 AS trailing_7d
+        |FROM (SELECT o_orderkey, o_custkey,
+        |    datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS day,
+        |    CAST(round(o_totalprice * 100) AS BIGINT) AS pc
+        |  FROM orders) t
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("day")).rangeBetween(-6, 0)
       Tables.orders(s, dir)
@@ -619,7 +867,14 @@ object RelationalQueries {
     },
 
     // String predicates + transforms (LIKE, regexp, case/substr/concat).
-    "q20_string_ops" -> { (s, dir) =>
+    QueryKey("q20_string_ops",
+      """SELECT p_partkey, upper(p_name) AS uname,
+        |  CAST(length(p_name) AS INT) AS name_len,
+        |  substring(p_type, 1, 4) AS type_prefix,
+        |  concat_ws('|', p_brand, p_type) AS brand_type
+        |FROM part
+        |WHERE p_name LIKE '%e%' AND regexp_matches(p_name, '^(red|blue|hot)')
+        |ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       import s.implicits._
       Tables.part(s, dir)
         .filter($"p_name".like("%e%") && $"p_name".rlike("^(red|blue|hot)"))
@@ -642,7 +897,11 @@ object RelationalQueries {
     // small SF. The bucketed write is PART of the measured operator:
     // layout cost is paid once, and every later join on the key is
     // shuffle-free.
-    "q36_bucketed_join" -> { (s, dir) =>
+    QueryKey("q36_bucketed_join",
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS total_price
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       // the bucketed layout is genuinely paid ONCE (per JVM + source
       // dir, DerivedLayouts) — matching the stated cost model above and
@@ -676,7 +935,20 @@ object RelationalQueries {
     // the engine must read them all without value drift. Each format is
     // scanned independently (three bounded scans of the written slice,
     // one partial agg each — no shuffle beyond the 3-row union).
-    "q37_format_roundtrip" -> { (s, dir) =>
+    // baseline: byte-linear 3-write/3-read roundtrip
+    QueryKey("q37_format_roundtrip",
+      """WITH a AS (SELECT count(*) AS n,
+        |    sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS qty,
+        |    CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_flags,
+        |    CAST(min(l_shipdate) AS TIMESTAMP) AS min_ship,
+        |    CAST(max(l_shipdate) AS TIMESTAMP) AS max_ship,
+        |    CAST(sum(length(cmt)) AS BIGINT) AS cmt_chars,
+        |    max(cmt) AS max_cmt
+        |  FROM (SELECT *, l_returnflag || ',"' || l_linestatus || '",' ||
+        |      CAST(l_orderkey AS VARCHAR) AS cmt FROM lineitem) t)
+        |SELECT f.format, a.* FROM a
+        |CROSS JOIN (VALUES ('csv'), ('json'), ('orc')) f(format)
+        |ORDER BY f.format""".stripMargin, baseline = true) { (s, dir) =>
       import s.implicits._
       // stable dir per (JVM, source dir): the 3 writes + 3 reads ARE
       // the measured op and run on EVERY invocation (mode overwrite) —
@@ -734,7 +1006,13 @@ object RelationalQueries {
     // first-class (count them, null-safe-sum the rest). No rewrite of
     // the old shards, no per-wave branching in the query — the exact
     // contract a long-lived training corpus needs from its engine.
-    "q38_schema_evolution" -> { (s, dir) =>
+    QueryKey("q38_schema_evolution",
+      """SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
+        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN doc_id % 100 ELSE 0 END) AS BIGINT)
+        |    AS sum_quality
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
       import s.implicits._
       // wave layout written once per (JVM, source dir) — repeated bench
       // passes re-measure the mergeSchema READ, not the fixture build
@@ -768,7 +1046,12 @@ object RelationalQueries {
     // size threshold floored, because at bench SF the filtered side
     // would broadcast and the fact scan is below the 10 GB default —
     // the mechanism, not the thresholds, is what must scale.
-    "q39_runtime_filter" -> { (s0, dir) =>
+    QueryKey("q39_runtime_filter",
+      """SELECT l_returnflag, count(*) AS n,
+        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, dir) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -793,7 +1076,15 @@ object RelationalQueries {
     // previous frontier — never the closure so far — and levels are
     // bounded by log4(maxkey), so the loop terminates at any corpus
     // size with per-level work proportional to that level's frontier.
-    "q40_recursive_cte" -> { (s, dir) =>
+    QueryKey("q40_recursive_cte",
+      """WITH RECURSIVE h(id, root, depth) AS (
+        |  SELECT s_suppkey, s_suppkey, 0 FROM supplier WHERE s_suppkey <= 3
+        |  UNION ALL
+        |  SELECT s.s_suppkey, h.root, h.depth + 1
+        |  FROM supplier s JOIN h ON s.s_suppkey // 4 = h.id
+        |  WHERE s.s_suppkey >= 4)
+        |SELECT root, depth, count(*) AS n_nodes, CAST(sum(id) AS BIGINT) AS sum_ids
+        |FROM h GROUP BY root, depth ORDER BY root, depth""".stripMargin) { (s, dir) =>
       Tables.supplier(s, dir).createOrReplaceTempView("rc_supplier")
       s.sql("""
         WITH RECURSIVE h(id, root, depth) AS (
@@ -815,7 +1106,22 @@ object RelationalQueries {
     // aggregated row — this is the operator form on the raw fact.
     // Measures pre-scaled to integer cents so sums are exact; the
     // inputs are never NULL, sidestepping unpivot's null-row semantics.
-    "q41_unpivot" -> { (s, dir) =>
+    QueryKey("q41_unpivot",
+      """WITH base AS (SELECT l_returnflag,
+        |    CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
+        |    CAST(round(l_discount * 100) AS BIGINT) AS disc_c,
+        |    CAST(round(l_tax * 100) AS BIGINT) AS tax_c
+        |  FROM lineitem),
+        |u AS (
+        |  SELECT l_returnflag, 'qty_c' AS measure, qty_c AS cents FROM base
+        |  UNION ALL SELECT l_returnflag, 'price_c', price_c FROM base
+        |  UNION ALL SELECT l_returnflag, 'disc_c', disc_c FROM base
+        |  UNION ALL SELECT l_returnflag, 'tax_c', tax_c FROM base)
+        |SELECT l_returnflag, measure,
+        |  CAST(sum(cents) AS BIGINT) / 100.0 AS total,
+        |  CAST(count(*) AS BIGINT) AS n
+        |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val li = Tables.lineitem(s, dir).select(col("l_returnflag"),
         expr("CAST(round(l_quantity * 100) AS BIGINT)").as("qty_c"),
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c"),
@@ -836,7 +1142,16 @@ object RelationalQueries {
     // into a join + per-key limit rather than re-running the subquery
     // per outer row — that rewrite is what makes the surface usable at
     // 100 TB (the naive interpretation is one customer scan per nation).
-    "q42_lateral" -> { (s, dir) =>
+    QueryKey("q42_lateral",
+      """SELECT n.n_name, t.c_name, t.bal_c / 100.0 AS acctbal
+        |FROM nation n,
+        |LATERAL (
+        |  SELECT c_name, CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
+        |  FROM customer c
+        |  WHERE c.c_nationkey = n.n_nationkey
+        |  ORDER BY bal_c DESC, c_name
+        |  LIMIT 2) t
+        |ORDER BY n.n_name, t.bal_c DESC, t.c_name""".stripMargin) { (s, dir) =>
       Tables.nation(s, dir).createOrReplaceTempView("lat_nation")
       Tables.customer(s, dir).createOrReplaceTempView("lat_customer")
       s.sql("""
@@ -858,7 +1173,17 @@ object RelationalQueries {
     // surface — the plan is identical to the ANSI form (one partial-agg
     // shuffle), which the oracle parity proves; post-AGGREGATE WHERE is
     // HAVING, EXTEND before the aggregate is the scalar projection.
-    "q44_pipe_syntax" -> { (s, dir) =>
+    QueryKey("q44_pipe_syntax",
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) *
+        |           (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
+        |    / 10000.0 AS revenue,
+        |  count(*) AS n
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |HAVING count(*) > 100
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("pipe_lineitem")
       s.sql("""
         FROM pipe_lineitem
@@ -891,7 +1216,20 @@ object RelationalQueries {
     // pair gives both verdicts: event_id→event_type HOLDS (unique ids),
     // user_id→event_type is VIOLATED by every user — a real audit must
     // report the clean row too.
-    "q47_fd_audit" -> { (s, dir) =>
+    QueryKey("q47_fd_audit",
+      """WITH t AS (
+        |  SELECT 'event_id->event_type' AS fd, CAST(event_id AS VARCHAR) AS lhs,
+        |    event_type AS rhs FROM events
+        |  UNION ALL
+        |  SELECT 'user_id->event_type', CAST(user_id AS VARCHAR), event_type
+        |  FROM events),
+        |g AS (SELECT fd, lhs, CAST(count(DISTINCT rhs) AS BIGINT) AS n_variants,
+        |    CAST(count(*) AS BIGINT) AS n_rows FROM t GROUP BY 1, 2)
+        |SELECT fd, CAST(count(*) AS BIGINT) AS n_keys,
+        |  CAST(sum(CASE WHEN n_variants > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_keys,
+        |  CAST(max(n_variants) AS BIGINT) AS max_variants,
+        |  CAST(sum(n_rows) AS BIGINT) AS n_rows
+        |FROM g GROUP BY fd ORDER BY fd""".stripMargin) { (s, dir) =>
       Tables.events(s, dir).select(explode(array(
           struct(lit("event_id->event_type").as("fd"),
             col("event_id").cast("string").as("lhs"), col("event_type").as("rhs")),
@@ -916,7 +1254,27 @@ object RelationalQueries {
     // contract never adds a fact scan. Both verdicts on this data:
     // user→customer is CLEAN, user→supplier has orphan keys (the
     // audit's reason to exist).
-    "q48_ri_audit" -> { (s, dir) =>
+    QueryKey("q48_ri_audit",
+      """WITH kc AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
+        |  FROM events GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n_child_rows,
+        |    CAST(count(*) AS BIGINT) AS n_child_keys FROM kc),
+        |oc AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS n_orphan_rows,
+        |    CAST(count(*) AS BIGINT) AS n_orphan_keys
+        |  FROM kc LEFT JOIN customer ON kc.user_id = c_custkey
+        |  WHERE c_custkey IS NULL),
+        |os AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS n_orphan_rows,
+        |    CAST(count(*) AS BIGINT) AS n_orphan_keys
+        |  FROM kc LEFT JOIN supplier ON kc.user_id = s_suppkey
+        |  WHERE s_suppkey IS NULL)
+        |SELECT fk_contract, n_child_rows, n_child_keys, n_orphan_rows, n_orphan_keys
+        |FROM (
+        |  SELECT 'user->customer' AS fk_contract, t.n_child_rows, t.n_child_keys,
+        |    o.n_orphan_rows, o.n_orphan_keys FROM oc o CROSS JOIN tot t
+        |  UNION ALL
+        |  SELECT 'user->supplier', t.n_child_rows, t.n_child_keys,
+        |    o.n_orphan_rows, o.n_orphan_keys FROM os o CROSS JOIN tot t) u
+        |ORDER BY fk_contract""".stripMargin) { (s, dir) =>
       val keyCounts = Tables.events(s, dir)
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_rows"))
         .localCheckpoint()
@@ -946,7 +1304,17 @@ object RelationalQueries {
     // k = 1 is exactly max_by with a deterministic tie-break;
     // QueriesSpec proves result-identity with the window top-k form.
     // Total order (cents DESC, partkey ASC) in both engines.
-    "q49_typed_agg" -> { (s, dir) =>
+    QueryKey("q49_typed_agg",
+      """WITH c AS (SELECT l_orderkey,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents, l_partkey
+        |  FROM lineitem),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY l_orderkey
+        |    ORDER BY cents DESC, l_partkey) AS rn FROM c)
+        |SELECT l_orderkey,
+        |  string_agg(CASE WHEN rn <= 3 THEN CAST(l_partkey AS VARCHAR) END,
+        |    ',' ORDER BY rn) AS top_parts,
+        |  CAST(count(*) AS BIGINT) AS n_items
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val topParts = udaf(new graft.functions.TypedAggregators.TopKIds(3))
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"),
@@ -972,7 +1340,42 @@ object RelationalQueries {
     // row is the PRICED truth, same contract as s5/d21: Σ_k n_l·n_o
     // over the key-level join (key-grain aggregates, never the join
     // output itself). err_bp truncates; exact=0 guarded (m39 class).
-    "q50_join_cardinality" -> { (s, dir) =>
+    QueryKey("q50_join_cardinality", {
+      def nib(h: String, i: Int) =
+        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
+      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
+      s"""WITH lc AS MATERIALIZED (SELECT
+         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
+         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM lineitem GROUP BY 1),
+         |oc AS MATERIALIZED (SELECT
+         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
+         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM orders GROUP BY 1),
+         |lc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
+         |    CAST(sum(n) AS BIGINT) AS n FROM lc GROUP BY 1),
+         |oc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
+         |    CAST(sum(n) AS BIGINT) AS n FROM oc GROUP BY 1),
+         |ex AS MATERIALIZED (SELECT CAST(coalesce(sum(a.nl * b.no), 0) AS BIGINT) AS exact
+         |  FROM (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS nl
+         |    FROM lineitem GROUP BY 1) a
+         |  JOIN (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS no
+         |    FROM orders GROUP BY 1) b USING (k)),
+         |e4 AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
+         |  FROM lc a JOIN oc b USING (b4096)),
+         |e2 AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
+         |  FROM lc2 a JOIN oc2 b USING (b256))
+         |SELECT variant, est,
+         |  CAST(CASE WHEN exact = 0 THEN NULL
+         |    ELSE (est - exact) * 10000 // exact END AS BIGINT) AS err_bp
+         |FROM (
+         |  SELECT 'exact' AS variant, exact AS est FROM ex
+         |  UNION ALL SELECT 'cms_4096', est FROM e4
+         |  UNION ALL SELECT 'cms_256', est FROM e2) u, ex
+         |ORDER BY variant""".stripMargin
+    }) { (s, dir) =>
       import graft.operators.SketchPlanner.census
       def coarse(c: DataFrame) = c
         .groupBy(expr("CAST(b4096 div 16 AS INT)").as("b256"))
@@ -1028,7 +1431,34 @@ object RelationalQueries {
     // gate proves the hint is honored (BroadcastHashJoin at the
     // default thresholds, SortMergeJoin/ShuffledHashJoin when forced).
     // See SketchPlanner for the documented 1-row planning probe.
-    "q56_sketch_join_strategy" -> { (s, dir) =>
+    QueryKey("q56_sketch_join_strategy", {
+      // the oracle recomputes the census inner product and derives the
+      // strategy with the SAME thresholds — label and estimate both hash
+      def nib(h: String, i: Int) =
+        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
+      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
+      s"""WITH lc AS MATERIALIZED (SELECT
+         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
+         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM lineitem GROUP BY 1),
+         |oc AS MATERIALIZED (SELECT
+         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
+         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1),
+         |e AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
+         |  FROM lc a JOIN oc b USING (b4096)),
+         |j AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+         |      AS sum_cents
+         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+         |  WHERE o.o_orderpriority = '1-URGENT')
+         |SELECT CASE WHEN est < 100000 THEN 'broadcast'
+         |            WHEN est < 10000000 THEN 'shuffle_hash'
+         |            ELSE 'merge' END AS strategy,
+         |  est, n_rows, sum_cents FROM e, j""".stripMargin
+    }) { (s, dir) =>
       import graft.operators.SketchPlanner
       val urgent = Tables.orders(s, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -1053,7 +1483,18 @@ object RelationalQueries {
     // reproduces the feed with DuckDB range() — pure BIGINT row math,
     // no side-channel files. dir unused by design: the source IS the
     // table.
-    "q51_pushdown_source" -> { (s, _) =>
+    QueryKey("q51_pushdown_source",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(id) AS BIGINT) AS sum_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 200000) t(id)
+        |  WHERE id >= 150000) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "200000").option("partitions", "8").load()
       feed.filter(col("id") >= 150000L)
@@ -1072,7 +1513,19 @@ object RelationalQueries {
     // pre-aggregated rows do (PlanSpec: rowsEmitted ≤ 24 for a 240k-row
     // span, pushed-agg telemetry + description gate). Filters compose:
     // the id range folds first, the aggregation runs on the pruned span.
-    "q58_agg_pushdown" -> { (s, _) =>
+    QueryKey("q58_agg_pushdown",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(value) AS BIGINT) AS min_value,
+        |  CAST(max(value) AS BIGINT) AS max_value
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 300000) t(id)
+        |  WHERE id < 240000) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "300000").option("partitions", "8").load()
       feed.filter(col("id") < 240000L)
@@ -1096,7 +1549,15 @@ object RelationalQueries {
     // of a full scan post-filtered. PlanSpec pins zero Filter above
     // the scan, the stride in the description, and the V1-path DECLINE
     // of the same predicate (it arrives unpushed there).
-    "q87_v2_predicates" -> { (s, _) =>
+    QueryKey("q87_v2_predicates",
+      // the pushed stride + range: ids ≡ 1 (mod 3) within [15000, 60000)
+      """SELECT 'node' || CAST(id % 50 AS VARCHAR) AS node,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+        |  CAST(min(id) AS BIGINT) AS min_id,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM range(15000, 60000) t(id) WHERE id % 3 = 1
+        |GROUP BY 1 ORDER BY node""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "8")
         .option("v2filters", "true").load()
@@ -1125,7 +1586,19 @@ object RelationalQueries {
     // sampled scan [0, 30000), leg 2 = pagination page [30000, 39000);
     // both planned, not filtered (PlanSpec: observables + ranges + the
     // filter-blocks-sample decline pin).
-    "q88_offset_sample" -> { (s, _) =>
+    QueryKey("q88_offset_sample",
+      // leg 1: sample [0, 0.3) of the feed = the range slice [0, 30000);
+      // leg 2: offset 30000 + limit 9000 = [30000, 39000)
+      """SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+        |  CAST(min(id) AS BIGINT) AS min_id, CAST(max(id) AS BIGINT) AS max_id
+        |FROM range(0, 30000) t(id)
+        |UNION ALL
+        |SELECT 2, CAST(count(*) AS BIGINT),
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT),
+        |  CAST(min(id) AS BIGINT), CAST(max(id) AS BIGINT)
+        |FROM range(30000, 39000) t(id)
+        |ORDER BY leg""".stripMargin) { (s, _) =>
       def feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "100000").option("partitions", "8").load()
       def acc(df: DataFrame, leg: Int) =
@@ -1151,7 +1624,18 @@ object RelationalQueries {
     // ascending-id layout makes top-n a range clamp; PlanSpec asserts
     // the planned range shrank). Session-isolated: v2 bucketing is
     // opt-in per session (the q60 pattern).
-    "q61_clustered_source" -> { (s0, _) =>
+    QueryKey("q61_clustered_source",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(id) AS BIGINT) AS min_id,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 240000) t(id)) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       val feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -1178,7 +1662,20 @@ object RelationalQueries {
     // gapped id set is safe. The 100 TB story: the probe side's planned
     // volume is decided by the OTHER side's DATA at runtime, the
     // DPP-on-parquet lever (p12) delivered through the connector API.
-    "q62_runtime_prune" -> { (s, _) =>
+    QueryKey("q62_runtime_prune",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(min(id) AS BIGINT) AS min_id,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 300000) t(id)) u
+        |JOIN (SELECT k * 100 AS ref_id FROM range(0, 3000) d(k)
+        |  WHERE k >= 1200 AND k < 1500) d ON u.id = d.ref_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "300000").option("partitions", "16").load()
       val dim = s.range(0, 3000).toDF("k")
@@ -1208,7 +1705,27 @@ object RelationalQueries {
     // (Iceberg's bucket-join) exercised end-to-end through a V2
     // connector. Session-isolated (v2 bucketing is opt-in; the q60
     // pattern).
-    "q69_spj_join" -> { (s0, _) =>
+    QueryKey("q69_spj_join",
+      // base feed = range(0,120000), current = range(0,240000); compare by
+      // integer cross-multiplication, no division anywhere
+      """WITH base AS (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    CAST(count(*) AS BIGINT) AS base_n,
+        |    CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS base_sum
+        |  FROM range(0, 120000) t(id) GROUP BY 1),
+        |cur AS (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 240000) t(id))
+        |SELECT cur.kind,
+        |  CAST(sum(CASE WHEN cur.value * base.base_n > base.base_sum
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
+        |  CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(max(base.base_n) AS BIGINT) AS base_n
+        |FROM cur JOIN base ON cur.kind = base.kind
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1244,7 +1761,26 @@ object RelationalQueries {
     // The 100 TB story: a source that stores sorted (every LSM/index
     // store) stops paying a redundant cluster-wide sort on every
     // merge join.
-    "q70_report_ordering" -> { (s0, _) =>
+    QueryKey("q70_report_ordering",
+      """WITH env AS (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    CAST(min((id * 2654435761) % 100000) AS BIGINT) AS lo,
+        |    CAST(max((id * 2654435761) % 100000) AS BIGINT) AS hi
+        |  FROM range(0, 90000) t(id) GROUP BY 1),
+        |cur AS (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 180000) t(id))
+        |SELECT cur.kind,
+        |  CAST(sum(CASE WHEN cur.value BETWEEN env.lo AND env.hi
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
+        |  CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(min(env.lo) AS BIGINT) AS env_lo,
+        |  CAST(max(env.hi) AS BIGINT) AS env_hi
+        |FROM cur JOIN env ON cur.kind = env.kind
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1274,7 +1810,17 @@ object RelationalQueries {
     // the same join plans SMJ (PlanSpec gates both directions, results
     // identical). The 100 TB story: federation sources stop being
     // stats-blind defaultSize walls; the planner sees through them.
-    "q65_source_stats" -> { (s, _) =>
+    QueryKey("q65_source_stats",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(2 * value) AS BIGINT) AS sum_vv
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 300000) t(id)
+        |  WHERE id >= 299000) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       def feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "300000").option("partitions", "8").load()
       val probe = feed.filter(col("id") >= 299000L)
@@ -1296,7 +1842,18 @@ object RelationalQueries {
     // scan exactly as for vectorized parquet (PlanSpec: columnar scan
     // in-plan, row-mode twin byte-identical). Pushdown composes: the id
     // range folds first, the vectors fill only the planned span.
-    "q66_columnar_scan" -> { (s, _) =>
+    QueryKey("q66_columnar_scan",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(sum(id) AS BIGINT) AS sum_id
+        |FROM (
+        |  SELECT id,
+        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 400000) t(id)
+        |  WHERE id >= 100000) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
         .option("rows", "400000").option("partitions", "8")
         .option("columnar", "true").load()
@@ -1319,7 +1876,15 @@ object RelationalQueries {
     // deterministic, so the METRICS themselves are oracle-checked.
     // AQE off in an isolated session so the static plan carries the
     // scan node the probe reads (the q60 isolation pattern).
-    "q68_scan_metrics" -> { (s0, _) =>
+    QueryKey("q68_scan_metrics",
+      // closed form from the q68 plan: 400000 rows / 16 slices = 25000
+      // wide; id >= 350000 leaves slices 14,15 → 2 planned, 14 pruned,
+      // 50000 rows read
+      """SELECT metric, CAST(value AS BIGINT) AS value FROM (VALUES
+        |  ('feed_rows_read', 50000),
+        |  ('feed_slices_planned', 2),
+        |  ('feed_slices_pruned', 14)) t(metric, value)
+        |ORDER BY metric""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.adaptive.enabled", "false")
       val feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -1355,7 +1920,20 @@ object RelationalQueries {
     // final SELECT is the result. Session-isolated (scripting is
     // opt-in conf). Oracle: the closed-form smallest 64·2^k via an
     // octave sweep.
-    "q75_sql_scripting" -> { (s0, dir) =>
+    QueryKey("q75_sql_scripting",
+      // smallest thr = 64·2^k with ≥90% of docs below it, swept closed-form
+      """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM documents),
+        |sweep AS (
+        |  SELECT 64 * (1::BIGINT << k) AS thr,
+        |    (SELECT CAST(count(*) AS BIGINT) FROM documents
+        |     WHERE n_chars < 64 * (1::BIGINT << k)) AS kept
+        |  FROM generate_series(0, 30) s(k)),
+        |hit AS (SELECT thr, kept FROM sweep, t
+        |  WHERE kept * 10 >= total * 9 ORDER BY thr LIMIT 1)
+        |SELECT CAST(hit.thr AS BIGINT) AS threshold,
+        |  CAST(hit.kept AS BIGINT) AS n_kept,
+        |  t.total AS n_total
+        |FROM hit, t""".stripMargin) { (s0, dir) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.scripting.enabled", "true")
       graft.sources.Tables.documents(s, dir).createOrReplaceTempView("q75_docs")
@@ -1388,7 +1966,20 @@ object RelationalQueries {
     // so a metric that missed rows or double-counted breaks the hash.
     // PlanSpec additionally proves the plan has exactly ONE scan (the
     // metrics are not a second aggregation pass).
-    "q74_observed_metrics" -> { (s, dir) =>
+    QueryKey("q74_observed_metrics",
+      """SELECT metric, CAST(value AS BIGINT) AS value FROM (
+        |  SELECT 'chars' AS metric, sum(length(text)) AS value FROM documents
+        |  UNION ALL
+        |  SELECT 'kept_chars', sum(length(text)) FROM documents WHERE n_chars >= 200
+        |  UNION ALL
+        |  SELECT 'n_en', count(*) FROM documents WHERE lang = 'en'
+        |  UNION ALL
+        |  SELECT 'n_kept', count(*) FROM documents WHERE n_chars >= 200
+        |  UNION ALL
+        |  SELECT 'n_rows', count(*) FROM documents
+        |  UNION ALL
+        |  SELECT 'n_short', count(*) FROM documents WHERE n_chars < 200) t
+        |ORDER BY metric""".stripMargin) { (s, dir) =>
       val docs = graft.sources.Tables.documents(s, dir)
       val observed = docs.observe("ingest_gate",
         count(lit(1)).as("n_rows"),
@@ -1420,7 +2011,11 @@ object RelationalQueries {
     // driver-side commit() folds them into the run total — the output
     // row IS the transaction protocol's accounting, no second counting
     // pass over the data. The write is the measured op (q37 contract).
-    "q52_accounting_sink" -> { (s, _) =>
+    QueryKey("q52_accounting_sink",
+      """SELECT CAST(100000 AS BIGINT) AS n_rows,
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+        |  CAST(8 AS BIGINT) AS n_writers
+        |FROM range(0, 100000) t(id)""".stripMargin) { (s, _) =>
       import graft.sources.AccountingSink
       val runId = "q52_accounting_sink"
       AccountingSink.clear(runId)
@@ -1445,7 +2040,17 @@ object RelationalQueries {
     // (two rows here), so time travel adds versions without adding
     // corpus scans. v1 = doc_id%10 != 7 (yesterday's crawl), the v2
     // delta backfills the rest.
-    "q53_snapshot_read" -> { (s, dir) =>
+    QueryKey("q53_snapshot_read",
+      """WITH d AS (SELECT CASE WHEN doc_id % 10 <> 7 THEN 1 ELSE 2 END AS version,
+        |    n_chars FROM documents),
+        |a AS (SELECT CAST(version AS INT) AS version,
+        |    CAST(count(*) AS BIGINT) AS delta_docs,
+        |    CAST(sum(n_chars) AS BIGINT) AS delta_chars
+        |  FROM d GROUP BY 1)
+        |SELECT version, delta_docs,
+        |  CAST(sum(delta_docs) OVER (ORDER BY version) AS BIGINT) AS n_docs,
+        |  CAST(sum(delta_chars) OVER (ORDER BY version) AS BIGINT) AS sum_chars
+        |FROM a ORDER BY version""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       // layout shared with the graft catalog's VERSION AS OF face (q63)
       val base = graft.sources.SnapshotLayout.ensure(s, dir)
@@ -1473,7 +2078,20 @@ object RelationalQueries {
     // (the join carries 32-byte digests, never text), one key shuffle;
     // the layouts are write-once (DerivedLayouts). Closed-form oracle
     // from the mutation formulas.
-    "q54_corpus_diff" -> { (s, dir) =>
+    QueryKey("q54_corpus_diff",
+      """WITH d AS (SELECT doc_id, text FROM documents),
+        |cls AS (
+        |  SELECT CASE
+        |      WHEN doc_id % 10 = 7 THEN 'removed'
+        |      WHEN doc_id % 10 = 3 AND upper(text) <> text THEN 'changed'
+        |      ELSE 'same' END AS status,
+        |    CASE WHEN doc_id % 10 = 7 THEN 0 ELSE length(text) END AS chars_v2
+        |  FROM d
+        |  UNION ALL
+        |  SELECT 'added', length(text) FROM d WHERE doc_id % 10 = 0)
+        |SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(coalesce(sum(chars_v2), 0) AS BIGINT) AS chars_v2
+        |FROM cls GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val base = DerivedLayouts.once(s"diff|$dir") { path =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         docs.write.parquet(s"$path/v1")
@@ -1515,7 +2133,49 @@ object RelationalQueries {
     // shape: one key shuffle for the merge (change batch is %-bounded
     // but joins as a general fact — no broadcast assumption), digests
     // map-side, layouts write-once.
-    "q57_merge_into" -> { (s, dir) =>
+    QueryKey("q57_merge_into",
+      // closed-form from the mutation formulas: changed ⇔ upper-casing
+      // actually alters the text (md5 inequality ⇔ string inequality)
+      // the digest walks the MERGED corpus the formulas predict: v2 =
+      // unchanged rows as-is + %10==3 upper-cased + %10==0 re-keyed
+      // +1e9 — a merge that wrote anything else breaks the sum
+      """WITH d AS (SELECT doc_id, text FROM documents),
+        |acc AS (
+        |  SELECT 'delete' AS action, CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(0 AS BIGINT) AS chars_after
+        |  FROM d WHERE doc_id % 10 = 7
+        |  UNION ALL
+        |  SELECT 'insert', CAST(count(*) AS BIGINT),
+        |    CAST(sum(length(text)) AS BIGINT)
+        |  FROM d WHERE doc_id % 10 = 0
+        |  UNION ALL
+        |  SELECT 'update', CAST(count(*) AS BIGINT),
+        |    CAST(sum(length(text)) AS BIGINT)
+        |  FROM d WHERE doc_id % 10 = 3
+        |  UNION ALL
+        |  SELECT 'unchanged', CAST(count(*) AS BIGINT),
+        |    CAST(sum(length(text)) AS BIGINT)
+        |  FROM d WHERE doc_id % 10 NOT IN (3, 7)),
+        |v2r AS (
+        |  SELECT doc_id, text FROM d WHERE doc_id % 10 NOT IN (3, 7)
+        |  UNION ALL SELECT doc_id, upper(text) FROM d WHERE doc_id % 10 = 3
+        |  UNION ALL SELECT doc_id + 1000000000, text FROM d WHERE doc_id % 10 = 0),
+        |v1f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
+        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |  FROM d),
+        |v2f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
+        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |  FROM v2r)
+        |SELECT action, n_rows, chars_after, CAST(NULL AS BIGINT) AS digest FROM acc
+        |UNION ALL SELECT 'v1', n_rows, CAST(NULL AS BIGINT), digest FROM v1f
+        |UNION ALL SELECT 'v2', n_rows, CAST(NULL AS BIGINT), digest FROM v2f
+        |ORDER BY action""".stripMargin) { (s, dir) =>
       val base = DerivedLayouts.once(s"merge|$dir") { path =>
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         docs.write.parquet(s"$path/v1")
@@ -1566,7 +2226,15 @@ object RelationalQueries {
     // (deterministic lower(min) representative — min taken on the
     // UNCOLLATED column so ordering is binary, never collation ties).
     // ASCII corpus ⇒ UTF8_LCASE grouping ≡ DuckDB lower() grouping.
-    "q55_collated_group" -> { (s, dir) =>
+    QueryKey("q55_collated_group",
+      """WITH p AS (SELECT CASE WHEN doc_id % 3 = 0
+        |      THEN upper(substr(trim(text), 1, 12))
+        |      ELSE substr(trim(text), 1, 12) END AS pre
+        |  FROM documents)
+        |SELECT lower(min(pre)) AS key_folded,
+        |  CAST(count(DISTINCT pre) AS BIGINT) AS n_variants,
+        |  CAST(count(*) AS BIGINT) AS n_docs
+        |FROM p GROUP BY lower(pre) ORDER BY 1""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
         .select(
           when(pmod(col("doc_id"), lit(3)) === 0,
@@ -1580,7 +2248,13 @@ object RelationalQueries {
         .orderBy(col("key_folded"))
     },
 
-    "q46_join_hints" -> { (s, dir) =>
+    QueryKey("q46_join_hints",
+      """SELECT o_orderpriority,
+        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+        |    / 100.0 AS revenue,
+        |  count(*) AS n
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       import s.implicits._
       val orders = Tables.orders(s, dir).hint("SHUFFLE_HASH")
       Tables.lineitem(s, dir)
@@ -1600,7 +2274,19 @@ object RelationalQueries {
     // and sums the survivors. The messy column is synthesized
     // deterministically (numeric / garbage-suffixed / empty by
     // user_id%3) so DuckDB's TRY_CAST sees identical inputs.
-    "q45_try_semantics" -> { (s, dir) =>
+    QueryKey("q45_try_semantics",
+      """WITH e AS (SELECT event_type,
+        |    CASE user_id % 3
+        |      WHEN 0 THEN CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR)
+        |      WHEN 1 THEN CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) || 'x'
+        |      ELSE '' END AS raw
+        |  FROM events),
+        |p AS (SELECT event_type, TRY_CAST(raw AS BIGINT) AS parsed FROM e)
+        |SELECT event_type, count(*) AS n,
+        |  CAST(count(parsed) AS BIGINT) AS n_valid,
+        |  CAST(sum(CASE WHEN parsed IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reject,
+        |  CAST(sum(parsed) AS BIGINT) AS sum_valid_c
+        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .withColumn("c", cents(col("value")))
         .withColumn("raw", expr(
@@ -1624,7 +2310,25 @@ object RelationalQueries {
     // rides the most recent purchase's cents. Scale shape: one shuffle
     // on user_id serves both the window and the final per-user
     // aggregate (same key — no second exchange).
-    "q43_fill_forward" -> { (s, dir) =>
+    QueryKey("q43_fill_forward",
+      """WITH seq AS (
+        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
+        |    CASE WHEN event_type = 'purchase'
+        |         THEN CAST(round(value * 100) AS BIGINT) END AS reading_c
+        |  FROM events),
+        |f AS (
+        |  SELECT user_id, reading_c,
+        |    last_value(reading_c IGNORE NULLS) OVER (
+        |      PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
+        |  FROM seq)
+        |SELECT user_id,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(count(filled) AS BIGINT) AS n_covered,
+        |  CAST(sum(CASE WHEN reading_c IS NULL AND filled IS NOT NULL
+        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_stale_fill,
+        |  CAST(sum(filled) AS BIGINT) AS sum_filled_c
+        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1660,32 +2364,9 @@ object RelationalQueries {
     // rows); keys hash-spread to a fixed 14-bit domain with bounded
     // multipliers (pmod 1e5 first — the sf10 key-shift would overflow
     // a raw product, the x16 lesson applied cross-engine).
-    "q85_zorder_skipping" -> { (s, dir) =>
-      import graft.operators.Layout
-      val base = Tables.lineitem(s, dir).select(
-        pmod(pmod(col("l_partkey"), lit(100000L)) * lit(2654435761L),
-          lit(16384L)).as("x"),
-        pmod(pmod(col("l_suppkey"), lit(100000L)) * lit(40503L),
-          lit(16384L)).as("y"),
-        col("l_orderkey"), col("l_linenumber"))
-      val ties = Seq(col("x"), col("y"), col("l_orderkey"), col("l_linenumber"))
-      val linear = Layout.fileIds(base, col("x"), ties,
-        bucketShift = 9, rowsPerFile = 2048)
-      val zorder = Layout.fileIds(base,
-        Layout.morton(col("x"), col("y"), 14), ties,
-        bucketShift = 23, rowsPerFile = 2048)
-      Layout.zoneMapStats(linear, col("x"), col("y"),
-          2000L, 3000L, 3000L, 4000L, "linear")
-        .unionByName(Layout.zoneMapStats(zorder, col("x"), col("y"),
-          2000L, 3000L, 3000L, 4000L, "zorder"))
-        .orderBy(col("layout"))
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    // both layouts re-derived closed-form; the compare pins n_files and
-    // rows_matched EQUAL across layouts and the skip counts exactly
-    "q85_zorder_skipping" ->
+    QueryKey("q85_zorder_skipping",
+      // both layouts re-derived closed-form; the compare pins n_files and
+      // rows_matched EQUAL across layouts and the skip counts exactly
       """WITH base AS (
         |  SELECT ((l_partkey % 100000) * 2654435761) % 16384 AS x,
         |         ((l_suppkey % 100000) * 40503) % 16384 AS y,
@@ -1724,850 +2405,25 @@ object RelationalQueries {
         |    AND ymax >= 3000 AND ymin <= 4000 THEN n ELSE 0 END) AS BIGINT)
         |    AS rows_scanned,
         |  CAST(sum(hits) AS BIGINT) AS rows_matched
-        |FROM zones GROUP BY layout ORDER BY layout""".stripMargin,
-    "q44_pipe_syntax" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) *
-        |           (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-        |    / 10000.0 AS revenue,
-        |  count(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |HAVING count(*) > 100
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q47_fd_audit" ->
-      """WITH t AS (
-        |  SELECT 'event_id->event_type' AS fd, CAST(event_id AS VARCHAR) AS lhs,
-        |    event_type AS rhs FROM events
-        |  UNION ALL
-        |  SELECT 'user_id->event_type', CAST(user_id AS VARCHAR), event_type
-        |  FROM events),
-        |g AS (SELECT fd, lhs, CAST(count(DISTINCT rhs) AS BIGINT) AS n_variants,
-        |    CAST(count(*) AS BIGINT) AS n_rows FROM t GROUP BY 1, 2)
-        |SELECT fd, CAST(count(*) AS BIGINT) AS n_keys,
-        |  CAST(sum(CASE WHEN n_variants > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_keys,
-        |  CAST(max(n_variants) AS BIGINT) AS max_variants,
-        |  CAST(sum(n_rows) AS BIGINT) AS n_rows
-        |FROM g GROUP BY fd ORDER BY fd""".stripMargin,
-
-    "q49_typed_agg" ->
-      """WITH c AS (SELECT l_orderkey,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents, l_partkey
-        |  FROM lineitem),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |    ORDER BY cents DESC, l_partkey) AS rn FROM c)
-        |SELECT l_orderkey,
-        |  string_agg(CASE WHEN rn <= 3 THEN CAST(l_partkey AS VARCHAR) END,
-        |    ',' ORDER BY rn) AS top_parts,
-        |  CAST(count(*) AS BIGINT) AS n_items
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q50_join_cardinality" -> {
-      def nib(h: String, i: Int) =
-        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
-      s"""WITH lc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
-         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM lineitem GROUP BY 1),
-         |oc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
-         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM orders GROUP BY 1),
-         |lc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
-         |    CAST(sum(n) AS BIGINT) AS n FROM lc GROUP BY 1),
-         |oc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
-         |    CAST(sum(n) AS BIGINT) AS n FROM oc GROUP BY 1),
-         |ex AS MATERIALIZED (SELECT CAST(coalesce(sum(a.nl * b.no), 0) AS BIGINT) AS exact
-         |  FROM (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS nl
-         |    FROM lineitem GROUP BY 1) a
-         |  JOIN (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS no
-         |    FROM orders GROUP BY 1) b USING (k)),
-         |e4 AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
-         |  FROM lc a JOIN oc b USING (b4096)),
-         |e2 AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
-         |  FROM lc2 a JOIN oc2 b USING (b256))
-         |SELECT variant, est,
-         |  CAST(CASE WHEN exact = 0 THEN NULL
-         |    ELSE (est - exact) * 10000 // exact END AS BIGINT) AS err_bp
-         |FROM (
-         |  SELECT 'exact' AS variant, exact AS est FROM ex
-         |  UNION ALL SELECT 'cms_4096', est FROM e4
-         |  UNION ALL SELECT 'cms_256', est FROM e2) u, ex
-         |ORDER BY variant""".stripMargin
-    },
-
-    // the oracle recomputes the census inner product and derives the
-    // strategy with the SAME thresholds — label and estimate both hash
-    "q56_sketch_join_strategy" -> {
-      def nib(h: String, i: Int) =
-        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
-      s"""WITH lc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
-         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM lineitem GROUP BY 1),
-         |oc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
-         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1),
-         |e AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
-         |  FROM lc a JOIN oc b USING (b4096)),
-         |j AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-         |      AS sum_cents
-         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         |  WHERE o.o_orderpriority = '1-URGENT')
-         |SELECT CASE WHEN est < 100000 THEN 'broadcast'
-         |            WHEN est < 10000000 THEN 'shuffle_hash'
-         |            ELSE 'merge' END AS strategy,
-         |  est, n_rows, sum_cents FROM e, j""".stripMargin
-    },
-
-    "q51_pushdown_source" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(id) AS BIGINT) AS sum_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 200000) t(id)
-        |  WHERE id >= 150000) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the pushed stride + range: ids ≡ 1 (mod 3) within [15000, 60000)
-    "q87_v2_predicates" ->
-      """SELECT 'node' || CAST(id % 50 AS VARCHAR) AS node,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
-        |  CAST(min(id) AS BIGINT) AS min_id,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM range(15000, 60000) t(id) WHERE id % 3 = 1
-        |GROUP BY 1 ORDER BY node""".stripMargin,
-
-    // leg 1: sample [0, 0.3) of the feed = the range slice [0, 30000);
-    // leg 2: offset 30000 + limit 9000 = [30000, 39000)
-    "q88_offset_sample" ->
-      """SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
-        |  CAST(min(id) AS BIGINT) AS min_id, CAST(max(id) AS BIGINT) AS max_id
-        |FROM range(0, 30000) t(id)
-        |UNION ALL
-        |SELECT 2, CAST(count(*) AS BIGINT),
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT),
-        |  CAST(min(id) AS BIGINT), CAST(max(id) AS BIGINT)
-        |FROM range(30000, 39000) t(id)
-        |ORDER BY leg""".stripMargin,
-
-    // base feed = range(0,120000), current = range(0,240000); compare by
-    // integer cross-multiplication, no division anywhere
-    "q69_spj_join" ->
-      """WITH base AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CAST(count(*) AS BIGINT) AS base_n,
-        |    CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS base_sum
-        |  FROM range(0, 120000) t(id) GROUP BY 1),
-        |cur AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 240000) t(id))
-        |SELECT cur.kind,
-        |  CAST(sum(CASE WHEN cur.value * base.base_n > base.base_sum
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(max(base.base_n) AS BIGINT) AS base_n
-        |FROM cur JOIN base ON cur.kind = base.kind
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // smallest thr = 64·2^k with ≥90% of docs below it, swept closed-form
-    "q75_sql_scripting" ->
-      """WITH t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM documents),
-        |sweep AS (
-        |  SELECT 64 * (1::BIGINT << k) AS thr,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |     WHERE n_chars < 64 * (1::BIGINT << k)) AS kept
-        |  FROM generate_series(0, 30) s(k)),
-        |hit AS (SELECT thr, kept FROM sweep, t
-        |  WHERE kept * 10 >= total * 9 ORDER BY thr LIMIT 1)
-        |SELECT CAST(hit.thr AS BIGINT) AS threshold,
-        |  CAST(hit.kept AS BIGINT) AS n_kept,
-        |  t.total AS n_total
-        |FROM hit, t""".stripMargin,
-
-    "q74_observed_metrics" ->
-      """SELECT metric, CAST(value AS BIGINT) AS value FROM (
-        |  SELECT 'chars' AS metric, sum(length(text)) AS value FROM documents
-        |  UNION ALL
-        |  SELECT 'kept_chars', sum(length(text)) FROM documents WHERE n_chars >= 200
-        |  UNION ALL
-        |  SELECT 'n_en', count(*) FROM documents WHERE lang = 'en'
-        |  UNION ALL
-        |  SELECT 'n_kept', count(*) FROM documents WHERE n_chars >= 200
-        |  UNION ALL
-        |  SELECT 'n_rows', count(*) FROM documents
-        |  UNION ALL
-        |  SELECT 'n_short', count(*) FROM documents WHERE n_chars < 200) t
-        |ORDER BY metric""".stripMargin,
-
-    "q70_report_ordering" ->
-      """WITH env AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CAST(min((id * 2654435761) % 100000) AS BIGINT) AS lo,
-        |    CAST(max((id * 2654435761) % 100000) AS BIGINT) AS hi
-        |  FROM range(0, 90000) t(id) GROUP BY 1),
-        |cur AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 180000) t(id))
-        |SELECT cur.kind,
-        |  CAST(sum(CASE WHEN cur.value BETWEEN env.lo AND env.hi
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(min(env.lo) AS BIGINT) AS env_lo,
-        |  CAST(max(env.hi) AS BIGINT) AS env_hi
-        |FROM cur JOIN env ON cur.kind = env.kind
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q65_source_stats" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(2 * value) AS BIGINT) AS sum_vv
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)
-        |  WHERE id >= 299000) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q66_columnar_scan" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(sum(id) AS BIGINT) AS sum_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 400000) t(id)
-        |  WHERE id >= 100000) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // closed form from the q68 plan: 400000 rows / 16 slices = 25000
-    // wide; id >= 350000 leaves slices 14,15 → 2 planned, 14 pruned,
-    // 50000 rows read
-    "q68_scan_metrics" ->
-      """SELECT metric, CAST(value AS BIGINT) AS value FROM (VALUES
-        |  ('feed_rows_read', 50000),
-        |  ('feed_slices_planned', 2),
-        |  ('feed_slices_pruned', 14)) t(metric, value)
-        |ORDER BY metric""".stripMargin,
-
-    "q58_agg_pushdown" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(value) AS BIGINT) AS max_value
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)
-        |  WHERE id < 240000) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q62_runtime_prune" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(id) AS BIGINT) AS min_id,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)) u
-        |JOIN (SELECT k * 100 AS ref_id FROM range(0, 3000) d(k)
-        |  WHERE k >= 1200 AND k < 1500) d ON u.id = d.ref_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q61_clustered_source" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(id) AS BIGINT) AS min_id,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 240000) t(id)) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q55_collated_group" ->
-      """WITH p AS (SELECT CASE WHEN doc_id % 3 = 0
-        |      THEN upper(substr(trim(text), 1, 12))
-        |      ELSE substr(trim(text), 1, 12) END AS pre
-        |  FROM documents)
-        |SELECT lower(min(pre)) AS key_folded,
-        |  CAST(count(DISTINCT pre) AS BIGINT) AS n_variants,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM p GROUP BY lower(pre) ORDER BY 1""".stripMargin,
-
-    // closed-form from the mutation formulas: changed ⇔ upper-casing
-    // actually alters the text (md5 inequality ⇔ string inequality)
-    // the digest walks the MERGED corpus the formulas predict: v2 =
-    // unchanged rows as-is + %10==3 upper-cased + %10==0 re-keyed
-    // +1e9 — a merge that wrote anything else breaks the sum
-    "q57_merge_into" ->
-      """WITH d AS (SELECT doc_id, text FROM documents),
-        |acc AS (
-        |  SELECT 'delete' AS action, CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(0 AS BIGINT) AS chars_after
-        |  FROM d WHERE doc_id % 10 = 7
-        |  UNION ALL
-        |  SELECT 'insert', CAST(count(*) AS BIGINT),
-        |    CAST(sum(length(text)) AS BIGINT)
-        |  FROM d WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT 'update', CAST(count(*) AS BIGINT),
-        |    CAST(sum(length(text)) AS BIGINT)
-        |  FROM d WHERE doc_id % 10 = 3
-        |  UNION ALL
-        |  SELECT 'unchanged', CAST(count(*) AS BIGINT),
-        |    CAST(sum(length(text)) AS BIGINT)
-        |  FROM d WHERE doc_id % 10 NOT IN (3, 7)),
-        |v2r AS (
-        |  SELECT doc_id, text FROM d WHERE doc_id % 10 NOT IN (3, 7)
-        |  UNION ALL SELECT doc_id, upper(text) FROM d WHERE doc_id % 10 = 3
-        |  UNION ALL SELECT doc_id + 1000000000, text FROM d WHERE doc_id % 10 = 0),
-        |v1f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
-        |  FROM d),
-        |v2f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
-        |  FROM v2r)
-        |SELECT action, n_rows, chars_after, CAST(NULL AS BIGINT) AS digest FROM acc
-        |UNION ALL SELECT 'v1', n_rows, CAST(NULL AS BIGINT), digest FROM v1f
-        |UNION ALL SELECT 'v2', n_rows, CAST(NULL AS BIGINT), digest FROM v2f
-        |ORDER BY action""".stripMargin,
-
-    "q54_corpus_diff" ->
-      """WITH d AS (SELECT doc_id, text FROM documents),
-        |cls AS (
-        |  SELECT CASE
-        |      WHEN doc_id % 10 = 7 THEN 'removed'
-        |      WHEN doc_id % 10 = 3 AND upper(text) <> text THEN 'changed'
-        |      ELSE 'same' END AS status,
-        |    CASE WHEN doc_id % 10 = 7 THEN 0 ELSE length(text) END AS chars_v2
-        |  FROM d
-        |  UNION ALL
-        |  SELECT 'added', length(text) FROM d WHERE doc_id % 10 = 0)
-        |SELECT status, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(coalesce(sum(chars_v2), 0) AS BIGINT) AS chars_v2
-        |FROM cls GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q53_snapshot_read" ->
-      """WITH d AS (SELECT CASE WHEN doc_id % 10 <> 7 THEN 1 ELSE 2 END AS version,
-        |    n_chars FROM documents),
-        |a AS (SELECT CAST(version AS INT) AS version,
-        |    CAST(count(*) AS BIGINT) AS delta_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS delta_chars
-        |  FROM d GROUP BY 1)
-        |SELECT version, delta_docs,
-        |  CAST(sum(delta_docs) OVER (ORDER BY version) AS BIGINT) AS n_docs,
-        |  CAST(sum(delta_chars) OVER (ORDER BY version) AS BIGINT) AS sum_chars
-        |FROM a ORDER BY version""".stripMargin,
-
-    "q52_accounting_sink" ->
-      """SELECT CAST(100000 AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
-        |  CAST(8 AS BIGINT) AS n_writers
-        |FROM range(0, 100000) t(id)""".stripMargin,
-
-    "q48_ri_audit" ->
-      """WITH kc AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows
-        |  FROM events GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n_child_rows,
-        |    CAST(count(*) AS BIGINT) AS n_child_keys FROM kc),
-        |oc AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS n_orphan_rows,
-        |    CAST(count(*) AS BIGINT) AS n_orphan_keys
-        |  FROM kc LEFT JOIN customer ON kc.user_id = c_custkey
-        |  WHERE c_custkey IS NULL),
-        |os AS (SELECT CAST(coalesce(sum(n_rows), 0) AS BIGINT) AS n_orphan_rows,
-        |    CAST(count(*) AS BIGINT) AS n_orphan_keys
-        |  FROM kc LEFT JOIN supplier ON kc.user_id = s_suppkey
-        |  WHERE s_suppkey IS NULL)
-        |SELECT fk_contract, n_child_rows, n_child_keys, n_orphan_rows, n_orphan_keys
-        |FROM (
-        |  SELECT 'user->customer' AS fk_contract, t.n_child_rows, t.n_child_keys,
-        |    o.n_orphan_rows, o.n_orphan_keys FROM oc o CROSS JOIN tot t
-        |  UNION ALL
-        |  SELECT 'user->supplier', t.n_child_rows, t.n_child_keys,
-        |    o.n_orphan_rows, o.n_orphan_keys FROM os o CROSS JOIN tot t) u
-        |ORDER BY fk_contract""".stripMargin,
-
-    "q46_join_hints" ->
-      """SELECT o_orderpriority,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-        |    / 100.0 AS revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q45_try_semantics" ->
-      """WITH e AS (SELECT event_type,
-        |    CASE user_id % 3
-        |      WHEN 0 THEN CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR)
-        |      WHEN 1 THEN CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) || 'x'
-        |      ELSE '' END AS raw
-        |  FROM events),
-        |p AS (SELECT event_type, TRY_CAST(raw AS BIGINT) AS parsed FROM e)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(count(parsed) AS BIGINT) AS n_valid,
-        |  CAST(sum(CASE WHEN parsed IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reject,
-        |  CAST(sum(parsed) AS BIGINT) AS sum_valid_c
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q42_lateral" ->
-      """SELECT n.n_name, t.c_name, t.bal_c / 100.0 AS acctbal
-        |FROM nation n,
-        |LATERAL (
-        |  SELECT c_name, CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
-        |  FROM customer c
-        |  WHERE c.c_nationkey = n.n_nationkey
-        |  ORDER BY bal_c DESC, c_name
-        |  LIMIT 2) t
-        |ORDER BY n.n_name, t.bal_c DESC, t.c_name""".stripMargin,
-
-    "q43_fill_forward" ->
-      """WITH seq AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id,
-        |    CASE WHEN event_type = 'purchase'
-        |         THEN CAST(round(value * 100) AS BIGINT) END AS reading_c
-        |  FROM events),
-        |f AS (
-        |  SELECT user_id, reading_c,
-        |    last_value(reading_c IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-        |  FROM seq)
-        |SELECT user_id,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(count(filled) AS BIGINT) AS n_covered,
-        |  CAST(sum(CASE WHEN reading_c IS NULL AND filled IS NOT NULL
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_stale_fill,
-        |  CAST(sum(filled) AS BIGINT) AS sum_filled_c
-        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q41_unpivot" ->
-      """WITH base AS (SELECT l_returnflag,
-        |    CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
-        |    CAST(round(l_discount * 100) AS BIGINT) AS disc_c,
-        |    CAST(round(l_tax * 100) AS BIGINT) AS tax_c
-        |  FROM lineitem),
-        |u AS (
-        |  SELECT l_returnflag, 'qty_c' AS measure, qty_c AS cents FROM base
-        |  UNION ALL SELECT l_returnflag, 'price_c', price_c FROM base
-        |  UNION ALL SELECT l_returnflag, 'disc_c', disc_c FROM base
-        |  UNION ALL SELECT l_returnflag, 'tax_c', tax_c FROM base)
-        |SELECT l_returnflag, measure,
-        |  CAST(sum(cents) AS BIGINT) / 100.0 AS total,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM u GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q40_recursive_cte" ->
-      """WITH RECURSIVE h(id, root, depth) AS (
-        |  SELECT s_suppkey, s_suppkey, 0 FROM supplier WHERE s_suppkey <= 3
-        |  UNION ALL
-        |  SELECT s.s_suppkey, h.root, h.depth + 1
-        |  FROM supplier s JOIN h ON s.s_suppkey // 4 = h.id
-        |  WHERE s.s_suppkey >= 4)
-        |SELECT root, depth, count(*) AS n_nodes, CAST(sum(id) AS BIGINT) AS sum_ids
-        |FROM h GROUP BY root, depth ORDER BY root, depth""".stripMargin,
-
-    "q39_runtime_filter" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q38_schema_evolution" ->
-      """SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_legacy,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN doc_id % 100 ELSE 0 END) AS BIGINT)
-        |    AS sum_quality
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q35_bag_setops" ->
-      """SELECT op, count(*) AS n FROM (
-        |  SELECT 'intersect_all' AS op, pk FROM (
-        |    SELECT l_partkey AS pk FROM lineitem
-        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
-        |    INTERSECT ALL
-        |    SELECT l_partkey FROM lineitem
-        |    WHERE l_shipdate >= TIMESTAMP '1997-07-01' AND l_shipdate < TIMESTAMP '1998-01-01') ia
-        |  UNION ALL
-        |  SELECT 'except_all' AS op, pk FROM (
-        |    SELECT l_partkey AS pk FROM lineitem
-        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
-        |    EXCEPT ALL
-        |    SELECT l_partkey FROM lineitem
-        |    WHERE l_shipdate >= TIMESTAMP '1997-07-01' AND l_shipdate < TIMESTAMP '1998-01-01') ea
-        |  UNION ALL
-        |  SELECT 'union_all' AS op, l_partkey AS pk FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |) u GROUP BY op ORDER BY op""".stripMargin,
-
-    "q34_nullaware_anti" ->
-      """SELECT o_orderkey, o_custkey
-        |FROM (SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 97 = 0 THEN CAST(NULL AS BIGINT)
-        |         ELSE o_custkey END AS o_custkey
-        |  FROM orders) o
-        |WHERE o_custkey NOT IN
-        |    (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q33_range_frame" ->
-      """SELECT o_orderkey, o_custkey, CAST(day AS INT) AS day,
-        |  CAST(sum(pc) OVER (PARTITION BY o_custkey ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_7d_cents,
-        |  CAST(CAST(sum(pc) OVER (PARTITION BY o_custkey ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS DOUBLE) / 100.0 AS trailing_7d
-        |FROM (SELECT o_orderkey, o_custkey,
-        |    datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS day,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS pc
-        |  FROM orders) t
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q32_correlated_subquery" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE CAST(round(o_totalprice * 100) AS BIGINT) >
-        |    (SELECT CAST(sum(CAST(round(o2.o_totalprice * 100) AS BIGINT)) AS BIGINT) // count(*)
-        |     FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q31_quantile_bucket" ->
-      """WITH o AS (SELECT CAST(floor(o_totalprice / 100) AS BIGINT) AS pb FROM orders),
-        |hist AS (SELECT pb, CAST(count(*) AS BIGINT) AS cnt FROM o GROUP BY 1),
-        |c AS (SELECT pb,
-        |    sum(cnt) OVER (ORDER BY pb ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(cnt) OVER () AS n FROM hist),
-        |b AS (SELECT min(CASE WHEN cum >= (n + 3) // 4 THEN pb END) AS b25,
-        |    min(CASE WHEN cum >= (n + 1) // 2 THEN pb END) AS b50,
-        |    min(CASE WHEN cum >= (3*n + 3) // 4 THEN pb END) AS b75 FROM c)
-        |SELECT 1 + CAST(pb > b25 AS INT) + CAST(pb > b50 AS INT) + CAST(pb > b75 AS INT) AS quartile,
-        |  CAST(count(*) AS BIGINT) AS n_orders, min(pb) AS min_pb, max(pb) AS max_pb
-        |FROM o CROSS JOIN b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS sum_base_price,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS sum_disc_price,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) / 1000000.0 AS sum_charge,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 / count(*) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q2_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice, l_discount, CAST(l_shipdate AS TIMESTAMP) AS l_shipdate
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-02-01'
-        |  AND l_discount >= 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q3_join_agg" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
-        |FROM lineitem, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q4_broadcast_join" ->
-      """SELECT r_name, n_name, count(*) AS n_customers,
-        |  sum(CAST(round(c_acctbal*100) AS BIGINT)) / 100.0 AS total_acctbal
-        |FROM customer, nation, region
-        |WHERE c_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "q5_semi_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000.0)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q6_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q7_topk_orders" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q8_window_rank" ->
-      """SELECT l_returnflag, rn, l_orderkey, l_linenumber, l_extendedprice FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-        |    CAST(row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS INT) AS rn
-        |  FROM lineitem) t
-        |WHERE rn <= 3
-        |ORDER BY l_returnflag, rn""".stripMargin,
-
-    "q9_window_running" ->
-      """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS running_spent
-        |FROM orders
-        |WHERE o_custkey < 30
-        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin,
-
-    "q10_distinct_agg" ->
-      """SELECT l_returnflag,
-        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-        |  count(*) AS n_lines
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q11_quantiles" ->
-      """SELECT l_returnflag,
-        |  max(CASE WHEN rn = CEIL(n*0.5) THEN l_quantity END) AS p50_qty,
-        |  max(CASE WHEN rn = CEIL(n*0.95) THEN l_quantity END) AS p95_qty
-        |FROM (
-        |  SELECT l_returnflag, l_quantity,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_quantity, l_orderkey, l_linenumber) AS rn,
-        |    count(*) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM lineitem) t
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q12_case_agg" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem, orders
-        |WHERE l_orderkey = o_orderkey
-        |  AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q13_having" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS spent
-        |FROM orders GROUP BY o_custkey HAVING count(*) >= 15 ORDER BY o_custkey""".stripMargin,
-
-    "q14_union_dedup" ->
-      """SELECT DISTINCT nationkey FROM (
-        |  SELECT c_nationkey AS nationkey FROM customer
-        |  UNION ALL SELECT s_nationkey AS nationkey FROM supplier) t
-        |ORDER BY nationkey""".stripMargin,
-
-    "q15_rollup" ->
-      """SELECT r_name, n_name, count(*) AS n_customers
-        |FROM customer, nation, region
-        |WHERE c_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-
-    "q16_pivot" ->
-      """SELECT l_returnflag,
-        |  count(*) FILTER (WHERE l_linestatus = 'F') AS "F",
-        |  count(*) FILTER (WHERE l_linestatus = 'O') AS "O"
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q17_scalar_subquery" ->
-      """SELECT sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 / 7.0 AS avg_yearly
-        |FROM lineitem, part,
-        |  (SELECT l_partkey AS a_partkey,
-        |     sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 / count(*) AS avg_qty
-        |   FROM lineitem GROUP BY l_partkey) a
-        |WHERE p_partkey = l_partkey AND a_partkey = l_partkey
-        |  AND p_brand = 'Brand#2' AND l_quantity < avg_qty * 0.2""".stripMargin,
-
-    "q18_groupby_in" ->
-      """SELECT c_custkey, c_name, o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_totalprice, sum_qty
-        |FROM orders, customer,
-        |  (SELECT l_orderkey AS b_orderkey,
-        |     sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty
-        |   FROM lineitem GROUP BY l_orderkey) b
-        |WHERE o_orderkey = b_orderkey AND o_custkey = c_custkey AND sum_qty > 250.0
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q19_multi_sort" ->
-      """SELECT l_returnflag, CAST(l_shipdate AS TIMESTAMP) AS l_shipdate, l_orderkey, l_linenumber, l_quantity
-        |FROM lineitem WHERE l_quantity >= 49.0
-        |ORDER BY l_returnflag ASC, l_shipdate DESC, l_orderkey ASC, l_linenumber ASC
-        |LIMIT 500""".stripMargin,
-
-    "q21_skew_agg" ->
-      """SELECT event_type AS key, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY key""".stripMargin,
-
-    // the oracle aggregates the FACT directly — identical results prove
-    // the MV substitution is semantics-preserving (decomposable sums)
-    "q60_mv_rewrite" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_c,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the UDF bodies inlined by hand — byte-identical semantics proves
-    // Spark's SQL-UDF inlining preserved the arithmetic exactly
-    "q59_sql_udf" ->
-      """WITH t(tier, lo, hi) AS (VALUES (1, 0, 10), (2, 10, 25), (3, 25, 100))
-        |SELECT l_returnflag, CAST(t.tier AS INT) AS tier,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS net_c2
-        |FROM lineitem l JOIN t ON l.l_quantity >= t.lo AND l.l_quantity < t.hi
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q23_sql_api" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
-        |FROM lineitem, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q24_topn_custom" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem) t
-        |WHERE rn <= 3
-        |ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey, l_linenumber""".stripMargin,
-
-    "q25_window_misc" ->
-      """SELECT o_custkey, o_orderkey,
-        |  first_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_order,
-        |  last_value(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_order,
-        |  lag(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_order,
-        |  lead(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_order,
-        |  CAST(ntile(4) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INT) AS quartile
-        |FROM orders WHERE o_custkey < 50
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q28_range_join" ->
-      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us FROM events),
-        |w AS (SELECT CAST(i AS INT) AS win_id,
-        |    (SELECT min(ts_us) FROM e) + i * 259200000000 AS start_us,
-        |    (SELECT min(ts_us) FROM e) + i * 259200000000 + 86400000000 AS end_us
-        |  FROM generate_series(0, 9) t(i))
-        |SELECT win_id, count(*) AS n_events,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM e JOIN w ON ts_us >= start_us AND ts_us < end_us
-        |GROUP BY win_id ORDER BY win_id""".stripMargin,
-
-    "q26_intersect" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |INTERSECT SELECT s_nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-
-    "q27_except" ->
-      """SELECT c_nationkey AS nationkey FROM customer
-        |EXCEPT SELECT s_nationkey FROM supplier WHERE s_nationkey < 10
-        |ORDER BY nationkey""".stripMargin,
-
-    "q22_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS qty
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q29_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_flag,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_status,
-        |  count(*) AS n,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ())
-        |ORDER BY g_flag, g_status,
-        |  l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "q30_full_outer" ->
-      """SELECT nationkey,
-        |  CAST(coalesce(n_cust, 0) AS BIGINT) AS n_cust,
-        |  CAST(coalesce(n_supp, 0) AS BIGINT) AS n_supp
-        |FROM (SELECT c_nationkey AS nationkey, count(*) AS n_cust
-        |      FROM customer GROUP BY 1) c
-        |FULL JOIN (SELECT s_nationkey AS nationkey, count(*) AS n_supp
-        |      FROM supplier WHERE s_nationkey < 15 GROUP BY 1) s
-        |  USING (nationkey)
-        |ORDER BY nationkey""".stripMargin,
-
-    "q20_string_ops" ->
-      """SELECT p_partkey, upper(p_name) AS uname,
-        |  CAST(length(p_name) AS INT) AS name_len,
-        |  substring(p_type, 1, 4) AS type_prefix,
-        |  concat_ws('|', p_brand, p_type) AS brand_type
-        |FROM part
-        |WHERE p_name LIKE '%e%' AND regexp_matches(p_name, '^(red|blue|hot)')
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q36_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS total_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q37_format_roundtrip" ->
-      """WITH a AS (SELECT count(*) AS n,
-        |    sum(CAST(round(l_quantity*100) AS BIGINT)) / 100.0 AS qty,
-        |    CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_flags,
-        |    CAST(min(l_shipdate) AS TIMESTAMP) AS min_ship,
-        |    CAST(max(l_shipdate) AS TIMESTAMP) AS max_ship,
-        |    CAST(sum(length(cmt)) AS BIGINT) AS cmt_chars,
-        |    max(cmt) AS max_cmt
-        |  FROM (SELECT *, l_returnflag || ',"' || l_linestatus || '",' ||
-        |      CAST(l_orderkey AS VARCHAR) AS cmt FROM lineitem) t)
-        |SELECT f.format, a.* FROM a
-        |CROSS JOIN (VALUES ('csv'), ('json'), ('orc')) f(format)
-        |ORDER BY f.format""".stripMargin
+        |FROM zones GROUP BY layout ORDER BY layout""".stripMargin) { (s, dir) =>
+      import graft.operators.Layout
+      val base = Tables.lineitem(s, dir).select(
+        pmod(pmod(col("l_partkey"), lit(100000L)) * lit(2654435761L),
+          lit(16384L)).as("x"),
+        pmod(pmod(col("l_suppkey"), lit(100000L)) * lit(40503L),
+          lit(16384L)).as("y"),
+        col("l_orderkey"), col("l_linenumber"))
+      val ties = Seq(col("x"), col("y"), col("l_orderkey"), col("l_linenumber"))
+      val linear = Layout.fileIds(base, col("x"), ties,
+        bucketShift = 9, rowsPerFile = 2048)
+      val zorder = Layout.fileIds(base,
+        Layout.morton(col("x"), col("y"), 14), ties,
+        bucketShift = 23, rowsPerFile = 2048)
+      Layout.zoneMapStats(linear, col("x"), col("y"),
+          2000L, 3000L, 3000L, 4000L, "linear")
+        .unionByName(Layout.zoneMapStats(zorder, col("x"), col("y"),
+          2000L, 3000L, 3000L, 4000L, "zorder"))
+        .orderBy(col("layout"))
+    }
   )
 }

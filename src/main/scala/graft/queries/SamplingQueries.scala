@@ -33,7 +33,7 @@ object SamplingQueries {
   private def drawHexSql(salt: String) =
     s"substr(md5('$salt|' || CAST(doc_id AS VARCHAR)), 1, 2)"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def keys: Seq[QueryKey] = Seq(
     // deterministic EPOCH shuffle — the training-data ORDERING op (every
     // multi-epoch run needs a different, reproducible global permutation
     // per epoch; RNG state would make retries non-deterministic): epoch
@@ -49,7 +49,42 @@ object SamplingQueries {
     // orders genuinely differ). Cross-epoch comparison is a PIVOT into
     // per-epoch position columns in one groupBy(doc_id) — never an
     // epoch×epoch self-join.
-    "p25_epoch_shuffle" -> { (s, dir) =>
+    QueryKey("p25_epoch_shuffle",
+      // global row_number per epoch — positionally identical to the Spark
+      // side's two-level bucket rank because the bucket is a PREFIX of the
+      // sort key (order by (prefix, k) == order by k)
+      """WITH e AS (SELECT doc_id, unnest([0, 1, 2]) AS epoch FROM documents),
+        |k AS (SELECT doc_id, epoch,
+        |    md5('ep' || CAST(epoch AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)) AS k
+        |  FROM e),
+        |p AS (SELECT doc_id, epoch,
+        |    CAST(row_number() OVER (PARTITION BY epoch ORDER BY k) - 1 AS BIGINT) AS pos
+        |  FROM k),
+        |piv AS (SELECT doc_id,
+        |    max(CASE WHEN epoch = 0 THEN pos END) AS p0,
+        |    max(CASE WHEN epoch = 1 THEN pos END) AS p1,
+        |    max(CASE WHEN epoch = 2 THEN pos END) AS p2
+        |  FROM p GROUP BY doc_id),
+        |h AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 7), j ->
+        |    CAST(strpos('0123456789abcdef',
+        |      substring(md5(CAST(doc_id AS VARCHAR)), 1 + j, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (7 - j))))) AS BIGINT) % 1000000007 AS hv
+        |  FROM piv),
+        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(count(DISTINCT p0) AS BIGINT) AS nd0,
+        |    CAST(count(DISTINCT p1) AS BIGINT) AS nd1,
+        |    CAST(count(DISTINCT p2) AS BIGINT) AS nd2,
+        |    CAST(sum(((p0 + 1) * hv) % 1000000007) AS BIGINT) AS dg0,
+        |    CAST(sum(((p1 + 1) * hv) % 1000000007) AS BIGINT) AS dg1,
+        |    CAST(sum(((p2 + 1) * hv) % 1000000007) AS BIGINT) AS dg2,
+        |    CAST(sum(abs(p1 - p0)) AS BIGINT) AS disp1,
+        |    CAST(sum(abs(p2 - p0)) AS BIGINT) AS disp2
+        |  FROM h)
+        |SELECT CAST(0 AS INT) AS epoch, n_docs, nd0 AS n_distinct_pos,
+        |  dg0 AS perm_digest, 0::BIGINT AS disp_vs_e0 FROM a
+        |UNION ALL SELECT CAST(1 AS INT), n_docs, nd1, dg1, disp1 FROM a
+        |UNION ALL SELECT CAST(2 AS INT), n_docs, nd2, dg2, disp2 FROM a
+        |ORDER BY epoch""".stripMargin) { (s, dir) =>
       val M = 1000000007L
       val keyed = Tables.documents(s, dir).select(col("doc_id"))
         .withColumn("epoch", explode(array(lit(0), lit(1), lit(2))))
@@ -94,7 +129,22 @@ object SamplingQueries {
     // (the countDistinct is the standard two-phase expand). Integer bp
     // ratios (floor div). At 100 TB this is the cheap pass that runs
     // LAST and gets read FIRST.
-    "p26_data_card" -> { (s, dir) =>
+    QueryKey("p26_data_card",
+      """WITH d AS (SELECT source, lang, n_chars, md5(text) AS h,
+        |    regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+        |q AS (SELECT source, lang, n_chars, h,
+        |    CAST(len(w) AS BIGINT) AS n_tokens,
+        |    CASE WHEN len(list_distinct(w)) * 10000 // len(w) >= 4500
+        |      AND len(w) >= 20 THEN 1 ELSE 0 END AS q_ok
+        |  FROM d)
+        |SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(DISTINCT h) AS BIGINT) AS n_unique,
+        |  CAST((count(*) - count(DISTINCT h)) * 10000 // count(*) AS BIGINT) AS dup_bp,
+        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
+        |  CAST(sum(n_tokens) // count(*) AS BIGINT) AS tokens_avg,
+        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
+        |  CAST(sum(q_ok) * 10000 // count(*) AS BIGINT) AS quality_bp
+        |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("_w", split(trim(col("text")), "\\s+"))
         .withColumn("n_tokens", size(col("_w")).cast("long"))
@@ -120,7 +170,14 @@ object SamplingQueries {
     // deterministic train/val/test split: hex-threshold on the draw
     // ('1a' = 26/256 ≈ 10% test, '33' → next ≈10% val). Map-only per
     // row; the groupBy here only summarizes the split for checking.
-    "p1_hash_split" -> { (s, dir) =>
+    QueryKey("p1_hash_split",
+      s"""SELECT split, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+         |FROM (SELECT lang, n_chars,
+         |    CASE WHEN ${drawHexSql("split")} < '1a' THEN 'test'
+         |         WHEN ${drawHexSql("split")} < '33' THEN 'val'
+         |         ELSE 'train' END AS split
+         |  FROM documents) t
+         |GROUP BY split, lang ORDER BY split, lang""".stripMargin) { (s, dir) =>
       val k = drawHex("split")
       Tables.documents(s, dir)
         .withColumn("split",
@@ -134,7 +191,12 @@ object SamplingQueries {
     // config dim (e.g. downweight over-represented en). The filter is
     // map-side (broadcast hash join + threshold compare) — at 100 TB
     // this never shuffles the corpus.
-    "p2_stratified_sample" -> { (s, dir) =>
+    QueryKey("p2_stratified_sample",
+      s"""SELECT doc_id, lang FROM documents
+         |JOIN (VALUES ('en','20'),('de','80'),('es','80'),('fr','80'),('zh','40'))
+         |  r(lang, keep_below) USING (lang)
+         |WHERE ${drawHexSql("strat")} < keep_below
+         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       val rates = Seq(("en", "20"), ("de", "80"), ("es", "80"),
           ("fr", "80"), ("zh", "40"))
@@ -151,7 +213,13 @@ object SamplingQueries {
     // n smallest salted-md5 draws per language, through the TopNPerKey
     // custom operator — per-partition bounded heaps, so the shuffle
     // carries ≤ groups×n rows instead of the corpus.
-    "p3_group_sample" -> { (s, dir) =>
+    QueryKey("p3_group_sample",
+      """SELECT lang, doc_id, samp_key FROM (
+        |  SELECT lang, doc_id, md5('res|' || CAST(doc_id AS VARCHAR)) AS samp_key,
+        |    row_number() OVER (PARTITION BY lang
+        |      ORDER BY md5('res|' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
+        |  FROM documents) t
+        |WHERE rn <= 20 ORDER BY lang, samp_key, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
         .select(col("lang"), col("doc_id"))
         .withColumn("samp_key",
@@ -173,7 +241,17 @@ object SamplingQueries {
     // documented packing-efficiency trade for unbounded parallelism).
     // Bin ids are composite (block*1e6 + bin-within-block) so they stay
     // unique per lang.
-    "p4_token_pack" -> { (s, dir) =>
+    QueryKey("p4_token_pack",
+      """SELECT lang, bin, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+        |FROM (
+        |  SELECT lang, doc_id, n_tokens,
+        |    CAST(blk * 1000000 + (sum(n_tokens) OVER (PARTITION BY lang, blk ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens) // 256 AS BIGINT) AS bin
+        |  FROM (SELECT lang, doc_id, doc_id // 128 AS blk,
+        |      CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens
+        |    FROM documents) a) b
+        |GROUP BY lang, bin ORDER BY lang, bin""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("lang"), col("blk")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.documents(s, dir)
@@ -197,7 +275,21 @@ object SamplingQueries {
     // would sort each whole class in one task at 100 TB. The corpus is
     // scanned twice (map-only fan-out + heap selection); both passes are
     // embarrassingly parallel.
-    "p6_balanced_resample" -> { (s, dir) =>
+    QueryKey("p6_balanced_resample",
+      """WITH lc AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),
+        |tgt AS (SELECT max(c) AS target FROM lc),
+        |ranked AS (
+        |  SELECT d.doc_id, d.lang, lc.c, tgt.target,
+        |    row_number() OVER (PARTITION BY d.lang
+        |      ORDER BY md5('bal|' || CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rnk
+        |  FROM documents d JOIN lc USING (lang) CROSS JOIN tgt)
+        |SELECT doc_id, lang, CAST(i AS INT) AS copy_idx
+        |FROM (
+        |  SELECT doc_id, lang,
+        |    unnest(generate_series(1, CAST(target // c +
+        |      (CASE WHEN rnk <= target % c THEN 1 ELSE 0 END) AS INT))) AS i
+        |  FROM ranked) u
+        |ORDER BY doc_id, copy_idx""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
       // class sizes and the majority-class target are tiny aggregates,
       // broadcast back — never a global single-partition window
@@ -233,7 +325,25 @@ object SamplingQueries {
     // row per distinct (lang, source) — bounded, never corpus-sized);
     // the corpus itself sees one broadcast join + heap selection, no
     // window anywhere.
-    "p10_quota_matrix" -> { (s, dir) =>
+    QueryKey("p10_quota_matrix",
+      s"""WITH d AS (SELECT doc_id, lang, source,
+         |    md5('q2d|' || CAST(doc_id AS VARCHAR)) AS draw FROM documents),
+         |cells AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2),
+         |lt AS (SELECT lang, CAST(sum(c) AS BIGINT) AS lc FROM cells GROUP BY 1),
+         |alloc AS (SELECT lang, source, c, lc, (lc * 60) // 100 AS b,
+         |    ((lc * 60) // 100) * c // lc AS prop,
+         |    (((lc * 60) // 100) * c) % lc AS frac
+         |  FROM cells JOIN lt USING (lang)),
+         |ranked AS (SELECT *,
+         |    row_number() OVER (PARTITION BY lang ORDER BY frac DESC, source) AS rr,
+         |    b - sum(prop) OVER (PARTITION BY lang) AS rem FROM alloc),
+         |quota AS (SELECT lang, source, c,
+         |    CAST(prop + CASE WHEN rr <= rem THEN 1 ELSE 0 END AS INT) AS q FROM ranked),
+         |kept AS (SELECT d.doc_id, d.lang, d.source, c, q,
+         |    row_number() OVER (PARTITION BY d.lang, d.source ORDER BY draw, doc_id) AS rn
+         |  FROM d JOIN quota USING (lang, source))
+         |SELECT doc_id, lang, source, c AS cell_n, q AS cell_quota
+         |FROM kept WHERE rn <= q ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"))
         .withColumn("draw",
@@ -268,7 +378,19 @@ object SamplingQueries {
     // the source gets one extra pass). Entirely map-side — weight
     // arithmetic + bounded explode (≤4 copies), no shuffle before the
     // output sort; deterministic under retry like the whole p-family.
-    "p7_weighted_mix" -> { (s, dir) =>
+    QueryKey("p7_weighted_mix",
+      s"""SELECT doc_id, source, CAST(e AS INT) AS epoch
+         |FROM (
+         |  SELECT doc_id, source,
+         |    unnest(generate_series(1, w64 // 16 + extra)) AS e
+         |  FROM (
+         |    SELECT doc_id, source,
+         |      (CAST(substr(source, 4) AS INT) * 37) % 64 AS w64,
+         |      CASE WHEN substr(md5('mix|' || CAST(doc_id AS VARCHAR)), 1, 1) <
+         |          lower(hex((CAST(substr(source, 4) AS INT) * 37) % 64 % 16))
+         |        THEN 1 ELSE 0 END AS extra
+         |    FROM documents) t) u
+         |ORDER BY doc_id, epoch""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), col("source"))
         .withColumn("w64", expr("(CAST(substring(source, 4, 10) AS INT) * 37) % 64"))
@@ -288,7 +410,16 @@ object SamplingQueries {
     // of the re-joined token slice; fan-out per doc is ceil(tokens/30).
     // The words array is built ONCE per row (zip-of-slices pitfall does
     // not apply: slice() sits outside any transform() lambda).
-    "p5_chunk_overlap" -> { (s, dir) =>
+    QueryKey("p5_chunk_overlap",
+      """SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+        |  CAST(least(40, nw - i*30) AS INT) AS chunk_tokens,
+        |  md5(array_to_string(wd[(i*30+1):(i*30+40)], ' ')) AS chunk_md5
+        |FROM (
+        |  SELECT doc_id, wd, len(wd) AS nw,
+        |    unnest(range(0, (len(wd)-1)//30 + 1)) AS i
+        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd
+        |    FROM documents) a) b
+        |ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
         .withColumn("nw", size(col("words")))
@@ -313,7 +444,32 @@ object SamplingQueries {
     // engines (never an arg_min whose tie behavior is undefined).
     // Scale shape: the ring (≤144 rows) broadcasts; assignment is one
     // partial-agg shuffle carrying one row per key per ring.
-    "p9_consistent_shards" -> { (s, dir) =>
+    QueryKey("p9_consistent_shards", {
+      def hex4(e: String) =
+        s"((strpos('0123456789abcdef', substr($e, 1, 1)) - 1) * 4096 + " +
+        s"(strpos('0123456789abcdef', substr($e, 2, 1)) - 1) * 256 + " +
+        s"(strpos('0123456789abcdef', substr($e, 3, 1)) - 1) * 16 + " +
+        s"(strpos('0123456789abcdef', substr($e, 4, 1)) - 1))"
+      def ringCte(name: String, n: Int) =
+        s"""$name AS (SELECT nn.g AS node,
+           |    ${hex4(s"md5('ring|' || CAST(nn.g AS VARCHAR) || '|' || CAST(vv.g AS VARCHAR))")} AS pos
+           |  FROM generate_series(0, ${n - 1}) nn(g), generate_series(0, 15) vv(g))""".stripMargin
+      s"""WITH ${ringCte("ring8", 8)},
+         |${ringCte("ring9", 9)},
+         |keys AS (SELECT doc_id,
+         |    ${hex4("md5('key|' || CAST(doc_id AS VARCHAR))")} AS kpos
+         |  FROM documents),
+         |a8 AS (SELECT doc_id,
+         |    CAST(min(((pos - kpos + 65536) % 65536) * 16 + node) % 16 AS INT) AS shard8
+         |  FROM keys CROSS JOIN ring8 GROUP BY doc_id),
+         |a9 AS (SELECT doc_id,
+         |    CAST(min(((pos - kpos + 65536) % 65536) * 16 + node) % 16 AS INT) AS shard9
+         |  FROM keys CROSS JOIN ring9 GROUP BY doc_id)
+         |SELECT shard8, count(*) AS n_docs,
+         |  CAST(sum(CASE WHEN shard8 != shard9 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved
+         |FROM a8 JOIN a9 USING (doc_id)
+         |GROUP BY shard8 ORDER BY shard8""".stripMargin
+    }) { (s, dir) =>
       def hex4(e: String) =
         s"((instr('0123456789abcdef', substr($e, 1, 1)) - 1) * 4096 + " +
         s"(instr('0123456789abcdef', substr($e, 2, 1)) - 1) * 256 + " +
@@ -354,7 +510,22 @@ object SamplingQueries {
     // stays in codegen); the stats are one partial-agg shuffle of 64
     // groups. At 100 TB the same z-key feeds repartitionByRange before
     // the parquet write.
-    "p8_zorder_layout" -> { (s, dir) =>
+    QueryKey("p8_zorder_layout", {
+      def spreadSql(e: String): String = {
+        val a = s"(($e) | (($e) << 8)) & 16711935"
+        val b = s"(($a) | (($a) << 4)) & 252645135"
+        val c = s"(($b) | (($b) << 2)) & 858993459"
+        s"(($c) | (($c) << 1)) & 1431655765"
+      }
+      s"""SELECT bucket, count(*) AS n_rows,
+         |  min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
+         |FROM (SELECT x, y,
+         |    CAST(((${spreadSql("x")}) | ((${spreadSql("y")}) << 1)) // 1024 AS INT) AS bucket
+         |  FROM (SELECT CAST(o_custkey % 256 AS BIGINT) AS x,
+         |      CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) % 256 AS BIGINT) AS y
+         |    FROM orders) s) t
+         |GROUP BY bucket ORDER BY bucket""".stripMargin
+    }) { (s, dir) =>
       def spread(e: String): String = {
         val a = s"(($e) | shiftleft(($e), 8)) & 16711935"
         val b = s"(($a) | shiftleft(($a), 4)) & 252645135"
@@ -383,7 +554,13 @@ object SamplingQueries {
     // part of the measured operator: layout cost is paid once, every
     // later time-ranged read pays only for the days it needs. Pairs
     // with p8 (z-order = intra-file skipping) as the two layout levers.
-    "p11_partition_prune" -> { (s, dir) =>
+    QueryKey("p11_partition_prune",
+      """SELECT CAST(CAST(CAST(ts AS TIMESTAMP) AS DATE) AS TIMESTAMP) AS day, event_type,
+        |  count(*) AS n, count(DISTINCT user_id) AS n_users,
+        |  sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
+        |FROM events
+        |WHERE CAST(CAST(ts AS TIMESTAMP) AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-07'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       // day-partitioned layout is written ONCE per (JVM, source dir) and
       // shared with p12 — repeated invocations prune-read the cached copy
       val base = graft.sources.DerivedLayouts.once(s"events_by_day|$dir") { p =>
@@ -410,7 +587,15 @@ object SamplingQueries {
     // is the difference between scanning the store and scanning the five
     // days the dim selects; the dim (5 rows) broadcasts, the DPP
     // subquery reuses that same broadcast exchange.
-    "p12_dynamic_prune" -> { (s, dir) =>
+    QueryKey("p12_dynamic_prune",
+      """SELECT CAST(d.day AS TIMESTAMP) AS day, e.event_type,
+        |  count(*) AS n, count(DISTINCT e.user_id) AS n_users,
+        |  sum(CAST(round(e.value * 100) AS BIGINT)) / 100.0 AS total_value
+        |FROM events e
+        |JOIN (SELECT DATE '2024-01-01' + CAST(n_nationkey AS INT) AS day
+        |      FROM nation WHERE n_regionkey = 1) d
+        |  ON CAST(CAST(e.ts AS TIMESTAMP) AS DATE) = d.day
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val base = graft.sources.DerivedLayouts.once(s"events_by_day|$dir") { p =>
         Tables.events(s, dir).withColumn("day", to_date(col("ts")))
           .write.mode("overwrite").partitionBy("day").parquet(s"$p/events")
@@ -443,7 +628,19 @@ object SamplingQueries {
     // layout lesson measurable: every time shard spans the full value
     // range (zone maps useless, all scanned), while the value-clustered
     // layout scans only the shards the band touches.
-    "p13_zonemap_skip" -> { (s, dir) =>
+    QueryKey("p13_zonemap_skip",
+      """WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us,
+        |    CAST(round(value * 100) AS BIGINT) AS c FROM events),
+        |sh AS (
+        |  SELECT 'time' AS layout,
+        |    (us // 86400000000) * 24 + (us % 86400000000) // 3600000000 AS shard_key, c
+        |  FROM e
+        |  UNION ALL
+        |  SELECT 'value' AS layout, c // 3200 AS shard_key, c FROM e)
+        |SELECT layout, shard_key, CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(min(c) AS BIGINT) AS min_c, CAST(max(c) AS BIGINT) AS max_c,
+        |  CAST(CASE WHEN max(c) >= 10000 AND min(c) <= 20000 THEN 1 ELSE 0 END AS INT) AS scanned
+        |FROM sh GROUP BY 1, 2 ORDER BY layout, shard_key""".stripMargin) { (s, dir) =>
       val lay = Tables.events(s, dir)
         .select(expr("unix_micros(ts)").as("us"),
           expr("CAST(round(value * 100) AS BIGINT)").as("c"))
@@ -476,7 +673,24 @@ object SamplingQueries {
     // bin agg) and every intermediate "table" is a plan fragment, not
     // a write. At 100 TB this is the difference between one job and
     // four jobs with three intermediate datasets on disk.
-    "p15_pipeline_e2e" -> { (s, dir) =>
+    QueryKey("p15_pipeline_e2e",
+      s"""WITH dd AS (SELECT * FROM (
+         |    SELECT d.*, row_number() OVER (PARTITION BY md5(text)
+         |      ORDER BY doc_id) AS rn FROM documents d) x WHERE rn = 1),
+         |tk AS (SELECT doc_id, lang, n_chars,
+         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS INT) AS n_tokens
+         |  FROM dd),
+         |train AS (SELECT * FROM tk
+         |  WHERE n_chars >= 100 AND n_tokens >= 20
+         |    AND ${drawHexSql("split")} >= '33'),
+         |c AS (SELECT lang, doc_id, n_tokens, doc_id // 128 AS blk,
+         |    sum(n_tokens) OVER (PARTITION BY lang, doc_id // 128 ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM train)
+         |SELECT lang, CAST(blk * 1000000 + (cum - n_tokens) // 2048 AS BIGINT) AS bin,
+         |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
+         |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
+         |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val keepW = Window.partitionBy(col("h")).orderBy(col("doc_id"))
       val deduped = Tables.documents(s, dir)
         .withColumn("h", md5(col("text")))
@@ -519,7 +733,21 @@ object SamplingQueries {
     // estimates of the full corpus (SamplingSpec proves the HT corpus-
     // size estimate lands near truth). Map-only: no shuffle before the
     // output sort at any SF.
-    "p16_importance_sample" -> { (s, dir) =>
+    QueryKey("p16_importance_sample",
+      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
+        |  FROM documents),
+        |s1 AS (SELECT doc_id,
+        |    CAST(len(list_distinct(w)) * 10000 // len(w) AS BIGINT) AS q_bp,
+        |    md5('imp|' || CAST(doc_id AS VARCHAR)) AS h
+        |  FROM d),
+        |s2 AS (SELECT doc_id, q_bp,
+        |    greatest(q_bp * 256 // 10000, 16) AS t256,
+        |    (instr('0123456789abcdef', substring(h, 1, 1)) - 1) * 16 +
+        |    (instr('0123456789abcdef', substring(h, 2, 1)) - 1) AS dr
+        |  FROM s1)
+        |SELECT doc_id, q_bp, CAST(t256 AS BIGINT) AS t256,
+        |  CAST(256 * 10000 // t256 AS BIGINT) AS inv_w_sc
+        |FROM s2 WHERE dr < t256 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("_w", split(trim(col("text")), "\\s+"))
         .withColumn("q_bp", expr("size(array_distinct(_w)) * 10000 div size(_w)"))
@@ -544,7 +772,29 @@ object SamplingQueries {
     // straddles ZERO by construction — and the oracle hash-checks both
     // numbers. Group stats ride one partial-agg shuffle; the scheme
     // explode runs on cluster-level aggregate rows.
-    "p17_split_leakage" -> { (s, dir) =>
+    QueryKey("p17_split_leakage",
+      """WITH d AS (SELECT doc_id,
+        |    array_to_string(regexp_split_to_array(trim(text), '\s+')[1:2], ' ') AS ckey
+        |  FROM documents),
+        |s AS (SELECT ckey,
+        |    CASE WHEN substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 2) < '1a' THEN 'test'
+        |         WHEN substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 2) < '33' THEN 'val'
+        |         ELSE 'train' END AS naive_split,
+        |    CASE WHEN substr(md5('split|' || ckey), 1, 2) < '1a' THEN 'test'
+        |         WHEN substr(md5('split|' || ckey), 1, 2) < '33' THEN 'val'
+        |         ELSE 'train' END AS cluster_split
+        |  FROM d),
+        |g AS (SELECT ckey, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(count(DISTINCT naive_split) AS BIGINT) AS nd_naive,
+        |    CAST(count(DISTINCT cluster_split) AS BIGINT) AS nd_cluster
+        |  FROM s GROUP BY 1),
+        |u AS (SELECT 'cluster' AS scheme, nd_cluster AS nd, n_docs FROM g
+        |  UNION ALL SELECT 'naive', nd_naive, n_docs FROM g)
+        |SELECT scheme, CAST(count(*) AS BIGINT) AS n_groups,
+        |  CAST(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_groups,
+        |  CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_straddling_groups,
+        |  CAST(sum(CASE WHEN nd > 1 THEN n_docs ELSE 0 END) AS BIGINT) AS n_docs_straddling
+        |FROM u GROUP BY scheme ORDER BY scheme""".stripMargin) { (s, dir) =>
       def splitOf(c: org.apache.spark.sql.Column) = {
         val k = substring(md5(concat_ws("|", lit("split"), c)), 1, 2)
         when(k < "1a", "test").when(k < "33", "val").otherwise("train")
@@ -595,7 +845,27 @@ object SamplingQueries {
     // output sort. SamplingSpec proves the closed form on a skewed
     // fixture (100× mass gap → 3 epochs + 41/256 draw), the
     // largest-source-exactly-once invariant, and the cap.
-    "p18_temperature_mix" -> { (s, dir) =>
+    QueryKey("p18_temperature_mix",
+      s"""WITH src AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS m
+         |  FROM documents GROUP BY 1),
+         |mx AS (SELECT max(m) AS m_max FROM src),
+         |r AS (SELECT source,
+         |    CAST(floor(sqrt(sqrt(CAST(m_max AS DOUBLE) / CAST(m AS DOUBLE))) * 256)
+         |      AS BIGINT) AS r256
+         |  FROM src CROSS JOIN mx),
+         |base AS (SELECT doc_id, d.source, r256,
+         |    (strpos('0123456789abcdef', substr(${drawHexSql("mix7")}, 1, 1)) - 1) * 16 +
+         |    (strpos('0123456789abcdef', substr(${drawHexSql("mix7")}, 2, 1)) - 1) AS draw
+         |  FROM documents d JOIN r ON d.source = r.source),
+         |c AS (SELECT doc_id, source,
+         |    least(r256 // 256 + CASE WHEN draw < r256 % 256 THEN 1 ELSE 0 END, 8)
+         |      AS n_copies
+         |  FROM base)
+         |SELECT doc_id, source, CAST(e AS INT) AS epoch
+         |FROM (SELECT doc_id, source,
+         |    unnest(generate_series(1, CAST(n_copies AS INT))) AS e
+         |  FROM c) u
+         |ORDER BY doc_id, epoch""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("n_chars"))
       val src = docs.groupBy(col("source")).agg(sum(col("n_chars")).as("m"))
@@ -628,7 +898,29 @@ object SamplingQueries {
     // sort key does not), windows partitioned per (lang, scheme) —
     // the p4 shard grain, never a corpus-wide partitionless window.
     // Trailing partial batches pad to their own size (n·max), not 8.
-    "p19_pad_efficiency" -> { (s, dir) =>
+    QueryKey("p19_pad_efficiency",
+      """WITH d AS (SELECT doc_id, lang,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS len
+        |  FROM documents),
+        |tagged AS (
+        |  SELECT doc_id, lang, len, s.scheme,
+        |    CASE WHEN s.scheme = 'arrival' THEN 0 ELSE len END AS k1
+        |  FROM d, (SELECT unnest(['arrival', 'length_sorted']) AS scheme) s),
+        |rn AS (SELECT *, row_number() OVER (PARTITION BY lang, scheme
+        |    ORDER BY k1, doc_id) AS rn FROM tagged),
+        |b AS (SELECT scheme, lang, (rn - 1) // 8 AS batch,
+        |    CAST(count(*) AS BIGINT) AS bn, CAST(sum(len) AS BIGINT) AS btok,
+        |    CAST(max(len) AS INT) AS bmax
+        |  FROM rn GROUP BY 1, 2, 3),
+        |agg AS (SELECT scheme, CAST(count(*) AS BIGINT) AS n_batches,
+        |    CAST(sum(btok) AS BIGINT) AS sum_tokens,
+        |    CAST(sum(bn * bmax) AS BIGINT) AS padded_slots
+        |  FROM b GROUP BY 1)
+        |SELECT scheme, n_batches, sum_tokens, padded_slots,
+        |  CAST(CASE WHEN padded_slots = 0 THEN NULL
+        |    ELSE (padded_slots - sum_tokens) * 10000 // padded_slots END
+        |    AS BIGINT) AS waste_bp
+        |FROM agg ORDER BY scheme""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
@@ -663,7 +955,22 @@ object SamplingQueries {
     // classic leakage bug a naive per-user groupBy join commits).
     // ONE pass: cumulative count/sums over the (user) exchange, label
     // filter after. Integer cents; empty first frames coalesce to 0.
-    "p20_pit_features" -> { (s, dir) =>
+    QueryKey("p20_pit_features",
+      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
+        |    event_id, event_type, CAST(round(value * 100) AS BIGINT) AS vc
+        |  FROM events),
+        |f AS (SELECT *,
+        |    CAST(count(*) OVER w AS BIGINT) AS prior_events,
+        |    CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+        |      OVER w, 0) AS BIGINT) AS prior_errors,
+        |    CAST(coalesce(sum(vc) OVER w, 0) AS BIGINT) AS prior_value_cents
+        |  FROM e
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        |SELECT user_id, event_id AS label_event_id, ts_us AS label_ts_us,
+        |  prior_events, prior_errors, prior_value_cents
+        |FROM f WHERE event_type = 'purchase'
+        |ORDER BY user_id, label_event_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
@@ -700,7 +1007,26 @@ object SamplingQueries {
     // stream-static lesson: readers pin file listings). DerivedLayouts
     // write-once; scale shape: digests computed map-side, one agg row
     // per face, no joins in the measured read.
-    "p21_compaction_exec" -> { (s, dir) =>
+    QueryKey("p21_compaction_exec",
+      """WITH shards AS (SELECT doc_id % 40 AS shard,
+        |    CAST(sum(n_chars) AS BIGINT) AS bytes
+        |  FROM documents GROUP BY 1),
+        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
+        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
+        |    AS n_bins FROM c),
+        |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
+        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |  FROM documents)
+        |SELECT 'compacted' AS face, n_bins AS n_files, n_docs, sum_chars, digest
+        |  FROM d, nb
+        |UNION ALL SELECT 'small', CAST(40 AS BIGINT), n_docs, sum_chars, digest
+        |  FROM d, nb
+        |ORDER BY face""".stripMargin) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"compactexec|$dir") { path =>
         val docs = Tables.documents(s, dir)
@@ -753,7 +1079,32 @@ object SamplingQueries {
     // through the oracle), doc count, char mass, order-free digest,
     // and the shard's key range. A trainer consumes the manifest, not
     // a directory listing.
-    "p22_shard_export" -> { (s, dir) =>
+    QueryKey("p22_shard_export",
+      // both faces must equal the corpus truth computed ONCE — the
+      // snapshot-isolation proof is that 'small' (re-read AFTER the
+      // compaction ran) and 'compacted' carry the identical digest;
+      // n_files is closed-form (40 shards; p14's bin count for the copy)
+      // n_files is the literal 1 the layout must deliver (one file per
+      // shard) — a multi-file shard breaks the compare even when the
+      // row contents agree
+      """WITH d AS (SELECT doc_id, text, n_chars,
+        |    md5('shard|' || CAST(doc_id AS VARCHAR)) AS skey
+        |  FROM documents),
+        |s AS (SELECT doc_id, text, n_chars, skey,
+        |    CAST(strpos('0123456789abcdef', substring(skey, 1, 1)) - 1 AS INT)
+        |      AS shard,
+        |    CAST(list_sum(list_transform(generate_series(0, 5), k ->
+        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (5 - k))))) AS BIGINT) AS dig
+        |  FROM d)
+        |SELECT shard, CAST(1 AS BIGINT) AS n_files,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  CAST(sum(dig) AS BIGINT) AS digest,
+        |  min(substring(skey, 1, 8)) AS key_lo,
+        |  max(substring(skey, 1, 8)) AS key_hi
+        |FROM s GROUP BY shard ORDER BY shard""".stripMargin) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"shardexp|$dir") { path =>
         Tables.documents(s, dir)
@@ -778,7 +1129,21 @@ object SamplingQueries {
         .orderBy(col("shard"))
     },
 
-    "p14_compaction_plan" -> { (s, dir) =>
+    QueryKey("p14_compaction_plan",
+      """WITH shards AS (SELECT doc_id % 200 AS shard_id,
+        |    CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(n_chars) AS BIGINT) AS bytes
+        |  FROM documents GROUP BY 1),
+        |c AS (SELECT shard_id, n_docs, bytes,
+        |    CAST(sum(bytes) OVER (ORDER BY shard_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        |  FROM shards)
+        |SELECT (cum - bytes) // 20000 AS bin,
+        |  CAST(count(*) AS BIGINT) AS n_shards,
+        |  CAST(sum(n_docs) AS BIGINT) AS n_docs,
+        |  CAST(sum(bytes) AS BIGINT) AS total_bytes,
+        |  min(shard_id) AS shard_lo, max(shard_id) AS shard_hi
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val shards = Tables.documents(s, dir)
         .groupBy(pmod(col("doc_id"), lit(200)).as("shard_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("bytes"))
@@ -806,7 +1171,61 @@ object SamplingQueries {
     // the algorithmic claim, visible in the output. Oracle replays
     // both folds as recursive CTE walks with LIST state (the t27
     // pattern; list_reduce is banned — round-7 finding).
-    "p23_ffd_pack" -> { (s, dir) =>
+    QueryKey("p23_ffd_pack",
+      // both packing folds replayed as recursive walks with LIST /
+      // scalar state (rn → rn+1 per (lang, blk) key; list_reduce is
+      // banned — round-7 finding)
+      """WITH RECURSIVE base AS MATERIALIZED (SELECT lang,
+        |    doc_id // 128 AS blk, doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS t
+        |  FROM documents),
+        |fi AS MATERIALIZED (SELECT lang, blk, doc_id, t,
+        |    CAST(row_number() OVER (PARTITION BY lang, blk
+        |      ORDER BY t DESC, doc_id) AS INT) AS rn
+        |  FROM base),
+        |ai AS MATERIALIZED (SELECT lang, blk, doc_id, t,
+        |    CAST(row_number() OVER (PARTITION BY lang, blk
+        |      ORDER BY doc_id) AS INT) AS rn
+        |  FROM base),
+        |g AS MATERIALIZED (SELECT lang, blk, CAST(count(*) AS INT) AS n,
+        |    CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(t) AS BIGINT) AS sum_tokens
+        |  FROM base GROUP BY 1, 2),
+        |fw(lang, blk, rn, loads) AS (
+        |  SELECT lang, blk, 0, CAST([] AS BIGINT[]) FROM g
+        |  UNION ALL
+        |  SELECT w.lang, w.blk, i.rn,
+        |    CASE WHEN len(w.loads) = 0 THEN [i.t]
+        |      WHEN len(list_filter(range(1, len(w.loads) + 1),
+        |          j -> w.loads[j] + i.t <= 256)) = 0
+        |        THEN list_append(w.loads, i.t)
+        |      ELSE list_transform(range(1, len(w.loads) + 1), j ->
+        |        CASE WHEN j = list_filter(range(1, len(w.loads) + 1),
+        |            j2 -> w.loads[j2] + i.t <= 256)[1]
+        |          THEN w.loads[j] + i.t ELSE w.loads[j] END)
+        |    END
+        |  FROM fw w JOIN fi i ON i.lang = w.lang AND i.blk = w.blk
+        |    AND i.rn = w.rn + 1),
+        |ffd AS MATERIALIZED (SELECT w.lang, w.blk,
+        |    CAST(len(w.loads) AS INT) AS bins_ffd
+        |  FROM fw w JOIN g ON g.lang = w.lang AND g.blk = w.blk AND w.rn = g.n),
+        |aw(lang, blk, rn, bins, cur) AS (
+        |  SELECT lang, blk, 0, 0, CAST(0 AS BIGINT) FROM g
+        |  UNION ALL
+        |  SELECT w.lang, w.blk, i.rn,
+        |    CASE WHEN w.bins = 0 THEN 1
+        |      WHEN w.cur + i.t <= 256 THEN w.bins ELSE w.bins + 1 END,
+        |    CASE WHEN w.bins = 0 THEN i.t
+        |      WHEN w.cur + i.t <= 256 THEN w.cur + i.t ELSE i.t END
+        |  FROM aw w JOIN ai i ON i.lang = w.lang AND i.blk = w.blk
+        |    AND i.rn = w.rn + 1),
+        |nf AS MATERIALIZED (SELECT w.lang, w.blk,
+        |    CAST(w.bins AS INT) AS bins_nextfit
+        |  FROM aw w JOIN g ON g.lang = w.lang AND g.blk = w.blk AND w.rn = g.n)
+        |SELECT g.lang, CAST(g.blk AS BIGINT) AS blk, g.n_docs, g.sum_tokens,
+        |  ffd.bins_ffd, nf.bins_nextfit
+        |FROM g JOIN ffd USING (lang, blk) JOIN nf USING (lang, blk)
+        |ORDER BY lang, blk""".stripMargin) { (s, dir) =>
       val ffdFold =
         """aggregate(
           |  array_sort(fitems),
@@ -861,7 +1280,27 @@ object SamplingQueries {
     // p21 contract — plus the reclaim row; a vacuum that deleted a
     // referenced file would break the active digest, one that missed
     // files would break n_reclaimed.
-    "p24_snapshot_vacuum" -> { (s, dir) =>
+    QueryKey("p24_snapshot_vacuum",
+      // the active face must read IDENTICALLY to p21's compacted face
+      // even though the small files are gone — that identity IS the
+      // vacuum-safety proof
+      """WITH shards AS (SELECT doc_id % 40 AS shard,
+        |    CAST(sum(n_chars) AS BIGINT) AS bytes
+        |  FROM documents GROUP BY 1),
+        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
+        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
+        |    AS n_bins FROM c),
+        |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
+        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |  FROM documents)
+        |SELECT 'active' AS face, n_bins AS n_files, n_docs, digest FROM d, nb
+        |UNION ALL SELECT 'reclaimed', CAST(40 AS BIGINT), CAST(0 AS BIGINT),
+        |  CAST(NULL AS BIGINT) FROM d
+        |ORDER BY face""".stripMargin) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"vacuum|$dir") { path =>
         val docs = Tables.documents(s, dir)
@@ -908,498 +1347,6 @@ object SamplingQueries {
         .select(lit("reclaimed").as("face"), col("n_reclaimed").as("n_files"),
           lit(0L).as("n_docs"), lit(null).cast("long").as("digest"))
       active.unionByName(reclaim).orderBy(col("face"))
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    "p26_data_card" ->
-      """WITH d AS (SELECT source, lang, n_chars, md5(text) AS h,
-        |    regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-        |q AS (SELECT source, lang, n_chars, h,
-        |    CAST(len(w) AS BIGINT) AS n_tokens,
-        |    CASE WHEN len(list_distinct(w)) * 10000 // len(w) >= 4500
-        |      AND len(w) >= 20 THEN 1 ELSE 0 END AS q_ok
-        |  FROM d)
-        |SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(DISTINCT h) AS BIGINT) AS n_unique,
-        |  CAST((count(*) - count(DISTINCT h)) * 10000 // count(*) AS BIGINT) AS dup_bp,
-        |  CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
-        |  CAST(sum(n_tokens) // count(*) AS BIGINT) AS tokens_avg,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-        |  CAST(sum(q_ok) * 10000 // count(*) AS BIGINT) AS quality_bp
-        |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // global row_number per epoch — positionally identical to the Spark
-    // side's two-level bucket rank because the bucket is a PREFIX of the
-    // sort key (order by (prefix, k) == order by k)
-    "p25_epoch_shuffle" ->
-      """WITH e AS (SELECT doc_id, unnest([0, 1, 2]) AS epoch FROM documents),
-        |k AS (SELECT doc_id, epoch,
-        |    md5('ep' || CAST(epoch AS VARCHAR) || '|' || CAST(doc_id AS VARCHAR)) AS k
-        |  FROM e),
-        |p AS (SELECT doc_id, epoch,
-        |    CAST(row_number() OVER (PARTITION BY epoch ORDER BY k) - 1 AS BIGINT) AS pos
-        |  FROM k),
-        |piv AS (SELECT doc_id,
-        |    max(CASE WHEN epoch = 0 THEN pos END) AS p0,
-        |    max(CASE WHEN epoch = 1 THEN pos END) AS p1,
-        |    max(CASE WHEN epoch = 2 THEN pos END) AS p2
-        |  FROM p GROUP BY doc_id),
-        |h AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 7), j ->
-        |    CAST(strpos('0123456789abcdef',
-        |      substring(md5(CAST(doc_id AS VARCHAR)), 1 + j, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (7 - j))))) AS BIGINT) % 1000000007 AS hv
-        |  FROM piv),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(count(DISTINCT p0) AS BIGINT) AS nd0,
-        |    CAST(count(DISTINCT p1) AS BIGINT) AS nd1,
-        |    CAST(count(DISTINCT p2) AS BIGINT) AS nd2,
-        |    CAST(sum(((p0 + 1) * hv) % 1000000007) AS BIGINT) AS dg0,
-        |    CAST(sum(((p1 + 1) * hv) % 1000000007) AS BIGINT) AS dg1,
-        |    CAST(sum(((p2 + 1) * hv) % 1000000007) AS BIGINT) AS dg2,
-        |    CAST(sum(abs(p1 - p0)) AS BIGINT) AS disp1,
-        |    CAST(sum(abs(p2 - p0)) AS BIGINT) AS disp2
-        |  FROM h)
-        |SELECT CAST(0 AS INT) AS epoch, n_docs, nd0 AS n_distinct_pos,
-        |  dg0 AS perm_digest, 0::BIGINT AS disp_vs_e0 FROM a
-        |UNION ALL SELECT CAST(1 AS INT), n_docs, nd1, dg1, disp1 FROM a
-        |UNION ALL SELECT CAST(2 AS INT), n_docs, nd2, dg2, disp2 FROM a
-        |ORDER BY epoch""".stripMargin,
-
-    "p15_pipeline_e2e" ->
-      s"""WITH dd AS (SELECT * FROM (
-         |    SELECT d.*, row_number() OVER (PARTITION BY md5(text)
-         |      ORDER BY doc_id) AS rn FROM documents d) x WHERE rn = 1),
-         |tk AS (SELECT doc_id, lang, n_chars,
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS INT) AS n_tokens
-         |  FROM dd),
-         |train AS (SELECT * FROM tk
-         |  WHERE n_chars >= 100 AND n_tokens >= 20
-         |    AND ${drawHexSql("split")} >= '33'),
-         |c AS (SELECT lang, doc_id, n_tokens, doc_id // 128 AS blk,
-         |    sum(n_tokens) OVER (PARTITION BY lang, doc_id // 128 ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM train)
-         |SELECT lang, CAST(blk * 1000000 + (cum - n_tokens) // 2048 AS BIGINT) AS bin,
-         |  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-         |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "p17_split_leakage" ->
-      """WITH d AS (SELECT doc_id,
-        |    array_to_string(regexp_split_to_array(trim(text), '\s+')[1:2], ' ') AS ckey
-        |  FROM documents),
-        |s AS (SELECT ckey,
-        |    CASE WHEN substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 2) < '1a' THEN 'test'
-        |         WHEN substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 2) < '33' THEN 'val'
-        |         ELSE 'train' END AS naive_split,
-        |    CASE WHEN substr(md5('split|' || ckey), 1, 2) < '1a' THEN 'test'
-        |         WHEN substr(md5('split|' || ckey), 1, 2) < '33' THEN 'val'
-        |         ELSE 'train' END AS cluster_split
-        |  FROM d),
-        |g AS (SELECT ckey, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(count(DISTINCT naive_split) AS BIGINT) AS nd_naive,
-        |    CAST(count(DISTINCT cluster_split) AS BIGINT) AS nd_cluster
-        |  FROM s GROUP BY 1),
-        |u AS (SELECT 'cluster' AS scheme, nd_cluster AS nd, n_docs FROM g
-        |  UNION ALL SELECT 'naive', nd_naive, n_docs FROM g)
-        |SELECT scheme, CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_groups,
-        |  CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_straddling_groups,
-        |  CAST(sum(CASE WHEN nd > 1 THEN n_docs ELSE 0 END) AS BIGINT) AS n_docs_straddling
-        |FROM u GROUP BY scheme ORDER BY scheme""".stripMargin,
-
-    "p16_importance_sample" ->
-      """WITH d AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-        |  FROM documents),
-        |s1 AS (SELECT doc_id,
-        |    CAST(len(list_distinct(w)) * 10000 // len(w) AS BIGINT) AS q_bp,
-        |    md5('imp|' || CAST(doc_id AS VARCHAR)) AS h
-        |  FROM d),
-        |s2 AS (SELECT doc_id, q_bp,
-        |    greatest(q_bp * 256 // 10000, 16) AS t256,
-        |    (instr('0123456789abcdef', substring(h, 1, 1)) - 1) * 16 +
-        |    (instr('0123456789abcdef', substring(h, 2, 1)) - 1) AS dr
-        |  FROM s1)
-        |SELECT doc_id, q_bp, CAST(t256 AS BIGINT) AS t256,
-        |  CAST(256 * 10000 // t256 AS BIGINT) AS inv_w_sc
-        |FROM s2 WHERE dr < t256 ORDER BY doc_id""".stripMargin,
-
-    "p20_pit_features" ->
-      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |    event_id, event_type, CAST(round(value * 100) AS BIGINT) AS vc
-        |  FROM events),
-        |f AS (SELECT *,
-        |    CAST(count(*) OVER w AS BIGINT) AS prior_events,
-        |    CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      OVER w, 0) AS BIGINT) AS prior_errors,
-        |    CAST(coalesce(sum(vc) OVER w, 0) AS BIGINT) AS prior_value_cents
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, event_id AS label_event_id, ts_us AS label_ts_us,
-        |  prior_events, prior_errors, prior_value_cents
-        |FROM f WHERE event_type = 'purchase'
-        |ORDER BY user_id, label_event_id""".stripMargin,
-
-    // both faces must equal the corpus truth computed ONCE — the
-    // snapshot-isolation proof is that 'small' (re-read AFTER the
-    // compaction ran) and 'compacted' carry the identical digest;
-    // n_files is closed-form (40 shards; p14's bin count for the copy)
-    // n_files is the literal 1 the layout must deliver (one file per
-    // shard) — a multi-file shard breaks the compare even when the
-    // row contents agree
-    "p22_shard_export" ->
-      """WITH d AS (SELECT doc_id, text, n_chars,
-        |    md5('shard|' || CAST(doc_id AS VARCHAR)) AS skey
-        |  FROM documents),
-        |s AS (SELECT doc_id, text, n_chars, skey,
-        |    CAST(strpos('0123456789abcdef', substring(skey, 1, 1)) - 1 AS INT)
-        |      AS shard,
-        |    CAST(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k))))) AS BIGINT) AS dig
-        |  FROM d)
-        |SELECT shard, CAST(1 AS BIGINT) AS n_files,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(dig) AS BIGINT) AS digest,
-        |  min(substring(skey, 1, 8)) AS key_lo,
-        |  max(substring(skey, 1, 8)) AS key_hi
-        |FROM s GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // both packing folds replayed as recursive walks with LIST /
-    // scalar state (rn → rn+1 per (lang, blk) key; list_reduce is
-    // banned — round-7 finding)
-    "p23_ffd_pack" ->
-      """WITH RECURSIVE base AS MATERIALIZED (SELECT lang,
-        |    doc_id // 128 AS blk, doc_id,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS t
-        |  FROM documents),
-        |fi AS MATERIALIZED (SELECT lang, blk, doc_id, t,
-        |    CAST(row_number() OVER (PARTITION BY lang, blk
-        |      ORDER BY t DESC, doc_id) AS INT) AS rn
-        |  FROM base),
-        |ai AS MATERIALIZED (SELECT lang, blk, doc_id, t,
-        |    CAST(row_number() OVER (PARTITION BY lang, blk
-        |      ORDER BY doc_id) AS INT) AS rn
-        |  FROM base),
-        |g AS MATERIALIZED (SELECT lang, blk, CAST(count(*) AS INT) AS n,
-        |    CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(t) AS BIGINT) AS sum_tokens
-        |  FROM base GROUP BY 1, 2),
-        |fw(lang, blk, rn, loads) AS (
-        |  SELECT lang, blk, 0, CAST([] AS BIGINT[]) FROM g
-        |  UNION ALL
-        |  SELECT w.lang, w.blk, i.rn,
-        |    CASE WHEN len(w.loads) = 0 THEN [i.t]
-        |      WHEN len(list_filter(range(1, len(w.loads) + 1),
-        |          j -> w.loads[j] + i.t <= 256)) = 0
-        |        THEN list_append(w.loads, i.t)
-        |      ELSE list_transform(range(1, len(w.loads) + 1), j ->
-        |        CASE WHEN j = list_filter(range(1, len(w.loads) + 1),
-        |            j2 -> w.loads[j2] + i.t <= 256)[1]
-        |          THEN w.loads[j] + i.t ELSE w.loads[j] END)
-        |    END
-        |  FROM fw w JOIN fi i ON i.lang = w.lang AND i.blk = w.blk
-        |    AND i.rn = w.rn + 1),
-        |ffd AS MATERIALIZED (SELECT w.lang, w.blk,
-        |    CAST(len(w.loads) AS INT) AS bins_ffd
-        |  FROM fw w JOIN g ON g.lang = w.lang AND g.blk = w.blk AND w.rn = g.n),
-        |aw(lang, blk, rn, bins, cur) AS (
-        |  SELECT lang, blk, 0, 0, CAST(0 AS BIGINT) FROM g
-        |  UNION ALL
-        |  SELECT w.lang, w.blk, i.rn,
-        |    CASE WHEN w.bins = 0 THEN 1
-        |      WHEN w.cur + i.t <= 256 THEN w.bins ELSE w.bins + 1 END,
-        |    CASE WHEN w.bins = 0 THEN i.t
-        |      WHEN w.cur + i.t <= 256 THEN w.cur + i.t ELSE i.t END
-        |  FROM aw w JOIN ai i ON i.lang = w.lang AND i.blk = w.blk
-        |    AND i.rn = w.rn + 1),
-        |nf AS MATERIALIZED (SELECT w.lang, w.blk,
-        |    CAST(w.bins AS INT) AS bins_nextfit
-        |  FROM aw w JOIN g ON g.lang = w.lang AND g.blk = w.blk AND w.rn = g.n)
-        |SELECT g.lang, CAST(g.blk AS BIGINT) AS blk, g.n_docs, g.sum_tokens,
-        |  ffd.bins_ffd, nf.bins_nextfit
-        |FROM g JOIN ffd USING (lang, blk) JOIN nf USING (lang, blk)
-        |ORDER BY lang, blk""".stripMargin,
-
-    // the active face must read IDENTICALLY to p21's compacted face
-    // even though the small files are gone — that identity IS the
-    // vacuum-safety proof
-    "p24_snapshot_vacuum" ->
-      """WITH shards AS (SELECT doc_id % 40 AS shard,
-        |    CAST(sum(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
-        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
-        |    AS n_bins FROM c),
-        |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
-        |  FROM documents)
-        |SELECT 'active' AS face, n_bins AS n_files, n_docs, digest FROM d, nb
-        |UNION ALL SELECT 'reclaimed', CAST(40 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(NULL AS BIGINT) FROM d
-        |ORDER BY face""".stripMargin,
-
-    "p21_compaction_exec" ->
-      """WITH shards AS (SELECT doc_id % 40 AS shard,
-        |    CAST(sum(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
-        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
-        |    AS n_bins FROM c),
-        |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
-        |  FROM documents)
-        |SELECT 'compacted' AS face, n_bins AS n_files, n_docs, sum_chars, digest
-        |  FROM d, nb
-        |UNION ALL SELECT 'small', CAST(40 AS BIGINT), n_docs, sum_chars, digest
-        |  FROM d, nb
-        |ORDER BY face""".stripMargin,
-
-    "p14_compaction_plan" ->
-      """WITH shards AS (SELECT doc_id % 200 AS shard_id,
-        |    CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT shard_id, n_docs, bytes,
-        |    CAST(sum(bytes) OVER (ORDER BY shard_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |  FROM shards)
-        |SELECT (cum - bytes) // 20000 AS bin,
-        |  CAST(count(*) AS BIGINT) AS n_shards,
-        |  CAST(sum(n_docs) AS BIGINT) AS n_docs,
-        |  CAST(sum(bytes) AS BIGINT) AS total_bytes,
-        |  min(shard_id) AS shard_lo, max(shard_id) AS shard_hi
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "p13_zonemap_skip" ->
-      """WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |    CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        |sh AS (
-        |  SELECT 'time' AS layout,
-        |    (us // 86400000000) * 24 + (us % 86400000000) // 3600000000 AS shard_key, c
-        |  FROM e
-        |  UNION ALL
-        |  SELECT 'value' AS layout, c // 3200 AS shard_key, c FROM e)
-        |SELECT layout, shard_key, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(min(c) AS BIGINT) AS min_c, CAST(max(c) AS BIGINT) AS max_c,
-        |  CAST(CASE WHEN max(c) >= 10000 AND min(c) <= 20000 THEN 1 ELSE 0 END AS INT) AS scanned
-        |FROM sh GROUP BY 1, 2 ORDER BY layout, shard_key""".stripMargin,
-
-    "p12_dynamic_prune" ->
-      """SELECT CAST(d.day AS TIMESTAMP) AS day, e.event_type,
-        |  count(*) AS n, count(DISTINCT e.user_id) AS n_users,
-        |  sum(CAST(round(e.value * 100) AS BIGINT)) / 100.0 AS total_value
-        |FROM events e
-        |JOIN (SELECT DATE '2024-01-01' + CAST(n_nationkey AS INT) AS day
-        |      FROM nation WHERE n_regionkey = 1) d
-        |  ON CAST(CAST(e.ts AS TIMESTAMP) AS DATE) = d.day
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "p11_partition_prune" ->
-      """SELECT CAST(CAST(CAST(ts AS TIMESTAMP) AS DATE) AS TIMESTAMP) AS day, event_type,
-        |  count(*) AS n, count(DISTINCT user_id) AS n_users,
-        |  sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
-        |FROM events
-        |WHERE CAST(CAST(ts AS TIMESTAMP) AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-07'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "p10_quota_matrix" ->
-      s"""WITH d AS (SELECT doc_id, lang, source,
-         |    md5('q2d|' || CAST(doc_id AS VARCHAR)) AS draw FROM documents),
-         |cells AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2),
-         |lt AS (SELECT lang, CAST(sum(c) AS BIGINT) AS lc FROM cells GROUP BY 1),
-         |alloc AS (SELECT lang, source, c, lc, (lc * 60) // 100 AS b,
-         |    ((lc * 60) // 100) * c // lc AS prop,
-         |    (((lc * 60) // 100) * c) % lc AS frac
-         |  FROM cells JOIN lt USING (lang)),
-         |ranked AS (SELECT *,
-         |    row_number() OVER (PARTITION BY lang ORDER BY frac DESC, source) AS rr,
-         |    b - sum(prop) OVER (PARTITION BY lang) AS rem FROM alloc),
-         |quota AS (SELECT lang, source, c,
-         |    CAST(prop + CASE WHEN rr <= rem THEN 1 ELSE 0 END AS INT) AS q FROM ranked),
-         |kept AS (SELECT d.doc_id, d.lang, d.source, c, q,
-         |    row_number() OVER (PARTITION BY d.lang, d.source ORDER BY draw, doc_id) AS rn
-         |  FROM d JOIN quota USING (lang, source))
-         |SELECT doc_id, lang, source, c AS cell_n, q AS cell_quota
-         |FROM kept WHERE rn <= q ORDER BY doc_id""".stripMargin,
-
-    "p1_hash_split" ->
-      s"""SELECT split, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |FROM (SELECT lang, n_chars,
-         |    CASE WHEN ${drawHexSql("split")} < '1a' THEN 'test'
-         |         WHEN ${drawHexSql("split")} < '33' THEN 'val'
-         |         ELSE 'train' END AS split
-         |  FROM documents) t
-         |GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-
-    "p2_stratified_sample" ->
-      s"""SELECT doc_id, lang FROM documents
-         |JOIN (VALUES ('en','20'),('de','80'),('es','80'),('fr','80'),('zh','40'))
-         |  r(lang, keep_below) USING (lang)
-         |WHERE ${drawHexSql("strat")} < keep_below
-         |ORDER BY doc_id""".stripMargin,
-
-    "p3_group_sample" ->
-      """SELECT lang, doc_id, samp_key FROM (
-        |  SELECT lang, doc_id, md5('res|' || CAST(doc_id AS VARCHAR)) AS samp_key,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5('res|' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents) t
-        |WHERE rn <= 20 ORDER BY lang, samp_key, doc_id""".stripMargin,
-
-    "p4_token_pack" ->
-      """SELECT lang, bin, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM (
-        |  SELECT lang, doc_id, n_tokens,
-        |    CAST(blk * 1000000 + (sum(n_tokens) OVER (PARTITION BY lang, blk ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens) // 256 AS BIGINT) AS bin
-        |  FROM (SELECT lang, doc_id, doc_id // 128 AS blk,
-        |      CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens
-        |    FROM documents) a) b
-        |GROUP BY lang, bin ORDER BY lang, bin""".stripMargin,
-
-    "p6_balanced_resample" ->
-      """WITH lc AS (SELECT lang, count(*) AS c FROM documents GROUP BY lang),
-        |tgt AS (SELECT max(c) AS target FROM lc),
-        |ranked AS (
-        |  SELECT d.doc_id, d.lang, lc.c, tgt.target,
-        |    row_number() OVER (PARTITION BY d.lang
-        |      ORDER BY md5('bal|' || CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rnk
-        |  FROM documents d JOIN lc USING (lang) CROSS JOIN tgt)
-        |SELECT doc_id, lang, CAST(i AS INT) AS copy_idx
-        |FROM (
-        |  SELECT doc_id, lang,
-        |    unnest(generate_series(1, CAST(target // c +
-        |      (CASE WHEN rnk <= target % c THEN 1 ELSE 0 END) AS INT))) AS i
-        |  FROM ranked) u
-        |ORDER BY doc_id, copy_idx""".stripMargin,
-
-    "p18_temperature_mix" ->
-      s"""WITH src AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS m
-         |  FROM documents GROUP BY 1),
-         |mx AS (SELECT max(m) AS m_max FROM src),
-         |r AS (SELECT source,
-         |    CAST(floor(sqrt(sqrt(CAST(m_max AS DOUBLE) / CAST(m AS DOUBLE))) * 256)
-         |      AS BIGINT) AS r256
-         |  FROM src CROSS JOIN mx),
-         |base AS (SELECT doc_id, d.source, r256,
-         |    (strpos('0123456789abcdef', substr(${drawHexSql("mix7")}, 1, 1)) - 1) * 16 +
-         |    (strpos('0123456789abcdef', substr(${drawHexSql("mix7")}, 2, 1)) - 1) AS draw
-         |  FROM documents d JOIN r ON d.source = r.source),
-         |c AS (SELECT doc_id, source,
-         |    least(r256 // 256 + CASE WHEN draw < r256 % 256 THEN 1 ELSE 0 END, 8)
-         |      AS n_copies
-         |  FROM base)
-         |SELECT doc_id, source, CAST(e AS INT) AS epoch
-         |FROM (SELECT doc_id, source,
-         |    unnest(generate_series(1, CAST(n_copies AS INT))) AS e
-         |  FROM c) u
-         |ORDER BY doc_id, epoch""".stripMargin,
-
-    "p19_pad_efficiency" ->
-      """WITH d AS (SELECT doc_id, lang,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS len
-        |  FROM documents),
-        |tagged AS (
-        |  SELECT doc_id, lang, len, s.scheme,
-        |    CASE WHEN s.scheme = 'arrival' THEN 0 ELSE len END AS k1
-        |  FROM d, (SELECT unnest(['arrival', 'length_sorted']) AS scheme) s),
-        |rn AS (SELECT *, row_number() OVER (PARTITION BY lang, scheme
-        |    ORDER BY k1, doc_id) AS rn FROM tagged),
-        |b AS (SELECT scheme, lang, (rn - 1) // 8 AS batch,
-        |    CAST(count(*) AS BIGINT) AS bn, CAST(sum(len) AS BIGINT) AS btok,
-        |    CAST(max(len) AS INT) AS bmax
-        |  FROM rn GROUP BY 1, 2, 3),
-        |agg AS (SELECT scheme, CAST(count(*) AS BIGINT) AS n_batches,
-        |    CAST(sum(btok) AS BIGINT) AS sum_tokens,
-        |    CAST(sum(bn * bmax) AS BIGINT) AS padded_slots
-        |  FROM b GROUP BY 1)
-        |SELECT scheme, n_batches, sum_tokens, padded_slots,
-        |  CAST(CASE WHEN padded_slots = 0 THEN NULL
-        |    ELSE (padded_slots - sum_tokens) * 10000 // padded_slots END
-        |    AS BIGINT) AS waste_bp
-        |FROM agg ORDER BY scheme""".stripMargin,
-
-    "p7_weighted_mix" ->
-      s"""SELECT doc_id, source, CAST(e AS INT) AS epoch
-         |FROM (
-         |  SELECT doc_id, source,
-         |    unnest(generate_series(1, w64 // 16 + extra)) AS e
-         |  FROM (
-         |    SELECT doc_id, source,
-         |      (CAST(substr(source, 4) AS INT) * 37) % 64 AS w64,
-         |      CASE WHEN substr(md5('mix|' || CAST(doc_id AS VARCHAR)), 1, 1) <
-         |          lower(hex((CAST(substr(source, 4) AS INT) * 37) % 64 % 16))
-         |        THEN 1 ELSE 0 END AS extra
-         |    FROM documents) t) u
-         |ORDER BY doc_id, epoch""".stripMargin,
-
-    "p5_chunk_overlap" ->
-      """SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-        |  CAST(least(40, nw - i*30) AS INT) AS chunk_tokens,
-        |  md5(array_to_string(wd[(i*30+1):(i*30+40)], ' ')) AS chunk_md5
-        |FROM (
-        |  SELECT doc_id, wd, len(wd) AS nw,
-        |    unnest(range(0, (len(wd)-1)//30 + 1)) AS i
-        |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd
-        |    FROM documents) a) b
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "p9_consistent_shards" -> {
-      def hex4(e: String) =
-        s"((strpos('0123456789abcdef', substr($e, 1, 1)) - 1) * 4096 + " +
-        s"(strpos('0123456789abcdef', substr($e, 2, 1)) - 1) * 256 + " +
-        s"(strpos('0123456789abcdef', substr($e, 3, 1)) - 1) * 16 + " +
-        s"(strpos('0123456789abcdef', substr($e, 4, 1)) - 1))"
-      def ringCte(name: String, n: Int) =
-        s"""$name AS (SELECT nn.g AS node,
-           |    ${hex4(s"md5('ring|' || CAST(nn.g AS VARCHAR) || '|' || CAST(vv.g AS VARCHAR))")} AS pos
-           |  FROM generate_series(0, ${n - 1}) nn(g), generate_series(0, 15) vv(g))""".stripMargin
-      s"""WITH ${ringCte("ring8", 8)},
-         |${ringCte("ring9", 9)},
-         |keys AS (SELECT doc_id,
-         |    ${hex4("md5('key|' || CAST(doc_id AS VARCHAR))")} AS kpos
-         |  FROM documents),
-         |a8 AS (SELECT doc_id,
-         |    CAST(min(((pos - kpos + 65536) % 65536) * 16 + node) % 16 AS INT) AS shard8
-         |  FROM keys CROSS JOIN ring8 GROUP BY doc_id),
-         |a9 AS (SELECT doc_id,
-         |    CAST(min(((pos - kpos + 65536) % 65536) * 16 + node) % 16 AS INT) AS shard9
-         |  FROM keys CROSS JOIN ring9 GROUP BY doc_id)
-         |SELECT shard8, count(*) AS n_docs,
-         |  CAST(sum(CASE WHEN shard8 != shard9 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved
-         |FROM a8 JOIN a9 USING (doc_id)
-         |GROUP BY shard8 ORDER BY shard8""".stripMargin
-    },
-
-    "p8_zorder_layout" -> {
-      def spreadSql(e: String): String = {
-        val a = s"(($e) | (($e) << 8)) & 16711935"
-        val b = s"(($a) | (($a) << 4)) & 252645135"
-        val c = s"(($b) | (($b) << 2)) & 858993459"
-        s"(($c) | (($c) << 1)) & 1431655765"
-      }
-      s"""SELECT bucket, count(*) AS n_rows,
-         |  min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
-         |FROM (SELECT x, y,
-         |    CAST(((${spreadSql("x")}) | ((${spreadSql("y")}) << 1)) // 1024 AS INT) AS bucket
-         |  FROM (SELECT CAST(o_custkey % 256 AS BIGINT) AS x,
-         |      CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) % 256 AS BIGINT) AS y
-         |    FROM orders) s) t
-         |GROUP BY bucket ORDER BY bucket""".stripMargin
     }
   )
 }

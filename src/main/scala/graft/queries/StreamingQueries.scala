@@ -35,13 +35,31 @@ object StreamingQueries {
 
   private val tsUs = "epoch_us(CAST(ts AS TIMESTAMP))"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st1_stream_health" -> { (s, dir) =>
+  def keys: Seq[QueryKey] = Seq(
+    QueryKey("st1_stream_health",
+      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
+         |  count(*) AS n,
+         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
+         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin) { (s, dir) =>
       HealthStream.windowedHealth(Tables.events(s, dir))
         .orderBy(col("bucket"), col("event_type"))
     },
 
-    "st2_stream_sessions" -> { (s, dir) =>
+    QueryKey("st2_stream_sessions",
+      s"""SELECT user_id, session_idx, min(ts_us) AS start_us, max(ts_us) AS end_us,
+         |  count(*) AS n_events
+         |FROM (
+         |  SELECT user_id, ts_us,
+         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
+         |  FROM (
+         |    SELECT user_id, event_id, $tsUs AS ts_us,
+         |      CASE WHEN $tsUs - lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) > 1800000000
+         |           THEN 1
+         |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
+         |           THEN 1 ELSE 0 END AS new_session
+         |    FROM events) a) b
+         |GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin) { (s, dir) =>
       HealthStream.sessions(Tables.events(s, dir), gapMinutes = 30)
         .orderBy(col("user_id"), col("session_idx"))
     },
@@ -52,7 +70,16 @@ object StreamingQueries {
     // (HealthStream.seqTrigramStream; cross-batch straddle + parity in
     // StreamingSpec). One user_id exchange (st14 fold-template shape);
     // trigrams by zip-of-slices outside any lambda.
-    "st16_stream_seq" -> { (s, dir) =>
+    QueryKey("st16_stream_seq",
+      s"""WITH tl AS (SELECT user_id,
+         |    list(event_type ORDER BY $tsUs, event_id) AS types
+         |  FROM events GROUP BY user_id),
+         |ix AS (SELECT user_id, types,
+         |    unnest(generate_series(1, greatest(len(types) - 2, 0))) AS i
+         |  FROM tl)
+         |SELECT user_id, CAST(i AS BIGINT) AS pos,
+         |  types[i] || ' ' || types[i+1] || ' ' || types[i+2] AS trigram
+         |FROM ix ORDER BY user_id, pos""".stripMargin) { (s, dir) =>
       graft.operators.Sequences.userTypeTrigrams(Tables.events(s, dir))
         .orderBy(col("user_id"), col("pos"))
     },
@@ -62,7 +89,9 @@ object StreamingQueries {
     // maintains incrementally — latest emission per cell equals this
     // (delta-emission + parity in StreamingSpec). One partial-agg
     // shuffle.
-    "st17_stream_profile" -> { (s, dir) =>
+    QueryKey("st17_stream_profile",
+      """SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
+        |FROM events GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -83,7 +112,15 @@ object StreamingQueries {
     // closed-form range sums prove no row was dropped or double-counted
     // across batch boundaries. StreamingSpec gates the batch count and
     // stream≡batch parity.
-    "st19_stream_source" -> { (s0, _) =>
+    QueryKey("st19_stream_source",
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value
+        |FROM (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 60000) t(id)) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
       s.catalog.dropTempView("st19_out")
       val stream = s.readStream.format("graft.sources.MetricsFeedSource")
@@ -109,7 +146,13 @@ object StreamingQueries {
     // replays a checkpoint range twice and hash-checks the totals). The
     // per-epoch rows are the output — the oracle's closed-form range sums
     // prove every epoch carries exactly its offset interval's rows.
-    "st20_stream_sink" -> { (s, _) =>
+    QueryKey("st20_stream_sink",
+      // each epoch is exactly one 20000-row offset interval of the feed
+      """SELECT CAST(id // 20000 AS BIGINT) AS epoch_id,
+        |  CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value
+        |FROM range(0, 60000) t(id)
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val runId = "st20_stream_sink"
       AccountingSink.clear(runId)
       // emptied per-JVM checkpoint (bench passes must not accumulate
@@ -144,7 +187,13 @@ object StreamingQueries {
     // sink and emits the PER-EPOCH observations — closed-form range
     // sums, so a dropped or double-counted epoch breaks the hash
     // (exactly-once observed, not just exactly-once written).
-    "st21_stream_observe" -> { (s, _) =>
+    QueryKey("st21_stream_observe",
+      // one observation row per 20000-row admission epoch
+      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM range(0, 60000) t(id)
+        |GROUP BY id // 20000 ORDER BY max_id""".stripMargin) { (s, _) =>
       val stream = s.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
         .option("streamStep", "20000").load()
@@ -175,7 +224,14 @@ object StreamingQueries {
     // emits each epoch's (input rows, consumed, backlog) — closed-form
     // from the offset arithmetic, so a lagging or double-reported
     // offset breaks the hash.
-    "st23_source_metrics" -> { (s, _) =>
+    QueryKey("st23_source_metrics",
+      // offset arithmetic: epoch e consumes through e·20000, leaving
+      // 60000 − e·20000 behind
+      """SELECT CAST(20000 AS BIGINT) AS n_rows,
+        |  CAST(e * 20000 AS BIGINT) AS rows_consumed,
+        |  CAST(60000 - e * 20000 AS BIGINT) AS rows_backlog
+        |FROM generate_series(1, 3) t(e)
+        |ORDER BY rows_consumed""".stripMargin) { (s, _) =>
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
         .option("rows", "60000").option("partitions", "4")
         .option("streamStep", "20000").load()
@@ -206,7 +262,14 @@ object StreamingQueries {
     // deterministic admission epochs into the accounting sink and emits
     // each progress event's (output rows, cumulative rows, cumulative
     // epochs) — closed-form from the offset arithmetic.
-    "st24_sink_metrics" -> { (s, _) =>
+    QueryKey("st24_sink_metrics",
+      // cumulative commit-registry fold after epoch e: e·20000 rows, e
+      // epochs — the exactly-once state surfaced as sink metrics
+      """SELECT CAST(20000 AS BIGINT) AS n_rows,
+        |  CAST(e * 20000 AS BIGINT) AS rows_committed,
+        |  CAST(e AS BIGINT) AS epochs_committed
+        |FROM generate_series(1, 3) t(e)
+        |ORDER BY rows_committed""".stripMargin) { (s, _) =>
       val runId = "st24_sink_metrics"
       AccountingSink.clear(runId)
       val cp = DerivedLayouts.scratchDir("st24_checkpoint")
@@ -243,7 +306,18 @@ object StreamingQueries {
     // key aggregates over the DISTINCT row set — the replay-proof
     // read-side idiom for continuous consumers. Output: per-kind
     // accounting of the complete 30k-row feed, closed-form.
-    "st25_continuous" -> { (s, _) =>
+    QueryKey("st25_continuous",
+      // the complete feed through the continuous protocol, deduped
+      // read-side (at-least-once delivery)
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(max(id) AS BIGINT) AS max_id
+        |FROM (
+        |  SELECT id, CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 30000) t(id)) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       s.catalog.dropTempView("st25_out")
       // explicit checkpoint: the r16 completion gate reads the engine's
       // offset log from it
@@ -317,7 +391,19 @@ object StreamingQueries {
     // or leaked a key breaks the hash. At 100 TB this is the debugging
     // face that matters: state bugs (skew, leaks, watermark eviction)
     // are invisible in output parity but obvious in the store itself.
-    "st22_state_reader" -> { (s0, _) =>
+    QueryKey("st22_state_reader",
+      // the durable state must equal the full-feed aggregation (every
+      // epoch folded exactly once); 3 admission epochs → max batch id 2
+      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(value) AS BIGINT) AS sum_value,
+        |  CAST(2 AS BIGINT) AS max_batch_id,
+        |  CAST(1 AS BIGINT) AS n_operators
+        |FROM (
+        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
+        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    (id * 2654435761) % 100000 AS value
+        |  FROM range(0, 60000) t(id)) u
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
       val cp = DerivedLayouts.scratchDir("st22_checkpoint")
       val q = s.readStream.format("graft.sources.MetricsFeedSource")
@@ -350,272 +436,10 @@ object StreamingQueries {
     // foreachBatch over readStream — StreamingSpec proves split-batch
     // parity. At 100 TB the index never re-hashes per batch and a
     // degenerate bucket can't explode the probe join (≤ cap·|batch|).
-    "st18_stream_neardup" -> { (s, dir) =>
-      import graft.operators.Dedup
-      import graft.sources.DerivedLayouts
-      val base = DerivedLayouts.once(s"neardupidx|$dir") { path =>
-        Dedup.neardupServingIndex(
-            Tables.documents(s, dir).filter(expr("doc_id % 5 != 4")),
-            "doc_id", "text", bands = 4, rows = 2, maxBucket = 64)
-          .write.parquet(s"$path/index")
-      }
-      val index = Tables.parquet(s, s"$base/index")
-      val batch = Tables.documents(s, dir).filter(expr("doc_id % 5 = 4"))
-      Dedup.neardupIngestGate(batch, index, "doc_id", "text",
-          bands = 4, rows = 2, threshold = 0.3)
-        .orderBy(col("doc_id"))
-    },
-
-    // streaming ingest quality gate, batch form: the same qualityGate
-    // code runs over readDocumentStream on arrival (parity + bounded
-    // sources×2 state in StreamingSpec); per-(source, kept) counters
-    // + kept token mass are the ingest dashboard's rows.
-    "st15_stream_quality" -> { (s, dir) =>
-      HealthStream.qualityGate(Tables.documents(s, dir))
-        .orderBy(col("source"), col("kept"))
-    },
-
-    // streaming-ingest dedup, batch form: keep the earliest event per
-    // (user, type) key. The streaming path is dropDuplicatesWithinWatermark
-    // (state bounded by the watermark) — parity in StreamingSpec; this
-    // batch form pins the stronger earliest-event semantics. Plans with
-    // a partial WindowGroupLimit (rank pushdown), not a full sort.
-    "st4_stream_dedup" -> { (s, dir) =>
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, dir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_type"),
-          col("ts_us").as("first_ts_us"), col("event_id").as("first_event_id"))
-        .orderBy(col("user_id"), col("event_type"))
-    },
-
-    // stream-static broadcast enrichment + windowed agg, batch form;
-    // streaming parity (same code over readStream) in StreamingSpec.
-    "st5_stream_enrich" -> { (s, dir) =>
-      HealthStream.enrichedHealth(Tables.events(s, dir),
-          Tables.customer(s, dir), Tables.nation(s, dir))
-        .orderBy(col("bucket"), col("nation"))
-    },
-
-    // event-sequence funnel (click → error within 10 min per user),
-    // batch form; the same code runs as a watermarked stream-stream
-    // inner join — parity in StreamingSpec.
-    "st6_stream_funnel" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      HealthStream.clickErrorFunnel(ev, ev, windowMinutes = 10)
-        .orderBy(col("user_id"), col("click_id"), col("error_id"))
-    },
-
-    // left-outer funnel: clicks that never led to an error inside the
-    // window surface with NULL error columns — the "where did the
-    // funnel leak" query. Streaming = watermarked stream-stream LEFT
-    // OUTER join (unmatched rows emit when the watermark passes their
-    // horizon); parity in StreamingSpec via a sentinel event.
-    "st8_funnel_outer" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      HealthStream.clickErrorFunnelOuter(ev, ev, windowMinutes = 10)
-        .orderBy(col("user_id"), col("click_id"),
-          col("error_id").asc_nulls_first)
-    },
-
-    // sliding-window rate monitor (10-min windows every 5 min): each
-    // event expands to width÷slide window rows MAP-SIDE before the one
-    // hash shuffle — overlap costs ×2 input rows, never a self-join or
-    // re-scan. Streaming parity (same code over readStream) in
-    // StreamingSpec.
-    // windowed p95 monitor: the full distribution never materializes —
-    // a 16-bucket integer histogram rides one windowed agg as k
-    // columns, p95 derives map-side. Parity in StreamingSpec.
-    "st10_stream_p95" -> { (s, dir) =>
-      HealthStream.windowedP95(Tables.events(s, dir))
-        .orderBy(col("bucket"))
-    },
-
-    // windowed distinct-entity counts in the streaming-legal shape
-    // (dedup-then-count instead of a distinct agg); the same code runs
-    // over readStream with both stateful stages watermark-bounded —
-    // parity in StreamingSpec.
-    "st9_stream_distinct" -> { (s, dir) =>
-      HealthStream.windowedDistinctUsers(Tables.events(s, dir))
-        .orderBy(col("bucket"), col("event_type"))
-    },
-
-    // windowed approximate distinct users — the streaming HLL sketch:
-    // 64 registers as 64 max() agg columns, 64 longs of state per
-    // window at any cardinality (st9's exact dedup-then-count holds
-    // per-user state; this is its constant-state sibling, the same
-    // trade m35 makes in batch). Parity in StreamingSpec.
-    "st11_stream_hll" -> { (s, dir) =>
-      HealthStream.windowedHllDistinct(Tables.events(s, dir))
-        .orderBy(col("bucket"))
-    },
-
-    // windowed DOMAIN-FREE p95 — m47's streaming face: octave bins
-    // (integer floor-log2 of cents) as 63 fixed count columns, so the
-    // per-window state is 63 longs at ANY value magnitude — st10's
-    // grid assumes values < 512, this assumes only BIGINT. Estimate =
-    // octave inclusive max (never under, ≤2× over). Parity in
-    // StreamingSpec.
-    "st12_stream_log_p95" -> { (s, dir) =>
-      HealthStream.windowedLogP95(Tables.events(s, dir))
-        .orderBy(col("bucket"))
-    },
-
-    // windowed count-min frequency watchlist — m32's streaming face
-    // (sketch family's third streaming member after st11 HLL and st12
-    // log-p95): per-key windowed counts over an unbounded key space as
-    // a 2×64 CMS riding 128 sum columns = 128 longs of state per
-    // window at ANY cardinality; frequencies answered for a fixed
-    // 8-key watchlist via two O(1) bucket lookups, one-sided error
-    // (cms_n ≥ true) asserted in StreamingSpec. Parity in StreamingSpec.
-    "st13_stream_cms" -> { (s, dir) =>
-      HealthStream.windowedCmsWatchlist(Tables.events(s, dir),
-          probes = (0L until 8L).map(_ * 10))
-        .orderBy(col("bucket"), col("key"))
-    },
-
-    "st7_sliding_rate" -> { (s, dir) =>
-      HealthStream.slidingRate(Tables.events(s, dir))
-        .orderBy(col("win_start"))
-    },
-
-    // per-key alert COOLDOWN, batch-fold form: an error alerts only if
-    // ≥10 min has passed since the key's last RAISED alert — a
-    // recursive dependency on the operator's own output (which prior
-    // events alerted decides the next decision) that no window frame
-    // expresses; the fold is the one sequential pass. The streaming
-    // production form is Spark 4 transformWithState with two ValueState
-    // longs per key in RocksDB (HealthStream.alertCooldownStream);
-    // parity + cross-batch state proven in StreamingSpec. Scale shape:
-    // one hash shuffle on user_id; the fold runs on aggregate rows
-    // (per-user error arrays), O(errors-per-user) each, via ONE
-    // aggregate() HOF pass (the st12 O(n) finish lesson).
-    "st14_alert_cooldown" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .filter(col("event_type") === "error")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_errors"),
-          array_sort(collect_list(struct(col("ts_us"), col("event_id")))).as("seq"))
-        .withColumn("acc", expr(
-          s"aggregate(seq, named_struct('last', CAST(${HealthStream.CooldownSentinelUs} AS BIGINT), " +
-          "'n', CAST(0 AS BIGINT)), (acc, x) -> " +
-          "IF(x.ts_us - acc.last >= 600000000, " +
-          "named_struct('last', x.ts_us, 'n', acc.n + 1), acc))"))
-        .select(col("user_id"), col("n_errors"),
-          col("acc.n").as("n_alerts"), col("acc.last").as("last_alert_us"))
-        .orderBy(col("user_id"))
-    },
-
-    // native session windows (merge while gap < 30 min; window end =
-    // last event + gap). Streaming-capable as-is (state store backed).
-    "st3_session_window" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"),
-          col("w.start").cast("timestamp_ntz").as("session_start"),
-          col("w.end").cast("timestamp_ntz").as("session_end"),
-          col("n_events"))
-        .orderBy(col("user_id"), col("session_start"))
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    "st17_stream_profile" ->
-      """SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY user_id, event_type""".stripMargin,
-
-    "st16_stream_seq" ->
-      s"""WITH tl AS (SELECT user_id,
-         |    list(event_type ORDER BY $tsUs, event_id) AS types
-         |  FROM events GROUP BY user_id),
-         |ix AS (SELECT user_id, types,
-         |    unnest(generate_series(1, greatest(len(types) - 2, 0))) AS i
-         |  FROM tl)
-         |SELECT user_id, CAST(i AS BIGINT) AS pos,
-         |  types[i] || ' ' || types[i+1] || ' ' || types[i+2] AS trigram
-         |FROM ix ORDER BY user_id, pos""".stripMargin,
-
-    "st19_stream_source" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value
-        |FROM (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 60000) t(id)) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // offset arithmetic: epoch e consumes through e·20000, leaving
-    // 60000 − e·20000 behind
-    "st23_source_metrics" ->
-      """SELECT CAST(20000 AS BIGINT) AS n_rows,
-        |  CAST(e * 20000 AS BIGINT) AS rows_consumed,
-        |  CAST(60000 - e * 20000 AS BIGINT) AS rows_backlog
-        |FROM generate_series(1, 3) t(e)
-        |ORDER BY rows_consumed""".stripMargin,
-
-    // the complete feed through the continuous protocol, deduped
-    // read-side (at-least-once delivery)
-    "st25_continuous" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id, CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 30000) t(id)) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // cumulative commit-registry fold after epoch e: e·20000 rows, e
-    // epochs — the exactly-once state surfaced as sink metrics
-    "st24_sink_metrics" ->
-      """SELECT CAST(20000 AS BIGINT) AS n_rows,
-        |  CAST(e * 20000 AS BIGINT) AS rows_committed,
-        |  CAST(e AS BIGINT) AS epochs_committed
-        |FROM generate_series(1, 3) t(e)
-        |ORDER BY rows_committed""".stripMargin,
-
-    // the durable state must equal the full-feed aggregation (every
-    // epoch folded exactly once); 3 admission epochs → max batch id 2
-    "st22_state_reader" ->
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(2 AS BIGINT) AS max_batch_id,
-        |  CAST(1 AS BIGINT) AS n_operators
-        |FROM (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 60000) t(id)) u
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // each epoch is exactly one 20000-row offset interval of the feed
-    "st20_stream_sink" ->
-      """SELECT CAST(id // 20000 AS BIGINT) AS epoch_id,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value
-        |FROM range(0, 60000) t(id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // one observation row per 20000-row admission epoch
-    "st21_stream_observe" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM range(0, 60000) t(id)
-        |GROUP BY id // 20000 ORDER BY max_id""".stripMargin,
-
-    // the full pipeline re-derived: band keys for every doc, the bucket
-    // cap applied over INDEX occupancy only (the build-time rule), batch
-    // probes, exact Jaccard on distinct 3-gram sets (d16's list forms)
-    "st18_stream_neardup" ->
+    QueryKey("st18_stream_neardup",
+      // the full pipeline re-derived: band keys for every doc, the bucket
+      // cap applied over INDEX occupancy only (the build-time rule), batch
+      // probes, exact Jaccard on distinct 3-gram sets (d16's list forms)
       """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd
         |  FROM documents),
         |sh AS (SELECT doc_id,
@@ -652,9 +476,27 @@ object StreamingQueries {
         |  CAST(CASE WHEN coalesce(n_dups, 0) > 0 THEN 1 ELSE 0 END AS INT) AS is_dup
         |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 4) d
         |LEFT JOIN ca USING (doc_id) LEFT JOIN ver USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      import graft.operators.Dedup
+      import graft.sources.DerivedLayouts
+      val base = DerivedLayouts.once(s"neardupidx|$dir") { path =>
+        Dedup.neardupServingIndex(
+            Tables.documents(s, dir).filter(expr("doc_id % 5 != 4")),
+            "doc_id", "text", bands = 4, rows = 2, maxBucket = 64)
+          .write.parquet(s"$path/index")
+      }
+      val index = Tables.parquet(s, s"$base/index")
+      val batch = Tables.documents(s, dir).filter(expr("doc_id % 5 = 4"))
+      Dedup.neardupIngestGate(batch, index, "doc_id", "text",
+          bands = 4, rows = 2, threshold = 0.3)
+        .orderBy(col("doc_id"))
+    },
 
-    "st15_stream_quality" ->
+    // streaming ingest quality gate, batch form: the same qualityGate
+    // code runs over readDocumentStream on arrival (parity + bounded
+    // sources×2 state in StreamingSpec); per-(source, kept) counters
+    // + kept token mass are the ingest dashboard's rows.
+    QueryKey("st15_stream_quality",
       """WITH d AS (SELECT source, regexp_split_to_array(trim(text), '\s+') AS w
         |  FROM documents),
         |q AS (SELECT source, CAST(len(w) AS BIGINT) AS n_tokens,
@@ -665,35 +507,135 @@ object StreamingQueries {
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN q_bp >= 4500 AND n_tokens >= 20
         |    THEN n_tokens ELSE 0 END) AS BIGINT) AS kept_tokens
-        |FROM q GROUP BY 1, 2 ORDER BY source, kept""".stripMargin,
+        |FROM q GROUP BY 1, 2 ORDER BY source, kept""".stripMargin) { (s, dir) =>
+      HealthStream.qualityGate(Tables.documents(s, dir))
+        .orderBy(col("source"), col("kept"))
+    },
 
-    // NOTE: deliberately a recursive CTE, not list_reduce — DuckDB
-    // 1.0's list_reduce mis-folds when list lengths vary across rows
-    // (verified minimal repro: 3-row fold returns a wrong accumulator
-    // on the shorter rows). The recursion IS the sequential semantics.
-    "st14_alert_cooldown" ->
-      s"""WITH RECURSIVE e AS (
-         |  SELECT user_id, $tsUs AS ts_us, event_id,
-         |    CAST(row_number() OVER (PARTITION BY user_id
-         |      ORDER BY $tsUs, event_id) AS BIGINT) AS rn
-         |  FROM events WHERE event_type = 'error'),
-         |n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_errors
-         |  FROM e GROUP BY user_id),
-         |walk(user_id, rn, last_alert, n_alerts) AS (
-         |  SELECT user_id, CAST(0 AS BIGINT),
-         |    CAST(${HealthStream.CooldownSentinelUs} AS BIGINT), CAST(0 AS BIGINT) FROM n
-         |  UNION ALL
-         |  SELECT w.user_id, e.rn,
-         |    CASE WHEN e.ts_us - w.last_alert >= 600000000
-         |         THEN e.ts_us ELSE w.last_alert END,
-         |    CASE WHEN e.ts_us - w.last_alert >= 600000000
-         |         THEN w.n_alerts + 1 ELSE w.n_alerts END
-         |  FROM walk w JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
-         |SELECT n.user_id, n.n_errors, w.n_alerts, w.last_alert AS last_alert_us
-         |FROM walk w JOIN n ON n.user_id = w.user_id AND w.rn = n.n_errors
-         |ORDER BY n.user_id""".stripMargin,
+    // streaming-ingest dedup, batch form: keep the earliest event per
+    // (user, type) key. The streaming path is dropDuplicatesWithinWatermark
+    // (state bounded by the watermark) — parity in StreamingSpec; this
+    // batch form pins the stronger earliest-event semantics. Plans with
+    // a partial WindowGroupLimit (rank pushdown), not a full sort.
+    QueryKey("st4_stream_dedup",
+      s"""SELECT user_id, event_type, ts_us AS first_ts_us, event_id AS first_event_id
+         |FROM (SELECT user_id, event_type, event_id, $tsUs AS ts_us,
+         |    row_number() OVER (PARTITION BY user_id, event_type
+         |      ORDER BY $tsUs, event_id) AS rn
+         |  FROM events) t
+         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id"), col("event_type"))
+        .orderBy(col("ts_us"), col("event_id"))
+      Tables.events(s, dir)
+        .withColumn("ts_us", unix_micros(col("ts")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("event_type"),
+          col("ts_us").as("first_ts_us"), col("event_id").as("first_event_id"))
+        .orderBy(col("user_id"), col("event_type"))
+    },
 
-    "st11_stream_hll" ->
+    // stream-static broadcast enrichment + windowed agg, batch form;
+    // streaming parity (same code over readStream) in StreamingSpec.
+    QueryKey("st5_stream_enrich",
+      s"""SELECT bucket, nation, count(*) AS n_events,
+         |  CAST(sum(is_err) AS BIGINT) AS n_errors
+         |FROM (SELECT make_timestamp($tsUs - $tsUs % 600000000) AS bucket,
+         |    coalesce(n_name, 'UNKNOWN') AS nation,
+         |    CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
+         |  FROM events e LEFT JOIN
+         |    (SELECT c_custkey, n_name FROM customer
+         |      JOIN nation ON c_nationkey = n_nationkey) d
+         |    ON e.user_id = d.c_custkey) t
+         |GROUP BY bucket, nation ORDER BY bucket, nation""".stripMargin) { (s, dir) =>
+      HealthStream.enrichedHealth(Tables.events(s, dir),
+          Tables.customer(s, dir), Tables.nation(s, dir))
+        .orderBy(col("bucket"), col("nation"))
+    },
+
+    // event-sequence funnel (click → error within 10 min per user),
+    // batch form; the same code runs as a watermarked stream-stream
+    // inner join — parity in StreamingSpec.
+    QueryKey("st6_stream_funnel",
+      s"""SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
+         |  (epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP))) AS gap_us
+         |FROM events c JOIN events e
+         |  ON c.user_id = e.user_id
+         |WHERE c.event_type = 'click' AND e.event_type = 'error'
+         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) >= epoch_us(CAST(c.ts AS TIMESTAMP))
+         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) < epoch_us(CAST(c.ts AS TIMESTAMP)) + 600000000
+         |ORDER BY 1, click_id, error_id""".stripMargin) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+      HealthStream.clickErrorFunnel(ev, ev, windowMinutes = 10)
+        .orderBy(col("user_id"), col("click_id"), col("error_id"))
+    },
+
+    // left-outer funnel: clicks that never led to an error inside the
+    // window surface with NULL error columns — the "where did the
+    // funnel leak" query. Streaming = watermarked stream-stream LEFT
+    // OUTER join (unmatched rows emit when the watermark passes their
+    // horizon); parity in StreamingSpec via a sentinel event.
+    QueryKey("st8_funnel_outer",
+      s"""SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
+         |  (epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP))) AS gap_us
+         |FROM (SELECT * FROM events WHERE event_type = 'click') c
+         |LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
+         |  ON c.user_id = e.user_id
+         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) >= epoch_us(CAST(c.ts AS TIMESTAMP))
+         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) < epoch_us(CAST(c.ts AS TIMESTAMP)) + 600000000
+         |ORDER BY c.user_id, click_id, error_id NULLS FIRST""".stripMargin) { (s, dir) =>
+      val ev = Tables.events(s, dir)
+      HealthStream.clickErrorFunnelOuter(ev, ev, windowMinutes = 10)
+        .orderBy(col("user_id"), col("click_id"),
+          col("error_id").asc_nulls_first)
+    },
+
+    // sliding-window rate monitor (10-min windows every 5 min): each
+    // event expands to width÷slide window rows MAP-SIDE before the one
+    // hash shuffle — overlap costs ×2 input rows, never a self-join or
+    // re-scan. Streaming parity (same code over readStream) in
+    // StreamingSpec.
+    // windowed p95 monitor: the full distribution never materializes —
+    // a 16-bucket integer histogram rides one windowed agg as k
+    // columns, p95 derives map-side. Parity in StreamingSpec.
+    QueryKey("st10_stream_p95",
+      s"""WITH base AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
+         |    CAST(greatest(0, least(15, CAST(round(value * 100) AS BIGINT) // 3200)) AS INT) AS vb
+         |  FROM events),
+         |b AS (SELECT bucket, vb, count(*) AS c FROM base GROUP BY 1, 2),
+         |t AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS n_total FROM b GROUP BY 1),
+         |cu AS (SELECT bucket, vb,
+         |    CAST(sum(c) OVER (PARTITION BY bucket ORDER BY vb
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |  FROM b)
+         |SELECT cu.bucket, t.n_total,
+         |  CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN vb END) AS INT) AS p95_bucket,
+         |  CAST((min(CASE WHEN cum * 100 >= 95 * n_total THEN vb END) + 1) * 32 AS INT) AS p95_ub
+         |FROM cu JOIN t ON cu.bucket = t.bucket
+         |GROUP BY cu.bucket, t.n_total ORDER BY cu.bucket""".stripMargin) { (s, dir) =>
+      HealthStream.windowedP95(Tables.events(s, dir))
+        .orderBy(col("bucket"))
+    },
+
+    // windowed distinct-entity counts in the streaming-legal shape
+    // (dedup-then-count instead of a distinct agg); the same code runs
+    // over readStream with both stateful stages watermark-bounded —
+    // parity in StreamingSpec.
+    QueryKey("st9_stream_distinct",
+      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
+         |  count(DISTINCT user_id) AS n_users
+         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin) { (s, dir) =>
+      HealthStream.windowedDistinctUsers(Tables.events(s, dir))
+        .orderBy(col("bucket"), col("event_type"))
+    },
+
+    // windowed approximate distinct users — the streaming HLL sketch:
+    // 64 registers as 64 max() agg columns, 64 longs of state per
+    // window at any cardinality (st9's exact dedup-then-count holds
+    // per-user state; this is its constant-state sibling, the same
+    // trade m35 makes in batch). Parity in StreamingSpec.
+    QueryKey("st11_stream_hll",
       s"""WITH h AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
          |    md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
          |t AS (SELECT bucket, _h, substr(_h, 3, 12) AS tail,
@@ -715,9 +657,45 @@ object StreamingQueries {
          |  2904064 * CAST(1099511627776 AS BIGINT) //
          |    (1000 * ((s_present + (64 - n_hit) * CAST(1125899906842624 AS BIGINT)) // 1024))
          |    AS est_distinct
-         |FROM sk ORDER BY bucket""".stripMargin,
+         |FROM sk ORDER BY bucket""".stripMargin) { (s, dir) =>
+      HealthStream.windowedHllDistinct(Tables.events(s, dir))
+        .orderBy(col("bucket"))
+    },
 
-    "st13_stream_cms" ->
+    // windowed DOMAIN-FREE p95 — m47's streaming face: octave bins
+    // (integer floor-log2 of cents) as 63 fixed count columns, so the
+    // per-window state is 63 longs at ANY value magnitude — st10's
+    // grid assumes values < 512, this assumes only BIGINT. Estimate =
+    // octave inclusive max (never under, ≤2× over). Parity in
+    // StreamingSpec.
+    QueryKey("st12_stream_log_p95",
+      s"""WITH base AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
+         |    CASE WHEN CAST(round(value * 100) AS BIGINT) <= 0 THEN 0
+         |         ELSE CAST(least(62, length(bin(CAST(round(value * 100) AS BIGINT)))) AS INT) END AS ob
+         |  FROM events),
+         |b AS (SELECT bucket, ob, count(*) AS c FROM base GROUP BY 1, 2),
+         |t AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS n_total FROM b GROUP BY 1),
+         |cu AS (SELECT bucket, ob,
+         |    CAST(sum(c) OVER (PARTITION BY bucket ORDER BY ob
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |  FROM b)
+         |SELECT cu.bucket, t.n_total,
+         |  CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN ob END) AS INT) AS p95_octave,
+         |  CAST((CAST(1 AS BIGINT) << CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN ob END) AS INT)) - 1 AS BIGINT) AS p95_ub_cents
+         |FROM cu JOIN t ON cu.bucket = t.bucket
+         |GROUP BY cu.bucket, t.n_total ORDER BY cu.bucket""".stripMargin) { (s, dir) =>
+      HealthStream.windowedLogP95(Tables.events(s, dir))
+        .orderBy(col("bucket"))
+    },
+
+    // windowed count-min frequency watchlist — m32's streaming face
+    // (sketch family's third streaming member after st11 HLL and st12
+    // log-p95): per-key windowed counts over an unbounded key space as
+    // a 2×64 CMS riding 128 sum columns = 128 longs of state per
+    // window at ANY cardinality; frequencies answered for a fixed
+    // 8-key watchlist via two O(1) bucket lookups, one-sided error
+    // (cms_n ≥ true) asserted in StreamingSpec. Parity in StreamingSpec.
+    QueryKey("st13_stream_cms",
       s"""WITH ev AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
          |    CAST(user_id AS VARCHAR) AS key FROM events),
          |b AS (SELECT bucket,
@@ -740,111 +718,15 @@ object StreamingQueries {
          |FROM w CROSS JOIN pk
          |LEFT JOIN c0 ON c0.bucket = w.bucket AND c0.b = pk.b0
          |LEFT JOIN c1 ON c1.bucket = w.bucket AND c1.b = pk.b1
-         |ORDER BY 1, 2""".stripMargin,
+         |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+      HealthStream.windowedCmsWatchlist(Tables.events(s, dir),
+          probes = (0L until 8L).map(_ * 10))
+        .orderBy(col("bucket"), col("key"))
+    },
 
-    "st10_stream_p95" ->
-      s"""WITH base AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
-         |    CAST(greatest(0, least(15, CAST(round(value * 100) AS BIGINT) // 3200)) AS INT) AS vb
-         |  FROM events),
-         |b AS (SELECT bucket, vb, count(*) AS c FROM base GROUP BY 1, 2),
-         |t AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS n_total FROM b GROUP BY 1),
-         |cu AS (SELECT bucket, vb,
-         |    CAST(sum(c) OVER (PARTITION BY bucket ORDER BY vb
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |  FROM b)
-         |SELECT cu.bucket, t.n_total,
-         |  CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN vb END) AS INT) AS p95_bucket,
-         |  CAST((min(CASE WHEN cum * 100 >= 95 * n_total THEN vb END) + 1) * 32 AS INT) AS p95_ub
-         |FROM cu JOIN t ON cu.bucket = t.bucket
-         |GROUP BY cu.bucket, t.n_total ORDER BY cu.bucket""".stripMargin,
-
-    "st12_stream_log_p95" ->
-      s"""WITH base AS (SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket,
-         |    CASE WHEN CAST(round(value * 100) AS BIGINT) <= 0 THEN 0
-         |         ELSE CAST(least(62, length(bin(CAST(round(value * 100) AS BIGINT)))) AS INT) END AS ob
-         |  FROM events),
-         |b AS (SELECT bucket, ob, count(*) AS c FROM base GROUP BY 1, 2),
-         |t AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS n_total FROM b GROUP BY 1),
-         |cu AS (SELECT bucket, ob,
-         |    CAST(sum(c) OVER (PARTITION BY bucket ORDER BY ob
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |  FROM b)
-         |SELECT cu.bucket, t.n_total,
-         |  CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN ob END) AS INT) AS p95_octave,
-         |  CAST((CAST(1 AS BIGINT) << CAST(min(CASE WHEN cum * 100 >= 95 * n_total THEN ob END) AS INT)) - 1 AS BIGINT) AS p95_ub_cents
-         |FROM cu JOIN t ON cu.bucket = t.bucket
-         |GROUP BY cu.bucket, t.n_total ORDER BY cu.bucket""".stripMargin,
-
-    "st9_stream_distinct" ->
-      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
-         |  count(DISTINCT user_id) AS n_users
-         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin,
-
-    "st1_stream_health" ->
-      s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
-         |  count(*) AS n,
-         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors
-         |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin,
-
-    "st2_stream_sessions" ->
-      s"""SELECT user_id, session_idx, min(ts_us) AS start_us, max(ts_us) AS end_us,
-         |  count(*) AS n_events
-         |FROM (
-         |  SELECT user_id, ts_us,
-         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-         |  FROM (
-         |    SELECT user_id, event_id, $tsUs AS ts_us,
-         |      CASE WHEN $tsUs - lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) > 1800000000
-         |           THEN 1
-         |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
-         |           THEN 1 ELSE 0 END AS new_session
-         |    FROM events) a) b
-         |GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin,
-
-    "st4_stream_dedup" ->
-      s"""SELECT user_id, event_type, ts_us AS first_ts_us, event_id AS first_event_id
-         |FROM (SELECT user_id, event_type, event_id, $tsUs AS ts_us,
-         |    row_number() OVER (PARTITION BY user_id, event_type
-         |      ORDER BY $tsUs, event_id) AS rn
-         |  FROM events) t
-         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-
-    "st5_stream_enrich" ->
-      s"""SELECT bucket, nation, count(*) AS n_events,
-         |  CAST(sum(is_err) AS BIGINT) AS n_errors
-         |FROM (SELECT make_timestamp($tsUs - $tsUs % 600000000) AS bucket,
-         |    coalesce(n_name, 'UNKNOWN') AS nation,
-         |    CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
-         |  FROM events e LEFT JOIN
-         |    (SELECT c_custkey, n_name FROM customer
-         |      JOIN nation ON c_nationkey = n_nationkey) d
-         |    ON e.user_id = d.c_custkey) t
-         |GROUP BY bucket, nation ORDER BY bucket, nation""".stripMargin,
-
-    "st6_stream_funnel" ->
-      s"""SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
-         |  (epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP))) AS gap_us
-         |FROM events c JOIN events e
-         |  ON c.user_id = e.user_id
-         |WHERE c.event_type = 'click' AND e.event_type = 'error'
-         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) >= epoch_us(CAST(c.ts AS TIMESTAMP))
-         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) < epoch_us(CAST(c.ts AS TIMESTAMP)) + 600000000
-         |ORDER BY 1, click_id, error_id""".stripMargin,
-
-    "st8_funnel_outer" ->
-      s"""SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
-         |  (epoch_us(CAST(e.ts AS TIMESTAMP)) - epoch_us(CAST(c.ts AS TIMESTAMP))) AS gap_us
-         |FROM (SELECT * FROM events WHERE event_type = 'click') c
-         |LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
-         |  ON c.user_id = e.user_id
-         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) >= epoch_us(CAST(c.ts AS TIMESTAMP))
-         |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) < epoch_us(CAST(c.ts AS TIMESTAMP)) + 600000000
-         |ORDER BY c.user_id, click_id, error_id NULLS FIRST""".stripMargin,
-
-    // every event contributes to exactly width/slide = 2 sliding
-    // windows: starts t - t%slide and t - t%slide - slide.
-    "st7_sliding_rate" ->
+    QueryKey("st7_sliding_rate",
+      // every event contributes to exactly width/slide = 2 sliding
+      // windows: starts t - t%slide and t - t%slide - slide.
       s"""SELECT make_timestamp(ws) AS win_start,
          |  make_timestamp(ws + 600000000) AS win_end,
          |  count(*) AS n_total, CAST(sum(is_err) AS BIGINT) AS n_errors,
@@ -853,11 +735,68 @@ object StreamingQueries {
          |  SELECT $tsUs - $tsUs % 300000000 - 300000000 * i AS ws,
          |    CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
          |  FROM events, generate_series(0, 1) t(i)) e
-         |GROUP BY ws ORDER BY win_start""".stripMargin,
+         |GROUP BY ws ORDER BY win_start""".stripMargin) { (s, dir) =>
+      HealthStream.slidingRate(Tables.events(s, dir))
+        .orderBy(col("win_start"))
+    },
 
-    // session_window merges while diff < gap (strict), so the break
-    // condition here is >= — unlike st2's > (sub-µs distinction only).
-    "st3_session_window" ->
+    // per-key alert COOLDOWN, batch-fold form: an error alerts only if
+    // ≥10 min has passed since the key's last RAISED alert — a
+    // recursive dependency on the operator's own output (which prior
+    // events alerted decides the next decision) that no window frame
+    // expresses; the fold is the one sequential pass. The streaming
+    // production form is Spark 4 transformWithState with two ValueState
+    // longs per key in RocksDB (HealthStream.alertCooldownStream);
+    // parity + cross-batch state proven in StreamingSpec. Scale shape:
+    // one hash shuffle on user_id; the fold runs on aggregate rows
+    // (per-user error arrays), O(errors-per-user) each, via ONE
+    // aggregate() HOF pass (the st12 O(n) finish lesson).
+    QueryKey("st14_alert_cooldown",
+      // NOTE: deliberately a recursive CTE, not list_reduce — DuckDB
+      // 1.0's list_reduce mis-folds when list lengths vary across rows
+      // (verified minimal repro: 3-row fold returns a wrong accumulator
+      // on the shorter rows). The recursion IS the sequential semantics.
+      s"""WITH RECURSIVE e AS (
+         |  SELECT user_id, $tsUs AS ts_us, event_id,
+         |    CAST(row_number() OVER (PARTITION BY user_id
+         |      ORDER BY $tsUs, event_id) AS BIGINT) AS rn
+         |  FROM events WHERE event_type = 'error'),
+         |n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_errors
+         |  FROM e GROUP BY user_id),
+         |walk(user_id, rn, last_alert, n_alerts) AS (
+         |  SELECT user_id, CAST(0 AS BIGINT),
+         |    CAST(${HealthStream.CooldownSentinelUs} AS BIGINT), CAST(0 AS BIGINT) FROM n
+         |  UNION ALL
+         |  SELECT w.user_id, e.rn,
+         |    CASE WHEN e.ts_us - w.last_alert >= 600000000
+         |         THEN e.ts_us ELSE w.last_alert END,
+         |    CASE WHEN e.ts_us - w.last_alert >= 600000000
+         |         THEN w.n_alerts + 1 ELSE w.n_alerts END
+         |  FROM walk w JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
+         |SELECT n.user_id, n.n_errors, w.n_alerts, w.last_alert AS last_alert_us
+         |FROM walk w JOIN n ON n.user_id = w.user_id AND w.rn = n.n_errors
+         |ORDER BY n.user_id""".stripMargin) { (s, dir) =>
+      Tables.events(s, dir)
+        .filter(col("event_type") === "error")
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_errors"),
+          array_sort(collect_list(struct(col("ts_us"), col("event_id")))).as("seq"))
+        .withColumn("acc", expr(
+          s"aggregate(seq, named_struct('last', CAST(${HealthStream.CooldownSentinelUs} AS BIGINT), " +
+          "'n', CAST(0 AS BIGINT)), (acc, x) -> " +
+          "IF(x.ts_us - acc.last >= 600000000, " +
+          "named_struct('last', x.ts_us, 'n', acc.n + 1), acc))"))
+        .select(col("user_id"), col("n_errors"),
+          col("acc.n").as("n_alerts"), col("acc.last").as("last_alert_us"))
+        .orderBy(col("user_id"))
+    },
+
+    // native session windows (merge while gap < 30 min; window end =
+    // last event + gap). Streaming-capable as-is (state store backed).
+    QueryKey("st3_session_window",
+      // session_window merges while diff < gap (strict), so the break
+      // condition here is >= — unlike st2's > (sub-µs distinction only).
       s"""SELECT user_id, make_timestamp(min(ts_us)) AS session_start,
          |  make_timestamp(max(ts_us) + 1800000000) AS session_end,
          |  count(*) AS n_events
@@ -872,6 +811,15 @@ object StreamingQueries {
          |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
          |           THEN 1 ELSE 0 END AS new_session
          |    FROM events) a) b
-         |GROUP BY user_id, session_idx ORDER BY user_id, session_start""".stripMargin
+         |GROUP BY user_id, session_idx ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
+      Tables.events(s, dir)
+        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          col("w.start").cast("timestamp_ntz").as("session_start"),
+          col("w.end").cast("timestamp_ntz").as("session_end"),
+          col("n_events"))
+        .orderBy(col("user_id"), col("session_start"))
+    }
   )
 }

@@ -15,9 +15,14 @@ import java.io.File
   * nothing on disk. */
 object DerivedLayouts {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() => owned.forEach(rm(_))))
+  // the exit hook is registered with the first directory handed out, so
+  // touching this object during shutdown (`rm` from another exit hook)
+  // never tries to register a hook then
+  private lazy val owned = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach(rm(_))))
+    dirs
+  }
 
   /** Symlink-safe recursive delete: File.isDirectory follows links, so
     * recursing through a planted symlink would delete the TARGET's

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.Tables
 
 /** The reference's daemon surface (chStats.py:538-579: periodic health
   * jobs) re-expressed as Structured Streaming.
@@ -41,12 +42,12 @@ object HealthStream {
   /** Continuous source over an events directory/file, normalized so `ts`
     * is always µs TimestampType. A streaming source needs a user schema
     * up front, so the on-disk ts form is sniffed from the parquet footer
-    * with one driver-side batch-schema read at stream-construction time,
-    * then branched exactly like Tables.events — a stream pinned to one
-    * hardcoded form would fail on shards written by the other
-    * generator vintage. */
+    * at stream-construction time (`Tables.parquet`: inferred once per
+    * fingerprint), then branched exactly like Tables.events — a stream
+    * pinned to one hardcoded form would fail on shards written by the
+    * other generator vintage. */
   def readEventStream(spark: SparkSession, path: String): DataFrame = {
-    val onDisk = spark.read.parquet(path).schema
+    val onDisk = Tables.parquet(spark, path).schema
     val raw = spark.readStream.schema(onDisk).parquet(path)
     onDisk("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -57,11 +58,11 @@ object HealthStream {
 
   /** Continuous source over a documents directory/file — the ingest
     * side of the training-data pipeline (documents arrive as parquet
-    * shards; the quality gate runs on arrival). Schema sniffed from the
-    * footer like readEventStream (documents has no timestamp column, so
-    * no normalization branch is needed). */
+    * shards; the quality gate runs on arrival). Schema sniffed through
+    * `Tables.parquet` like readEventStream (documents has no timestamp
+    * column, so no normalization branch is needed). */
   def readDocumentStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+    spark.readStream.schema(Tables.parquet(spark, path).schema).parquet(path)
 
   /** Ingest quality gate — the filter a training pipeline runs ON
     * ARRIVAL (streaming) and in backfill (batch) with the SAME code:
@@ -326,10 +327,12 @@ object HealthStream {
     * overwriting the dim path kills the query with
     * FAILED_READ_FILE.FILE_NOT_EXIST on the next micro-batch (probed
     * empirically; pinned in StreamingSpec). The working shape is
-    * foreachBatch with the dim re-read per batch: `spark.read.parquet`
-    * builds a fresh file index on every invocation, so a config
-    * overwrite lands at the next micro-batch boundary with no restart —
-    * the dim is tiny (it broadcasts), so the per-batch re-list is noise.
+    * foreachBatch with the dim re-read per batch: `Tables.parquet`
+    * builds a fresh file index on every invocation, and a rewritten dim
+    * changes its fingerprint, so its schema is inferred again. A config
+    * overwrite therefore lands at the next micro-batch boundary with no
+    * restart — the dim is tiny (it broadcasts), so the per-batch re-list
+    * is noise.
     *
     * `enrich(batchDf, dimDf)` declares the per-batch join; `sink` is the
     * idempotent writer (foreachBatch may replay a batch id on recovery).
@@ -338,7 +341,7 @@ object HealthStream {
       enrich: (DataFrame, DataFrame) => DataFrame)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      val dim = batch.sparkSession.read.parquet(dimPath)
+      val dim = Tables.parquet(batch.sparkSession, dimPath)
       sink(enrich(batch.toDF(), broadcast(dim)), batchId)
     }
 

@@ -46,6 +46,16 @@ class HarnessSpec extends AnyFunSuite {
     check(keys.map(k => k -> -1.0)) // every key failed: the error list is capped
   }
 
+  test("every headline key is registered; the skip-baselines set is the declared 15") {
+    val unknown = Harness.headline.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"headline keys with no record: $unknown")
+    assert(Harness.baselines == Set("s1_ann_brute", "s4_ann_quantized",
+      "s5_ann_recall", "s7_ann_rerank", "s8_topk_diversity", "s11_ann_pq",
+      "s17_hybrid_recall", "s20_hybrid_complement", "t17_embed_fidelity",
+      "d21_lsh_recall", "d22_banding_sweep", "q37_format_roundtrip",
+      "d18_incremental_dedup", "d11_minhash_accuracy", "d20_prefix_simjoin"))
+  }
+
   test("key selection rejects an unknown key instead of running nothing") {
     val e = intercept[IllegalArgumentException] {
       Harness.select(Seq("q1_pricing_summary", "q0_no_such_key"))

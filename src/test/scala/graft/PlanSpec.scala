@@ -419,6 +419,14 @@ class PlanSpec extends AnyFunSuite {
     assert(reranked.isEmpty, s"a Window re-ranks TopNPerKey survivors in $reranked")
   }
 
+  test("t17: no Window in its executed plan or its eager checkpoint plans") {
+    // both top-3s (exact truth, hashed widths) are TopNPerKey heaps; a
+    // row_number window would sort every candidate pair per query
+    val windows = keyPlans("t17_embed_fidelity").flatMap(nodes)
+      .filter(_.getClass.getPackage.getName == "org.apache.spark.sql.execution.window")
+    assert(windows.isEmpty, windows.map(_.nodeName).mkString(", "))
+  }
+
   test("d11: accuracy eval joins ride the bounded candidate set — no cross product") {
     val p = plan("d11_minhash_accuracy")
     assert(!p.contains("CartesianProduct"), p)

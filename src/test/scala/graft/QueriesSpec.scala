@@ -62,9 +62,20 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has an oracle entry") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without oracle: $missing")
+  test("key registry: names unique, oracles non-blank, 307 keys") {
+    val keys = SparkEntry.keys
+    val twice = keys.map(_.name).diff(keys.map(_.name).distinct)
+    assert(twice.isEmpty, s"declared twice: $twice")
+    val blank = keys.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracle: $blank")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 307)
+    // a repeated name is an error, not a silent replacement
+    val q1 = SparkEntry.registry("q1_pricing_summary")
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.QueryKey.registry(Seq(q1, q1.copy(oracle = "SELECT 1")(q1.build)))
+    }
+    assert(e.getMessage.contains("q1_pricing_summary"))
   }
 
   test("results are partitioning-invariant: shuffle-partition count never changes output") {

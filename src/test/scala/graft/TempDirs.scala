@@ -8,11 +8,8 @@ import java.nio.file.{Files, Path}
   * so a test run leaves nothing in java.io.tmpdir. */
 object TempDirs {
   private val made = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
-  // initialized now: first touching DerivedLayouts inside the hook would
-  // run its initializer, which registers a hook of its own, during shutdown
-  private val layouts = graft.sources.DerivedLayouts
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() => made.forEach(layouts.rm(_))))
+  Runtime.getRuntime.addShutdownHook(
+    new Thread(() => made.forEach(graft.sources.DerivedLayouts.rm(_))))
 
   /** A new empty directory `<prefix><random>` under java.io.tmpdir. */
   def apply(prefix: String): Path = {
