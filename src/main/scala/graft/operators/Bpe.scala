@@ -121,27 +121,14 @@ object Bpe {
     require(schedule.nonEmpty && schedule.forall(_ >= 1) &&
       candCap >= schedule.max)
     val rounds = schedule.length
-    var segs = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .withColumn("syms",
-        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .localCheckpoint()
+    var segs = vocab(docs, textCol).localCheckpoint()
     var outs = Seq.empty[DataFrame]
     var rnd = 0
     var exhausted = false
     while (rnd < rounds && !exhausted) {
       rnd += 1
       val batchMax = schedule(rnd - 1)
-      val cands = segs
-        .select(col("cnt"), explode(expr(
-          "IF(size(syms) < 2, array(), transform(sequence(0, size(syms) - 2), " +
-          "j -> named_struct('l', syms[j], 'r', syms[j + 1])))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pair_cnt"))
-        .orderBy(col("pair_cnt").desc, col("l"), col("r"))
-        .limit(candCap)
+      val cands = pairCounts(segs).limit(candCap)
       val picks = cands
         .agg(expr("array_sort(collect_list(" +
           "struct(-pair_cnt AS nc, l AS l, r AS r, pair_cnt AS c)))").as("cs"))
@@ -196,29 +183,38 @@ object Bpe {
     else outs.reduce(_ unionByName _).orderBy(col("round"), col("rnk"))
   }
 
-  private def run(docs: DataFrame, textCol: String, n: Int)
-      : (DataFrame, DataFrame) = {
-    require(n >= 1, s"need at least one merge iteration (got $n)")
-    var segs = docs
+  /** Word counts (w, cnt) over the whitespace split, each word's
+    * characters as its starting segmentation `syms` — the frame both
+    * learners fold merges into. */
+  private def vocab(docs: DataFrame, textCol: String): DataFrame =
+    docs
       .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .withColumn("syms",
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .localCheckpoint()
+
+  /** Adjacent-symbol pair counts (l, r, pair_cnt) of a segmentation,
+    * weighted by word count, best first (ties by l, r). */
+  private def pairCounts(segs: DataFrame): DataFrame =
+    segs
+      .select(col("cnt"), explode(expr(
+        "IF(size(syms) < 2, array(), transform(sequence(0, size(syms) - 2), " +
+        "j -> named_struct('l', syms[j], 'r', syms[j + 1])))")).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("cnt")).as("pair_cnt"))
+      .orderBy(col("pair_cnt").desc, col("l"), col("r"))
+
+  private def run(docs: DataFrame, textCol: String, n: Int)
+      : (DataFrame, DataFrame) = {
+    require(n >= 1, s"need at least one merge iteration (got $n)")
+    var segs = vocab(docs, textCol).localCheckpoint()
     var outs = Seq.empty[DataFrame]
     var it = 0
     var exhausted = false
     while (it < n && !exhausted) {
       it += 1
-      val best = segs
-        .select(col("cnt"), explode(expr(
-          "IF(size(syms) < 2, array(), transform(sequence(0, size(syms) - 2), " +
-          "j -> named_struct('l', syms[j], 'r', syms[j + 1])))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("pair_cnt"))
-        .orderBy(col("pair_cnt").desc, col("l"), col("r"))
-        .limit(1)
+      val best = pairCounts(segs).limit(1)
         .localCheckpoint()
       // degenerate corpus (every word already one symbol, or n exceeds
       // the available merges): best is EMPTY and crossJoin(broadcast)

@@ -37,7 +37,7 @@ object LearnedQuality {
     * Spark (div/shiftleft) — il16(v) = 16·e + (v·16) div 2^e − 16,
     * e = floor(log2 v) = length(bin(v)) − 1. Piecewise-linear in the
     * mantissa, monotone, integer-only (shift ≤ 62 for v < 2^59 —
-    * token-count range). The DuckDB twin lives in the t20 oracle
+    * token-count range). The DuckDB twin is PipelineQueries.IL
     * (`//` and `1::BIGINT <<`). */
   def il16Sql(v: String): String =
     s"(16 * (length(bin($v)) - 1) + (($v) * 16) div " +

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import FeedSql._
 
 /** Catalog & connector-governance coverage (SURVEY §2, q63+): the
   * engine-extension faces a real deployment wires up LAST — named
@@ -27,6 +28,55 @@ object CatalogQueries {
     s.conf.set("spark.sql.catalog.graft.dir", dir)
     s
   }
+
+  /** q71/q79's lifecycle on graft.mem.metrics<n>, which the caller
+    * creates with its write mode: INSERT 30k feed rows, UPDATE every
+    * gauge by +1,000,000, MERGE the doubled ids [15000, 40000) over
+    * them, then the per-kind accounting. */
+  private def updateMerge(s: SparkSession, n: Int): DataFrame = {
+    s.read.format("graft.sources.MetricsFeedSource")
+      .option("rows", "30000").option("partitions", "8").load()
+      .createOrReplaceTempView(s"v${n}_feed")
+    s.sql(s"INSERT INTO graft.mem.metrics$n " +
+      s"SELECT id, kind, value FROM v${n}_feed")
+    s.sql(s"UPDATE graft.mem.metrics$n SET value = value + 1000000 " +
+      "WHERE kind = 'gauge'")
+    s.read.format("graft.sources.MetricsFeedSource")
+      .option("rows", "40000").option("partitions", "8").load()
+      .createOrReplaceTempView(s"v${n}_src")
+    s.sql(s"""
+      MERGE INTO graft.mem.metrics$n t
+      USING (SELECT id, kind, value * 2 AS value2 FROM v${n}_src
+             WHERE id >= 15000) s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET value = s.value2
+      WHEN NOT MATCHED THEN INSERT (id, kind, value)
+        VALUES (s.id, s.kind, s.value2)""")
+    s.sql(s"""
+      SELECT kind, CAST(count(*) AS BIGINT) AS n, sum(value) AS sum_value,
+        min(value) AS min_value, max(id) AS max_id
+      FROM graft.mem.metrics$n
+      GROUP BY kind ORDER BY kind""")
+  }
+
+  /** q71/q79's final state in closed form: ids [0,15000) keep the
+    * UPDATE result (base value, +1e6 on gauges); ids [15000,40000)
+    * carry the MERGE overlay (2× base — matched rows updated, new ids
+    * inserted). */
+  private val updateMergeOracle =
+    s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
+       |  CAST(sum(value) AS BIGINT) AS sum_value,
+       |  CAST(min(value) AS BIGINT) AS min_value,
+       |  CAST(max(id) AS BIGINT) AS max_id
+       |FROM (
+       |  SELECT id,
+       |    $feedKind AS kind,
+       |    CASE WHEN id >= 15000 THEN 2 * ($feedValue)
+       |      WHEN CAST(id % 3 AS INT) = 0
+       |        THEN $feedValue + 1000000
+       |      ELSE $feedValue END AS value
+       |  FROM range(0, 40000) t(id)) u
+       |GROUP BY kind ORDER BY kind""".stripMargin
 
   def keys: Seq[QueryKey] = Seq(
 
@@ -126,15 +176,11 @@ object CatalogQueries {
     // closed-form from the feed formulas, so a delete that dropped too
     // much, too little, or double-applied breaks the hash.
     QueryKey("q67_connector_delete",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  min(id) AS min_id, max(id) AS max_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 100000) t(id)) u
+        |  ${feedRows(0, 100000)}) u
         |WHERE NOT (kind = 'timer' OR id >= 90000)
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
@@ -174,50 +220,12 @@ object CatalogQueries {
     // [15000, 40000) with doubled values (matched rows update,
     // unmatched insert) → per-kind accounting, closed-form oracle.
     QueryKey("q71_update_rewrite",
-      // final state closed-form: ids [0,15000) keep the UPDATE result
-      // (base value, +1e6 on gauges); ids [15000,40000) carry the MERGE
-      // overlay (2× base — matched rows updated, new ids inserted)
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
-        |      WHEN CAST(id % 3 AS INT) = 0
-        |        THEN (id * 2654435761) % 100000 + 1000000
-        |      ELSE (id * 2654435761) % 100000 END AS value
-        |  FROM range(0, 40000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
+      updateMergeOracle) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics71")
       s.sql("CREATE TABLE graft.mem.metrics71 " +
         "(id BIGINT, kind STRING, value BIGINT)")
-      s.read.format("graft.sources.MetricsFeedSource")
-        .option("rows", "30000").option("partitions", "8").load()
-        .createOrReplaceTempView("v71_feed")
-      s.sql("INSERT INTO graft.mem.metrics71 " +
-        "SELECT id, kind, value FROM v71_feed")
-      s.sql("UPDATE graft.mem.metrics71 SET value = value + 1000000 " +
-        "WHERE kind = 'gauge'")
-      s.read.format("graft.sources.MetricsFeedSource")
-        .option("rows", "40000").option("partitions", "8").load()
-        .createOrReplaceTempView("v71_src")
-      s.sql("""
-        MERGE INTO graft.mem.metrics71 t
-        USING (SELECT id, kind, value * 2 AS value2 FROM v71_src
-               WHERE id >= 15000) s
-        ON t.id = s.id
-        WHEN MATCHED THEN UPDATE SET value = s.value2
-        WHEN NOT MATCHED THEN INSERT (id, kind, value)
-          VALUES (s.id, s.kind, s.value2)""")
-      s.sql("""
-        SELECT kind, CAST(count(*) AS BIGINT) AS n, sum(value) AS sum_value,
-          min(value) AS min_value, max(id) AS max_id
-        FROM graft.mem.metrics71
-        GROUP BY kind ORDER BY kind""")
+      updateMerge(s, 71)
     },
 
     // MERGE-ON-READ row-level writes (q79 — SupportsDelta, the half of
@@ -237,20 +245,7 @@ object CatalogQueries {
     QueryKey("q79_delta_merge",
       // q71's closed form verbatim — same lifecycle, merge-on-read
       // protocol; matching hashes ARE the protocol-equivalence evidence
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS sum_value,
-        |  CAST(min(value) AS BIGINT) AS min_value,
-        |  CAST(max(id) AS BIGINT) AS max_id
-        |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CASE WHEN id >= 15000 THEN 2 * ((id * 2654435761) % 100000)
-        |      WHEN CAST(id % 3 AS INT) = 0
-        |        THEN (id * 2654435761) % 100000 + 1000000
-        |      ELSE (id * 2654435761) % 100000 END AS value
-        |  FROM range(0, 40000) t(id)) u
-        |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
+      updateMergeOracle) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics79")
       // the rowId column MUST be NOT NULL — Spark rejects a nullable
@@ -258,29 +253,7 @@ object CatalogQueries {
       s.sql("CREATE TABLE graft.mem.metrics79 " +
         "(id BIGINT NOT NULL, kind STRING, value BIGINT) " +
         "TBLPROPERTIES ('write.mode'='merge-on-read')")
-      s.read.format("graft.sources.MetricsFeedSource")
-        .option("rows", "30000").option("partitions", "8").load()
-        .createOrReplaceTempView("v79_feed")
-      s.sql("INSERT INTO graft.mem.metrics79 " +
-        "SELECT id, kind, value FROM v79_feed")
-      s.sql("UPDATE graft.mem.metrics79 SET value = value + 1000000 " +
-        "WHERE kind = 'gauge'")
-      s.read.format("graft.sources.MetricsFeedSource")
-        .option("rows", "40000").option("partitions", "8").load()
-        .createOrReplaceTempView("v79_src")
-      s.sql("""
-        MERGE INTO graft.mem.metrics79 t
-        USING (SELECT id, kind, value * 2 AS value2 FROM v79_src
-               WHERE id >= 15000) s
-        ON t.id = s.id
-        WHEN MATCHED THEN UPDATE SET value = s.value2
-        WHEN NOT MATCHED THEN INSERT (id, kind, value)
-          VALUES (s.id, s.kind, s.value2)""")
-      s.sql("""
-        SELECT kind, CAST(count(*) AS BIGINT) AS n, sum(value) AS sum_value,
-          min(value) AS min_value, max(id) AS max_id
-        FROM graft.mem.metrics79
-        GROUP BY kind ORDER BY kind""")
+      updateMerge(s, 79)
     },
 
     // ATOMIC CTAS / RTAS (q80 — StagingTableCatalog, commit-or-vanish
@@ -299,14 +272,13 @@ object CatalogQueries {
     QueryKey("q80_atomic_ctas",
       // the RTAS content only: ids [10000, 30000) at value*3 — any CTAS
       // row bleeding through the atomic swap breaks min_id/counts
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  min(id) AS min_id, max(id) AS max_id
         |FROM (
         |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    3 * ((id * 2654435761) % 100000) AS value
+        |    $feedKind AS kind,
+        |    3 * ($feedValue) AS value
         |  FROM range(10000, 30000) t(id)) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
@@ -340,17 +312,16 @@ object CatalogQueries {
     QueryKey("q81_partition_overwrite",
       // gauge partition re-ingested at ×3 (idempotent under the re-run);
       // counter/timer untouched
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(value) AS BIGINT) AS min_value,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
         |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+        |    $feedKind AS kind,
         |    CASE WHEN CAST(id % 3 AS INT) = 0
-        |      THEN 3 * ((id * 2654435761) % 100000)
-        |      ELSE (id * 2654435761) % 100000 END AS value
+        |      THEN 3 * ($feedValue)
+        |      ELSE $feedValue END AS value
         |  FROM range(0, 30000) t(id)) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
@@ -391,17 +362,13 @@ object CatalogQueries {
     // adherence (START WITH 1000 INCREMENT BY 2) in one hash.
     QueryKey("q82_identity_columns",
       // row_id = 1000 + 2·id under the single-task ordered insert
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(sum(1000 + 2 * id) AS BIGINT) AS sum_rid,
         |  CAST(min(1000 + 2 * id) AS BIGINT) AS min_rid,
         |  CAST(max(1000 + 2 * id) AS BIGINT) AS max_rid
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 20000) t(id)) u
+        |  ${feedRows(0, 20000)}) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics82")
@@ -439,16 +406,12 @@ object CatalogQueries {
     QueryKey("q83_join_pushdown",
       // the absorbed join == the feed restricted to the range
       // intersection [0, 40000)
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(sum(id) AS BIGINT) AS sum_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 40000) t(id)) u
+        |  ${feedRows(0, 40000)}) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.optimizer.datasourceV2JoinPushdown", "true")
@@ -482,17 +445,13 @@ object CatalogQueries {
     // the sums).
     QueryKey("q84_procedure_call",
       // post-compact _pos == id (dense ids, sorted store)
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(sum(id) AS BIGINT) AS sum_pos,
         |  CAST(min(id) AS BIGINT) AS min_pos,
         |  CAST(max(id) AS BIGINT) AS max_pos
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 30000) t(id)) u
+        |  ${feedRows(0, 30000)}) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics84")
@@ -527,16 +486,12 @@ object CatalogQueries {
     // key's output is the probe's closed-form per-kind accounting.
     QueryKey("q89_index_scan",
       // the BETWEEN probe's rows, closed-form from the feed formulas
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(id) AS BIGINT) AS min_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(10000, 12048) t(id)) u
+        |  ${feedRows(10000, 12048)}) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics89")
@@ -577,10 +532,10 @@ object CatalogQueries {
       // registry after the DDL dance: {0, 1 (truncated, still listed),
       // 3, 6 (renamed from 4 — rows' day rewritten), 9 (added empty)};
       // day 2 dropped with its rows, day 1's rows truncated away
-      """WITH rows86 AS (
+      s"""WITH rows86 AS (
         |  SELECT id,
         |    CASE WHEN id % 5 = 4 THEN 6 ELSE id % 5 END AS day,
-        |    (id * 2654435761) % 100000 AS value
+        |    $feedValue AS value
         |  FROM range(0, 20000) t(id)
         |  WHERE id % 5 NOT IN (1, 2)
         |), reg AS (SELECT * FROM (VALUES (0), (1), (3), (6), (9)) p(day))
@@ -631,13 +586,9 @@ object CatalogQueries {
     QueryKey("q72_metadata_cols",
       // survivors of the value floor, positions = compacted rank by the
       // insert order (== id order under the single-task ordered insert)
-      """WITH survivors AS (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 30000) t(id)
-        |  WHERE (id * 2654435761) % 100000 >= 20000),
+      s"""WITH survivors AS (
+        |  ${feedRows(0, 30000)}
+        |  WHERE $feedValue >= 20000),
         |pos AS (
         |  SELECT kind, value,
         |    CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS _pos
@@ -729,7 +680,7 @@ object CatalogQueries {
       // shape 1 (id < 10000): kind='unknown', score=50; shape 2
       // ([10000, 20000)): feed kind, score=50; shape 3 (≥20000): feed
       // kind + value as score
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(score) AS BIGINT) AS sum_score,
         |  CAST(min(score) AS BIGINT) AS min_score,
         |  CAST(max(id) AS BIGINT) AS max_id
@@ -739,7 +690,7 @@ object CatalogQueries {
         |      ELSE CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
         |        WHEN 1 THEN 'counter' ELSE 'timer' END END AS kind,
         |    CASE WHEN id < 20000 THEN 50
-        |      ELSE (id * 2654435761) % 100000 END AS score
+        |      ELSE $feedValue END AS score
         |  FROM range(0, 30000) t(id)) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
@@ -775,16 +726,12 @@ object CatalogQueries {
     // true by the feed's construction, so enforcement cost is the
     // observable and the accounting is closed-form).
     QueryKey("q77_check_constraint",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(value) AS BIGINT) AS min_value,
         |  CAST(max(value) AS BIGINT) AS max_value
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 20000) t(id)) u
+        |  ${feedRows(0, 20000)}) u
         |GROUP BY kind ORDER BY kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")
       s.sql("DROP TABLE IF EXISTS graft.mem.metrics77")
@@ -816,16 +763,15 @@ object CatalogQueries {
     QueryKey("q78_alter_table",
       // old era (id < 10000): score materialized from the ADD COLUMN
       // default; new era: feed value
-      """SELECT metric_kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT metric_kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(score) AS BIGINT) AS sum_score,
         |  CAST(min(score) AS BIGINT) AS min_score,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
         |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS metric_kind,
+        |    $feedKind AS metric_kind,
         |    CASE WHEN id < 10000 THEN 50
-        |      ELSE (id * 2654435761) % 100000 END AS score
+        |      ELSE $feedValue END AS score
         |  FROM range(0, 20000) t(id)) u
         |GROUP BY metric_kind ORDER BY metric_kind""".stripMargin) { (s0, _) =>
       val s = catalogSession(s0, "")

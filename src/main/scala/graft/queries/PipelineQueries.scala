@@ -6,6 +6,7 @@ import graft.sources.Tables
 import graft.operators.{Bpe, Dedup, Graph, HtmlText, LearnedQuality, Relational, Similarity}
 import graft.functions.TextFunctions
 import graft.multimodal.Multimodal
+import scala.reflect.runtime.universe.TypeTag
 
 /** LLM-data-pipeline coverage (SURVEY §2: d*, s*, t*, x*) over the
   * documents/embeddings tables.
@@ -45,11 +46,14 @@ object PipelineQueries {
   /** The query panel the ANN and hybrid evals probe with: every 50th
     * id. `first` keeps only the first copy of a ScaleUp'ed corpus
     * (clones shift ids by 100000000), so that panel does not grow with
-    * the corpus. The oracles spell their own predicate. */
+    * the corpus. The oracles spell their own predicate: `% 50 = 0`,
+    * and `firstPanel` for `first`. */
   private object Panel {
     def apply(id: Column): Column = pmod(id, lit(50)) === 0
     def first(id: Column): Column = apply(id) && id < 100000000L
   }
+
+  private def firstPanel(id: String): String = s"$id % 50 = 0 AND $id < 100000000"
 
   /** Exact term-space tf-cosine truth (t17, s20): each panel doc's
     * (`isQ`) inverted-index dot with every other doc over `termTf`
@@ -281,11 +285,23 @@ object PipelineQueries {
           .as("dup_tri_bp"))
   }
 
-  /** DuckDB CTE producing per-doc distinct word-3-gram shingle lists —
-    * the exact mirror of Dedup.shingles. */
-  private val shingleBase =
-    """w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd FROM documents),
-      |sh AS (SELECT doc_id,
+  /** A stopword list as the SQL IN-list the text oracles test
+    * membership with; `en` is the English one (p27, p28, t1, t2, t20,
+    * t26). */
+  private def stops(ws: Seq[String]): String = ws.map(w => s"'$w'").mkString(", ")
+  private val en = stops(TextFunctions.enStop)
+
+  /** IL = the il16 fixed-point log2 (LearnedQuality.il16Sql's DuckDB
+    * twin: // for div, 1::BIGINT << for shiftleft) — t20, t26, t28. */
+  private def IL(v: String): String = s"(16*(length(bin($v))-1) + (($v)*16) // " +
+    s"(1::BIGINT << (length(bin($v))-1)) - 16)"
+
+  /** DuckDB CTEs producing per-doc distinct word-3-gram shingle lists
+    * from the word split w(doc_id, wd) — the exact mirror of
+    * Dedup.shingles — then their 8 minhash values and 4×2 band keys
+    * (the d-family and st18). */
+  private[queries] val minhashBandsCte =
+    """sh AS (SELECT doc_id,
       |  list_distinct(CASE WHEN len(wd) >= 3
       |    THEN list_transform(generate_series(1, len(wd)-2), i -> wd[i] || ' ' || wd[i+1] || ' ' || wd[i+2])
       |    ELSE [] END) AS s
@@ -296,13 +312,33 @@ object PipelineQueries {
       |    list_min(list_transform(s, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS g
       |  FROM sh2),
       |bands AS (SELECT doc_id, CAST(b AS VARCHAR) || ':' || g[2*b+1] || g[2*b+2] AS k
-      |  FROM sig, generate_series(0, 3) t(b)),
-      |bandsk AS (SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY k) <= 64)""".stripMargin
+      |  FROM sig, generate_series(0, 3) t(b))""".stripMargin
+
+  private val shingleBase =
+    s"""w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd FROM documents),
+       |$minhashBandsCte,
+       |bandsk AS (SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY k) <= 64)""".stripMargin
 
   private val shingleCte = shingleBase +
     """,
       |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
       |  FROM bandsk a JOIN bandsk c USING (k) WHERE a.doc_id < c.doc_id)""".stripMargin
+
+  /** DuckDB mirror of Dedup.prefixSimJoin's candidate step at Jaccard
+    * 0.8 (d21, d22) over t2(doc_id, tk, n): each set's rarest-first
+    * prefix, then the pairs that share a prefix token and pass the
+    * length filter → pcand(id_a, id_b). */
+  private val prefixCandCtes =
+    """tok AS (SELECT doc_id, n, unnest(tk) AS t FROM t2),
+      |dfq AS (SELECT t, count(*) AS dfreq FROM tok GROUP BY t),
+      |rk AS (SELECT doc_id, n, t,
+      |    row_number() OVER (PARTITION BY doc_id ORDER BY dfreq, t) AS r
+      |  FROM tok JOIN dfq USING (t)),
+      |pref AS (SELECT doc_id, n, t FROM rk
+      |  WHERE r <= n - (8000 * n + 9999) // 10000 + 1),
+      |pcand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM pref a JOIN pref b ON a.t = b.t AND a.doc_id < b.doc_id
+      |  WHERE least(a.n, b.n) * 10000 >= 8000 * greatest(a.n, b.n))""".stripMargin
 
   /** DuckDB CTE: per-vector squared norm in explicit double arithmetic —
     * mirror of VectorFunctions.norm2. */
@@ -313,6 +349,89 @@ object PipelineQueries {
 
   private val dotAB =
     "list_sum(list_transform(generate_series(1, len(a.e)), i -> CAST(a.e[i] AS DOUBLE) * CAST(b.e[i] AS DOUBLE)))"
+
+  /** The hybrid keys' DuckDB mirrors (s16, s17, s24; Spark side
+    * hybridChannels + rrfTop5). vb: s2's 4-bit sign bucket over `v`,
+    * a dimension past the vector's end counting positive (also s23's
+    * LSH row). */
+  private val lshBucketCte =
+    """vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
+      |    CASE WHEN coalesce(e[i+1], 1) >= 0 THEN (1 << i) ELSE 0 END)) AS INT)
+      |    AS bucket FROM v)""".stripMargin
+
+  /** Vector channel: the `q` panel's bucket-mates scored into `sims`,
+    * top 20 per query in vtop(query_id, doc_id, vec_rank). */
+  private def vecTop20Cte(sims: String, q: String): String =
+    s"""$sims AS (SELECT b.vec_id AS query_id, a.vec_id AS doc_id,
+       |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
+       |  FROM vb a JOIN $q b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id),
+       |vtop AS (SELECT query_id, doc_id, vec_rank FROM (
+       |    SELECT query_id, doc_id, CAST(row_number() OVER (
+       |      PARTITION BY query_id ORDER BY sim DESC, doc_id) AS INT) AS vec_rank
+       |    FROM $sims) x WHERE vec_rank <= 20)""".stripMargin
+
+  /** Lexical channel: lexPostings' df-capped terms, each first-copy
+    * panel doc's distinct-term overlap, top 20 per query in
+    * ltop(query_id, doc_id, lex_rank). */
+  private val lexTop20Cte =
+    s"""terms0 AS (SELECT DISTINCT doc_id, t AS term
+       |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd
+       |    FROM documents) a, unnest(wd) u(t)
+       |  WHERE length(t) >= 3),
+       |terms AS (SELECT doc_id, term FROM (
+       |    SELECT doc_id, term, count(*) OVER (PARTITION BY term) AS df
+       |    FROM terms0) x
+       |  WHERE df * 10 <= (SELECT count(*) FROM documents)),
+       |ov AS (SELECT tq.doc_id AS query_id, td.doc_id,
+       |    CAST(count(*) AS BIGINT) AS inter
+       |  FROM terms tq JOIN terms td USING (term)
+       |  WHERE ${firstPanel("tq.doc_id")}
+       |    AND td.doc_id <> tq.doc_id
+       |  GROUP BY 1, 2),
+       |ltop AS (SELECT query_id, doc_id, lex_rank FROM (
+       |    SELECT query_id, doc_id, CAST(row_number() OVER (
+       |      PARTITION BY query_id ORDER BY inter DESC, doc_id) AS INT) AS lex_rank
+       |    FROM ov) x WHERE lex_rank <= 20)""".stripMargin
+
+  /** RRF of vtop and ltop over a full outer join into `name`(query_id,
+    * doc_id, rrf): floor(1e9/(60+rank)) per list, 0 where a list
+    * missed the doc. */
+  private def rrfCte(name: String): String =
+    s"""$name AS (SELECT COALESCE(vt.query_id, lt.query_id) AS query_id,
+       |    COALESCE(vt.doc_id, lt.doc_id) AS doc_id,
+       |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + vt.vec_rank), 0) +
+       |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + lt.lex_rank), 0) AS rrf
+       |  FROM vtop vt FULL OUTER JOIN ltop lt
+       |    ON vt.query_id = lt.query_id AND vt.doc_id = lt.doc_id)""".stripMargin
+
+  /** DuckDB mirror of s3's IVF assignment (s3, s13, s15, s18, s25):
+    * `vecCte`, the fixed codebook c (vec_id < 8), every vector's
+    * centroids ranked by rounded cosine in asg (arn, tie-break
+    * cent_id) and its argmax cell in cells(vec_id, e, n2, cell). */
+  private val ivfCellsCte =
+    s"""$vecCte,
+       |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
+       |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
+       |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
+       |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
+       |  FROM v a CROSS JOIN c),
+       |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
+       |  FROM asg0),
+       |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1)""".stripMargin
+
+  /** The ANN keys' exact probe and result tail (s1–s4, s6, s13, s15):
+    * every (query b, candidate a) pair of the FROM clause `pairs`
+    * scored by rounded cosine, ranked per query by sim desc,
+    * neighbor_id asc → the top-k (query_id, rnk, neighbor_id, sim). */
+  private def probeTopK(pairs: String, k: Int): String =
+    s"""sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
+       |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
+       |  FROM $pairs),
+       |ranked AS (SELECT query_id, neighbor_id, sim,
+       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
+       |  FROM sims)
+       |SELECT query_id, rnk, neighbor_id, sim FROM ranked
+       |WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
 
   /** DuckDB mirror of Similarity.subSplitBlocks over the `v` CTE:
     * appends CTEs ending in vkk(vec_id, e, n2, base, lvl, sub) — the
@@ -339,6 +458,29 @@ object PipelineQueries {
        |vkk AS (SELECT vec_id, e, n2, base, lvl, sub FROM vk
        |  WHERE lvl IS NOT NULL AND bn >= 2)""".stripMargin
 
+  /** Rounded cosine of `vecAlias`(e, n2) against the panel query
+    * q(qe, qn2) — the graph-ANN oracles' scorer (s22, s23, s24). */
+  private def simOf(vecAlias: String): String =
+    s"round(list_sum(list_transform(generate_series(1, len($vecAlias.e)), i -> " +
+    s"CAST($vecAlias.e[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) / " +
+    s"sqrt($vecAlias.n2 * q.qn2), 6)"
+
+  /** One beamWalk hop over the knn `top` edges (s22, s24): frontier
+    * `fin` expanded by its neighbors in n$k, scored against the qq panel
+    * in s$k, best 8 per query in f$k (MATERIALIZED: it feeds both the
+    * next expansion and the union). */
+  private def beamHopCte(k: Int, fin: String): String =
+    s"""n$k AS (SELECT DISTINCT f.query_id, t.id_b AS node
+       |  FROM $fin f JOIN top t ON f.node = t.id_a
+       |  UNION SELECT query_id, node FROM $fin),
+       |s$k AS (SELECT n.query_id, n.node, ${simOf("a")} AS sim
+       |  FROM n$k n JOIN v a ON a.vec_id = n.node
+       |  JOIN qq q ON q.query_id = n.query_id),
+       |f$k AS MATERIALIZED (SELECT query_id, node, sim FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY sim DESC, node) AS rn FROM s$k) x
+       |  WHERE rn <= 8)""".stripMargin
+
   /** DuckDB mirror of knnTopEdges: the s9 sub-split pairing + top-3
     * per vector — shared by the s9 census and s10 PageRank oracles. */
   private lazy val knnTopCte: String =
@@ -356,8 +498,18 @@ object PipelineQueries {
        |      row_number() OVER (PARTITION BY id_a ORDER BY sim DESC, id_b) AS rn
        |    FROM edges) t WHERE rn <= 3)""".stripMargin
 
-  /** One integer-PageRank iteration as a CTE: rank in millionths,
-    * per-edge contribution r // outdeg, damping 85·Σ // 100. */
+  /** The BPE oracles' opening (t21, t22, t27): word counts v over the
+    * whitespace split, each word's character segmentation s0. */
+  private val bpeVocabCtes =
+    s"""WITH RECURSIVE v AS (
+       |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
+       |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
+       |    FROM documents) x
+       |  WHERE length(w) > 0 GROUP BY 1),
+       |s0 AS MATERIALIZED (SELECT w, cnt,
+       |    list_transform(generate_series(1, length(w)), i -> substr(w, i, 1)) AS syms
+       |  FROM v)""".stripMargin
+
   /** Shared BPE oracle prefix (t21 learn / t22 apply): vocab → char
     * segmentation s0 → three merge iterations. Each iteration k yields
     * pair counts p_k, the argmax pair b_k, a recursive greedy
@@ -385,14 +537,7 @@ object PipelineQueries {
        |  FROM s$k)""".stripMargin
 
   private def bpeOracleCtes: String =
-    s"""WITH RECURSIVE v AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-       |    FROM documents) x
-       |  WHERE length(w) > 0 GROUP BY 1),
-       |s0 AS MATERIALIZED (SELECT w, cnt,
-       |    list_transform(generate_series(1, length(w)), i -> substr(w, i, 1)) AS syms
-       |  FROM v),
+    s"""$bpeVocabCtes,
        |${bpeIterCtes(1, "s0")},
        |${bpeIterCtes(2, "s1")},
        |${bpeIterCtes(3, "s2")}""".stripMargin
@@ -458,20 +603,15 @@ object PipelineQueries {
     val iters = (1 to 8)
       .map(k => bpeBatchIterCtes(k, if (k == 1) "s0" else s"s${k - 1}"))
       .mkString(",\n")
-    s"""WITH RECURSIVE v AS (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-       |    FROM documents) x
-       |  WHERE length(w) > 0 GROUP BY 1),
-       |s0 AS MATERIALIZED (SELECT w, cnt,
-       |    list_transform(generate_series(1, length(w)), i -> substr(w, i, 1)) AS syms
-       |  FROM v),
+    s"""$bpeVocabCtes,
        |$iters
        |SELECT round, rnk, left_sym, right_sym, merged, pair_cnt, syms_after
        |FROM (${(1 to 8).map(k => s"SELECT * FROM o$k").mkString(" UNION ALL ")}) u
        |ORDER BY round, rnk""".stripMargin
   }
 
+  /** One integer-PageRank iteration as a CTE: rank in millionths,
+    * per-edge contribution r // outdeg, damping 85·Σ // 100. */
   private def prIterCte(prev: String, cur: String): String =
     s"""$cur AS (SELECT n.id, CAST(150000 + (85 * COALESCE(s.x, 0)) // 100 AS BIGINT) AS r
        |  FROM nodes n LEFT JOIN (
@@ -500,6 +640,46 @@ object PipelineQueries {
        |      ((list_sum(list_transform(vl, v -> v[i])) % n + n) % n)) // n AS BIGINT)) AS c
        |  FROM ${cout}g)""".stripMargin
 
+  /** s12/s27's IVF×PQ oracle: s3's argmax cells, s11's two-iteration
+    * PQ codebooks and codes, then the query batch `vec_id % 50 = rem`
+    * scored by ADC against its own cell's codes → top-3 per query. */
+  private def ivfPqOracle(rem: Int): String =
+    s"""WITH $vecCte,
+       |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
+       |asg0 AS (SELECT a.vec_id, c.cent_id,
+       |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
+       |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
+       |  FROM v a CROSS JOIN c),
+       |cells AS (SELECT vec_id, cent_id AS cell FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
+       |    FROM asg0) t WHERE arn = 1),
+       |p64 AS (SELECT vec_id, list_transform(embedding, x ->
+       |    64 * CAST(greatest(-127.0, least(127.0,
+       |      floor(CAST(x AS DOUBLE) * 127.0 + 0.5))) AS BIGINT)) AS v64
+       |  FROM embeddings),
+       |sr AS (SELECT vec_id, s,
+       |    list_transform(generate_series(1, 8), i -> v64[s * 8 + i]) AS sv
+       |  FROM p64, generate_series(0, 7) t(s)),
+       |c0 AS (SELECT s, vec_id AS cent_id, sv AS c FROM sr WHERE vec_id < 16),
+       |${pqIterCte("c0", "a1", "c1")},
+       |${pqIterCte("c1", "a2", "c2")},
+       |${pqAssignCte("c2", "cod")},
+       |lut AS (SELECT q.vec_id AS query_id, qc.cell AS q_cell, q.s, c.cent_id,
+       |    CAST(list_sum(list_transform(generate_series(1, 8), i ->
+       |      q.sv[i] * c.c[i])) AS BIGINT) AS dot
+       |  FROM (SELECT * FROM sr WHERE vec_id % 50 = $rem) q
+       |  JOIN cells qc ON q.vec_id = qc.vec_id
+       |  JOIN c2 c ON q.s = c.s),
+       |sc AS (SELECT l.query_id, d._vid AS vec_id, CAST(sum(l.dot) AS BIGINT) AS score
+       |  FROM cod d JOIN cells dc ON d._vid = dc.vec_id
+       |  JOIN lut l ON d.s = l.s AND d.cell = l.cent_id AND dc.cell = l.q_cell
+       |  WHERE d._vid <> l.query_id GROUP BY 1, 2)
+       |SELECT query_id, CAST(rn AS INT) AS rnk, vec_id, score FROM (
+       |  SELECT query_id, vec_id, score,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rn
+       |  FROM sc) t
+       |WHERE rn <= 3 ORDER BY query_id, rnk""".stripMargin
+
   /** s6 integer-k-means oracle fragments (mirror of
     * Similarity.trainIvfCodebook at dim=64, scale=64). Assignment of
     * `vsrc` (vec_id, e, n2) to centroid set `csrc` (cent_id, c): two
@@ -524,6 +704,64 @@ object PipelineQueries {
        |    (64*list_sum(list_transform(vl, v -> v[i]))
        |     - ((64*list_sum(list_transform(vl, v -> v[i])) % n + n) % n)) // n
        |  ) AS c FROM ${out}g)""".stripMargin
+
+  /** DuckDB closed form of the aHash-family signature (x17, x20, x22,
+    * d25–d27): the group word from md5('<salt>|' || doc_id // 20)
+    * nibbles, the flip mask (1<<f)-1 on the LOW word → CTE s(doc_id,
+    * sig_lo, sig_hi). Opens the WITH. */
+  private def aHashCte(salt: String): String =
+    s"""WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
+       |    md5('$salt|' || CAST(doc_id // 20 AS VARCHAR)) AS h
+       |  FROM documents),
+       |s0 AS (SELECT doc_id, f,
+       |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
+       |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
+       |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
+       |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
+       |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
+       |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
+       |  FROM p),
+       |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
+       |    hi0 AS sig_hi FROM s0)""".stripMargin
+
+  /** d25–d27's oracle: `aHashCte(salt)` cut into 4×16-bit bands, pairs
+    * sharing a band verified at hamming ≤ 2, then the per-doc verdict
+    * (neighbor count, min-id keeper, is_dup). */
+  private def nearDupOracle(salt: String): String =
+    s"""${aHashCte(salt)},
+       |bd AS (SELECT doc_id, sig_lo, sig_hi, b,
+       |    CASE b WHEN 0 THEN sig_lo % 65536 WHEN 1 THEN sig_lo // 65536
+       |           WHEN 2 THEN sig_hi % 65536 ELSE sig_hi // 65536 END AS v
+       |  FROM s, generate_series(0, 3) t(b)),
+       |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
+       |    a.sig_lo AS lo_a, a.sig_hi AS hi_a, c.sig_lo AS lo_b, c.sig_hi AS hi_b
+       |  FROM bd a JOIN bd c ON a.b = c.b AND a.v = c.v AND a.doc_id < c.doc_id),
+       |vp AS (SELECT id_a, id_b FROM pr
+       |  WHERE bit_count(xor(lo_a, lo_b)) + bit_count(xor(hi_a, hi_b)) <= 2),
+       |ne AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dups,
+       |    min(n_id) AS min_n
+       |  FROM (SELECT id_a AS doc_id, id_b AS n_id FROM vp
+       |    UNION ALL SELECT id_b, id_a FROM vp) u GROUP BY 1)
+       |SELECT d.doc_id, CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups,
+       |  CAST(least(coalesce(min_n, d.doc_id), d.doc_id) AS BIGINT) AS keeper,
+       |  CAST(CASE WHEN coalesce(min_n, d.doc_id) < d.doc_id THEN 1 ELSE 0 END
+       |    AS INT) AS is_dup
+       |FROM documents d LEFT JOIN ne USING (doc_id) ORDER BY doc_id""".stripMargin
+
+  /** d25–d27's builder over one signature codec: synthesize each doc's
+    * payload, decode map-side, pin the valid signatures and band them
+    * through Dedup.hammingNearDup at radius 2. */
+  private def nearDups[T <: Product : TypeTag](synth: Long => Array[Byte],
+      decode: (Long, Array[Byte]) => T)(s: SparkSession, dir: String): DataFrame = {
+    val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
+      (id, _: Long) => synth(id))
+    val sigs = Multimodal.decode(payloads)(decode).toDF()
+      .filter(col("valid"))
+      .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
+      .localCheckpoint()
+    Dedup.hammingNearDup(sigs, "doc_id", "sig_lo", "sig_hi", maxHamming = 2)
+      .orderBy(col("doc_id"))
+  }
 
   def keys: Seq[QueryKey] = Seq(
     // exact dedup over a simulated duplicate ingest (corpus ∪ re-ingested
@@ -760,16 +998,7 @@ object PipelineQueries {
     QueryKey("d21_lsh_recall",
       s"""WITH $shingleCte,
          |t2 AS (SELECT doc_id, s AS tk, CAST(len(s) AS BIGINT) AS n FROM sh2),
-         |tok AS (SELECT doc_id, n, unnest(tk) AS t FROM t2),
-         |dfq AS (SELECT t, count(*) AS dfreq FROM tok GROUP BY t),
-         |rk AS (SELECT doc_id, n, t,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY dfreq, t) AS r
-         |  FROM tok JOIN dfq USING (t)),
-         |pref AS (SELECT doc_id, n, t FROM rk
-         |  WHERE r <= n - (8000 * n + 9999) // 10000 + 1),
-         |pcand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM pref a JOIN pref b ON a.t = b.t AND a.doc_id < b.doc_id
-         |  WHERE least(a.n, b.n) * 10000 >= 8000 * greatest(a.n, b.n)),
+         |$prefixCandCtes,
          |truth AS (SELECT id_a, id_b FROM (
          |    SELECT id_a, id_b,
          |      CAST(len(list_intersect(x.tk, y.tk)) AS BIGINT) AS inter,
@@ -847,16 +1076,7 @@ object PipelineQueries {
          |candS AS MATERIALIZED (SELECT DISTINCT cfg, a.doc_id AS id_a, c.doc_id AS id_b
          |  FROM bandskS a JOIN bandskS c USING (cfg, k) WHERE a.doc_id < c.doc_id),
          |t2 AS MATERIALIZED (SELECT doc_id, s AS tk, CAST(len(s) AS BIGINT) AS n FROM sh2),
-         |tok AS (SELECT doc_id, n, unnest(tk) AS t FROM t2),
-         |dfq AS (SELECT t, count(*) AS dfreq FROM tok GROUP BY t),
-         |rk AS (SELECT doc_id, n, t,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY dfreq, t) AS r
-         |  FROM tok JOIN dfq USING (t)),
-         |pref AS (SELECT doc_id, n, t FROM rk
-         |  WHERE r <= n - (8000 * n + 9999) // 10000 + 1),
-         |pcand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM pref a JOIN pref b ON a.t = b.t AND a.doc_id < b.doc_id
-         |  WHERE least(a.n, b.n) * 10000 >= 8000 * greatest(a.n, b.n)),
+         |$prefixCandCtes,
          |truth AS MATERIALIZED (SELECT id_a, id_b FROM (
          |    SELECT id_a, id_b,
          |      CAST(len(list_intersect(x.tk, y.tk)) AS BIGINT) AS inter,
@@ -1610,19 +1830,7 @@ object PipelineQueries {
       // the LOW word only (f ≤ 3), and mean = 50 + 100·n_hi//64 exactly
       // (3200/64 = 50); the planted +doc_id%3 pixel vanishes in the
       // 4-pixel average floor, so the oracle needs NO pixel simulation
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('ph|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0)
+      s"""${aHashCte("ph")}
         |SELECT doc_id, CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
         |  CAST(50 + (100 * CAST(bit_count(sig_lo) + bit_count(sig_hi) AS BIGINT))
         |    // 64 AS INT) AS mean,
@@ -1644,47 +1852,8 @@ object PipelineQueries {
     // verdict: neighbor count + min-id keeper. Never all-pairs: the
     // only join is band-equality, sig words ride the explode so
     // verification needs no corpus re-join.
-    QueryKey("d25_image_neardup",
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('ph|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0),
-        |bd AS (SELECT doc_id, sig_lo, sig_hi, b,
-        |    CASE b WHEN 0 THEN sig_lo % 65536 WHEN 1 THEN sig_lo // 65536
-        |           WHEN 2 THEN sig_hi % 65536 ELSE sig_hi // 65536 END AS v
-        |  FROM s, generate_series(0, 3) t(b)),
-        |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-        |    a.sig_lo AS lo_a, a.sig_hi AS hi_a, c.sig_lo AS lo_b, c.sig_hi AS hi_b
-        |  FROM bd a JOIN bd c ON a.b = c.b AND a.v = c.v AND a.doc_id < c.doc_id),
-        |vp AS (SELECT id_a, id_b FROM pr
-        |  WHERE bit_count(xor(lo_a, lo_b)) + bit_count(xor(hi_a, hi_b)) <= 2),
-        |ne AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dups,
-        |    min(n_id) AS min_n
-        |  FROM (SELECT id_a AS doc_id, id_b AS n_id FROM vp
-        |    UNION ALL SELECT id_b, id_a FROM vp) u GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups,
-        |  CAST(least(coalesce(min_n, d.doc_id), d.doc_id) AS BIGINT) AS keeper,
-        |  CAST(CASE WHEN coalesce(min_n, d.doc_id) < d.doc_id THEN 1 ELSE 0 END
-        |    AS INT) AS is_dup
-        |FROM documents d LEFT JOIN ne USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
-        (id, _: Long) => Multimodal.synthGray(id))
-      val sigs = Multimodal.decode(payloads)(Multimodal.decodeGrayHash).toDF()
-        .filter(col("valid"))
-        .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
-        .localCheckpoint()
-      Dedup.hammingNearDup(sigs, "doc_id", "sig_lo", "sig_hi", maxHamming = 2)
-        .orderBy(col("doc_id"))
-    },
+    QueryKey("d25_image_neardup", nearDupOracle("ph"))(
+      nearDups(Multimodal.synthGray, Multimodal.decodeGrayHash)),
 
     // perceptual AUDIO near-dup dedup (d25's machinery — the SHARED
     // Dedup.hammingNearDup banding — over x20's energy-contour
@@ -1694,47 +1863,8 @@ object PipelineQueries {
     // variants the bands still surface die in exact bit_count(xor)
     // verification. x7's content hash catches none of these twins —
     // that gap is what this key closes.
-    QueryKey("d26_audio_neardup",
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('af|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0),
-        |bd AS (SELECT doc_id, sig_lo, sig_hi, b,
-        |    CASE b WHEN 0 THEN sig_lo % 65536 WHEN 1 THEN sig_lo // 65536
-        |           WHEN 2 THEN sig_hi % 65536 ELSE sig_hi // 65536 END AS v
-        |  FROM s, generate_series(0, 3) t(b)),
-        |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-        |    a.sig_lo AS lo_a, a.sig_hi AS hi_a, c.sig_lo AS lo_b, c.sig_hi AS hi_b
-        |  FROM bd a JOIN bd c ON a.b = c.b AND a.v = c.v AND a.doc_id < c.doc_id),
-        |vp AS (SELECT id_a, id_b FROM pr
-        |  WHERE bit_count(xor(lo_a, lo_b)) + bit_count(xor(hi_a, hi_b)) <= 2),
-        |ne AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dups,
-        |    min(n_id) AS min_n
-        |  FROM (SELECT id_a AS doc_id, id_b AS n_id FROM vp
-        |    UNION ALL SELECT id_b, id_a FROM vp) u GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups,
-        |  CAST(least(coalesce(min_n, d.doc_id), d.doc_id) AS BIGINT) AS keeper,
-        |  CAST(CASE WHEN coalesce(min_n, d.doc_id) < d.doc_id THEN 1 ELSE 0 END
-        |    AS INT) AS is_dup
-        |FROM documents d LEFT JOIN ne USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
-        (id, _: Long) => Multimodal.synthAudioFpWav(id))
-      val sigs = Multimodal.decode(payloads)(Multimodal.decodeAudioFpWav).toDF()
-        .filter(col("valid"))
-        .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
-        .localCheckpoint()
-      Dedup.hammingNearDup(sigs, "doc_id", "sig_lo", "sig_hi", maxHamming = 2)
-        .orderBy(col("doc_id"))
-    },
+    QueryKey("d26_audio_neardup", nearDupOracle("af"))(
+      nearDups(Multimodal.synthAudioFpWav, Multimodal.decodeAudioFpWav)),
 
     // orientation-NORMALIZED perceptual hash (x21 composed INTO x17 —
     // the gap x21's own row names: a rotated twin hashes differently
@@ -1754,19 +1884,7 @@ object PipelineQueries {
       // upright formula for every tag value (that invariance IS the
       // operator's contract; the oracle checking it needs no rotation
       // simulation). orientation/byte_order are the x21 closed forms.
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('po|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0)
+      s"""${aHashCte("po")}
         |SELECT doc_id, CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
         |  CAST(CASE WHEN doc_id % 5 = 4 THEN 1
         |    ELSE 1 + doc_id % 8 END AS INT) AS orientation,
@@ -1788,47 +1906,8 @@ object PipelineQueries {
     // into singletons by unnormalized aHash — band and pair exactly like
     // d25 once x22's normalization runs first. Same shared
     // Dedup.hammingNearDup (hot-band capped), same verify radius.
-    QueryKey("d27_oriented_neardup",
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('po|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0),
-        |bd AS (SELECT doc_id, sig_lo, sig_hi, b,
-        |    CASE b WHEN 0 THEN sig_lo % 65536 WHEN 1 THEN sig_lo // 65536
-        |           WHEN 2 THEN sig_hi % 65536 ELSE sig_hi // 65536 END AS v
-        |  FROM s, generate_series(0, 3) t(b)),
-        |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-        |    a.sig_lo AS lo_a, a.sig_hi AS hi_a, c.sig_lo AS lo_b, c.sig_hi AS hi_b
-        |  FROM bd a JOIN bd c ON a.b = c.b AND a.v = c.v AND a.doc_id < c.doc_id),
-        |vp AS (SELECT id_a, id_b FROM pr
-        |  WHERE bit_count(xor(lo_a, lo_b)) + bit_count(xor(hi_a, hi_b)) <= 2),
-        |ne AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dups,
-        |    min(n_id) AS min_n
-        |  FROM (SELECT id_a AS doc_id, id_b AS n_id FROM vp
-        |    UNION ALL SELECT id_b, id_a FROM vp) u GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups,
-        |  CAST(least(coalesce(min_n, d.doc_id), d.doc_id) AS BIGINT) AS keeper,
-        |  CAST(CASE WHEN coalesce(min_n, d.doc_id) < d.doc_id THEN 1 ELSE 0 END
-        |    AS INT) AS is_dup
-        |FROM documents d LEFT JOIN ne USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val payloads = Multimodal.synthesize(Tables.documents(s, dir), "doc_id")(
-        (id, _: Long) => Multimodal.synthGrayOriented(id))
-      val sigs = Multimodal.decode(payloads)(Multimodal.decodeOrientedHash).toDF()
-        .filter(col("valid"))
-        .select(col("doc_id"), col("sig_lo"), col("sig_hi"))
-        .localCheckpoint()
-      Dedup.hammingNearDup(sigs, "doc_id", "sig_lo", "sig_hi", maxHamming = 2)
-        .orderBy(col("doc_id"))
-    },
+    QueryKey("d27_oriented_neardup", nearDupOracle("po"))(
+      nearDups(Multimodal.synthGrayOriented, Multimodal.decodeOrientedHash)),
 
     // video SCENE-CUT detection (x8 reads the container's metadata;
     // this reads the CONTENT — the keyframe-extraction op a
@@ -1886,7 +1965,6 @@ object PipelineQueries {
       // quality score, t14's trigram repetition — then the same fixed
       // rule-order fold both engines evaluate identically (pure integer
       // flags; no doubles cross the fold)
-      val en = TextFunctions.enStop.map(w => s"'$w'").mkString(", ")
       s"""WITH $shingleCte,
          |nd AS (SELECT DISTINCT id_b AS doc_id
          |  FROM cand JOIN sh2 x ON id_a = x.doc_id JOIN sh2 y ON id_b = y.doc_id
@@ -2146,7 +2224,6 @@ object PipelineQueries {
       // the identical integer MW recurrence unrolled (negative division
       // truncates toward zero in BOTH engines — the verified invariant);
       // every sum wrapped CAST BIGINT against DuckDB's HUGEINT
-      val en = TextFunctions.enStop.map(w => s"'$w'").mkString(", ")
       def round(i: Int): String =
         s"""t$i AS (SELECT CAST(sum(w * qs) AS BIGINT) AS wq,
            |    CAST(sum(w) AS BIGINT) AS ws FROM r${i - 1}),
@@ -2475,11 +2552,6 @@ object PipelineQueries {
     // is why il16 exists). PipelineSpec plants separable good/bad docs
     // and the model classifies held-out ones correctly.
     QueryKey("t20_learned_quality", {
-      // IL = the il16 fixed-point log2 (LearnedQuality.il16Sql's DuckDB
-      // twin: // for div, 1::BIGINT << for shiftleft)
-      def IL(v: String) = s"(16*(length(bin($v))-1) + (($v)*16) // " +
-        s"(1::BIGINT << (length(bin($v))-1)) - 16)"
-      val en = TextFunctions.enStop.map(w => s"'$w'").mkString(", ")
       s"""WITH scal AS MATERIALIZED (SELECT doc_id,
          |    CAST(len(w) AS BIGINT) AS n_tokens,
          |    CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct,
@@ -2594,9 +2666,6 @@ object PipelineQueries {
     // baseline. All-integer il16 scoring; argmax tie-break is
     // lang-ascending (min of (−score, lang)) — cross-engine exact.
     QueryKey("t26_learned_langid", {
-      def IL(v: String) = s"(16*(length(bin($v))-1) + (($v)*16) // " +
-        s"(1::BIGINT << (length(bin($v))-1)) - 16)"
-      def stops(ws: Seq[String]) = ws.map(w => s"'$w'").mkString(", ")
       s"""WITH aug AS MATERIALIZED (SELECT doc_id,
          |    text || CASE CAST(doc_id % 3 AS INT)
          |      WHEN 0 THEN repeat(' und der die ist',
@@ -2611,7 +2680,7 @@ object PipelineQueries {
          |         WHEN fr > 0 THEN 'fr' ELSE 'und' END AS heur,
          |    doc_id % 5 < 4 AS train
          |  FROM (SELECT doc_id, atext,
-         |      len(list_filter(w, x -> x IN (${stops(TextFunctions.enStop)}))) AS en,
+         |      len(list_filter(w, x -> x IN ($en))) AS en,
          |      len(list_filter(w, x -> x IN (${stops(TextFunctions.deStop)}))) AS de,
          |      len(list_filter(w, x -> x IN (${stops(TextFunctions.frStop)}))) AS fr
          |    FROM (SELECT doc_id, atext,
@@ -2740,8 +2809,6 @@ object PipelineQueries {
     // the pair join is a plain hash shuffle (no broadcast assumption
     // on the model).
     QueryKey("t28_perplexity_lm", {
-      def IL(v: String) = s"(16*(length(bin($v))-1) + (($v)*16) // " +
-        s"(1::BIGINT << (length(bin($v))-1)) - 16)"
       val cyc = " qm0x qm1x qm2x qm3x qm4x qm5x qm6x qm7x"
       val scr = " qm0x qm2x qm4x qm6x qm1x qm3x qm5x qm7x"
       s"""WITH dd AS MATERIALIZED (SELECT doc_id, text,
@@ -3087,12 +3154,12 @@ object PipelineQueries {
     // LSH-pruned first, s2/s5).
     // baseline: exact term-space cosine truth + dense-width dot, like s5
     QueryKey("t17_embed_fidelity",
-      """WITH tt AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf_w FROM (
-        |    SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
+      s"""WITH tt AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf_w FROM (
+        |    SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
         |    FROM documents) x
         |  WHERE length(w) > 0 GROUP BY 1, 2),
         |en2 AS (SELECT doc_id, CAST(sum(tf_w * tf_w) AS BIGINT) AS n2 FROM tt GROUP BY 1),
-        |eq AS (SELECT doc_id AS query_id, w, tf_w AS qtf FROM tt WHERE doc_id % 50 = 0 AND doc_id < 100000000),
+        |eq AS (SELECT doc_id AS query_id, w, tf_w AS qtf FROM tt WHERE ${firstPanel("doc_id")}),
         |edots AS (SELECT eq.query_id, tt.doc_id, CAST(sum(tt.tf_w * eq.qtf) AS BIGINT) AS dot
         |  FROM tt JOIN eq ON tt.w = eq.w AND tt.doc_id <> eq.query_id GROUP BY 1, 2),
         |esim AS (SELECT d.query_id, d.doc_id,
@@ -3115,7 +3182,7 @@ object PipelineQueries {
         |n2 AS (SELECT doc_id, width, CAST(sum(tf * tf) AS BIGINT) AS n2
         |  FROM tf GROUP BY 1, 2),
         |qtf AS (SELECT doc_id AS query_id, width, bucket, tf AS qtf
-        |  FROM tf WHERE doc_id % 50 = 0 AND doc_id < 100000000),
+        |  FROM tf WHERE ${firstPanel("doc_id")}),
         |dots AS (SELECT q.width, q.query_id, tf.doc_id,
         |    CAST(sum(tf.tf * q.qtf) AS BIGINT) AS dot
         |  FROM tf JOIN qtf q ON tf.width = q.width AND tf.bucket = q.bucket
@@ -3137,7 +3204,7 @@ object PipelineQueries {
         |  CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
         |  CAST(coalesce(n_hits, 0) * 100 // 3 AS INT) AS recall_pct
         |FROM (SELECT DISTINCT doc_id AS query_id, width FROM tt, (
-        |    SELECT unnest([16, 256]) AS width) ws WHERE doc_id % 50 = 0 AND doc_id < 100000000) q0
+        |    SELECT unnest([16, 256]) AS width) ws WHERE ${firstPanel("doc_id")}) q0
         |LEFT JOIN hits ON q0.query_id = hits.query_id AND q0.width = hits.width
         |ORDER BY q0.width, q0.query_id""".stripMargin, baseline = true) { (s, dir) =>
       // first-copy query bound (the s16/s17 lever): without the id cap
@@ -3756,14 +3823,7 @@ object PipelineQueries {
     QueryKey("s1_ann_brute",
       s"""WITH $vecCte,
          |q AS (SELECT * FROM v WHERE vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM v a CROSS JOIN q b WHERE a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin, baseline = true) { (s, dir) =>
+         |${probeTopK("v a CROSS JOIN q b WHERE a.vec_id <> b.vec_id", 5)}""".stripMargin, baseline = true) { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(Panel(col("vec_id")))
       Similarity.bruteForceTopK(vecs, q, "vec_id", "embedding", k = 5)
@@ -3775,14 +3835,7 @@ object PipelineQueries {
          |vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
          |    CASE WHEN e[i+1] >= 0 THEN (1 << i) ELSE 0 END)) AS INT) AS bucket FROM v),
          |q AS (SELECT * FROM vb WHERE vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM vb a JOIN q b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${probeTopK("vb a JOIN q b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id", 3)}""".stripMargin) { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(Panel(col("vec_id")))
       Similarity.lshTopK(vecs, q, "vec_id", "embedding", bits = 4, k = 3)
@@ -3803,10 +3856,6 @@ object PipelineQueries {
       // four paradigm CTE families joined on one truth; the graph walk
       // here EXCLUDES self from scoring (each paradigm's scored frame is
       // its cost), unlike s22 where self anchors the beam
-      def simOf(vecAlias: String) =
-        s"round(list_sum(list_transform(generate_series(1, len($vecAlias.e)), i -> " +
-        s"CAST($vecAlias.e[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) / " +
-        s"sqrt($vecAlias.n2 * q.qn2), 6)"
       def hop(k: Int, fin: String) =
         s"""n$k AS (SELECT DISTINCT f.query_id, t.id_b AS node
            |  FROM $fin f JOIN top t ON f.node = t.id_a
@@ -3831,9 +3880,7 @@ object PipelineQueries {
          |bs AS MATERIALIZED (SELECT q.query_id, a.vec_id AS node, ${simOf("a")} AS sim
          |  FROM v a, qq q WHERE a.vec_id <> q.query_id),
          |${top3("bs", "tr")},
-         |vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
-         |    CASE WHEN coalesce(e[i+1], 1) >= 0 THEN (1 << i) ELSE 0 END)) AS INT)
-         |    AS bucket FROM v),
+         |$lshBucketCte,
          |ls AS MATERIALIZED (SELECT q.query_id, a.vec_id AS node, ${simOf("a")} AS sim
          |  FROM vb a JOIN (SELECT vec_id AS query_id, e AS qe, n2 AS qn2, bucket
          |    FROM vb WHERE vec_id % 50 = 0) q USING (bucket)
@@ -3944,21 +3991,8 @@ object PipelineQueries {
       // unrolled 3-hop beam walk over the knn `top` edges; per-hop stages
       // MATERIALIZED (each frontier feeds both the neighbor join and the
       // union — the CTE-inlining lesson)
-      def simOf(vecAlias: String) =
-        s"round(list_sum(list_transform(generate_series(1, len($vecAlias.e)), i -> " +
-        s"CAST($vecAlias.e[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) / " +
-        s"sqrt($vecAlias.n2 * q.qn2), 6)"
       def hop(k: Int, fin: String) =
-        s"""n$k AS (SELECT DISTINCT f.query_id, t.id_b AS node
-           |  FROM $fin f JOIN top t ON f.node = t.id_a
-           |  UNION SELECT query_id, node FROM $fin),
-           |s$k AS (SELECT n.query_id, n.node, ${simOf("a")} AS sim
-           |  FROM n$k n JOIN v a ON a.vec_id = n.node
-           |  JOIN qq q ON q.query_id = n.query_id),
-           |f$k AS MATERIALIZED (SELECT query_id, node, sim FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, node) AS rn FROM s$k) x
-           |  WHERE rn <= 8),
+        s"""${beamHopCte(k, fin)},
            |r$k AS (SELECT query_id, node FROM (
            |    SELECT query_id, node, row_number() OVER (PARTITION BY query_id
            |      ORDER BY sim DESC, node) AS rn
@@ -4027,68 +4061,23 @@ object PipelineQueries {
       // the REBUILD-from-scratch twin: the oracle re-derives the posting
       // lists and the kNN graph the long way (s16 + s22 pipelines) — a
       // stale or corrupted persisted artifact breaks the hash
-      def simOf(vecAlias: String) =
-        s"round(list_sum(list_transform(generate_series(1, len($vecAlias.e)), i -> " +
-        s"CAST($vecAlias.e[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) / " +
-        s"sqrt($vecAlias.n2 * q.qn2), 6)"
-      def hop(k: Int, fin: String) =
-        s"""n$k AS (SELECT DISTINCT f.query_id, t.id_b AS node
-           |  FROM $fin f JOIN top t ON f.node = t.id_a
-           |  UNION SELECT query_id, node FROM $fin),
-           |s$k AS (SELECT n.query_id, n.node, ${simOf("a")} AS sim
-           |  FROM n$k n JOIN v a ON a.vec_id = n.node
-           |  JOIN qq q ON q.query_id = n.query_id),
-           |f$k AS MATERIALIZED (SELECT query_id, node, sim FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY sim DESC, node) AS rn FROM s$k) x
-           |  WHERE rn <= 8)""".stripMargin
       s"""WITH $knnTopCte,
          |qq AS MATERIALIZED (SELECT vec_id AS query_id, e AS qe, n2 AS qn2
-         |  FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000000),
+         |  FROM v WHERE ${firstPanel("vec_id")}),
          |ent AS (SELECT DISTINCT id_a AS node FROM top WHERE id_a < 8),
          |f0 AS MATERIALIZED (SELECT query_id, node FROM qq, ent),
-         |${hop(1, "f0")},
-         |${hop(2, "f1")},
-         |${hop(3, "f2")},
+         |${beamHopCte(1, "f0")},
+         |${beamHopCte(2, "f1")},
+         |${beamHopCte(3, "f2")},
          |gface AS (SELECT query_id, CAST(rn AS INT) AS rnk, node AS ref_id FROM (
          |    SELECT query_id, node, row_number() OVER (PARTITION BY query_id
          |      ORDER BY sim DESC, node) AS rn
          |    FROM f3 WHERE node <> query_id) x WHERE rn <= 3),
-         |vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
-         |    CASE WHEN coalesce(e[i+1], 1) >= 0 THEN (1 << i) ELSE 0 END)) AS INT)
-         |    AS bucket FROM v),
-         |qv AS (SELECT * FROM vb WHERE vec_id % 50 = 0 AND vec_id < 100000000),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS doc_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM vb a JOIN qv b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id),
-         |vtop AS (SELECT query_id, doc_id, vec_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY sim DESC, doc_id) AS INT) AS vec_rank
-         |    FROM sims) x WHERE vec_rank <= 20),
-         |terms0 AS (SELECT DISTINCT doc_id, t AS term
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd
-         |    FROM documents) a, unnest(wd) u(t)
-         |  WHERE length(t) >= 3),
-         |terms AS (SELECT doc_id, term FROM (
-         |    SELECT doc_id, term, count(*) OVER (PARTITION BY term) AS df
-         |    FROM terms0) x
-         |  WHERE df * 10 <= (SELECT count(*) FROM documents)),
-         |ov AS (SELECT tq.doc_id AS query_id, td.doc_id,
-         |    CAST(count(*) AS BIGINT) AS inter
-         |  FROM terms tq JOIN terms td USING (term)
-         |  WHERE tq.doc_id % 50 = 0 AND tq.doc_id < 100000000
-         |    AND td.doc_id <> tq.doc_id
-         |  GROUP BY 1, 2),
-         |ltop AS (SELECT query_id, doc_id, lex_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY inter DESC, doc_id) AS INT) AS lex_rank
-         |    FROM ov) x WHERE lex_rank <= 20),
-         |fused AS (SELECT COALESCE(vt.query_id, lt.query_id) AS query_id,
-         |    COALESCE(vt.doc_id, lt.doc_id) AS doc_id,
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + vt.vec_rank), 0) +
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + lt.lex_rank), 0) AS rrf
-         |  FROM vtop vt FULL OUTER JOIN ltop lt
-         |    ON vt.query_id = lt.query_id AND vt.doc_id = lt.doc_id),
+         |$lshBucketCte,
+         |qv AS (SELECT * FROM vb WHERE ${firstPanel("vec_id")}),
+         |${vecTop20Cte("sims", "qv")},
+         |$lexTop20Cte,
+         |${rrfCte("fused")},
          |hface AS (SELECT query_id, rnk, doc_id AS ref_id FROM (
          |  SELECT query_id, doc_id, CAST(row_number() OVER (
          |    PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS INT) AS rnk
@@ -4161,24 +4150,9 @@ object PipelineQueries {
     },
 
     QueryKey("s3_ann_ivf",
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |  FROM asg0),
-         |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1),
+      s"""WITH $ivfCellsCte,
          |q AS (SELECT * FROM cells WHERE vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${probeTopK("cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id", 3)}""".stripMargin) { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(Panel(col("vec_id")))
       val cents = vecs.filter(col("vec_id") < 8)
@@ -4197,14 +4171,7 @@ object PipelineQueries {
          |  FROM embeddings),
          |v AS (SELECT vec_id, e, list_sum(list_transform(e, x -> x*x)) AS n2 FROM vq),
          |q AS (SELECT * FROM v WHERE vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM v a CROSS JOIN q b WHERE a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin, baseline = true) { (s, dir) =>
+         |${probeTopK("v a CROSS JOIN q b WHERE a.vec_id <> b.vec_id", 5)}""".stripMargin, baseline = true) { (s, dir) =>
       val quant = expr("transform(embedding, x -> " +
         "cast(greatest(-127.0D, least(127.0D, floor(cast(x as double) * 127.0D + 0.5D))) as float))")
       val vecs = Tables.embeddings(s, dir).withColumn("embedding", quant)
@@ -4285,14 +4252,7 @@ object PipelineQueries {
          |${s6Update("asg2", "c2")},
          |${s6Assign("vn", "c2", "cells")},
          |q AS (SELECT * FROM cells WHERE vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${probeTopK("cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id", 3)}""".stripMargin) { (s, dir) =>
       val quant = expr("transform(embedding, x -> " +
         "cast(greatest(-127.0D, least(127.0D, floor(cast(x as double) * 127.0D + 0.5D))) as float))")
       val vecs = Tables.embeddings(s, dir).withColumn("embedding", quant)
@@ -4359,25 +4319,10 @@ object PipelineQueries {
     // population only (SimilaritySpec proves recall(2-probe) ≥
     // recall(1-probe) against brute-force truth on the fixture).
     QueryKey("s13_ann_multiprobe",
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |  FROM asg0),
-         |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1),
+      s"""WITH $ivfCellsCte,
          |qcells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg
          |  WHERE arn <= 2 AND vec_id % 50 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM cells a JOIN qcells b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${probeTopK("cells a JOIN qcells b ON a.cell = b.cell AND a.vec_id <> b.vec_id", 3)}""".stripMargin) { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val q = vecs.filter(Panel(col("vec_id")))
       val cents = vecs.filter(col("vec_id") < 8)
@@ -4451,17 +4396,9 @@ object PipelineQueries {
     // r7 self-assessment gap: the recall knob now has a measured curve,
     // not a fixed setting.
     QueryKey("s18_probe_sweep",
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |  FROM asg0),
-         |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1),
+      s"""WITH $ivfCellsCte,
          |qc AS (SELECT vec_id, e, n2, cent_id AS cell, arn FROM asg
-         |  WHERE arn <= 4 AND vec_id % 50 = 0 AND vec_id < 100000000),
+         |  WHERE arn <= 4 AND ${firstPanel("vec_id")}),
          |probes AS (SELECT unnest([1, 2, 4]) AS nprobe),
          |cand AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
          |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim, b.arn
@@ -4474,7 +4411,7 @@ object PipelineQueries {
          |    FROM lv) t WHERE rnk <= 3),
          |tsims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
          |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM v a CROSS JOIN (SELECT * FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000000) b
+         |  FROM v a CROSS JOIN (SELECT * FROM v WHERE ${firstPanel("vec_id")}) b
          |  WHERE a.vec_id <> b.vec_id),
          |truth AS (SELECT query_id, neighbor_id FROM (
          |    SELECT query_id, neighbor_id,
@@ -4487,7 +4424,7 @@ object PipelineQueries {
          |SELECT CAST(p.nprobe AS INT) AS nprobe, q0.vec_id AS query_id,
          |  CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
          |  CAST(coalesce(n_hits, 0) * 100 // 3 AS INT) AS recall_pct
-         |FROM (SELECT vec_id FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000000) q0
+         |FROM (SELECT vec_id FROM v WHERE ${firstPanel("vec_id")}) q0
          |CROSS JOIN probes p
          |LEFT JOIN hits ON hits.nprobe = p.nprobe AND hits.query_id = q0.vec_id
          |ORDER BY nprobe, query_id""".stripMargin) { (s, dir) =>
@@ -4520,7 +4457,7 @@ object PipelineQueries {
       // folds — the same left-to-right double accumulation the Spark
       // CosineSim loop runs on the sliced arrays
       s"""WITH $vecCte,
-         |q AS (SELECT * FROM v WHERE vec_id % 50 = 0 AND vec_id < 100000000),
+         |q AS (SELECT * FROM v WHERE ${firstPanel("vec_id")}),
          |widths AS (SELECT unnest([4, 8, 16, 32, 64]) AS width),
          |sims AS (SELECT b.vec_id AS query_id, a.vec_id, w.width,
          |    round(list_sum(list_transform(generate_series(1, w.width), i ->
@@ -4650,41 +4587,11 @@ object PipelineQueries {
     // re-derivation tradeoff). Fusion join carries ≤ 2×queries×20 rows.
     QueryKey("s16_hybrid_rrf",
       s"""WITH $vecCte,
-         |vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
-         |    CASE WHEN coalesce(e[i+1], 1) >= 0 THEN (1 << i) ELSE 0 END)) AS INT)
-         |    AS bucket FROM v),
-         |q AS (SELECT * FROM vb WHERE vec_id % 50 = 0 AND vec_id < 100000000),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS doc_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM vb a JOIN q b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id),
-         |vtop AS (SELECT query_id, doc_id, vec_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY sim DESC, doc_id) AS INT) AS vec_rank
-         |    FROM sims) x WHERE vec_rank <= 20),
-         |terms0 AS (SELECT DISTINCT doc_id, t AS term
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd
-         |    FROM documents) a, unnest(wd) u(t)
-         |  WHERE length(t) >= 3),
-         |terms AS (SELECT doc_id, term FROM (
-         |    SELECT doc_id, term, count(*) OVER (PARTITION BY term) AS df
-         |    FROM terms0) x
-         |  WHERE df * 10 <= (SELECT count(*) FROM documents)),
-         |ov AS (SELECT tq.doc_id AS query_id, td.doc_id,
-         |    CAST(count(*) AS BIGINT) AS inter
-         |  FROM terms tq JOIN terms td USING (term)
-         |  WHERE tq.doc_id % 50 = 0 AND tq.doc_id < 100000000
-         |    AND td.doc_id <> tq.doc_id
-         |  GROUP BY 1, 2),
-         |ltop AS (SELECT query_id, doc_id, lex_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY inter DESC, doc_id) AS INT) AS lex_rank
-         |    FROM ov) x WHERE lex_rank <= 20),
-         |fused AS (SELECT COALESCE(vt.query_id, lt.query_id) AS query_id,
-         |    COALESCE(vt.doc_id, lt.doc_id) AS doc_id,
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + vt.vec_rank), 0) +
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + lt.lex_rank), 0) AS rrf
-         |  FROM vtop vt FULL OUTER JOIN ltop lt
-         |    ON vt.query_id = lt.query_id AND vt.doc_id = lt.doc_id)
+         |$lshBucketCte,
+         |q AS (SELECT * FROM vb WHERE ${firstPanel("vec_id")}),
+         |${vecTop20Cte("sims", "q")},
+         |$lexTop20Cte,
+         |${rrfCte("fused")}
          |SELECT query_id, rnk, doc_id, rrf FROM (
          |  SELECT query_id, doc_id, rrf, CAST(row_number() OVER (
          |    PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS INT) AS rnk
@@ -4707,10 +4614,8 @@ object PipelineQueries {
     // baseline: brute ground truth, like s5
     QueryKey("s17_hybrid_recall",
       s"""WITH $vecCte,
-         |vb AS (SELECT *, CAST(list_sum(list_transform(generate_series(0, 3), i ->
-         |    CASE WHEN coalesce(e[i+1], 1) >= 0 THEN (1 << i) ELSE 0 END)) AS INT)
-         |    AS bucket FROM v),
-         |q AS (SELECT * FROM vb WHERE vec_id % 50 = 0 AND vec_id < 100000000),
+         |$lshBucketCte,
+         |q AS (SELECT * FROM vb WHERE ${firstPanel("vec_id")}),
          |tsims AS (SELECT b.vec_id AS query_id, a.vec_id AS doc_id,
          |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
          |  FROM v a CROSS JOIN q b WHERE a.vec_id <> b.vec_id),
@@ -4720,39 +4625,11 @@ object PipelineQueries {
          |    FROM tsims) x WHERE r <= 5),
          |nq AS (SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries
          |  FROM truth),
-         |lsims AS (SELECT b.vec_id AS query_id, a.vec_id AS doc_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM vb a JOIN q b ON a.bucket = b.bucket WHERE a.vec_id <> b.vec_id),
-         |vtop AS (SELECT query_id, doc_id, vec_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY sim DESC, doc_id) AS INT) AS vec_rank
-         |    FROM lsims) x WHERE vec_rank <= 20),
+         |${vecTop20Cte("lsims", "q")},
          |vec5 AS (SELECT query_id, doc_id FROM vtop WHERE vec_rank <= 5),
-         |terms0 AS (SELECT DISTINCT doc_id, t AS term
-         |  FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd
-         |    FROM documents) a, unnest(wd) u(t)
-         |  WHERE length(t) >= 3),
-         |terms AS (SELECT doc_id, term FROM (
-         |    SELECT doc_id, term, count(*) OVER (PARTITION BY term) AS df
-         |    FROM terms0) x
-         |  WHERE df * 10 <= (SELECT count(*) FROM documents)),
-         |ov AS (SELECT tq.doc_id AS query_id, td.doc_id,
-         |    CAST(count(*) AS BIGINT) AS inter
-         |  FROM terms tq JOIN terms td USING (term)
-         |  WHERE tq.doc_id % 50 = 0 AND tq.doc_id < 100000000
-         |    AND td.doc_id <> tq.doc_id
-         |  GROUP BY 1, 2),
-         |ltop AS (SELECT query_id, doc_id, lex_rank FROM (
-         |    SELECT query_id, doc_id, CAST(row_number() OVER (
-         |      PARTITION BY query_id ORDER BY inter DESC, doc_id) AS INT) AS lex_rank
-         |    FROM ov) x WHERE lex_rank <= 20),
+         |$lexTop20Cte,
          |lex5 AS (SELECT query_id, doc_id FROM ltop WHERE lex_rank <= 5),
-         |fus AS (SELECT COALESCE(vt.query_id, lt.query_id) AS query_id,
-         |    COALESCE(vt.doc_id, lt.doc_id) AS doc_id,
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + vt.vec_rank), 0) +
-         |    COALESCE(CAST(1000000000 AS BIGINT) // (60 + lt.lex_rank), 0) AS rrf
-         |  FROM vtop vt FULL OUTER JOIN ltop lt
-         |    ON vt.query_id = lt.query_id AND vt.doc_id = lt.doc_id),
+         |${rrfCte("fus")},
          |fused5 AS (SELECT query_id, doc_id FROM (
          |    SELECT query_id, doc_id, row_number() OVER (
          |      PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS rnk
@@ -4970,24 +4847,9 @@ object PipelineQueries {
     },
 
     QueryKey("s15_ann_index_append",
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |  FROM asg0),
-         |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1),
+      s"""WITH $ivfCellsCte,
          |q AS (SELECT * FROM cells WHERE vec_id % 10 = 0),
-         |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    round($dotAB / sqrt(a.n2 * b.n2), 6) AS sim
-         |  FROM cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-         |ranked AS (SELECT query_id, neighbor_id, sim,
-         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
-         |  FROM sims)
-         |SELECT query_id, rnk, neighbor_id, sim FROM ranked
-         |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+         |${probeTopK("cells a JOIN q b ON a.cell = b.cell AND a.vec_id <> b.vec_id", 3)}""".stripMargin) { (s, dir) =>
       val (index, delta) = ivfIndexDelta(s, dir)
       Similarity.searchAssigned(index.unionByName(delta), delta,
           "vec_id", "embedding", k = 3)
@@ -5011,15 +4873,7 @@ object PipelineQueries {
       // the oracle computes the post-delete search ONCE and emits both
       // faces from it — the masked and rebuilt plans must agree with it
       // row-for-row or the compare breaks
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, a.e, a.n2, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |asg AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |  FROM asg0),
-         |cells AS (SELECT vec_id, e, n2, cent_id AS cell FROM asg WHERE arn = 1),
+      s"""WITH $ivfCellsCte,
          |live AS (SELECT * FROM cells WHERE vec_id % 20 <> 7),
          |q AS (SELECT * FROM cells WHERE vec_id % 50 = 0),
          |sims AS (SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
@@ -5064,41 +4918,7 @@ object PipelineQueries {
     // Lloyd iterations (s11's) — both halves identical to their
     // standalone keys; the composition is the only new moving part.
     QueryKey("s12_ann_ivfpq",
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |cells AS (SELECT vec_id, cent_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |    FROM asg0) t WHERE arn = 1),
-         |p64 AS (SELECT vec_id, list_transform(embedding, x ->
-         |    64 * CAST(greatest(-127.0, least(127.0,
-         |      floor(CAST(x AS DOUBLE) * 127.0 + 0.5))) AS BIGINT)) AS v64
-         |  FROM embeddings),
-         |sr AS (SELECT vec_id, s,
-         |    list_transform(generate_series(1, 8), i -> v64[s * 8 + i]) AS sv
-         |  FROM p64, generate_series(0, 7) t(s)),
-         |c0 AS (SELECT s, vec_id AS cent_id, sv AS c FROM sr WHERE vec_id < 16),
-         |${pqIterCte("c0", "a1", "c1")},
-         |${pqIterCte("c1", "a2", "c2")},
-         |${pqAssignCte("c2", "cod")},
-         |lut AS (SELECT q.vec_id AS query_id, qc.cell AS q_cell, q.s, c.cent_id,
-         |    CAST(list_sum(list_transform(generate_series(1, 8), i ->
-         |      q.sv[i] * c.c[i])) AS BIGINT) AS dot
-         |  FROM (SELECT * FROM sr WHERE vec_id % 50 = 0) q
-         |  JOIN cells qc ON q.vec_id = qc.vec_id
-         |  JOIN c2 c ON q.s = c.s),
-         |sc AS (SELECT l.query_id, d._vid AS vec_id, CAST(sum(l.dot) AS BIGINT) AS score
-         |  FROM cod d JOIN cells dc ON d._vid = dc.vec_id
-         |  JOIN lut l ON d.s = l.s AND d.cell = l.cent_id AND dc.cell = l.q_cell
-         |  WHERE d._vid <> l.query_id GROUP BY 1, 2)
-         |SELECT query_id, CAST(rn AS INT) AS rnk, vec_id, score FROM (
-         |  SELECT query_id, vec_id, score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rn
-         |  FROM sc) t
-         |WHERE rn <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+      ivfPqOracle(0)) { (s, dir) =>
       val vecs = Tables.embeddings(s, dir)
       val cents = vecs.filter(col("vec_id") < 8)
       Similarity.ivfPqTopK(vecs, "vec_id", "embedding", cents,
@@ -5128,41 +4948,7 @@ object PipelineQueries {
       // s12's closed form verbatim with the FRESH query batch (% 50 =
       // 25): the oracle re-derives the persisted index end-to-end, so a
       // stale or wrongly-trained artifact breaks the hash
-      s"""WITH $vecCte,
-         |c AS (SELECT vec_id AS cent_id, e AS c_vec, n2 AS c_n2 FROM v WHERE vec_id < 8),
-         |asg0 AS (SELECT a.vec_id, c.cent_id,
-         |    round(list_sum(list_transform(generate_series(1, len(a.e)), i ->
-         |      CAST(a.e[i] AS DOUBLE) * CAST(c.c_vec[i] AS DOUBLE))) / sqrt(a.n2 * c.c_n2), 6) AS csim
-         |  FROM v a CROSS JOIN c),
-         |cells AS (SELECT vec_id, cent_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS arn
-         |    FROM asg0) t WHERE arn = 1),
-         |p64 AS (SELECT vec_id, list_transform(embedding, x ->
-         |    64 * CAST(greatest(-127.0, least(127.0,
-         |      floor(CAST(x AS DOUBLE) * 127.0 + 0.5))) AS BIGINT)) AS v64
-         |  FROM embeddings),
-         |sr AS (SELECT vec_id, s,
-         |    list_transform(generate_series(1, 8), i -> v64[s * 8 + i]) AS sv
-         |  FROM p64, generate_series(0, 7) t(s)),
-         |c0 AS (SELECT s, vec_id AS cent_id, sv AS c FROM sr WHERE vec_id < 16),
-         |${pqIterCte("c0", "a1", "c1")},
-         |${pqIterCte("c1", "a2", "c2")},
-         |${pqAssignCte("c2", "cod")},
-         |lut AS (SELECT q.vec_id AS query_id, qc.cell AS q_cell, q.s, c.cent_id,
-         |    CAST(list_sum(list_transform(generate_series(1, 8), i ->
-         |      q.sv[i] * c.c[i])) AS BIGINT) AS dot
-         |  FROM (SELECT * FROM sr WHERE vec_id % 50 = 25) q
-         |  JOIN cells qc ON q.vec_id = qc.vec_id
-         |  JOIN c2 c ON q.s = c.s),
-         |sc AS (SELECT l.query_id, d._vid AS vec_id, CAST(sum(l.dot) AS BIGINT) AS score
-         |  FROM cod d JOIN cells dc ON d._vid = dc.vec_id
-         |  JOIN lut l ON d.s = l.s AND d.cell = l.cent_id AND dc.cell = l.q_cell
-         |  WHERE d._vid <> l.query_id GROUP BY 1, 2)
-         |SELECT query_id, CAST(rn AS INT) AS rnk, vec_id, score FROM (
-         |  SELECT query_id, vec_id, score,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rn
-         |  FROM sc) t
-         |WHERE rn <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+      ivfPqOracle(25)) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"ivfpq_index|$dir") { path =>
         val vecs = Tables.embeddings(s, dir)
@@ -5215,9 +5001,8 @@ object PipelineQueries {
     },
 
     QueryKey("t1_langid", {
-      val en = TextFunctions.enStop.map(w => s"'$w'").mkString(", ")
-      val de = TextFunctions.deStop.map(w => s"'$w'").mkString(", ")
-      val fr = TextFunctions.frStop.map(w => s"'$w'").mkString(", ")
+      val de = stops(TextFunctions.deStop)
+      val fr = stops(TextFunctions.frStop)
       s"""SELECT doc_id, en_hits, de_hits, fr_hits,
          |  CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits > 0 THEN 'en'
          |       WHEN de_hits >= fr_hits AND de_hits > 0 THEN 'de'
@@ -5241,7 +5026,6 @@ object PipelineQueries {
     },
 
     QueryKey("t2_quality", {
-      val en = TextFunctions.enStop.map(w => s"'$w'").mkString(", ")
       s"""SELECT doc_id, n_tokens, n_distinct, stop_hits,
          |  CAST(floor(CAST(n_distinct AS DOUBLE) / n_tokens * 50.0 +
          |             CAST(stop_hits AS DOUBLE) / n_tokens * 20.0 +
@@ -5478,19 +5262,7 @@ object PipelineQueries {
       // 3000·n_set); the planted per-frame rotation never reaches the
       // oracle — L1 energy is permutation-invariant, so no sample
       // simulation needed
-      """WITH p AS (SELECT doc_id, CAST(doc_id % 4 AS INT) AS f,
-        |    md5('af|' || CAST(doc_id // 20 AS VARCHAR)) AS h
-        |  FROM documents),
-        |s0 AS (SELECT doc_id, f,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 1 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS hi0,
-        |    CAST(list_sum(list_transform(generate_series(0, 7), k ->
-        |      CAST(strpos('0123456789abcdef', substring(h, 9 + k, 1)) - 1 AS BIGINT)
-        |        * (1::BIGINT << (4 * (7 - k))))) AS BIGINT) AS lo0
-        |  FROM p),
-        |s AS (SELECT doc_id, xor(lo0, (1::BIGINT << f) - 1) AS sig_lo,
-        |    hi0 AS sig_hi FROM s0)
+      s"""${aHashCte("af")}
         |SELECT doc_id, CAST(8000 AS INT) AS sample_rate,
         |  CAST(64 AS INT) AS n_frames,
         |  CAST(1500 + (3000 * CAST(bit_count(sig_lo) + bit_count(sig_hi) AS BIGINT))

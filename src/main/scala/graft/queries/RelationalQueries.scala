@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.{DerivedLayouts, Tables}
+import FeedSql._
 
 /** Core relational coverage (SURVEY §2, q*).
   *
@@ -15,6 +16,33 @@ object RelationalQueries {
 
   /** round(x*100) as long — exact cents. */
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
+
+  /** DuckDB mirror of md5('jcs|' || key) bucketed by its nibbles 1–3
+    * into SketchPlanner.census's width-4096 counts (q50, q56) →
+    * `name`(b4096, n) over `from`. */
+  private def censusCte(name: String, key: String, from: String): String = {
+    def nib(i: Int) =
+      s"(strpos('0123456789abcdef', substr(md5('jcs|' || CAST($key AS VARCHAR)), $i, 1)) - 1)"
+    s"""$name AS MATERIALIZED (SELECT
+       |    CAST(${nib(1)} * 256 + ${nib(2)} * 16
+       |      + ${nib(3)} AS INT) AS b4096,
+       |    CAST(count(*) AS BIGINT) AS n
+       |  FROM $from GROUP BY 1)""".stripMargin
+  }
+
+  /** TPC-H Q3 analog's oracle: q3 (DataFrame API) and q23 (SQL API)
+    * compute the same answer. */
+  private val q3Oracle =
+    """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
+      |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
+      |FROM lineitem, orders, customer
+      |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
+      |  AND c_mktsegment = 'BUILDING'
+      |  AND o_orderdate < TIMESTAMP '1998-01-01'
+      |  AND l_shipdate > TIMESTAMP '1998-01-01'
+      |GROUP BY l_orderkey, o_orderdate
+      |ORDER BY revenue DESC, l_orderkey
+      |LIMIT 10""".stripMargin
 
   def keys: Seq[QueryKey] = Seq(
     QueryKey("q1_pricing_summary",
@@ -64,16 +92,7 @@ object RelationalQueries {
 
     // TPC-H Q3 analog: fact-fact shuffle join + broadcast dim + top-k.
     QueryKey("q3_join_agg",
-      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
-        |FROM lineitem, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin) { (s, dir) =>
+      q3Oracle) { (s, dir) =>
       import s.implicits._
       val cust = Tables.customer(s, dir).filter($"c_mktsegment" === "BUILDING")
       val ord  = Tables.orders(s, dir).filter($"o_orderdate" < lit("1998-01-01").cast("timestamp"))
@@ -407,16 +426,7 @@ object RelationalQueries {
     // SQL over registered temp views (the engine is equally driveable
     // from spark.sql).
     QueryKey("q23_sql_api",
-      """SELECT l_orderkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS revenue
-        |FROM lineitem, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin) { (s, dir) =>
+      q3Oracle) { (s, dir) =>
       Tables.lineitem(s, dir).createOrReplaceTempView("v_lineitem")
       Tables.orders(s, dir).createOrReplaceTempView("v_orders")
       Tables.customer(s, dir).createOrReplaceTempView("v_customer")
@@ -1341,19 +1351,8 @@ object RelationalQueries {
     // over the key-level join (key-grain aggregates, never the join
     // output itself). err_bp truncates; exact=0 guarded (m39 class).
     QueryKey("q50_join_cardinality", {
-      def nib(h: String, i: Int) =
-        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
-      s"""WITH lc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
-         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM lineitem GROUP BY 1),
-         |oc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
-         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM orders GROUP BY 1),
+      s"""WITH ${censusCte("lc", "l_orderkey", "lineitem")},
+         |${censusCte("oc", "o_orderkey", "orders")},
          |lc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
          |    CAST(sum(n) AS BIGINT) AS n FROM lc GROUP BY 1),
          |oc2 AS (SELECT CAST(b4096 // 16 AS INT) AS b256,
@@ -1434,19 +1433,8 @@ object RelationalQueries {
     QueryKey("q56_sketch_join_strategy", {
       // the oracle recomputes the census inner product and derives the
       // strategy with the SAME thresholds — label and estimate both hash
-      def nib(h: String, i: Int) =
-        s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)"
-      def h(k: String) = s"md5('jcs|' || CAST($k AS VARCHAR))"
-      s"""WITH lc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("l_orderkey"), 1)} * 256 + ${nib(h("l_orderkey"), 2)} * 16
-         |      + ${nib(h("l_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM lineitem GROUP BY 1),
-         |oc AS MATERIALIZED (SELECT
-         |    CAST(${nib(h("o_orderkey"), 1)} * 256 + ${nib(h("o_orderkey"), 2)} * 16
-         |      + ${nib(h("o_orderkey"), 3)} AS INT) AS b4096,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1),
+      s"""WITH ${censusCte("lc", "l_orderkey", "lineitem")},
+         |${censusCte("oc", "o_orderkey", "orders WHERE o_orderpriority = '1-URGENT'")},
          |e AS (SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS est
          |  FROM lc a JOIN oc b USING (b4096)),
          |j AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -1484,15 +1472,11 @@ object RelationalQueries {
     // no side-channel files. dir unused by design: the source IS the
     // table.
     QueryKey("q51_pushdown_source",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(sum(id) AS BIGINT) AS sum_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 200000) t(id)
+        |  ${feedRows(0, 200000)}
         |  WHERE id >= 150000) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -1514,16 +1498,12 @@ object RelationalQueries {
     // span, pushed-agg telemetry + description gate). Filters compose:
     // the id range folds first, the aggregation runs on the pruned span.
     QueryKey("q58_agg_pushdown",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(value) AS BIGINT) AS min_value,
         |  CAST(max(value) AS BIGINT) AS max_value
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)
+        |  ${feedRows(0, 300000)}
         |  WHERE id < 240000) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -1551,9 +1531,9 @@ object RelationalQueries {
     // of the same predicate (it arrives unpushed there).
     QueryKey("q87_v2_predicates",
       // the pushed stride + range: ids ≡ 1 (mod 3) within [15000, 60000)
-      """SELECT 'node' || CAST(id % 50 AS VARCHAR) AS node,
+      s"""SELECT 'node' || CAST(id % 50 AS VARCHAR) AS node,
         |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+        |  CAST(sum($feedValue) AS BIGINT) AS sum_value,
         |  CAST(min(id) AS BIGINT) AS min_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM range(15000, 60000) t(id) WHERE id % 3 = 1
@@ -1589,13 +1569,13 @@ object RelationalQueries {
     QueryKey("q88_offset_sample",
       // leg 1: sample [0, 0.3) of the feed = the range slice [0, 30000);
       // leg 2: offset 30000 + limit 9000 = [30000, 39000)
-      """SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+      s"""SELECT 1 AS leg, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum($feedValue) AS BIGINT) AS sum_value,
         |  CAST(min(id) AS BIGINT) AS min_id, CAST(max(id) AS BIGINT) AS max_id
         |FROM range(0, 30000) t(id)
         |UNION ALL
         |SELECT 2, CAST(count(*) AS BIGINT),
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT),
+        |  CAST(sum($feedValue) AS BIGINT),
         |  CAST(min(id) AS BIGINT), CAST(max(id) AS BIGINT)
         |FROM range(30000, 39000) t(id)
         |ORDER BY leg""".stripMargin) { (s, _) =>
@@ -1625,16 +1605,12 @@ object RelationalQueries {
     // the planned range shrank). Session-isolated: v2 bucketing is
     // opt-in per session (the q60 pattern).
     QueryKey("q61_clustered_source",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(id) AS BIGINT) AS min_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 240000) t(id)) u
+        |  ${feedRows(0, 240000)}) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = s0.newSession()
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -1663,16 +1639,12 @@ object RelationalQueries {
     // volume is decided by the OTHER side's DATA at runtime, the
     // DPP-on-parquet lever (p12) delivered through the connector API.
     QueryKey("q62_runtime_prune",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(min(id) AS BIGINT) AS min_id,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)) u
+        |  ${feedRows(0, 300000)}) u
         |JOIN (SELECT k * 100 AS ref_id FROM range(0, 3000) d(k)
         |  WHERE k >= 1200 AND k < 1500) d ON u.id = d.ref_id
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
@@ -1708,16 +1680,14 @@ object RelationalQueries {
     QueryKey("q69_spj_join",
       // base feed = range(0,120000), current = range(0,240000); compare by
       // integer cross-multiplication, no division anywhere
-      """WITH base AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
+      s"""WITH base AS (
+        |  SELECT $feedKind AS kind,
         |    CAST(count(*) AS BIGINT) AS base_n,
-        |    CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS base_sum
+        |    CAST(sum($feedValue) AS BIGINT) AS base_sum
         |  FROM range(0, 120000) t(id) GROUP BY 1),
         |cur AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
+        |  SELECT $feedKind AS kind,
+        |    $feedValue AS value
         |  FROM range(0, 240000) t(id))
         |SELECT cur.kind,
         |  CAST(sum(CASE WHEN cur.value * base.base_n > base.base_sum
@@ -1762,16 +1732,14 @@ object RelationalQueries {
     // store) stops paying a redundant cluster-wide sort on every
     // merge join.
     QueryKey("q70_report_ordering",
-      """WITH env AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    CAST(min((id * 2654435761) % 100000) AS BIGINT) AS lo,
-        |    CAST(max((id * 2654435761) % 100000) AS BIGINT) AS hi
+      s"""WITH env AS (
+        |  SELECT $feedKind AS kind,
+        |    CAST(min($feedValue) AS BIGINT) AS lo,
+        |    CAST(max($feedValue) AS BIGINT) AS hi
         |  FROM range(0, 90000) t(id) GROUP BY 1),
         |cur AS (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
+        |  SELECT $feedKind AS kind,
+        |    $feedValue AS value
         |  FROM range(0, 180000) t(id))
         |SELECT cur.kind,
         |  CAST(sum(CASE WHEN cur.value BETWEEN env.lo AND env.hi
@@ -1811,14 +1779,10 @@ object RelationalQueries {
     // identical). The 100 TB story: federation sources stop being
     // stats-blind defaultSize walls; the planner sees through them.
     QueryKey("q65_source_stats",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(2 * value) AS BIGINT) AS sum_vv
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 300000) t(id)
+        |  ${feedRows(0, 300000)}
         |  WHERE id >= 299000) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       def feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -1843,15 +1807,11 @@ object RelationalQueries {
     // in-plan, row-mode twin byte-identical). Pushdown composes: the id
     // range folds first, the vectors fill only the planned span.
     QueryKey("q66_columnar_scan",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(sum(id) AS BIGINT) AS sum_id
         |FROM (
-        |  SELECT id,
-        |    CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
-        |  FROM range(0, 400000) t(id)
+        |  ${feedRows(0, 400000)}
         |  WHERE id >= 100000) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
@@ -2012,8 +1972,8 @@ object RelationalQueries {
     // row IS the transaction protocol's accounting, no second counting
     // pass over the data. The write is the measured op (q37 contract).
     QueryKey("q52_accounting_sink",
-      """SELECT CAST(100000 AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+      s"""SELECT CAST(100000 AS BIGINT) AS n_rows,
+        |  CAST(sum($feedValue) AS BIGINT) AS sum_value,
         |  CAST(8 AS BIGINT) AS n_writers
         |FROM range(0, 100000) t(id)""".stripMargin) { (s, _) =>
       import graft.sources.AccountingSink
@@ -2139,7 +2099,7 @@ object RelationalQueries {
       // the digest walks the MERGED corpus the formulas predict: v2 =
       // unchanged rows as-is + %10==3 upper-cased + %10==0 re-keyed
       // +1e9 — a merge that wrote anything else breaks the sum
-      """WITH d AS (SELECT doc_id, text FROM documents),
+      s"""WITH d AS (SELECT doc_id, text FROM documents),
         |acc AS (
         |  SELECT 'delete' AS action, CAST(count(*) AS BIGINT) AS n_rows,
         |    CAST(0 AS BIGINT) AS chars_after
@@ -2161,16 +2121,10 @@ object RelationalQueries {
         |  UNION ALL SELECT doc_id, upper(text) FROM d WHERE doc_id % 10 = 3
         |  UNION ALL SELECT doc_id + 1000000000, text FROM d WHERE doc_id % 10 = 0),
         |v1f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |    ${SamplingQueries.corpusDigest} AS digest
         |  FROM d),
         |v2f AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |    ${SamplingQueries.corpusDigest} AS digest
         |  FROM v2r)
         |SELECT action, n_rows, chars_after, CAST(NULL AS BIGINT) AS digest FROM acc
         |UNION ALL SELECT 'v1', n_rows, CAST(NULL AS BIGINT), digest FROM v1f

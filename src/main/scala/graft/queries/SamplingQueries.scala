@@ -33,6 +33,49 @@ object SamplingQueries {
   private def drawHexSql(salt: String) =
     s"substr(md5('$salt|' || CAST(doc_id AS VARCHAR)), 1, 2)"
 
+  /** p21/p24's layout build under `path`: the corpus as 40 small files
+    * (one per doc_id % 40 shard) in small/, then p14's plan EXECUTED
+    * over that snapshot — shard stats → cumulative-byte bins
+    * (20000-char target) → one file per bin in compacted/. */
+  private def writeCompaction(s: SparkSession, dir: String, path: String): Unit = {
+    val docs = Tables.documents(s, dir)
+      .withColumn("shard", pmod(col("doc_id"), lit(40)).cast("int"))
+    docs.repartition(40, col("shard"))
+      .write.partitionBy("shard").parquet(s"$path/small")
+    val small = Tables.parquet(s, s"$path/small")
+    val w = Window.orderBy(col("shard"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val bins = small.groupBy(col("shard"))
+      .agg(sum(col("n_chars")).as("bytes"))
+      .withColumn("cum", sum(col("bytes")).over(w))
+      .withColumn("bin", expr("CAST((cum - bytes) div 20000 AS INT)"))
+      .select(col("shard"), col("bin"))
+    small.join(broadcast(bins), Seq("shard"))
+      .repartition(col("bin"))
+      .write.partitionBy("bin").parquet(s"$path/compacted")
+  }
+
+  /** p21/p24's oracle opening: p14's byte-target bin count over the 40
+    * doc_id shards → nb(n_bins). */
+  private val compactionBinsCte =
+    """shards AS (SELECT doc_id % 40 AS shard,
+      |    CAST(sum(n_chars) AS BIGINT) AS bytes
+      |  FROM documents GROUP BY 1),
+      |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
+      |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
+      |    AS n_bins FROM c)""".stripMargin
+
+  /** Order-free corpus digest (p21, p24, q57): the sum over rows of the
+    * integer value of md5(doc_id || '|' || text)'s first 6 hex digits.
+    * It keeps its `|` margins for the host's stripMargin: stripped here,
+    * its `||` line would lose its indent to that second strip. */
+  private[queries] val corpusDigest =
+    """CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
+      |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
+      |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
+      |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT)"""
+
   def keys: Seq[QueryKey] = Seq(
     // deterministic EPOCH shuffle — the training-data ORDERING op (every
     // multi-epoch run needs a different, reproducible global permutation
@@ -1008,19 +1051,10 @@ object SamplingQueries {
     // write-once; scale shape: digests computed map-side, one agg row
     // per face, no joins in the measured read.
     QueryKey("p21_compaction_exec",
-      """WITH shards AS (SELECT doc_id % 40 AS shard,
-        |    CAST(sum(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
-        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
-        |    AS n_bins FROM c),
+      s"""WITH $compactionBinsCte,
         |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |    $corpusDigest AS digest
         |  FROM documents)
         |SELECT 'compacted' AS face, n_bins AS n_files, n_docs, sum_chars, digest
         |  FROM d, nb
@@ -1029,23 +1063,7 @@ object SamplingQueries {
         |ORDER BY face""".stripMargin) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"compactexec|$dir") { path =>
-        val docs = Tables.documents(s, dir)
-          .withColumn("shard", pmod(col("doc_id"), lit(40)).cast("int"))
-        docs.repartition(40, col("shard"))
-          .write.partitionBy("shard").parquet(s"$path/small")
-        // EXECUTE p14's plan over the small-file SNAPSHOT: shard stats
-        // → cumulative-byte bins (20000-char target) → one file per bin
-        val small = Tables.parquet(s, s"$path/small")
-        val w = Window.orderBy(col("shard"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val bins = small.groupBy(col("shard"))
-          .agg(sum(col("n_chars")).as("bytes"))
-          .withColumn("cum", sum(col("bytes")).over(w))
-          .withColumn("bin", expr("CAST((cum - bytes) div 20000 AS INT)"))
-          .select(col("shard"), col("bin"))
-        small.join(broadcast(bins), Seq("shard"))
-          .repartition(col("bin"))
-          .write.partitionBy("bin").parquet(s"$path/compacted")
+        writeCompaction(s, dir, path)
       }
       def face(name: String, sub: String): DataFrame =
         Tables.parquet(s, s"$base/$sub")
@@ -1284,18 +1302,9 @@ object SamplingQueries {
       // the active face must read IDENTICALLY to p21's compacted face
       // even though the small files are gone — that identity IS the
       // vacuum-safety proof
-      """WITH shards AS (SELECT doc_id % 40 AS shard,
-        |    CAST(sum(n_chars) AS BIGINT) AS bytes
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT shard, bytes, sum(bytes) OVER (ORDER BY shard
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM shards),
-        |nb AS (SELECT CAST(count(DISTINCT (cum - bytes) // 20000) AS BIGINT)
-        |    AS n_bins FROM c),
+      s"""WITH $compactionBinsCte,
         |d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(list_sum(list_transform(generate_series(0, 5), k ->
-        |      CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)
-        |        || '|' || text), 1 + k, 1)) - 1 AS BIGINT)
-        |      * (1::BIGINT << (4 * (5 - k)))))) AS BIGINT) AS digest
+        |    $corpusDigest AS digest
         |  FROM documents)
         |SELECT 'active' AS face, n_bins AS n_files, n_docs, digest FROM d, nb
         |UNION ALL SELECT 'reclaimed', CAST(40 AS BIGINT), CAST(0 AS BIGINT),
@@ -1303,21 +1312,7 @@ object SamplingQueries {
         |ORDER BY face""".stripMargin) { (s, dir) =>
       import graft.sources.DerivedLayouts
       val base = DerivedLayouts.once(s"vacuum|$dir") { path =>
-        val docs = Tables.documents(s, dir)
-          .withColumn("shard", pmod(col("doc_id"), lit(40)).cast("int"))
-        docs.repartition(40, col("shard"))
-          .write.partitionBy("shard").parquet(s"$path/small")
-        val small = Tables.parquet(s, s"$path/small")
-        val w = Window.orderBy(col("shard"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val bins = small.groupBy(col("shard"))
-          .agg(sum(col("n_chars")).as("bytes"))
-          .withColumn("cum", sum(col("bytes")).over(w))
-          .withColumn("bin", expr("CAST((cum - bytes) div 20000 AS INT)"))
-          .select(col("shard"), col("bin"))
-        small.join(broadcast(bins), Seq("shard"))
-          .repartition(col("bin"))
-          .write.partitionBy("bin").parquet(s"$path/compacted")
+        writeCompaction(s, dir, path)
         // retention expired: delete the superseded small files and
         // record the reclaim count (driver-side layout management,
         // the p21/DerivedLayouts write class)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{AccountingSink, DerivedLayouts, Tables}
 import graft.streaming.HealthStream
+import FeedSql._
 
 /** Batch-equivalent forms of the streaming jobs (SURVEY §2, st*). The
   * exact same aggregation code runs over readStream in production;
@@ -35,6 +36,23 @@ object StreamingQueries {
 
   private val tsUs = "epoch_us(CAST(ts AS TIMESTAMP))"
 
+  /** Gap sessionization of events (st2, st3): each event's per-user
+    * session_idx, a new session starting where the gap to the user's
+    * previous event `breakOp` 30 minutes → subquery b(user_id, ts_us,
+    * session_idx). */
+  private def sessionRows(breakOp: String): String =
+    s"""(
+       |  SELECT user_id, ts_us,
+       |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
+       |  FROM (
+       |    SELECT user_id, event_id, $tsUs AS ts_us,
+       |      CASE WHEN $tsUs - lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) $breakOp 1800000000
+       |           THEN 1
+       |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
+       |           THEN 1 ELSE 0 END AS new_session
+       |    FROM events) a) b""".stripMargin
+
   def keys: Seq[QueryKey] = Seq(
     QueryKey("st1_stream_health",
       s"""SELECT make_timestamp($tsUs - $tsUs % 300000000) AS bucket, event_type,
@@ -48,17 +66,7 @@ object StreamingQueries {
     QueryKey("st2_stream_sessions",
       s"""SELECT user_id, session_idx, min(ts_us) AS start_us, max(ts_us) AS end_us,
          |  count(*) AS n_events
-         |FROM (
-         |  SELECT user_id, ts_us,
-         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-         |  FROM (
-         |    SELECT user_id, event_id, $tsUs AS ts_us,
-         |      CASE WHEN $tsUs - lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) > 1800000000
-         |           THEN 1
-         |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
-         |           THEN 1 ELSE 0 END AS new_session
-         |    FROM events) a) b
+         |FROM ${sessionRows(">")}
          |GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin) { (s, dir) =>
       HealthStream.sessions(Tables.events(s, dir), gapMinutes = 30)
         .orderBy(col("user_id"), col("session_idx"))
@@ -113,12 +121,11 @@ object StreamingQueries {
     // across batch boundaries. StreamingSpec gates the batch count and
     // stream≡batch parity.
     QueryKey("st19_stream_source",
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value
         |FROM (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
+        |  SELECT $feedKind AS kind,
+        |    $feedValue AS value
         |  FROM range(0, 60000) t(id)) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
@@ -148,9 +155,9 @@ object StreamingQueries {
     // prove every epoch carries exactly its offset interval's rows.
     QueryKey("st20_stream_sink",
       // each epoch is exactly one 20000-row offset interval of the feed
-      """SELECT CAST(id // 20000 AS BIGINT) AS epoch_id,
+      s"""SELECT CAST(id // 20000 AS BIGINT) AS epoch_id,
         |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value
+        |  CAST(sum($feedValue) AS BIGINT) AS sum_value
         |FROM range(0, 60000) t(id)
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val runId = "st20_stream_sink"
@@ -189,8 +196,8 @@ object StreamingQueries {
     // (exactly-once observed, not just exactly-once written).
     QueryKey("st21_stream_observe",
       // one observation row per 20000-row admission epoch
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum((id * 2654435761) % 100000) AS BIGINT) AS sum_value,
+      s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum($feedValue) AS BIGINT) AS sum_value,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM range(0, 60000) t(id)
         |GROUP BY id // 20000 ORDER BY max_id""".stripMargin) { (s, _) =>
@@ -309,13 +316,12 @@ object StreamingQueries {
     QueryKey("st25_continuous",
       // the complete feed through the continuous protocol, deduped
       // read-side (at-least-once delivery)
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM (
-        |  SELECT id, CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
+        |  SELECT id, $feedKind AS kind,
+        |    $feedValue AS value
         |  FROM range(0, 30000) t(id)) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       s.catalog.dropTempView("st25_out")
@@ -394,14 +400,13 @@ object StreamingQueries {
     QueryKey("st22_state_reader",
       // the durable state must equal the full-feed aggregation (every
       // epoch folded exactly once); 3 admission epochs → max batch id 2
-      """SELECT kind, CAST(count(*) AS BIGINT) AS n,
+      s"""SELECT kind, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(value) AS BIGINT) AS sum_value,
         |  CAST(2 AS BIGINT) AS max_batch_id,
         |  CAST(1 AS BIGINT) AS n_operators
         |FROM (
-        |  SELECT CASE CAST(id % 3 AS INT) WHEN 0 THEN 'gauge'
-        |      WHEN 1 THEN 'counter' ELSE 'timer' END AS kind,
-        |    (id * 2654435761) % 100000 AS value
+        |  SELECT $feedKind AS kind,
+        |    $feedValue AS value
         |  FROM range(0, 60000) t(id)) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
@@ -440,20 +445,9 @@ object StreamingQueries {
       // the full pipeline re-derived: band keys for every doc, the bucket
       // cap applied over INDEX occupancy only (the build-time rule), batch
       // probes, exact Jaccard on distinct 3-gram sets (d16's list forms)
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS wd
+      s"""WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wd
         |  FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(wd) >= 3
-        |    THEN list_transform(generate_series(1, len(wd)-2), i -> wd[i] || ' ' || wd[i+1] || ' ' || wd[i+2])
-        |    ELSE [] END) AS s
-        |  FROM w),
-        |sh2 AS (SELECT * FROM sh WHERE len(s) > 0),
-        |sig AS (SELECT doc_id,
-        |  list_transform(generate_series(0, 7), h ->
-        |    list_min(list_transform(s, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS g
-        |  FROM sh2),
-        |bands AS (SELECT doc_id, CAST(b AS VARCHAR) || ':' || g[2*b+1] || g[2*b+2] AS k
-        |  FROM sig, generate_series(0, 3) t(b)),
+        |${PipelineQueries.minhashBandsCte},
         |ib AS (SELECT * FROM bands WHERE doc_id % 5 != 4
         |  QUALIFY count(*) OVER (PARTITION BY k) <= 64),
         |bb AS (SELECT * FROM bands WHERE doc_id % 5 = 4),
@@ -800,17 +794,7 @@ object StreamingQueries {
       s"""SELECT user_id, make_timestamp(min(ts_us)) AS session_start,
          |  make_timestamp(max(ts_us) + 1800000000) AS session_end,
          |  count(*) AS n_events
-         |FROM (
-         |  SELECT user_id, ts_us,
-         |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-         |  FROM (
-         |    SELECT user_id, event_id, $tsUs AS ts_us,
-         |      CASE WHEN $tsUs - lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) >= 1800000000
-         |           THEN 1
-         |           WHEN lag($tsUs) OVER (PARTITION BY user_id ORDER BY $tsUs, event_id) IS NULL
-         |           THEN 1 ELSE 0 END AS new_session
-         |    FROM events) a) b
+         |FROM ${sessionRows(">=")}
          |GROUP BY user_id, session_idx ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))

@@ -354,7 +354,26 @@ object HealthStream {
     * batch, stream, and the SQL oracle agree bit-for-bit.
     */
   def clickErrorFunnel(clickSide: DataFrame, errorSide: DataFrame,
-      windowMinutes: Int): DataFrame = {
+      windowMinutes: Int): DataFrame =
+    funnelJoin(clickSide, errorSide, windowMinutes, "inner")
+
+  /** Left-outer funnel: every click, matched to its errors when any
+    * land inside the window, with NULL error columns otherwise. In
+    * streaming this is a watermarked stream-stream LEFT OUTER join —
+    * the unmatched-click rows can only emit once the watermark passes
+    * the click's join horizon (Spark holds them in state until no
+    * future error could match), which StreamingSpec drives with a
+    * sentinel watermark-advancing event. Batch form is a plain left
+    * join; both are bit-identical in µs integers.
+    */
+  def clickErrorFunnelOuter(clickSide: DataFrame, errorSide: DataFrame,
+      windowMinutes: Int): DataFrame =
+    funnelJoin(clickSide, errorSide, windowMinutes, "left_outer")
+
+  /** Both funnels: watermarked clicks and errors, joined by `joinType`
+    * on user and the [click, click + window) range. */
+  private def funnelJoin(clickSide: DataFrame, errorSide: DataFrame,
+      windowMinutes: Int, joinType: String): DataFrame = {
     val clicks = clickSide.filter(col("event_type") === "click")
       .withWatermark("ts", "1 hour")
       .select(col("user_id"), col("event_id").as("click_id"),
@@ -369,35 +388,8 @@ object HealthStream {
     clicks.join(errors,
         col("user_id") === col("e_user") &&
         col("error_ts") >= col("click_ts") &&
-        col("error_ts") < col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"))
-      .select(col("user_id"), col("click_id"), col("error_id"),
-        (col("error_us") - col("click_us")).as("gap_us"))
-  }
-
-  /** Left-outer funnel: every click, matched to its errors when any
-    * land inside the window, with NULL error columns otherwise. In
-    * streaming this is a watermarked stream-stream LEFT OUTER join —
-    * the unmatched-click rows can only emit once the watermark passes
-    * the click's join horizon (Spark holds them in state until no
-    * future error could match), which StreamingSpec drives with a
-    * sentinel watermark-advancing event. Batch form is a plain left
-    * join; both are bit-identical in µs integers.
-    */
-  def clickErrorFunnelOuter(clickSide: DataFrame, errorSide: DataFrame,
-      windowMinutes: Int): DataFrame = {
-    val clicks = clickSide.filter(col("event_type") === "click")
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"), unix_micros(col("ts")).as("click_us"))
-    val errors = errorSide.filter(col("event_type") === "error")
-      .withWatermark("ts", "1 hour")
-      .select(col("user_id").as("e_user"), col("event_id").as("error_id"),
-        col("ts").as("error_ts"), unix_micros(col("ts")).as("error_us"))
-    clicks.join(errors,
-        col("user_id") === col("e_user") &&
-        col("error_ts") >= col("click_ts") &&
         col("error_ts") < col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        "left_outer")
+        joinType)
       .select(col("user_id"), col("click_id"), col("error_id"),
         (col("error_us") - col("click_us")).as("gap_us"))
   }

@@ -29,6 +29,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(one.size == 1 && one.has("q1_pricing_summary"))
   }
 
+  /** md5 of `oracle_sql.json` as `Harness verify` writes it for every
+    * key. The oracles share hand-written SQL fragments, and a change to
+    * one fragment reaches every key that interpolates it; this pin
+    * catches any changed oracle byte without a Verify run. A change
+    * that means to alter an oracle updates this value and says why in
+    * CHANGES.md. */
+  private val OracleJsonMd5 = "eab9d591050439f0f60bb8064e2e2e3c"
+
+  test("oracle_sql.json is byte-identical to the pinned oracle set") {
+    val bytes = Harness.oracleJson(SparkEntry.oracleSql.keySet).getBytes("UTF-8")
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map(b => f"$b%02x").mkString
+    assert(md5 == OracleJsonMd5,
+      "an oracle's SQL changed; diff oracle_sql.json against the last commit " +
+        "(tools/diff_outputs.py names the keys)")
+  }
+
   test("the compact bench line parses and stays under 1 KB at 307 keys with every headline key") {
     val keys = SparkEntry.queries.keys.toSeq.sorted // 307 today
     def check(results: Seq[(String, Double)]): Unit = {

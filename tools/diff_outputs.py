@@ -7,10 +7,14 @@ Each key's output is the parquet under <dir>/<key>/. For every key in
 either directory this compares the schema (column names in order, types
 and nullability) and the rows as a multiset: rows are sorted by a
 canonical text form and compared exactly (floats by their round-trip
-repr, so 0.1 + 0.2 and 0.3 differ, and NaN equals NaN). Prints one line
-per differing or missing key and a summary; exits 1 if any key differs
-or is missing on one side, 0 if every key matches.
+repr, so 0.1 + 0.2 and 0.3 differ, and NaN equals NaN). It then
+compares the two oracle maps (<dir>/oracle_sql.json) key by key: equal
+outputs prove nothing if the SQL they are checked against changed.
+Prints one line per differing or missing key and a summary per part;
+exits 1 if any output or oracle differs or is missing on one side, 0 if
+every key matches.
 """
+import json
 import os
 import sys
 from collections import Counter
@@ -45,6 +49,35 @@ def diff_key(a, b, key):
             f"{len(only_b)} only in B; e.g. {first}")
 
 
+def oracles(root):
+    path = os.path.join(root, "oracle_sql.json")
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def diff_oracles(a, b):
+    """Names each key whose oracle SQL differs or is missing on one
+    side; returns the number of such keys."""
+    oa, ob = oracles(a), oracles(b)
+    if oa is None or ob is None:
+        for root, o in ((a, oa), (b, ob)):
+            if o is None:
+                print(f"MISSING oracle_sql.json in {root}")
+        return 1
+    bad = 0
+    for k in sorted(oa.keys() | ob.keys()):
+        if k not in oa or k not in ob:
+            print(f"MISSING ORACLE {k}: only in {a if k in oa else b}")
+            bad += 1
+        elif oa[k] != ob[k]:
+            print(f"DIFF ORACLE {k}: SQL text differs")
+            bad += 1
+    print(f"{len(oa.keys() | ob.keys()) - bad} oracles equal / {bad} differ or missing")
+    return bad
+
+
 def main(argv):
     if len(argv) != 3:
         sys.exit(__doc__)
@@ -61,7 +94,8 @@ def main(argv):
             print(f"DIFF {k}: {d}")
             bad += 1
     print(f"{len(ka | kb) - bad} equal / {bad} differ or missing")
-    return 1 if bad else 0
+    bad_oracles = diff_oracles(a, b)
+    return 1 if bad or bad_oracles else 0
 
 
 if __name__ == "__main__":
