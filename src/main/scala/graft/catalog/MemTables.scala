@@ -7,13 +7,14 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
+import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.filter.{And => V2And, Not => V2Not, Or => V2Or, Predicate}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.V2Leaf
 
 /** In-memory tables under the graft catalog's `mem` namespace — the
   * ROW-LEVEL-OPERATIONS face of the connector matrix (read q51, write
@@ -229,52 +230,16 @@ object MemTables {
 
 /** Structural check + interpreter for the V2 predicate tree DELETE
   * delivers: AND/OR/NOT over {=, <>, <, <=, >, >=, IN, IS_NULL,
-  * IS_NOT_NULL} leaves comparing a named field to literals. `supported`
-  * and `eval` walk the same shapes — canDeleteWhere accepts exactly
-  * what deleteWhere can apply. */
+  * IS_NOT_NULL} leaves comparing a named field to literals, each read by
+  * `V2Leaf.column`. `supported` and `eval` walk the same shapes —
+  * canDeleteWhere accepts exactly what deleteWhere can apply. */
 object MemPredicates {
-  /** The operator seen from the other side: `lit op col` ≡ `col flip(op) lit`. */
-  private[catalog] def flip(op: String): String = op match {
-    case "<" => ">"
-    case "<=" => ">="
-    case ">" => "<"
-    case ">=" => "<="
-    case other => other // = and <> are symmetric
-  }
-
-  /** Leaf normal form: (field, op, literal values). */
-  private def leaf(p: Predicate): Option[(String, String, Seq[Any])] = {
-    val kids = p.children()
-    p.name() match {
-      case op @ ("=" | "<=>" | "<>" | "<" | "<=" | ">" | ">=") => kids match {
-        case Array(r: NamedReference, l: V2Literal[_]) =>
-          Some((r.fieldNames.mkString("."), op, Seq(l.value)))
-        case Array(l: V2Literal[_], r: NamedReference) =>
-          Some((r.fieldNames.mkString("."), flip(op), Seq(l.value)))
-        case _ => None
-      }
-      case "IN" => kids.headOption match {
-        case Some(r: NamedReference)
-            if kids.tail.forall(_.isInstanceOf[V2Literal[_]]) =>
-          Some((r.fieldNames.mkString("."), "IN",
-            kids.tail.toSeq.map(_.asInstanceOf[V2Literal[_]].value)))
-        case _ => None
-      }
-      case op @ ("IS_NULL" | "IS_NOT_NULL") => kids match {
-        case Array(r: NamedReference) =>
-          Some((r.fieldNames.mkString("."), op, Seq.empty))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
   def supported(p: Predicate, fields: Set[String]): Boolean = p match {
     case a: V2And => supported(a.left(), fields) && supported(a.right(), fields)
     case o: V2Or  => supported(o.left(), fields) && supported(o.right(), fields)
     case n: V2Not => supported(n.child(), fields)
     case _ if p.name() == "ALWAYS_TRUE" || p.name() == "ALWAYS_FALSE" => true
-    case _ => leaf(p).exists { case (f, _, vs) =>
+    case _ => V2Leaf.column(p).exists { case (f, _, vs) =>
       fields.contains(f) && vs.forall(v =>
         v == null || v.isInstanceOf[java.lang.Long] ||
           v.isInstanceOf[java.lang.Integer] || v.isInstanceOf[UTF8String] ||
@@ -304,7 +269,7 @@ object MemPredicates {
     case n: V2Not => !eval(n.child(), idx, row)
     case _ if p.name() == "ALWAYS_TRUE"  => true
     case _ if p.name() == "ALWAYS_FALSE" => false
-    case _ => leaf(p) match {
+    case _ => V2Leaf.column(p) match {
       case Some((f, op, vs)) =>
         val v = row(idx(f))
         op match {
@@ -505,19 +470,9 @@ class MemScanBuilder(tableName: String, state: MemTables.State)
   // PROVE cannot match — the superset soundness contract).
   private var skipHints: Array[(String, String, Long)] = Array.empty
   private def hintOf(p: Predicate, idxCols: Set[String])
-      : Option[(String, String, Long)] = p.name() match {
-    case op @ ("=" | "<" | "<=" | ">" | ">=") => p.children() match {
-      case Array(r: NamedReference, l: V2Literal[_])
-          if l.value.isInstanceOf[java.lang.Long] &&
-            idxCols.contains(r.fieldNames.mkString(".")) =>
-        Some((r.fieldNames.mkString("."), op, l.value.asInstanceOf[Long]))
-      case Array(l: V2Literal[_], r: NamedReference)
-          if l.value.isInstanceOf[java.lang.Long] &&
-            idxCols.contains(r.fieldNames.mkString(".")) =>
-        Some((r.fieldNames.mkString("."), MemPredicates.flip(op), l.value.asInstanceOf[Long]))
-      case _ => None
-    }
-    case _ => None
+      : Option[(String, String, Long)] = V2Leaf.column(p).collect {
+    case (f, op @ ("=" | "<" | "<=" | ">" | ">="), Seq(v: java.lang.Long))
+        if idxCols.contains(f) => (f, op, v.longValue)
   }
   override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
     skipHints = predicates.flatMap(hintOf(_, state.indexes.get().values.toSet))

@@ -199,7 +199,8 @@ object Dedup {
     * monotone invariant — labels only ever decrease, so an unchanged
     * sum(component) means fixpoint — never by collecting the labels.
     * Dedup clusters are near-cliques, so this converges in 2-3 rounds;
-    * maxIters is a runaway bound, not a correctness knob.
+    * maxIters is a runaway bound, not a correctness knob: hitting it
+    * throws, as in Graph.kCore (unconverged labels split components).
     *
     * Why not the native recursive CTE (q40's UnionLoop path): connected
     * components needs UNION **DISTINCT** recursion — under UNION ALL,
@@ -237,6 +238,9 @@ object Dedup {
       prevSum = Some(s)
       iter += 1
     }
+    require(converged,
+      s"connectedComponents did not converge within $maxIters rounds " +
+        "— raise maxIters; unconverged labels are not components")
     labels
   }
 

@@ -2894,6 +2894,10 @@ object PipelineQueries {
     // re-segmentation fold all run on |V| rows. See Bpe.learnMerges
     // for semantics + the recursive-CTE oracle mapping.
     QueryKey("t21_bpe_learn", {
+      // three chained greedy-merge iterations; each fold is a recursive
+      // CTE over symbol positions (list_reduce is broken for varying
+      // lengths — round-7 finding) and every reused stage MATERIALIZED
+      // (the CTE-inlining lesson). Mirrors Bpe.learnMerges exactly.
       s"""$bpeOracleCtes
          |SELECT * FROM (
          |  SELECT 1 AS iter, b.l AS left_sym, b.r AS right_sym,
@@ -2907,13 +2911,6 @@ object PipelineQueries {
       Bpe.learnMerges(Tables.documents(s, dir), "text", n = 3)
     },
 
-    // BPE APPLICATION (t21's apply half — train→apply like d23→d24 and
-    // LearnedQuality.train→classify): segment the corpus with the 3
-    // learned merges and account per-doc token budgets (the number a
-    // packing pass like p4 actually consumes). The merge loop runs ONCE
-    // on the |V|-row vocab (Bpe.segmentVocab); the corpus-sized side is
-    // one explode + equi-join on the word — never re-segmented per
-    // occurrence. compression_bp = chars saved per doc, truncating.
     // BPE at PRODUCTION merge count (round-10 verdict #5 — t21 is one
     // driver round per merge; a 32k-merge vocab needs batching): up to
     // 16 pairwise conflict-free merges per driver round ({l, r, l||r}
@@ -2981,6 +2978,13 @@ object PipelineQueries {
         .orderBy(col("lang"))
     },
 
+    // BPE APPLICATION (t21's apply half — train→apply like d23→d24 and
+    // LearnedQuality.train→classify): segment the corpus with the 3
+    // learned merges and account per-doc token budgets (the number a
+    // packing pass like p4 actually consumes). The merge loop runs ONCE
+    // on the |V|-row vocab (Bpe.segmentVocab); the corpus-sized side is
+    // one explode + equi-join on the word — never re-segmented per
+    // occurrence. compression_bp = chars saved per doc, truncating.
     QueryKey("t22_bpe_apply",
       s"""$bpeOracleCtes,
          |d AS (SELECT doc_id, w FROM (
@@ -3023,10 +3027,6 @@ object PipelineQueries {
     // aggregates end-to-end: corpus → vocab → ~20 octave rows; the fit
     // is a 1-row broadcast back onto the octave histogram.
     QueryKey("t23_zipf_octaves",
-      // three chained greedy-merge iterations; each fold is a recursive
-      // CTE over symbol positions (list_reduce is broken for varying
-      // lengths — round-7 finding) and every reused stage MATERIALIZED
-      // (the CTE-inlining lesson). Mirrors Bpe.learnMerges exactly.
       """WITH wc AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
         |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
         |    FROM documents) x

@@ -1464,7 +1464,7 @@ object RelationalQueries {
 
     // custom DataSourceV2 connector (graft.sources.MetricsFeedSource) —
     // the source-extension surface: a deterministic synthetic feed
-    // whose ScanBuilder accepts id-range predicates (the filter is
+    // whose ScanBuilder folds V2 id-range predicates (the filter is
     // answered by PLANNING fewer rows — 2 of 8 fixed-width slices
     // survive here, PlanSpec-gated) and prunes columns (node is never
     // materialized: reader allocates only the pruned schema). Oracle
@@ -1515,20 +1515,17 @@ object RelationalQueries {
         .orderBy(col("kind"))
     },
 
-    // V2 PREDICATE pushdown (q87 — SupportsPushDownV2Filters, the
-    // successor face to q51's V1 Filters; option-selected because the
-    // V1 face SHADOWS it when both are implemented — probed,
-    // PushDownUtils checks SupportsPushDownFilters first): the V2
-    // Predicate tree carries FUNCTION-BEARING predicates V1 cannot
-    // express — here `id % 3 = 1` arrives as a
+    // FUNCTION-BEARING predicate pushdown (q87 — the feed's one
+    // SupportsPushDownV2Filters builder, the face q51's range clamp also
+    // rides): a V2 Predicate tree carries predicates the V1 Filter API
+    // cannot express — here `id % 3 = 1` arrives as a
     // GeneralScalarExpression("%") leaf and folds into a STRIDE-3
     // lattice scan (each slice walks only ids ≡ 1 mod 3), composing
-    // with the plain range clamp (id >= 15000) exactly like the V1
-    // path. At 100 TB this is the shard-probe lever: a modulo
-    // residue-class scan costs 1/k of the feed over the wire instead
-    // of a full scan post-filtered. PlanSpec pins zero Filter above
-    // the scan, the stride in the description, and the V1-path DECLINE
-    // of the same predicate (it arrives unpushed there).
+    // with the plain range clamp (id >= 15000). At 100 TB this is the
+    // shard-probe lever: a modulo residue-class scan costs 1/k of the
+    // feed over the wire instead of a full scan post-filtered. PlanSpec
+    // pins zero Filter above the scan, the stride in the description,
+    // and a malformed residue (r >= m) left as a plan Filter.
     QueryKey("q87_v2_predicates",
       // the pushed stride + range: ids ≡ 1 (mod 3) within [15000, 60000)
       s"""SELECT 'node' || CAST(id % 50 AS VARCHAR) AS node,
@@ -1539,8 +1536,7 @@ object RelationalQueries {
         |FROM range(15000, 60000) t(id) WHERE id % 3 = 1
         |GROUP BY 1 ORDER BY node""".stripMargin) { (s, _) =>
       val feed = s.read.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "8")
-        .option("v2filters", "true").load()
+        .option("rows", "60000").option("partitions", "8").load()
       feed.filter(col("id") % 3 === 1 && col("id") >= 15000L)
         .groupBy(col("node"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"),
@@ -1550,13 +1546,15 @@ object RelationalQueries {
 
     // OFFSET + TABLESAMPLE pushdown (q88 — SupportsPushDownOffset /
     // SupportsPushDownTableSample, completing the pushdown matrix after
-    // predicates q51/q87, aggregates q58, limit/topN q61, runtime q62,
-    // join q83): the feed emits ids ascending across slices, so OFFSET
-    // folds to advancing the planned range's low end and TABLESAMPLE
-    // [0, f) folds to the contiguous sub-range covering fraction f of
-    // the planned span — the JDBC TABLESAMPLE SYSTEM analog (the SOURCE
-    // defines the sample as a deterministic range slice; seed ignored,
-    // documented). OFFSET composes BEHIND the limit push only because
+    // predicates q51/q87 (range and stride, one V2 face), aggregates
+    // q58, limit/topN q61, runtime q62, join q83): the feed emits ids
+    // ascending across slices, so OFFSET folds to advancing the planned
+    // range's low end and TABLESAMPLE [0, f) folds to the contiguous
+    // sub-range covering fraction f of the planned span — the JDBC
+    // TABLESAMPLE SYSTEM analog (the SOURCE defines the sample as a
+    // deterministic range slice; seed ignored, documented). Both assume
+    // contiguous ids, so the offset (like limit, topN, aggregate and
+    // join) declines once a q87 stride is pushed. OFFSET composes BEHIND the limit push only because
     // the feed's plain LIMIT is COMPLETE (isPartiallyPushed=false for
     // limit, true for topN — a partial limit blocks the engine's
     // OffsetAndLimit rewrite; probed). Engine caveat (probed): the

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.sources.{AccountingSink, DerivedLayouts, Tables}
 import graft.streaming.HealthStream
 import FeedSql._
@@ -32,6 +33,32 @@ object StreamingQueries {
     // cardinality x rate, not the core count.
     s.conf.set("spark.sql.shuffle.partitions", "8")
     s
+  }
+
+  /** Streams the metrics feed (60k rows, 4 partitions, three 20000-row
+    * admission epochs) through `sink` on the emptied per-JVM scratch
+    * checkpoint `<name>_checkpoint`, drains every epoch and stops;
+    * returns the stopped query and its checkpoint. A checkpoint of our
+    * own also keeps Spark from making a temporary one, which it deletes
+    * at JVM exit with an `rm -rf` child process. */
+  private def drainFeed(s: SparkSession, name: String)(
+      sink: DataFrame => DataStreamWriter[Row]): (StreamingQuery, java.io.File) = {
+    val cp = DerivedLayouts.scratchDir(s"${name}_checkpoint")
+    val feed = s.readStream.format("graft.sources.MetricsFeedSource")
+      .option("rows", "60000").option("partitions", "4")
+      .option("streamStep", "20000").load()
+    val q = sink(feed).option("checkpointLocation", cp.getAbsolutePath).start()
+    q.processAllAvailable(); q.stop()
+    (q, cp)
+  }
+
+  /** st20/st24: the feed into AccountingSink's epoch-keyed commit
+    * registry under `runId` (cleared first). */
+  private def drainToAccountingSink(s: SparkSession, name: String,
+      runId: String): StreamingQuery = {
+    AccountingSink.clear(runId)
+    drainFeed(s, name)(_.writeStream.format("graft.sources.AccountingSink")
+      .option("runId", runId).outputMode("append"))._1
   }
 
   private val tsUs = "epoch_us(CAST(ts AS TIMESTAMP))"
@@ -130,14 +157,10 @@ object StreamingQueries {
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
       s.catalog.dropTempView("st19_out")
-      val stream = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-      val q = stream.groupBy(col("kind"))
+      drainFeed(s, "st19")(_.groupBy(col("kind"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
         .writeStream.outputMode("complete").format("memory")
-        .queryName("st19_out").start()
-      q.processAllAvailable(); q.stop()
+        .queryName("st19_out"))
       s.table("st19_out").orderBy(col("kind"))
     },
 
@@ -161,20 +184,10 @@ object StreamingQueries {
         |FROM range(0, 60000) t(id)
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
       val runId = "st20_stream_sink"
-      AccountingSink.clear(runId)
       // emptied per-JVM checkpoint (bench passes must not accumulate
       // /tmp checkpoints); recovery/replay semantics are StreamingSpec's
       // job — CORRECTNESS runs the clean 3-epoch ingest
-      val cp = DerivedLayouts.scratchDir("st20_checkpoint")
-      val q = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-        .writeStream.format("graft.sources.AccountingSink")
-        .option("runId", runId)
-        .option("checkpointLocation", cp.getAbsolutePath)
-        .outputMode("append")
-        .start()
-      q.processAllAvailable(); q.stop()
+      drainToAccountingSink(s, "st20", runId)
       import s.implicits._
       AccountingSink.epochResults(runId)
         .map { case (e, (n, sv, _)) => (e, n, sv) }
@@ -201,15 +214,11 @@ object StreamingQueries {
         |  CAST(max(id) AS BIGINT) AS max_id
         |FROM range(0, 60000) t(id)
         |GROUP BY id // 20000 ORDER BY max_id""".stripMargin) { (s, _) =>
-      val stream = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-      val q = stream.observe("feed_gate",
+      val (q, _) = drainFeed(s, "st21")(_.observe("feed_gate",
           count(lit(1)).as("n_rows"),
           sum(col("value")).as("sum_value"),
           max(col("id")).as("max_id"))
-        .writeStream.format("noop").outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+        .writeStream.format("noop").outputMode("append"))
       val epochs = q.recentProgress.toSeq
         .flatMap(p => Option(p.observedMetrics.get("feed_gate")))
         .map(r => (r.getAs[Long]("n_rows"), r.getAs[Long]("sum_value"),
@@ -239,11 +248,8 @@ object StreamingQueries {
         |  CAST(60000 - e * 20000 AS BIGINT) AS rows_backlog
         |FROM generate_series(1, 3) t(e)
         |ORDER BY rows_consumed""".stripMargin) { (s, _) =>
-      val q = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-        .writeStream.format("noop").outputMode("append").start()
-      q.processAllAvailable(); q.stop()
+      val (q, _) = drainFeed(s, "st23")(
+        _.writeStream.format("noop").outputMode("append"))
       val epochs = q.recentProgress.toSeq
         .map(p => p.sources(0))
         .filter(_.numInputRows > 0)
@@ -277,18 +283,7 @@ object StreamingQueries {
         |  CAST(e AS BIGINT) AS epochs_committed
         |FROM generate_series(1, 3) t(e)
         |ORDER BY rows_committed""".stripMargin) { (s, _) =>
-      val runId = "st24_sink_metrics"
-      AccountingSink.clear(runId)
-      val cp = DerivedLayouts.scratchDir("st24_checkpoint")
-      val q = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-        .writeStream.format("graft.sources.AccountingSink")
-        .option("runId", runId)
-        .option("checkpointLocation", cp.getAbsolutePath)
-        .outputMode("append")
-        .start()
-      q.processAllAvailable(); q.stop()
+      val q = drainToAccountingSink(s, "st24", "st24_sink_metrics")
       val epochs = q.recentProgress.toSeq
         .filter(_.sink.numOutputRows > 0)
         .map(p => (p.sink.numOutputRows,
@@ -410,15 +405,9 @@ object StreamingQueries {
         |  FROM range(0, 60000) t(id)) u
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s0, _) =>
       val s = streamSession(s0)
-      val cp = DerivedLayouts.scratchDir("st22_checkpoint")
-      val q = s.readStream.format("graft.sources.MetricsFeedSource")
-        .option("rows", "60000").option("partitions", "4")
-        .option("streamStep", "20000").load()
-        .groupBy(col("kind"))
+      val (_, cp) = drainFeed(s, "st22")(_.groupBy(col("kind"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-        .writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", cp.getAbsolutePath).start()
-      q.processAllAvailable(); q.stop()
+        .writeStream.outputMode("update").format("noop"))
       // operator inventory: exactly one stateful operator, 3 committed
       // batches — a 1-row broadcast leg (the scalar crossJoin pattern)
       val meta = s.read.format("state-metadata").load(cp.getAbsolutePath)

@@ -5,11 +5,10 @@ import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, Transform, Expression => V2Expression, SortOrder => V2SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expressions, GeneralScalarExpression, NamedReference, SortDirection, Transform, Expression => V2Expression, Literal => V2Lit, SortOrder => V2SortOrder}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,11 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * side-channel files.
   *
   * What it demonstrates (each spec-gated, PlanSpec):
-  *  - SupportsPushDownFilters: >=, >, <, <=, = on `id` fold into the
-  *    generated range — V2ScanRelationPushDown hands the predicate to
-  *    the source and the source answers with fewer rows PLANNED, not
-  *    fewer rows filtered (the 100 TB story: predicates reach the
-  *    feed, the cluster never materializes the pruned span).
+  *  - SupportsPushDownV2Filters: >=, >, <, <=, = of `id` against a
+  *    literal (either side) fold into the generated range, and
+  *    `id % m = r` folds into a stride — V2ScanRelationPushDown hands
+  *    the predicate to the source and the source answers with fewer
+  *    rows PLANNED, not fewer rows filtered (the 100 TB story:
+  *    predicates reach the feed, the cluster never materializes the
+  *    pruned span). Leaves are read by the shared `V2Leaf`.
   *  - Partition pruning: the row space splits into `partitions`
   *    fixed-width slices (the "files" of a synthetic feed); slices
   *    wholly outside the pushed range are never planned —
@@ -67,9 +68,6 @@ object MetricsFeedSource {
   @volatile var lastRuntimeFilter: String = ""
   // join-pushdown observable (q83): the absorbed join's shape
   @volatile var lastPushedJoin: String = ""
-  // V2-predicate pushdown observable (q87): accepted predicates + the
-  // folded range/stride
-  @volatile var lastPushedV2: String = ""
   // offset / table-sample pushdown observables (q88)
   @volatile var lastPushedOffset: String = ""
   @volatile var lastPushedSample: String = ""
@@ -91,6 +89,21 @@ object MetricsFeedSource {
     case _ => "timer"
   }
   def valueOf(id: Long): Long = (id * 2654435761L) % 100000L
+
+  /** `parts` fixed-width slices of [from, until) clipped to [lo, hi),
+    * each reading ids ≡ rem (mod step); slices wholly outside the range
+    * never plan. A batch scan slices the FULL row space (the feed's
+    * "files"), a micro-batch its own offset interval. */
+  def slices(from: Long, until: Long, parts: Int, lo: Long, hi: Long,
+      step: Long = 1L, rem: Long = 0L): Array[InputPartition] = {
+    val width = math.max(1L, (until - from + parts - 1) / parts)
+    (from until until by width).flatMap { s =>
+      val a = math.max(s, lo)
+      val b = math.min(s + width, hi)
+      if (a < b) Some(MetricsFeedPartition(a, b, step, rem): InputPartition)
+      else None
+    }.toArray
+  }
 }
 
 class MetricsFeedSource extends TableProvider {
@@ -103,13 +116,11 @@ class MetricsFeedSource extends TableProvider {
       properties.getOrDefault("partitions", "8").toInt,
       properties.getOrDefault("streamStep", "25000").toLong,
       properties.getOrDefault("clusterByKind", "false").toBoolean,
-      properties.getOrDefault("columnar", "false").toBoolean,
-      properties.getOrDefault("v2filters", "false").toBoolean)
+      properties.getOrDefault("columnar", "false").toBoolean)
 }
 
 class MetricsFeedTable(rows: Long, parts: Int, streamStep: Long,
-    clusterByKind: Boolean, columnar: Boolean = false,
-    v2filters: Boolean = false)
+    clusterByKind: Boolean, columnar: Boolean = false)
     extends Table with SupportsRead {
   override def name(): String = s"metrics_feed($rows)"
   override def schema(): StructType = MetricsFeedSource.schema
@@ -117,18 +128,14 @@ class MetricsFeedTable(rows: Long, parts: Int, streamStep: Long,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.CONTINUOUS_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    // the V1 Filter face SHADOWS the V2 one when both are implemented
-    // (probed: PushDownUtils checks SupportsPushDownFilters FIRST), so
-    // the V2-predicate face (q87) is a separate builder, option-selected
-    if (v2filters) new MetricsFeedV2ScanBuilder(rows, parts)
-    else new MetricsFeedScanBuilder(rows, parts, streamStep, clusterByKind, columnar)
+    new MetricsFeedScanBuilder(rows, parts, streamStep, clusterByKind, columnar)
 }
 
 class MetricsFeedScanBuilder(rows: Long, parts: Int,
     streamStep: Long = 25000L, clusterByKind: Boolean = false,
     columnar: Boolean = false)
     extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns
+    with SupportsPushDownV2Filters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownOffset with SupportsPushDownTableSample
@@ -145,8 +152,8 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   // names (`id = id_1`); returning true makes THIS builder the joined
   // relation — its scan must emit leftCols ++ rightCols under the
   // aliased names, and the engine may prune that joined schema again.
-  // Soundness gate: both sides plain (no agg/limit/cluster/columnar or
-  // prior join), INNER only, condition exactly the two id columns —
+  // Soundness gate: both sides plain (no agg/limit/stride/cluster/
+  // columnar/prior join), INNER only, condition exactly the id pair —
   // then the join is the RANGE INTERSECTION of two deterministic feeds
   // and every output column is closed-form in the shared id. At 100 TB
   // this is the federation endgame: the join costs ZERO rows over the
@@ -160,8 +167,8 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   // idempotent under any prune sequence.
   private var joinedNameToSource: Map[String, String] = Map.empty
   private def plainSide: Boolean =
-    aggFuncs.isEmpty && pushedLimit.isEmpty && !clusterByKind &&
-      !columnar && joinedMode.isEmpty
+    aggFuncs.isEmpty && pushedLimit.isEmpty && stride.isEmpty &&
+      !clusterByKind && !columnar && joinedMode.isEmpty
 
   override def isOtherSideCompatibleForJoin(other: SupportsPushDownJoin): Boolean =
     other match {
@@ -211,39 +218,59 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   }
   private var lo = 0L
   private var hi = rows
-  private var pushed = Array.empty[Filter]
+  // stride mode (q87): only ids ≡ r (mod m) are generated — the folded
+  // form of a pushed `id % m = r`
+  private var stride: Option[(Long, Long)] = None
+  private var pushed = Array.empty[Predicate]
   private var required = MetricsFeedSource.schema
   private var aggFuncs: Option[Seq[String]] = None
   private var pushedLimit: String = ""
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (acc, rest) = filters.partition {
-      case GreaterThanOrEqual("id", _: Long) => true
-      case GreaterThan("id", _: Long)        => true
-      case LessThan("id", _: Long)           => true
-      case LessThanOrEqual("id", _: Long)    => true
-      case EqualTo("id", _: Long)            => true
-      case _                                 => false
-    }
-    // strict bounds need v±1; saturate at Long.MaxValue — pushFilters
-    // reports these as fully handled (no residual Filter), so a wrapped
-    // increment would return rows the predicate excludes
-    acc.foreach {
-      case GreaterThanOrEqual("id", v: Long) => lo = math.max(lo, v)
-      case GreaterThan("id", v: Long)        =>
-        lo = if (v == Long.MaxValue) math.max(lo, hi) else math.max(lo, v + 1)
-      case LessThan("id", v: Long)           => hi = math.min(hi, v)
-      case LessThanOrEqual("id", v: Long)    =>
-        if (v != Long.MaxValue) hi = math.min(hi, v + 1)
-      case EqualTo("id", v: Long)            =>
-        lo = math.max(lo, v)
-        if (v != Long.MaxValue) hi = math.min(hi, v + 1)
-      case _                                 => ()
+  // ---- SupportsPushDownV2Filters: comparisons of `id` with a literal
+  // fold into the range; `id % m = r` — a FUNCTION-BEARING leaf the V1
+  // Filter API cannot express — folds into a STRIDE-m lattice scan (each
+  // slice walks only ids ≡ r mod m: a modulo shard-probe costs 1/m of the
+  // feed over the wire). Anything else, a malformed residue included,
+  // stays residual (soundness over coverage). The stride declines under
+  // clusterByKind and columnar, and every face that assumes contiguous
+  // ids (aggregate, limit/topN, offset, join) declines once it is pushed.
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val (acc, rest) = predicates.partition {
+      case V2Leaf(t, op @ (">=" | ">" | "<" | "<=" | "="), Seq(v: java.lang.Long))
+          if isCol(t, "id") =>
+        clamp(op, v); true
+      case V2Leaf(IdMod(m), "=", Seq(r: java.lang.Long))
+          if r >= 0 && r < m && stride.isEmpty && !clusterByKind && !columnar =>
+        stride = Some((m, r.longValue)); true
+      case _ => false
     }
     pushed = acc
     rest
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
+  /** `id % m` with a literal m: the one function-bearing term folded. */
+  private object IdMod {
+    def unapply(e: V2Expression): Option[Long] = e match {
+      case g: GeneralScalarExpression if g.name == "%" => g.children match {
+        case Array(a, l: V2Lit[_]) if isCol(a, "id") => l.value match {
+          case m: java.lang.Long => Some(m.longValue)
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+  // strict bounds need v±1; saturate at Long.MaxValue — a folded
+  // predicate is reported fully handled (no residual Filter), so a
+  // wrapped increment would return rows the predicate excludes
+  private def clamp(op: String, v: Long): Unit = op match {
+    case ">=" => lo = math.max(lo, v)
+    case ">"  => lo = if (v == Long.MaxValue) math.max(lo, hi) else math.max(lo, v + 1)
+    case "<"  => hi = math.min(hi, v)
+    case "<=" => if (v != Long.MaxValue) hi = math.min(hi, v + 1)
+    case "="  => clamp(">=", v); clamp("<=", v)
+  }
   override def pruneColumns(requiredSchema: StructType): Unit =
     // in joined mode the engine prunes the JOINED (aliased) schema; the
     // per-field sources are resolved at build() against the frozen
@@ -259,6 +286,7 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   // pruned span (the federation lever: a dashboard's top-k probe costs
   // k rows of feed, not a full scan).
   override def pushLimit(limit: Int): Boolean = {
+    if (stride.nonEmpty) return false
     hi = math.min(hi, lo + limit)
     pushedLimit = s"limit:$limit"
     MetricsFeedSource.lastPushedLimit = pushedLimit
@@ -274,7 +302,7 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   override def pushTopN(orders: Array[V2SortOrder], limit: Int): Boolean = {
     val idAsc = orders.length == 1 && isCol(orders(0).expression, "id") &&
       orders(0).direction == SortDirection.ASCENDING
-    if (!idAsc) return false
+    if (!idAsc || stride.nonEmpty) return false
     hi = math.min(hi, lo + limit)
     pushedLimit = s"topn:$limit"
     MetricsFeedSource.lastPushedLimit = pushedLimit
@@ -295,13 +323,15 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   // scan costs exactly its result's rows over the wire, never a full
   // scan post-filtered.
   override def pushOffset(n: Int): Boolean = {
-    if (aggFuncs.nonEmpty) return false
-    lo = math.min(hi, lo + n)
+    if (aggFuncs.nonEmpty || stride.nonEmpty) return false
+    // an empty range stays empty (lo near Long.MaxValue would wrap lo + n)
+    if (lo < hi) lo = math.min(hi, lo + n)
     MetricsFeedSource.lastPushedOffset = s"offset:$n -> [$lo,$hi)"
     true
   }
   override def pushTableSample(lower: Double, upper: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
+    // pushed BEFORE any predicate (rule order), so no stride exists yet
     if (withReplacement || aggFuncs.nonEmpty) return false
     val span = math.max(0L, hi - lo)
     val newLo = lo + math.floor(lower * span).toLong
@@ -319,8 +349,7 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
   // final merge, so parallelism survives and the 100 TB of feed rows
   // never cross the source boundary: |partitions|·|groups| rows do.
   private def isCol(e: V2Expression, name: String): Boolean = e match {
-    case f: org.apache.spark.sql.connector.expressions.NamedReference =>
-      f.fieldNames.sameElements(Array(name))
+    case f: NamedReference => f.fieldNames.sameElements(Array(name))
     case _ => false
   }
   override def supportCompletePushDown(agg: Aggregation): Boolean = false
@@ -330,7 +359,7 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
     // kind-partitioning, Spark plans the whole aggregate shuffle-free
     // over raw rows — pushing partials too would just hide which lever
     // did the work
-    if (clusterByKind) return false
+    if (clusterByKind || stride.nonEmpty) return false
     val groupOk = agg.groupByExpressions.length == 1 &&
       isCol(agg.groupByExpressions()(0), "kind")
     if (!groupOk) return false
@@ -355,94 +384,9 @@ class MetricsFeedScanBuilder(rows: Long, parts: Int,
       new MetricsFeedScan(rows, parts, lo, hi, required, pushed, streamStep,
         clusterByKind, pushedLimit, columnar,
         fieldSources = if (joinedMode.isDefined)
-          Some(required.fieldNames.map(joinedNameToSource)) else None)
+          Some(required.fieldNames.map(joinedNameToSource)) else None,
+        stride = stride)
   }
-}
-
-/** V2-PREDICATE scan builder (q87 — SupportsPushDownV2Filters,
-  * option-selected via v2filters=true because the V1 Filter face
-  * shadows it when both are implemented): the V2 Predicate tree can
-  * carry FUNCTION-BEARING predicates the V1 Filter API cannot express —
-  * here `id % k = r` (a GeneralScalarExpression("%") leaf), which folds
-  * into a STRIDE-k lattice scan: each planned slice walks only the ids
-  * ≡ r (mod k), so a modulo shard-probe costs 1/k of the feed over the
-  * wire instead of a full scan post-filtered. Plain id comparisons fold
-  * into the range exactly as the V1 path does (parity), anything else
-  * returns as residual for Spark to evaluate. */
-class MetricsFeedV2ScanBuilder(rows: Long, parts: Int)
-    extends ScanBuilder
-    with SupportsPushDownV2Filters with SupportsPushDownRequiredColumns {
-  import org.apache.spark.sql.connector.expressions.{GeneralScalarExpression, Literal => V2Lit}
-  private var lo = 0L
-  private var hi = rows
-  private var stride: Option[(Long, Long)] = None
-  private var pushed = Array.empty[Predicate]
-  private var required = MetricsFeedSource.schema
-
-  private def idRef(e: V2Expression): Boolean = e match {
-    case r: NamedReference => r.fieldNames.sameElements(Array("id"))
-    case _ => false
-  }
-  private def longLit(e: V2Expression): Option[Long] = e match {
-    case l: V2Lit[_] if l.value.isInstanceOf[java.lang.Long] =>
-      Some(l.value.asInstanceOf[Long])
-    case _ => None
-  }
-  /** id % k (the function-bearing leaf V1 cannot carry). */
-  private def idMod(e: V2Expression): Option[Long] = e match {
-    case g: GeneralScalarExpression
-        if g.name == "%" && g.children.length == 2 && idRef(g.children()(0)) =>
-      longLit(g.children()(1))
-    case _ => None
-  }
-  private def clamp(op: String, v: Long): Unit = op match {
-    case ">=" => lo = math.max(lo, v)
-    case ">"  => lo = if (v == Long.MaxValue) math.max(lo, hi)
-                      else math.max(lo, v + 1)
-    case "<"  => hi = math.min(hi, v)
-    case "<=" => if (v != Long.MaxValue) hi = math.min(hi, v + 1)
-    case "="  => clamp(">=", v); clamp("<=", v)
-  }
-  private def flip(op: String): String = op match {
-    case "<" => ">"
-    case "<=" => ">="
-    case ">" => "<"
-    case ">=" => "<="
-    case other => other
-  }
-
-  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
-    val residual = predicates.filterNot { p =>
-      val handled = (p.name(), p.children()) match {
-        case (op @ (">=" | ">" | "<" | "<=" | "="), Array(a, b))
-            if idRef(a) && longLit(b).isDefined =>
-          clamp(op, longLit(b).get); true
-        case (op @ (">=" | ">" | "<" | "<=" | "="), Array(a, b))
-            if longLit(a).isDefined && idRef(b) =>
-          clamp(flip(op), longLit(a).get); true
-        case ("=", Array(a, b))
-            if idMod(a).isDefined && longLit(b).isDefined && stride.isEmpty =>
-          val (m, r) = (idMod(a).get, longLit(b).get)
-          // only a well-formed residue class folds; anything else stays
-          // residual (soundness over coverage)
-          if (m > 0 && r >= 0 && r < m) { stride = Some((m, r)); true }
-          else false
-        case _ => false
-      }
-      if (handled) pushed :+= p
-      handled
-    }
-    MetricsFeedSource.lastPushedV2 =
-      s"[${pushed.map(_.describe()).mkString(", ")}] range=[$lo,$hi) " +
-        s"stride=${stride.map { case (m, r) => s"id%$m=$r" }.getOrElse("-")}"
-    residual
-  }
-  override def pushedPredicates(): Array[Predicate] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan =
-    new MetricsFeedScan(rows, parts, lo, hi, required, Array.empty,
-      stride = stride, v2Pushed = pushed)
 }
 
 /** Row-index offset for the micro-batch stream (exclusive high-water
@@ -564,10 +508,7 @@ class MetricsFeedMicroBatch(rows: Long, parts: Int, step: Long,
     val lo = start.asInstanceOf[MetricsFeedOffset].hwm
     val hi = end.asInstanceOf[MetricsFeedOffset].hwm
     if (lo < hi) MetricsFeedSource.streamIntervals.add((lo, hi))
-    val width = math.max(1L, (hi - lo + parts - 1) / parts)
-    (lo until hi by width).map { s =>
-      MetricsFeedPartition(s, math.min(s + width, hi)): InputPartition
-    }.toArray
+    MetricsFeedSource.slices(lo, hi, parts, lo, hi)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new MetricsFeedReaderFactory(required.fieldNames)
@@ -603,19 +544,18 @@ class MetricsFeedContinuousStream(rows: Long, parts: Int,
     extends org.apache.spark.sql.connector.read.streaming.ContinuousStream {
   import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, Offset, PartitionOffset}
 
+  private def parse(json: String): Map[Int, Long] =
+    json.split(",").filter(_.nonEmpty).map { s =>
+      val Array(r, n) = s.split(":"); r.toInt -> n.toLong
+    }.toMap
   private def decode(o: Offset): Map[Int, Long] = o match {
     case m: MetricsFeedContinuousOffset => m.next
-    case other => // restart delivers a SerializedOffset (the st20 lesson)
-      other.json().split(",").filter(_.nonEmpty).map { s =>
-        val Array(r, n) = s.split(":"); r.toInt -> n.toLong
-      }.toMap
+    case other => parse(other.json()) // restart delivers a SerializedOffset (the st20 lesson)
   }
   override def initialOffset(): Offset =
     MetricsFeedContinuousOffset((0 until parts).map(r => r -> r.toLong).toMap)
   override def deserializeOffset(json: String): Offset =
-    MetricsFeedContinuousOffset(json.split(",").filter(_.nonEmpty).map { s =>
-      val Array(r, n) = s.split(":"); r.toInt -> n.toLong
-    }.toMap)
+    MetricsFeedContinuousOffset(parse(json))
   override def planInputPartitions(start: Offset): Array[InputPartition] = {
     val m = decode(start)
     (0 until parts).map(r => MetricsFeedContinuousPartition(r,
@@ -657,7 +597,7 @@ class MetricsFeedContinuousStream(rows: Long, parts: Int,
   * (group column then agg columns, positional contract of
   * V2ScanRelationPushDown); each partition emits ≤ |kinds| rows. */
 class MetricsFeedAggScan(rows: Long, parts: Int, lo: Long, hi: Long,
-    funcs: Seq[String], pushed: Array[Filter]) extends Scan with Batch {
+    funcs: Seq[String], pushed: Array[Predicate]) extends Scan with Batch {
   override def readSchema(): StructType = StructType(
     StructField("kind", StringType, nullable = false) +:
       funcs.map(f => StructField(f, LongType, nullable = false)))
@@ -665,15 +605,10 @@ class MetricsFeedAggScan(rows: Long, parts: Int, lo: Long, hi: Long,
   override def description(): String =
     s"MetricsFeed range=[$lo,$hi) of $rows, " +
       s"PushedAggregates: [${funcs.mkString(", ")}] groupBy=[kind], " +
-      s"PushedFilters: ${pushed.mkString("[", ", ", "]")}"
+      s"PushedFilters: ${pushed.map(_.describe()).mkString("[", ", ", "]")}"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val width = math.max(1L, (rows + parts - 1) / parts)
-    val slices = (0L until rows by width).flatMap { s =>
-      val a = math.max(s, lo)
-      val b = math.min(s + width, hi)
-      if (a < b) Some(MetricsFeedPartition(a, b): InputPartition) else None
-    }.toArray
+    val slices = MetricsFeedSource.slices(0L, rows, parts, lo, hi)
     MetricsFeedSource.lastPlannedPartitions = slices.length
     MetricsFeedSource.lastPlannedRange = (lo, hi)
     MetricsFeedSource.rowsEmitted.set(0L)
@@ -689,7 +624,6 @@ class MetricsFeedAggReaderFactory(funcs: Array[String])
     val mp = p.asInstanceOf[MetricsFeedPartition]
     new PartitionReader[InternalRow] {
       // aggregate the slice once, up front: per-kind (count, sum, min, max)
-      private val kinds = Array("gauge", "counter", "timer")
       private val out: Array[InternalRow] = {
         val cnt = new Array[Long](3)
         val sum = new Array[Long](3)
@@ -706,7 +640,7 @@ class MetricsFeedAggReaderFactory(funcs: Array[String])
         }
         (0 until 3).filter(cnt(_) > 0).map { k =>
           val vals = new Array[Any](1 + funcs.length)
-          vals(0) = UTF8String.fromString(kinds(k))
+          vals(0) = UTF8String.fromString(MetricsFeedSource.kindOf(k))
           var i = 0
           while (i < funcs.length) {
             vals(1 + i) = funcs(i) match {
@@ -732,16 +666,15 @@ class MetricsFeedAggReaderFactory(funcs: Array[String])
 }
 
 class MetricsFeedScan(rows: Long, parts: Int, lo: Long, hi: Long,
-    required: StructType, pushed: Array[Filter],
+    required: StructType, pushed: Array[Predicate],
     streamStep: Long = 25000L, clusterByKind: Boolean = false,
     pushedLimit: String = "", columnar: Boolean = false,
     // joined mode (q83): per-field ORIGINAL feed column each (possibly
     // aliased) output field derives from — id_1 still reads "id"
     fieldSources: Option[Array[String]] = None,
     // stride mode (q87): only ids ≡ rem (mod m) are generated — the
-    // folded form of a pushed `id % m = rem` V2 predicate
-    stride: Option[(Long, Long)] = None,
-    v2Pushed: Array[Predicate] = Array.empty) extends Scan with Batch
+    // folded form of a pushed `id % m = rem`
+    stride: Option[(Long, Long)] = None) extends Scan with Batch
     with SupportsReportPartitioning with SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportOrdering {
   // Runtime (DPP) clamp: filter() only RECORDS the delivered id bounds;
@@ -781,11 +714,8 @@ class MetricsFeedScan(rows: Long, parts: Int, lo: Long, hi: Long,
     var cHi = Long.MaxValue
     var seen = 0
     predicates.foreach { p =>
-      val vals: Seq[Long] = p.name() match {
-        case "IN" | "=" => p.children().toSeq.collect {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_]
-            if l.value.isInstanceOf[Long] => l.value.asInstanceOf[Long]
-        }
+      val vals: Seq[Long] = V2Leaf.column(p) match {
+        case Some((_, "IN" | "=", vs)) => vs.collect { case v: java.lang.Long => v.longValue }
         case _ => Seq.empty
       }
       if (vals.nonEmpty) {
@@ -843,10 +773,7 @@ class MetricsFeedScan(rows: Long, parts: Int, lo: Long, hi: Long,
     new MetricsFeedContinuousStream(rows, parts, required)
   override def description(): String =
     s"MetricsFeed range=[$lo,$hi) of $rows, " +
-      s"PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
-      (if (v2Pushed.nonEmpty)
-        s"PushedV2Predicates: [${v2Pushed.map(_.describe()).mkString(", ")}], "
-       else "") +
+      s"PushedFilters: ${pushed.map(_.describe()).mkString("[", ", ", "]")}, " +
       stride.map { case (m, r) => s"Stride: id%$m=$r, " }.getOrElse("") +
       (if (pushedLimit.nonEmpty) s"PushedLimit: $pushedLimit, " else "") +
       (if (clusterByKind) "KeyGroupedBy: [kind], " else "") +
@@ -895,24 +822,18 @@ class MetricsFeedScan(rows: Long, parts: Int, lo: Long, hi: Long,
     val slices: Array[InputPartition] =
       if (clusterByKind) {
         // one stride-3 split per kind; every split carries its partition
-        // key (HasPartitionKey — without it Spark ignores the report)
+        // key (HasPartitionKey — without it Spark ignores the report).
+        // Bounds stay inside [0, rows], so no id walk can wrap.
+        val end = math.max(0L, rhi)
         (0 until 3).map { k =>
-          MetricsFeedKindPartition(rlo, rhi, k): InputPartition
+          MetricsFeedKindPartition(math.min(rlo, end), end, k): InputPartition
         }.toArray
       } else {
-        // fixed-width slices of the FULL row space (the feed's "files");
-        // slices wholly outside the pushed (or runtime-clamped) range
-        // never plan. In stride mode (q87) each slice walks only its
-        // residue class — same slicing, 1/m of the rows generated.
-        val width = math.max(1L, (rows + parts - 1) / parts)
-        (0L until rows by width).flatMap { s =>
-          val a = math.max(s, rlo)
-          val b = math.min(s + width, rhi)
-          if (a < b) Some(stride match {
-            case Some((m, r)) => MetricsFeedStridePartition(a, b, m, r): InputPartition
-            case None         => MetricsFeedPartition(a, b): InputPartition
-          }) else None
-        }.toArray
+        // slices outside the pushed (or runtime-clamped) range never
+        // plan. In stride mode (q87) each slice walks only its residue
+        // class — same slicing, 1/m of the rows generated.
+        val (m, r) = stride.getOrElse((1L, 0L))
+        MetricsFeedSource.slices(0L, rows, parts, rlo, rhi, m, r)
       }
     MetricsFeedSource.lastPlannedPartitions = slices.length
     MetricsFeedSource.lastPlannedRange = (rlo, rhi)
@@ -945,17 +866,26 @@ case class FeedTaskMetric(metricName: String, metricValue: Long)
   override def value(): Long = metricValue
 }
 
-case class MetricsFeedPartition(start: Long, end: Long) extends InputPartition
+/** What every batch and micro-batch row slice reads: the ids ≡ rem
+  * (mod step) within [start, end). */
+sealed trait MetricsFeedSlice extends InputPartition {
+  def start: Long
+  def end: Long
+  def step: Long
+  def rem: Long
+}
 
-/** Stride slice (q87): ids ≡ rem (mod m) within [start, end) — the
-  * physical form of a pushed `id % m = rem` predicate. */
-case class MetricsFeedStridePartition(start: Long, end: Long,
-    mod: Long, rem: Long) extends InputPartition
+/** A range slice (step 1), or a stride slice (q87): the physical form of
+  * a pushed `id % step = rem`. */
+case class MetricsFeedPartition(start: Long, end: Long,
+    step: Long = 1L, rem: Long = 0L) extends MetricsFeedSlice
 
 /** A per-kind split: ids ≡ kind (mod 3) within [start, end), declaring
   * its partition key for KeyGroupedPartitioning. */
 case class MetricsFeedKindPartition(start: Long, end: Long, kind: Int)
-    extends InputPartition with HasPartitionKey {
+    extends MetricsFeedSlice with HasPartitionKey {
+  override def step: Long = 3L
+  override def rem: Long = kind.toLong
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(MetricsFeedSource.kindOf(kind))))
@@ -983,50 +913,26 @@ class MetricsFeedReaderFactory(fields: Array[String],
     Array[org.apache.spark.sql.connector.metric.CustomTaskMetric](
       FeedTaskMetric("feed_rows_read", rows))
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case mp: MetricsFeedPartition => new PartitionReader[InternalRow] {
-        private var cur = mp.start - 1
-        private var n = 0L
-        override def next(): Boolean =
-          { cur += 1; val ok = cur < mp.end; if (ok) n += 1; ok }
-        override def get(): InternalRow = rowAt(cur)
-        override def currentMetricsValues() = taskMetrics(n)
-        override def close(): Unit = ()
-      }
-      case kp: MetricsFeedKindPartition => new PartitionReader[InternalRow] {
-        // first id >= start with id % 3 == kind, then stride 3
-        private var cur = {
-          val rem = ((kp.kind - kp.start) % 3 + 3) % 3
-          kp.start + rem - 3
-        }
-        private var n = 0L
-        override def next(): Boolean =
-          { cur += 3; val ok = cur < kp.end; if (ok) n += 1; ok }
-        override def get(): InternalRow = rowAt(cur)
-        override def currentMetricsValues() = taskMetrics(n)
-        override def close(): Unit = ()
-      }
-      case sp: MetricsFeedStridePartition => new PartitionReader[InternalRow] {
-        // first id >= start with id % mod == rem, then stride mod (q87)
-        private var cur = {
-          val rem = ((sp.rem - sp.start) % sp.mod + sp.mod) % sp.mod
-          sp.start + rem - sp.mod
-        }
-        private var n = 0L
-        override def next(): Boolean =
-          { cur += sp.mod; val ok = cur < sp.end; if (ok) n += 1; ok }
-        override def get(): InternalRow = rowAt(cur)
-        override def currentMetricsValues() = taskMetrics(n)
-        override def close(): Unit = ()
-      }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val sl = p.asInstanceOf[MetricsFeedSlice]
+    new PartitionReader[InternalRow] {
+      // first id >= start with id ≡ rem (mod step), then every step-th id
+      private var cur = sl.start + Math.floorMod(sl.rem - sl.start, sl.step) - sl.step
+      private var n = 0L
+      override def next(): Boolean =
+        { cur += sl.step; val ok = cur < sl.end; if (ok) n += 1; ok }
+      override def get(): InternalRow = rowAt(cur)
+      override def currentMetricsValues() = taskMetrics(n)
+      override def close(): Unit = ()
     }
+  }
 
   // ---- COLUMNAR read path (q66 — the throughput face of the connector
   // matrix): the reader fills OnHeapColumnVector batches directly, so
   // the scan feeds whole-stage codegen's vectorized loop without a
   // per-row InternalRow allocation; Spark inserts ColumnarToRow above
   // the scan (PlanSpec-gated) exactly as it does for vectorized parquet.
+  // Range slices only: a stride never folds under `columnar`.
   override def supportColumnarReads(p: InputPartition): Boolean =
     columnar && p.isInstanceOf[MetricsFeedPartition]
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Graph
 
 /** Property coverage for the one-shot graph combinatorics (t15
-  * triangles, t18 k-core): on random Erdős–Rényi graphs the
+  * triangles, t18 k-core, d9's components cap): on random Erdős–Rényi graphs the
   * degree-oriented distributed implementations must equal plain Scala
   * brute-force references. This pins the orientation logic (the
   * (degree, name) total order, tie-breaks) and the peel cascade —
@@ -77,6 +77,21 @@ class GraphPropertySpec extends AnyFunSuite {
       Graph.kCore(path.toDF("a", "b"), k = 2, maxIters = 3).collect()
     }
     assert(e.getMessage.contains("fixpoint"))
+  }
+
+  test("connectedComponents: a path longer than maxIters throws; the default cap gives one component") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // min-label propagation moves a label one hop per round, so a
+    // 12-node path needs 11 rounds, plus one to see the fixpoint
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(path, maxIters = 4)
+    }
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    val got = Dedup.connectedComponents(path).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L to 11L).map(_ -> 0L).toMap, got)
   }
 
   test("kCore equals brute peel-to-fixpoint on 10 random graphs across k") {

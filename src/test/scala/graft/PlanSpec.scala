@@ -1200,10 +1200,9 @@ class PlanSpec extends AnyFunSuite {
     assert(desc.head.getLong(0) == 199999L)
   }
 
-  test("q87: V2 predicate id%3=1 folds to a stride scan with zero Filter; the V1 face declines the same predicate") {
+  test("q87: V2 predicate id%3=1 folds to a stride scan with zero Filter; a malformed residue stays a Filter") {
     import org.apache.spark.sql.functions._
     import graft.sources.MetricsFeedSource
-    MetricsFeedSource.lastPushedV2 = ""
     val df = SparkEntry.queries("q87_v2_predicates")(spark, sf)
     val out = df.collect()
     // ids ≡ 1 (mod 3) in [15000, 60000): 15000 rows over all 50 nodes
@@ -1212,25 +1211,13 @@ class PlanSpec extends AnyFunSuite {
     val p = df.queryExecution.executedPlan.toString
     // fully pushed: the stride is IN the scan, no Filter node remains
     assert(p.contains("Stride: id%3=1"), p)
-    assert(p.contains("PushedV2Predicates:"), p)
+    assert(p.contains("PushedFilters: [(id % 3) = 1, id >= 15000]"), p)
     assert(!p.contains("Filter ("), p)
-    assert(MetricsFeedSource.lastPushedV2.contains("stride=id%3=1"),
-      MetricsFeedSource.lastPushedV2)
     assert(MetricsFeedSource.lastPlannedRange == ((15000L, 60000L)))
-    // the V1 Filter face CANNOT express the modulo — it stays a plan
-    // Filter there (the reason the V2 face exists)
-    val s = spark.newSession()
-    val v1 = s.read.format("graft.sources.MetricsFeedSource")
+    // a malformed residue (r >= m) stays residual
+    val feed = spark.newSession().read.format("graft.sources.MetricsFeedSource")
       .option("rows", "60000").option("partitions", "8").load()
-      .filter(col("id") % 3 === 1)
-    val p1 = v1.queryExecution.executedPlan.toString
-    assert(p1.contains("Filter ("), p1)
-    assert(v1.count() == 20000L)
-    // and a malformed residue (r >= m) stays residual on the V2 face too
-    val v2 = s.read.format("graft.sources.MetricsFeedSource")
-      .option("rows", "60000").option("partitions", "8")
-      .option("v2filters", "true").load()
-    val odd = v2.filter(col("id") % 3 === 5)
+    val odd = feed.filter(col("id") % 3 === 5)
     assert(odd.count() == 0L)
     assert(odd.queryExecution.executedPlan.toString.contains("Filter ("))
   }
@@ -1261,7 +1248,7 @@ class PlanSpec extends AnyFunSuite {
     MetricsFeedSource.lastPushedSample = ""
     val blocked = feed.filter(col("id") < 80000L).sample(0.3, 42L)
     val bp = blocked.queryExecution.executedPlan.toString
-    assert(bp.contains("Sample") && bp.contains("LessThan(id,80000)"), bp)
+    assert(bp.contains("Sample") && bp.contains("id < 80000"), bp)
     assert(MetricsFeedSource.lastPushedSample == "",
       MetricsFeedSource.lastPushedSample)
     // OFFSET composes BEHIND the complete limit push: page [40000, 40500)
