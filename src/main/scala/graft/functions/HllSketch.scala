@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared 64-register HyperLogLog derivation — the common core of
-  * m35 (batch corpus sketch) and st11 (windowed streaming sketch).
+  * m35 (batch corpus sketch), m45 (per-segment sketches and their
+  * algebra) and st11 (windowed streaming sketch).
   *
   * Register index = first two md5 hex digits mod 64; rank = 1 + number
   * of leading zero BITS of the next 48 bits, derived integer-exactly
@@ -35,7 +36,9 @@ object HllSketch {
 
   /** 64 register agg columns r0..r63 = max rank seen per register —
     * the k-agg-columns shape (st10/LSH precedent): mergeable by max,
-    * legal in a streaming windowed agg, 64 longs of state per group. */
+    * legal in a streaming windowed agg, 64 longs of state per group.
+    * st11 needs this form: a streaming windowed aggregation cannot
+    * chain the two aggregations of `registerVectors`. */
   def registerAggs: Seq[Column] =
     (0 until registers).map(i => max(when(col("idx") === i, col("rnk"))).as(s"r$i"))
 
@@ -58,4 +61,23 @@ object HllSketch {
     s"2904064 * CAST(1099511627776 AS BIGINT) div (1000 * ($sCol div 1024))"
 
   val estimateExpr: String = estimateOf("s_total")
+
+  /** One dense register vector per group from `withIndexRank` rows —
+    * the tall form: `groupBy(group, idx).max(rnk)` (at most 64 rows per
+    * group), then one `collect_list` per group, densified to `regs`
+    * (array of 64 ints, an absent register as rank 0), and `est` from
+    * the harmonic sum over `regs`. Wins over the 64 wide `registerAggs`
+    * columns when groups are few (m45: event types × 64). A null `idx`
+    * (null key) is no register; its group still gets a row, all zeros. */
+  def registerVectors(hashed: DataFrame, group: String): DataFrame =
+    hashed.groupBy(col(group), col("idx")).agg(max(col("rnk")).as("mreg"))
+      .groupBy(col(group))
+      .agg(map_from_entries(collect_list(
+        when(col("idx").isNotNull, struct(col("idx"), col("mreg"))))).as("_m"))
+      .withColumn("regs", expr(
+        s"transform(sequence(0, ${registers - 1}), i -> coalesce(_m[i], 0))"))
+      .withColumn("est", expr(estimateOf(
+        "aggregate(regs, CAST(0 AS BIGINT), " +
+        "(acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), CAST(50 - r AS INT)))")))
+      .select(col(group), col("regs"), col("est"))
 }

@@ -936,6 +936,14 @@ object MonitoringQueries {
     // nibbles (engine-portable integer arithmetic, no native hash);
     // emitted next to the exact counts for the top-20 keys so the
     // one-sided error (cms_n ≥ true_n) is visible and oracle-checked.
+    // Scale shape: the corpus is aggregated ONCE to exact per-key
+    // counts; the ×4 explode and the salted md5 run on that per-key
+    // frame (one digest per distinct key and row, not per event), each
+    // sketch cell is sum(true_n) over its keys — the same cell as
+    // counting every event — read back per key by a window over the
+    // (row, bucket) cell, and the estimate is min over the key's four
+    // cells. A null key never reaches a cell (the oracle's null bucket
+    // joins nothing).
     QueryKey("m32_cms_heavy_hitters",
       """WITH k AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
         |r AS (SELECT key, i AS r,
@@ -948,22 +956,19 @@ object MonitoringQueries {
         |  FROM (SELECT DISTINCT key, r, b FROM r) d JOIN sk USING (r, b) GROUP BY key)
         |SELECT key, true_n, cms_n FROM truec JOIN est USING (key)
         |ORDER BY true_n DESC, key LIMIT 20""".stripMargin) { (s, dir) =>
-      val keys = Tables.events(s, dir)
+      val trueCounts = Tables.events(s, dir)
         .select(col("user_id").cast("string").as("key"))
-      val bucketed = keys.select(col("key"),
+        .filter(col("key").isNotNull)
+        .groupBy(col("key")).agg(count(lit(1)).as("true_n"))
+      val cell = org.apache.spark.sql.expressions.Window.partitionBy(col("r"), col("b"))
+      trueCounts.select(col("key"), col("true_n"),
           explode(array((0 until 4).map(i => lit(i)): _*)).as("r"))
         .withColumn("_m", md5(concat(lit("cms"), col("r"), lit("|"), col("key"))))
         .withColumn("b", expr(
           "(instr('0123456789abcdef', substr(_m, 1, 1)) - 1) * 16 + " +
           "(instr('0123456789abcdef', substr(_m, 2, 1)) - 1)"))
-        .select(col("key"), col("r"), col("b"))
-      val sketch = bucketed.groupBy(col("r"), col("b"))
-        .agg(count(lit(1)).as("c"))
-      val trueCounts = keys.groupBy(col("key")).agg(count(lit(1)).as("true_n"))
-      val est = bucketed.distinct()
-        .join(broadcast(sketch), Seq("r", "b"))
-        .groupBy(col("key")).agg(min(col("c")).as("cms_n"))
-      trueCounts.join(est, Seq("key"))
+        .withColumn("c", sum(col("true_n")).over(cell))
+        .groupBy(col("key"), col("true_n")).agg(min(col("c")).as("cms_n"))
         .orderBy(col("true_n").desc, col("key"))
         .limit(20)
     },
@@ -1382,9 +1387,13 @@ object MonitoringQueries {
     // linear-counting correction, so est/exact/err_bp are reproducible
     // bit-for-bit in both engines. Scale shape: one 64-group partial
     // agg over the stream, a 64→1 fold, and a broadcast of the 1-row
-    // exact count for the error column.
+    // exact count for the error column. Null keys are dropped before
+    // hashing in both engines, as exact_distinct drops them: a null
+    // hash is no register, and a null idx group would count in n_hit
+    // but add nothing to the harmonic sum.
     QueryKey("m35_hll_distinct",
-      """WITH h AS (SELECT md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
+      """WITH h AS (SELECT md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events
+        |  WHERE user_id IS NOT NULL),
         |rk AS (SELECT
         |    ((strpos('0123456789abcdef', substr(_h, 1, 1)) - 1) * 16 +
         |     (strpos('0123456789abcdef', substr(_h, 2, 1)) - 1)) % 64 AS idx,
@@ -1410,6 +1419,7 @@ object MonitoringQueries {
         |  CAST(abs(est_distinct - exact_distinct) * 10000 // exact_distinct AS BIGINT) AS err_bp
         |FROM est""".stripMargin) { (s, dir) =>
       val keys = Tables.events(s, dir).select(col("user_id").cast("string").as("key"))
+        .filter(col("key").isNotNull)
       val hashed = graft.functions.HllSketch.withIndexRank(keys, col("key"))
       val regs = hashed.groupBy(col("idx")).agg(max(col("rnk")).as("mreg"))
       val sketch = regs.agg(count(lit(1)).cast("int").as("n_hit"),
@@ -1481,22 +1491,6 @@ object MonitoringQueries {
         .orderBy(col("event_type"))
     },
 
-    // DOMAIN-FREE quantile sketch — m43's fixed 64-cent grid assumes a
-    // bounded, known value domain; this is the unbounded-domain sibling
-    // (the HdrHistogram/DDSketch shape monitoring systems actually
-    // ship): LOG-scaled bins with 16 sub-buckets per octave, built from
-    // pure integer bit arithmetic — the octave is length(bin(v))-1
-    // (integer floor-log2 via the binary-string length, identical in
-    // DuckDB; log2() itself is libm and never cross-engine-safe) and
-    // the sub-bucket is a 4-bit mantissa shift. Bins grow with the LOG
-    // of the domain (~16/octave), so the demonstration metric spreads
-    // cents across 24 octaves of per-user unit scale (ns-to-hours
-    // mixed-unit reality, ~2^39 max) — a domain where m43's grid would
-    // need ~6e9 bins and this sketch uses a few hundred. Estimates are
-    // the bin's inclusive max: never under the true quantile, at most
-    // 1/16 (6.25%) relative error above — rank selection and merge are
-    // the same integer cum-sum guard and count addition as m43
-    // (per-day partials merged exactly; proven in QuantileSketchSpec).
     // IPv4 parse + /24 subnet rollup — the SIEM ingest path the
     // reference's domain (FortiSIEM network telemetry) lives on: IPs
     // arrive as TEXT and every aggregation needs them back as
@@ -1684,6 +1678,26 @@ object MonitoringQueries {
         .orderBy(col("user_id"))
     },
 
+    // DOMAIN-FREE quantile sketch — m43's fixed 64-cent grid assumes a
+    // bounded, known value domain; this is the unbounded-domain sibling
+    // (the HdrHistogram/DDSketch shape monitoring systems actually
+    // ship): LOG-scaled bins with 16 sub-buckets per octave, built from
+    // pure integer bit arithmetic — the octave is length(bin(v))-1
+    // (integer floor-log2 via the binary-string length, identical in
+    // DuckDB; log2() itself is libm and never cross-engine-safe) and
+    // the sub-bucket is a 4-bit mantissa shift. Bins grow with the LOG
+    // of the domain (~16/octave), so the demonstration metric spreads
+    // cents across 24 octaves of per-user unit scale (ns-to-hours
+    // mixed-unit reality, ~2^39 max) — a domain where m43's grid would
+    // need ~6e9 bins and this sketch uses a few hundred. Estimates are
+    // the bin's inclusive max: never under the true quantile, at most
+    // 1/16 (6.25%) relative error above — rank selection is the same
+    // integer cum-sum guard as m43. Scale shape: the corpus work is ONE
+    // partial-agg groupBy(event_type, qbin); no output depends on the
+    // day, so the builder bins the full corpus directly (like m43: the
+    // per-day partials merge to it exactly by count addition, the
+    // property QuantileSketchSpec proves), and the cum-sum window runs
+    // on the ≤ |types| × bins sketch rows.
     QueryKey("m47_log_quantile",
       """WITH ev AS (SELECT event_type,
         |    CAST(round(value * 100) AS BIGINT) *
@@ -1713,15 +1727,12 @@ object MonitoringQueries {
       val binned = Tables.events(s, dir)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT) * " +
-            "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 24 AS INT))").as("v"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
-        .select(col("event_type"), col("day"),
+            "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 24 AS INT))").as("v"))
+        .select(col("event_type"),
           expr("CASE WHEN v < 16 THEN v ELSE 16 * (length(bin(v)) - 1) + " +
             "v div shiftleft(CAST(1 AS BIGINT), length(bin(v)) - 5) - 64 END").as("qbin"))
-      val daily = binned.groupBy(col("event_type"), col("day"), col("qbin"))
+      val merged = binned.groupBy(col("event_type"), col("qbin"))
         .agg(count(lit(1)).as("c"))
-      val merged = daily.groupBy(col("event_type"), col("qbin"))
-        .agg(sum(col("c")).as("c"))
       val byType = Window.partitionBy(col("event_type"))
       val cum = merged
         .withColumn("n", sum(col("c")).over(byType))
@@ -1746,13 +1757,15 @@ object MonitoringQueries {
     // budget fast. Thresholds are SELF-CALIBRATING against the global
     // error rate (5m ≥ 2×, 1h ≥ 1.2× the corpus rate in integer bp) —
     // no fixture-tuned constants. Scale shape: ONE corpus pass partial-
-    // aggregates into 5-min buckets; the 1-h cadence re-aggregates
-    // those bucket rows (m24's single-scan rollup move), the global
-    // rate is a broadcast 1-row aggregate, and the bucket↔hour join
-    // runs on time-proportional aggregate rows — the corpus is never
-    // touched again. All rates are integer bp (e·10000 div n, n ≥ 1 by
-    // construction); the ×10/×12 integer forms express the 1.2 factor
-    // without floats.
+    // aggregates into 5-min buckets, and every coarser rollup is a
+    // window over those bucket rows, never a self-join: the 1-h sums
+    // partition by b5 div 12, and the global rate is a whole-frame
+    // window — one partition, bounded by one row per 5-minute bucket,
+    // the output's own row count. The null-ts bucket counts in the
+    // global rate and is filtered out after the windows, as the
+    // oracle's inner hour join drops it. All rates are integer bp
+    // (e·10000 div n, n ≥ 1 by construction); the ×10/×12 integer forms
+    // express the 1.2 factor without floats.
     QueryKey("m44_burn_rate",
       s"""WITH b5 AS (SELECT $tsUs // 300000000 AS b5,
          |    CAST(count(*) AS BIGINT) AS n,
@@ -1772,12 +1785,12 @@ object MonitoringQueries {
           when(col("event_type") === "error", 1L).otherwise(0L).as("is_err"))
         .groupBy(col("b5"))
         .agg(count(lit(1)).as("n"), sum(col("is_err")).as("e"))
-      val h = b5.groupBy(expr("b5 div 12").as("bh"))
-        .agg(sum(col("n")).as("nh"), sum(col("e")).as("eh"))
-      val g = b5.agg(expr("sum(e) * 10000 div sum(n)").as("g_bp"))
-      b5.withColumn("bh", expr("b5 div 12"))
-        .join(h, Seq("bh"))
-        .crossJoin(broadcast(g))
+      val hour = org.apache.spark.sql.expressions.Window.partitionBy(col("bh"))
+      b5.withColumn("g_bp", expr("sum(e) OVER () * 10000 div sum(n) OVER ()"))
+        .withColumn("bh", expr("b5 div 12"))
+        .withColumn("nh", sum(col("n")).over(hour))
+        .withColumn("eh", sum(col("e")).over(hour))
+        .filter(col("b5").isNotNull)
         .withColumn("err5_bp", expr("e * 10000 div n"))
         .withColumn("err1h_bp", expr("eh * 10000 div nh"))
         .withColumn("fast_burn",
@@ -1795,13 +1808,17 @@ object MonitoringQueries {
     // the union of keys), so cross-segment distinct counts come from
     // stored sketch rows without rescanning the corpus. The union
     // estimate then yields intersection / Jaccard by inclusion-
-    // exclusion. Scale shape: ONE corpus pass partial-aggregates 64
-    // register columns per segment (64 longs of state each); pairing
-    // runs IN-ROW on one collected row of segment sketches (|types| ×
-    // 64 ints) — never a corpus self-join (branch-reuse trap, CLAUDE
-    // §traps). All arithmetic engine-portable integers: ranks, shifted
-    // harmonic terms, the m35 estimate division, inclusion-exclusion,
-    // truncating Jaccard bp.
+    // exclusion. Scale shape: ONE corpus pass partial-aggregates into
+    // the tall (segment, register) grid — at most |types| × 64 max-rank
+    // rows, not 64 conditional agg columns per segment — and each
+    // segment's dense vector is one collect_list of its ≤ 64 rows
+    // (HllSketch.registerVectors); pairing runs IN-ROW on one collected
+    // row of segment sketches (|types| × 64 ints) — never a corpus
+    // self-join (the branch-reuse trap). A null user_id
+    // hashes to a null register index: no register, as the oracle's
+    // grid LEFT JOIN drops it. All arithmetic engine-portable integers:
+    // ranks, shifted harmonic terms, the m35 estimate division,
+    // inclusion-exclusion, truncating Jaccard bp.
     QueryKey("m45_hll_algebra",
       """WITH h AS (SELECT event_type, md5('hll|' || CAST(user_id AS VARCHAR)) AS _h FROM events),
         |rk AS (SELECT event_type,
@@ -1841,15 +1858,7 @@ object MonitoringQueries {
       val hashed = HllSketch.withIndexRank(
         Tables.events(s, dir).select(col("event_type"), col("user_id")),
         col("user_id"))
-      val aggs = HllSketch.registerAggs
-      val perType = hashed.groupBy(col("event_type"))
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("s_total", expr(HllSketch.sTotalExpr))
-        .withColumn("est", expr(HllSketch.estimateExpr))
-        .withColumn("regs", array((0 until HllSketch.registers)
-          .map(i => coalesce(col(s"r$i"), lit(0))): _*))
-        .select(col("event_type"), col("regs"), col("est"))
-      perType
+      HllSketch.registerVectors(hashed, "event_type")
         .agg(expr("array_sort(collect_list(struct(event_type, regs, est)))").as("sk"))
         .select(explode(expr(
           "flatten(transform(sequence(1, size(sk) - 1), i -> " +

@@ -599,6 +599,30 @@ class PlanSpec extends AnyFunSuite {
     // one corpus scan (a single relation leaf), no self-join of the sketch
     assert(p.linesIterator.count(_.contains("Relation")) == 1, p)
     assert(!p.contains("Join"), p)
+    // register vectors are the tall (type, idx) grid, not 64 wide columns
+    assert("\\br63\\b".r.findFirstIn(p).isEmpty, p)
+  }
+
+  test("m32: the corpus is aggregated once per key before the ×4 explode and its md5") {
+    val p = SparkEntry.queries("m32_cms_heavy_hitters")(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    val lines = p.linesIterator.toSeq
+    assert(lines.count(_.contains("Relation")) == 1, p)
+    assert(!p.contains("Join"), p)
+    // tree strings print parents first: the Generate sits above the
+    // per-key count, so md5 runs once per (distinct key, row)
+    val generate = lines.indexWhere(_.contains("Generate"))
+    val perKey = lines.indexWhere(l => l.contains("Aggregate") && l.contains("AS true_n"))
+    assert(generate >= 0 && perKey > generate, p)
+    assert(lines.drop(perKey).forall(l => !l.contains("md5")), p)
+  }
+
+  test("m44: the hour and global rollups are windows over the 5-min rows — no join of any kind") {
+    val df = SparkEntry.queries("m44_burn_rate")(spark, sf)
+    val p = df.queryExecution.optimizedPlan.toString + df.queryExecution.executedPlan.toString
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
+    assert(df.queryExecution.optimizedPlan.toString.linesIterator
+      .count(_.contains("Relation")) == 1, p)
   }
 
   test("p11: day predicate prunes partitions at the scan — no day filter post-scan") {
@@ -686,6 +710,8 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("m47_log_quantile")
     assert(p.contains("partial_"), p)
     assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
+    // no output depends on the day: the corpus bins straight to (type, qbin)
+    assert("\\bday\\b".r.findFirstIn(p).isEmpty && !p.contains("86400000000"), p)
   }
 
   test("st12: domain-free p95 aggregates map-side — one window groupBy, no join, no per-event sort") {

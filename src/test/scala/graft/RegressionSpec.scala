@@ -167,32 +167,31 @@ class RegressionSpec extends AnyFunSuite {
   test("HLL max-merge of segment sketches IS the sketch of the union — exactly") {
     import spark.implicits._
     import graft.functions.HllSketch
-    // segments overlap: A = 1..300, B = 200..500 (union 1..500)
+    // segments overlap: A = 1..300, B = 200..500 (union 1..500); the
+    // vectors come from registerVectors, the code m45 runs
     val rows = ((1 to 300).map(i => ("A", i)) ++ (200 to 500).map(i => ("B", i)))
       .toDF("seg", "key")
-    def regsOf(df: org.apache.spark.sql.DataFrame, by: Seq[String]) = {
-      val aggs = HllSketch.registerAggs
-      val h = HllSketch.withIndexRank(df, col("key"))
-      (if (by.isEmpty) h.groupBy() else h.groupBy(by.map(col): _*))
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("s_total", expr(HllSketch.sTotalExpr))
-        .withColumn("est", expr(HllSketch.estimateExpr))
-    }
-    val perSeg = regsOf(rows, Seq("seg"))
-      .withColumn("regs", array((0 until HllSketch.registers)
-        .map(i => coalesce(col(s"r$i"), lit(0))): _*))
-      .select("seg", "regs", "est").collect().sortBy(_.getString(0))
-    val Seq(a, b) = perSeg.toSeq
+    def vectorsOf(df: org.apache.spark.sql.DataFrame) =
+      HllSketch.registerVectors(HllSketch.withIndexRank(df, col("key")), "seg")
+        .collect().sortBy(_.getString(0))
+    val Seq(a, b) = vectorsOf(rows).toSeq
     val merged = a.getSeq[Int](1).zip(b.getSeq[Int](1)).map { case (x, y) => math.max(x, y) }
     val sUnion = merged.map(r => 1L << (50 - r)).sum
     val estUnion = 2904064L * 1099511627776L / (1000L * (sUnion / 1024))
     // direct sketch over the distinct union of keys
-    val direct = regsOf((1 to 500).map(i => ("U", i)).toDF("seg", "key"), Seq.empty)
-      .select("est").collect().head.getLong(0)
-    assert(estUnion == direct,
-      s"max-merge estimate $estUnion != direct union sketch $direct")
+    val direct = vectorsOf((1 to 500).map(i => ("U", i)).toDF("seg", "key")).head
+    assert(merged == direct.getSeq[Int](1), "max-merged registers != union registers")
+    assert(estUnion == direct.getLong(2),
+      s"max-merge estimate $estUnion != direct union sketch ${direct.getLong(2)}")
     // union estimate dominates both sides (registers only grow)
     assert(estUnion >= math.max(a.getLong(2), b.getLong(2)))
+    // the wide registerAggs form (st11's) gives the same estimate
+    val aggs = HllSketch.registerAggs
+    val wide = HllSketch.withIndexRank(rows, col("key")).groupBy(col("seg"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("seg"), expr(HllSketch.estimateOf(HllSketch.sTotalExpr)))
+      .collect().sortBy(_.getString(0)).map(_.getLong(1)).toSeq
+    assert(wide == Seq(a.getLong(2), b.getLong(2)))
   }
 
   test("pivot fills absent (flag, status) combinations with 0, not NULL") {
