@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge LEARNING (Sennrich et al. 2016) — the
@@ -22,10 +22,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: ONE corpus scan builds the vocabulary aggregate —
   * everything after runs on |V| rows (vocab ≪ corpus at any SF; a
   * 100 TB crawl's distinct-word vocab is millions of rows — a few
-  * executors' worth). The argmax pair is a 1-row aggregate broadcast
-  * back (never collected to the driver); iterations are
-  * driver-composed like s10's PageRank with localCheckpoint breaking
-  * lineage between rounds (the checkpointed frame is vocab-sized).
+  * executors' worth). The argmax pair is a 1-row aggregate: the
+  * round's one probe collects it, and the fold takes it back as a
+  * literal (only the picked pairs reach the driver, never a segment);
+  * iterations are driver-composed like s10's PageRank with
+  * localCheckpoint breaking lineage every other round (the
+  * checkpointed frame is vocab-sized).
   * Per-word state is the symbol array — bounded by word length.
   *
   * The greedy re-segmentation is ONE aggregate() HOF fold per word
@@ -36,26 +38,34 @@ import org.apache.spark.sql.functions._
   * for varying lengths — CLAUDE.md round-7 finding) with every
   * reused stage MATERIALIZED (the CTE-inlining lesson).
   *
+  * One learner serves every entry point: the sequential learner is the
+  * batched one below at batchMax = 1 (the top candidate is always
+  * conflict-free, so each round merges exactly the argmax pair).
+  *
   * Output: one row per merge iteration — iter, left_sym, right_sym,
   * merged, pair_cnt (corpus occurrences of the pair at merge time),
   * syms_after (total corpus symbol count after applying the merge —
   * the compression curve a tokenizer trainer actually watches). */
 object Bpe {
 
+  /** `n` sequential Sennrich merges: (iter, left_sym, right_sym, merged,
+    * pair_cnt, syms_after). */
   def learnMerges(docs: DataFrame, textCol: String, n: Int): DataFrame =
-    run(docs, textCol, n)._2
+    learn(docs, textCol, n, batchMax = 1)._2
+      .select(col("round").as("iter"), col("left_sym"), col("right_sym"),
+        col("merged"), col("pair_cnt"), col("syms_after"))
 
   /** Final per-word segmentation after `n` learned merges:
     * (w, cnt, syms) — the apply half (t22) joins this vocab-sized
     * frame back to the exploded corpus, so the expensive merge loop
     * runs once on |V| rows and never touches corpus-sized data. */
   def segmentVocab(docs: DataFrame, textCol: String, n: Int): DataFrame =
-    run(docs, textCol, n)._1
+    learn(docs, textCol, n, batchMax = 1)._1
 
   /** BATCHED BPE learning at production merge counts (t21 proves the
     * algorithm at 3 merges with one driver round each; a 32k-merge
     * production vocab cannot afford one driver composition per merge).
-    * Per driver round the top-`candCap` pairs are scanned IN RANK
+    * Per driver round the top-`CandCap` pairs are scanned IN RANK
     * ORDER (pair_cnt desc, l, r) and up to `batchMax` pairwise
     * CONFLICT-FREE pairs are accepted — a pair joins the batch only if
     * {l, r, l||r} is disjoint from every earlier acceptance's
@@ -82,72 +92,69 @@ object Bpe {
     * near-uniform vocabulary produces near-TIED pair counts everywhere,
     * so rank order is maximally fragile under the one-round queue
     * delay; Zipfian corpora with separated counts reorder far less.
-    *
-    * HYBRID SCHEDULE REJECTED (round 13, SURVEY.md, measured over
-    * learnMergesScheduled): the suggested decay toward sequential at the
-    * same 8-round budget (16,16,16,16,8,4,4,2) is strictly WORSE here —
-    * it learns only 66 merges in the 8 rounds (the late small-batch
-    * rounds waste the compositions the big batches exist to amortize),
-    * rank fidelity does NOT improve (first divergence still position 3;
-    * Jaccard 48% vs flat's 54% over the common prefix), and compression
-    * after the budget degrades (46 496 vs 33 283 symbols). Root cause is
-    * the paragraph above: divergence starts at rank 3 — in the HEAD,
-    * where every schedule still batches — because counts are near-tied
-    * from the start on this corpus, so no tail-sequencing can recover
-    * order fidelity. A true sequential tail at the 82-merge point costs
-    * one driver round per merge and blows the ≤8-round budget by
-    * construction. Flat batchMax stays the operating point.
+    * A batch size decaying over the same round budget was measured
+    * and rejected (round 13, SURVEY.md): it learns fewer merges and
+    * recovers no rank fidelity, so the batch size is flat.
     *
     * Scale shape unchanged from learnMerges: one corpus scan, then
     * |V|-row rounds; the selection fold runs on ONE aggregate row of
-    * ≤candCap candidate structs (never a driver collect); driver
-    * compositions drop from `merges` to `rounds` — 16× fewer at
-    * batchMax=16. Output: (round, rnk, left_sym, right_sym, merged,
-    * pair_cnt, syms_after) — global merge order is (round, rnk). */
+    * ≤CandCap candidate structs (only the ≤batchMax picks are
+    * collected); driver compositions drop from `merges` to `rounds` —
+    * 16× fewer at batchMax=16. Output: (round, rnk, left_sym,
+    * right_sym, merged, pair_cnt, syms_after) — global merge order is
+    * (round, rnk). */
   def learnMergesBatched(docs: DataFrame, textCol: String, rounds: Int,
-      batchMax: Int, candCap: Int = 256): DataFrame =
-    learnMergesScheduled(docs, textCol, Seq.fill(rounds)(batchMax), candCap)
+      batchMax: Int): DataFrame =
+    learn(docs, textCol, rounds, batchMax)._2
 
-  /** Schedule-generalized batched learning: round i accepts up to
-    * schedule(i) conflict-free pairs (same selection fold, same
-    * disjointness proof). A DECAYING schedule (e.g. 16,16,16,16,8,4,4,2)
-    * is the hybrid the round-12 pricing suggested — big batches while
-    * pair counts are separated, shrinking toward sequential as the
-    * near-tied tail approaches — at the SAME driver-round budget.
-    * Measured (round 13, SURVEY.md): the decay does NOT close
-    * the gap on THIS corpus — see the scaladoc numbers below. */
-  def learnMergesScheduled(docs: DataFrame, textCol: String,
-      schedule: Seq[Int], candCap: Int = 256): DataFrame = {
-    require(schedule.nonEmpty && schedule.forall(_ >= 1) &&
-      candCap >= schedule.max)
-    val rounds = schedule.length
+  /** Candidate pairs scanned per round: the batch's selection window. */
+  private val CandCap = 256
+
+  /** A round's accepted merges, in rank order. */
+  private val PickList = "ARRAY<STRUCT<l: STRING, r: STRING, c: BIGINT>>"
+
+  /** The learner: up to `rounds` rounds of ≤ `batchMax` conflict-free
+    * merges. Returns the final segmentation (w, cnt, syms) and the
+    * merge table (round, rnk, left_sym, right_sym, merged, pair_cnt,
+    * syms_after). */
+  private def learn(docs: DataFrame, textCol: String, rounds: Int,
+      batchMax: Int): (DataFrame, DataFrame) = {
+    require(rounds >= 1 && batchMax >= 1 && batchMax <= CandCap,
+      s"need rounds >= 1 and 1 <= batchMax <= $CandCap (got $rounds, $batchMax)")
     var segs = vocab(docs, textCol).localCheckpoint()
     var outs = Seq.empty[DataFrame]
     var rnd = 0
     var exhausted = false
     while (rnd < rounds && !exhausted) {
       rnd += 1
-      val batchMax = schedule(rnd - 1)
-      val cands = pairCounts(segs).limit(candCap)
-      val picks = cands
+      // the round's probe: ONE aggregate row holds the ≤ batchMax
+      // accepted picks, and only they reach the driver
+      val picks = pairCounts(segs).limit(CandCap)
         .agg(expr("array_sort(collect_list(" +
           "struct(-pair_cnt AS nc, l AS l, r AS r, pair_cnt AS c)))").as("cs"))
         .select(expr(
           s"""aggregate(cs,
              |  named_struct('used', CAST(array() AS ARRAY<STRING>),
-             |    'picks', CAST(array() AS ARRAY<STRUCT<l: STRING, r: STRING, c: BIGINT>>)),
+             |    'picks', CAST(array() AS $PickList)),
              |  (acc, x) -> IF(size(acc.picks) < $batchMax
              |      AND NOT arrays_overlap(array(x.l, x.r, concat(x.l, x.r)), acc.used),
              |    named_struct(
              |      'used', concat(acc.used, array(x.l, x.r, concat(x.l, x.r))),
              |      'picks', concat(acc.picks,
              |        array(named_struct('l', x.l, 'r', x.r, 'c', x.c)))),
-             |    acc)).picks""".stripMargin).as("picks"))
-        .localCheckpoint()
-      // exhaustion probe on the 1-row checkpointed frame (d9 class)
-      if (picks.filter(size(col("picks")) > 0).isEmpty) { exhausted = true }
+             |    acc)).picks""".stripMargin))
+        .head().getSeq[Row](0)
+      // degenerate corpus (every word already one symbol, or more
+      // rounds than available merges): the pick list is EMPTY — stop,
+      // matching the oracle's recursive walk which keeps single-symbol
+      // words.
+      if (picks.isEmpty) { exhausted = true }
       else {
-        segs = segs.crossJoin(broadcast(picks))
+        // the picks fold back in as a literal: the bytes a broadcast of
+        // the pick row would ship, without its collect job
+        val pickList = array(picks.map(p => struct(lit(p.getString(0)).as("l"),
+          lit(p.getString(1)).as("r"), lit(p.getLong(2)).as("c"))): _*).cast(PickList)
+        segs = segs.withColumn("picks", pickList)
           .withColumn("syms", expr(
             "aggregate(syms, slice(syms, 1, 0), (acc, x) -> " +
             "IF(size(acc) > 0 AND exists(picks, p -> " +
@@ -158,34 +165,32 @@ object Bpe {
           .drop("picks")
         // r16: checkpoint every OTHER round — the frame is vocab-sized
         // (|V| rows), so carrying at most two rounds of fold lineage is
-        // cheaper than an eager materialization job per round (each
-        // picks frame in the lineage is itself checkpointed, bounding
-        // plan depth); halves the per-round driver job count the
-        // r15 verdict flagged as t27's remaining cost.
+        // cheaper than an eager materialization job per round.
         if (rnd % 2 == 0 || rnd == rounds) segs = segs.localCheckpoint()
-        val after = segs.agg(
-          sum(col("cnt") * size(col("syms"))).as("syms_after"))
-        outs = outs :+ picks.crossJoin(broadcast(after))
+        outs = outs :+ segs
+          .agg(sum(col("cnt") * size(col("syms"))).as("syms_after"))
           .select(lit(rnd).as("round"),
-            posexplode(col("picks")).as(Seq("idx", "p")), col("syms_after"))
+            posexplode(pickList).as(Seq("idx", "p")), col("syms_after"))
           .select(col("round"), (col("idx") + 1).cast("int").as("rnk"),
             col("p.l").as("left_sym"), col("p.r").as("right_sym"),
             concat(col("p.l"), col("p.r")).as("merged"),
             col("p.c").as("pair_cnt"), col("syms_after"))
       }
     }
-    if (outs.isEmpty)
-      docs.sparkSession.emptyDataFrame
-        .withColumn("round", lit(0)).withColumn("rnk", lit(0))
-        .withColumn("left_sym", lit("")).withColumn("right_sym", lit(""))
-        .withColumn("merged", lit(""))
-        .withColumn("pair_cnt", lit(0L)).withColumn("syms_after", lit(0L))
-    else outs.reduce(_ unionByName _).orderBy(col("round"), col("rnk"))
+    val merges =
+      if (outs.isEmpty)
+        docs.sparkSession.emptyDataFrame
+          .withColumn("round", lit(0)).withColumn("rnk", lit(0))
+          .withColumn("left_sym", lit("")).withColumn("right_sym", lit(""))
+          .withColumn("merged", lit(""))
+          .withColumn("pair_cnt", lit(0L)).withColumn("syms_after", lit(0L))
+      else outs.reduce(_ unionByName _).orderBy(col("round"), col("rnk"))
+    (segs, merges)
   }
 
   /** Word counts (w, cnt) over the whitespace split, each word's
-    * characters as its starting segmentation `syms` — the frame both
-    * learners fold merges into. */
+    * characters as its starting segmentation `syms` — the frame the
+    * learner folds merges into. */
   private def vocab(docs: DataFrame, textCol: String): DataFrame =
     docs
       .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
@@ -204,51 +209,4 @@ object Bpe {
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum(col("cnt")).as("pair_cnt"))
       .orderBy(col("pair_cnt").desc, col("l"), col("r"))
-
-  private def run(docs: DataFrame, textCol: String, n: Int)
-      : (DataFrame, DataFrame) = {
-    require(n >= 1, s"need at least one merge iteration (got $n)")
-    var segs = vocab(docs, textCol).localCheckpoint()
-    var outs = Seq.empty[DataFrame]
-    var it = 0
-    var exhausted = false
-    while (it < n && !exhausted) {
-      it += 1
-      val best = pairCounts(segs).limit(1)
-        .localCheckpoint()
-      // degenerate corpus (every word already one symbol, or n exceeds
-      // the available merges): best is EMPTY and crossJoin(broadcast)
-      // would silently empty segs and every later iteration — stop
-      // instead, matching the oracle's recursive walk which keeps
-      // single-symbol words. 1-row probe on a checkpointed frame (the
-      // d9 convergence-probe pattern), never a label collect.
-      if (best.isEmpty) { exhausted = true }
-      else {
-      segs = segs.crossJoin(broadcast(best))
-        .withColumn("syms", expr(
-          "aggregate(syms, slice(syms, 1, 0), (acc, x) -> " +
-          "IF(size(acc) > 0 AND element_at(acc, -1) = l AND x = r, " +
-          "concat(slice(acc, 1, size(acc) - 1), array(concat(l, r))), " +
-          "concat(acc, array(x))))"))
-        .drop("l", "r", "pair_cnt")
-        .localCheckpoint()
-      val after = segs.agg(
-        sum(col("cnt") * size(col("syms"))).as("syms_after"))
-      outs = outs :+ best.crossJoin(broadcast(after))
-        .select(lit(it).as("iter"), col("l").as("left_sym"),
-          col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
-          col("pair_cnt"), col("syms_after"))
-      }
-    }
-    val merges =
-      if (outs.isEmpty)
-        docs.sparkSession.emptyDataFrame
-          .withColumn("iter", lit(0))
-          .withColumn("left_sym", lit("")).withColumn("right_sym", lit(""))
-          .withColumn("merged", lit(""))
-          .withColumn("pair_cnt", lit(0L)).withColumn("syms_after", lit(0L))
-          .limit(0)
-      else outs.reduce(_ unionByName _).orderBy(col("iter"))
-    (segs, merges)
-  }
 }

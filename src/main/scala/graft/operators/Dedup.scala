@@ -185,65 +185,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Connected components over a (near-dup) pair graph by iterative
-    * min-label propagation: each round, every node takes the minimum
-    * label among itself and its neighbors, until a fixpoint — then every
-    * member of a component carries the component's minimum id.
-    *
-    * Scale shape: the pair graph is TINY relative to the corpus (only
-    * near-duplicate docs appear), each round is one broadcast-friendly
-    * equi-join + one partial-agg groupBy. Edges and per-round labels are
-    * localCheckpoint'ed (Pregel-style lineage truncation — without it
-    * every round would re-evaluate the expensive upstream pair
-    * pipeline). Convergence is detected with a 1-row aggregate on a
-    * monotone invariant — labels only ever decrease, so an unchanged
-    * sum(component) means fixpoint — never by collecting the labels.
-    * Dedup clusters are near-cliques, so this converges in 2-3 rounds;
-    * maxIters is a runaway bound, not a correctness knob: hitting it
-    * throws, as in Graph.kCore (unconverged labels split components).
-    *
-    * Why not the native recursive CTE (q40's UnionLoop path): connected
-    * components needs UNION **DISTINCT** recursion — under UNION ALL,
-    * min-label propagation around a cycle re-emits the same (node,
-    * label) row forever (a 2-cycle ping-pongs `(b,l)→(c,l)→(b,l)…`
-    * because no accumulated-set dedup exists to retire it), and dedup
-    * graphs are cyclic near-cliques by construction. Spark 4.1 rejects
-    * UNION inside a recursive CTE (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE
-    * — probed empirically, not assumed). A canary in RegressionSpec
-    * pins that error: the day it fails, Spark has shipped distinct
-    * recursion and this loop should migrate to it.
-    */
-  def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIters: Int = 50): DataFrame = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint()
-    var prevSum = Option.empty[Long]
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      labels = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select(col("src").as("id"), col("component"))
-        .union(labels)
-        .groupBy(col("id"))
-        .agg(min(col("component")).as("component"))
-        .localCheckpoint()
-      val s = labels.agg(coalesce(sum(col("component")), lit(0L))).head().getLong(0)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge within $maxIters rounds " +
-        "— raise maxIters; unconverged labels are not components")
-    labels
-  }
-
   /** Exact word-3-gram Jaccard for candidate pairs (array intersect /
     * union on the bounded candidate set, not the full corpus). */
   def jaccardVerify(candidates: DataFrame, docs: DataFrame, idCol: String,

@@ -1449,7 +1449,10 @@ object MonitoringQueries {
     // spec). Scale shape: corpus-sized work is ONE partial-agg groupBy
     // into ≤768 bins per (type, day); everything after (merge, cumsum
     // window, estimate) runs on the tiny sketch rows. Doubles appear
-    // once: the final (bin+1)*64/100.0 division of integers.
+    // once: the final (bin+1)*64/100.0 division of integers. A null
+    // value has no bin and a null type no sketch: both are dropped
+    // before binning, in both engines (their null orders differ in the
+    // cum-sum window, and the oracle's type join drops a null type).
     QueryKey("m43_quantile_sketch",
       // day-split omitted on purpose: the merge is plain count addition,
       // so merged-by-day == built-on-full by associativity (the property
@@ -1457,7 +1460,7 @@ object MonitoringQueries {
       """WITH b AS (SELECT event_type,
         |    CAST(round(value * 100) AS BIGINT) // 64 AS bin,
         |    CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
+        |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         |t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n FROM b GROUP BY 1),
         |cu AS (SELECT b.event_type, bin, c, n,
         |    CAST(sum(c) OVER (PARTITION BY b.event_type ORDER BY bin) AS BIGINT) AS cum
@@ -1469,6 +1472,7 @@ object MonitoringQueries {
         |FROM cu GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val daily = Tables.events(s, dir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT) div 64").as("bin"),
           expr("unix_micros(ts) div 86400000000").as("day"))
@@ -1697,12 +1701,14 @@ object MonitoringQueries {
     // day, so the builder bins the full corpus directly (like m43: the
     // per-day partials merge to it exactly by count addition, the
     // property QuantileSketchSpec proves), and the cum-sum window runs
-    // on the ≤ |types| × bins sketch rows.
+    // on the ≤ |types| × bins sketch rows. A row with a null value or
+    // user_id has no v, and a null type no sketch: both engines drop
+    // them before binning, as m43 does.
     QueryKey("m47_log_quantile",
       """WITH ev AS (SELECT event_type,
         |    CAST(round(value * 100) AS BIGINT) *
         |      (CAST(1 AS BIGINT) << CAST(user_id % 24 AS INT)) AS v
-        |  FROM events),
+        |  FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL),
         |b AS (SELECT event_type,
         |    CASE WHEN v < 16 THEN v
         |         ELSE 16 * (length(bin(v)) - 1) +
@@ -1725,6 +1731,8 @@ object MonitoringQueries {
         |FROM r ORDER BY event_type""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val binned = Tables.events(s, dir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull &&
+          col("user_id").isNotNull)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT) * " +
             "shiftleft(CAST(1 AS BIGINT), CAST(user_id % 24 AS INT))").as("v"))
@@ -1816,7 +1824,9 @@ object MonitoringQueries {
     // row of segment sketches (|types| × 64 ints) — never a corpus
     // self-join (the branch-reuse trap). A null user_id
     // hashes to a null register index: no register, as the oracle's
-    // grid LEFT JOIN drops it. All arithmetic engine-portable integers:
+    // grid LEFT JOIN drops it. A null event_type is no segment: the
+    // builder filters it, as the oracle's `a.event_type < b.event_type`
+    // pairs never include it. All arithmetic engine-portable integers:
     // ranks, shifted harmonic terms, the m35 estimate division,
     // inclusion-exclusion, truncating Jaccard bp.
     QueryKey("m45_hll_algebra",
@@ -1856,7 +1866,8 @@ object MonitoringQueries {
         |ORDER BY type_a, type_b""".stripMargin) { (s, dir) =>
       import graft.functions.HllSketch
       val hashed = HllSketch.withIndexRank(
-        Tables.events(s, dir).select(col("event_type"), col("user_id")),
+        Tables.events(s, dir).filter(col("event_type").isNotNull)
+          .select(col("event_type"), col("user_id")),
         col("user_id"))
       HllSketch.registerVectors(hashed, "event_type")
         .agg(expr("array_sort(collect_list(struct(event_type, regs, est)))").as("sk"))

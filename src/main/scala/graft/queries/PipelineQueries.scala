@@ -1244,7 +1244,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
       val cand = Dedup.lshCandidates(docs, "doc_id", "text", bands = 4, rows = 2)
       val dups = Dedup.jaccardVerify(cand, docs, "doc_id", "text", threshold = 0.5)
-      Dedup.connectedComponents(dups.select(col("id_a"), col("id_b")))
+      Graph.connectedComponents(dups.select(col("id_a"), col("id_b")))
         .orderBy(col("id"))
     },
 
@@ -1571,17 +1571,14 @@ object PipelineQueries {
         .orderBy(col("vec_id"))
     },
 
-    // graph centrality over the kNN graph — integer PageRank, the
-    // standard "which samples anchor dense semantic regions" signal
-    // (curation keeps/weights central exemplars, prunes satellites).
-    // 3 damped iterations in EXACT integer arithmetic (ranks in
-    // millionths; per-edge contribution = rank div outdeg, damping as
-    // 85·Σ div 100) so partial-agg order can't change a digit. Scale
-    // shape: the edge list is built ONCE (s9's bucketed pipeline,
-    // bounded heaps) and checkpointed — each iteration is one
-    // broadcast-size join + one partial-agg groupBy on the EDGE table
-    // (3 rows per vector), never back to the embedding corpus; dangling
-    // nodes (in-edges only) hold the damping floor by construction.
+    // graph centrality over the kNN graph — integer PageRank
+    // (Graph.pageRank), the standard "which samples anchor dense
+    // semantic regions" signal (curation keeps/weights central
+    // exemplars, prunes satellites). Scale shape: the edge list is
+    // built ONCE (s9's bucketed pipeline, bounded heaps) and
+    // checkpointed — each iteration is one broadcast-size join + one
+    // partial-agg groupBy on the EDGE table (3 rows per vector), never
+    // back to the embedding corpus.
     QueryKey("s10_graph_rank",
       s"""WITH $knnTopCte,
          |outd AS (SELECT id_a, CAST(count(*) AS BIGINT) AS outdeg FROM top GROUP BY 1),
@@ -1598,29 +1595,13 @@ object PipelineQueries {
          |LEFT JOIN outd ON n.id = outd.id_a
          |JOIN r3 ON n.id = r3.id
          |ORDER BY rank_e6 DESC, vec_id""".stripMargin) { (s, dir) =>
-      val top = knnTopEdges(s, dir).select(col("id_a"), col("id_b"))
-      val outd = top.groupBy(col("id_a")).agg(count(lit(1)).as("outdeg"))
-      val edges = top.join(outd, Seq("id_a"))
-      val nodes = top.select(col("id_a").as("vec_id"))
-        .union(top.select(col("id_b"))).distinct()
-      var ranks = nodes.withColumn("r", lit(1000000L))
-      for (_ <- 1 to 3) {
-        val contribs = edges
-          .join(ranks, edges("id_a") === ranks("vec_id"))
-          .select(col("id_b").as("vec_id"), expr("r div outdeg").as("c"))
-          .groupBy(col("vec_id")).agg(sum(col("c")).as("in_sum"))
-        ranks = nodes.join(contribs, Seq("vec_id"), "left")
-          .withColumn("r", expr("150000 + (85 * coalesce(in_sum, CAST(0 AS BIGINT))) div 100"))
-          .select(col("vec_id"), col("r"))
-      }
-      val ind = top.groupBy(col("id_b").as("vec_id"))
+      val top = knnTopEdges(s, dir)
+      val ind = top.groupBy(col("id_b").as("id"))
         .agg(count(lit(1)).cast("int").as("in_deg"))
-      ranks
-        .join(ind, Seq("vec_id"), "left")
-        .join(outd.select(col("id_a").as("vec_id"),
-          col("outdeg").cast("int").as("out_deg")), Seq("vec_id"), "left")
-        .select(col("vec_id"), coalesce(col("in_deg"), lit(0)).as("in_deg"),
-          coalesce(col("out_deg"), lit(0)).as("out_deg"), col("r").as("rank_e6"))
+      Graph.pageRank(top.select(col("id_a").as("src"), col("id_b").as("dst")))
+        .join(ind, Seq("id"), "left")
+        .select(col("id").as("vec_id"), coalesce(col("in_deg"), lit(0)).as("in_deg"),
+          col("out_deg").cast("int").as("out_deg"), col("r").as("rank_e6"))
         .orderBy(col("rank_e6").desc, col("vec_id"))
     },
 
@@ -3362,14 +3343,11 @@ object PipelineQueries {
 
     // TextRank keyword extraction (Mihalcea & Tarau 2004) — the graph
     // trio completed on the WORD side (t15 triangles, t18 k-core, now
-    // centrality): integer PageRank (damping 0.85, 1e6 fixed point —
-    // s10's recurrence verbatim) over the UNDIRECTED collocation
-    // graph (each edge contributes both directions), top-20 words by
-    // rank with degree. Same driver-composed 3-iteration plan as s10
-    // (Spark 4.1 recursion cannot re-aggregate over the recursive
-    // ref — canary-pinned); the directed edge list is vocabulary-
-    // bounded and checkpointed once, so iterations never rescan the
-    // corpus. A hub word (high degree) splits its rank thinly — the
+    // centrality): s10's integer PageRank (Graph.pageRank) over the
+    // UNDIRECTED collocation graph (each edge contributes both
+    // directions), top-20 words by rank with degree. The directed edge
+    // list is vocabulary-bounded and checkpointed once, so iterations
+    // never rescan the corpus. A hub word (high degree) splits its rank thinly — the
     // r div deg contribution is what separates TextRank from raw
     // degree ranking.
     QueryKey("t29_textrank_keywords", {
@@ -3410,23 +3388,10 @@ object PipelineQueries {
       val ed = und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
         .localCheckpoint()
-      val deg = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val edges = ed.join(deg, Seq("src"))
-      val nodes = ed.select(col("src").as("w")).distinct()
-      var ranks = nodes.withColumn("r", lit(1000000L))
-      for (_ <- 1 to 3) {
-        val contribs = edges.join(ranks, edges("src") === ranks("w"))
-          .select(col("dst").as("w2"), expr("r div deg").as("c"))
-          .groupBy(col("w2")).agg(sum(col("c")).as("in_sum"))
-        ranks = nodes.join(contribs, nodes("w") === contribs("w2"), "left")
-          .withColumn("r",
-            expr("150000 + (85 * coalesce(in_sum, CAST(0 AS BIGINT))) div 100"))
-          .select(col("w"), col("r"))
-      }
-      ranks.join(deg.select(col("src").as("w"), col("deg").cast("int").as("deg")),
-          Seq("w"))
-        .orderBy(col("r").desc, col("w")).limit(20)
-        .select(col("w"), col("deg"), col("r").as("rank_e6"))
+      Graph.pageRank(ed)
+        .orderBy(col("r").desc, col("id")).limit(20)
+        .select(col("id").as("w"), col("out_deg").cast("int").as("deg"),
+          col("r").as("rank_e6"))
     },
 
     // Unicode NFC normalization audit — the tokenizer-input contract

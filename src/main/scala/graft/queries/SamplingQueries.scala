@@ -813,8 +813,10 @@ object SamplingQueries {
     // counts then summarize each scheme: the naive id-keyed split
     // straddles multi-doc clusters (leak > 0), the cluster-keyed split
     // straddles ZERO by construction — and the oracle hash-checks both
-    // numbers. Group stats ride one partial-agg shuffle; the scheme
-    // explode runs on cluster-level aggregate rows.
+    // numbers. Group stats ride one partial-agg shuffle (each
+    // distinct-split count is the size of a ≤3-element collect_set, so
+    // no distinct-aggregate Expand); the scheme explode runs on
+    // cluster-level aggregate rows.
     QueryKey("p17_split_leakage",
       """WITH d AS (SELECT doc_id,
         |    array_to_string(regexp_split_to_array(trim(text), '\s+')[1:2], ' ') AS ckey
@@ -849,8 +851,8 @@ object SamplingQueries {
         .withColumn("cluster_split", splitOf(col("ckey")))
         .groupBy(col("ckey"))
         .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("naive_split")).as("nd_naive"),
-          countDistinct(col("cluster_split")).as("nd_cluster"))
+          size(collect_set(col("naive_split"))).cast("long").as("nd_naive"),
+          size(collect_set(col("cluster_split"))).cast("long").as("nd_cluster"))
         .select(col("n_docs"), explode(array(
           struct(lit("cluster").as("scheme"), col("nd_cluster").as("nd")),
           struct(lit("naive").as("scheme"), col("nd_naive").as("nd")))).as("x"))

@@ -1,19 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
 
 /** Null-edge differential gate for the monitor sketch keys (m32, m44,
-  * m45, m47) and the m35 null-key case. The sf fixtures carry no nulls,
-  * so the DuckDB oracle never sees a null-semantics slip; this spec
-  * plants an events table that has null user_id, null ts and null value
-  * rows, users repeated within and across event types, CMS buckets
-  * shared by several keys, and a type whose only events have a null
-  * user_id. Each key must equal, row for row and in schema, the
-  * formulation it replaced (`Reference` below: the self-joined,
-  * re-aggregated and wide-column builders, kept verbatim). */
+  * m45, m47), the m35 null-key case and m43's null bins. The sf
+  * fixtures carry no nulls, so the DuckDB oracle never sees a
+  * null-semantics slip; this spec plants an events table that has null
+  * user_id, null ts, null value and null event_type rows, users
+  * repeated within and across event types, CMS buckets shared by
+  * several keys, and a type whose only events have a null user_id.
+  * Each key must equal, row for row and in schema, the formulation it
+  * replaced (`Reference` below: the self-joined, re-aggregated and
+  * wide-column builders, kept verbatim) — m43, m45 and m47 on the
+  * fixture stripped of the rows they drop, as their oracles do. */
 class MonitorSketchSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local()
 
@@ -54,9 +56,20 @@ class MonitorSketchSpec extends AnyFunSuite {
     d.toString
   }
 
-  private def assertSameRows(key: String, ref: (SparkSession, String) => DataFrame): Unit = {
+  /** The planted fixture without the rows `keep` rejects, as its own
+    * table — what a key that drops those rows must equal. */
+  private def stripped(prefix: String, keep: Column): String = {
+    val d = TempDirs(prefix)
+    Tables.events(spark, dir).filter(keep).write.parquet(s"$d/events.parquet")
+    d.toString
+  }
+
+  /** `key` on the planted fixture equals `ref` on `refDir`, row for row
+    * and in schema. */
+  private def assertSameRows(key: String, ref: (SparkSession, String) => DataFrame,
+      refDir: String = dir): Unit = {
     val now = SparkEntry.queries(key)(spark, dir)
-    val was = ref(spark, dir)
+    val was = ref(spark, refDir)
     assert(now.schema == was.schema, s"$key schema")
     val (a, b) = (now.collect().toSeq, was.collect().toSeq)
     assert(a.nonEmpty, s"$key: no rows")
@@ -91,21 +104,30 @@ class MonitorSketchSpec extends AnyFunSuite {
   }
 
   test("m45: tall register vectors equal the 64 wide columns, a null-only type included") {
-    assertSameRows("m45_hll_algebra", Reference.m45)
+    // a null type is no segment (the oracle never pairs it); null
+    // user_ids stay — they are no register, and ghost has only those
+    assertSameRows("m45_hll_algebra", Reference.m45,
+      stripped("graft_sketch_m45", col("event_type").isNotNull))
     val out = SparkEntry.queries("m45_hll_algebra")(spark, dir).collect()
     assert(out.exists(r => r.getString(0) == "ghost" || r.getString(1) == "ghost"))
   }
 
   test("m47: binning without the day equals the per-day partials merged") {
-    assertSameRows("m47_log_quantile", Reference.m47)
+    // rows without a v (null value or user_id) or a type carry no bin
+    assertSameRows("m47_log_quantile", Reference.m47,
+      stripped("graft_sketch_m47", col("event_type").isNotNull &&
+        col("value").isNotNull && col("user_id").isNotNull))
+  }
+
+  test("m43: a null value or type carries no bin") {
+    assertSameRows("m43_quantile_sketch", Reference.m43,
+      stripped("graft_sketch_m43", col("event_type").isNotNull && col("value").isNotNull))
   }
 
   test("m35: a null user_id is no register — n_hit stays within 64") {
-    val stripped = TempDirs("graft_sketch_nonull")
-    Tables.events(spark, dir).filter(col("user_id").isNotNull)
-      .write.parquet(s"$stripped/events.parquet")
+    val nonNull = stripped("graft_sketch_nonull", col("user_id").isNotNull)
     val withNulls = SparkEntry.queries("m35_hll_distinct")(spark, dir).head()
-    val without = SparkEntry.queries("m35_hll_distinct")(spark, stripped.toString).head()
+    val without = SparkEntry.queries("m35_hll_distinct")(spark, nonNull).head()
     // every register is hit by the non-null keys, so a counted null
     // group would read 65
     assert(without.getInt(1) == 64, without)
@@ -113,8 +135,34 @@ class MonitorSketchSpec extends AnyFunSuite {
   }
 
   /** The builders the four keys had before they were folded to one
-    * aggregate, verbatim. */
+    * aggregate, verbatim, and m43's builder before it dropped null
+    * values and types. */
   private object Reference {
+    def m43(s: SparkSession, dir: String): DataFrame = {
+      import org.apache.spark.sql.expressions.Window
+      val daily = Tables.events(s, dir)
+        .select(col("event_type"),
+          expr("CAST(round(value * 100) AS BIGINT) div 64").as("bin"),
+          expr("unix_micros(ts) div 86400000000").as("day"))
+        .groupBy(col("event_type"), col("day"), col("bin"))
+        .agg(count(lit(1)).as("c"))
+      val merged = daily.groupBy(col("event_type"), col("bin"))
+        .agg(sum(col("c")).as("c"))
+      val byType = Window.partitionBy(col("event_type"))
+      val cum = merged
+        .withColumn("n", sum(col("c")).over(byType))
+        .withColumn("cum", sum(col("c"))
+          .over(byType.orderBy(col("bin"))))
+      def estAt(p: Int): Column =
+        ((min(when(col("cum") * 100 >= col("n") * p, col("bin"))) + 1) * 64)
+          .cast("double") / 100.0
+      cum.groupBy(col("event_type"))
+        .agg(max(col("n")).cast("long").as("n"),
+          count(lit(1)).cast("int").as("n_bins"),
+          estAt(50).as("p50_est"), estAt(95).as("p95_est"), estAt(99).as("p99_est"))
+        .orderBy(col("event_type"))
+    }
+
     def m32(s: SparkSession, dir: String): DataFrame = {
       val keys = Tables.events(s, dir)
         .select(col("user_id").cast("string").as("key"))

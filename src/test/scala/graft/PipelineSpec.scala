@@ -357,7 +357,7 @@ class PipelineSpec extends AnyFunSuite {
     // chain 1-2-3-4-5-6 (diameter 5), clique {10,11,12}, pair {20,21}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (10L, 11L), (10L, 12L), (11L, 12L), (20L, 21L)).toDF("id_a", "id_b")
-    val r = graft.operators.Dedup.connectedComponents(pairs)
+    val r = graft.operators.Graph.connectedComponents(pairs)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
     assert((1L to 6L).forall(r(_) == 1L))
     assert(Seq(10L, 11L, 12L).forall(r(_) == 10L))
@@ -506,23 +506,58 @@ class PipelineSpec extends AnyFunSuite {
       preds.mkString(","))
   }
 
+  /** Sequential Sennrich BPE in plain Scala: (merged, pair_cnt,
+    * syms_after) per merge — overlapping pair counts weighted by word
+    * count, argmax by (count desc, l, r), greedy left-to-right reseg. */
+  private def sennrich(texts: Seq[String], n: Int): Seq[(String, Long, Long)] = {
+    var segs = texts.flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
+      .groupBy(identity).toSeq.map { case (w, ws) => (w.map(_.toString).toVector, ws.size.toLong) }
+    val out = Seq.newBuilder[(String, Long, Long)]
+    var it = 0
+    var exhausted = false
+    while (it < n && !exhausted) {
+      val pairs = segs.flatMap { case (sy, c) => sy.zip(sy.tail).map(_ -> c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (pairs.isEmpty) exhausted = true
+      else {
+        val ((l, r), cnt) = pairs.toSeq.minBy { case ((l, r), c) => (-c, l, r) }
+        segs = segs.map { case (sy, c) =>
+          (sy.foldLeft(Vector.empty[String]) { (acc, x) =>
+            if (acc.nonEmpty && acc.last == l && x == r) acc.init :+ (l + r) else acc :+ x
+          }, c)
+        }
+        out += ((l + r, cnt, segs.map { case (sy, c) => sy.size * c }.sum))
+        it += 1
+      }
+    }
+    out.result()
+  }
+
   test("t27: batchMax=1 reduces batched BPE to exactly sequential Sennrich merges") {
     import spark.implicits._
-    // same fixture as the t21 spec: with a batch of one, every round
-    // must pick the single argmax pair — the batched learner IS the
-    // sequential one at this setting
-    val docs = Seq(
-      (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-        Seq.fill(6)("newest")).mkString(" ")
-    ).toDF("text")
-    val seqOut = graft.operators.Bpe.learnMerges(docs, "text", n = 3)
-      .collect().map(r => (r.getAs[String]("merged"),
-        r.getAs[Long]("pair_cnt"), r.getAs[Long]("syms_after"))).toSeq
-    val batOut = graft.operators.Bpe
-      .learnMergesBatched(docs, "text", rounds = 3, batchMax = 1)
-      .collect().map(r => (r.getAs[String]("merged"),
-        r.getAs[Long]("pair_cnt"), r.getAs[Long]("syms_after"))).toSeq
-    assert(batOut == seqOut, s"batched@1 $batOut != sequential $seqOut")
+    // with a batch of one, every round must pick the single argmax
+    // pair: the batched learner (and learnMerges, which runs it at
+    // batchMax=1) must equal plain sequential Sennrich — on the t21
+    // fixture, and on a random three-letter corpus dense in ties and
+    // overlapping pairs, run past exhaustion
+    val rng = new scala.util.Random(27)
+    val random = Seq.fill(12)(Seq.fill(1 + rng.nextInt(6))(
+      Seq.fill(1 + rng.nextInt(6))("abc"(rng.nextInt(3))).mkString).mkString(" "))
+    val fixtures = Seq(
+      Seq((Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+        Seq.fill(6)("newest")).mkString(" ")) -> 3,
+      random -> 8,
+      Seq("ab ab a") -> 3)
+    for ((texts, n) <- fixtures) {
+      val docs = texts.toDF("text")
+      val want = sennrich(texts, n)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+        (r.getAs[String]("merged"), r.getAs[Long]("pair_cnt"), r.getAs[Long]("syms_after"))).toSeq
+      val batOut = rows(graft.operators.Bpe
+        .learnMergesBatched(docs, "text", rounds = n, batchMax = 1))
+      assert(batOut == want, s"batched@1 $batOut != sequential $want")
+      assert(rows(graft.operators.Bpe.learnMerges(docs, "text", n)) == want)
+    }
   }
 
   test("t27: >=64 merges in <=8 rounds, conflict-free batches, monotone compression") {
@@ -727,5 +762,23 @@ class PipelineSpec extends AnyFunSuite {
             "raise maxBucket")
       }
     }
+  }
+
+  test("iterative keys run no more Spark jobs than their ratchet") {
+    // the driver-loop keys pay jobs per iteration (eager pins and
+    // convergence probes): one warm run, then one counted noop run each
+    // at sf0.001. The bounds are the counts measured when the loops were
+    // folded to one per algorithm; lower one when a change saves jobs.
+    val ratchet = Map(
+      "t18_colloc_kcore" -> 12, "d9_dedup_groups" -> 21,
+      "s10_graph_rank" -> 29, "t29_textrank_keywords" -> 15,
+      "t21_bpe_learn" -> 14, "t22_bpe_apply" -> 15,
+      "t27_bpe_batch" -> 31, "t32_detok_roundtrip" -> 16)
+    val jobs = ratchet.keys.toSeq.sorted.map { key =>
+      val fn = SparkEntry.queries(key)
+      Harness.runNoop(spark, sf, fn)
+      key -> SparkJobs.during(spark)(Harness.runNoop(spark, sf, fn))
+    }.toMap
+    assert(jobs.forall { case (k, n) => n <= ratchet(k) }, s"jobs per key: $jobs")
   }
 }

@@ -16,6 +16,14 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The filters pushed into a key's one parquet scan. */
+  private def pushedFilters(name: String): Set[String] = {
+    val scans = plan(name).linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.size == 1, scans)
+    "PushedFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(scans.head)
+      .map(_.group(1).split(", ").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+  }
+
   /** Every physical node under `p`, AQE stages' subplans included. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -225,6 +233,14 @@ class PlanSpec extends AnyFunSuite {
   test("q29: grouping sets are one Expand over one scan") {
     val p = plan("q29_grouping_sets")
     assert(p.contains("Expand"), p)
+    assert(p.linesIterator.count(_.contains("FileScan")) == 1, p)
+  }
+
+  test("p17: the two distinct-split counts plan without an Expand") {
+    // countDistinct pairs would plan one Expand whose group order
+    // follows exprIds, so p17's plan would depend on what was built first
+    val p = plan("p17_split_leakage")
+    assert(!p.contains("Expand"), p)
     assert(p.linesIterator.count(_.contains("FileScan")) == 1, p)
   }
 
@@ -601,6 +617,8 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"), p)
     // register vectors are the tall (type, idx) grid, not 64 wide columns
     assert("\\br63\\b".r.findFirstIn(p).isEmpty, p)
+    // the null-type filter reaches the scan
+    assert(pushedFilters("m45_hll_algebra") == Set("IsNotNull(event_type)"))
   }
 
   test("m32: the corpus is aggregated once per key before the ×4 explode and its md5") {
@@ -712,6 +730,9 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join") && !p.contains("CartesianProduct"), p)
     // no output depends on the day: the corpus bins straight to (type, qbin)
     assert("\\bday\\b".r.findFirstIn(p).isEmpty && !p.contains("86400000000"), p)
+    // rows without a type or a v are dropped at the scan
+    assert(pushedFilters("m47_log_quantile") ==
+      Set("IsNotNull(event_type)", "IsNotNull(value)", "IsNotNull(user_id)"))
   }
 
   test("st12: domain-free p95 aggregates map-side — one window groupBy, no join, no per-event sort") {

@@ -241,7 +241,7 @@ class RegressionSpec extends AnyFunSuite {
     // construction, so the native path cannot terminate on them. Spark
     // 4.1 rejects UNION inside a recursive CTE. The day this assertion
     // FAILS, Spark has shipped distinct recursion: replace
-    // Dedup.connectedComponents' driver loop with the native recursion
+    // Graph.connectedComponents' driver loop with the native recursion
     // (q40's UnionLoop path) — the query below is exactly that shape.
     import spark.implicits._
     Seq((1, 2), (2, 3)).toDF("src", "dst").createOrReplaceTempView("cc_canary_e")

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,33 +11,6 @@ import graft.sources.Tables
 class TablesSpec extends AnyFunSuite {
   lazy val spark = GraftSession.local()
   val sf = "/root/testdata/sf0.001"
-
-  /** Spark jobs started by `body` on this thread: counted by job group,
-    * and closed by a sentinel job, so every start has reached the
-    * listener when the count is read. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables_probe_${System.nanoTime()}"
-    val seen = new AtomicInteger()
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => seen.incrementAndGet()
-          case g if g == s"${group}_end" => closed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"${group}_end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(closed.await(60, TimeUnit.SECONDS), "sentinel job never reached the listener")
-      seen.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def writeEvents(path: String, ntz: Boolean): Unit = {
     val s = spark
@@ -56,9 +25,9 @@ class TablesSpec extends AnyFunSuite {
   test("a second read of the same source starts no Spark job") {
     val dir = TempDirs("graft_tables_jobs").toString
     writeEvents(s"$dir/events.parquet", ntz = true)
-    assert(jobsDuring(Tables.events(spark, dir)) >= 1, "the first read infers the schema")
-    assert(jobsDuring(Tables.events(spark, dir)) == 0)
-    assert(jobsDuring(Tables.events(spark, dir).schema) == 0)
+    assert(SparkJobs.during(spark)(Tables.events(spark, dir)) >= 1, "the first read infers the schema")
+    assert(SparkJobs.during(spark)(Tables.events(spark, dir)) == 0)
+    assert(SparkJobs.during(spark)(Tables.events(spark, dir).schema) == 0)
   }
 
   test("a file rewritten at the same path with another ts type is inferred again") {
